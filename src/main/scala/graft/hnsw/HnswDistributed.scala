@@ -167,12 +167,6 @@ object HnswDistributed {
     }
 
     val sc = spark.sparkContext
-    // phase breakdown (driver-side attribution; printed only when
-    // GRAFT_BUILD_PHASES=true in the env): snapshot+broadcast /
-    // distributed phase 1 / sequential phase-2 merge — the Amdahl
-    // split of this build shape
-    var tSnap, tBcast, tPhase1, tMerge = 0L
-    def now() = System.nanoTime()
     // broadcasts released on EVERY path: a transient job failure with a
     // catch-and-retry caller would otherwise leak one full-graph
     // snapshot + the whole vector payload per attempt
@@ -195,17 +189,11 @@ object HnswDistributed {
         val grown = math.max(maxBatch, math.min(pos / growthDenom, batchCeiling))
         val batchSize = math.min(math.min(grown, pos), n - pos)
         val batch = (pos until pos + batchSize).map(i => (ids(i), insLayers(i)))
-        val t0 = now()
-        val snap = graph.snapshot
-        val tMid = now()
-        tSnap += tMid - t0
-        val snapB = sc.broadcast(snap)
-        tBcast += now() - tMid
+        val snapB = sc.broadcast(graph.snapshot)
         val results =
           try {
             val slices = math.max(1, math.min(batch.size / 16, sc.defaultParallelism))
-            val t1 = now()
-            val r = sc.parallelize(batch, slices).mapPartitions { it =>
+            sc.parallelize(batch, slices).mapPartitions { it =>
               val localStore = mkExecutorStore(payloadB.value)
               val snap = snapB.value
               it.map { case (id, insLayer) =>
@@ -213,27 +201,17 @@ object HnswDistributed {
                 (id, links.map(_.toArray))
               }
             }.collect()
-            tPhase1 += now() - t1
-            r
           } finally snapB.destroy()
 
-        val t2 = now()
         results.sortBy(_._1).foreach { case (id, linkArrays) =>
           val links = linkArrays.map(a => FurthestQueue.fromAscending(a.toSeq))
           val setEp = links.size > graph.numLayers
           driverStore.insert(id)
           searcher.insertFromSearchResults(driverStore, graph, id, links, setEp)
         }
-        tMerge += now() - t2
         pos += batchSize
       }
-    } finally {
-      payloadB.destroy()
-      if (sys.env.get("GRAFT_BUILD_PHASES").contains("true"))
-        System.err.println(
-          f"build phases: snapshot ${tSnap / 1e9}%.2fs bcast ${tBcast / 1e9}%.2fs " +
-            f"phase1 ${tPhase1 / 1e9}%.2fs merge ${tMerge / 1e9}%.2fs")
-    }
+    } finally payloadB.destroy()
   }
 
   /** Distributed k-NN search (S6): broadcast the model, run the

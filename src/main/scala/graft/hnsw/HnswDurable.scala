@@ -175,12 +175,6 @@ object HnswDurable {
     }
 
     // ---- Micro-batched phase against the persisted graph.
-    val debug = sys.env.contains("GRAFT_FRONTIER_DEBUG")
-    def timed[A](label: String)(f: => A): A =
-      if (!debug) f else {
-        val t0 = System.nanoTime(); val a = f
-        System.err.println(f"durable $label: ${(System.nanoTime() - t0) / 1e9}%.2fs"); a
-      }
     val outEnc = ExpressionEncoder[(Long, Int, Array[Long], Array[Double])]()
     while (pos < n) {
       val batchSize = math.min(
@@ -210,13 +204,13 @@ object HnswDurable {
 
       // Upper layers (>= 1): small by the geometric layer law — collect
       // the adjacency + only the vectors it touches, broadcast both.
-      val upperSnap = timed("upperSnap")(GraphFrames.fromLinksDF(
-        linksNow.filter(col("layer") >= 1), Some(entry)))
+      val upperSnap = GraphFrames.fromLinksDF(
+        linksNow.filter(col("layer") >= 1), Some(entry))
       val upperIds: Set[Long] = upperSnap.layers.iterator.drop(1).flatMap(l =>
         l.srcs.iterator ++ l.dsts.iterator).toSet + entry.point
-      val upperVecs = timed("upperVecs")(vecs
+      val upperVecs = vecs
         .join(broadcast(upperIds.toSeq.toDF("id")), "id")
-        .select(col("id"), col("vec")).as(pairEnc).collect().toMap)
+        .select(col("id"), col("vec")).as(pairEnc).collect().toMap
       val sc = spark.sparkContext
       upperB = sc.broadcast((upperSnap, upperVecs))
       val seed = cfg.seed
@@ -296,14 +290,13 @@ object HnswDurable {
         .select(col("qid").as("q"), lit(0).as("layer"), col("links"))
 
       // Phase 2: relational connect_bidir merge into the parquet store.
-      timed("mergeBatch")(
-        store.mergeBatch(upperLinks.unionByName(links0), params, Some(linksNow)))
+      store.mergeBatch(upperLinks.unionByName(links0), params, Some(linksNow))
 
       // Entry point: first-in-id-order vector reaching the batch maximum
       // insertion layer (matches sequential set_ep: ties never displace).
-      val epCand = timed("epCand")(phase1.filter(col("layer") >= 1)
+      val epCand = phase1.filter(col("layer") >= 1)
         .groupBy(col("q")).agg(max(col("layer")).as("l"))
-        .orderBy(desc("l"), asc("q")).limit(1).collect())
+        .orderBy(desc("l"), asc("q")).limit(1).collect()
       epCand.headOption.foreach { r =>
         val (q, l) = (r.getLong(0), r.getInt(1))
         if (l > entry.layer) { store.setEntryPoint(q, l); store.flush() }

@@ -92,8 +92,8 @@ object HnswFrontier {
     // tables stream through every per-round BroadcastHashJoin with ZERO
     // exchanges — a flat cache is optimal and pre-partitioning would add
     // two full-table shuffle+sorts to the fill for nothing (measured
-    // +~1 s/call at sf0.1, FrontierAbProbe interleaved min-of-4:
-    // flat 3.65 s vs prepart 4.64 s). When the batch is too big to
+    // +~1 s/call at sf0.1, interleaved same-JVM A/B min-of-4:
+    // flat 3.65 s vs prepart 4.64 s — OPTIMIZATION_r20.md). When the batch is too big to
     // broadcast (bulk serving at the decade), every round plans a
     // sort-merge join and an unpartitioned cache would re-exchange and
     // re-sort the FULL index table each round — R x |index| shuffled
@@ -104,13 +104,7 @@ object HnswFrontier {
     // input, serializing every downstream join (measured round 19).
     val spark0 = links.sparkSession
     val np = spark0.sparkContext.defaultParallelism
-    // probe escape hatch (FrontierAbProbe): -Dgraft.frontier.prepart
-    // forces one layout for same-JVM A/B runs
-    val prepart = sys.props.get("graft.frontier.prepart").map(_.toBoolean)
-      .orElse(bulkLayout)
-      .getOrElse(bulkRegime(queries))
-    if (sys.env.contains("GRAFT_FRONTIER_DEBUG"))
-      System.err.println(s"frontier cache layout: prepart=$prepart")
+    val prepart = bulkLayout.getOrElse(bulkRegime(queries))
     def keyed(df: DataFrame, key: String): DataFrame =
       if (prepart) df.repartition(np, col(key)).sortWithinPartitions(key)
       else df
@@ -118,10 +112,10 @@ object HnswFrontier {
       .select(col("src"), col("links")), "src")
       .cache()
     // skip the cache when the caller already persisted the vector table
-    // partitioned this way (HnswDurable pins it for the whole ingest —
+    // (HnswDurable pins it FLAT — unpartitioned — for the whole ingest;
     // re-caching here would materialize a second full copy per
     // micro-batch); the projection still reads through the caller's
-    // InMemoryRelation
+    // InMemoryRelation in whatever layout the caller pinned
     val vecsCachedHere =
       vectors.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     val vecs = {
@@ -157,7 +151,6 @@ object HnswFrontier {
     var frontier = ranked.select("qid", "id")
     var visited = ranked.select("qid", "id")
     var rounds = 0
-    val debug = sys.env.contains("GRAFT_FRONTIER_DEBUG")
 
     var done = false
     // the pins must not outlive the call on ANY path (a mid-loop job
@@ -167,7 +160,6 @@ object HnswFrontier {
     // release is safe before the caller materializes it
     try {
       while (rounds < maxRounds && !done) {
-        val t0 = if (debug) System.nanoTime() else 0L
         // expand every frontier node's neighborhood in one join
         val discovered = frontier
           .join(layer0, frontier("id") === layer0("src"))
@@ -205,8 +197,6 @@ object HnswFrontier {
           frontier = fNext
         }
         rounds += 1
-        if (debug) System.err.println(
-          f"frontier round $rounds: ${(System.nanoTime() - t0) / 1e9}%.2fs")
       }
     } finally {
       layer0.unpersist(blocking = false)

@@ -1,7 +1,7 @@
 package graft.hnsw
 
 import org.apache.spark.Partitioner
-import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.hnsw.HnswDistributed.BuildConfig
@@ -190,7 +190,8 @@ object HnswRouted {
     * ([[RoutedLifecycle]]) across the three serving tiers; only the
     * representation (LongVecMap members, float-exact cell rebuild)
     * lives here. */
-  private[graft] object FloatTier extends RoutedTier[CellShard, RoutedIndex] {
+  private[graft] object FloatTier
+      extends RoutedServing[CellShard, RoutedIndex, Array[Float], Router] {
     def shards(i: RoutedIndex): org.apache.spark.rdd.RDD[(Int, CellShard)] = i.shards
     def tombstones(i: RoutedIndex): Array[Long] = i.tombstones
     def overlays(i: RoutedIndex): Seq[org.apache.spark.rdd.RDD[_]] = i.overlay
@@ -206,6 +207,12 @@ object HnswRouted {
     def memberCount(s: CellShard): Int = s.vectors.size
     def containsId(s: CellShard, id: Long): Boolean = s.vectors.contains(id)
     def idIterator(s: CellShard): Iterator[Long] = s.vectors.keysIterator
+    val queryCol = "qvec"
+    def queryEnc: Encoder[(Long, Array[Float])] =
+      Encoders.tuple(Encoders.scalaLong, ExprEnc.floatArray)
+    def router(i: RoutedIndex): Router = i.router
+    def probeCells(r: Router, q: Array[Float], nProbe: Int): Iterator[Int] =
+      r.probeCells(q, nProbe)
     def survivorRebuild(i: RoutedIndex): (Int, CellShard, Array[Long]) => CellShard = {
       val cfg = i.cfg
       (cell, s, dead) => {
@@ -253,54 +260,62 @@ object HnswRouted {
   private[hnsw] def modalCensus(rows: Array[Array[Float]],
       metric: (Array[Float], Array[Float]) => Double,
       metricName: String): Array[(Array[Float], Int)] = {
-    if (rows.length < 32) return Array.empty
-    @inline def lin(d: Double): Double =
-      if (metricName == "l2") math.sqrt(math.max(0.0, d)) else d
-    val k = math.max(2, math.min(ModalityKSplit, rows.length / 4))
-    val dim = rows.head.length
-    val cents = Array.ofDim[Array[Float]](k)
-    cents(0) = {
-      val acc = new Array[Double](dim)
-      rows.foreach { v =>
-        var d = 0; while (d < dim) { acc(d) += v(d); d += 1 } }
-      Array.tabulate(dim)(d => (acc(d) / rows.length).toFloat)
+    val dim = rows.headOption.fold(0)(_.length)
+    modalCensusOf(rows, metric,
+      if (metricName == "l2") d => math.sqrt(math.max(0.0, d)) else identity,
+      MergedCellAudit.meanOf(dim)) { (comps, cents, ns, _) =>
+      val total = comps.map(ns(_)).sum
+      Array.tabulate(dim) { d =>
+        (comps.map(c => cents(c)(d).toDouble * ns(c)).sum / total).toFloat
+      }
     }
+  }
+
+  /** The modal census over any representation (float vectors here, u64
+    * codes in [[HnswRoutedCodes.modalCensusCodes]]): `dist` between
+    * members, `lin` linearizing it into a geometric radius, `center` of
+    * a component's members, and `group(components, centers, counts,
+    * assignment)` the center of a merged group. Returns the strong groups
+    * as (group center, sample count), descending by count. */
+  private[hnsw] def modalCensusOf[V: scala.reflect.ClassTag](rows: Array[V],
+      dist: (V, V) => Double, lin: Double => Double, center: Iterator[V] => V)(
+      group: (Array[Int], Array[V], Array[Int], Array[Int]) => V): Array[(V, Int)] = {
+    if (rows.length < 32) return Array.empty
+    val k = math.max(2, math.min(ModalityKSplit, rows.length / 4))
+    val cents = new Array[V](k)
+    cents(0) = center(rows.iterator)
     var j = 1
     while (j < k) {
-      var best: Array[Float] = null; var bestD = -1.0
+      var best = rows.head; var bestD = -1.0
       rows.foreach { v =>
         var minD = Double.MaxValue; var c = 0
-        while (c < j) { val d = metric(v, cents(c)); if (d < minD) minD = d; c += 1 }
+        while (c < j) { val d = dist(v, cents(c)); if (d < minD) minD = d; c += 1 }
         if (minD > bestD) { bestD = minD; best = v }
       }
       cents(j) = best; j += 1
     }
-    @inline def nearest(v: Array[Float]): Int = {
+    def nearest(v: V): Int = {
       var bi = 0; var bd = Double.MaxValue; var c = 0
       while (c < k) {
-        val d = metric(v, cents(c)); if (d < bd) { bd = d; bi = c }; c += 1 }
+        val d = dist(v, cents(c)); if (d < bd) { bd = d; bi = c }; c += 1 }
       bi
     }
     var it = 0
     while (it < ModalityIters) {
-      val accs = Array.fill(k)(new Array[Double](dim))
-      val ns = new Array[Int](k)
-      rows.foreach { v =>
-        val c = nearest(v); val acc = accs(c)
-        var d = 0; while (d < dim) { acc(d) += v(d); d += 1 }
-        ns(c) += 1
-      }
+      val assign = rows.map(nearest)
       var c = 0
       while (c < k) {
-        if (ns(c) > 0)
-          cents(c) = Array.tabulate(dim)(d => (accs(c)(d) / ns(c)).toFloat)
-        c += 1 // an empty component keeps its centroid
+        val cc = c
+        if (assign.contains(cc))
+          cents(c) = center(rows.indices.iterator.filter(assign(_) == cc).map(rows(_)))
+        c += 1 // an empty component keeps its center
       }
       it += 1
     }
+    val assign = rows.map(nearest)
     val ns = new Array[Int](k); val sumD = new Array[Double](k)
-    rows.foreach { v =>
-      val c = nearest(v); ns(c) += 1; sumD(c) += metric(v, cents(c)) }
+    rows.indices.foreach { i =>
+      val c = assign(i); ns(c) += 1; sumD(c) += dist(rows(i), cents(c)) }
     // participants: every non-noise component (the strong test comes
     // AFTER the merge — see the Scaladoc)
     val parts = (0 until k).filter(c => ns(c) >= 8).toArray
@@ -308,13 +323,15 @@ object HnswRouted {
     // ROBUST mass-weighted mean radius: tiny outlier fragments must not
     // drag the merge threshold down (unweighted, they shrank it enough
     // to keep a unimodal blob's main fragments apart — a false split),
-    // and a mode-STRADDLING component must not inflate it (its radius
-    // reads ~ the inter-mode distance/2; mass-weighted in, the linkage
-    // threshold can exceed the inter-mode distance itself and the modes
-    // merge into one "unimodal" group — the codes twin measured exactly
-    // one of 16 planted bimodal cells escaping the guard this way at
-    // the 1e6 rung). Median-radius filter: components beyond 2x the
-    // median are excluded from the THRESHOLD computation only.
+    // and a mode-STRADDLING component (unlucky farthest-point seeding)
+    // must not inflate it (its radius reads ~ the inter-mode distance/2;
+    // mass-weighted in, the linkage threshold can exceed the inter-mode
+    // distance itself and the modes merge into one "unimodal" group —
+    // the codes census measured exactly one of 16 planted bimodal cells
+    // escaping the guard this way at the 1e6 rung). Straddlers are rare
+    // among k=8 components, so the MEDIAN resists them: components
+    // beyond 2x the median radius are excluded from the THRESHOLD
+    // computation only (they still join the linkage by their center).
     val radii = parts.map(c => lin(sumD(c) / ns(c)))
     val medianRad = radii.sorted.apply(radii.length / 2)
     val keptIdx = parts.indices.filter(i =>
@@ -328,7 +345,7 @@ object HnswRouted {
       if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
     if (meanRad > 0.0)
       for (i <- parts.indices; jj <- (i + 1) until parts.length) {
-        val d = lin(metric(cents(parts(i)), cents(parts(jj))))
+        val d = lin(dist(cents(parts(i)), cents(parts(jj))))
         if (d < ModalitySepFactor * meanRad) {
           val (a, b) = (find(i), find(jj)); if (a != b) parent(a) = b
         }
@@ -336,12 +353,8 @@ object HnswRouted {
     val minShare = math.max(8L, rows.length * ModalityShareBp / 10000L)
     parts.indices.groupBy(find).values.toArray
       .map { idxs =>
-        val members = idxs.map(parts(_))
-        val total = members.map(ns(_)).sum
-        val centroid = Array.tabulate(dim) { d =>
-          (members.map(c => cents(c)(d).toDouble * ns(c)).sum / total).toFloat
-        }
-        (centroid, total)
+        val comps = idxs.map(parts(_)).toArray
+        (group(comps, cents, ns, assign), comps.map(ns(_)).sum)
       }
       .filter(_._2 >= minShare)
       .sortBy(-_._2)
@@ -774,37 +787,16 @@ object HnswRouted {
                       minDeadBp: Int = 1000, maxDeadBp: Int = 9000,
                       sampleMax: Int = 4096, iters: Int = 8,
                       kSplit: Int = 8): DataFrame = {
-    val spark = SparkSession.active
-    import spark.implicits._
-    val cfg = index.cfg
-    val tombB = index.shards.sparkContext.broadcast(index.tombstones)
-    val rows = index.shards.flatMap { case (cell, s) =>
-      val dead = tombB.value
-      val cellN = s.vectors.size
-      if (dead.length == 0 || cellN < minCellRows) Iterator.empty
-      else {
-        @inline def isDead(id: Long): Boolean =
-          java.util.Arrays.binarySearch(dead, id) >= 0
-        var nDead = 0
-        s.vectors.keysIterator.foreach(id => if (isDead(id)) nDead += 1)
-        val deadBp = nDead * 10000L / cellN
-        if (deadBp < minDeadBp || deadBp > maxDeadBp) Iterator.empty
-        else {
-          // the separability test is the SHARED float-space kernel
-          // ([[MergedCellAudit.auditCell]] — also run by the PQ tier
-          // over code reconstructions); sampling/seeding rationale
-          // lives on the kernel
-          val all = s.vectors.toArray.sortBy(_._1)
-          val (hiBp, loBp, massHiBp, merged) = MergedCellAudit.auditCell(
-            all, Metrics.byName(cfg.metric), isDead, nDead,
-            sampleMax, iters, kSplit)
-          Iterator.single((cell, cellN.toLong, nDead.toLong, deadBp,
-            hiBp, loBp, massHiBp, merged))
-        }
-      }
-    }.collect()
-    rows.toSeq.toDF("cell", "n", "n_dead", "dead_bp",
-      "hi_dead_bp", "lo_dead_bp", "dead_mass_hi_bp", "merged")
+    val metricName = index.cfg.metric
+    RoutedLifecycle.mergedCellAudit(FloatTier)(index, minCellRows, minDeadBp,
+        maxDeadBp) { (s, isDead, nDead) =>
+      // the separability test is the SHARED kernel
+      // ([[MergedCellAudit.auditCell]] — also run by the PQ tier over
+      // code reconstructions and by the codes tier in Hamming space);
+      // sampling/seeding rationale lives on the kernel
+      MergedCellAudit.auditCell(s.vectors.toArray.sortBy(_._1),
+        Metrics.byName(metricName), isDead, nDead, sampleMax, iters, kSplit)
+    }
   }
 
   /** Detect-and-remediate: [[mergedCellAudit]] → targeted compaction
@@ -818,9 +810,7 @@ object HnswRouted {
                            persist: Boolean = true,
                            unpersistPrior: Boolean = true,
                            patched: Boolean = true): (RoutedIndex, Array[Int]) = {
-    val flagged = mergedCellAudit(index, minCellRows)
-      .filter(col("merged")).select(col("cell"))
-      .collect().map(_.getInt(0))
+    val flagged = RoutedLifecycle.flaggedCells(mergedCellAudit(index, minCellRows))
     if (flagged.isEmpty) (index, flagged)
     else if (patched) (compactCellsPatched(index, flagged, persist), flagged)
     else (compactCells(index, flagged, persist, unpersistPrior), flagged)
@@ -859,8 +849,9 @@ object HnswRouted {
     * discipline. The measured tax (BASELINE rounds 14-15): the first
     * serve after a build/attach/fold reads 10-40x the steady band at
     * the DISK_ONLY decades (42.6 s vs 4-8 s at 1e7; 128.3 s composite
-    * at 1e8), diagnosed via PlanProbe/PatchTaskProbe as COLD BLOCK
-    * READS with pruning intact — the bytes had to come off disk
+    * at 1e8), diagnosed via PlanProbe and per-serve task counts as
+    * COLD BLOCK READS with pruning intact (RoutedPruningSpec pins the
+    * pruning) — the bytes had to come off disk
     * sometime, and "sometime" was the first query. This pass moves
     * that read OFF the serving path: one full deserializing sweep of
     * every shard partition (base + overlay blocks for a patched
@@ -879,19 +870,9 @@ object HnswRouted {
     * disk read — the 1e7 rung measured a 1.9x first-serve residual
     * after it, which is exactly the kernel/plan warm-up this probe
     * pays. Returns the number of cells probed. */
-  def warmProbe(index: RoutedIndex, ef: Int = 16): Long = {
-    val reps = index.shards.flatMap { case (cell, s) =>
-      s.vectors.iterator.take(1).map { case (_, v) => (cell.toLong, v) }
-    }.collect()
-    if (reps.isEmpty) 0L
-    else {
-      val spark = SparkSession.active
-      import spark.implicits._
-      val qDf = reps.toSeq.toDF("qid", "qvec")
-      search(index, qDf, k = 1, nProbe = 1, ef0 = ef).count()
-      reps.length.toLong
-    }
-  }
+  def warmProbe(index: RoutedIndex, ef: Int = 16): Long =
+    RoutedServe.warmProbe(FloatTier, index)(_.vectors.valuesIterator)(
+      search(index, _, k = 1, nProbe = 1, ef0 = ef))
 
   /** Per-cell occupancy (cell, rows) — the drift audit surface: compare
     * against the build-time histogram to decide when frozen centroids
@@ -980,7 +961,7 @@ object HnswRouted {
     * dials for the two loss modes. */
   def search(index: RoutedIndex, queries: DataFrame, k: Int,
              nProbe: Int, ef0: Int = 0): DataFrame =
-    searchImpl(index, queries, k, nProbe, ef0, allowed = None)
+    ranked(request(index, k, nProbe, ef0).routed(queries, None), k)
 
   /** Attribute-filtered routed k-NN: top-k among only the ids in
     * `allowed` (one id column) — the broadcast tier's
@@ -988,12 +969,13 @@ object HnswRouted {
     * The allow-set broadcasts as a sorted primitive array (8 B/id,
     * binary-search membership — the id list of a label partition); each
     * probed cell serves one overfetched beam with an exact in-cell
-    * fallback (see [[searchImpl]]). Routing is UNCHANGED: a query still
-    * probes its nProbe nearest cells, so a selective predicate whose
-    * mass lives in unprobed cells costs recall exactly like any other
-    * cross-boundary neighbor — the exhaustive regime (nProbe = nCells)
-    * forces the exact path and is the oracle-exact configuration, and
-    * tombstones compose (an id must be allowed AND not deleted).
+    * fallback ([[PredicatedCensus.serve]]). Routing is UNCHANGED: a
+    * query still probes its nProbe nearest cells, so a selective
+    * predicate whose mass lives in unprobed cells costs recall exactly
+    * like any other cross-boundary neighbor — the exhaustive regime
+    * (nProbe = nCells) forces the exact path and is the oracle-exact
+    * configuration, and tombstones compose (an id must be allowed AND
+    * not deleted).
     *
     * ROUTING: the allow-set is `distinct().collect()`ed here once per
     * call while it fits [[AllowCollectMax]] (a caller issuing many
@@ -1004,12 +986,7 @@ object HnswRouted {
   def searchFiltered(index: RoutedIndex, queries: DataFrame,
                      allowed: DataFrame, k: Int, nProbe: Int,
                      ef0: Int = 0): DataFrame =
-    RoutedLifecycle.allowProbe(allowed, AllowCollectMax) match {
-      case None =>
-        searchFilteredDistributed(index, queries, allowed, k, nProbe, ef0)
-      case some =>
-        searchImpl(index, queries, k, nProbe, ef0, allowed = some)
-    }
+    ranked(request(index, k, nProbe, ef0).filtered(queries, allowed), k)
 
   /** [[searchFiltered]] with a pre-collected allow-set — the repeat-
     * caller path (collect + sort the id array once, serve many query
@@ -1018,7 +995,7 @@ object HnswRouted {
   def searchFilteredIds(index: RoutedIndex, queries: DataFrame,
                         allowedIds: Array[Long], k: Int, nProbe: Int,
                         ef0: Int = 0): DataFrame =
-    searchImpl(index, queries, k, nProbe, ef0, allowed = Some(allowedIds))
+    ranked(request(index, k, nProbe, ef0).routed(queries, Some(allowedIds)), k)
 
   /** Allow-sets above this count route DISTRIBUTEDLY
     * ([[searchFilteredDistributed]]) instead of through the driver
@@ -1030,40 +1007,17 @@ object HnswRouted {
 
   /** Fully distributed attribute-filtered serving — no driver-side
     * materialization of EITHER the query batch or the allow-set: the
-    * allow-set joins against the index's own (id → cell) pairs (one
-    * narrow flatMap over the shards' key sets — each id lives in
-    * exactly one cell, so the join output is |allow| rows), shuffles
-    * by the pinned partitioner, and rides a 3-way zipPartitions with
-    * the shards and the routed queries; the per-cell sorted allow
-    * array is built executor-side. Same per-shard kernel as every
-    * other path (row-identity spec-pinned). [[searchFiltered]]
+    * allow-set joins against the index's own (id → cell) pairs (each id
+    * lives in exactly one cell, so the join output is |allow| rows),
+    * shuffles by the pinned partitioner, and rides a 3-way
+    * zipPartitions with the shards and the routed queries; the per-cell
+    * sorted allow array is built executor-side. Same per-shard kernel
+    * as every other path (row-identity spec-pinned). [[searchFiltered]]
     * auto-selects this path above [[AllowCollectMax]] ids. */
   def searchFilteredDistributed(index: RoutedIndex, queries: DataFrame,
                                 allowed: DataFrame, k: Int, nProbe: Int,
-                                ef0: Int = 0): DataFrame = {
-    val spark = queries.sparkSession
-    val sc = spark.sparkContext
-    val cfg = index.cfg
-    val exhaustive = nProbe >= index.router.nPrimary
-    val routerB = sc.broadcast(index.router)
-    val tombB = sc.broadcast(index.tombstones)
-    val part = index.shards.partitioner.getOrElse(throw new IllegalStateException(
-      "distributed routing needs the index's pinned CellPartitioner"))
-    val pairEnc = Encoders.tuple(Encoders.scalaLong, ExprEnc.floatArray)
-    val routed = queries.select(col("qid"), col("qvec")).as(pairEnc).rdd
-      .flatMap { case (qid, qv) =>
-        routerB.value.probeCells(qv, nProbe).map(c => (c, (qid, qv)))
-      }.partitionBy(part)
-    val allowByCell = RoutedLifecycle.allowByCell(FloatTier)(index, allowed, part)
-    import spark.implicits._
-    val perShard = RoutedLifecycle.zipServeFiltered(
-        index.shards, routed, allowByCell) {
-      (m: CellShard, probes: Iterator[(Long, Array[Float])], allow: Array[Long]) =>
-        serveShard(cfg, m, probes, k, ef0, exhaustive,
-          hasAllow = true, allow, tombB.value)
-    }.toDF("qid", "id", "dist")
-    rankMerge(perShard, k)
-  }
+                                ef0: Int = 0): DataFrame =
+    ranked(request(index, k, nProbe, ef0).filteredDistributed(queries, allowed), k)
 
   private[hnsw] def sortedIdArray(ids: DataFrame): Array[Long] = {
     val arr = ids.select(col(ids.columns.head).cast("long")).distinct()
@@ -1098,212 +1052,48 @@ object HnswRouted {
                         nProbe: Int, ef0: Int = 0): DataFrame =
     searchImplDistributed(index, queries, k, nProbe, ef0, allowed = None)
 
-  /** Per-shard serving kernel, shared verbatim by the driver-routed
-    * and distributed-routed paths (path equality is structural, not
-    * coincidental). Serves `probes` against one cell: plain beam when
-    * unpredicated; census → identity-filter / one-overfetched-beam /
-    * exact-scan discipline when predicated (exhaustive regime forces
-    * the exact scan — the hash-oracle configuration). */
-  private[hnsw] def serveShard(
-      cfg: BuildConfig, m: CellShard,
-      probes: Iterator[(Long, Array[Float])],
-      k: Int, ef0: Int, exhaustive: Boolean,
-      hasAllow: Boolean, allow: Array[Long],
-      dead: Array[Long]): Iterator[(Long, Long, Double)] = {
-    val metric = Metrics.byName(cfg.metric)
-    val searcher = new HnswSearcher(cfg.params)
-    val base = cfg.params.getEfSearch(0)
-    val ef = if (ef0 > 0) math.max(ef0, base)
-             else autoEf(base, m.vectors.size)
-    // one store per shard, -1 query slot re-staged per query (the
-    // searchSharded pattern)
-    val qStore = new ArrayVectorStore(metric, base = m.vectors)
-    val predicated = hasAllow || dead.nonEmpty
-    if (!predicated)
-      probes.flatMap { case (qid, qvec) =>
-        val q = qStore.prepareQueryWithId(-1L, qvec)
-        searcher.searchWithEf(qStore, m.snapshot, q, k, ef)
-          .iterator.map(nb => (qid, nb.dst, nb.dist))
-      }
-    else {
-          // Predicated serving (the HnswDistributed.searchPredicated
-          // discipline, executor-local to the shard). Accuracy contract:
-          // EXACT whenever the exact-scan path serves — which is every
-          // cell in the exhaustive regime (forced below), plus any cell
-          // the density cutover routes to exact — and otherwise at least
-          // as accurate as the plain kernel (one overfetched beam whose
-          // eligible prefix carries the queue's total (dist, id) order).
-          // Census/eligibleIds/exact-scan machinery is the SHARED
-          // [[PredicatedCensus]] kernel (one copy across the three
-          // routed tiers — see its Scaladoc for the measured rationale
-          // behind each discipline).
-          val cen = new PredicatedCensus.Census(
-            PredicatedCensus.Members.ofVecMap(m.vectors),
-            hasAllow, allow, dead)
-          @inline def eligible(id: Long): Boolean = cen.eligible(id)
-          val cellN = cen.cellN
-          def exactScan(qid: Long, q: Long): List[(Long, Long, Double)] =
-            PredicatedCensus.exactScanTopK(cen.eligibleIds, k,
-                id => qStore.evalDistance(q, id))
-              .iterator.map(nb => (qid, nb.dst, nb.dist)).toList
-          val kp0 = math.max(4 * k, ef)
-          if (cen.eligibleCount == 0) Iterator.empty
-          else if (exhaustive)
-            // exactness is structural here, not small-cell luck: the
-            // filtered/tombstone hash-oracle rows serve through this
-            // branch (identity-filter cells included — a plain beam
-            // there would re-introduce the plain kernel's approximation
-            // into a result the oracle demands exact)
-            probes.flatMap { case (qid, qvec) =>
-              exactScan(qid, qStore.prepareQueryWithId(-1L, qvec))
-            }
-          else if (cen.eligibleCount == cellN)
-            // every member eligible -> the filter is the identity:
-            // serve on the unmodified plain kernel (cell-local
-            // deletions cost ~nothing on untouched cells; see the
-            // codes tier's note on the measured wrapper tax)
-            probes.flatMap { case (qid, qvec) =>
-              val q = qStore.prepareQueryWithId(-1L, qvec)
-              searcher.searchWithEf(qStore, m.snapshot, q, k, ef)
-                .iterator.map(nb => (qid, nb.dst, nb.dist))
-            }
-          else probes.flatMap { case (qid, qvec) =>
-            val q = qStore.prepareQueryWithId(-1L, qvec)
-            // density-aware cutover (see the codes tier's note): a
-            // low-eligible-fraction cell defeats the beam — while the
-            // exact scan is O(eligible) per query
-            if (cen.cutoverToExact(kp0)) exactScan(qid, q)
-            else {
-              // ONE overfetched beam, then exact — never escalate
-              // in-cell. Escalation is the BROADCAST tier's discipline,
-              // where "exact" means a corpus-wide scan; per cell the
-              // exact scan is bounded by cellN and costs less than one
-              // 4x re-beam. The regime that needs this is GEOMETRIC
-              // eligibility clustering the density census cannot see: a
-              // merged cell holding a dead cluster beside a live one
-              // reads 50% eligible cell-wide, but a query arriving near
-              // the dead cluster has ~zero eligible among its nearest —
-              // measured as ~3 escalations per query, 39 s in one task,
-              // before this cutover.
-              val w = searcher.searchWithEf(qStore, m.snapshot, q, kp0, kp0)
-              // queue order is total on (dist, id) — the filtered prefix
-              // carries the oracle's tie-breaking
-              val hits = w.iterator.filter(nb => eligible(nb.dst)).take(k).toList
-              if (hits.length >= k) hits.map(nb => (qid, nb.dst, nb.dist))
-              else exactScan(qid, q)
-            }
-          }
-        }
-  }
-
-  /** Global top-k merge over per-shard candidates: row_number over the
-    * total (dist, id) order — shared by both routing paths so the
-    * published result (and its tie-breaking) is path-independent. */
-  private def rankMerge(perShard: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    perShard
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("dist"), col("id"))))
-      .filter(col("rank") <= k)
-  }
-
-  private def searchImpl(index: RoutedIndex, queries: DataFrame, k: Int,
-                         nProbe: Int, ef0: Int,
-                         allowed: Option[Array[Long]]): DataFrame = {
-    val spark = queries.sparkSession
-    val cfg = index.cfg
-    val router = index.router
-    // Exhaustive regime: the probe set covers every primary cell, so
-    // predicated serving can GUARANTEE exactness by taking the exact
-    // scan in every probed cell (every eligible id lives in exactly one
-    // cell, and each cell contributes its true top-k-eligible) — the
-    // configuration the hash-oracle rows ride. In the nProbe regime the
-    // beam-accept path serves: approximate like the plain kernel, never
-    // less accurate than it.
-    val exhaustive = nProbe >= router.nPrimary
-    val pairEnc = Encoders.tuple(Encoders.scalaLong, ExprEnc.floatArray)
-    // driver-side routing: an ONLINE query batch is tiny next to the
-    // corpus and centroids are tiny next to everything — assign each
-    // query its probe cells here, invert to cell -> queries, broadcast
-    // once. The limit guards the collect: a BATCH query side (the
-    // routed tier as one side of a large similarity join) overflows the
-    // cutover and reroutes through the distributed path — same kernel,
-    // same merge, one extra (wasted) partial collect on the rare
-    // crossing rather than a count job on every call.
-    val qArr = queries.select(col("qid"), col("qvec"))
-      .limit(DriverRouteMax + 1).as(pairEnc).collect()
-    if (qArr.length > DriverRouteMax)
-      return searchImplDistributed(index, queries, k, nProbe, ef0, allowed)
-    val byCell = qArr.iterator.flatMap { case (qid, qv) =>
-      router.probeCells(qv, nProbe).map(c => (c, (qid, qv)))
-    }.toArray.groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2) }
-    val qB = spark.sparkContext.broadcast(byCell)
-    // predicate state: both sets ride as sorted primitive arrays (the
-    // searchPredicated broadcast shape — O(set), never O(corpus))
-    val hasAllow = allowed.nonEmpty
-    val allowB = spark.sparkContext.broadcast(allowed.getOrElse(Array.empty[Long]))
-    val tombB = spark.sparkContext.broadcast(index.tombstones)
-    import spark.implicits._
-    val perShard = prunedShards(index.shards, byCell.keys).flatMap { case (_, m) =>
-      val probes = qB.value.getOrElse(m.cell, Array.empty[(Long, Array[Float])])
-      if (probes.isEmpty) Iterator.empty
-      else serveShard(cfg, m, probes.iterator, k, ef0, exhaustive,
-        hasAllow, allowB.value, tombB.value)
-    }.toDF("qid", "id", "dist")
-    rankMerge(perShard, k)
-  }
-
   private[hnsw] def searchImplDistributed(
       index: RoutedIndex, queries: DataFrame, k: Int,
-      nProbe: Int, ef0: Int, allowed: Option[Array[Long]]): DataFrame = {
-    val spark = queries.sparkSession
-    val sc = spark.sparkContext
+      nProbe: Int, ef0: Int, allowed: Option[Array[Long]]): DataFrame =
+    ranked(request(index, k, nProbe, ef0).distributed(queries, allowed), k)
+
+  /** The in-cell layer-0 beam of the three tiers' kernels: an explicit
+    * `ef0` pins it (never below the configured ef_search); 0 applies
+    * the density-adaptive [[autoEf]]. */
+  private[hnsw] def cellEf(params: HnswParams, ef0: Int, cellSize: Int): Int = {
+    val base = params.getEfSearch(0)
+    if (ef0 > 0) math.max(ef0, base) else autoEf(base, cellSize)
+  }
+
+  private def ranked(perShard: DataFrame, k: Int): DataFrame =
+    RoutedServe.top(perShard, "dist", k)
+
+  /** One serve over the shared transport ([[RoutedServe]]) with the
+    * float kernel: the cell's vectors, a plain beam over one store per
+    * shard (-1 query slot re-staged per query — the searchSharded
+    * pattern) and the metric's exact distance. Exhaustive regime: the
+    * probe set covers every primary cell, so predicated serving can
+    * GUARANTEE exactness by taking the exact scan in every probed cell
+    * (every eligible id lives in exactly one cell, and each cell
+    * contributes its true top-k-eligible) — the configuration the
+    * hash-oracle rows ride. In the nProbe regime the beam-accept path
+    * serves: approximate like the plain kernel, never less accurate
+    * than it. */
+  private def request(index: RoutedIndex, k: Int, nProbe: Int, ef0: Int) = {
     val cfg = index.cfg
     val exhaustive = nProbe >= index.router.nPrimary
-    val routerB = sc.broadcast(index.router)
-    val hasAllow = allowed.nonEmpty
-    val allowB = sc.broadcast(allowed.getOrElse(Array.empty[Long]))
-    val tombB = sc.broadcast(index.tombstones)
-    val pairEnc = Encoders.tuple(Encoders.scalaLong, ExprEnc.floatArray)
-    // zipPartitions needs the query side keyed by the SHARDS' OWN
-    // partitioner (an equal-value clone would match keys but not
-    // partition COUNT if the shards ever lost theirs) — every
-    // build/attach/ingest/compact output pins it, so absence is a
-    // construction bug, not a servable state
-    val part = index.shards.partitioner.getOrElse(throw new IllegalStateException(
-      "distributed routing needs the index's pinned CellPartitioner"))
-    // the ONLY shuffle is the query side: fan each query to its probe
-    // cells against the broadcast router, key by the pinned cell
-    // partitioner — the shard side rides a narrow zipPartitions (the
-    // ingest discipline; no shard bytes move)
-    val routed = queries.select(col("qid"), col("qvec")).as(pairEnc).rdd
-      .flatMap { case (qid, qv) =>
-        routerB.value.probeCells(qv, nProbe).map(c => (c, (qid, qv)))
-      }.partitionBy(part)
-    import spark.implicits._
-    val perShard = index.shards.zipPartitions(routed) { (shardIt, qIt) =>
-      val shards = shardIt.toArray
-      if (shards.length == 0) Iterator.empty
-      else if (shards.length == 1) {
-        // the pinned partitioner is a cell -> partition bijection, so
-        // this is the always-taken branch: STREAM the partition's
-        // queries through the kernel — the per-executor bound is the
-        // kernel's working set, not the routed query list
-        val (cell, m) = shards(0)
-        val probes = qIt.collect { case (c, q) if c == cell => q }
-        serveShard(cfg, m, probes, k, ef0, exhaustive,
-          hasAllow, allowB.value, tombB.value)
-      } else {
-        // co-located cells (a foreign partitioner only): group, serve each
-        val byCell = qIt.toArray.groupBy(_._1)
-        shards.iterator.flatMap { case (cell, m) =>
-          serveShard(cfg, m,
-            byCell.getOrElse(cell, Array.empty).iterator.map(_._2),
-            k, ef0, exhaustive, hasAllow, allowB.value, tombB.value)
-        }
-      }
-    }.toDF("qid", "id", "dist")
-    rankMerge(perShard, k)
+    new RoutedServe.Request(FloatTier, index, nProbe, "dist",
+      (m: CellShard, probes: Iterator[(Long, Array[Float])], hasAllow: Boolean,
+       allow: Array[Long], dead: Array[Long]) => {
+        val searcher = new HnswSearcher(cfg.params)
+        val qStore = new ArrayVectorStore(Metrics.byName(cfg.metric), base = m.vectors)
+        def stage(qv: Array[Float]): Long = qStore.prepareQueryWithId(-1L, qv)
+        PredicatedCensus.serve(PredicatedCensus.Members.ofVecMap(m.vectors),
+          probes, k, cellEf(cfg.params, ef0, m.vectors.size), exhaustive,
+          hasAllow, allow, dead)(
+          (qv, kk, ef) => searcher.searchWithEf(qStore, m.snapshot, stage(qv), kk, ef),
+          qv => { val q = stage(qv); id => qStore.evalDistance(q, id) })
+      })
   }
 
   // --------------------------------------------------------------------
@@ -1391,42 +1181,14 @@ object HnswRouted {
     RoutedIndex(cfg, router, shards, RoutedImage.readTombstones(spark, dir))
   }
 
-  /** Process-wide memo (the shardCache pattern), keyed by app id so a
-    * handle of a stopped SparkContext is never served. NOT
-    * computeIfAbsent: the lifecycle handles nest (compactCached →
-    * deleteCached → buildCached), and nested computeIfAbsent on one
-    * ConcurrentHashMap throws "Recursive update" — get/putIfAbsent
-    * trades atomic insertion (never contended here: the catalog serves
-    * queries sequentially) for safe nesting. */
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, RoutedIndex]()
+  /** Nest-safe process-wide memo of the catalog's lifecycle handles. */
+  private val memo = new HandleMemo[RoutedIndex](_.unpersist())
 
-  /** Release every memoized handle (see [[IndexCaches]]). Lifecycle
-    * handles SHARE shard RDDs (deleteCached wraps buildCached's), so
-    * double-unpersist is possible and harmless (idempotent). */
-  private[hnsw] def releaseCaches(): Unit = {
-    cache.values.forEach(_.unpersist())
-    cache.clear()
-  }
-
-  private def memo(key: String)(mk: => RoutedIndex): RoutedIndex = {
-    val hit = cache.get(key)
-    if (hit != null) hit
-    else {
-      val v = mk
-      val prev = cache.putIfAbsent(key, v)
-      // losing the (theoretical) race leaves v's shards persisted and
-      // materialized but unreachable — release them, don't leak the
-      // executor storage pool
-      if (prev != null) { v.unpersist(); prev } else v
-    }
-  }
+  private[hnsw] def releaseCaches(): Unit = memo.releaseAll()
 
   def buildCached(vectors: DataFrame, cfg: BuildConfig, nCells: Int,
                   key: String): RoutedIndex =
-    memo(
-      s"${vectors.sparkSession.sparkContext.applicationId}|$key|$nCells|" +
-        HnswDistributed.cacheKey(cfg))(
+    memo(HandleMemo.appId(vectors), key, nCells, HnswDistributed.cacheKey(cfg))(
       graft.BuildLedger.timed("hnsw_routed_build")(
         build(vectors, cfg, nCells)))
 
@@ -1436,9 +1198,7 @@ object HnswRouted {
     * exhaustive-regime oracle as a from-scratch build. */
   def growCached(baseVectors: DataFrame, newRows: DataFrame,
                  cfg: BuildConfig, nCells: Int, key: String): RoutedIndex =
-    memo(
-      s"${baseVectors.sparkSession.sparkContext.applicationId}|grow|$key|" +
-        s"$nCells|${HnswDistributed.cacheKey(cfg)}")(
+    memo(HandleMemo.appId(baseVectors), "grow", key, nCells, HnswDistributed.cacheKey(cfg))(
       graft.BuildLedger.timed("hnsw_routed_grow") {
         ingest(build(baseVectors, cfg, nCells), newRows)
       })
@@ -1448,9 +1208,7 @@ object HnswRouted {
     * from the ATTACHED copy so the oracle rides the restore path). */
   def attachCached(vectors: DataFrame, cfg: BuildConfig, nCells: Int,
                    key: String): RoutedIndex =
-    memo(
-      s"${vectors.sparkSession.sparkContext.applicationId}|attach|$key|" +
-        s"$nCells|${HnswDistributed.cacheKey(cfg)}")(
+    memo(HandleMemo.appId(vectors), "attach", key, nCells, HnswDistributed.cacheKey(cfg))(
       graft.BuildLedger.timed("hnsw_routed_save_attach") {
         val built = buildCached(vectors, cfg, nCells, key)
         val dir = graft.TempDirs.create("graft_routed_")
@@ -1465,9 +1223,8 @@ object HnswRouted {
   def deleteCached(vectors: DataFrame, deleted: DataFrame,
                    cfg: BuildConfig, nCells: Int, key: String,
                    delKey: String): RoutedIndex =
-    memo(
-      s"${vectors.sparkSession.sparkContext.applicationId}|tomb|$key|" +
-        s"$delKey|$nCells|${HnswDistributed.cacheKey(cfg)}")(
+    memo(HandleMemo.appId(vectors), "tomb", key, delKey, nCells,
+      HnswDistributed.cacheKey(cfg))(
       delete(buildCached(vectors, cfg, nCells, key), deleted))
 
   /** Memoized retrain of the cached grown index — the drift-recovery
@@ -1476,9 +1233,8 @@ object HnswRouted {
     * keeps serving its rows). */
   def retrainCached(baseVectors: DataFrame, newRows: DataFrame,
                     cfg: BuildConfig, nCells: Int, key: String): RoutedIndex =
-    memo(
-      s"${baseVectors.sparkSession.sparkContext.applicationId}|retrain|$key|" +
-        s"$nCells|${HnswDistributed.cacheKey(cfg)}")(
+    memo(HandleMemo.appId(baseVectors), "retrain", key, nCells,
+      HnswDistributed.cacheKey(cfg))(
       graft.BuildLedger.timed("hnsw_routed_retrain") {
         retrain(growCached(baseVectors, newRows, cfg, nCells, key))
       })
@@ -1491,9 +1247,8 @@ object HnswRouted {
   def compactCached(vectors: DataFrame, deleted: DataFrame,
                     cfg: BuildConfig, nCells: Int, key: String,
                     delKey: String): RoutedIndex =
-    memo(
-      s"${vectors.sparkSession.sparkContext.applicationId}|compact|$key|" +
-        s"$delKey|$nCells|${HnswDistributed.cacheKey(cfg)}")(
+    memo(HandleMemo.appId(vectors), "compact", key, delKey, nCells,
+      HnswDistributed.cacheKey(cfg))(
       graft.BuildLedger.timed("hnsw_routed_compact") {
         compact(deleteCached(vectors, deleted, cfg, nCells, key, delKey),
           unpersistPrior = false)

@@ -1,7 +1,7 @@
 package graft.hnsw
 
 import org.apache.spark.HashPartitioner
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.store.{EntryPoint, GraphSnapshot, InMemoryGraph, LayerCsr}
@@ -68,7 +68,8 @@ object HnswRoutedCodes {
     * the superseded image is ~the index's full footprint, reclaim it
     * before the caller's next job rather than racing the async
     * cleaner. */
-  private[graft] object CodeTier extends RoutedTier[CodeCellShard, RoutedCodeIndex] {
+  private[graft] object CodeTier
+      extends RoutedServing[CodeCellShard, RoutedCodeIndex, Long, Array[Long]] {
     def shards(i: RoutedCodeIndex): org.apache.spark.rdd.RDD[(Int, CodeCellShard)] = i.shards
     def tombstones(i: RoutedCodeIndex): Array[Long] = i.tombstones
     def overlays(i: RoutedCodeIndex): Seq[org.apache.spark.rdd.RDD[_]] = i.overlay
@@ -84,6 +85,11 @@ object HnswRoutedCodes {
     def memberCount(s: CodeCellShard): Int = s.codes.size
     def containsId(s: CodeCellShard, id: Long): Boolean = s.codes.contains(id)
     def idIterator(s: CodeCellShard): Iterator[Long] = s.codes.keysIterator
+    val queryCol = "qcode"
+    def queryEnc: Encoder[(Long, Long)] = pairEnc
+    def router(i: RoutedCodeIndex): Array[Long] = i.anchors
+    def probeCells(anchors: Array[Long], qc: Long, nProbe: Int): Iterator[Int] =
+      probeCellsCode(qc, anchors, nProbe)
     def survivorRebuild(i: RoutedCodeIndex): (Int, CodeCellShard, Array[Long]) => CodeCellShard = {
       val params = i.params
       val seed = i.seed
@@ -424,21 +430,11 @@ object HnswRoutedCodes {
     * representation: one member code per cell served back through the
     * full path at k = 1, paying the kernel JIT + plan warm-up that
     * [[warm]]'s block sweep leaves on the first real serve. */
-  def warmProbe(index: RoutedCodeIndex, ef: Int = 16): Long = {
-    val reps = index.shards.flatMap { case (cell, s) =>
-      // headOption stops at the first occupied slot — the probe-rep
-      // collection is O(nCells), not O(index)
-      s.codes.headOption.iterator.map { case (_, c) => (cell.toLong, c) }
-    }.collect()
-    if (reps.isEmpty) 0L
-    else {
-      val spark = SparkSession.active
-      import spark.implicits._
-      val qDf = reps.toSeq.toDF("qid", "qcode")
-      search(index, qDf, k = 1, nProbe = 1, ef0 = ef).count()
-      reps.length.toLong
-    }
-  }
+  def warmProbe(index: RoutedCodeIndex, ef: Int = 16): Long =
+    // headOption stops at the first occupied slot — the probe-rep
+    // collection is O(nCells), not O(index)
+    RoutedServe.warmProbe(CodeTier, index)(_.codes.headOption.iterator.map(_._2))(
+      search(index, _, k = 1, nProbe = 1, ef0 = ef))
 
   /** Drift recovery — [[HnswRouted.retrain]] on the code
     * representation: re-train the k-majority anchors on the index's
@@ -529,137 +525,36 @@ object HnswRoutedCodes {
 
   private val ModalityMinCellRows = 256L
   private val ModalitySampleMax = 1024
-  private val ModalityShareBp = 1500L
-  private val ModalitySepFactor = 3.0
-  private val ModalityKSplit = 8
-  private val ModalityIters = 8
 
-  /** Per-bit strict-majority code over `rows` restricted to indices
-    * where `in(i)` — the Hamming analog of the float tier's component
-    * mean (strict majority sets the bit; exact ties clear it — the
-    * [[trainAnchors]] update rule, any deterministic rule works). Zero
-    * participants yield 0L. */
-  private def majorityWhere(rows: Array[(Long, Long)],
-                            in: Int => Boolean): Long = {
+  /** Per-bit strict-majority code — the Hamming analog of the float
+    * tier's component mean (strict majority sets the bit; exact ties
+    * clear it — the [[trainAnchors]] update rule, any deterministic rule
+    * works). Zero codes yield 0L. */
+  private def majority(codes: Iterator[Long]): Long = {
     val ones = new Array[Int](64); var n = 0
-    var i = 0
-    while (i < rows.length) {
-      if (in(i)) {
-        val c = rows(i)._2
-        var b = 0
-        while (b < 64) { if (((c >>> b) & 1L) == 1L) ones(b) += 1; b += 1 }
-        n += 1
-      }
-      i += 1
+    codes.foreach { c =>
+      var b = 0
+      while (b < 64) { if (((c >>> b) & 1L) == 1L) ones(b) += 1; b += 1 }
+      n += 1
     }
-    if (n == 0) 0L
-    else {
-      var out = 0L; var b = 0
-      while (b < 64) { if (2 * ones(b) > n) out |= (1L << b); b += 1 }
-      out
-    }
+    var out = 0L; var b = 0
+    while (b < 64) { if (2 * ones(b) > n) out |= (1L << b); b += 1 }
+    out
   }
 
   /** Modal census of a cell's code sample — [[HnswRouted.modalCensus]]
-    * on Hamming space: deterministic k-majority (whole-sample majority
-    * + farthest-point seeds), components single-linkage-merged at
-    * [[ModalitySepFactor]] × the mass-weighted mean component radius
-    * (mean Hamming to the component's majority code — Hamming is
-    * already linear, no sqrt pass), strong-share test on the MERGED
-    * groups. Returns the strong groups as (group majority code, sample
-    * count), descending by count; 0-1 groups = unimodal. */
-  private[graft] def modalCensusCodes(codes: Array[Long]): Array[(Long, Int)] = {
-    if (codes.length < 32) return Array.empty
-    val rows = codes.map(c => (0L, c)) // (unused id, code) for majorityWhere
-    val n = codes.length
-    val k = math.max(2, math.min(ModalityKSplit, n / 4))
-    val cents = new Array[Long](k)
-    cents(0) = majorityWhere(rows, _ => true)
-    var j = 1
-    while (j < k) {
-      var best = 0L; var bestD = -1
-      var i = 0
-      while (i < n) {
-        var minD = Int.MaxValue; var c = 0
-        while (c < j) {
-          val d = hamming(codes(i), cents(c)); if (d < minD) minD = d; c += 1 }
-        if (minD > bestD) { bestD = minD; best = codes(i) }
-        i += 1
-      }
-      cents(j) = best; j += 1
+    * on Hamming space ([[HnswRouted.modalCensusOf]]): deterministic
+    * k-majority (whole-sample majority + farthest-point seeds), Hamming
+    * radii (already linear, no sqrt pass), and each merged group's code
+    * the majority over the sample rows its components hold. Returns the
+    * strong groups as (group majority code, sample count), descending by
+    * count; 0-1 groups = unimodal. */
+  private[graft] def modalCensusCodes(codes: Array[Long]): Array[(Long, Int)] =
+    HnswRouted.modalCensusOf(codes, (a: Long, b: Long) => hamming(a, b).toDouble,
+      identity, majority) { (comps, _, _, assign) =>
+      val in = comps.toSet
+      majority(codes.indices.iterator.filter(x => in(assign(x))).map(codes(_)))
     }
-    @inline def nearest(code: Long): Int = {
-      var bi = 0; var bd = Int.MaxValue; var c = 0
-      while (c < k) {
-        val d = hamming(code, cents(c)); if (d < bd) { bd = d; bi = c }; c += 1 }
-      bi
-    }
-    var it = 0
-    while (it < ModalityIters) {
-      val assign = new Array[Int](n)
-      var i = 0
-      while (i < n) { assign(i) = nearest(codes(i)); i += 1 }
-      var c = 0
-      while (c < k) {
-        val cc = c
-        var any = false
-        i = 0
-        while (i < n && !any) { if (assign(i) == cc) any = true; i += 1 }
-        if (any) cents(c) = majorityWhere(rows, idx => assign(idx) == cc)
-        c += 1 // an empty component keeps its code
-      }
-      it += 1
-    }
-    val assign = new Array[Int](n)
-    val ns = new Array[Int](k); val sumD = new Array[Double](k)
-    var i = 0
-    while (i < n) {
-      val c = nearest(codes(i)); assign(i) = c
-      ns(c) += 1; sumD(c) += hamming(codes(i), cents(c))
-      i += 1
-    }
-    val parts = (0 until k).filter(c => ns(c) >= 8).toArray
-    if (parts.length == 0) return Array.empty
-    // ROBUST mean radius (round-16 fix, measured at the 1e6 rung): a
-    // Lloyd component that STRADDLES two modes (unlucky farthest-point
-    // seeding) reads radius ~ the inter-mode distance/2; mass-weighted
-    // into the mean it inflates the linkage threshold past the
-    // inter-mode distance itself, the modes merge into one group, and
-    // the cell silently reads unimodal — exactly one of 16 planted
-    // bimodal cells escaped the guard this way. Straddlers are rare
-    // among k=8 components, so the MEDIAN radius resists them: exclude
-    // components beyond 2x the median from the threshold computation
-    // (they still participate in the linkage itself — their own group
-    // assignment is decided by their center like everyone else's).
-    // Tiny outlier fragments must still not DRAG the mean down, so the
-    // kept components combine mass-weighted (the original rationale).
-    val radii = parts.map(c => sumD(c) / ns(c))
-    val medianRad = radii.sorted.apply(radii.length / 2)
-    val kept = parts.indices.filter(i =>
-      medianRad == 0.0 || radii(i) <= 2.0 * medianRad)
-    val meanRad = kept.map(i => ns(parts(i)) * radii(i)).sum /
-      math.max(1L, kept.map(i => ns(parts(i)).toLong).sum)
-    val parent = Array.tabulate(parts.length)(identity)
-    def find(x: Int): Int =
-      if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
-    if (meanRad > 0.0)
-      for (a <- parts.indices; b <- (a + 1) until parts.length) {
-        val d = hamming(cents(parts(a)), cents(parts(b))).toDouble
-        if (d < ModalitySepFactor * meanRad) {
-          val (x, y) = (find(a), find(b)); if (x != y) parent(x) = y
-        }
-      }
-    val minShare = math.max(8L, n * ModalityShareBp / 10000L)
-    parts.indices.groupBy(find).values.toArray
-      .map { idxs =>
-        val members = idxs.map(parts(_)).toSet
-        val total = idxs.map(x => ns(parts(x))).sum
-        val code = majorityWhere(rows, x => members.contains(assign(x)))
-        (code, total)
-      }
-      .filter(_._2 >= minShare)
-      .sortBy(-_._2)
-  }
 
   /** Merged-cell audit — [[HnswRouted.mergedCellAudit]] on the code
     * representation, for the regime the per-cell density census cannot
@@ -668,9 +563,10 @@ object HnswRoutedCodes {
     * while queries arriving on the dead side have ~zero eligible among
     * their nearest — predicated serving there pays the exact scan
     * every probe. One narrow pass, no shuffle: cells whose dead
-    * fraction is bimodal-eligible run a deterministic k-majority split
-    * whose first two seeds are the dead-member and live-member
-    * majority codes (hypothesis-shaped init; k > 2 catches cells that
+    * fraction is bimodal-eligible run the shared separability kernel
+    * ([[MergedCellAudit.audit]]) in Hamming space — a deterministic
+    * k-majority split whose first two seeds are the dead-member and
+    * live-member majority codes (hypothesis-shaped init; k > 2 catches cells that
     * merged SEVERAL modes), then a full-member purity census per
     * component — flagged `merged` when ≥80%-pure-dead components hold
     * ≥80% of the dead mass beside a clearly-live component. Schema and
@@ -679,109 +575,13 @@ object HnswRoutedCodes {
   def mergedCellAudit(index: RoutedCodeIndex, minCellRows: Int = 1024,
                       minDeadBp: Int = 1000, maxDeadBp: Int = 9000,
                       sampleMax: Int = 4096, iters: Int = 8,
-                      kSplit: Int = 8): DataFrame = {
-    val spark = SparkSession.active
-    import spark.implicits._
-    val tombB = index.shards.sparkContext.broadcast(index.tombstones)
-    val rows = index.shards.flatMap { case (cell, s) =>
-      val dead = tombB.value
-      val cellN = s.codes.size
-      if (dead.length == 0 || cellN < minCellRows) Iterator.empty
-      else {
-        @inline def isDead(id: Long): Boolean =
-          java.util.Arrays.binarySearch(dead, id) >= 0
-        var nDead = 0
-        s.codes.foreach { (id, _) => if (isDead(id)) nDead += 1 }
-        val deadBp = nDead * 10000L / cellN
-        if (deadBp < minDeadBp || deadBp > maxDeadBp) Iterator.empty
-        else {
-          // deterministic sample, decimated by ID HASH (never by
-          // position — see the float audit's aliasing note); falls
-          // back to the full cell if the sample misses a class
-          val all = s.codes.toSeq.toArray.sortBy(_._1)
-          val keep = math.min(1.0, sampleMax.toDouble / all.length)
-          val hashed = all.filter { case (id, _) =>
-            HnswSearcher.uniformFromHash(id, 0x9E3779B9L) < keep }
-          val sample =
-            if (hashed.length >= 32 && hashed.exists(r => isDead(r._1)) &&
-                hashed.exists(r => !isDead(r._1))) hashed
-            else all
-          val sn = sample.length
-          val k = math.max(2, math.min(kSplit, sn / 4))
-          val cents = new Array[Long](k)
-          cents(0) = majorityWhere(sample, i => isDead(sample(i)._1))
-          cents(1) = majorityWhere(sample, i => !isDead(sample(i)._1))
-          // farthest-point seeds (deterministic): extra components
-          // catch structure the two hypothesis seeds cannot hold when
-          // >2 modes share the cell (the float audit's k>2 rationale)
-          var j = 2
-          while (j < k) {
-            var best = 0L; var bestD = -1
-            var i = 0
-            while (i < sn) {
-              var minD = Int.MaxValue; var c = 0
-              while (c < j) {
-                val d = hamming(sample(i)._2, cents(c))
-                if (d < minD) minD = d
-                c += 1
-              }
-              if (minD > bestD) { bestD = minD; best = sample(i)._2 }
-              i += 1
-            }
-            cents(j) = best; j += 1
-          }
-          @inline def nearest(code: Long): Int = {
-            var bi = 0; var bd = Int.MaxValue; var c = 0
-            while (c < k) {
-              val d = hamming(code, cents(c))
-              if (d < bd) { bd = d; bi = c }
-              c += 1
-            }
-            bi
-          }
-          var it = 0
-          while (it < iters) {
-            val assign = new Array[Int](sn)
-            var i = 0
-            while (i < sn) { assign(i) = nearest(sample(i)._2); i += 1 }
-            var c = 0
-            while (c < k) {
-              val cc = c
-              var any = false
-              i = 0
-              while (i < sn && !any) { if (assign(i) == cc) any = true; i += 1 }
-              if (any) cents(c) = majorityWhere(sample, x => assign(x) == cc)
-              c += 1 // an empty component keeps its code
-            }
-            it += 1
-          }
-          // census EVERY member (not just the sample) per component
-          val compN = new Array[Long](k); val compDead = new Array[Long](k)
-          s.codes.foreach { (id, code) =>
-            val c = nearest(code)
-            compN(c) += 1; if (isDead(id)) compDead(c) += 1
-          }
-          var hiBp = 0L; var loBp = 10000L; var pureDeadMass = 0L
-          var c = 0
-          while (c < k) {
-            if (compN(c) > 0) {
-              val bp = compDead(c) * 10000L / compN(c)
-              if (bp > hiBp) hiBp = bp
-              if (bp < loBp) loBp = bp
-              if (bp >= 8000L) pureDeadMass += compDead(c)
-            }
-            c += 1
-          }
-          val massHiBp = if (nDead == 0) 0L else pureDeadMass * 10000L / nDead
-          val merged = hiBp >= 8000L && loBp <= 2000L && massHiBp >= 8000L
-          Iterator.single((cell, cellN.toLong, nDead.toLong, deadBp,
-            hiBp, loBp, massHiBp, merged))
-        }
-      }
-    }.collect()
-    rows.toSeq.toDF("cell", "n", "n_dead", "dead_bp",
-      "hi_dead_bp", "lo_dead_bp", "dead_mass_hi_bp", "merged")
-  }
+                      kSplit: Int = 8): DataFrame =
+    RoutedLifecycle.mergedCellAudit(CodeTier)(index, minCellRows, minDeadBp,
+        maxDeadBp) { (s, isDead, nDead) =>
+      MergedCellAudit.audit(s.codes.toSeq.toArray.sortBy(_._1),
+        (a: Long, b: Long) => hamming(a, b).toDouble, majority, isDead, nDead,
+        sampleMax, iters, kSplit)
+    }
 
   /** Targeted compaction — [[HnswRouted.compactCells]] on the code
     * representation: fold the deletion set out of ONLY the listed
@@ -813,9 +613,7 @@ object HnswRoutedCodes {
                            persist: Boolean = true,
                            unpersistPrior: Boolean = true,
                            patched: Boolean = true): (RoutedCodeIndex, Array[Int]) = {
-    val flagged = mergedCellAudit(index, minCellRows)
-      .filter(col("merged")).select(col("cell"))
-      .collect().map(_.getInt(0))
+    val flagged = RoutedLifecycle.flaggedCells(mergedCellAudit(index, minCellRows))
     if (flagged.isEmpty) (index, flagged)
     else if (patched) (compactCellsPatched(index, flagged, persist), flagged)
     else (compactCells(index, flagged, persist, unpersistPrior), flagged)
@@ -908,7 +706,7 @@ object HnswRoutedCodes {
     * ([[HnswRouted.autoEf]]); explicit ef0 pins the in-cell beam. */
   def search(index: RoutedCodeIndex, queries: DataFrame, k: Int,
              nProbe: Int, ef0: Int = 0): DataFrame =
-    searchImpl(index, queries, k, nProbe, ef0, allowed = None)
+    ranked(request(index, k, nProbe, ef0).routed(queries, None), k)
 
   /** Attribute-filtered routed Hamming k-NN — the float tier's
     * [[HnswRouted.searchFiltered]] contract on the code
@@ -920,12 +718,7 @@ object HnswRoutedCodes {
   def searchFiltered(index: RoutedCodeIndex, queries: DataFrame,
                      allowed: DataFrame, k: Int, nProbe: Int,
                      ef0: Int = 0): DataFrame =
-    RoutedLifecycle.allowProbe(allowed, HnswRouted.AllowCollectMax) match {
-      case None =>
-        searchFilteredDistributed(index, queries, allowed, k, nProbe, ef0)
-      case some =>
-        searchImpl(index, queries, k, nProbe, ef0, allowed = some)
-    }
+    ranked(request(index, k, nProbe, ef0).filtered(queries, allowed), k)
 
   /** Fully distributed filtered serving — the float tier's
     * [[HnswRouted.searchFilteredDistributed]] on the code
@@ -935,40 +728,17 @@ object HnswRoutedCodes {
     * arrays built executor-side. */
   def searchFilteredDistributed(index: RoutedCodeIndex, queries: DataFrame,
                                 allowed: DataFrame, k: Int, nProbe: Int,
-                                ef0: Int = 0): DataFrame = {
-    val spark = queries.sparkSession
-    val sc = spark.sparkContext
-    val params = index.params
-    val p = math.min(nProbe, index.anchors.length)
-    val exhaustive = p >= index.anchors.length
-    val anchorsB = sc.broadcast(index.anchors)
-    val tombB = sc.broadcast(index.tombstones)
-    val part = index.shards.partitioner.getOrElse(throw new IllegalStateException(
-      "distributed routing needs the index's pinned CellPartitioner"))
-    val routed = queries.select(col("qid"), col("qcode")).as(pairEnc).rdd
-      .flatMap { case (qid, qc) =>
-        probeCellsCode(qc, anchorsB.value, p).map(c => (c, (qid, qc)))
-      }.partitionBy(part)
-    val allowByCell = RoutedLifecycle.allowByCell(CodeTier)(index, allowed, part)
-    import spark.implicits._
-    val perShard = RoutedLifecycle.zipServeFiltered(
-        index.shards, routed, allowByCell) {
-      (m: CodeCellShard, probes: Iterator[(Long, Long)], allow: Array[Long]) =>
-        serveCodeShard(params, m, probes, k, ef0, exhaustive,
-          hasAllow = true, allow, tombB.value)
-    }.toDF("qid", "id", "hamming")
-    rankMerge(perShard, k)
-  }
+                                ef0: Int = 0): DataFrame =
+    ranked(request(index, k, nProbe, ef0).filteredDistributed(queries, allowed), k)
 
   /** Probe set for one query code: the nProbe nearest anchors by
-    * Hamming distance, ties by anchor index — shared by both routing
-    * paths so routing is path-independent. */
-  @inline private def probeCellsCode(qc: Long, anchors: Array[Long],
-                                     p: Int): Iterator[Int] = {
+    * Hamming distance, ties by anchor index. */
+  private def probeCellsCode(qc: Long, anchors: Array[Long],
+                             nProbe: Int): Iterator[Int] = {
     val byDist = Array.tabulate(anchors.length)(a => (a, hamming(qc, anchors(a))))
     java.util.Arrays.sort(byDist,
       Ordering.by[(Int, Int), (Int, Int)](x => (x._2, x._1)))
-    byDist.iterator.take(p).map(_._1)
+    byDist.iterator.take(nProbe).map(_._1)
   }
 
   /** Distributed query routing on the codes tier — the float tier's
@@ -979,179 +749,36 @@ object HnswRoutedCodes {
     * [[HnswRouted.DriverRouteMax]] queries. */
   def searchDistributed(index: RoutedCodeIndex, queries: DataFrame, k: Int,
                         nProbe: Int, ef0: Int = 0): DataFrame =
-    searchImplDistributed(index, queries, k, nProbe, ef0, allowed = None)
+    ranked(request(index, k, nProbe, ef0).distributed(queries, None), k)
 
-  /** Per-shard serving kernel shared by both routing paths (see
-    * [[HnswRouted.serveShard]] — this is its Hamming twin). */
-  private def serveCodeShard(
-      params: HnswParams, m: CodeCellShard,
-      probes: Iterator[(Long, Long)],
-      k: Int, ef0: Int, exhaustive: Boolean,
-      hasAllow: Boolean, allow: Array[Long],
-      dead: Array[Long]): Iterator[(Long, Long, Int)] = {
+  private def ranked(perShard: DataFrame, k: Int): DataFrame =
+    RoutedServe.top(perShard, "hamming", k)
+
+  /** One serve over the shared transport ([[RoutedServe]]) with the
+    * shared predicated kernel ([[PredicatedCensus.serve]]) on the code
+    * representation: the cell's code map, a plain beam over the staged
+    * query code, and Hamming as the exact distance (INTEGER distances —
+    * ties are the common case, and the kernel's total (dist, id) queue
+    * order carries the oracle's tie-breaking). The probe set covering
+    * every cell is the exhaustive regime (forced exact scan). */
+  private def request(index: RoutedCodeIndex, k: Int, nProbe: Int, ef0: Int) = {
+    val params = index.params
+    val exhaustive = nProbe >= index.anchors.length
+    new RoutedServe.Request(CodeTier, index, nProbe, "hamming",
+      (m: CodeCellShard, probes: Iterator[(Long, Long)], hasAllow: Boolean,
+       allow: Array[Long], dead: Array[Long]) => {
         val searcher = new HnswSearcher(params)
         val store = new CellCodeStore(m.codes)
-        val base = params.getEfSearch(0)
-        val ef = if (ef0 > 0) math.max(ef0, base)
-                 else HnswRouted.autoEf(base, m.codes.size)
-        val predicated = hasAllow || dead.nonEmpty
-        if (!predicated)
-          probes.flatMap { case (qid, qc) =>
+        PredicatedCensus.serve(PredicatedCensus.Members.ofLongLongMap(m.codes),
+          probes, k, HnswRouted.cellEf(params, ef0, m.codes.size), exhaustive,
+          hasAllow, allow, dead)(
+          (qc, kk, ef) => {
             store.stage(-1L, qc)
-            searcher.searchWithEf(store, m.snapshot, -1L, k, ef)
-              .iterator.map(nb => (qid, nb.dst, nb.dist.toInt))
-          }
-        else {
-          // per-cell overfetch-with-escalation + exact in-cell fallback
-          // (HnswRouted.searchImpl's predicated discipline; queue order
-          // is total on (dist, id), so the filtered prefix carries the
-          // oracle's tie-breaking — load-bearing under INTEGER Hamming
-          // distances where ties are the common case). Census machinery
-          // is the shared [[PredicatedCensus]] kernel.
-          val cen = new PredicatedCensus.Census(
-            PredicatedCensus.Members.ofLongLongMap(m.codes),
-            hasAllow, allow, dead)
-          @inline def eligible(id: Long): Boolean = cen.eligible(id)
-          val cellN = cen.cellN
-          def exactScan(qid: Long, qc: Long): List[(Long, Long, Int)] =
-            PredicatedCensus.exactScanTopK(cen.eligibleIds, k,
-                id => hamming(qc, m.codes(id)).toDouble)
-              .iterator.map(nb => (qid, nb.dst, nb.dist.toInt)).toList
-          val kp0 = math.max(4 * k, ef)
-          if (cen.eligibleCount == 0) Iterator.empty
-          else if (exhaustive)
-            // exhaustive regime: force the exact path so predicated
-            // exactness is structural, not small-cell luck (see
-            // HnswRouted.searchImpl — the hash-oracle configuration)
-            probes.flatMap { case (qid, qc) => exactScan(qid, qc) }
-          else if (cen.eligibleCount == cellN)
-            // every member of this cell is eligible (no dead id lives
-            // here; any allow-set covers it), so the predicated filter
-            // is the identity — serve on the UNMODIFIED plain kernel.
-            // This makes cell-local deletions cost ~nothing on the
-            // untouched cells, which is almost all of them (measured:
-            // the predicated wrapper around the same beam ran ~40%
-            // slower at 47k tombstones even though the beam parameters
-            // are identical — profile/cache effects in the wrapper; the
-            // plain path sidesteps the question entirely)
-            probes.flatMap { case (qid, qc) =>
-              store.stage(-1L, qc)
-              searcher.searchWithEf(store, m.snapshot, -1L, k, ef)
-                .iterator.map(nb => (qid, nb.dst, nb.dist.toInt))
-            }
-          else probes.flatMap { case (qid, qc) =>
-            store.stage(-1L, qc)
-            // density-aware cutover, not just absolute count: a cell
-            // whose eligible FRACTION is low defeats the beam — the
-            // top-kp0 of a 98%-dead cell holds ~no eligible ids, so
-            // nearly every query escalated to the full cell width
-            // (measured: a wiped cell with 274 of 15900 eligible
-            // stragglers ran 455 escalations for 320 queries — a 1.4 s
-            // straggler task that serialized the whole serve). The
-            // exact scan is O(eligible) per query and wins decisively
-            // below ~25% density.
-            if (cen.cutoverToExact(kp0)) exactScan(qid, qc)
-            else {
-              // ONE overfetched beam, then exact — never escalate
-              // in-cell (see HnswRouted.searchImpl: geometric
-              // eligibility clustering defeats any cell-wide density
-              // census, and the per-cell exact scan costs less than
-              // one 4x re-beam)
-              val w = searcher.searchWithEf(store, m.snapshot, -1L, kp0, kp0)
-              val hits = w.iterator.filter(nb => eligible(nb.dst)).take(k).toList
-              if (hits.length >= k) hits.map(nb => (qid, nb.dst, nb.dist.toInt))
-              else exactScan(qid, qc)
-            }
-          }
-        }
-  }
-
-  /** Global top-k merge (see [[HnswRouted.rankMerge]] — Hamming twin). */
-  private def rankMerge(perShard: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    perShard
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("hamming"), col("id"))))
-      .filter(col("rank") <= k)
-  }
-
-  private def searchImpl(index: RoutedCodeIndex, queries: DataFrame,
-                         k: Int, nProbe: Int, ef0: Int,
-                         allowed: Option[Array[Long]]): DataFrame = {
-    val spark = queries.sparkSession
-    val params = index.params
-    val anchors = index.anchors
-    val p = math.min(nProbe, anchors.length)
-    // probe set covers every cell -> predicated serving may guarantee
-    // exactness via the per-cell exact scan (HnswRouted.searchImpl)
-    val exhaustive = p >= anchors.length
-    // driver-side routing with the batch-side cutover (see
-    // HnswRouted.searchImpl: the limit guards the collect; a query side
-    // beyond DriverRouteMax reroutes through the distributed path)
-    val qArr = queries.select(col("qid"), col("qcode"))
-      .limit(HnswRouted.DriverRouteMax + 1).as(pairEnc).collect()
-    if (qArr.length > HnswRouted.DriverRouteMax)
-      return searchImplDistributed(index, queries, k, nProbe, ef0, allowed)
-    val byCell = qArr.iterator.flatMap { case (qid, qc) =>
-      probeCellsCode(qc, anchors, p).map(c => (c, (qid, qc)))
-    }.toArray.groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2) }
-    val qB = spark.sparkContext.broadcast(byCell)
-    val hasAllow = allowed.nonEmpty
-    val allowB = spark.sparkContext.broadcast(allowed.getOrElse(Array.empty[Long]))
-    val tombB = spark.sparkContext.broadcast(index.tombstones)
-    import spark.implicits._
-    // schedule ONLY the probed cells' partitions (the 1e8 finding: at
-    // 1024 cells the full pass costs 1024 task launches for 8 working
-    // cells — see HnswRouted.prunedShards)
-    val perShard = HnswRouted.prunedShards(index.shards, byCell.keys)
-      .flatMap { case (_, m) =>
-        val probes = qB.value.getOrElse(m.cell, Array.empty[(Long, Long)])
-        if (probes.isEmpty) Iterator.empty
-        else serveCodeShard(params, m, probes.iterator, k, ef0, exhaustive,
-          hasAllow, allowB.value, tombB.value)
-      }.toDF("qid", "id", "hamming")
-    rankMerge(perShard, k)
-  }
-
-  private[hnsw] def searchImplDistributed(
-      index: RoutedCodeIndex, queries: DataFrame, k: Int,
-      nProbe: Int, ef0: Int, allowed: Option[Array[Long]]): DataFrame = {
-    val spark = queries.sparkSession
-    val sc = spark.sparkContext
-    val params = index.params
-    val p = math.min(nProbe, index.anchors.length)
-    val exhaustive = p >= index.anchors.length
-    val anchorsB = sc.broadcast(index.anchors)
-    val hasAllow = allowed.nonEmpty
-    val allowB = sc.broadcast(allowed.getOrElse(Array.empty[Long]))
-    val tombB = sc.broadcast(index.tombstones)
-    val part = index.shards.partitioner.getOrElse(throw new IllegalStateException(
-      "distributed routing needs the index's pinned CellPartitioner"))
-    // only the query side shuffles (8 B code + 8 B qid per probe row);
-    // the shard side rides a narrow zipPartitions
-    val routed = queries.select(col("qid"), col("qcode")).as(pairEnc).rdd
-      .flatMap { case (qid, qc) =>
-        probeCellsCode(qc, anchorsB.value, p).map(c => (c, (qid, qc)))
-      }.partitionBy(part)
-    import spark.implicits._
-    val perShard = index.shards.zipPartitions(routed) { (shardIt, qIt) =>
-      val shards = shardIt.toArray
-      if (shards.length == 0) Iterator.empty
-      else if (shards.length == 1) {
-        val (cell, m) = shards(0)
-        val probes = qIt.collect { case (c, q) if c == cell => q }
-        serveCodeShard(params, m, probes, k, ef0, exhaustive,
-          hasAllow, allowB.value, tombB.value)
-      } else {
-        val byCell = qIt.toArray.groupBy(_._1)
-        shards.iterator.flatMap { case (cell, m) =>
-          serveCodeShard(params, m,
-            byCell.getOrElse(cell, Array.empty).iterator.map(_._2),
-            k, ef0, exhaustive, hasAllow, allowB.value, tombB.value)
-        }
-      }
-    }.toDF("qid", "id", "hamming")
-    rankMerge(perShard, k)
+            searcher.searchWithEf(store, m.snapshot, -1L, kk, ef)
+          },
+          qc => id => hamming(qc, m.codes(id)).toDouble)
+          .map { case (qid, id, d) => (qid, id, d.toInt) }
+      })
   }
 
   /** Read-through code store with one stageable query slot (the
@@ -1171,37 +798,20 @@ object HnswRoutedCodes {
     override def isMatch(d: Double): Boolean = d <= 0.0
   }
 
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, RoutedCodeIndex]()
+  /** Nest-safe process-wide memo of the catalog's lifecycle handles. */
+  private val memo = new HandleMemo[RoutedCodeIndex](_.unpersist())
 
-  /** Release every memoized handle (see [[IndexCaches]]); shared shard
-    * RDDs may unpersist twice — idempotent. */
-  private[hnsw] def releaseCaches(): Unit = {
-    cache.values.forEach(_.shards.unpersist())
-    cache.clear()
-  }
+  private[hnsw] def releaseCaches(): Unit = memo.releaseAll()
 
-  /** Nest-safe memo (see [[HnswRouted.memo]]: the lifecycle handles
-    * nest, and nested computeIfAbsent throws "Recursive update"). */
-  private def memo(key: String)(mk: => RoutedCodeIndex): RoutedCodeIndex = {
-    val hit = cache.get(key)
-    if (hit != null) hit
-    else {
-      val v = mk
-      val prev = cache.putIfAbsent(key, v)
-      // the losing build's shards are persisted and unreachable —
-      // release them rather than leak executor storage
-      if (prev != null) { v.shards.unpersist(); prev } else v
-    }
-  }
+  /** Memo key tail shared by every codes-tier handle. */
+  private def paramKey(nCells: Int, seed: Long, params: HnswParams): Seq[Any] =
+    Seq(nCells, seed, params.m.toList, params.mMax.toList,
+      params.efConstrSearch.toList, params.efConstrInsert.toList,
+      params.efSearch.toList, params.layerProbability)
 
   def buildCached(codes: DataFrame, params: HnswParams, nCells: Int,
                   seed: Long, key: String): RoutedCodeIndex =
-    memo(
-      Seq(codes.sparkSession.sparkContext.applicationId, key, nCells, seed,
-        params.m.toList, params.mMax.toList, params.efConstrSearch.toList,
-        params.efConstrInsert.toList, params.efSearch.toList,
-        params.layerProbability).mkString("|"))(
+    memo(HandleMemo.appId(codes), key +: paramKey(nCells, seed, params): _*)(
       graft.BuildLedger.timed("hnsw_routed_codes_build")(
         build(codes, params, nCells, seed)))
 
@@ -1211,11 +821,8 @@ object HnswRoutedCodes {
     * restore path). */
   def attachCached(codes: DataFrame, params: HnswParams, nCells: Int,
                    seed: Long, key: String): RoutedCodeIndex =
-    memo(
-      Seq(codes.sparkSession.sparkContext.applicationId, "attach", key,
-        nCells, seed, params.m.toList, params.mMax.toList,
-        params.efConstrSearch.toList, params.efConstrInsert.toList,
-        params.efSearch.toList, params.layerProbability).mkString("|"))(
+    memo(HandleMemo.appId(codes),
+      Seq("attach", key) ++ paramKey(nCells, seed, params): _*)(
       graft.BuildLedger.timed("hnsw_routed_codes_save_attach") {
         val built = buildCached(codes, params, nCells, seed, key)
         val dir = graft.TempDirs.create("graft_routed_codes_")
@@ -1230,11 +837,8 @@ object HnswRoutedCodes {
   def growCached(baseCodes: DataFrame, newRows: DataFrame,
                  params: HnswParams, nCells: Int, seed: Long,
                  key: String): RoutedCodeIndex =
-    memo(
-      Seq(baseCodes.sparkSession.sparkContext.applicationId, "grow", key,
-        nCells, seed, params.m.toList, params.mMax.toList,
-        params.efConstrSearch.toList, params.efConstrInsert.toList,
-        params.efSearch.toList, params.layerProbability).mkString("|"))(
+    memo(HandleMemo.appId(baseCodes),
+      Seq("grow", key) ++ paramKey(nCells, seed, params): _*)(
       graft.BuildLedger.timed("hnsw_routed_codes_grow") {
         ingest(build(baseCodes, params, nCells, seed), newRows)
       })
@@ -1245,11 +849,8 @@ object HnswRoutedCodes {
   def deleteCached(codes: DataFrame, deleted: DataFrame,
                    params: HnswParams, nCells: Int, seed: Long,
                    key: String, delKey: String): RoutedCodeIndex =
-    memo(
-      Seq(codes.sparkSession.sparkContext.applicationId, "tomb", key,
-        delKey, nCells, seed, params.m.toList, params.mMax.toList,
-        params.efConstrSearch.toList, params.efConstrInsert.toList,
-        params.efSearch.toList, params.layerProbability).mkString("|"))(
+    memo(HandleMemo.appId(codes),
+      Seq("tomb", key, delKey) ++ paramKey(nCells, seed, params): _*)(
       delete(buildCached(codes, params, nCells, seed, key), deleted))
 
   /** Memoized compaction of the cached tombstoned index
@@ -1259,11 +860,8 @@ object HnswRoutedCodes {
   def compactCached(codes: DataFrame, deleted: DataFrame,
                     params: HnswParams, nCells: Int, seed: Long,
                     key: String, delKey: String): RoutedCodeIndex =
-    memo(
-      Seq(codes.sparkSession.sparkContext.applicationId, "compact", key,
-        delKey, nCells, seed, params.m.toList, params.mMax.toList,
-        params.efConstrSearch.toList, params.efConstrInsert.toList,
-        params.efSearch.toList, params.layerProbability).mkString("|"))(
+    memo(HandleMemo.appId(codes),
+      Seq("compact", key, delKey) ++ paramKey(nCells, seed, params): _*)(
       graft.BuildLedger.timed("hnsw_routed_codes_compact") {
         compact(deleteCached(codes, deleted, params, nCells, seed, key, delKey),
           unpersistPrior = false)

@@ -1,6 +1,6 @@
 package graft.hnsw
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.PqKernels
@@ -138,7 +138,8 @@ object HnswRoutedPq {
     * LOCAL survivor rebuild is deliberately unbound (a solo cell
     * rebuild fetches survivor floats from the raw-vector table — the
     * [[compactSolo]] family is the tier-specific path). */
-  private[graft] object PqTier extends RoutedTier[PqCellShard, RoutedPqIndex] {
+  private[graft] object PqTier extends RoutedServing[PqCellShard,
+      RoutedPqIndex, Array[Float], HnswRouted.Router] {
     def shards(i: RoutedPqIndex): org.apache.spark.rdd.RDD[(Int, PqCellShard)] = i.shards
     def tombstones(i: RoutedPqIndex): Array[Long] = i.tombstones
     def overlays(i: RoutedPqIndex): Seq[org.apache.spark.rdd.RDD[_]] = i.overlay
@@ -155,6 +156,11 @@ object HnswRoutedPq {
     def memberCount(s: PqCellShard): Int = s.codes.size
     def containsId(s: PqCellShard, id: Long): Boolean = s.codes.contains(id)
     def idIterator(s: PqCellShard): Iterator[Long] = s.codes.keysIterator
+    val queryCol = "qvec"
+    def queryEnc: Encoder[(Long, Array[Float])] = pairEnc
+    def router(i: RoutedPqIndex): HnswRouted.Router = i.router
+    def probeCells(r: HnswRouted.Router, q: Array[Float], nProbe: Int): Iterator[Int] =
+      r.probeCells(q, nProbe)
     def survivorRebuild(i: RoutedPqIndex): (Int, PqCellShard, Array[Long]) => PqCellShard =
       throw new UnsupportedOperationException(
         "routed-pq: local survivor rebuild needs the raw-vector table — " +
@@ -173,10 +179,7 @@ object HnswRoutedPq {
   def fromRouted(index: HnswRouted.RoutedIndex, seed: Long = 13L,
                  persist: Boolean = true,
                  sampleMax: Int = 100000): RoutedPqIndex = {
-    require(index.cfg.metric == "l2",
-      s"HnswRoutedPq serves squared-L2 (ADC); routed graphs were built " +
-        s"with ${index.cfg.metric} — traversal order would disagree " +
-        "with candidate order")
+    requireL2(index)
     val nCells = math.max(1, index.router.allCells.size)
     val perCell = math.max(1, sampleMax / nCells)
     // per-cell-capped sample: every cell contributes, so the codebook
@@ -198,10 +201,7 @@ object HnswRoutedPq {
   def fromRoutedWith(index: HnswRouted.RoutedIndex,
                      codebook: Array[Array[Array[Float]]],
                      persist: Boolean = true): RoutedPqIndex = {
-    require(index.cfg.metric == "l2",
-      s"HnswRoutedPq serves squared-L2 (ADC); routed graphs were built " +
-        s"with ${index.cfg.metric} — traversal order would disagree " +
-        "with candidate order")
+    requireL2(index)
     val sc = index.shards.sparkContext
     val cbB = sc.broadcast(codebook)
     val shards = index.shards.mapPartitions({ it =>
@@ -342,6 +342,12 @@ object HnswRoutedPq {
     } finally if (pinInput) { deduped.unpersist(blocking = false); () }
   }
 
+  private def requireL2(source: HnswRouted.RoutedIndex): Unit =
+    require(source.cfg.metric == "l2",
+      s"HnswRoutedPq serves squared-L2 (ADC); routed graphs were built " +
+        s"with ${source.cfg.metric} — traversal order would disagree " +
+        "with candidate order")
+
   /** Encode one float cell shard: codes + content fingerprint. */
   private def encodeShard(s: HnswRouted.CellShard,
                           cb: Array[Array[Array[Float]]]): PqCellShard = {
@@ -360,89 +366,21 @@ object HnswRoutedPq {
     * exhaustive regime / small / mostly-dead cells take the exact ADC
     * scan (O(eligible) LUT lookups per query — 16 adds per row), the
     * nProbe regime takes one graph beam and falls back to the scan if
-    * the eligible prefix comes up short. Routing follows the routed
-    * tier's two-path discipline: driver collect below
+    * the eligible prefix comes up short. Routing is the shared
+    * transport ([[RoutedServe]]): driver collect below
     * [[HnswRouted.DriverRouteMax]], distributed (query-side-only
     * shuffle keyed by the pinned partitioner, narrow zipPartitions on
     * the shard side) above it — same kernel, spec-pinned identical. */
   def searchCoarse(index: RoutedPqIndex, queries: DataFrame,
                    candidates: Int, nProbe: Int, ef0: Int = 0): DataFrame =
-    searchCoarseImpl(index, queries, candidates, nProbe, ef0, allowed = None)
-
-  private def searchCoarseImpl(index: RoutedPqIndex, queries: DataFrame,
-                               candidates: Int, nProbe: Int, ef0: Int,
-                               allowed: Option[Array[Long]]): DataFrame = {
-    val spark = queries.sparkSession
-    val router = index.router
-    val exhaustive = nProbe >= router.nPrimary
-    val qArr = queries.select(col("qid"), col("qvec"))
-      .limit(HnswRouted.DriverRouteMax + 1).as(pairEnc).collect()
-    if (qArr.length > HnswRouted.DriverRouteMax)
-      return searchCoarseDistributedImpl(index, queries, candidates, nProbe,
-        ef0, allowed)
-    val byCell = qArr.iterator.flatMap { case (qid, qv) =>
-      router.probeCells(qv, nProbe).map(c => (c, (qid, qv)))
-    }.toArray.groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2) }
-    val qB = spark.sparkContext.broadcast(byCell)
-    val cbB = spark.sparkContext.broadcast(index.codebook)
-    val tombB = spark.sparkContext.broadcast(index.tombstones)
-    val hasAllow = allowed.isDefined
-    val allowB = spark.sparkContext.broadcast(
-      allowed.getOrElse(Array.empty[Long]))
-    import spark.implicits._
-    HnswRouted.prunedShards(index.shards, byCell.keys).flatMap { case (_, m) =>
-      val probes = qB.value.getOrElse(m.cell, Array.empty[(Long, Array[Float])])
-      if (probes.isEmpty) Iterator.empty
-      else serveAdcShard(index.params, m, cbB.value, tombB.value,
-        probes.iterator, candidates, exhaustive, ef0, hasAllow, allowB.value)
-    }.toDF("qid", "id", "adc")
-  }
+    request(index, candidates, nProbe, ef0).routed(queries, None)
 
   /** Distributed-routing twin of [[searchCoarse]] (the batch-side
     * shape; see [[HnswRouted.searchDistributed]]). */
   def searchCoarseDistributed(index: RoutedPqIndex, queries: DataFrame,
                               candidates: Int, nProbe: Int,
                               ef0: Int = 0): DataFrame =
-    searchCoarseDistributedImpl(index, queries, candidates, nProbe, ef0,
-      allowed = None)
-
-  private def searchCoarseDistributedImpl(
-      index: RoutedPqIndex, queries: DataFrame,
-      candidates: Int, nProbe: Int, ef0: Int,
-      allowed: Option[Array[Long]]): DataFrame = {
-    val spark = queries.sparkSession
-    val sc = spark.sparkContext
-    val exhaustive = nProbe >= index.router.nPrimary
-    val routerB = sc.broadcast(index.router)
-    val cbB = sc.broadcast(index.codebook)
-    val tombB = sc.broadcast(index.tombstones)
-    val hasAllow = allowed.isDefined
-    val allowB = sc.broadcast(allowed.getOrElse(Array.empty[Long]))
-    val part = index.shards.partitioner.getOrElse(throw new IllegalStateException(
-      "distributed routing needs the index's pinned CellPartitioner"))
-    val routed = queries.select(col("qid"), col("qvec")).as(pairEnc).rdd
-      .flatMap { case (qid, qv) =>
-        routerB.value.probeCells(qv, nProbe).map(c => (c, (qid, qv)))
-      }.partitionBy(part)
-    import spark.implicits._
-    index.shards.zipPartitions(routed) { (shardIt, qIt) =>
-      val shards = shardIt.toArray
-      if (shards.length == 0) Iterator.empty
-      else if (shards.length == 1) {
-        val (cell, m) = shards(0)
-        val probes = qIt.collect { case (c, q) if c == cell => q }
-        serveAdcShard(index.params, m, cbB.value, tombB.value,
-          probes, candidates, exhaustive, ef0, hasAllow, allowB.value)
-      } else {
-        val byCell = qIt.toArray.groupBy(_._1)
-        shards.iterator.flatMap { case (cell, m) =>
-          serveAdcShard(index.params, m, cbB.value, tombB.value,
-            byCell.getOrElse(cell, Array.empty).iterator.map(_._2),
-            candidates, exhaustive, ef0, hasAllow, allowB.value)
-        }
-      }
-    }.toDF("qid", "id", "adc")
-  }
+    request(index, candidates, nProbe, ef0).distributed(queries, None)
 
   /** Attribute-filtered routed+PQ k-NN — the float tier's
     * [[HnswRouted.searchFiltered]] contract on the compressed tier:
@@ -456,125 +394,108 @@ object HnswRoutedPq {
   def searchFiltered(index: RoutedPqIndex, queries: DataFrame,
                      vectors: DataFrame, allowed: DataFrame,
                      k: Int, nProbe: Int, candidates: Int,
-                     ef0: Int = 0): DataFrame = {
-    RoutedLifecycle.allowProbe(allowed, HnswRouted.AllowCollectMax) match {
-      case None =>
-        searchFilteredDistributed(index, queries, vectors, allowed, k,
-          nProbe, candidates, ef0)
-      case Some(probe) =>
-        searchFilteredIds(index, queries, vectors, probe, k, nProbe,
-          candidates, ef0)
-    }
-  }
+                     ef0: Int = 0): DataFrame =
+    reranked(request(index, math.max(candidates, k), nProbe, ef0)
+      .filtered(queries, allowed), vectors, queries, k)
 
   /** [[searchFiltered]] with a pre-collected allow-set (sorted
     * ascending, duplicate-free) — the repeat-caller path. */
   def searchFilteredIds(index: RoutedPqIndex, queries: DataFrame,
                         vectors: DataFrame, allowedIds: Array[Long],
                         k: Int, nProbe: Int, candidates: Int,
-                        ef0: Int = 0): DataFrame = {
-    val coarse = searchCoarseImpl(index, queries, math.max(candidates, k),
-      nProbe, ef0, allowed = Some(allowedIds)).select(col("qid"), col("id"))
-    Pq.rerank(coarse, vectors, queries, k)
-  }
+                        ef0: Int = 0): DataFrame =
+    reranked(request(index, math.max(candidates, k), nProbe, ef0)
+      .routed(queries, Some(allowedIds)), vectors, queries, k)
 
   /** Fully distributed attribute-filtered serving on the PQ tier — the
     * float tier's [[HnswRouted.searchFilteredDistributed]] transport
     * with the ADC kernel: no driver-side materialization of the query
-    * batch OR the allow-set. The allow-set joins the index's own
-    * (id → cell) pairs (narrow flatMap over the shards' code keys —
-    * each id lives in exactly one cell, so the join output is |allow|
-    * rows), shuffles by the pinned partitioner, and rides a 3-way
-    * zipPartitions with the shards and the routed queries; the
-    * per-cell sorted allow array is built executor-side. */
+    * batch OR the allow-set (the allow-set joins the index's own
+    * (id → cell) pairs and rides a 3-way zipPartitions with the shards
+    * and the routed queries). */
   def searchFilteredDistributed(index: RoutedPqIndex, queries: DataFrame,
                                 vectors: DataFrame, allowed: DataFrame,
                                 k: Int, nProbe: Int, candidates: Int,
-                                ef0: Int = 0): DataFrame = {
-    val spark = queries.sparkSession
-    val sc = spark.sparkContext
-    val exhaustive = nProbe >= index.router.nPrimary
-    val routerB = sc.broadcast(index.router)
-    val cbB = sc.broadcast(index.codebook)
-    val tombB = sc.broadcast(index.tombstones)
-    val part = index.shards.partitioner.getOrElse(throw new IllegalStateException(
-      "distributed routing needs the index's pinned CellPartitioner"))
-    val routed = queries.select(col("qid"), col("qvec")).as(pairEnc).rdd
-      .flatMap { case (qid, qv) =>
-        routerB.value.probeCells(qv, nProbe).map(c => (c, (qid, qv)))
-      }.partitionBy(part)
-    val allowByCell = RoutedLifecycle.allowByCell(PqTier)(index, allowed, part)
-    import spark.implicits._
-    val c = math.max(candidates, k)
+                                ef0: Int = 0): DataFrame =
+    reranked(request(index, math.max(candidates, k), nProbe, ef0)
+      .filteredDistributed(queries, allowed), vectors, queries, k)
+
+  /** ONE exact squared-L2 re-rank join of the candidate union against
+    * the distributed raw-vector table. */
+  private def reranked(coarse: DataFrame, vectors: DataFrame,
+                       queries: DataFrame, k: Int): DataFrame =
+    Pq.rerank(coarse.select(col("qid"), col("id")), vectors, queries, k)
+
+  /** One serve over the shared transport ([[RoutedServe]]) with the ADC
+    * candidate kernel. */
+  private def request(index: RoutedPqIndex, candidates: Int, nProbe: Int,
+                      ef0: Int) = {
     val params = index.params
-    val coarse = RoutedLifecycle.zipServeFiltered(
-        index.shards, routed, allowByCell) {
-      (m: PqCellShard, probes: Iterator[(Long, Array[Float])], allow: Array[Long]) =>
-        serveAdcShard(params, m, cbB.value, tombB.value,
-          probes, c, exhaustive, ef0, hasAllow = true, allow)
-    }.toDF("qid", "id", "adc").select(col("qid"), col("id"))
-    Pq.rerank(coarse, vectors, queries, k)
+    val exhaustive = nProbe >= index.router.nPrimary
+    val cbB = index.shards.sparkContext.broadcast(index.codebook)
+    new RoutedServe.Request(PqTier, index, nProbe, "adc",
+      (m: PqCellShard, probes: Iterator[(Long, Array[Float])], hasAllow: Boolean,
+       allow: Array[Long], dead: Array[Long]) =>
+        serveAdcShard(params, m, cbB.value, dead, probes, candidates,
+          exhaustive, ef0, hasAllow, allow))
   }
 
-  /** Per-shard ADC candidate kernel, shared by both routing paths and
-    * the filtered variants. `allow` is a sorted allow-set (the
-    * attribute predicate's id list — [[HnswRouted.serveShard]]'s
-    * contract): an id serves only if allowed AND not tombstoned. */
+  /** Per-shard ADC candidate kernel of every serving path. `allow` is a
+    * sorted allow-set (the attribute predicate's id list): an id serves
+    * only if allowed AND not tombstoned. Unlike the float/codes kernel
+    * ([[PredicatedCensus.serve]]) it always runs the census and has no
+    * identity-filter branch — its candidate contract differs. */
   private def serveAdcShard(
       params: HnswParams, m: PqCellShard,
       cb: Array[Array[Array[Float]]], dead: Array[Long],
       probes: Iterator[(Long, Array[Float])],
       candidates: Int, exhaustive: Boolean,
-      ef0: Int, hasAllow: Boolean = false,
-      allow: Array[Long] = Array.empty): Iterator[(Long, Long, Double)] = {
-        // census/eligibleIds/exact-scan machinery is the shared
-        // [[PredicatedCensus]] kernel (one copy across the three routed
-        // tiers) — which also gives this tier the small-allow
-        // eligibleIds fast path the float/codes twins had
-        val cen = new PredicatedCensus.Census(
-          PredicatedCensus.Members.ofLongLongMap(m.codes),
-          hasAllow, allow, dead)
-        @inline def eligible(id: Long): Boolean = cen.eligible(id)
-        val cellN = cen.cellN
-        val searcher = new HnswSearcher(params)
-        val store = new AdcVectorStore(cb, m.codes(_))
-        val base = params.getEfSearch(0)
-        val ef = if (ef0 > 0) math.max(ef0, base)
-                 else HnswRouted.autoEf(base, cellN)
-        val c = math.max(1, candidates)
-        // exact ADC scan: k-bounded queue selection over the eligible
-        // ids (the routed exactScan, with the LUT kernel per query)
-        def adcScan(qid: Long, qvec: Array[Float]): Iterator[(Long, Long, Double)] = {
-          val lut = PqKernels.lutFor(qvec, cb)
-          PredicatedCensus.exactScanTopK(cen.eligibleIds, c,
-              id => PqKernels.adcLut(lut, m.codes(id)))
-            .iterator.map(nb => (qid, nb.dst, nb.dist))
-        }
-        if (cen.eligibleCount == 0) Iterator.empty
-        else probes.flatMap { case (qid, qvec) =>
-          if (exhaustive || cen.cutoverToExact(c))
-            adcScan(qid, qvec)
-          else {
-            val q = store.prepareQueryWithId(-1L, qvec)
-            val beam = math.max(c, ef)
-            val w = searcher.searchWithEf(store, m.snapshot, q, beam, beam)
-            val hits = w.iterator.filter(nb => eligible(nb.dst)).take(c).toList
-            if (hits.length >= math.min(c, cen.eligibleCount))
-              hits.iterator.map(nb => (qid, nb.dst, nb.dist))
-            else adcScan(qid, qvec)
-          }
-        }
+      ef0: Int, hasAllow: Boolean,
+      allow: Array[Long]): Iterator[(Long, Long, Double)] = {
+    // census/eligibleIds/exact-scan machinery is the shared
+    // [[PredicatedCensus]] kernel (one copy across the three routed
+    // tiers) — which also gives this tier the small-allow
+    // eligibleIds fast path the float/codes tiers have
+    val cen = new PredicatedCensus.Census(
+      PredicatedCensus.Members.ofLongLongMap(m.codes),
+      hasAllow, allow, dead)
+    @inline def eligible(id: Long): Boolean = cen.eligible(id)
+    val cellN = cen.cellN
+    val searcher = new HnswSearcher(params)
+    val store = new AdcVectorStore(cb, m.codes(_))
+    val ef = HnswRouted.cellEf(params, ef0, cellN)
+    val c = math.max(1, candidates)
+    // exact ADC scan: k-bounded queue selection over the eligible
+    // ids (the routed exactScan, with the LUT kernel per query)
+    def adcScan(qid: Long, qvec: Array[Float]): Iterator[(Long, Long, Double)] = {
+      val lut = PqKernels.lutFor(qvec, cb)
+      PredicatedCensus.exactScanTopK(cen.eligibleIds, c,
+          id => PqKernels.adcLut(lut, m.codes(id)))
+        .iterator.map(nb => (qid, nb.dst, nb.dist))
+    }
+    if (cen.eligibleCount == 0) Iterator.empty
+    else probes.flatMap { case (qid, qvec) =>
+      if (exhaustive || cen.cutoverToExact(c))
+        adcScan(qid, qvec)
+      else {
+        val q = store.prepareQueryWithId(-1L, qvec)
+        val beam = math.max(c, ef)
+        val w = searcher.searchWithEf(store, m.snapshot, q, beam, beam)
+        val hits = w.iterator.filter(nb => eligible(nb.dst)).take(c).toList
+        if (hits.length >= math.min(c, cen.eligibleCount))
+          hits.iterator.map(nb => (qid, nb.dst, nb.dist))
+        else adcScan(qid, qvec)
+      }
+    }
   }
 
   /** Full serving path: ADC candidates per probed cell, then ONE exact
     * squared-L2 re-rank join against the distributed raw-vector table.
     * Output (qid, id, score, rank), rank <= k. */
   def search(index: RoutedPqIndex, queries: DataFrame, vectors: DataFrame,
-             k: Int, nProbe: Int, candidates: Int, ef0: Int = 0): DataFrame = {
-    val coarse = searchCoarse(index, queries, math.max(candidates, k),
-      nProbe, ef0).select(col("qid"), col("id"))
-    Pq.rerank(coarse, vectors, queries, k)
-  }
+             k: Int, nProbe: Int, candidates: Int, ef0: Int = 0): DataFrame =
+    reranked(searchCoarse(index, queries, math.max(candidates, k), nProbe,
+      ef0), vectors, queries, k)
 
   /** Tombstone delete on the PQ tier — O(set) handle metadata, sharing
     * the shards (the [[HnswRouted.delete]] semantics verbatim: serving
@@ -721,22 +642,11 @@ object HnswRoutedPq {
     * concern, not the index's. */
   def warmProbe(index: RoutedPqIndex, ef: Int = 16): Long = {
     val cbB = index.shards.sparkContext.broadcast(index.codebook)
-    val reps = index.shards.flatMap { case (cell, s) =>
-      // headOption stops at the first occupied slot — the probe-rep
-      // collection is O(nCells) decodes, not a full code-map walk
-      s.codes.headOption.iterator.map { case (_, c) =>
-        (cell.toLong, PqKernels.decodeArray(c, cbB.value))
-      }
-    }.collect()
-    if (reps.isEmpty) 0L
-    else {
-      val spark = SparkSession.active
-      import spark.implicits._
-      val qDf = reps.toSeq.toDF("qid", "qvec")
-      searchCoarse(index, qDf, candidates = math.max(1, ef), nProbe = 1,
-        ef0 = ef).count()
-      reps.length.toLong
-    }
+    // headOption stops at the first occupied slot — the probe-rep
+    // collection is O(nCells) decodes, not a full code-map walk
+    RoutedServe.warmProbe(PqTier, index)(_.codes.headOption.iterator.map {
+      case (_, c) => PqKernels.decodeArray(c, cbB.value) })(
+      searchCoarse(index, _, candidates = math.max(1, ef), nProbe = 1, ef0 = ef))
   }
 
   /** Which of `ids` are present in the index's code maps — one narrow
@@ -745,10 +655,6 @@ object HnswRoutedPq {
   def presentIds(index: RoutedPqIndex, ids: Array[Long]): Array[Long] =
     RoutedOps.presentIds(index.shards, ids)(
       (s, f) => s.codes.foreach((id, _) => f(id)))
-
-  /** (cell, rows) occupancy — the threshold-compaction stat. */
-  private[graft] def cellStats(index: RoutedPqIndex): Array[(Int, Long)] =
-    RoutedOps.cellStats(index.shards)(_.codes.size)
 
   /** Fold the deletion set out of the PQ tier WITHOUT a float source:
     * cells holding a tombstoned id rebuild from the raw-vector table
@@ -882,36 +788,15 @@ object HnswRoutedPq {
                       minDeadBp: Int = 1000, maxDeadBp: Int = 9000,
                       sampleMax: Int = 4096, iters: Int = 8,
                       kSplit: Int = 8): DataFrame = {
-    val spark = SparkSession.active
-    import spark.implicits._
-    val tombB = index.shards.sparkContext.broadcast(index.tombstones)
     val cbB = index.shards.sparkContext.broadcast(index.codebook)
-    val rows = index.shards.flatMap { case (cell, s) =>
-      val dead = tombB.value
-      val cellN = s.codes.size
-      if (dead.length == 0 || cellN < minCellRows) Iterator.empty
-      else {
-        @inline def isDead(id: Long): Boolean =
-          java.util.Arrays.binarySearch(dead, id) >= 0
-        var nDead = 0
-        s.codes.foreach { (id, _) => if (isDead(id)) nDead += 1 }
-        val deadBp = nDead * 10000L / cellN
-        if (deadBp < minDeadBp || deadBp > maxDeadBp) Iterator.empty
-        else {
-          val cb = cbB.value
-          val buf = new scala.collection.mutable.ArrayBuffer[(Long, Array[Float])](cellN)
-          s.codes.foreach { (id, c) => buf += ((id, PqKernels.decodeArray(c, cb))) }
-          val all = buf.toArray.sortBy(_._1)
-          val (hiBp, loBp, massHiBp, merged) = MergedCellAudit.auditCell(
-            all, graft.store.Metrics.byName("l2"), isDead, nDead,
-            sampleMax, iters, kSplit)
-          Iterator.single((cell, cellN.toLong, nDead.toLong, deadBp,
-            hiBp, loBp, massHiBp, merged))
-        }
-      }
-    }.collect()
-    rows.toSeq.toDF("cell", "n", "n_dead", "dead_bp",
-      "hi_dead_bp", "lo_dead_bp", "dead_mass_hi_bp", "merged")
+    RoutedLifecycle.mergedCellAudit(PqTier)(index, minCellRows, minDeadBp,
+        maxDeadBp) { (s, isDead, nDead) =>
+      val cb = cbB.value
+      val buf = new scala.collection.mutable.ArrayBuffer[(Long, Array[Float])](s.codes.size)
+      s.codes.foreach { (id, c) => buf += ((id, PqKernels.decodeArray(c, cb))) }
+      MergedCellAudit.auditCell(buf.toArray.sortBy(_._1),
+        graft.store.Metrics.byName("l2"), isDead, nDead, sampleMax, iters, kSplit)
+    }
   }
 
   /** Targeted solo compaction: [[compactSolo]] restricted to the listed
@@ -1114,9 +999,7 @@ object HnswRoutedPq {
                                unpersistPrior: Boolean = false,
                                patched: Boolean = true,
                                floatExact: Boolean = true): (RoutedPqIndex, Array[Int]) = {
-    val flagged = mergedCellAudit(index, minCellRows)
-      .filter(col("merged")).select(col("cell"))
-      .collect().map(_.getInt(0))
+    val flagged = RoutedLifecycle.flaggedCells(mergedCellAudit(index, minCellRows))
     if (flagged.isEmpty) (index, flagged)
     else if (patched)
       (compactSoloCellsPatched(index, vectors, flagged, persist,
@@ -1169,9 +1052,7 @@ object HnswRoutedPq {
       persist: Boolean = true,
       unpersistPrior: Boolean = false,
       forceCount: Boolean = true): (RoutedPqIndex, Long, Long) = {
-    require(source.cfg.metric == "l2",
-      s"HnswRoutedPq serves squared-L2 (ADC); routed graphs were built " +
-        s"with ${source.cfg.metric}")
+    requireL2(source)
     val sc = source.shards.sparkContext
     val samePartitioning = (source.shards.partitioner, old.shards.partitioner) match {
       case (Some(a), Some(b)) => a == b // CellPartitioner: value equality
@@ -1393,65 +1274,39 @@ object HnswRoutedPq {
       RoutedImage.readTombstones(spark, dir), buildSeed)
   }
 
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, RoutedPqIndex]()
+  /** Nest-safe process-wide memo of the catalog's handles (the source
+    * index comes from [[HnswRouted.buildCached]], which may build inside
+    * these calls). */
+  private val memo = new HandleMemo[RoutedPqIndex](_.unpersist())
 
-  /** Release the memo (see [[IndexCaches]]). */
-  private[hnsw] def releaseCaches(): Unit = {
-    cache.values.forEach(_.unpersist())
-    cache.clear()
-  }
+  private[hnsw] def releaseCaches(): Unit = memo.releaseAll()
 
   /** Memoized save→attach round-trip over the cached derivation — the
     * catalog's durable-path handle (the [[HnswRouted.attachCached]]
     * pattern): derive once, persist the eight-table image, restore it
     * WITHOUT the float source, serve from the attached copy. */
-  def attachCached(index: HnswRouted.RoutedIndex, key: String): RoutedPqIndex = {
-    val spark = SparkSession.active
-    val full = s"${index.shards.sparkContext.applicationId}|pqattach|$key"
-    val hit = cache.get(full)
-    if (hit != null) hit
-    else {
-      val v = graft.BuildLedger.timed("hnsw_routed_pq_save_attach") {
+  def attachCached(index: HnswRouted.RoutedIndex, key: String): RoutedPqIndex =
+    memo(index.shards.sparkContext.applicationId, "pqattach", key)(
+      graft.BuildLedger.timed("hnsw_routed_pq_save_attach") {
+        val spark = SparkSession.active
         val derived = fromRoutedCached(index, key)
         val dir = graft.TempDirs.create("graft_routed_pq_")
         saveWith(spark, derived, dir)
         attach(spark, dir)
-      }
-      val prev = cache.putIfAbsent(full, v)
-      if (prev != null) { v.unpersist(); prev } else v
-    }
-  }
+      })
 
   /** Memoized [[buildSolo]] — the catalog handle for the float-free
     * build path (one build per session per key). */
   def buildSoloCached(vectors: DataFrame, cfg: HnswDistributed.BuildConfig,
-                      nCells: Int, key: String): RoutedPqIndex = {
-    val spark = vectors.sparkSession
-    val full = s"${spark.sparkContext.applicationId}|pqsolobuild|$key|$nCells"
-    val hit = cache.get(full)
-    if (hit != null) hit
-    else {
-      val v = graft.BuildLedger.timed("hnsw_routed_pq_solo_build")(
-        buildSolo(vectors, cfg, nCells))
-      val prev = cache.putIfAbsent(full, v)
-      if (prev != null) { v.unpersist(); prev } else v
-    }
-  }
+                      nCells: Int, key: String): RoutedPqIndex =
+    memo(HandleMemo.appId(vectors), "pqsolobuild", key, nCells)(
+      graft.BuildLedger.timed("hnsw_routed_pq_solo_build")(
+        buildSolo(vectors, cfg, nCells)))
 
-  /** Memoized derivation (nest-safe get/putIfAbsent — the source index
-    * comes from [[HnswRouted.buildCached]], which may build inside this
-    * call). Keyed by app id like every RDD-bearing memo. */
+  /** Memoized derivation. */
   def fromRoutedCached(index: HnswRouted.RoutedIndex, key: String,
-                       seed: Long = 13L): RoutedPqIndex = {
-    val full = s"${index.shards.sparkContext.applicationId}|pq|$key|$seed|" +
-      s"${index.tombstones.length}"
-    val hit = cache.get(full)
-    if (hit != null) hit
-    else {
-      val v = graft.BuildLedger.timed("hnsw_routed_pq_encode")(fromRouted(index, seed))
-      val prev = cache.putIfAbsent(full, v)
-      if (prev != null) { v.unpersist(); prev } else v
-    }
-  }
+                       seed: Long = 13L): RoutedPqIndex =
+    memo(index.shards.sparkContext.applicationId, "pq", key, seed,
+      index.tombstones.length)(
+      graft.BuildLedger.timed("hnsw_routed_pq_encode")(fromRouted(index, seed)))
 }

@@ -1,7 +1,7 @@
 package graft.hnsw
 
 /** The predicated-serving census machinery shared by all three routed
-  * serving tiers — float ([[HnswRouted.serveShard]]), u64 Hamming codes
+  * serving tiers — float ([[HnswRouted]]), u64 Hamming codes
   * ([[HnswRoutedCodes]]) and PQ/ADC ([[HnswRoutedPq]]). One kernel,
   * parameterized over the member representation, so a fix lands once
   * instead of three hand-synced times (the round-15 failure mode:
@@ -110,6 +110,79 @@ private[hnsw] object PredicatedCensus {
       * is smaller than the beam or below ~25% of the cell. */
     def cutoverToExact(beam: Int): Boolean =
       eligibleCount <= math.max(beam, cellN / 4)
+  }
+
+  /** The float and u64-code tiers' per-shard serving kernel, one copy
+    * parameterized by the cell's members, its plain beam
+    * (`beam(query, k, ef)`) and its exact distance (`dist(query)(id)`).
+    * Plain beam when unpredicated; census → identity-filter /
+    * one-overfetched-beam / exact-scan discipline when predicated
+    * (exhaustive regime forces the exact scan — the hash-oracle
+    * configuration). Rows are (qid, id, dist).
+    *
+    * Accuracy contract (the HnswDistributed.searchPredicated
+    * discipline, executor-local to the shard): EXACT whenever the
+    * exact-scan path serves — every cell in the exhaustive regime, plus
+    * any cell the density cutover routes to exact — and otherwise at
+    * least as accurate as the plain kernel (one overfetched beam whose
+    * eligible prefix carries the queue's total (dist, id) order). The
+    * PQ tier's ADC kernel stays separate: its candidate contract always
+    * runs the census and has no identity-filter branch. */
+  def serve[Q](m: Members, probes: Iterator[(Long, Q)], k: Int, ef: Int,
+               exhaustive: Boolean, hasAllow: Boolean, allow: Array[Long],
+               dead: Array[Long])(
+               beam: (Q, Int, Int) => FurthestQueue,
+               dist: Q => Long => Double): Iterator[(Long, Long, Double)] = {
+    def plain(qid: Long, q: Q): Iterator[(Long, Long, Double)] =
+      beam(q, k, ef).iterator.map(nb => (qid, nb.dst, nb.dist))
+    if (!hasAllow && dead.isEmpty)
+      return probes.flatMap { case (qid, q) => plain(qid, q) }
+    val cen = new Census(m, hasAllow, allow, dead)
+    def exactScan(qid: Long, q: Q): List[(Long, Long, Double)] =
+      exactScanTopK(cen.eligibleIds, k, dist(q))
+        .iterator.map(nb => (qid, nb.dst, nb.dist)).toList
+    val kp0 = math.max(4 * k, ef)
+    if (cen.eligibleCount == 0) Iterator.empty
+    else if (exhaustive)
+      // exactness is structural here, not small-cell luck: the
+      // filtered/tombstone hash-oracle rows serve through this branch
+      // (identity-filter cells included — a plain beam there would
+      // re-introduce the plain kernel's approximation into a result
+      // the oracle demands exact)
+      probes.flatMap { case (qid, q) => exactScan(qid, q) }
+    else if (cen.eligibleCount == cen.cellN)
+      // every member of this cell is eligible (no dead id lives here;
+      // any allow-set covers it), so the predicated filter is the
+      // identity — serve on the UNMODIFIED plain kernel. This makes
+      // cell-local deletions cost ~nothing on the untouched cells,
+      // which is almost all of them (measured: the predicated wrapper
+      // around the same beam ran ~40% slower at 47k tombstones even
+      // though the beam parameters are identical — profile/cache
+      // effects in the wrapper; the plain path sidesteps the question)
+      probes.flatMap { case (qid, q) => plain(qid, q) }
+    else probes.flatMap { case (qid, q) =>
+      // density-aware cutover ([[Census.cutoverToExact]]): a
+      // low-eligible-fraction cell defeats the beam, while the exact
+      // scan is O(eligible) per query
+      if (cen.cutoverToExact(kp0)) exactScan(qid, q)
+      else {
+        // ONE overfetched beam, then exact — never escalate in-cell.
+        // Escalation is the BROADCAST tier's discipline, where "exact"
+        // means a corpus-wide scan; per cell the exact scan is bounded
+        // by cellN and costs less than one 4x re-beam. The regime that
+        // needs this is GEOMETRIC eligibility clustering the density
+        // census cannot see: a merged cell holding a dead cluster beside
+        // a live one reads 50% eligible cell-wide, but a query arriving
+        // near the dead cluster has ~zero eligible among its nearest —
+        // measured as ~3 escalations per query, 39 s in one task,
+        // before this cutover. Queue order is total on (dist, id), so
+        // the filtered prefix carries the oracle's tie-breaking.
+        val hits = beam(q, kp0, kp0).iterator
+          .filter(nb => cen.eligible(nb.dst)).take(k).toList
+        if (hits.length >= k) hits.map(nb => (qid, nb.dst, nb.dist))
+        else exactScan(qid, q)
+      }
+    }
   }
 
   /** k-bounded exact selection over `eligibleIds`: one primitive

@@ -279,111 +279,41 @@ private[graft] object RoutedLifecycle {
     t.make(prior, patched, tombstones, t.overlays(prior) :+ overlay)
   }
 
-  // ----------------------------------------------------------------
-  // Filtered-serving transport — the allow-set plumbing shared by the
-  // three searchFiltered families; the per-cell kernels stay with
-  // their tiers.
-  // ----------------------------------------------------------------
-
-  /** Collect-or-distribute cutover for an allow-set: Some(sorted,
-    * distinct ids) when it fits the driver budget, None above `max`
-    * (the caller routes to the distributed transport — the driver copy
-    * is 8 B/id plus boxing and repeats per call; at the 1e8-id decade
-    * the collect is an OOM wall). */
-  def allowProbe(allowed: DataFrame, max: Int): Option[Array[Long]] = {
-    val probe = allowed
-      .select(col(allowed.columns.head).cast("long")).distinct()
-      .limit(max + 1)
-      .as(Encoders.scalaLong).collect()
-    if (probe.length > max) None
-    else { java.util.Arrays.sort(probe); Some(probe) }
-  }
-
-  /** Per-image memo of the hash(id)-partitioned (id → cell) projection
-    * (round-19, the round-18 judge's one `weak` mark): every filtered-
-    * distributed call used to re-derive AND re-shuffle the full
-    * projection (~12 B/row — ≈1.2 GB of shuffle per call at 1e8), so a
-    * repeat caller paid O(index) network per batch. The projection is a
-    * pure function of the immutable shards RDD, so it is cached keyed on
-    * THAT RDD's identity: every lifecycle epilogue
-    * (compact/ingest/fold/supersede) produces a new handle with a new
-    * shards RDD, which misses the cache by construction — no
-    * invalidation wiring, no stale reads. Entries are weakly keyed and
-    * MEMORY_AND_DISK-persisted: when a handle is released and its shards
-    * RDD becomes unreachable, the ContextCleaner unpersists the memo
-    * with it (eviction goes to disk, never to a recompute through a
-    * possibly-released parent). */
-  private val idCellCache =
-    new java.util.WeakHashMap[RDD[_], RDD[(Long, Int)]]()
-
-  private def idCellOf[S, I](t: RoutedTier[S, I])(index: I): RDD[(Long, Int)] =
-    idCellCache.synchronized {
-      val sh = t.shards(index)
-      val hit = idCellCache.get(sh)
-      if (hit != null) hit
+  /** The merged-cell audit's per-cell shell (one narrow pass, no
+    * shuffle): cells of at least `minCellRows` members whose dead
+    * fraction lies in [minDeadBp, maxDeadBp] run the tier's
+    * separability kernel `audit(shard, isDead, nDead)` → (hi_dead_bp,
+    * lo_dead_bp, dead_mass_hi_bp, merged); one row per audited cell. */
+  def mergedCellAudit[S, I](t: RoutedTier[S, I])(
+      index: I, minCellRows: Int, minDeadBp: Int, maxDeadBp: Int)(
+      audit: (S, Long => Boolean, Int) => (Long, Long, Long, Boolean)): DataFrame = {
+    val spark = SparkSession.active
+    import spark.implicits._
+    val shards = t.shards(index)
+    val tombB = shards.sparkContext.broadcast(t.tombstones(index))
+    val tt = t
+    shards.flatMap { case (cell, s) =>
+      val dead = tombB.value
+      val cellN = tt.memberCount(s)
+      if (dead.length == 0 || cellN < minCellRows) Iterator.empty
       else {
-        val tt = t
-        val built = sh.flatMap { case (c, s) =>
-          tt.idIterator(s).map(id => (id, c))
-        }.partitionBy(new org.apache.spark.HashPartitioner(
-          math.max(sh.partitions.length, sh.sparkContext.defaultParallelism)))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        idCellCache.put(sh, built)
-        built
-      }
-    }
-
-  /** (cell, allowedId) pairs co-partitioned with the shards: the
-    * allow-set joined against the index's cached hash(id)-partitioned
-    * (id → cell) projection ([[idCellOf]] — built and shuffled ONCE per
-    * image; each id lives in exactly one cell, so the join output is
-    * |allow| rows), then ONE shuffle keyed by the pinned partitioner
-    * like everything else. Per-call shuffle is now O(|allow|): the
-    * allow side hash-partitions to the memo's layout and the join is
-    * narrow on the index side. */
-  def allowByCell[S, I](t: RoutedTier[S, I])(
-      index: I, allowed: DataFrame,
-      part: org.apache.spark.Partitioner): RDD[(Int, Long)] = {
-    val idCell = idCellOf(t)(index)
-    val allowRdd = allowed
-      .select(col(allowed.columns.head).cast("long")).distinct()
-      .as(Encoders.scalaLong).rdd.map(id => (id, ()))
-      .partitionBy(idCell.partitioner.get)
-    idCell.join(allowRdd)
-      .map { case (id, (cell, _)) => (cell, id) }
-      .partitionBy(part)
-  }
-
-  /** The filtered 3-way zip: shards + routed queries + allow-by-cell,
-    * per-cell sorted allow arrays built EXECUTOR-side, `serve` the
-    * tier's per-shard kernel. No driver materialization of either the
-    * query batch or the allow-set. */
-  def zipServeFiltered[S, Q, R](
-      shards: RDD[(Int, S)], routed: RDD[(Int, Q)],
-      allow: RDD[(Int, Long)])(
-      serve: (S, Iterator[Q], Array[Long]) => Iterator[R])(
-      implicit cq: scala.reflect.ClassTag[Q],
-      cr: scala.reflect.ClassTag[R]): RDD[R] =
-    shards.zipPartitions(routed, allow) { (shardIt, qIt, aIt) =>
-      val sh = shardIt.toArray
-      if (sh.length == 0) Iterator.empty
-      else if (sh.length == 1) {
-        val (cell, m) = sh(0)
-        val al = aIt.collect { case (c, id) if c == cell => id }.toArray
-        java.util.Arrays.sort(al)
-        serve(m, qIt.collect { case (c, q) if c == cell => q }, al)
-      } else {
-        val byCellQ = qIt.toArray.groupBy(_._1)
-        val byCellA = aIt.toArray.groupBy(_._1)
-        sh.iterator.flatMap { case (cell, m) =>
-          val al = byCellA.getOrElse(cell, Array.empty[(Int, Long)]).map(_._2)
-          java.util.Arrays.sort(al)
-          serve(m,
-            byCellQ.getOrElse(cell, Array.empty[(Int, Q)]).iterator.map(_._2),
-            al)
+        val isDead: Long => Boolean = java.util.Arrays.binarySearch(dead, _) >= 0
+        val nDead = tt.idIterator(s).count(isDead)
+        val deadBp = nDead * 10000L / cellN
+        if (deadBp < minDeadBp || deadBp > maxDeadBp) Iterator.empty
+        else {
+          val (hiBp, loBp, massHiBp, merged) = audit(s, isDead, nDead)
+          Iterator.single((cell, cellN.toLong, nDead.toLong, deadBp,
+            hiBp, loBp, massHiBp, merged))
         }
       }
-    }
+    }.collect().toSeq.toDF("cell", "n", "n_dead", "dead_bp",
+      "hi_dead_bp", "lo_dead_bp", "dead_mass_hi_bp", "merged")
+  }
+
+  /** The cells a merged-cell audit flagged. */
+  def flaggedCells(audit: DataFrame): Array[Int] =
+    audit.filter(col("merged")).select(col("cell")).collect().map(_.getInt(0))
 
   // ----------------------------------------------------------------
   // Ingest guards — the fail-fast batch posture shared by the tiers
@@ -435,6 +365,44 @@ private[graft] object RoutedLifecycle {
         "cells. Remove existing ids from the batch (left-anti on the " +
         "index) or rebuild to replace vectors")
   }
+}
+
+/** Process-wide, nest-safe memo of one tier's catalog handles (the
+  * shardCache pattern), keyed by app id so a handle of a stopped
+  * SparkContext is never served. NOT computeIfAbsent: the lifecycle
+  * handles nest (compactCached → deleteCached → buildCached), and
+  * nested computeIfAbsent on one ConcurrentHashMap throws "Recursive
+  * update" — get/putIfAbsent trades atomic insertion (never contended
+  * here: the catalog serves queries sequentially) for safe nesting. */
+private[graft] final class HandleMemo[I <: AnyRef](release: I => Unit) {
+  private val cache = new java.util.concurrent.ConcurrentHashMap[String, I]()
+
+  /** The handle memoized under `appId|parts...`, built by `mk` on a miss. */
+  def apply(appId: String, parts: Any*)(mk: => I): I = {
+    val key = (appId +: parts).mkString("|")
+    val hit = cache.get(key)
+    if (hit != null) hit
+    else {
+      val v = mk
+      val prev = cache.putIfAbsent(key, v)
+      // losing the (theoretical) race leaves v's shards persisted and
+      // materialized but unreachable — release them, don't leak the
+      // executor storage pool
+      if (prev != null) { release(v); prev } else v
+    }
+  }
+
+  /** Release every memoized handle (see [[IndexCaches]]). Lifecycle
+    * handles SHARE shard RDDs (deleteCached wraps buildCached's), so
+    * double-unpersist is possible and harmless (idempotent). */
+  def releaseAll(): Unit = {
+    cache.values.forEach(v => release(v))
+    cache.clear()
+  }
+}
+
+private[graft] object HandleMemo {
+  def appId(df: DataFrame): String = df.sparkSession.sparkContext.applicationId
 }
 
 /** Shared sub-blocks of the tiers' versioned parquet images

@@ -277,25 +277,13 @@ object BpeTrain {
     var done = false
     var chainDepth = 0
     val ckptEvery = 6
-    // Amdahl split of the training loop (GRAFT_BPE_PHASES=1): which of
-    // the four per-round jobs actually carries the wall — the argmax,
-    // the apply+checkpoint pass, the delta extraction, or the count
-    // merge. The r9->r10 rewrite was steered by exactly this split.
-    val phases = scala.collection.mutable.LinkedHashMap(
-      "argmax" -> 0.0, "apply_ckpt" -> 0.0, "delta_counts" -> 0.0)
-    def timed[A](k: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val a = f
-      phases(k) += (System.nanoTime() - t0) / 1e9
-      a
-    }
     while (rank < nMerges && !done) {
       // argmax over the RUNNING counts with the deterministic
       // (freq desc, left asc, right asc) tie-break — a 1-row collect
-      val top = timed("argmax")(pairCounts
+      val top = pairCounts
         .orderBy(col("freq").desc, col("l"), col("r"))
         .limit(1)
-        .collect())
+        .collect()
       if (top.isEmpty) done = true
       else {
         val row = top(0)
@@ -331,20 +319,17 @@ object BpeTrain {
         // counted). The union-groupBy shuffles O(|pairCounts| + |delta|)
         // narrow rows — no re-explode of the word table. The eager
         // checkpoint here is what forces the delta scan.
-        pairCounts = timed("delta_counts")(pairCounts.unionByName(delta)
+        pairCounts = pairCounts.unionByName(delta)
           .groupBy(col("l"), col("r")).agg(sum(col("freq")).as("freq"))
           .filter(col("freq") > 0)
-          .localCheckpoint(true))
+          .localCheckpoint(true)
         if (chainDepth >= ckptEvery) {
-          state = timed("apply_ckpt")(state.localCheckpoint(true))
+          state = state.localCheckpoint(true)
           chainDepth = 0
         }
         rank += 1
       }
     }
-    if (sys.env.contains("GRAFT_BPE_PHASES"))
-      System.err.println("BPE_PHASES " + phases.map { case (k, v) =>
-        f"$k=$v%.2fs" }.mkString(" "))
     merges.toSeq
   }
 

@@ -1,11 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.hnsw.HnswRouted
-import graft.hnsw.HnswRouted.RoutedIndex
+import graft.hnsw.HnswRouted.{CellShard, RoutedIndex}
 
 /** Structured-Streaming ingest for the IVF-ROUTED serving tier: each
   * micro-batch routes by cell and merges per cell through
@@ -31,119 +30,52 @@ object StreamingRouted {
     def cellStats: Array[(Int, Long)] = HnswRouted.cellStats(index)
   }
 
+  private[streaming] val ops = RoutedStreamOps[CellShard, RoutedIndex](
+    tier = HnswRouted.FloatTier,
+    payload = "vec",
+    presentIds = HnswRouted.presentIds,
+    ingest = (i, df) => HnswRouted.ingest(i, df),
+    compact = i => HnswRouted.compact(i),
+    foldOverlay = HnswRouted.foldOverlay,
+    warmProbe = i => HnswRouted.warmProbe(i),
+    warmLabel = "routed_warm_probe",
+    warmAfterCompact = false,
+    save = (i, path) => HnswRouted.save(i, path, keepVersions = 2),
+    attach = (spark, path) => HnswRouted.attach(spark, path),
+    unpersist = _.unpersist())
+
   /** Wire `stream` (id: long, vec: array<float>) into the handle via
-    * foreachBatch. Empty batches skip the INGEST (no index churn) but
-    * still advance the checkpoint cadence — tracked as batches-since-
-    * last-save, so an empty micro-batch landing on the boundary defers
-    * the save at most until the next non-empty batch instead of
-    * silently stretching the restart replay window by a full cadence. */
+    * foreachBatch, insert-only; checkpoint cadence and empty-batch
+    * handling as [[RoutedStream.loop]], save + rebase as
+    * [[RoutedStream.rebase]]. */
   def attach(stream: DataFrame, handle: Handle,
-             checkpoint: Option[(String, Int)] = None): StreamingQuery = {
-    // single-writer foreachBatch contract: one callback at a time, so
-    // plain vars are safe here
-    var sinceSave = 0
-    var unsavedIngests = 0
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          handle.index = HnswRouted.ingest(handle.index, batch)
-          unsavedIngests += 1
-        }
-        sinceSave += 1
-        checkpoint.foreach { case (path, every) =>
-          // save once the cadence has elapsed AND there is anything new
-          // to persist (a window of only empty batches checkpoints
-          // nothing; unsaved ingests from earlier in the window still
-          // save even when the boundary batch itself is empty)
-          if (every > 0 && sinceSave >= every && unsavedIngests > 0) {
-            HnswRouted.save(handle.index, path, keepVersions = 2)
-            rebase(handle, batch.sparkSession, path)
-            sinceSave = 0
-            unsavedIngests = 0
-          }
-        }
-      }
-      .start()
-  }
+             checkpoint: Option[(String, Int)] = None): StreamingQuery =
+    RoutedStream.loop(stream, checkpoint) { batch =>
+      handle.index = HnswRouted.ingest(handle.index, batch)
+      1
+    } { (spark, path) =>
+      handle.index = RoutedStream.rebase(ops)(handle.index, spark, path)
+    }
 
-  /** REBASE the handle onto the just-saved image. The save-while-
-    * attached hazard this closes: a handle attached from a PRIOR
-    * version (the restart posture), or descended from one through a
-    * chain of ingest cogroups, still reads that version's parquet
-    * through its RDD lineage whenever an evicted/lost block recomputes
-    * — and the save's version reclaim would delete those files under
-    * it. Discipline: every streaming save passes `keepVersions = 2`
-    * (the prior version survives THIS save) and immediately rebases
-    * the handle onto the newest version, so by the time the NEXT save
-    * reclaims that prior version no live lineage reads it. Also
-    * truncates the otherwise-unbounded ingest-cogroup lineage chain a
-    * long-running stream accumulates (a deep recompute after executor
-    * loss would otherwise replay every micro-batch merge). */
-  private def rebase(handle: Handle,
-                     spark: org.apache.spark.sql.SparkSession,
-                     path: String): Unit = {
-    val prior = handle.index
-    handle.index = HnswRouted.attach(spark, path)
-    prior.unpersist()
-    // the attached image is cold (fresh RDD, unexecuted plan): probe it
-    // off the serving path so the next real serve doesn't pay the cold
-    // tax the warm-up rung measured at 6x (ledger-tracked as one-time)
-    graft.BuildLedger.timed("routed_warm_probe")(
-      HnswRouted.warmProbe(handle.index))
-    ()
-  }
-
-  /** CDC streaming against the routed tier: each micro-batch carries
-    * inserts AND deletes — `(id, vec, op)` with op `"insert"` (alias
-    * `"upsert"`) or `"delete"` (`vec` ignored for deletes), the
+  /** CDC streaming against the routed tier: `(id, vec, op)` micro-
+    * batches ([[RoutedStream.cdcStep]]), the
     * [[StreamingIngest.attachCdcDurable]] contract re-expressed on the
-    * routed lifecycle primitives. Per batch:
-    *
-    *  1. deletes fold into the handle's tombstone set
-    *     ([[HnswRouted.delete]] — O(set) metadata, serving excludes
-    *     them immediately);
-    *  2. inserts land through [[HnswRouted.ingest]], minus same-batch
-    *     deletes (the CDC "net effect" convention: a delete wins over
-    *     an insert of the same id in one batch), minus currently
-    *     TOMBSTONED ids (dead until compaction folds them out), minus
-    *     ids already LIVE in the index ([[HnswRouted.presentIds]] —
-    *     a redelivered insert is an idempotent no-op where batch
-    *     ingest fail-fasts);
-    *  3. when tombstones reach `compactThreshold` of the index's rows,
-    *     [[HnswRouted.compact]] folds them out mid-stream (affected
-    *     cells only) — after which those ids are REUSABLE (unlike the
-    *     durable tier's permanent deleted_log: the routed tier's
-    *     compaction genuinely erases the id from its cell, so a later
-    *     insert of it is a fresh row, the documented lifecycle).
-    *
-    * Checkpoint cadence as [[attach]]; the tombstone set rides the
-    * saved image, so restart + replay reconstructs deletes too. */
+    * routed lifecycle primitives. Compacted-away ids are REUSABLE
+    * (unlike the durable tier's permanent deleted_log: the routed
+    * tier's compaction genuinely erases the id from its cell, so a
+    * later insert of it is a fresh row). Checkpoint cadence as
+    * [[attach]]; the tombstone set rides the saved image, so restart +
+    * replay reconstructs deletes too. */
   def attachCdc(stream: DataFrame, handle: Handle,
                 checkpoint: Option[(String, Int)] = None,
-                compactThreshold: Double = 0.2): StreamingQuery = {
-    var sinceSave = 0
-    var unsavedOps = 0
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val (next, ops) = cdcStep(handle.index, batch, compactThreshold)
-          handle.index = next
-          unsavedOps += ops
-        }
-        sinceSave += 1
-        checkpoint.foreach { case (path, every) =>
-          if (every > 0 && sinceSave >= every && unsavedOps > 0) {
-            HnswRouted.save(handle.index, path, keepVersions = 2)
-            rebase(handle, batch.sparkSession, path)
-            sinceSave = 0
-            unsavedOps = 0
-          }
-        }
-      }
-      .start()
-  }
+                compactThreshold: Double = 0.2): StreamingQuery =
+    RoutedStream.loop(stream, checkpoint) { batch =>
+      val (next, n) = cdcStep(handle.index, batch, compactThreshold)
+      handle.index = next
+      n
+    } { (spark, path) =>
+      handle.index = RoutedStream.rebase(ops)(handle.index, spark, path)
+    }
 
   /** Patch stacks deeper than this fold to one full image inside the
     * CDC loop ([[HnswRouted.foldOverlay]]) — before round 16 the stack
@@ -156,78 +88,12 @@ object StreamingRouted {
     * never dominates a serve. */
   val DefaultMaxOverlayDepth = 4
 
-  /** One CDC micro-batch against a routed index — the attachCdc body,
-    * extracted so derived tiers ([[StreamingRoutedPq]]) apply the
-    * IDENTICAL delete/insert/compact semantics to their float source.
-    * Returns (next index, number of mutating ops applied: 0 when the
-    * batch was a full no-op, e.g. all-redelivered inserts). After the
-    * batch's ops, an overlay stack at [[DefaultMaxOverlayDepth]] or
-    * deeper folds to one full image (results identical — spec-pinned;
-    * the threshold-compaction pattern applied to patch depth). */
+  /** One CDC micro-batch against a routed index ([[RoutedStream.cdcStep]]
+    * on the float tier) — also the float-source step of
+    * [[StreamingRoutedPq.attachCdc]]. Returns (next index, mutating ops
+    * applied). */
   private[streaming] def cdcStep(index0: RoutedIndex, batch: DataFrame,
                                  compactThreshold: Double,
-                                 maxOverlayDepth: Int = DefaultMaxOverlayDepth): (RoutedIndex, Int) = {
-    var index = index0
-    var ops = 0
-    val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val dels = b.filter(col("op") === "delete")
-        .select(col("id").cast("long").as("id")).dropDuplicates("id")
-      val delIds = dels.collect().map(_.getLong(0))
-      java.util.Arrays.sort(delIds)
-      if (delIds.nonEmpty) {
-        index = HnswRouted.delete(index, dels)
-        ops += 1
-      }
-      val insAll = b.filter(col("op") =!= "delete")
-        .select(col("id").cast("long").as("id"), col("vec"))
-        .dropDuplicates("id")
-      val insIds = insAll.select(col("id")).collect().map(_.getLong(0))
-      java.util.Arrays.sort(insIds)
-      val dead = index.tombstones
-      val live = HnswRouted.presentIds(index, insIds)
-      val dropId: Long => Boolean = id =>
-        java.util.Arrays.binarySearch(delIds, id) >= 0 ||
-          java.util.Arrays.binarySearch(dead, id) >= 0 ||
-          java.util.Arrays.binarySearch(live, id) >= 0
-      val keep = insIds.filterNot(dropId)
-      if (keep.nonEmpty) {
-        // filter DataFrame-side by the kept id set (batch-sized)
-        val keepDf = insAll.sparkSession.createDataset(keep.toSeq)(
-          org.apache.spark.sql.Encoders.scalaLong).toDF("id")
-        index = HnswRouted.ingest(index,
-          insAll.join(org.apache.spark.sql.functions.broadcast(keepDf), Seq("id")))
-        ops += 1
-      }
-      // threshold compaction: tombstones vs total graph rows (one
-      // nCells-row stats collect, only on batches that deleted)
-      if (delIds.nonEmpty && compactThreshold > 0) {
-        val total = math.max(1L,
-          HnswRouted.cellStats(index).map(_._2).sum)
-        if (index.tombstones.length >= compactThreshold * total) {
-          index = HnswRouted.compact(index)
-          ops += 1
-        }
-      }
-      // overlay-depth fold (see DefaultMaxOverlayDepth): compact above
-      // already materializes a full image when it fires, so this only
-      // triggers on streams whose handle accumulated patches without
-      // crossing the compaction threshold
-      var reshaped = false
-      if (maxOverlayDepth > 0 && index.overlay.length >= maxOverlayDepth) {
-        index = HnswRouted.foldOverlay(index)
-        ops += 1
-        reshaped = true
-      }
-      // a fold leaves a fresh image whose first serve pays the cold
-      // tax (6x on the warm-up rung): covering-probe it off the
-      // serving path (ledger-tracked as one-time, spec-pinned)
-      if (reshaped) {
-        graft.BuildLedger.timed("routed_warm_probe")(
-          HnswRouted.warmProbe(index))
-        ()
-      }
-      (index, ops)
-    } finally { b.unpersist(); () }
-  }
+                                 maxOverlayDepth: Int = DefaultMaxOverlayDepth): (RoutedIndex, Int) =
+    RoutedStream.cdcStep(ops)(index0, batch, compactThreshold, maxOverlayDepth)
 }

@@ -1,11 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.hnsw.HnswRoutedCodes
-import graft.hnsw.HnswRoutedCodes.RoutedCodeIndex
+import graft.hnsw.HnswRoutedCodes.{CodeCellShard, RoutedCodeIndex}
 
 /** Structured-Streaming ingest + CDC for the routed-CODES serving tier
   * — [[StreamingRouted]]'s contract on the u64-Hamming representation
@@ -24,132 +23,53 @@ object StreamingRoutedCodes {
       graft.hnsw.RoutedOps.cellStats(index.shards)(_.codes.size)
   }
 
+  private val ops = RoutedStreamOps[CodeCellShard, RoutedCodeIndex](
+    tier = HnswRoutedCodes.CodeTier,
+    payload = "code",
+    presentIds = HnswRoutedCodes.presentIds,
+    ingest = (i, df) => HnswRoutedCodes.ingest(i, df),
+    compact = i => HnswRoutedCodes.compact(i),
+    foldOverlay = i => HnswRoutedCodes.foldOverlay(i),
+    warmProbe = i => HnswRoutedCodes.warmProbe(i),
+    warmLabel = "routed_codes_warm_probe",
+    warmAfterCompact = false,
+    save = (i, path) => HnswRoutedCodes.save(i, path, keepVersions = 2),
+    attach = (spark, path) => HnswRoutedCodes.attach(spark, path),
+    unpersist = _.unpersist())
+
   /** Wire `stream` (id: long, code: long) into the handle via
     * foreachBatch — insert-only ([[StreamingRouted.attach]]'s shape:
     * empty batches skip the ingest but advance the checkpoint
     * cadence). */
   def attach(stream: DataFrame, handle: Handle,
-             checkpoint: Option[(String, Int)] = None): StreamingQuery = {
-    var sinceSave = 0
-    var unsavedIngests = 0
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          handle.index = HnswRoutedCodes.ingest(handle.index, batch)
-          unsavedIngests += 1
-        }
-        sinceSave += 1
-        checkpoint.foreach { case (path, every) =>
-          if (every > 0 && sinceSave >= every && unsavedIngests > 0) {
-            HnswRoutedCodes.save(handle.index, path, keepVersions = 2)
-            rebase(handle, batch.sparkSession, path)
-            sinceSave = 0
-            unsavedIngests = 0
-          }
-        }
-      }
-      .start()
-  }
-
-  /** Rebase-after-save (the [[StreamingRouted]] discipline, codes
-    * tier): `keepVersions = 2` retains the version a live attached
-    * handle's lineage still reads across THIS save; the rebase moves
-    * the handle onto the newest version before the next save reclaims
-    * it, and truncates the ingest-cogroup lineage chain. */
-  private def rebase(handle: Handle,
-                     spark: org.apache.spark.sql.SparkSession,
-                     path: String): Unit = {
-    val prior = handle.index
-    handle.index = HnswRoutedCodes.attach(spark, path)
-    prior.unpersist()
-    // probe the cold attached image off the serving path (the
-    // StreamingRouted rebase discipline; ledger-tracked as one-time)
-    graft.BuildLedger.timed("routed_codes_warm_probe")(
-      HnswRoutedCodes.warmProbe(handle.index))
-    ()
-  }
+             checkpoint: Option[(String, Int)] = None): StreamingQuery =
+    RoutedStream.loop(stream, checkpoint) { batch =>
+      handle.index = HnswRoutedCodes.ingest(handle.index, batch)
+      1
+    } { (spark, path) =>
+      handle.index = RoutedStream.rebase(ops)(handle.index, spark, path)
+    }
 
   /** CDC micro-batches `(id, code, op)` with op `"insert"`/`"upsert"`
     * or `"delete"` — [[StreamingRouted.attachCdc]]'s semantics on the
-    * code representation: deletes fold into the tombstone set first
-    * (net-effect convention), inserts drop same-batch deletes,
-    * tombstoned ids (dead until compaction), and already-live ids
-    * (idempotent redelivery); compaction triggers when tombstones
-    * reach `compactThreshold` of the index's rows and frees the ids
-    * for genuine reuse. */
+    * code representation ([[RoutedStream.cdcStep]]): deletes fold into
+    * the tombstone set first (net-effect convention), inserts drop
+    * same-batch deletes, tombstoned ids (dead until compaction), and
+    * already-live ids (idempotent redelivery); compaction triggers when
+    * tombstones reach `compactThreshold` of the index's rows and frees
+    * the ids for genuine reuse; overlay stacks fold at
+    * `maxOverlayDepth` (<= 0 disables). */
   def attachCdc(stream: DataFrame, handle: Handle,
                 checkpoint: Option[(String, Int)] = None,
                 compactThreshold: Double = 0.2,
                 maxOverlayDepth: Int =
-                  StreamingRouted.DefaultMaxOverlayDepth): StreamingQuery = {
-    var sinceSave = 0
-    var unsavedOps = 0
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val dels = b.filter(col("op") === "delete")
-              .select(col("id").cast("long").as("id")).dropDuplicates("id")
-            val delIds = dels.collect().map(_.getLong(0))
-            java.util.Arrays.sort(delIds)
-            if (delIds.nonEmpty) {
-              handle.index = HnswRoutedCodes.delete(handle.index, dels)
-              unsavedOps += 1
-            }
-            val insAll = b.filter(col("op") =!= "delete")
-              .select(col("id").cast("long").as("id"), col("code"))
-              .dropDuplicates("id")
-            val insIds = insAll.select(col("id")).collect().map(_.getLong(0))
-            java.util.Arrays.sort(insIds)
-            val dead = handle.index.tombstones
-            val live = HnswRoutedCodes.presentIds(handle.index, insIds)
-            val dropId: Long => Boolean = id =>
-              java.util.Arrays.binarySearch(delIds, id) >= 0 ||
-                java.util.Arrays.binarySearch(dead, id) >= 0 ||
-                java.util.Arrays.binarySearch(live, id) >= 0
-            val keep = insIds.filterNot(dropId)
-            if (keep.nonEmpty) {
-              val keepDf = insAll.sparkSession.createDataset(keep.toSeq)(
-                org.apache.spark.sql.Encoders.scalaLong).toDF("id")
-              handle.index = HnswRoutedCodes.ingest(handle.index,
-                insAll.join(broadcast(keepDf), Seq("id")))
-              unsavedOps += 1
-            }
-            if (delIds.nonEmpty && compactThreshold > 0) {
-              val total = math.max(1L, handle.cellStats.map(_._2).sum)
-              if (handle.index.tombstones.length >= compactThreshold * total) {
-                handle.index = HnswRoutedCodes.compact(handle.index)
-                unsavedOps += 1
-              }
-            }
-            // overlay-depth fold (the StreamingRouted.cdcStep cadence):
-            // bounds patch stacks a pre-patched handle brought in;
-            // <= 0 disables, matching the float tier's contract
-            if (maxOverlayDepth > 0 &&
-                handle.index.overlay.length >= maxOverlayDepth) {
-              handle.index = HnswRoutedCodes.foldOverlay(handle.index)
-              unsavedOps += 1
-              // covering-probe the fresh folded image off the serving
-              // path (the post-fold cold tax; ledger-tracked)
-              graft.BuildLedger.timed("routed_codes_warm_probe")(
-                HnswRoutedCodes.warmProbe(handle.index))
-              ()
-            }
-          } finally { b.unpersist(); () }
-        }
-        sinceSave += 1
-        checkpoint.foreach { case (path, every) =>
-          if (every > 0 && sinceSave >= every && unsavedOps > 0) {
-            HnswRoutedCodes.save(handle.index, path, keepVersions = 2)
-            rebase(handle, batch.sparkSession, path)
-            sinceSave = 0
-            unsavedOps = 0
-          }
-        }
-      }
-      .start()
-  }
+                  StreamingRouted.DefaultMaxOverlayDepth): StreamingQuery =
+    RoutedStream.loop(stream, checkpoint) { batch =>
+      val (next, n) = RoutedStream.cdcStep(ops)(handle.index, batch,
+        compactThreshold, maxOverlayDepth)
+      handle.index = next
+      n
+    } { (spark, path) =>
+      handle.index = RoutedStream.rebase(ops)(handle.index, spark, path)
+    }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.hnsw.{HnswRouted, HnswRoutedPq}
 import graft.hnsw.HnswRouted.RoutedIndex
-import graft.hnsw.HnswRoutedPq.RoutedPqIndex
+import graft.hnsw.HnswRoutedPq.{PqCellShard, RoutedPqIndex}
 
 /** CDC streaming for the routed+PQ serving tier: the PQ index is
   * DERIVED state (per-cell ADC codes over the float tier's cell
@@ -43,10 +43,33 @@ object StreamingRoutedPq {
     * attached-image posture). Serving threads read `pq` volatile. */
   final class SoloHandle(@volatile var pq: RoutedPqIndex)
 
+  /** The solo lifecycle's binding: [[HnswRoutedPq.ingest]] releases the
+    * prior image, and the threshold fold is [[HnswRoutedPq.compactSolo]]
+    * over `vectors` (`floatExact` false takes the buildSolo-kernel
+    * rebuild — the serving-cadence choice, BASELINE round-18: solo
+    * build-serve geometry at 0.94x plain, 7x cheaper rebuild; default
+    * true preserves the float-exact graph contract). The saved image is
+    * the PQ image itself. */
+  private def soloOps(vectors: DataFrame, floatExact: Boolean) =
+    RoutedStreamOps[PqCellShard, RoutedPqIndex](
+      tier = HnswRoutedPq.PqTier,
+      payload = "vec",
+      presentIds = HnswRoutedPq.presentIds,
+      ingest = (i, df) => HnswRoutedPq.ingest(i, df, unpersistPrior = true),
+      compact = i => HnswRoutedPq.compactSolo(i, vectors,
+        unpersistPrior = true, floatExact = floatExact),
+      foldOverlay = i => HnswRoutedPq.foldOverlay(i),
+      warmProbe = i => HnswRoutedPq.warmProbe(i),
+      warmLabel = "routed_pq_warm_probe",
+      warmAfterCompact = true,
+      save = (i, path) => HnswRoutedPq.save(i, path, keepVersions = 2),
+      attach = (spark, path) => HnswRoutedPq.attach(spark, path),
+      unpersist = _.unpersist())
+
   /** SOLO CDC — the float-source-free streaming loop for an attached
     * PQ tier: `(id, vec, op)` micro-batches mutate the compressed
-    * index DIRECTLY through its solo lifecycle. Semantics mirror
-    * [[StreamingRouted.cdcStep]] exactly (delete-wins nets in-batch,
+    * index DIRECTLY through its solo lifecycle. Semantics are
+    * [[RoutedStream.cdcStep]]'s exactly (delete-wins nets in-batch,
     * tombstone + redelivery + already-live insert filters — the
     * lenient CDC posture where batch [[HnswRoutedPq.ingest]]
     * fail-fasts), with [[HnswRoutedPq.compactSolo]] as the threshold
@@ -59,7 +82,11 @@ object StreamingRoutedPq {
     * Durability: the checkpoint persists the PQ image itself
     * ([[HnswRoutedPq.save]] — codebook, codes, graphs, fingerprints,
     * tombstones); restart = [[HnswRoutedPq.attach]] + source replay.
-    * No float image exists at any point in the loop. */
+    * No float image exists at any point in the loop. In THIS loop
+    * attach is the sole serving source, so the live handle's lineage
+    * reads a version dir by construction — the rebase-after-save
+    * ([[RoutedStream.rebase]]) is what keeps the next save's reclaim
+    * from deleting the files that lineage recomputes from. */
   def attachCdcSolo(stream: DataFrame, handle: SoloHandle,
                     vectors: DataFrame,
                     checkpoint: Option[(String, Int)] = None,
@@ -67,181 +94,51 @@ object StreamingRoutedPq {
                     maxOverlayDepth: Int =
                       StreamingRouted.DefaultMaxOverlayDepth,
                     floatExact: Boolean = true): StreamingQuery = {
-    var sinceSave = 0
-    var unsavedOps = 0
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val (next, ops) = cdcStepSolo(handle.pq, batch, vectors,
-            compactThreshold, maxOverlayDepth, floatExact)
-          handle.pq = next
-          unsavedOps += ops
-        }
-        sinceSave += 1
-        checkpoint.foreach { case (path, every) =>
-          if (every > 0 && sinceSave >= every && unsavedOps > 0) {
-            // keepVersions = 2 + rebase-after-save: in THIS loop attach
-            // is the sole serving source (the handle restores from this
-            // very path on restart), so the live handle's RDD lineage
-            // reads a version dir by construction — the old commit
-            // behavior (reclaim everything but the newest version)
-            // deleted the files that lineage recomputes from. The prior
-            // version survives this save; the rebase moves the handle
-            // (and all future lineage) onto the newest version before
-            // the NEXT save reclaims the prior one.
-            HnswRoutedPq.save(handle.pq, path, keepVersions = 2)
-            val prior = handle.pq
-            handle.pq = HnswRoutedPq.attach(batch.sparkSession, path)
-            prior.unpersist()
-            // probe the cold attached image off the serving path (the
-            // StreamingRouted rebase discipline; ledger-tracked)
-            graft.BuildLedger.timed("routed_pq_warm_probe")(
-              HnswRoutedPq.warmProbe(handle.pq))
-            sinceSave = 0
-            unsavedOps = 0
-          }
-        }
-      }
-      .start()
-  }
-
-  /** One solo CDC micro-batch — [[StreamingRouted.cdcStep]]'s
-    * semantics on the PQ tier's own lifecycle. Returns (next index,
-    * mutating ops applied). */
-  /** `floatExact` reaches the threshold fold's cell rebuilds
-    * ([[HnswRoutedPq.compactSolo]]): false takes the buildSolo-kernel
-    * rebuild — the serving-cadence choice (BASELINE round-18: solo
-    * build-serve geometry at 0.94x plain, 7x cheaper rebuild);
-    * default true preserves the float-exact graph contract. */
-  private[streaming] def cdcStepSolo(index0: RoutedPqIndex,
-                                     batch: DataFrame, vectors: DataFrame,
-                                     compactThreshold: Double,
-                                     maxOverlayDepth: Int =
-                                       StreamingRouted.DefaultMaxOverlayDepth,
-                                     floatExact: Boolean = true): (RoutedPqIndex, Int) = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    var index = index0
-    var ops = 0
-    val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val dels = b.filter(col("op") === "delete")
-        .select(col("id").cast("long").as("id")).dropDuplicates("id")
-      val delIds = dels.collect().map(_.getLong(0))
-      java.util.Arrays.sort(delIds)
-      if (delIds.nonEmpty) {
-        index = HnswRoutedPq.delete(index, dels)
-        ops += 1
-      }
-      val insAll = b.filter(col("op") =!= "delete")
-        .select(col("id").cast("long").as("id"), col("vec"))
-        .dropDuplicates("id")
-      val insIds = insAll.select(col("id")).collect().map(_.getLong(0))
-      java.util.Arrays.sort(insIds)
-      val dead = index.tombstones
-      val live = HnswRoutedPq.presentIds(index, insIds)
-      val dropId: Long => Boolean = id =>
-        java.util.Arrays.binarySearch(delIds, id) >= 0 ||
-          java.util.Arrays.binarySearch(dead, id) >= 0 ||
-          java.util.Arrays.binarySearch(live, id) >= 0
-      val keep = insIds.filterNot(dropId)
-      if (keep.nonEmpty) {
-        val keepDf = insAll.sparkSession.createDataset(keep.toSeq)(
-          org.apache.spark.sql.Encoders.scalaLong).toDF("id")
-        index = HnswRoutedPq.ingest(index,
-          insAll.join(broadcast(keepDf), Seq("id")),
-          unpersistPrior = true)
-        ops += 1
-      }
-      if (delIds.nonEmpty && compactThreshold > 0) {
-        val total = math.max(1L,
-          HnswRoutedPq.cellStats(index).map(_._2).sum)
-        if (index.tombstones.length >= compactThreshold * total) {
-          index = HnswRoutedPq.compactSolo(index, vectors,
-            unpersistPrior = true, floatExact = floatExact)
-          ops += 1
-          // covering-probe the fresh compacted image off the serving
-          // path (the post-fold cold tax; ledger-tracked)
-          graft.BuildLedger.timed("routed_pq_warm_probe")(
-            HnswRoutedPq.warmProbe(index))
-          ()
-        }
-      }
-      // overlay-depth fold (the StreamingRouted.cdcStep cadence):
-      // bounds patch stacks a pre-patched handle brought in (e.g. from
-      // remediateMergedCellsSolo's default); <= 0 disables, matching
-      // the float tier's maxOverlayDepth contract
-      if (maxOverlayDepth > 0 && index.overlay.length >= maxOverlayDepth) {
-        index = HnswRoutedPq.foldOverlay(index)
-        ops += 1
-        graft.BuildLedger.timed("routed_pq_warm_probe")(
-          HnswRoutedPq.warmProbe(index))
-        ()
-      }
-      (index, ops)
-    } finally { b.unpersist(); () }
+    val ops = soloOps(vectors, floatExact)
+    RoutedStream.loop(stream, checkpoint) { batch =>
+      val (next, n) = RoutedStream.cdcStep(ops)(handle.pq, batch,
+        compactThreshold, maxOverlayDepth)
+      handle.pq = next
+      n
+    } { (spark, path) =>
+      handle.pq = RoutedStream.rebase(ops)(handle.pq, spark, path)
+    }
   }
 
   /** Wire a CDC stream — `(id, vec, op)` rows, op `"insert"`/`"upsert"`
     * or `"delete"` — into the two-tier handle via foreachBatch. */
   def attachCdc(stream: DataFrame, handle: Handle,
                 checkpoint: Option[(String, Int)] = None,
-                compactThreshold: Double = 0.2): StreamingQuery = {
-    var sinceSave = 0
-    var unsavedOps = 0
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val before = handle.float
-          val (next, ops) = StreamingRouted.cdcStep(before, batch,
-            compactThreshold)
-          handle.float = next
-          unsavedOps += ops
-          if (ops > 0) {
-            if (next.shards eq before.shards) {
-              // tombstone-only batch: no cell changed — adopt the set,
-              // keep every code block (zero jobs)
-              handle.pq = handle.pq.copy(tombstones = next.tombstones)
-            } else {
-              handle.pq = HnswRoutedPq.rederive(handle.pq, next,
-                unpersistPrior = true)
-            }
-          }
-        }
-        sinceSave += 1
-        checkpoint.foreach { case (path, every) =>
-          if (every > 0 && sinceSave >= every && unsavedOps > 0) {
-            // the [[StreamingRouted]] rebase-after-save discipline on
-            // the two-tier handle: the float source rebases onto the
-            // just-written image (keepVersions = 2 retains the version
-            // a restart-attached float still reads across this save),
-            // and the PQ tier re-roots via fromRoutedWith — a full
-            // re-encode rather than the fingerprint-carry rederive, ON
-            // PURPOSE: the carry path's zipPartitions keeps the OLD pq
-            // shards (and through them the pre-rebase float chain) in
-            // the new handle's lineage, which is exactly the reclaimed-
-            // version recompute hazard this rebase exists to cut. One
-            // narrow encode pass per save cadence, O(index) like the
-            // save itself.
-            HnswRouted.save(handle.float, path, keepVersions = 2)
-            val priorF = handle.float
-            val priorPq = handle.pq
-            handle.float = HnswRouted.attach(batch.sparkSession, path)
-            handle.pq = HnswRoutedPq.fromRoutedWith(handle.float,
-              priorPq.codebook)
-            priorF.unpersist()
-            priorPq.unpersist()
-            // probe both re-rooted tiers off the serving path
-            graft.BuildLedger.timed("routed_warm_probe")(
-              HnswRouted.warmProbe(handle.float))
-            graft.BuildLedger.timed("routed_pq_warm_probe")(
-              HnswRoutedPq.warmProbe(handle.pq))
-            sinceSave = 0
-            unsavedOps = 0
-          }
-        }
+                compactThreshold: Double = 0.2): StreamingQuery =
+    RoutedStream.loop(stream, checkpoint) { batch =>
+      val before = handle.float
+      val (next, n) = StreamingRouted.cdcStep(before, batch, compactThreshold)
+      handle.float = next
+      if (n > 0) {
+        handle.pq =
+          // tombstone-only batch: no cell changed — adopt the set, keep
+          // every code block (zero jobs)
+          if (next.shards eq before.shards)
+            handle.pq.copy(tombstones = next.tombstones)
+          else HnswRoutedPq.rederive(handle.pq, next, unpersistPrior = true)
       }
-      .start()
-  }
+      n
+    } { (spark, path) =>
+      // the float source rebases onto the just-written image, and the
+      // PQ tier re-roots via fromRoutedWith — a full re-encode rather
+      // than the fingerprint-carry rederive, ON PURPOSE: the carry
+      // path's zipPartitions keeps the OLD pq shards (and through them
+      // the pre-rebase float chain) in the new handle's lineage, which
+      // is exactly the reclaimed-version recompute hazard this rebase
+      // exists to cut. One narrow encode pass per save cadence, O(index)
+      // like the save itself.
+      val priorPq = handle.pq
+      handle.float = RoutedStream.rebase(StreamingRouted.ops)(
+        handle.float, spark, path)
+      handle.pq = HnswRoutedPq.fromRoutedWith(handle.float, priorPq.codebook)
+      priorPq.unpersist()
+      graft.BuildLedger.timed("routed_pq_warm_probe")(
+        HnswRoutedPq.warmProbe(handle.pq))
+      ()
+    }
 }

@@ -3,8 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Scratch: time one catalog query end-to-end at an sf dir (default the
-  * durable-build query) with GRAFT_FRONTIER_DEBUG-friendly logging. Not
-  * library surface. */
+  * durable-build query). Not library surface. */
 object DurableProbe {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"

@@ -17,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * false-alarm — only NEW (or removed) sites trip it.
   *
   * Guard patterns the audit accepted: `limit(Max + 1)` collect-then-
-  * cutover (HnswRouted.searchImpl / searchFiltered), broadcast-side
+  * cutover (RoutedServe's driver-routed path / allowProbe), broadcast-side
   * sets bounded by the batch or the deletion set, nCells-bounded
   * stats/histograms, driver-side metadata (meta/anchors/centroids/
   * fingerprints tables), and spec/instrumentation-only paths. */
@@ -40,19 +40,29 @@ class CollectGuardSpec extends AnyFunSuite {
     // bounded), the per-tier attach tombstone/centroid reads once in
     // RoutedImage.readTombstones/readRouter (metadata tables), and the
     // searchFiltered allow-probe (limit(AllowCollectMax+1) collect-
-    // then-cutover) once in RoutedLifecycle.allowProbe. The file's 4 =
+    // then-cutover) once in RoutedLifecycle.allowProbe (since moved to
+    // RoutedServe — see the serving-core re-pin below). The file's 4 =
     // exactly those shared sites; the tier counts dropped by the
     // copies they shed (17->12, 15->11, 16->12).
-    "graft/hnsw/RoutedLifecycle.scala" -> 4,
-    "graft/hnsw/HnswRouted.scala" -> 12,
-    "graft/hnsw/HnswRoutedCodes.scala" -> 11,
-    "graft/hnsw/HnswRoutedPq.scala" -> 12,
+    // serving-core re-pin (sites MOVED or folded, none added): the
+    // three tiers' copies of the driver-routed limit(DriverRouteMax+1)
+    // query collect and of warmProbe's one-member-per-cell collect are
+    // now ONE each in RoutedServe, beside the allowProbe collect moved
+    // there from RoutedLifecycle (3); the three merged-cell audit
+    // collects (nCells-bounded rows) and remediate's flagged-cell
+    // collect are one each in RoutedLifecycle (4 - 1 + 2 = 5); each
+    // tier shed its 4 copies (12->8, 11->7, 12->8).
+    "graft/hnsw/RoutedLifecycle.scala" -> 5,
+    "graft/hnsw/RoutedServe.scala" -> 3,
+    "graft/hnsw/HnswRouted.scala" -> 8,
+    "graft/hnsw/HnswRoutedCodes.scala" -> 7,
+    "graft/hnsw/HnswRoutedPq.scala" -> 8,
     "graft/streaming/StreamingChunkDedup.scala" -> 1,
     "graft/streaming/StreamingDocDedup.scala" -> 3,
     "graft/streaming/StreamingIngest.scala" -> 2,
-    "graft/streaming/StreamingRouted.scala" -> 2,
-    "graft/streaming/StreamingRoutedCodes.scala" -> 2,
-    "graft/streaming/StreamingRoutedPq.scala" -> 2
+    // the three CDC steps' delete/insert batch-id collects (batch-
+    // bounded) are one copy in RoutedStream.cdcStep
+    "graft/streaming/RoutedStream.scala" -> 2
   )
 
   test("serving-surface collect() inventory matches the audited pin") {
