@@ -89,6 +89,13 @@ final class FurthestQueue private (
       Some(Neighbor(ds(n), dd(n)))
     }
 
+  /** [[popFurthest]] without the Option/Neighbor result — the beam
+    * eviction of every layer search; no-op when empty. */
+  def dropFurthest(): Unit = if (n > 0) n -= 1
+
+  /** Empty the queue, keeping its arrays (per-partition scratch reuse). */
+  def clear(): Unit = n = 0
+
   /** First k in ascending order (reference queue.rs:59-61). */
   def kNearest(k: Int): Seq[Neighbor] = {
     val m = math.min(k, n)
@@ -212,20 +219,33 @@ final class NearestQueue private (
     * distance, then pop its id. Requires nonEmpty. */
   def nearestDist: Double = dd(n - 1)
   def popNearestDst(): Long = { n -= 1; ds(n) }
-}
 
-object NearestQueue {
-  /** Reverse a FurthestQueue into visit order (reference queue.rs:123-127). */
-  def fromFurthestQueue(q: FurthestQueue): NearestQueue = {
+  /** Replace the contents with `q` reversed into visit order (reference
+    * queue.rs:123-127), reusing this queue's arrays when they fit. */
+  def loadFrom(q: FurthestQueue): Unit = {
     val m = q.size
-    val ds = new Array[Long](math.max(m, 1))
-    val dd = new Array[Double](math.max(m, 1))
+    if (m > ds.length) {
+      ds = new Array[Long](m)
+      dd = new Array[Double](m)
+    }
     var i = 0
     while (i < m) {
       ds(i) = q.dstAt(m - 1 - i)
       dd(i) = q.distAt(m - 1 - i)
       i += 1
     }
-    new NearestQueue(ds, dd, m)
+    n = m
+  }
+}
+
+object NearestQueue {
+  def empty: NearestQueue = new NearestQueue(new Array[Long](8), new Array[Double](8), 0)
+
+  /** Reverse a FurthestQueue into visit order (reference queue.rs:123-127). */
+  def fromFurthestQueue(q: FurthestQueue): NearestQueue = {
+    val c = new NearestQueue(new Array[Long](math.max(q.size, 1)),
+      new Array[Double](math.max(q.size, 1)), 0)
+    c.loadFrom(q)
+    c
   }
 }

@@ -11,6 +11,14 @@ import graft.store.{ArrayVectorStore, GraphSnapshot, InMemoryGraph, Metrics}
   * [[HnswDistributed.buildSharded]] (independent per-shard graphs + top-k
   * merge — the 100 TB path, where each shard holds only its partition's
   * vectors and graph).
+  *
+  * `frozen` says where the model came from: a build or a compaction
+  * (true), whose model never changes, or a streaming snapshot (false),
+  * replaced after every mutation. A frozen model serves through its
+  * [[ServingLayout]], built once per JVM on first use and never
+  * serialized; a snapshot serves through the generic [[HnswSearcher]]
+  * path, since a per-snapshot layout build costs more than one batch
+  * saves.
   */
 final case class HnswModel(
     params: HnswParams,
@@ -22,8 +30,15 @@ final case class HnswModel(
     // (the round-16 PQ-tier SIGSEGV — see LongVecMap's scaladoc); it is
     // also the no-boxed-lookup shape every distance eval wants
     vectors: LongVecMap
-) extends Serializable {
+)(val frozen: Boolean) extends Serializable {
   def size: Int = vectors.size
+
+  @transient lazy val layout: ServingLayout = ServingLayout.of(this)
+
+  /** A fresh per-partition searcher over this model (see [[ModelKernel]]). */
+  def kernel(): ModelKernel =
+    if (frozen) new LayoutKernel(layout, params, metricName)
+    else new StoreKernel(this)
 }
 
 /** Distributed HNSW build & search over DataFrames.
@@ -115,7 +130,7 @@ object HnswDistributed {
       store, searcher, graph, cfg.seedBatch, cfg.maxBatch,
       cfg.growthDenom, cfg.batchCeiling)
 
-    HnswModel(cfg.params, cfg.metric, graph.snapshot, vecMap)
+    HnswModel(cfg.params, cfg.metric, graph.snapshot, vecMap)(frozen = true)
   }
 
   /** The shared seed + micro-batched build loop over any broadcastable
@@ -237,17 +252,10 @@ object HnswDistributed {
       Encoders.scalaDouble, Encoders.scalaInt)
     queries.select(col("qid"), col("qvec")).as(pairEnc)
       .mapPartitions { it =>
-        val m = modelB.value
-        val metric = Metrics.byName(m.metricName)
-        val searcher = new HnswSearcher(m.params)
-        // one store per PARTITION, re-staging the -1 query slot per row
-        // (the HnswCodes pattern) — per-row construction is avoidable
-        // allocation on the serving hot path
-        val store = new ArrayVectorStore(metric, base = m.vectors)
+        val kernel = modelB.value.kernel()
         it.flatMap { case (qid, qvec) =>
-          val q = store.prepareQueryWithId(-1L, qvec)
-          val w = searcher.search(store, m.snapshot, q, k)
-          w.iterator.zipWithIndex.map { case (nb, i) => (qid, nb.dst, nb.dist, i + 1) }
+          kernel.search(qvec, k, 0).iterator.zipWithIndex
+            .map { case (nb, i) => (qid, nb.dst, nb.dist, i + 1) }
         }
       }(resEnc)
       .toDF("qid", "id", "dist", "rank")
@@ -303,28 +311,22 @@ object HnswDistributed {
     queries.select(col("qid"), col("qvec")).as(pairEnc)
       .mapPartitions { it =>
         val m = modelB.value
-        val metric = Metrics.byName(m.metricName)
-        val searcher = new HnswSearcher(m.params)
+        val kernel = m.kernel()
         val ids = idsB.value
         def eligible(id: Long): Boolean = {
           val in = java.util.Arrays.binarySearch(ids, id) >= 0
           if (negate) !in else in
         }
-        // one store per partition, -1 query slot re-staged per row
-        val store = new ArrayVectorStore(metric, base = m.vectors)
         it.flatMap { case (qid, qvec) =>
-          val q = store.prepareQueryWithId(-1L, qvec)
           val n = m.size
           var kp = math.max(4 * k, m.params.getEfSearch(0))
-          var out: List[(Long, Long, Double, Int)] = Nil
+          var hits: Iterator[Neighbor] = Iterator.empty
           var done = n == 0 || (!negate && ids.isEmpty)
           while (!done) {
-            val w = searcher.searchWithEf(store, m.snapshot, q, kp, kp)
-            val hits = w.iterator.filter(nb => eligible(nb.dst)).take(k).toList
-            if (hits.length >= k) {
-              out = hits.zipWithIndex.map { case (nb, i) =>
-                (qid, nb.dst, nb.dist, i + 1)
-              }
+            val w = kernel.search(qvec, kp, kp)
+            val found = w.iterator.filter(nb => eligible(nb.dst)).take(k).toList
+            if (found.length >= k) {
+              hits = found.iterator
               done = true
             } else if (kp >= n) {
               // the beam spanned the whole index and still came up short.
@@ -334,18 +336,11 @@ object HnswDistributed {
               // exact executor-local scan over the eligible ids:
               // O(|eligible|) distance evals, still no driver round-trip,
               // and the result provably matches the filtered oracle.
-              val eligibleIter =
-                if (negate) m.vectors.keysIterator.filter(eligible)
-                else ids.iterator.filter(m.vectors.contains)
-              val exact = eligibleIter
-                .map(id => (id, store.evalDistance(q, id))).toArray
-              out = exact.sortBy { case (id, d) => (d, id) }.take(k)
-                .zipWithIndex
-                .map { case ((id, d), i) => (qid, id, d, i + 1) }.toList
+              hits = kernel.exactTopK(qvec, k, eligible).iterator
               done = true
             } else kp = math.min(n.toLong, kp.toLong * 4L).toInt // long math: no Int wrap before the clamp
           }
-          out
+          hits.zipWithIndex.map { case (nb, i) => (qid, nb.dst, nb.dist, i + 1) }
         }
       }(resEnc)
       .toDF("qid", "id", "dist", "rank")
@@ -497,7 +492,7 @@ object HnswDistributed {
       }
     val snap = GraphFrames.fromLinksDF(compacted, entry)
     compacted.unpersist(blocking = false)
-    HnswModel(model.params, model.metricName, snap, survivors)
+    HnswModel(model.params, model.metricName, snap, survivors)(frozen = true)
   }
 
   /** Process-wide compacted-model memo (the modelCache pattern; the

@@ -101,7 +101,7 @@ final class HnswSearcher(val params: HnswParams) extends Serializable {
           // shapes never shrink mid-descent.
           if (w.size >= ef) {
             // W full: replace the furthest, or prune this path.
-            if (vectors.lessThan(eq, fq)) w.popFurthest()
+            if (vectors.lessThan(eq, fq)) w.dropFurthest()
             else admit = false
           }
           if (admit) {

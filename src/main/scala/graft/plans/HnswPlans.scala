@@ -11,8 +11,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.types._
 
 import graft.functions.CosineSimilarityF32
-import graft.hnsw.{HnswModel, HnswSearcher}
-import graft.store.{ArrayVectorStore, Metrics}
+import graft.hnsw.HnswModel
 
 /** Catalyst planner integration for the HNSW index — the (c) tier of the
   * custom-operator ladder: a logical node, a physical operator planned by
@@ -75,23 +74,16 @@ case class HnswKnnExec(output: Seq[Attribute], model: HnswModel, k: Int,
     val modelB = sparkContext.broadcast(model)
     val kLocal = k
     child.execute().mapPartitions { it =>
-      val m = modelB.value
-      val metric = Metrics.byName(m.metricName)
-      val searcher = new HnswSearcher(m.params)
+      val kernel = modelB.value.kernel()
       val proj = UnsafeProjection.create(
         Array[DataType](LongType, LongType, DoubleType, IntegerType))
       val row = new GenericInternalRow(4)
-      // one store per partition, -1 query slot re-staged per row (the
-      // searchBroadcast pattern); searchWithEf floors the layer-0 beam
-      // at k — plain search would silently truncate k > efSearch(0)
-      // results to the model's beam width
-      val store = new ArrayVectorStore(metric, base = m.vectors)
       it.flatMap { r =>
         val qid = r.getLong(qidOrd)
         val qvec = r.getArray(qvecOrd).toFloatArray()
-        store.prepareQueryWithId(-1L, qvec)
-        val w = searcher.searchWithEf(store, m.snapshot, -1L, kLocal, kLocal)
-        w.iterator.zipWithIndex.map { case (nb, i) =>
+        // the layer-0 beam floored at k: plain search would silently
+        // truncate k > efSearch(0) results to the model's beam width
+        kernel.search(qvec, kLocal, kLocal).iterator.zipWithIndex.map { case (nb, i) =>
           row.update(0, qid); row.update(1, nb.dst)
           row.update(2, nb.dist); row.update(3, i + 1)
           proj.apply(row).copy()
@@ -218,16 +210,10 @@ case class HnswTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     case _ => false
   }
 
-  private def driverSearch(model: HnswModel, qvec: Array[Float], k: Int): Array[Long] = {
-    val metric = Metrics.byName(model.metricName)
-    val searcher = new HnswSearcher(model.params)
-    val store = new ArrayVectorStore(metric, base = model.vectors)
-    store.prepareQueryWithId(-1L, qvec)
-    // searchWithEf floors the layer-0 beam at k — an over-fetch of F*k
-    // candidates would otherwise silently truncate to the model's
-    // configured efSearch
-    searcher.searchWithEf(store, model.snapshot, -1L, k, k).toArray.map(_.dst)
-  }
+  // the layer-0 beam floored at k — an over-fetch of F*k candidates
+  // would otherwise silently truncate to the model's configured efSearch
+  private def driverSearch(model: HnswModel, qvec: Array[Float], k: Int): Array[Long] =
+    model.kernel().search(qvec, k, k).toArray.map(_.dst)
 }
 
 object HnswTopKRewrite {

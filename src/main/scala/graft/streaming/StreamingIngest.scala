@@ -133,7 +133,7 @@ object StreamingIngest {
     def model: HnswModel = synchronized {
       if (snapAt != mutations) {
         snapCache = HnswModel(cfg.params, cfg.metric, inner.snapshot,
-          graft.hnsw.LongVecMap.from(vecs.iterator, vecs.size))
+          graft.hnsw.LongVecMap.from(vecs.iterator, vecs.size))(frozen = false)
         snapAt = mutations
       }
       snapCache

@@ -37,6 +37,28 @@ class FurthestQueueSpec extends AnyFunSuite {
     }
   }
 
+  test("dropFurthest leaves the queue popFurthest leaves; loadFrom reuses a NearestQueue") {
+    val rng = new Random(6)
+    val nq = NearestQueue.empty
+    for (_ <- 1 to 200) {
+      val es = randomEntries(rng, rng.nextInt(40))
+      val a = FurthestQueue.empty
+      es.foreach { case (id, d) => a.insert(id, d) }
+      val b = a.copy()
+      a.popFurthest()
+      b.dropFurthest()
+      assert(a == b)
+      // a reused frontier pops what a fresh one pops
+      nq.loadFrom(b)
+      val fresh = NearestQueue.fromFurthestQueue(b)
+      while (fresh.nonEmpty) {
+        assert(nq.nearestDist == fresh.nearestDist)
+        assert(nq.popNearestDst() == fresh.popNearestDst())
+      }
+      assert(!nq.nonEmpty)
+    }
+  }
+
   test("trimToKNearest keeps the k best; kNearest is a prefix") {
     val rng = new Random(3)
     for (_ <- 1 to 200) {

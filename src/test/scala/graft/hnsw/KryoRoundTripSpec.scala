@@ -146,7 +146,8 @@ class KryoRoundTripSpec extends SparkSpec {
     rows.foreach { case (id, v) =>
       assert(rt.vectors(id).toSeq == v.toSeq, s"model vector mismatch at $id")
     }
-    // serve through the round-tripped model: same kNN as the original
+    // serve through the round-tripped model: same kNN as the original,
+    // on the generic engine and through the rebuilt serving layout
     val metric = Metrics.byName(cfg.metric)
     def knn(m: HnswModel, qvec: Array[Float]): Seq[(Long, Double)] = {
       val searcher = new HnswSearcher(m.params)
@@ -155,10 +156,24 @@ class KryoRoundTripSpec extends SparkSpec {
       searcher.search(store, m.snapshot, q, 10).iterator
         .map(nb => (nb.dst, nb.dist)).toSeq
     }
+    assert(rt.frozen)
+    val (rtKernel, kernel) = (rt.kernel(), model.kernel())
+    assert(rtKernel.isInstanceOf[LayoutKernel])
     (0 until 10).foreach { qi =>
       val qvec = vecFromHash(qi + 70000L, 13L, 16)
       assert(knn(rt, qvec) == knn(model, qvec), s"serve diverged for query $qi")
+      val served = rtKernel.search(qvec, 10, 0).iterator.map(nb => (nb.dst, nb.dist)).toSeq
+      assert(served == kernel.search(qvec, 10, 0).iterator.map(nb => (nb.dst, nb.dist)).toSeq)
+      assert(served == knn(model, qvec), s"layout serve diverged for query $qi")
     }
+    // the layout never rides in the broadcast payload: a model serializes
+    // to the same bytes whether or not its layout was built first
+    val ser = new org.apache.spark.serializer.KryoSerializer(
+      spark.sparkContext.getConf).newInstance()
+    val fresh = HnswDistributed.buildFromArray(spark, rows.toArray, cfg)
+    val before = ser.serialize(fresh)
+    assert(fresh.layout.size == rows.size)
+    assert(ser.serialize(fresh) == before)
     val sm = HnswDistributed.ShardModel(rt.vectors, rt.snapshot)
     val smRt = kryoRoundTrip(sm)
     assert(smRt.vectors.size == sm.vectors.size &&

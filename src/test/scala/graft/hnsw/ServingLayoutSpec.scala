@@ -1,0 +1,155 @@
+package graft.hnsw
+
+import org.apache.spark.sql.DataFrame
+
+import graft.SparkSpec
+import graft.hnsw.HnswDistributed.BuildConfig
+import graft.plans.{HnswSql, HnswStrategy}
+import graft.store.{ArrayVectorStore, Metrics}
+
+/** The layout kernel against the engine it replaces on frozen models:
+  * every query's `(id, dist)` list must equal [[HnswSearcher.searchWithEf]]
+  * over an [[ArrayVectorStore]] and the model's snapshot, distances bit for
+  * bit. The data holds the cases where an ordinal layout can go wrong:
+  * exact duplicate vectors (ties must come back in id order), zero
+  * vectors, vectors shorter than the rest, and non-contiguous negative
+  * ids. */
+class ServingLayoutSpec extends SparkSpec {
+  import spark.implicits._
+
+  private val dim = 12
+
+  private def vecFromHash(i: Long, seed: Long, d: Int = dim): Array[Float] =
+    Array.tabulate(d)(j =>
+      (HnswSearcher.uniformFromHash(i * 31 + j, seed) * 2.0 - 1.0).toFloat)
+
+  /** 600 rows under ids 7i - 2000 plus id -1: every 9th row copies an
+    * earlier row's vector, rows 5, 50 and 500 are zero vectors, rows 7
+    * and 70 are three floats short. */
+  private val rows: Array[(Long, Array[Float])] = {
+    val base = (0 until 600).map { i =>
+      val v =
+        if (i == 5 || i == 50 || i == 500) new Array[Float](dim)
+        else if (i == 7 || i == 70) vecFromHash(i.toLong, 3L, dim - 3)
+        else if (i % 9 == 8) vecFromHash((i / 3).toLong, 3L)
+        else vecFromHash(i.toLong, 3L)
+      (i * 7L - 2000L, v)
+    }
+    (base :+ ((-1L, vecFromHash(9999L, 3L)))).toArray
+  }
+
+  /** Random queries, the vectors of rows 2 and 11 (each stored twice:
+    * distance ties at the head of the list), a zero query (cosine ties
+    * everywhere) and queries shorter and longer than the stored vectors. */
+  private val queries: Seq[Array[Float]] =
+    (0 until 30).map(q => vecFromHash(q + 50000L, 5L)) ++
+      Seq(vecFromHash(2L, 3L), vecFromHash(11L, 3L), new Array[Float](dim),
+        vecFromHash(60000L, 5L, dim - 4), vecFromHash(60001L, 5L, dim + 2))
+
+  private val params = HnswParams.standard(efConstruction = 32, efSearch = 16, m = 6)
+
+  private def build(metric: String, data: Array[(Long, Array[Float])] = rows): HnswModel =
+    HnswDistributed.buildFromArray(spark, data,
+      BuildConfig(params, metric = metric, seed = 7L, seedBatch = 64, maxBatch = 128))
+
+  private lazy val models: Map[String, HnswModel] =
+    Seq("cosine", "l2", "dot").map(m => m -> build(m)).toMap
+
+  private def bits(hits: FurthestQueue): List[(Long, Long)] =
+    hits.iterator.map(nb => (nb.dst, java.lang.Double.doubleToRawLongBits(nb.dist))).toList
+
+  /** The engine over the model's id-keyed store, the query staged under
+    * an id the data does not use. */
+  private def reference(m: HnswModel, qvec: Array[Float], k: Int, ef0: Int): List[(Long, Long)] = {
+    val store = new ArrayVectorStore(Metrics.byName(m.metricName), base = m.vectors)
+    val q = store.prepareQueryWithId(Long.MinValue, qvec)
+    bits(new HnswSearcher(m.params).searchWithEf(store, m.snapshot, q, k, ef0))
+  }
+
+  test("layout kernel equals HnswSearcher.searchWithEf under cosine, l2 and dot") {
+    var tiedRuns = 0
+    models.foreach { case (metric, m) =>
+      assert(m.frozen)
+      val kernel = m.kernel()
+      assert(kernel.isInstanceOf[LayoutKernel])
+      assert(m.snapshot.layers.length > 1, "the data must give a multi-layer graph")
+      // (k, ef0): plain search, k past efSearch(0) with and without the
+      // beam floor, and a single hit
+      for (qvec <- queries; (k, ef0) <- Seq((10, 0), (40, 0), (40, 40), (1, 0))) {
+        val got = bits(kernel.search(qvec, k, ef0))
+        assert(got == reference(m, qvec, k, ef0), s"$metric k=$k ef0=$ef0")
+        if (got.sliding(2).exists { case Seq(a, b) => a._2 == b._2; case _ => false })
+          tiedRuns += 1
+      }
+      assert(bits(kernel.search(queries.head, 40, 0)).length == params.getEfSearch(0))
+    }
+    assert(tiedRuns > 0, "no result list held a distance tie")
+  }
+
+  test("exactTopK equals a brute-force (dist, id) ranking of the kept ids") {
+    models.foreach { case (metric, m) =>
+      val dist = Metrics.byName(metric)
+      val kernel = m.kernel()
+      val keeps: Seq[Long => Boolean] = Seq(_ => true, _ % 3 == 0, id => id < -1500L)
+      for (qvec <- queries; keep <- keeps; k <- Seq(0, 5, 700)) {
+        val truth = rows.filter(r => keep(r._1))
+          .map { case (id, v) => (id, dist(qvec, v)) }
+          .sortBy { case (id, d) => (d, id) }.take(k)
+          .map { case (id, d) => (id, java.lang.Double.doubleToRawLongBits(d)) }.toList
+        assert(bits(kernel.exactTopK(qvec, k, keep)) == truth, s"$metric k=$k")
+      }
+    }
+  }
+
+  test("empty and single-vector models") {
+    val empty = build("cosine", Array.empty)
+    assert(empty.kernel().search(queries.head, 10, 0).isEmpty)
+    assert(empty.kernel().exactTopK(queries.head, 10, _ => true).isEmpty)
+    val one = build("l2", rows.take(1))
+    for (qvec <- queries)
+      assert(bits(one.kernel().search(qvec, 10, 0)) == reference(one, qvec, 10, 0))
+  }
+
+  test("only built and compacted models are frozen; streaming snapshots serve generically") {
+    val m = models("cosine")
+    val deleted = Seq(rows(3)._1, rows(4)._1).toDF("id")
+    val compacted = HnswDistributed.compactModel(m, deleted)
+    assert(compacted.frozen && compacted.kernel().isInstanceOf[LayoutKernel])
+    val index = new graft.streaming.StreamingIngest.IncrementalIndex(
+      BuildConfig(params, metric = "cosine", seed = 7L))
+    index.insertRows(rows.take(50))
+    assert(!index.model.frozen && index.model.kernel().isInstanceOf[StoreKernel])
+    // the layout of the compacted model serves the survivors only
+    val kept = compacted.layout.ids.toSet
+    assert(kept == rows.map(_._1).toSet -- Set(rows(3)._1, rows(4)._1))
+  }
+
+  test("frozen serve sites return the generic path's rows, down to the exact-scan fallback") {
+    // the generic path stages its query under id -1, so this data leaves it out
+    val data = rows.filter(_._1 != -1L)
+    val frozen = build("cosine", data)
+    val generic = frozen.copy()(frozen = false)
+    val qDf = queries.zipWithIndex
+      .map { case (v, i) => (i.toLong, v) }.toDF("qid", "qvec")
+    def rowsOf(df: DataFrame): Set[(Long, Long, Long, Int)] =
+      df.select("qid", "id", "dist", "rank").collect().map(r =>
+        (r.getLong(0), r.getLong(1),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getInt(3))).toSet
+    def same(f: HnswModel => DataFrame): Unit = {
+      val got = rowsOf(f(frozen))
+      assert(got.nonEmpty && got == rowsOf(f(generic)))
+    }
+    val few = data.take(40).map(_._1).filter(_ % 2 == 0).take(3).toSeq.toDF("id")
+    val allButFew = data.drop(3).map(_._1).toSeq.toDF("id")
+    same(HnswDistributed.search(qDf, _, 10))
+    same(HnswDistributed.search(qDf, _, 40)) // k > efSearch(0)
+    // 3 allowed ids, k = 5: the beam spans the index and the exact scan answers
+    same(HnswDistributed.searchFiltered(qDf, _, few, 5))
+    same(HnswDistributed.searchFiltered(qDf, _, data.map(_._1).toSeq.toDF("id"), 10))
+    same(HnswDistributed.searchExcluding(qDf, _, allButFew, 5))
+    same(HnswDistributed.searchExcluding(qDf, _, few, 10))
+    spark.experimental.extraStrategies =
+      spark.experimental.extraStrategies.filterNot(_.isInstanceOf[HnswStrategy]) :+ new HnswStrategy
+    same(HnswSql.knn(qDf, _, 40))
+  }
+}
