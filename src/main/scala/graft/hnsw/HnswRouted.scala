@@ -1,12 +1,14 @@
 package graft.hnsw
 
 import org.apache.spark.Partitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.hnsw.HnswDistributed.BuildConfig
 import graft.operators.Ivf
-import graft.store.{ArrayVectorStore, EntryPoint, GraphSnapshot, InMemoryGraph, LayerCsr, Metrics}
+import graft.store.{ArrayVectorStore, GraphSnapshot, InMemoryGraph, Metrics}
 
 /** IVF-routed sharded HNSW — the two-level ANN serving architecture
   * (FAISS's IVF+graph composition, re-expressed Spark-first): a coarse
@@ -139,9 +141,9 @@ object HnswRouted {
   final case class RoutedIndex(
       cfg: BuildConfig,
       router: Router,
-      shards: org.apache.spark.rdd.RDD[(Int, CellShard)],
+      shards: RDD[(Int, CellShard)],
       tombstones: Array[Long] = Array.empty,
-      overlay: Seq[org.apache.spark.rdd.RDD[_]] = Nil) {
+      overlay: Seq[RDD[_]] = Nil) {
     def unpersist(): Unit = {
       overlay.foreach(_.unpersist())
       shards.unpersist()
@@ -186,19 +188,29 @@ object HnswRouted {
   private val tripleEnc = Encoders.tuple(
     Encoders.scalaLong, ExprEnc.floatArray, Encoders.scalaInt)
 
+  /** (cell, (id, vec)) pairs of an (id, vec, cell) projection — what
+    * build, ingest and the PQ tier's survivor fetch route by. */
+  private[hnsw] def keyedByCell(df: DataFrame): RDD[(Int, (Long, Array[Float]))] =
+    df.select(col("id"), col("vec"), col("cell")).as(tripleEnc).rdd
+      .map { case (id, vec, cell) => (cell, (id, vec)) }
+
+  /** An (id, vec) batch keyed by its router cell. */
+  private[hnsw] def routeBy(router: Router)(df: DataFrame): RDD[(Int, (Long, Array[Float]))] =
+    keyedByCell(df.withColumn("cell", router.cellCol(col("vec"))))
+
   /** The float tier's [[RoutedTier]] binding — one shared lifecycle
     * ([[RoutedLifecycle]]) across the three serving tiers; only the
     * representation (LongVecMap members, float-exact cell rebuild)
     * lives here. */
   private[graft] object FloatTier
       extends RoutedServing[CellShard, RoutedIndex, Array[Float], Router] {
-    def shards(i: RoutedIndex): org.apache.spark.rdd.RDD[(Int, CellShard)] = i.shards
+    def shards(i: RoutedIndex): RDD[(Int, CellShard)] = i.shards
     def tombstones(i: RoutedIndex): Array[Long] = i.tombstones
-    def overlays(i: RoutedIndex): Seq[org.apache.spark.rdd.RDD[_]] = i.overlay
-    def make(i: RoutedIndex, shards: org.apache.spark.rdd.RDD[(Int, CellShard)],
-             tombstones: Array[Long],
-             overlays: Seq[org.apache.spark.rdd.RDD[_]]): RoutedIndex =
+    def overlays(i: RoutedIndex): Seq[RDD[_]] = i.overlay
+    def make(i: RoutedIndex, shards: RDD[(Int, CellShard)],
+             tombstones: Array[Long], overlays: Seq[RDD[_]]): RoutedIndex =
       RoutedIndex(i.cfg, i.router, shards, tombstones, overlays)
+    def partitioner(i: RoutedIndex): Partitioner = partitionerFor(i.router)
     val cacheName = "graft-hnsw-routed"
     val tierName = "routed"
     val unpersistBlocking = false
@@ -207,22 +219,18 @@ object HnswRouted {
     def memberCount(s: CellShard): Int = s.vectors.size
     def containsId(s: CellShard, id: Long): Boolean = s.vectors.contains(id)
     def idIterator(s: CellShard): Iterator[Long] = s.vectors.keysIterator
+    def snapshot(s: CellShard): GraphSnapshot = s.snapshot
     val queryCol = "qvec"
     def queryEnc: Encoder[(Long, Array[Float])] =
       Encoders.tuple(Encoders.scalaLong, ExprEnc.floatArray)
     def router(i: RoutedIndex): Router = i.router
     def probeCells(r: Router, q: Array[Float], nProbe: Int): Iterator[Int] =
       r.probeCells(q, nProbe)
-    def survivorRebuild(i: RoutedIndex): (Int, CellShard, Array[Long]) => CellShard = {
-      val cfg = i.cfg
-      (cell, s, dead) => {
-        val rows = s.vectors.iterator
-          .filter { case (id, _) =>
-            java.util.Arrays.binarySearch(dead, id) < 0 }
-          .toArray.sortBy(_._1)
-        buildCellFresh(cell, rows, cfg)
-      }
-    }
+    val vectors = RoutedImage.Payload[CellShard, Array[Float]]("vectors", "vec",
+      Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong, ExprEnc.floatArray),
+      _.vectors.iterator)
+    def rebuild(i: RoutedIndex): RoutedLifecycle.Rebuild[CellShard] =
+      RoutedLifecycle.Rebuild.local(vectors.rows)(growCell(i.cfg))
   }
 
   private val tripleEncPcellFirst = Encoders.tuple(
@@ -360,66 +368,29 @@ object HnswRouted {
       .sortBy(-_._2)
   }
 
-  /** Fresh per-cell construction from id-sorted rows (layers from the
-    * id hash) — the build path's kernel, shared by [[compact]] so a
+  /** The float tier's one cell kernel — build, ingest and compaction
+    * all grow a cell here: `prior`'s graph (copy-on-merge: a cached
+    * shard is never mutated) absorbs the id-sorted `rows` in order,
+    * layers from the id hash; with no prior the cell builds fresh, so a
     * compacted cell is graph-identical to a fresh build of its
     * surviving rows (same insert order, same layer draws). */
-  private[hnsw] def buildCellFresh(cell: Int, rows: Array[(Long, Array[Float])],
-                                   cfg: BuildConfig): CellShard = {
-    val metric = Metrics.byName(cfg.metric)
+  private[hnsw] def growCell(cfg: BuildConfig)(cell: Int, prior: Option[CellShard],
+                                               rows: Array[(Long, Array[Float])]): CellShard = {
+    val vecMap = prior.fold(new LongVecMap(rows.length))(_.vectors.copy(extra = rows.length))
+    rows.foreach { case (id, _) =>
+      require(!vecMap.contains(id),
+        s"routed ingest: id $id already present in cell $cell — " +
+          "re-inserting a vertex would corrupt its graph")
+    }
+    val graph = prior.fold(new InMemoryGraph)(p => InMemoryGraph.fromSnapshot(p.snapshot))
+    val store = new ArrayVectorStore(Metrics.byName(cfg.metric), base = vecMap)
     val searcher = new HnswSearcher(cfg.params)
-    val vecMap = LongVecMap.from(rows.iterator, rows.length)
-    val graph = new InMemoryGraph
-    val store = new ArrayVectorStore(metric, base = vecMap)
     rows.foreach { case (id, v) => store.prepareQueryWithId(id, v) }
     rows.foreach { case (id, v) =>
       vecMap(id) = v
-      searcher.insert(store, graph, id,
-        searcher.selectLayerByHash(id, cfg.seed))
+      searcher.insert(store, graph, id, searcher.selectLayerByHash(id, cfg.seed))
     }
     CellShard(cell, vecMap, graph.snapshot)
-  }
-
-  /** Per-partition shard construction from keyed (cell, (id, vec)) rows:
-    * one shard per CELL within the partition (the partitioner can
-    * co-locate cells). `existing` supplies prior shards for [[ingest]]
-    * (absent at build). Deterministic: rows insert in ascending id
-    * order per cell, layers from the id hash. */
-  private def buildShards(
-      it: Iterator[(Int, (Long, Array[Float]))],
-      existing: Map[Int, CellShard],
-      cfg: BuildConfig): Iterator[(Int, CellShard)] = {
-    val byCell = scala.collection.mutable.Map
-      .empty[Int, scala.collection.mutable.ArrayBuffer[(Long, Array[Float])]]
-    it.foreach { case (cell, row) =>
-      byCell.getOrElseUpdate(cell,
-        scala.collection.mutable.ArrayBuffer.empty) += row
-    }
-    val metric = Metrics.byName(cfg.metric)
-    val searcher = new HnswSearcher(cfg.params)
-    byCell.iterator.map { case (cell, rowsBuf) =>
-      val rows = rowsBuf.toArray.sortBy(_._1)
-      existing.get(cell) match {
-        case Some(prior) =>
-          val vecMap = prior.vectors.copy(extra = rows.length)
-          rows.foreach { case (id, _) =>
-            require(!vecMap.contains(id),
-              s"routed ingest: id $id already present in cell $cell — " +
-                "re-inserting a vertex would corrupt its graph")
-          }
-          val graph = InMemoryGraph.fromSnapshot(prior.snapshot)
-          val store = new ArrayVectorStore(metric, base = vecMap)
-          rows.foreach { case (id, v) => store.prepareQueryWithId(id, v) }
-          rows.foreach { case (id, v) =>
-            vecMap(id) = v
-            searcher.insert(store, graph, id,
-              searcher.selectLayerByHash(id, cfg.seed))
-          }
-          cell -> CellShard(cell, vecMap, graph.snapshot)
-        case None =>
-          cell -> buildCellFresh(cell, rows, cfg)
-      }
-    }
   }
 
   /** `modalitySplit`: opt-in BUILD-TIME modality guard (round-15; the
@@ -445,7 +416,6 @@ object HnswRouted {
             nCells: Int = 16, persist: Boolean = true,
             maxCellRows: Long = DefaultMaxCellRows,
             modalitySplit: Boolean = false): RoutedIndex = {
-    val spark = vectors.sparkSession
     // GLOBAL id dedup before cell assignment (the HnswDistributed.build
     // duplicate-id guard, but cross-cell: duplicate rows with different
     // vectors would route to DIFFERENT cells and surface the same id
@@ -457,28 +427,15 @@ object HnswRouted {
     // id-dedup SHUFFLE (4-6 full-corpus shuffles instead of one)
     val deduped = vectors.select(col("id"), col("vec"))
       .groupBy(col("id")).agg(max(col("vec")).as("vec"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-    val (router, cells) = planRouter(deduped, cfg, nCells, maxCellRows,
-      modalitySplit)
-    val part = partitionerFor(router)
-    val keyed = cells
-      .select(col("id"), col("vec"), col("cell"))
-      .as(tripleEnc).rdd
-      .map { case (id, vec, cell) => (cell, (id, vec)) }
-      .partitionBy(part)
-    val shards = keyed.mapPartitions(
-      it => buildShards(it, Map.empty, cfg),
-      preservesPartitioning = true)
-    if (persist) {
-      shards.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        .setName("graft-hnsw-routed")
-      shards.count() // materialize the build eagerly
-    }
-    // persist=false shards stay lazy and recompute per action (the
-    // test-only contract); after the unpersist below that recompute
-    // re-runs the dedup shuffle — the caller opted out of pinning
-    RoutedIndex(cfg, router, shards)
+      val (router, cells) = planRouter(deduped, cfg, nCells, maxCellRows,
+        modalitySplit)
+      // persist=false shards stay lazy and recompute per action (the
+      // test-only contract); after the unpersist below that recompute
+      // re-runs the dedup shuffle — the caller opted out of pinning
+      RoutedIndex(cfg, router, RoutedLifecycle.build(FloatTier, keyedByCell(cells),
+        partitionerFor(router), persist, StorageLevel.MEMORY_AND_DISK)(growCell(cfg)))
     } finally deduped.unpersist(blocking = false)
   }
 
@@ -599,67 +556,10 @@ object HnswRouted {
     * Returns a NEW index sharing the router; the old shards are
     * unpersisted when `persist` is set. */
   def ingest(index: RoutedIndex, newRows: DataFrame,
-             persist: Boolean = true): RoutedIndex = {
-    val cfg = index.cfg
-    val router = index.router
-    val spark = newRows.sparkSession
-    val deduped = newRows.select(col("id"), col("vec"))
-      .groupBy(col("id")).agg(max(col("vec")).as("vec"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    // GLOBAL duplicate-id guard (cross-cell): the per-cell fail-fast in
-    // buildShards only sees the id's TARGET cell — an id already built
-    // into cell A, redelivered with a drifted vector that routes to
-    // cell B, would pass it and double-register, so one top-k could
-    // return the same id twice. The batch id set is batch-sized:
-    // broadcast it sorted and narrow-scan every shard's key set (no
-    // shuffle, the corpus never moves).
-    val batchIds = deduped.select(col("id"))
-      .as(Encoders.scalaLong).collect()
-    java.util.Arrays.sort(batchIds)
-    // shared fail-fast guards (RoutedLifecycle): tombstoned-id
-    // resurrect (driver-side, no job) + cross-cell duplicate-id scan
-    // (one narrow broadcast pass). The CDC stream is the lenient path
-    // that filters instead.
-    RoutedLifecycle.guardResurrect(FloatTier)(index, batchIds)
-    RoutedLifecycle.guardClashes(FloatTier)(index, batchIds)
-    val part = index.shards.partitioner.getOrElse(partitionerFor(router))
-    val keyed = deduped
-      .select(col("id"), col("vec"), router.cellCol(col("vec")).as("cell"))
-      .as(tripleEnc).rdd
-      .map { case (id, vec, cell) => (cell, (id, vec)) }
-      .partitionBy(part)
-    val merged = index.shards.cogroup(keyed).mapPartitions({ it =>
-      val additions = scala.collection.mutable.ArrayBuffer
-        .empty[(Int, (Long, Array[Float]))]
-      val untouched = scala.collection.mutable.ArrayBuffer.empty[(Int, CellShard)]
-      val prior = Map.newBuilder[Int, CellShard]
-      it.foreach { case (cell, (shards, rows)) =>
-        if (rows.isEmpty) shards.foreach(s => untouched += (cell -> s))
-        else {
-          shards.foreach(s => prior += (cell -> s))
-          rows.foreach(r => additions += (cell -> r))
-        }
-      }
-      untouched.iterator ++
-        buildShards(additions.iterator, prior.result(), cfg)
-    }, preservesPartitioning = true)
-    if (persist) {
-      merged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        .setName("graft-hnsw-routed")
-      merged.count()
-      index.shards.unpersist(blocking = false)
-      // a patched prior also owned an overlay stack — release it with
-      // the shards it patched
-      index.overlay.foreach(_.unpersist())
-    }
-    // the deletion set survives ingest (dropping it would silently
-    // resurrect deleted ids after the next insert batch — caught by
-    // the CDC spec); overlays stay tracked unless just released
-    RoutedIndex(cfg, router, merged, index.tombstones,
-      overlay = if (persist) Nil else index.overlay)
-    } finally deduped.unpersist(blocking = false)
-  }
+             persist: Boolean = true): RoutedIndex =
+    RoutedLifecycle.ingest(FloatTier)(index, newRows, "vec", persist,
+      unpersistPrior = true, StorageLevel.MEMORY_AND_DISK)(
+      routeBy(index.router))(growCell(index.cfg))
 
   /** Which of `ids` are present in the index (any cell) — ONE narrow
     * broadcast scan over the shard key sets (the ingest guard's
@@ -694,7 +594,7 @@ object HnswRouted {
     * REFERENCE (no copy, no rebuild, no shuffle; the map is narrow on
     * the pinned partitioner), so compaction cost is proportional to
     * AFFECTED cells, not the index. A compacted cell is rebuilt fresh
-    * from its survivors with the build kernel ([[buildCellFresh]]:
+    * from its survivors with the build kernel ([[growCell]]:
     * ascending id order, layers from the id hash), so it is
     * graph-identical to a fresh build of the remaining rows — the
     * "compaction preserves the served result" contract, spec-checked.
@@ -704,8 +604,8 @@ object HnswRouted {
     * e.g. the catalog's shared build). */
   def compact(index: RoutedIndex, persist: Boolean = true,
               unpersistPrior: Boolean = true): RoutedIndex =
-    RoutedLifecycle.compact(FloatTier)(index, persist, unpersistPrior,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    RoutedLifecycle.compact(FloatTier)(index, FloatTier.rebuild(index), persist,
+      unpersistPrior, StorageLevel.MEMORY_AND_DISK)._1
 
   /** Targeted compaction: fold the deletion set out of ONLY the listed
     * cells — the [[mergedCellAudit]] remedy. [[compact]]'s whole-index
@@ -723,8 +623,9 @@ object HnswRouted {
   def compactCells(index: RoutedIndex, cells: Array[Int],
                    persist: Boolean = true,
                    unpersistPrior: Boolean = true): RoutedIndex =
-    RoutedLifecycle.compactCells(FloatTier)(index, cells, persist,
-      unpersistPrior, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    RoutedLifecycle.compactCells(FloatTier)(index, cells,
+      FloatTier.rebuild(index), persist, unpersistPrior,
+      StorageLevel.MEMORY_AND_DISK)
 
   /** [[compactCells]] with O(touched) PERSISTED BYTES — the patch
     * answer to the measured cost of targeted compaction: the plain
@@ -746,14 +647,15 @@ object HnswRouted {
     * [[compactCells]] (spec-pinned). */
   def compactCellsPatched(index: RoutedIndex, cells: Array[Int],
                           persist: Boolean = true): RoutedIndex =
-    RoutedLifecycle.compactCellsPatched(FloatTier)(index, cells, persist)
+    RoutedLifecycle.compactCellsPatched(FloatTier)(index, cells,
+      FloatTier.rebuild(index), persist)
 
   /** Materialize a patched index back into ONE persisted full image
     * and release the overlay stack — the fold that bounds patch-stack
     * depth. A handle with no overlay returns unchanged. */
   def foldOverlay(index: RoutedIndex): RoutedIndex =
     RoutedLifecycle.foldOverlay(FloatTier)(index,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      StorageLevel.MEMORY_AND_DISK)
 
   /** Merged-cell audit — detection for the regime the per-cell density
     * census cannot see (ROUND14 §5's residual): k-means merged a DEAD
@@ -831,18 +733,11 @@ object HnswRouted {
     * eroding. */
   def retrain(index: RoutedIndex, nCells: Int = 0, persist: Boolean = true,
               maxCellRows: Long = DefaultMaxCellRows): RoutedIndex = {
-    val spark = SparkSession.active
-    val n = if (nCells > 0) nCells else index.router.nPrimary
-    val tombB = index.shards.sparkContext.broadcast(index.tombstones)
-    val pairEnc = Encoders.tuple(Encoders.scalaLong, ExprEnc.floatArray)
-    val rows = index.shards.flatMap { case (_, s) =>
-      val dead = tombB.value
-      s.vectors.iterator.filter { case (id, _) =>
-        dead.length == 0 || java.util.Arrays.binarySearch(dead, id) < 0
-      }
-    }
-    val df = spark.createDataset(rows)(pairEnc).toDF("id", "vec")
-    build(df, index.cfg, n, persist, maxCellRows)
+    val rows = RoutedLifecycle.liveRows(FloatTier)(index, FloatTier.vectors.rows)
+    val df = SparkSession.active.createDataset(rows)(
+      Encoders.tuple(Encoders.scalaLong, ExprEnc.floatArray)).toDF("id", "vec")
+    build(df, index.cfg, if (nCells > 0) nCells else index.router.nPrimary,
+      persist, maxCellRows)
   }
 
   /** Opt-in serving WARM-UP — the post-attach/fold first-serve
@@ -939,8 +834,8 @@ object HnswRouted {
     * partition set. Falls back to the unpruned RDD when no partitioner
     * is pinned (never the case for build/attach/ingest outputs). */
   private[hnsw] def prunedShards[S](
-      shards: org.apache.spark.rdd.RDD[(Int, S)],
-      probedCells: Iterable[Int]): org.apache.spark.rdd.RDD[(Int, S)] =
+      shards: RDD[(Int, S)],
+      probedCells: Iterable[Int]): RDD[(Int, S)] =
     shards.partitioner match {
       case Some(p) =>
         val keep = probedCells.map(p.getPartition(_: Any)).toSet
@@ -1100,47 +995,15 @@ object HnswRouted {
   // Durability: versioned parquet persistence + attach-without-rebuild.
   // --------------------------------------------------------------------
 
-  private val vecRowEnc = Encoders.tuple(
-    Encoders.scalaInt, Encoders.scalaLong, ExprEnc.floatArray)
-
   /** Persist the index under `path` as a new complete version
-    * (`idx_v{N}`, `_DONE`-marked last; older versions reclaimed after —
-    * the [[VersionedIndexDirs]] discipline: a crash mid-save leaves
-    * junk that can never resolve, readers only see complete versions).
-    * Six tables: meta (config), centroids (both router levels),
-    * vectors, links (per-cell CSR rows), entries, tombstones (the
-    * live deletion set — restarts keep serving accepted deletes). */
+    * ([[RoutedImage.save]]): meta (config), centroids (both router
+    * levels), vectors, links (per-cell CSR rows), entries, tombstones
+    * (the live deletion set — restarts keep serving accepted deletes). */
   def save(index: RoutedIndex, path: String, keepVersions: Int = 1): Unit =
-    saveWith(SparkSession.active, index, path, keepVersions)
-
-  private def saveWith(spark: SparkSession, index: RoutedIndex, path: String,
-                       keepVersions: Int = 1): Unit = {
-    import spark.implicits._
-    val dir = VersionedIndexDirs.nextDir(spark, path)
-    val cfg = index.cfg
-    val p = cfg.params
-
-    Seq((cfg.metric, cfg.seed, p.m.toSeq, p.mMax.toSeq, p.efConstrSearch.toSeq,
-        p.efConstrInsert.toSeq, p.efSearch.toSeq, p.layerProbability,
-        index.router.nPrimary))
-      .toDF("metric", "seed", "m", "m_max", "ef_constr_search",
-        "ef_constr_insert", "ef_search", "layer_probability", "n_primary")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-
-    RoutedImage.writeRouter(spark, dir, index.router)
-
-    spark.createDataset(index.shards.flatMap { case (cell, s) =>
-      s.vectors.iterator.map { case (id, v) => (cell, id, v) }
-    })(vecRowEnc).toDF("cell", "id", "vec")
-      .write.mode("overwrite").parquet(s"$dir/vectors")
-
-    RoutedImage.writeGraph(spark, dir, index.shards,
-      (s: CellShard) => s.snapshot)
-    RoutedImage.writeTombstones(spark, dir, index.tombstones)
-
-    // completeness marker LAST; then reclaim superseded/junk versions
-    VersionedIndexDirs.commit(spark, path, dir, keepVersions)
-  }
+    RoutedImage.save(FloatTier)(index, path, keepVersions, index.cfg.params,
+      Seq("metric" -> index.cfg.metric, "seed" -> index.cfg.seed,
+        "n_primary" -> index.router.nPrimary), FloatTier.vectors)(
+      RoutedImage.writeRouter(_, _, index.router))
 
   /** Restore a saved index WITHOUT rebuilding: read the newest complete
     * version, reassemble per-cell snapshots with one co-partitioned
@@ -1148,37 +1011,15 @@ object HnswRouted {
     * k-means, no HNSW construction; measured ≫ cheaper than build). */
   def attach(spark: SparkSession, path: String,
              persist: Boolean = true): RoutedIndex = {
-    val dir = VersionedIndexDirs.newestDone(spark, path)
-
-    val meta = spark.read.parquet(s"$dir/meta").collect().head
-    val params = RoutedImage.paramsFromMeta(meta)
-    val cfg = BuildConfig(params, meta.getAs[String]("metric"),
-      meta.getAs[Long]("seed"))
+    val (dir, meta) = RoutedImage.open(spark, path)
+    val cfg = BuildConfig(RoutedImage.paramsFromMeta(meta),
+      meta.getAs[String]("metric"), meta.getAs[Long]("seed"))
     val router = RoutedImage.readRouter(spark, dir, cfg.metric)
-
-    val part = partitionerFor(router)
-    val vecs = spark.read.parquet(s"$dir/vectors")
-      .select(col("cell"), col("id"), col("vec")).as(vecRowEnc).rdd
-      .map { case (c, id, v) => (c, (id, v)) }
-    val links = RoutedImage.readLinks(spark, dir)
-    val entries = RoutedImage.readEntries(spark, dir)
-
-    // preservesPartitioning: the restored shards must keep the pinned
-    // partitioner, or the first post-attach ingest would shuffle the
-    // whole INDEX side to co-locate with its batch — exactly the move
-    // the keyed-shard design exists to avoid
-    val shards = vecs.cogroup(links, entries, part).mapPartitions({ it =>
-      it.map { case (cell, (vs, ls, es)) =>
-        cell -> CellShard(cell, LongVecMap.from(vs.iterator),
-          RoutedImage.assembleSnapshot(ls, es))
-      }
-    }, preservesPartitioning = true)
-    if (persist) {
-      shards.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        .setName("graft-hnsw-routed")
-      shards.count()
-    }
-    RoutedIndex(cfg, router, shards, RoutedImage.readTombstones(spark, dir))
+    RoutedIndex(cfg, router, RoutedImage.shards(FloatTier, spark, dir,
+      FloatTier.vectors, partitionerFor(router), persist,
+      StorageLevel.MEMORY_AND_DISK)((cell, vs, snap) =>
+      CellShard(cell, LongVecMap.from(vs.iterator), snap)),
+      RoutedImage.readTombstones(spark, dir))
   }
 
   /** Nest-safe process-wide memo of the catalog's lifecycle handles. */
@@ -1212,7 +1053,7 @@ object HnswRouted {
       graft.BuildLedger.timed("hnsw_routed_save_attach") {
         val built = buildCached(vectors, cfg, nCells, key)
         val dir = graft.TempDirs.create("graft_routed_")
-        saveWith(vectors.sparkSession, built, dir)
+        save(built, dir)
         attach(vectors.sparkSession, dir)
       })
 

@@ -1,10 +1,12 @@
 package graft.hnsw
 
-import org.apache.spark.HashPartitioner
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
-import graft.store.{EntryPoint, GraphSnapshot, InMemoryGraph, LayerCsr}
+import graft.store.{GraphSnapshot, InMemoryGraph}
 
 /** IVF-routed sharded HNSW over u64 bit-codes under Hamming distance —
   * [[HnswRouted]]'s architecture applied to the reference's NATIVE
@@ -50,9 +52,9 @@ object HnswRoutedCodes {
       params: HnswParams,
       seed: Long,
       anchors: Array[Long],
-      shards: org.apache.spark.rdd.RDD[(Int, CodeCellShard)],
+      shards: RDD[(Int, CodeCellShard)],
       tombstones: Array[Long] = Array.empty,
-      overlay: Seq[org.apache.spark.rdd.RDD[_]] = Nil) {
+      overlay: Seq[RDD[_]] = Nil) {
     def unpersist(): Unit = {
       overlay.foreach(_.unpersist())
       shards.unpersist()
@@ -70,13 +72,16 @@ object HnswRoutedCodes {
     * cleaner. */
   private[graft] object CodeTier
       extends RoutedServing[CodeCellShard, RoutedCodeIndex, Long, Array[Long]] {
-    def shards(i: RoutedCodeIndex): org.apache.spark.rdd.RDD[(Int, CodeCellShard)] = i.shards
+    def shards(i: RoutedCodeIndex): RDD[(Int, CodeCellShard)] = i.shards
     def tombstones(i: RoutedCodeIndex): Array[Long] = i.tombstones
-    def overlays(i: RoutedCodeIndex): Seq[org.apache.spark.rdd.RDD[_]] = i.overlay
-    def make(i: RoutedCodeIndex, shards: org.apache.spark.rdd.RDD[(Int, CodeCellShard)],
-             tombstones: Array[Long],
-             overlays: Seq[org.apache.spark.rdd.RDD[_]]): RoutedCodeIndex =
+    def overlays(i: RoutedCodeIndex): Seq[RDD[_]] = i.overlay
+    def make(i: RoutedCodeIndex, shards: RDD[(Int, CodeCellShard)],
+             tombstones: Array[Long], overlays: Seq[RDD[_]]): RoutedCodeIndex =
       RoutedCodeIndex(i.params, i.seed, i.anchors, shards, tombstones, overlays)
+    /** Keys are anchor RANKS (0..n-1), so the plain HashPartitioner is
+      * the identity here (unlike the float tier's composite ids — see
+      * [[HnswRouted.CellPartitioner]]). */
+    def partitioner(i: RoutedCodeIndex): Partitioner = partitionerFor(i.anchors)
     val cacheName = "graft-hnsw-routed-codes"
     val tierName = "routed-codes"
     val unpersistBlocking = true
@@ -85,22 +90,27 @@ object HnswRoutedCodes {
     def memberCount(s: CodeCellShard): Int = s.codes.size
     def containsId(s: CodeCellShard, id: Long): Boolean = s.codes.contains(id)
     def idIterator(s: CodeCellShard): Iterator[Long] = s.codes.keysIterator
+    def snapshot(s: CodeCellShard): GraphSnapshot = s.snapshot
     val queryCol = "qcode"
     def queryEnc: Encoder[(Long, Long)] = pairEnc
     def router(i: RoutedCodeIndex): Array[Long] = i.anchors
     def probeCells(anchors: Array[Long], qc: Long, nProbe: Int): Iterator[Int] =
       probeCellsCode(qc, anchors, nProbe)
-    def survivorRebuild(i: RoutedCodeIndex): (Int, CodeCellShard, Array[Long]) => CodeCellShard = {
-      val params = i.params
-      val seed = i.seed
-      (cell, s, dead) => {
-        val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-        s.codes.foreach { (id, c) =>
-          if (java.util.Arrays.binarySearch(dead, id) < 0) rows += ((id, c))
-        }
-        buildCellFresh(cell, rows.toArray.sortBy(_._1), params, seed)
-      }
-    }
+    val codes = RoutedImage.Payload[CodeCellShard, Long]("codes", "code",
+      RoutedImage.codeRowEnc, _.codes.toSeq.iterator)
+    def rebuild(i: RoutedCodeIndex): RoutedLifecycle.Rebuild[CodeCellShard] =
+      RoutedLifecycle.Rebuild.local(codes.rows)(growCell(i.params, i.seed))
+  }
+
+  private def partitionerFor(anchors: Array[Long]): Partitioner =
+    new HashPartitioner(math.max(1, anchors.length))
+
+  /** (cell, (id, code)) pairs of an (id, code) projection, routed to the
+    * nearest anchor. */
+  private def keyedByAnchor(df: DataFrame, anchors: Array[Long]): RDD[(Int, (Long, Long))] = {
+    val anchorsB = df.sparkSession.sparkContext.broadcast(anchors)
+    df.select(col("id"), col("code")).as(pairEnc).rdd
+      .map { case (id, c) => (nearestAnchor(c, anchorsB.value), (id, c)) }
   }
 
   @inline private def hamming(a: Long, b: Long): Int =
@@ -192,20 +202,29 @@ object HnswRoutedCodes {
     anchors
   }
 
-  /** Fresh per-cell construction from id-sorted (id, code) rows —
-    * shared by [[build]] and [[compact]] so a compacted cell is
-    * graph-identical to a fresh build of its surviving rows (same
-    * insert order, same layer draws). */
-  private def buildCellFresh(cell: Int, rows: Array[(Long, Long)],
-                             params: HnswParams, seed: Long): CodeCellShard = {
-    val store = new CellCodeStore(
-      LongLongMap.from(rows.iterator, math.max(8, rows.length)))
-    val graph = new InMemoryGraph
+  /** The code tier's one cell kernel — build, ingest and compaction all
+    * grow a cell here: `prior`'s graph and code map (copy-on-merge: a
+    * cached shard is never mutated) absorb the id-sorted `rows` in
+    * order, layers from the id hash; with no prior the cell builds
+    * fresh, so a compacted cell is graph-identical to a fresh build of
+    * its surviving rows (same insert order, same layer draws). */
+  private def growCell(params: HnswParams, seed: Long)(cell: Int,
+      prior: Option[CodeCellShard], rows: Array[(Long, Long)]): CodeCellShard = {
+    val codes = prior.fold(new LongLongMap(math.max(8, rows.length)))(
+      _.codes.copy(extra = rows.length))
+    rows.foreach { case (id, c) =>
+      require(!codes.contains(id),
+        s"routed-codes ingest: id $id already present in cell $cell — " +
+          "re-inserting a vertex would corrupt its graph")
+      codes.put(id, c)
+    }
+    val store = new CellCodeStore(codes)
+    val graph = prior.fold(new InMemoryGraph)(p => InMemoryGraph.fromSnapshot(p.snapshot))
     val searcher = new HnswSearcher(params)
     rows.foreach { case (id, _) =>
       searcher.insert(store, graph, id, searcher.selectLayerByHash(id, seed))
     }
-    CodeCellShard(cell, store.codes, graph.snapshot)
+    CodeCellShard(cell, codes, graph.snapshot)
   }
 
   /** Per-cell row budget (see [[HnswRouted.DefaultMaxCellRows]]): codes
@@ -219,8 +238,8 @@ object HnswRoutedCodes {
     * is ~30 GB of CSR graphs): shards stream to disk as they build and
     * deserialize per probed partition at search — on a cluster the
     * same bytes spread across executors and MEMORY_AND_DISK is right. */
-  val DefaultStorage: org.apache.spark.storage.StorageLevel =
-    org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+  val DefaultStorage: StorageLevel =
+    StorageLevel.MEMORY_AND_DISK
 
   /** `modalitySplit`: opt-in BUILD-TIME modality guard — the float
     * tier's [[HnswRouted.build]] flag on the code representation. The
@@ -237,7 +256,7 @@ object HnswRoutedCodes {
   def build(codes: DataFrame, params: HnswParams = HnswParams.standard(64, 32, 32),
             nCells: Int = 16, seed: Long = 42L, persist: Boolean = true,
             maxCellRows: Long = DefaultMaxCellRows,
-            storage: org.apache.spark.storage.StorageLevel = DefaultStorage,
+            storage: StorageLevel = DefaultStorage,
             modalitySplit: Boolean = false): RoutedCodeIndex = {
     val spark = codes.sparkSession
     // global id dedup (deterministic survivor: max code)
@@ -247,9 +266,7 @@ object HnswRoutedCodes {
     val anchors =
       if (!modalitySplit) anchors0
       else {
-        val aB = spark.sparkContext.broadcast(anchors0)
-        val keyed0 = deduped.select(col("id"), col("code")).as(pairEnc).rdd
-          .map { case (id, c) => (nearestAnchor(c, aB.value), (id, c)) }
+        val keyed0 = keyedByAnchor(deduped, anchors0)
         val hist0 = keyed0.mapValues(_ => 1L).reduceByKey(_ + _).collect()
         val audit = hist0.filter(_._2 >= ModalityMinCellRows)
         if (audit.isEmpty) anchors0
@@ -309,9 +326,7 @@ object HnswRoutedCodes {
           }
         }
       }
-    val anchorsB = spark.sparkContext.broadcast(anchors)
-    val keyedRaw = deduped.select(col("id"), col("code")).as(pairEnc).rdd
-      .map { case (id, c) => (nearestAnchor(c, anchorsB.value), (id, c)) }
+    val keyedRaw = keyedByAnchor(deduped, anchors)
 
     // skew guard: histogram fail-fast. Coincident codes cannot be
     // separated by ANY Hamming quantizer (they are the same point), so
@@ -326,23 +341,8 @@ object HnswRoutedCodes {
         "executor memory per cell), or use HnswCodes.buildBatched (the " +
         "single-graph micro-batched tier) for collapsed code mass")
 
-    val part = new HashPartitioner(math.max(1, anchors.length))
-    val shards = keyedRaw.partitionBy(part).mapPartitions({ it =>
-      val byCell = scala.collection.mutable.Map
-        .empty[Int, scala.collection.mutable.ArrayBuffer[(Long, Long)]]
-      it.foreach { case (cell, row) =>
-        byCell.getOrElseUpdate(cell,
-          scala.collection.mutable.ArrayBuffer.empty) += row
-      }
-      byCell.iterator.map { case (cell, buf) =>
-        cell -> buildCellFresh(cell, buf.toArray.sortBy(_._1), params, seed)
-      }
-    }, preservesPartitioning = true)
-    if (persist) {
-      shards.persist(storage).setName("graft-hnsw-routed-codes")
-      shards.count()
-    }
-    RoutedCodeIndex(params, seed, anchors, shards)
+    RoutedCodeIndex(params, seed, anchors, RoutedLifecycle.build(CodeTier,
+      keyedRaw, partitionerFor(anchors), persist, storage)(growCell(params, seed)))
   }
 
   /** Incremental ingest — [[HnswRouted.ingest]]'s contract on the code
@@ -357,68 +357,10 @@ object HnswRoutedCodes {
     * The ANCHORS ARE FROZEN; drift recovery is retrain + rebuild. */
   def ingest(index: RoutedCodeIndex, newRows: DataFrame,
              persist: Boolean = true,
-             storage: org.apache.spark.storage.StorageLevel = DefaultStorage): RoutedCodeIndex = {
-    val spark = newRows.sparkSession
-    val params = index.params
-    val seed = index.seed
-    val deduped = newRows.select(col("id"), col("code"))
-      .groupBy(col("id")).agg(max(col("code")).as("code"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val batchIds = deduped.select(col("id"))
-        .as(Encoders.scalaLong).collect()
-      java.util.Arrays.sort(batchIds)
-      // shared fail-fast guards (RoutedLifecycle): tombstoned-id
-      // resurrect + cross-cell duplicate-id scan
-      RoutedLifecycle.guardResurrect(CodeTier)(index, batchIds)
-      RoutedLifecycle.guardClashes(CodeTier)(index, batchIds)
-
-      val anchorsB = spark.sparkContext.broadcast(index.anchors)
-      val part = index.shards.partitioner.getOrElse(
-        new HashPartitioner(math.max(1, index.anchors.length)))
-      val keyed = deduped.select(col("id"), col("code")).as(pairEnc).rdd
-        .map { case (id, c) => (nearestAnchor(c, anchorsB.value), (id, c)) }
-        .partitionBy(part)
-      val merged = index.shards.cogroup(keyed).mapPartitions({ it =>
-        it.flatMap { case (cell, (shards, rows)) =>
-          if (rows.isEmpty) shards.iterator.map(s => cell -> s)
-          else {
-            val sorted = rows.toArray.sortBy(_._1)
-            // copy-on-merge: the prior shard may still be cached (and
-            // may be recomputed) — never mutate it in place
-            val (codeMap, graph) = shards.headOption match {
-              case Some(prior) =>
-                (prior.codes.copy(extra = sorted.length),
-                  InMemoryGraph.fromSnapshot(prior.snapshot))
-              case None =>
-                (new LongLongMap(sorted.length), new InMemoryGraph)
-            }
-            sorted.foreach { case (id, c) => codeMap.put(id, c) }
-            val store = new CellCodeStore(codeMap)
-            val searcher = new HnswSearcher(params)
-            sorted.foreach { case (id, _) =>
-              searcher.insert(store, graph, id,
-                searcher.selectLayerByHash(id, seed))
-            }
-            Iterator.single(cell -> CodeCellShard(cell, codeMap, graph.snapshot))
-          }
-        }
-      }, preservesPartitioning = true)
-      if (persist) {
-        merged.persist(storage).setName("graft-hnsw-routed-codes")
-        merged.count()
-        // blocking: at DISK_ONLY scale the superseded index is ~the
-        // index's full footprint — reclaim it before the caller's next
-        // job rather than racing the async cleaner
-        index.shards.unpersist(blocking = true)
-        index.overlay.foreach(_.unpersist())
-      }
-      // the deletion set survives ingest (see HnswRouted.ingest);
-      // overlays stay tracked unless just released
-      RoutedCodeIndex(params, seed, index.anchors, merged, index.tombstones,
-        overlay = if (persist) Nil else index.overlay)
-    } finally deduped.unpersist(blocking = false)
-  }
+             storage: StorageLevel = DefaultStorage): RoutedCodeIndex =
+    RoutedLifecycle.ingest(CodeTier)(index, newRows, "code", persist,
+      unpersistPrior = true, storage)(keyedByAnchor(_, index.anchors))(
+      growCell(index.params, index.seed))
 
   /** Opt-in serving warm-up — [[HnswRouted.warm]] on the code
     * representation (this tier runs the DISK_ONLY decades where the
@@ -443,20 +385,10 @@ object HnswRoutedCodes {
   def retrain(index: RoutedCodeIndex, nCells: Int = 0,
               persist: Boolean = true,
               maxCellRows: Long = DefaultMaxCellRows,
-              storage: org.apache.spark.storage.StorageLevel = DefaultStorage): RoutedCodeIndex = {
-    val spark = SparkSession.active
+              storage: StorageLevel = DefaultStorage): RoutedCodeIndex = {
     val n = if (nCells > 0) nCells else index.anchors.length
-    val tombB = index.shards.sparkContext.broadcast(index.tombstones)
-    val rows = index.shards.flatMap { case (_, s) =>
-      val dead = tombB.value
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      s.codes.foreach { (id, c) =>
-        if (dead.length == 0 || java.util.Arrays.binarySearch(dead, id) < 0)
-          out += ((id, c))
-      }
-      out.iterator
-    }
-    val df = spark.createDataset(rows)(pairEnc).toDF("id", "code")
+    val df = SparkSession.active.createDataset(RoutedLifecycle.liveRows(CodeTier)(
+      index, CodeTier.codes.rows))(pairEnc).toDF("id", "code")
     build(df, index.params, n, index.seed, persist, maxCellRows, storage)
   }
 
@@ -477,14 +409,15 @@ object HnswRoutedCodes {
 
   /** Fold the deletion set out of the graphs — [[HnswRouted.compact]]:
     * ONLY cells holding a tombstoned id rebuild (fresh, via
-    * [[buildCellFresh]] — graph-identical to a fresh build of the
+    * [[growCell]] — graph-identical to a fresh build of the
     * survivors); untouched cells pass through by reference. Returns an
     * index with an empty deletion set; compacted-away ids can
     * re-[[ingest]]. */
   def compact(index: RoutedCodeIndex, persist: Boolean = true,
               unpersistPrior: Boolean = true,
-              storage: org.apache.spark.storage.StorageLevel = DefaultStorage): RoutedCodeIndex =
-    RoutedLifecycle.compact(CodeTier)(index, persist, unpersistPrior, storage)
+              storage: StorageLevel = DefaultStorage): RoutedCodeIndex =
+    RoutedLifecycle.compact(CodeTier)(index, CodeTier.rebuild(index), persist,
+      unpersistPrior, storage)._1
 
   /** PATCHED compaction — [[HnswRouted.compactCellsPatched]] on the
     * codes tier, with the touched set derived from the deletion set
@@ -505,12 +438,13 @@ object HnswRoutedCodes {
     * cadence. */
   def compactPatched(index: RoutedCodeIndex,
                      persist: Boolean = true): RoutedCodeIndex =
-    RoutedLifecycle.compactPatched(CodeTier)(index, persist)
+    RoutedLifecycle.compactPatched(CodeTier)(index, CodeTier.rebuild(index),
+      persist)
 
   /** Materialize a patched index back into ONE persisted full image and
     * release the overlay stack (see [[HnswRouted.foldOverlay]]). */
   def foldOverlay(index: RoutedCodeIndex,
-                  storage: org.apache.spark.storage.StorageLevel = DefaultStorage): RoutedCodeIndex =
+                  storage: StorageLevel = DefaultStorage): RoutedCodeIndex =
     RoutedLifecycle.foldOverlay(CodeTier)(index, storage)
 
   // --------------------------------------------------------------------
@@ -590,9 +524,9 @@ object HnswRoutedCodes {
   def compactCells(index: RoutedCodeIndex, cells: Array[Int],
                    persist: Boolean = true,
                    unpersistPrior: Boolean = true,
-                   storage: org.apache.spark.storage.StorageLevel = DefaultStorage): RoutedCodeIndex =
-    RoutedLifecycle.compactCells(CodeTier)(index, cells, persist,
-      unpersistPrior, storage)
+                   storage: StorageLevel = DefaultStorage): RoutedCodeIndex =
+    RoutedLifecycle.compactCells(CodeTier)(index, cells,
+      CodeTier.rebuild(index), persist, unpersistPrior, storage)
 
   /** [[compactCells]] with O(touched) persisted bytes — the float
     * tier's [[HnswRouted.compactCellsPatched]] overlay discipline on
@@ -602,7 +536,8 @@ object HnswRoutedCodes {
     * answer; patches stack, [[foldOverlay]] bounds the stack). */
   def compactCellsPatched(index: RoutedCodeIndex, cells: Array[Int],
                           persist: Boolean = true): RoutedCodeIndex =
-    RoutedLifecycle.compactCellsPatched(CodeTier)(index, cells, persist)
+    RoutedLifecycle.compactCellsPatched(CodeTier)(index, cells,
+      CodeTier.rebuild(index), persist)
 
   /** Detect-and-remediate — [[HnswRouted.remediateMergedCells]] on the
     * code representation: [[mergedCellAudit]] → targeted compaction on
@@ -627,76 +562,33 @@ object HnswRoutedCodes {
   // --------------------------------------------------------------------
 
 
-  /** Persist as a new complete `idx_v{N}` version (`_DONE` last, older
-    * versions reclaimed). A 1e8-code index is ~800 MB of codes + its
-    * graphs — the designated 1e8-decade tier no longer costs its full
-    * build per session. */
+  /** Persist as a new complete `idx_v{N}` version ([[RoutedImage.save]]:
+    * meta, anchors, codes, links, entries, tombstones). A 1e8-code index
+    * is ~800 MB of codes + its graphs — the designated 1e8-decade tier
+    * no longer costs its full build per session. */
   def save(index: RoutedCodeIndex, path: String, keepVersions: Int = 1): Unit =
-    saveWith(SparkSession.active, index, path, keepVersions)
-
-  private def saveWith(spark: SparkSession, index: RoutedCodeIndex,
-                       path: String, keepVersions: Int = 1): Unit = {
-    import spark.implicits._
-    val dir = VersionedIndexDirs.nextDir(spark, path)
-    val p = index.params
-
-    Seq((index.seed, p.m.toSeq, p.mMax.toSeq, p.efConstrSearch.toSeq,
-        p.efConstrInsert.toSeq, p.efSearch.toSeq, p.layerProbability))
-      .toDF("seed", "m", "m_max", "ef_constr_search", "ef_constr_insert",
-        "ef_search", "layer_probability")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-
-    index.anchors.zipWithIndex.map { case (a, i) => (i, a) }.toSeq
-      .toDF("idx", "anchor")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/anchors")
-
-    spark.createDataset(index.shards.flatMap { case (cell, s) =>
-      s.codes.toSeq.iterator.map { case (id, c) => (cell, id, c) }
-    })(RoutedImage.codeRowEnc).toDF("cell", "id", "code")
-      .write.mode("overwrite").parquet(s"$dir/codes")
-
-    RoutedImage.writeGraph(spark, dir, index.shards,
-      (s: CodeCellShard) => s.snapshot)
-    RoutedImage.writeTombstones(spark, dir, index.tombstones)
-
-    VersionedIndexDirs.commit(spark, path, dir, keepVersions)
-  }
+    RoutedImage.save(CodeTier)(index, path, keepVersions, index.params,
+      Seq("seed" -> index.seed), CodeTier.codes) { (spark, dir) =>
+      import spark.implicits._
+      index.anchors.zipWithIndex.map { case (a, i) => (i, a) }.toSeq
+        .toDF("idx", "anchor")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/anchors")
+    }
 
   /** Restore WITHOUT rebuilding: newest complete version, one
     * co-partitioned cogroup reassembling per-cell code maps + CSR
     * snapshots — a parquet scan, no k-majority training, no graph
-    * construction. Keys are anchor RANKS (0..n-1), so the plain
-    * HashPartitioner is the identity here (unlike the float tier's
-    * composite ids — see [[HnswRouted.CellPartitioner]]). */
+    * construction. */
   def attach(spark: SparkSession, path: String,
              persist: Boolean = true,
-             storage: org.apache.spark.storage.StorageLevel = DefaultStorage): RoutedCodeIndex = {
-    val dir = VersionedIndexDirs.newestDone(spark, path)
-
-    val meta = spark.read.parquet(s"$dir/meta").collect().head
-    val params = RoutedImage.paramsFromMeta(meta)
-    val seed = meta.getAs[Long]("seed")
+             storage: StorageLevel = DefaultStorage): RoutedCodeIndex = {
+    val (dir, meta) = RoutedImage.open(spark, path)
     val anchors = spark.read.parquet(s"$dir/anchors").collect()
       .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1).map(_._2)
-
-    val part = new HashPartitioner(math.max(1, anchors.length))
-    val codes = spark.read.parquet(s"$dir/codes")
-      .select(col("cell"), col("id"), col("code")).as(RoutedImage.codeRowEnc).rdd
-      .map { case (c, id, code) => (c, (id, code)) }
-    val links = RoutedImage.readLinks(spark, dir)
-    val entries = RoutedImage.readEntries(spark, dir)
-
-    val shards = codes.cogroup(links, entries, part).mapPartitions({ it =>
-      it.map { case (cell, (cs, ls, es)) =>
-        cell -> CodeCellShard(cell, LongLongMap.from(cs.iterator, 64),
-          RoutedImage.assembleSnapshot(ls, es))
-      }
-    }, preservesPartitioning = true)
-    if (persist) {
-      shards.persist(storage).setName("graft-hnsw-routed-codes")
-      shards.count()
-    }
-    RoutedCodeIndex(params, seed, anchors, shards,
+    RoutedCodeIndex(RoutedImage.paramsFromMeta(meta), meta.getAs[Long]("seed"),
+      anchors, RoutedImage.shards(CodeTier, spark, dir, CodeTier.codes,
+        partitionerFor(anchors), persist, storage)((cell, cs, snap) =>
+        CodeCellShard(cell, LongLongMap.from(cs.iterator, 64), snap)),
       RoutedImage.readTombstones(spark, dir))
   }
 
@@ -826,7 +718,7 @@ object HnswRoutedCodes {
       graft.BuildLedger.timed("hnsw_routed_codes_save_attach") {
         val built = buildCached(codes, params, nCells, seed, key)
         val dir = graft.TempDirs.create("graft_routed_codes_")
-        saveWith(codes.sparkSession, built, dir)
+        save(built, dir)
         attach(codes.sparkSession, dir)
       })
 

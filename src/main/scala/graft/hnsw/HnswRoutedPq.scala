@@ -1,11 +1,15 @@
 package graft.hnsw
 
+import org.apache.spark.Partitioner
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.PqKernels
-import graft.operators.{Ivf, Pq}
-import graft.store.{AdcVectorStore, EntryPoint, GraphSnapshot, LayerCsr}
+import graft.operators.Pq
+import graft.store.{AdcVectorStore, GraphSnapshot, InMemoryGraph}
 
 /** Routed + PQ compose — per-cell ADC codes on the routed serving tier:
   * the beyond-memory shape at the SCALE tier. [[HnswRouted]] holds full
@@ -120,34 +124,33 @@ object HnswRoutedPq {
       params: HnswParams,
       router: HnswRouted.Router,
       codebook: Array[Array[Array[Float]]],
-      shards: org.apache.spark.rdd.RDD[(Int, PqCellShard)],
+      shards: RDD[(Int, PqCellShard)],
       tombstones: Array[Long],
       buildSeed: Long = 13L,
       // patch RDDs still pinned under `shards` (the
       // [[compactSoloCellsPatched]] rebuilt-cells overlay) — released
       // by [[foldOverlay]] or [[unpersist]]
-      overlay: Seq[org.apache.spark.rdd.RDD[_]] = Nil) {
+      overlay: Seq[RDD[_]] = Nil) {
     def unpersist(): Unit = {
       overlay.foreach(_.unpersist())
       shards.unpersist()
     }
   }
 
-  /** The PQ tier's [[RoutedTier]] binding — the shared lifecycle's
-    * delete/foldOverlay/guards/removed-collection run through it; the
-    * LOCAL survivor rebuild is deliberately unbound (a solo cell
-    * rebuild fetches survivor floats from the raw-vector table — the
-    * [[compactSolo]] family is the tier-specific path). */
+  /** The PQ tier's [[RoutedTier]] binding — the shared lifecycle runs
+    * through it; the tier's compactions rebuild from survivor floats
+    * FETCHED from the raw-vector table ([[soloRebuild]]), since codes
+    * cannot rebuild a servable graph. */
   private[graft] object PqTier extends RoutedServing[PqCellShard,
       RoutedPqIndex, Array[Float], HnswRouted.Router] {
-    def shards(i: RoutedPqIndex): org.apache.spark.rdd.RDD[(Int, PqCellShard)] = i.shards
+    def shards(i: RoutedPqIndex): RDD[(Int, PqCellShard)] = i.shards
     def tombstones(i: RoutedPqIndex): Array[Long] = i.tombstones
-    def overlays(i: RoutedPqIndex): Seq[org.apache.spark.rdd.RDD[_]] = i.overlay
-    def make(i: RoutedPqIndex, shards: org.apache.spark.rdd.RDD[(Int, PqCellShard)],
-             tombstones: Array[Long],
-             overlays: Seq[org.apache.spark.rdd.RDD[_]]): RoutedPqIndex =
+    def overlays(i: RoutedPqIndex): Seq[RDD[_]] = i.overlay
+    def make(i: RoutedPqIndex, shards: RDD[(Int, PqCellShard)],
+             tombstones: Array[Long], overlays: Seq[RDD[_]]): RoutedPqIndex =
       RoutedPqIndex(i.params, i.router, i.codebook, shards, tombstones,
         i.buildSeed, overlays)
+    def partitioner(i: RoutedPqIndex): Partitioner = HnswRouted.partitionerFor(i.router)
     val cacheName = "graft-hnsw-routed-pq"
     val tierName = "routed-pq"
     val unpersistBlocking = false
@@ -156,15 +159,14 @@ object HnswRoutedPq {
     def memberCount(s: PqCellShard): Int = s.codes.size
     def containsId(s: PqCellShard, id: Long): Boolean = s.codes.contains(id)
     def idIterator(s: PqCellShard): Iterator[Long] = s.codes.keysIterator
+    def snapshot(s: PqCellShard): GraphSnapshot = s.snapshot
     val queryCol = "qvec"
     def queryEnc: Encoder[(Long, Array[Float])] = pairEnc
     def router(i: RoutedPqIndex): HnswRouted.Router = i.router
     def probeCells(r: HnswRouted.Router, q: Array[Float], nProbe: Int): Iterator[Int] =
       r.probeCells(q, nProbe)
-    def survivorRebuild(i: RoutedPqIndex): (Int, PqCellShard, Array[Long]) => PqCellShard =
-      throw new UnsupportedOperationException(
-        "routed-pq: local survivor rebuild needs the raw-vector table — " +
-          "use compactSolo/compactSoloCells")
+    val codes = RoutedImage.Payload[PqCellShard, Long]("codes", "code",
+      RoutedImage.codeRowEnc, _.codes.toSeq.iterator)
   }
 
   /** Derive the PQ serving tier from a built routed index: train one
@@ -202,18 +204,7 @@ object HnswRoutedPq {
                      codebook: Array[Array[Array[Float]]],
                      persist: Boolean = true): RoutedPqIndex = {
     requireL2(index)
-    val sc = index.shards.sparkContext
-    val cbB = sc.broadcast(codebook)
-    val shards = index.shards.mapPartitions({ it =>
-      it.map { case (cell, s) => cell -> encodeShard(s, cbB.value) }
-    }, preservesPartitioning = true)
-    if (persist) {
-      shards.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        .setName("graft-hnsw-routed-pq")
-      shards.count()
-    }
-    RoutedPqIndex(index.cfg.params, index.router, codebook, shards,
-      index.tombstones, buildSeed = index.cfg.seed)
+    derive(index, codebook, None, persist, forceCount = false)._1
   }
 
   /** Build the PQ tier DIRECTLY from a vector table — no float index
@@ -267,8 +258,8 @@ object HnswRoutedPq {
                 sampleMax: Int = 100000,
                 persist: Boolean = true,
                 maxCellRows: Long = HnswRouted.DefaultMaxCellRows,
-                storage: org.apache.spark.storage.StorageLevel =
-                  org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
+                storage: StorageLevel =
+                  StorageLevel.MEMORY_AND_DISK,
                 modalitySplit: Boolean = false,
                 dedupIds: Boolean = true,
                 pinInput: Boolean = true): RoutedPqIndex = {
@@ -281,7 +272,7 @@ object HnswRoutedPq {
       else projected
     val deduped =
       if (pinInput)
-        deduped0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        deduped0.persist(StorageLevel.MEMORY_AND_DISK)
       else deduped0
     try {
       val cb =
@@ -302,42 +293,12 @@ object HnswRoutedPq {
         }
       val (router, cells) = HnswRouted.planRouter(deduped, cfg, nCells,
         maxCellRows, modalitySplit)
-      val part = HnswRouted.partitionerFor(router)
-      val keyed = cells
-        .select(col("id"), col("vec"), col("cell"))
-        .as(tripleEnc).rdd
-        .map { case (id, vec, cell) => (cell, (id, vec)) }
-        .partitionBy(part)
-      val cbB = spark.sparkContext.broadcast(cb)
-      val params = cfg.params
-      val seed = cfg.seed
-      val shards = keyed.mapPartitions({ it =>
-        val byCell = scala.collection.mutable.Map
-          .empty[Int, scala.collection.mutable.ArrayBuffer[(Long, Array[Float])]]
-        it.foreach { case (cell, row) =>
-          byCell.getOrElseUpdate(cell,
-            scala.collection.mutable.ArrayBuffer.empty) += row
-        }
-        byCell.iterator.map { case (cell, buf) =>
-          val rows = buf.toArray.sortBy(_._1)
-          // the documented dedupIds=false fail-fast: rows are id-sorted,
-          // so a duplicate is adjacent — without this the second insert
-          // would silently self-edge the graph and clobber the code map
-          var i = 1
-          while (i < rows.length) {
-            require(rows(i)._1 != rows(i - 1)._1,
-              s"buildSolo: duplicate id ${rows(i)._1} in cell $cell " +
-                "(pass dedupIds=true or dedupe the source)")
-            i += 1
-          }
-          cell -> buildCellSolo(cell, rows, cbB.value, params, seed)
-        }
-      }, preservesPartitioning = true)
-      if (persist) {
-        shards.persist(storage).setName("graft-hnsw-routed-pq")
-        shards.count()
-      }
-      RoutedPqIndex(params, router, cb, shards, Array.empty,
+      // the per-cell build fail-fasts on an in-cell duplicate id (the
+      // documented dedupIds = false contract)
+      val shards = RoutedLifecycle.build(PqTier, HnswRouted.keyedByCell(cells),
+        HnswRouted.partitionerFor(router), persist, storage)(growSolo(
+        spark.sparkContext.broadcast(cb), cfg.params, cfg.seed, ingested = false))
+      RoutedPqIndex(cfg.params, router, cb, shards, Array.empty,
         buildSeed = cfg.seed)
     } finally if (pinInput) { deduped.unpersist(blocking = false); () }
   }
@@ -519,9 +480,6 @@ object HnswRoutedPq {
   // re-rank table — the one full-precision copy the design keeps).
   // --------------------------------------------------------------------
 
-  private val tripleEnc = Encoders.tuple(
-    Encoders.scalaLong, ExprEnc.floatArray, Encoders.scalaInt)
-
   /** Fingerprint of a solo-ingested cell: the true content fingerprint
     * needs the old members' floats, which the solo tier does not hold —
     * fold the new ids into the prior digest so the value can never
@@ -556,74 +514,40 @@ object HnswRoutedPq {
     * re-encodes them and restores true-content digests. */
   def ingest(index: RoutedPqIndex, newRows: DataFrame,
              persist: Boolean = true, unpersistPrior: Boolean = false,
-             seed: Long = Long.MinValue): RoutedPqIndex = {
-    val effSeed = if (seed == Long.MinValue) index.buildSeed else seed
-    val router = index.router
-    val spark = newRows.sparkSession
-    val deduped = newRows.select(col("id"), col("vec"))
-      .groupBy(col("id")).agg(max(col("vec")).as("vec"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val batchIds = deduped.select(col("id"))
-        .as(Encoders.scalaLong).collect()
-      java.util.Arrays.sort(batchIds)
-      // shared fail-fast guards (RoutedLifecycle): tombstoned-id
-      // resurrect + cross-cell duplicate-id scan
-      RoutedLifecycle.guardResurrect(PqTier)(index, batchIds)
-      RoutedLifecycle.guardClashes(PqTier)(index, batchIds)
-      val part = index.shards.partitioner.getOrElse(
-        HnswRouted.partitionerFor(router))
-      val keyed = deduped
-        .select(col("id"), col("vec"), router.cellCol(col("vec")).as("cell"))
-        .as(tripleEnc).rdd
-        .map { case (id, vec, cell) => (cell, (id, vec)) }
-        .partitionBy(part)
-      val params = index.params
-      val cbB = spark.sparkContext.broadcast(index.codebook)
-      val merged = index.shards.cogroup(keyed).mapPartitions({ it =>
-        val searcher = new HnswSearcher(params)
-        it.flatMap { case (cell, (shards, rows)) =>
-          if (rows.isEmpty) shards.iterator.map(cell -> _)
-          else {
-            val cb = cbB.value
-            val sorted = rows.toArray.sortBy(_._1)
-            val prior = shards.headOption
-            // copy-on-merge: the prior shard may still be cached —
-            // never mutate it in place (the codes tier's discipline)
-            val codeMap = prior match {
-              case Some(p) => p.codes.copy(extra = sorted.length)
-              case None    => new LongLongMap(sorted.length)
-            }
-            val graph = prior match {
-              case Some(p) => graft.store.InMemoryGraph.fromSnapshot(p.snapshot)
-              case None    => new graft.store.InMemoryGraph
-            }
-            val store = new AdcVectorStore(cb, base = codeMap(_))
-            sorted.foreach { case (id, v) =>
-              require(!codeMap.contains(id),
-                s"routed-pq ingest: id $id already present in cell $cell")
-              store.prepareQueryWithId(id, v)
-              // searcher.insert runs the S10 kernel, whose vectors.insert
-              // call QUANTIZES the staged point (AdcVectorStore contract):
-              // from here on the id serves at code precision
-              searcher.insert(store, graph, id,
-                searcher.selectLayerByHash(id, effSeed))
-              codeMap.put(id, PqKernels.encodeArray(v, cb))
-            }
-            Iterator(cell -> PqCellShard(cell, codeMap, graph.snapshot,
-              ingestedFp(prior.map(_.fingerprint).getOrElse(0L),
-                sorted.iterator.map(_._1))))
-          }
-        }
-      }, preservesPartitioning = true)
-      if (persist) {
-        merged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          .setName("graft-hnsw-routed-pq")
-        merged.count()
-      }
-      if (unpersistPrior) index.unpersist()
-      index.copy(shards = merged)
-    } finally deduped.unpersist(blocking = false)
+             seed: Long = Long.MinValue): RoutedPqIndex =
+    RoutedLifecycle.ingest(PqTier)(index, newRows, "vec", persist,
+      unpersistPrior, StorageLevel.MEMORY_AND_DISK)(
+      HnswRouted.routeBy(index.router))(growSolo(
+      newRows.sparkSession.sparkContext.broadcast(index.codebook), index.params,
+      if (seed == Long.MinValue) index.buildSeed else seed, ingested = true))
+
+  /** The solo cell kernel — [[buildSolo]], [[ingest]] and the
+    * `floatExact = false` compaction rebuild all grow a cell here: each
+    * id-sorted row's RAW float serves its own insertion beam against
+    * member codes (asymmetric ADC), then [[AdcVectorStore.insert]]
+    * QUANTIZES it — from that moment the point serves at code precision
+    * exactly like every restored member; `prior`'s graph and codes
+    * absorb the rows copy-on-merge (a cached shard is never mutated).
+    * The fingerprint is the TRUE content digest of a fresh cell's rows;
+    * `ingested` folds the new ids into the prior digest instead
+    * ([[ingestedFp]]; 0 for a cell that had no shard). */
+  private def growSolo(cbB: Broadcast[Array[Array[Array[Float]]]], params: HnswParams,
+                       seed: Long, ingested: Boolean)(cell: Int, prior: Option[PqCellShard],
+                       rows: Array[(Long, Array[Float])]): PqCellShard = {
+    val cb = cbB.value
+    val codes = prior.fold(new LongLongMap(rows.length))(_.codes.copy(extra = rows.length))
+    val graph = prior.fold(new InMemoryGraph)(p => InMemoryGraph.fromSnapshot(p.snapshot))
+    val store = new AdcVectorStore(cb, base = codes(_))
+    val searcher = new HnswSearcher(params)
+    rows.foreach { case (id, v) =>
+      require(!codes.contains(id), s"routed-pq ingest: id $id already present in cell $cell")
+      store.prepareQueryWithId(id, v)
+      searcher.insert(store, graph, id, searcher.selectLayerByHash(id, seed))
+      codes.put(id, PqKernels.encodeArray(v, cb))
+    }
+    PqCellShard(cell, codes, graph.snapshot,
+      if (ingested) ingestedFp(prior.fold(0L)(_.fingerprint), rows.iterator.map(_._1))
+      else contentFingerprintRows(rows.iterator))
   }
 
   /** Opt-in serving warm-up — [[HnswRouted.warm]] on the compressed
@@ -683,82 +607,30 @@ object HnswRoutedPq {
       index: RoutedPqIndex, vectors: DataFrame,
       persist: Boolean = true, unpersistPrior: Boolean = false,
       forceCount: Boolean = true,
-      floatExact: Boolean = true): (RoutedPqIndex, Long, Long) = {
-    if (index.tombstones.isEmpty) return (index, 0L, index.router.allCells.size.toLong)
-    val spark = vectors.sparkSession
-    val sc = spark.sparkContext
-    val deadB = sc.broadcast(index.tombstones)
-    val part = index.shards.partitioner.getOrElse(
-      HnswRouted.partitionerFor(index.router))
-    // survivor ids of TOUCHED cells only — each carries its cell so the
-    // fetched floats shuffle straight back to the pinned partition
-    val survivorIds = index.shards.flatMap { case (cell, s) =>
-      val dead = deadB.value
-      if (!dead.exists(s.codes.contains)) Iterator.empty
-      else {
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]
-        s.codes.foreach { (id, _) =>
-          if (java.util.Arrays.binarySearch(dead, id) < 0) out += ((id, cell))
-        }
-        out.iterator
-      }
-    }
-    import spark.implicits._
-    val fetched = survivorIds.toDF("id", "cell")
-      .join(vectors.select(col("id"), col("vec")), Seq("id"))
-      .select(col("id"), col("vec"), col("cell"))
-      .as(tripleEnc).rdd
-      .map { case (id, vec, cell) => (cell, (id, vec)) }
-      .partitionBy(part)
-    val params = index.params
-    val buildSeed = index.buildSeed
-    val cbB = sc.broadcast(index.codebook)
-    val rebuilt = sc.longAccumulator("pq-compact-solo-rebuilt")
-    val carried = sc.longAccumulator("pq-compact-solo-carried")
-    val merged = index.shards.cogroup(fetched).mapPartitions({ it =>
-      it.flatMap { case (cell, (shards, rows)) =>
-        shards.headOption match {
-          case None => Iterator.empty
-          case Some(p) =>
-            val dead = deadB.value
-            if (!dead.exists(p.codes.contains)) {
-              carried.add(1)
-              Iterator(cell -> p)
-            } else {
-              rebuilt.add(1)
-              val survivors = rows.toArray.sortBy(_._1)
-              require(survivors.length == p.codes.size - dead.count(p.codes.contains),
-                s"routed-pq compactSolo: cell $cell fetched ${survivors.length} " +
-                  s"survivor vectors but the shard holds " +
-                  s"${p.codes.size - dead.count(p.codes.contains)} — the " +
-                  "raw-vector table is missing rows the index serves")
-              if (floatExact) {
-                val cfg = HnswDistributed.BuildConfig(params, "l2",
-                  seed = buildSeed)
-                val fresh = HnswRouted.buildCellFresh(cell, survivors, cfg)
-                Iterator(cell -> encodeShard(fresh, cbB.value))
-              } else
-                Iterator(cell -> buildCellSolo(cell, survivors, cbB.value,
-                  params, buildSeed))
-            }
-        }
-      }
-    }, preservesPartitioning = true)
-    if (persist) {
-      merged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        .setName("graft-hnsw-routed-pq")
-      merged.count()
-    } else if (forceCount) merged.count()
-    if (unpersistPrior) index.unpersist()
-    // carry the prior handle's patch overlays unless unpersist()
-    // already released them: the merged composite reads (or read)
-    // through them, and a caller that drops the prior reference after
-    // `idx = compactSolo(idx, ...)` must still be able to release the
-    // cached patch blocks via the NEW handle's unpersist()/foldOverlay
-    (RoutedPqIndex(index.params, index.router, index.codebook, merged,
-      Array.empty[Long], index.buildSeed,
-      overlay = if (unpersistPrior) Nil else index.overlay),
-      rebuilt.value, carried.value)
+      floatExact: Boolean = true): (RoutedPqIndex, Long, Long) =
+    if (index.tombstones.isEmpty) (index, 0L, index.router.allCells.size.toLong)
+    else RoutedLifecycle.compact(PqTier)(index, soloRebuild(index, vectors,
+      floatExact), persist, unpersistPrior, StorageLevel.MEMORY_AND_DISK, forceCount)
+
+  /** The solo compactions' cell rebuild: survivor floats FETCHED from
+    * the raw-vector table (the re-rank table — the one full-precision
+    * copy the design keeps; only the picked cells' survivors are
+    * joined, and their count is checked against the shard), then either
+    * the float tier's kernel (`floatExact`: an exact-distance graph,
+    * re-encoded) or the solo kernel ([[growSolo]]: graph-identical to a
+    * fresh solo build of the survivors). Codes and a TRUE content
+    * fingerprint come back either way; layers draw from the build seed,
+    * so a float-exact rebuild is graph-identical to the float tier's
+    * compaction of the same survivors. */
+  private def soloRebuild(index: RoutedPqIndex, vectors: DataFrame,
+                          floatExact: Boolean): RoutedLifecycle.Rebuild[PqCellShard] = {
+    val cbB = vectors.sparkSession.sparkContext.broadcast(index.codebook)
+    val float = HnswRouted.growCell(
+      HnswDistributed.BuildConfig(index.params, "l2", seed = index.buildSeed)) _
+    val solo = growSolo(cbB, index.params, index.buildSeed, ingested = false) _
+    RoutedLifecycle.Rebuild((cell, _, _, rows) =>
+      if (floatExact) encodeShard(float(cell, None, rows), cbB.value)
+      else solo(cell, None, rows), Some(vectors))
   }
 
   // --------------------------------------------------------------------
@@ -828,163 +700,29 @@ object HnswRoutedPq {
                        cells: Array[Int], persist: Boolean = true,
                        unpersistPrior: Boolean = false,
                        floatExact: Boolean = true): RoutedPqIndex =
-    if (cells.isEmpty || index.tombstones.isEmpty) index
-    else {
-      val (merged, removed) =
-        rebuildCellsSolo(index, vectors, cells, touchedOnly = false,
-          floatExact = floatExact)
-      if (persist) {
-        merged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          .setName("graft-hnsw-routed-pq")
-        merged.count()
-        if (unpersistPrior) index.unpersist()
-      }
-      val remaining = index.tombstones.filter(id =>
-        java.util.Arrays.binarySearch(removed, id) < 0)
-      // same overlay carry as compactSoloCounted: a prior patched
-      // handle's overlay RDDs stay releasable through this handle
-      RoutedPqIndex(index.params, index.router, index.codebook, merged,
-        remaining, index.buildSeed,
-        overlay = if (persist && unpersistPrior) Nil else index.overlay)
-    }
+    RoutedLifecycle.compactCells(PqTier)(index, cells, soloRebuild(index,
+      vectors, floatExact), persist, unpersistPrior, StorageLevel.MEMORY_AND_DISK)
 
   /** [[compactSoloCells]] with O(touched) PERSISTED BYTES — the
     * float/codes tiers' patch-overlay discipline on the compressed
     * tier: only the touched partitions' cells persist in the overlay;
     * the served composite reads the base's cached blocks everywhere
     * else; the base handle keeps serving its own answer; patches
-    * stack, [[foldOverlay]] bounds the stack. */
+    * stack, [[foldOverlay]] bounds the stack. With persist = false
+    * every action on the composite re-runs the survivor-float fetch
+    * join and the listed cells' rebuild — one-shot callers only. */
   def compactSoloCellsPatched(index: RoutedPqIndex, vectors: DataFrame,
                               cells: Array[Int],
                               persist: Boolean = true,
                               floatExact: Boolean = true): RoutedPqIndex =
-    if (cells.isEmpty || index.tombstones.isEmpty) index
-    else {
-      val (overlay, removed) =
-        rebuildCellsSolo(index, vectors, cells, touchedOnly = true,
-          floatExact = floatExact)
-      if (persist) {
-        overlay.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          .setName("graft-hnsw-routed-pq-patch")
-        overlay.count()
-      }
-      val patched = RoutedLifecycle.patchComposite(index.shards, overlay)
-      val remaining = index.tombstones.filter(id =>
-        java.util.Arrays.binarySearch(removed, id) < 0)
-      // the overlay is tracked in the handle even with persist = false
-      // (unpersist of a never-persisted RDD is a no-op, and foldOverlay
-      // must still know a patch layer exists to fold). NOTE: with
-      // persist = false every action on the patched composite re-runs
-      // the survivor-float fetch join and the flagged cells' rebuild —
-      // acceptable only as a one-shot; serve-many callers want
-      // persist = true or an immediate foldOverlay.
-      RoutedPqIndex(index.params, index.router, index.codebook, patched,
-        remaining, index.buildSeed,
-        overlay = index.overlay :+ overlay)
-    }
-
-  /** Shared rebuild pass of the two targeted solo compactions: fetch
-    * survivor floats for ONLY the listed cells, rebuild those cells
-    * fresh (float-exact graph + re-encoded codes + true content
-    * fingerprint). `touchedOnly = true` yields the patch overlay
-    * (untouched PARTITIONS empty); `false` yields the full composite
-    * (untouched cells pass by reference). Also returns the sorted
-    * tombstoned ids that lived in the listed cells. */
-  private def rebuildCellsSolo(index: RoutedPqIndex, vectors: DataFrame,
-                               cells: Array[Int], touchedOnly: Boolean,
-                               floatExact: Boolean = true)
-      : (org.apache.spark.rdd.RDD[(Int, PqCellShard)], Array[Long]) = {
-    val spark = vectors.sparkSession
-    val sc = spark.sparkContext
-    val params = index.params
-    val cellSet = cells.toSet
-    val deadB = sc.broadcast(index.tombstones)
-    val part = index.shards.partitioner.getOrElse(
-      HnswRouted.partitionerFor(index.router))
-    val touchedParts = cells.map(part.getPartition(_: Any)).toSet
-    val removed = RoutedLifecycle.collectRemoved(PqTier)(index, cells)
-    // prunedShards, like the `removed` pass above: a 1-cell remedy at
-    // 1e8 schedules one partition's task, not a deserializing sweep of
-    // every cached block
-    val survivorIds = HnswRouted.prunedShards(index.shards, cells)
-      .flatMap { case (cell, s) =>
-        if (!cellSet(cell)) Iterator.empty
-        else {
-          val dead = deadB.value
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]
-          s.codes.foreach { (id, _) =>
-            if (java.util.Arrays.binarySearch(dead, id) < 0) out += ((id, cell))
-          }
-          out.iterator
-        }
-      }
-    import spark.implicits._
-    val fetched = survivorIds.toDF("id", "cell")
-      .join(vectors.select(col("id"), col("vec")), Seq("id"))
-      .select(col("id"), col("vec"), col("cell"))
-      .as(tripleEnc).rdd
-      .map { case (id, vec, cell) => (cell, (id, vec)) }
-      .partitionBy(part)
-    val cbB = sc.broadcast(index.codebook)
-    val seed = index.buildSeed
-    val rebuilt = index.shards.cogroup(fetched).mapPartitionsWithIndex({ (i, it) =>
-      if (touchedOnly && !touchedParts(i)) Iterator.empty
-      else it.flatMap { case (cell, (shards, rows)) =>
-        shards.headOption.map { p =>
-          if (!cellSet(cell)) cell -> p
-          else {
-            val dead = deadB.value
-            val survivors = rows.toArray.sortBy(_._1)
-            require(survivors.length == p.codes.size - dead.count(p.codes.contains),
-              s"routed-pq targeted compact: cell $cell fetched " +
-                s"${survivors.length} survivor vectors but the shard holds " +
-                s"${p.codes.size - dead.count(p.codes.contains)} — the " +
-                "raw-vector table is missing rows the index serves")
-            if (floatExact) {
-              val cfg = HnswDistributed.BuildConfig(params, "l2", seed = seed)
-              cell -> encodeShard(HnswRouted.buildCellFresh(cell, survivors, cfg),
-                cbB.value)
-            } else
-              // the buildSolo kernel: graph-identical to a fresh solo
-              // build of these survivors (same sort, same seed, same
-              // codebook) — the post-remedy serve-geometry parity path
-              cell -> buildCellSolo(cell, survivors, cbB.value, params, seed)
-          }
-        }
-      }
-    }, preservesPartitioning = true)
-    (rebuilt, removed)
-  }
-
-  /** One cell's [[buildSolo]] kernel over pre-sorted unique (id, vec)
-    * rows: ADC-space insertion with the RAW float staged (asymmetric —
-    * the new point's float serves its own beam against member codes,
-    * then drops to code precision), codes + TRUE content fingerprint.
-    * Shared by [[buildSolo]] and the `floatExact = false` targeted
-    * rebuild, so a remediated cell is graph-identical to a fresh solo
-    * build of the same survivors. */
-  private def buildCellSolo(cell: Int, rows: Array[(Long, Array[Float])],
-                            cb: Array[Array[Array[Float]]],
-                            params: HnswParams, seed: Long): PqCellShard = {
-    val codeMap = new LongLongMap(rows.length)
-    val graph = new graft.store.InMemoryGraph
-    val store = new AdcVectorStore(cb, base = codeMap(_))
-    val searcher = new HnswSearcher(params)
-    rows.foreach { case (id, v) =>
-      store.prepareQueryWithId(id, v)
-      searcher.insert(store, graph, id,
-        searcher.selectLayerByHash(id, seed))
-      codeMap.put(id, PqKernels.encodeArray(v, cb))
-    }
-    PqCellShard(cell, codeMap, graph.snapshot,
-      contentFingerprintRows(rows.iterator))
-  }
+    RoutedLifecycle.compactCellsPatched(PqTier)(index, cells,
+      soloRebuild(index, vectors, floatExact), persist)
 
   /** Fold stacked patch overlays into one self-contained persisted
     * image — [[HnswRoutedCodes.foldOverlay]] on the compressed tier. */
   def foldOverlay(index: RoutedPqIndex,
-                  storage: org.apache.spark.storage.StorageLevel =
-                    org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): RoutedPqIndex =
+                  storage: StorageLevel =
+                    StorageLevel.MEMORY_AND_DISK): RoutedPqIndex =
     RoutedLifecycle.foldOverlay(PqTier)(index, storage)
 
   /** Detect-and-remediate — [[HnswRouted.remediateMergedCells]] on the
@@ -1053,99 +791,78 @@ object HnswRoutedPq {
       unpersistPrior: Boolean = false,
       forceCount: Boolean = true): (RoutedPqIndex, Long, Long) = {
     requireL2(source)
-    val sc = source.shards.sparkContext
     val samePartitioning = (source.shards.partitioner, old.shards.partitioner) match {
       case (Some(a), Some(b)) => a == b // CellPartitioner: value equality
       case _                  => false
     }
-    if (!samePartitioning) {
-      // layout changed (retrain / foreign attach): carry BY CONTENT
-      // FINGERPRINT across the layouts (see the Scaladoc). Driver
-      // state is one (fingerprint, cell) pair per cell on each side —
-      // nCells-sized, never corpus-sized.
-      val oldFps = old.shards.map { case (c, s) => (s.fingerprint, c) }
-        .collect().toMap // fp collision across cells: content-distinct
-                         // cells (ids partition) — 2^-64 class
-      val srcFps = source.shards.map { case (c, s) =>
-        (c, contentFingerprint(s.vectors), s.vectors.size)
-      }.collect()
-      val carryByNewCell = srcFps.flatMap { case (nc, fp, _) =>
-        oldFps.get(fp).map(oc => (oc, nc))
-      }
-      if (carryByNewCell.isEmpty) {
-        val v = fromRoutedWith(source, old.codebook, persist)
-        if (unpersistPrior) old.unpersist()
-        (v, source.router.allCells.size.toLong, 0L)
-      } else {
-        val part = source.shards.partitioner.getOrElse(
-          HnswRouted.partitionerFor(source.router))
-        val carryMapB = sc.broadcast(carryByNewCell.toMap) // oldCell -> newCell
-        // ship matched cells' code maps keyed by the NEW cell id (the
-        // only shuffle; 8 B/row code bytes of carried cells)
-        val shipped = old.shards.flatMap { case (oc, s) =>
-          carryMapB.value.get(oc).map(nc => (nc, s.codes))
-        }.partitionBy(part)
-        val cbB = sc.broadcast(old.codebook)
-        val reenc = sc.longAccumulator("pq-rederive-reencoded")
-        val carry = sc.longAccumulator("pq-rederive-carried")
-        val shards = source.shards.zipPartitions(shipped,
-            preservesPartitioning = true) { (fIt, cIt) =>
-          val carried = cIt.toMap
-          fIt.map { case (cell, s) =>
-            carried.get(cell) match {
-              case Some(codes) if codes.size == s.vectors.size =>
-                carry.add(1)
-                // codes by reference; the new layout's graph + a TRUE
-                // content digest (the match condition IS that digest)
-                cell -> PqCellShard(cell, codes, s.snapshot,
-                  contentFingerprint(s.vectors))
-              case _ =>
-                reenc.add(1)
-                cell -> encodeShard(s, cbB.value)
-            }
-          }
-        }
-        if (persist) {
-          shards.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            .setName("graft-hnsw-routed-pq")
-          shards.count()
-        } else if (forceCount) shards.count()
-        if (unpersistPrior) old.unpersist()
-        (RoutedPqIndex(source.cfg.params, source.router, old.codebook, shards,
-          source.tombstones, buildSeed = source.cfg.seed),
-          reenc.value, carry.value)
-      }
-    } else {
-      val cbB = sc.broadcast(old.codebook)
-      val reenc = sc.longAccumulator("pq-rederive-reencoded")
-      val carry = sc.longAccumulator("pq-rederive-carried")
-      val shards = source.shards.zipPartitions(old.shards,
-          preservesPartitioning = true) { (fIt, pIt) =>
-        val prior = pIt.map(kv => kv._1 -> kv._2).toMap
-        fIt.map { case (cell, s) =>
-          val fp = contentFingerprint(s.vectors)
-          prior.get(cell) match {
-            case Some(p) if p.fingerprint == fp &&
-                p.codes.size == s.vectors.size =>
-              carry.add(1)
-              // codes by reference; snapshot follows the source (free —
-              // content-identical cells rebuild graph-identically)
-              cell -> PqCellShard(cell, p.codes, s.snapshot, fp)
-            case _ =>
-              reenc.add(1)
-              cell -> encodeShard(s, cbB.value)
-          }
+    val prior =
+      if (samePartitioning) Some(old.shards.mapValues(s => (s.codes, s.fingerprint)))
+      else {
+        // layout changed (retrain / foreign attach): carry BY CONTENT
+        // FINGERPRINT across the layouts (see the Scaladoc). Driver
+        // state is one (fingerprint, cell) pair per cell on each side —
+        // nCells-sized, never corpus-sized.
+        val oldFps = old.shards.map { case (c, s) => (s.fingerprint, c) }
+          .collect().toMap // fp collision across cells: content-distinct
+                           // cells (ids partition) — 2^-64 class
+        val carryByNewCell = source.shards.map { case (c, s) =>
+          (c, contentFingerprint(s.vectors))
+        }.collect().flatMap { case (nc, fp) => oldFps.get(fp).map(oc => (oc, nc)) }
+        // no carry: one narrow encode pass, no shuffle
+        if (carryByNewCell.isEmpty) None
+        else {
+          val carryMapB = source.shards.sparkContext.broadcast(carryByNewCell.toMap)
+          // ship matched cells' code maps keyed by the NEW cell id (the
+          // only shuffle; 8 B/row code bytes of carried cells)
+          Some(old.shards.flatMap { case (oc, s) =>
+            carryMapB.value.get(oc).map(nc => (nc, (s.codes, s.fingerprint)))
+          }.partitionBy(source.shards.partitioner.getOrElse(
+            HnswRouted.partitionerFor(source.router))))
         }
       }
-      if (persist) {
-        shards.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          .setName("graft-hnsw-routed-pq")
-        shards.count()
-      } else if (forceCount) shards.count() // populate the accumulators
-      if (unpersistPrior) old.unpersist()
-      (RoutedPqIndex(source.cfg.params, source.router, old.codebook, shards,
-        source.tombstones, buildSeed = source.cfg.seed), reenc.value, carry.value)
+    val out = derive(source, old.codebook, prior, persist, forceCount)
+    if (unpersistPrior) old.unpersist()
+    out
+  }
+
+  /** The one encode pass of [[fromRoutedWith]] and [[rederive]]: each
+    * source cell carries the prior (codes, fingerprint) delivered for
+    * it (`prior`, co-partitioned with the source) when the sizes agree
+    * and the fingerprint matches its current content — codes by
+    * reference, the source's graph snapshot (free: content-identical
+    * cells rebuild graph-identically), a TRUE content digest — and
+    * re-encodes otherwise. Returns (index, reencodedCells,
+    * carriedCells); the counters ride accumulators, so with `persist =
+    * false` only `forceCount` populates them. */
+  private def derive(source: HnswRouted.RoutedIndex,
+                     codebook: Array[Array[Array[Float]]],
+                     prior: Option[RDD[(Int, (LongLongMap, Long))]],
+                     persist: Boolean, forceCount: Boolean): (RoutedPqIndex, Long, Long) = {
+    val sc = source.shards.sparkContext
+    val cbB = sc.broadcast(codebook)
+    val reenc = sc.longAccumulator("pq-rederive-reencoded")
+    val carry = sc.longAccumulator("pq-rederive-carried")
+    def pass(it: Iterator[(Int, HnswRouted.CellShard)],
+             carried: Map[Int, (LongLongMap, Long)]) = it.map { case (cell, s) =>
+      carried.get(cell).filter { case (codes, fp) =>
+        codes.size == s.vectors.size && fp == contentFingerprint(s.vectors)
+      } match {
+        case Some((codes, fp)) =>
+          carry.add(1)
+          cell -> PqCellShard(cell, codes, s.snapshot, fp)
+        case None =>
+          reenc.add(1)
+          cell -> encodeShard(s, cbB.value)
+      }
     }
+    val shards = prior.fold(source.shards.mapPartitions(pass(_, Map.empty),
+      preservesPartitioning = true))(p => source.shards.zipPartitions(p,
+      preservesPartitioning = true)((f, c) => pass(f, c.toMap)))
+    if (persist) RoutedLifecycle.materialize(shards, PqTier.cacheName,
+      StorageLevel.MEMORY_AND_DISK)
+    else if (forceCount) shards.count()
+    (RoutedPqIndex(source.cfg.params, source.router, codebook, shards,
+      source.tombstones, buildSeed = source.cfg.seed), reenc.value, carry.value)
   }
 
   // --------------------------------------------------------------------
@@ -1159,57 +876,27 @@ object HnswRoutedPq {
   // --------------------------------------------------------------------
 
 
-  /** Persist the PQ tier under `path` as a new complete version (the
-    * [[VersionedIndexDirs]] discipline shared with the float/codes
-    * tiers: `_DONE`-marked last, readers only ever see complete
-    * versions). Eight tables: meta (params + router arity), centroids
-    * (both router levels), codebook (the global PQ codebook), codes
-    * (8 B/row per cell), links (per-cell CSR rows), entries,
-    * fingerprints (per-cell content digests — [[rederive]] keeps its
-    * incremental carry across a restart), tombstones (the live
-    * deletion set). The metric is structurally `l2` (the
+  /** Persist the PQ tier under `path` as a new complete version
+    * ([[RoutedImage.save]], the discipline shared with the float/codes
+    * tiers). Eight tables: meta (params + router arity + build seed),
+    * centroids (both router levels), codebook (the global PQ codebook),
+    * codes (8 B/row per cell), links, entries, fingerprints (per-cell
+    * content digests — [[rederive]] keeps its incremental carry across
+    * a restart), tombstones. The metric is structurally `l2` (the
     * [[fromRouted]] requirement) so no metric column is stored. */
   def save(index: RoutedPqIndex, path: String, keepVersions: Int = 1): Unit =
-    saveWith(SparkSession.active, index, path, keepVersions)
-
-  private def saveWith(spark: SparkSession, index: RoutedPqIndex,
-                       path: String, keepVersions: Int = 1): Unit = {
-    import spark.implicits._
-    val dir = VersionedIndexDirs.nextDir(spark, path)
-    val p = index.params
-
-    Seq((p.m.toSeq, p.mMax.toSeq, p.efConstrSearch.toSeq,
-        p.efConstrInsert.toSeq, p.efSearch.toSeq, p.layerProbability,
-        index.router.nPrimary, index.buildSeed))
-      .toDF("m", "m_max", "ef_constr_search", "ef_constr_insert",
-        "ef_search", "layer_probability", "n_primary", "build_seed")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-
-    RoutedImage.writeRouter(spark, dir, index.router)
-
-    index.codebook.zipWithIndex.flatMap { case (sub, s) =>
-      sub.zipWithIndex.map { case (c, i) => (s, i, c.toSeq) }
-    }.toSeq.toDF("sub", "idx", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebook")
-
-    spark.createDataset(index.shards.flatMap { case (cell, s) =>
-      s.codes.toSeq.iterator.map { case (id, code) => (cell, id, code) }
-    })(RoutedImage.codeRowEnc).toDF("cell", "id", "code")
-      .write.mode("overwrite").parquet(s"$dir/codes")
-
-    RoutedImage.writeGraph(spark, dir, index.shards,
-      (s: PqCellShard) => s.snapshot)
-
-    spark.createDataset(index.shards.map { case (cell, s) =>
-      (cell, s.fingerprint)
-    })(Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong))
-      .toDF("cell", "fingerprint")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/fingerprints")
-
-    RoutedImage.writeTombstones(spark, dir, index.tombstones)
-
-    VersionedIndexDirs.commit(spark, path, dir, keepVersions)
-  }
+    RoutedImage.save(PqTier)(index, path, keepVersions, index.params,
+      Seq("n_primary" -> index.router.nPrimary, "build_seed" -> index.buildSeed),
+      PqTier.codes) { (spark, dir) =>
+      import spark.implicits._
+      RoutedImage.writeRouter(spark, dir, index.router)
+      index.codebook.zipWithIndex.flatMap { case (sub, s) =>
+        sub.zipWithIndex.map { case (c, i) => (s, i, c.toSeq) }
+      }.toSeq.toDF("sub", "idx", "centroid")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebook")
+      index.shards.map { case (cell, s) => (cell, s.fingerprint) }.toDF("cell", "fingerprint")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/fingerprints")
+    }
 
   /** Restore a saved PQ tier WITHOUT the float source: read the newest
     * complete version, reassemble per-cell shards with one
@@ -1220,12 +907,8 @@ object HnswRoutedPq {
     * CSR assembly — no k-means, no HNSW construction, no encode. */
   def attach(spark: SparkSession, path: String,
              persist: Boolean = true,
-             storage: org.apache.spark.storage.StorageLevel =
-               org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): RoutedPqIndex = {
-    val dir = VersionedIndexDirs.newestDone(spark, path)
-
-    val meta = spark.read.parquet(s"$dir/meta").collect().head
-    val params = RoutedImage.paramsFromMeta(meta)
+             storage: StorageLevel = StorageLevel.MEMORY_AND_DISK): RoutedPqIndex = {
+    val (dir, meta) = RoutedImage.open(spark, path)
     // build_seed persists since round 16; older images fall back to the
     // historical hardcoded solo seed (13) they were operated with
     val buildSeed =
@@ -1240,37 +923,14 @@ object HnswRoutedPq {
     val fps = spark.read.parquet(s"$dir/fingerprints").collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     val fpB = spark.sparkContext.broadcast(fps)
-
-    val part = HnswRouted.partitionerFor(router)
-    val codes = spark.read.parquet(s"$dir/codes")
-      .select(col("cell"), col("id"), col("code")).as(RoutedImage.codeRowEnc).rdd
-      .map { case (c, id, code) => (c, (id, code)) }
-    val links = RoutedImage.readLinks(spark, dir)
-    val entries = RoutedImage.readEntries(spark, dir)
-    // per-cell PRESENCE rides the fingerprints table (one row per
-    // SHARD, zero-code cells included): without it the cogroup below
-    // silently drops cells whose shard held no codes — a fully-deleted-
-    // then-compacted cell would not survive the round-trip, a later
-    // rederive would count it as a re-encode, and cellStats-based
-    // thresholds would see fewer cells than the saved index had
-    val presence = spark.sparkContext
-      .parallelize(fps.keys.toSeq.map(c => (c, ())), math.max(1, part.numPartitions))
-
-    val shards = codes.cogroup(links, entries, presence, part)
-      .mapPartitions({ it =>
-      it.flatMap { case (cell, (cs, ls, es, ps)) =>
-        if (cs.isEmpty && ps.isEmpty) Iterator.empty // defensive: unknown cell
-        else Iterator.single(cell -> PqCellShard(cell,
-          LongLongMap.from(cs.iterator, 64),
-          RoutedImage.assembleSnapshot(ls, es),
-          fpB.value.getOrElse(cell, 0L)))
-      }
-    }, preservesPartitioning = true)
-    if (persist) {
-      shards.persist(storage).setName("graft-hnsw-routed-pq")
-      shards.count()
-    }
-    RoutedPqIndex(params, router, codebook, shards,
+    // per-cell PRESENCE also rides the fingerprints table (one row per
+    // SHARD, zero-code cells included) — images written before the
+    // entries table recorded presence keep their empty cells through it
+    val shards = RoutedImage.shards(PqTier, spark, dir, PqTier.codes,
+      HnswRouted.partitionerFor(router), persist, storage, fps.keySet)(
+      (cell, cs, snap) => PqCellShard(cell, LongLongMap.from(cs.iterator, 64),
+        snap, fpB.value.getOrElse(cell, 0L)))
+    RoutedPqIndex(RoutedImage.paramsFromMeta(meta), router, codebook, shards,
       RoutedImage.readTombstones(spark, dir), buildSeed)
   }
 
@@ -1291,7 +951,7 @@ object HnswRoutedPq {
         val spark = SparkSession.active
         val derived = fromRoutedCached(index, key)
         val dir = graft.TempDirs.create("graft_routed_pq_")
-        saveWith(spark, derived, dir)
+        save(derived, dir)
         attach(spark, dir)
       })
 

@@ -52,11 +52,16 @@ class CollectGuardSpec extends AnyFunSuite {
     // collects (nCells-bounded rows) and remediate's flagged-cell
     // collect are one each in RoutedLifecycle (4 - 1 + 2 = 5); each
     // tier shed its 4 copies (12->8, 11->7, 12->8).
-    "graft/hnsw/RoutedLifecycle.scala" -> 5,
+    // lifecycle-fold re-pin (sites MOVED or folded, none added): the
+    // three tiers' ingest batch-id collects (batch-bounded) are one in
+    // RoutedLifecycle.ingest, and their three attach meta-row reads (one
+    // metadata row) one in RoutedImage.open (5 + 2 = 7); each tier shed
+    // those 2 copies (8->6, 7->5, 8->6).
+    "graft/hnsw/RoutedLifecycle.scala" -> 7,
     "graft/hnsw/RoutedServe.scala" -> 3,
-    "graft/hnsw/HnswRouted.scala" -> 8,
-    "graft/hnsw/HnswRoutedCodes.scala" -> 7,
-    "graft/hnsw/HnswRoutedPq.scala" -> 8,
+    "graft/hnsw/HnswRouted.scala" -> 6,
+    "graft/hnsw/HnswRoutedCodes.scala" -> 5,
+    "graft/hnsw/HnswRoutedPq.scala" -> 6,
     "graft/streaming/StreamingChunkDedup.scala" -> 1,
     "graft/streaming/StreamingDocDedup.scala" -> 3,
     "graft/streaming/StreamingIngest.scala" -> 2,
