@@ -118,9 +118,10 @@ final class FurthestQueue private (
   def toArray: Array[Neighbor] = Array.tabulate(n)(i => Neighbor(ds(i), dd(i)))
   def iterator: Iterator[Neighbor] =
     (0 until n).iterator.map(i => Neighbor(ds(i), dd(i)))
-  def copy(): FurthestQueue =
-    new FurthestQueue(java.util.Arrays.copyOf(ds, n),
-      java.util.Arrays.copyOf(dd, n), n)
+  /** A copy with room for `extra` more entries before its arrays grow. */
+  def copy(extra: Int = 0): FurthestQueue =
+    new FurthestQueue(java.util.Arrays.copyOf(ds, n + extra),
+      java.util.Arrays.copyOf(dd, n + extra), n)
 
   override def equals(o: Any): Boolean = o match {
     case q: FurthestQueue =>

@@ -17,8 +17,9 @@ import graft.store.{ArrayVectorStore, GraphSnapshot, InMemoryGraph, Metrics}
   * replaced after every mutation. A frozen model serves through its
   * [[ServingLayout]], built once per JVM on first use and never
   * serialized; a snapshot serves through the generic [[HnswSearcher]]
-  * path, since a per-snapshot layout build costs more than one batch
-  * saves.
+  * path. A streaming index does not serve its snapshot: it broadcasts a
+  * [[ServingImage]] built from its arena instead
+  * ([[graft.streaming.StreamingIngest.IncrementalIndex.modelBroadcast]]).
   */
 final case class HnswModel(
     params: HnswParams,
@@ -30,13 +31,13 @@ final case class HnswModel(
     // (the round-16 PQ-tier SIGSEGV — see LongVecMap's scaladoc); it is
     // also the no-boxed-lookup shape every distance eval wants
     vectors: LongVecMap
-)(val frozen: Boolean) extends Serializable {
+)(val frozen: Boolean) extends KernelSource {
   def size: Int = vectors.size
 
   @transient lazy val layout: ServingLayout = ServingLayout.of(this)
 
   /** A fresh per-partition searcher over this model (see [[ModelKernel]]). */
-  def kernel(): ModelKernel =
+  override def kernel(): ModelKernel =
     if (frozen) new LayoutKernel(layout, params, metricName)
     else new StoreKernel(this)
 }
@@ -245,9 +246,11 @@ object HnswDistributed {
                      model: HnswModel): org.apache.spark.broadcast.Broadcast[HnswModel] =
     spark.sparkContext.broadcast(model)
 
-  def searchBroadcast(queries: DataFrame,
-                      modelB: org.apache.spark.broadcast.Broadcast[HnswModel],
-                      k: Int): DataFrame = {
+  /** Serves either broadcast: a model, or a streaming index's
+    * [[ServingImage]] (see [[KernelSource]]). */
+  def searchBroadcast[M <: KernelSource](queries: DataFrame,
+                                         modelB: org.apache.spark.broadcast.Broadcast[M],
+                                         k: Int): DataFrame = {
     val resEnc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
       Encoders.scalaDouble, Encoders.scalaInt)
     queries.select(col("qid"), col("qvec")).as(pairEnc)

@@ -62,6 +62,16 @@ final class LongLongMap(initialCapacity: Int = 64) extends Serializable {
       kk == k
     }
 
+  /** Lookup with a fallback for an absent key (allocation-free). */
+  def getOrElse(k: Long, default: Long): Long =
+    if (k == Empty) { if (hasEmptyKey) emptyKeyVal else default }
+    else {
+      var i = slot(k)
+      var kk = keys(i)
+      while (kk != Empty && kk != k) { i = (i + 1) & mask; kk = keys(i) }
+      if (kk == k) vals(i) else default
+    }
+
   /** Lookup; throws on absent key (the stores' contract for unknown ids). */
   def apply(k: Long): Long =
     if (k == Empty) {
@@ -162,7 +172,7 @@ object LongLongMap {
   }
 }
 
-final class LongSet(initialCapacity: Int = 64) {
+final class LongSet(initialCapacity: Int = 64) extends Serializable {
   private[this] val Empty = Long.MinValue
   private[this] var mask = {
     var cap = 16

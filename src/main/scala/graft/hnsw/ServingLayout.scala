@@ -1,11 +1,11 @@
 package graft.hnsw
 
-import graft.store.{ArrayVectorStore, Metrics}
+import graft.store.{ArenaVectorStore, ArrayVectorStore, InMemoryGraph, Metrics}
 
-/** Read-only, ordinal-indexed image of a frozen [[HnswModel]] — the
-  * serving layout behind [[LayoutKernel]]. The engine reads vectors only
-  * through the store contract ("is a or b closer to c"), so the layout
-  * may differ from the broadcast payload's id-keyed maps:
+/** Read-only, ordinal-indexed serving image of an HNSW graph and its
+  * vectors — the layout behind [[LayoutKernel]]. The engine reads vectors
+  * only through the store contract ("is a or b closer to c"), so the
+  * layout may differ from the id-keyed maps it was built from:
   *
   *  - `ids` sorted ascending: a vertex's ordinal is the rank of its id,
   *    so `(dist, ordinal)` ties order exactly like `(dist, id)`;
@@ -15,10 +15,13 @@ import graft.store.{ArrayVectorStore, Metrics}
   *  - `normSq`: each vector's squared norm, summed in the same order as
   *    [[Metrics.cosineDist]] sums it, so cached norms are bit-identical;
   *  - per layer an Int-ordinal CSR (`layerOffsets(lc)` has n + 1 entries,
-  *    `layerLinks(lc)` the neighbor ordinals in the snapshot's order).
+  *    `layerLinks(lc)` the neighbor ordinals in the graph's order).
   *
-  * Built once per JVM from the model (never serialized); a model whose
-  * graph names an id without a vector is rejected here.
+  * Two sources build it: a frozen [[HnswModel]] ([[ServingLayout.of]],
+  * once per JVM, never serialized) and a streaming index's arena and
+  * live graph (once per mutation, broadcast as a [[ServingImage]]). The
+  * layout owns its arrays. A graph that names an id without a vector is
+  * rejected.
   */
 final class ServingLayout private (
     val ids: Array[Long],
@@ -30,7 +33,7 @@ final class ServingLayout private (
     /** entry ordinal, -1 for an empty graph */
     private[hnsw] val entry: Int,
     private[hnsw] val entryLayer: Int
-) {
+) extends Serializable {
   def size: Int = ids.length
 }
 
@@ -40,12 +43,6 @@ object ServingLayout {
     val ids = vecs.keysIterator.toArray
     java.util.Arrays.sort(ids)
     val n = ids.length
-    def ordinal(id: Long): Int = {
-      val o = java.util.Arrays.binarySearch(ids, id)
-      if (o < 0) throw new IllegalStateException(
-        s"graph vertex $id has no vector in the model")
-      o
-    }
 
     val offsets = new Array[Int](n + 1)
     var total = 0L
@@ -64,52 +61,125 @@ object ServingLayout {
     while (o < n) {
       val v = vecs(ids(o))
       System.arraycopy(v, 0, data, offsets(o), v.length)
-      normSq(o) = squaredNorm(v)
+      normSq(o) = ArenaVectorStore.squaredNorm(v)
       o += 1
     }
 
-    val layers = model.snapshot.layers
-    val layerOffsets = new Array[Array[Int]](layers.length)
-    val layerLinks = new Array[Array[Int]](layers.length)
-    var lc = 0
-    while (lc < layers.length) {
-      // srcs and ids both ascend: one merge walk assigns each src its row
-      val l = layers(lc)
-      val off = new Array[Int](n + 1)
-      val links = new Array[Int](l.edgeCount)
+    val ranks = new LongLongMap(n)
+    o = 0
+    while (o < n) { ranks.put(ids(o), o); o += 1 }
+    val ordinal = (id: Long) => vertex(id, ranks.getOrElse(id, -1L).toInt)
+    val snap = model.snapshot
+    val csr = snap.layers.map { l =>
+      // srcs and ids both ascend: one merge walk finds each rank's row
+      val row = new Array[Int](n)
       var s = 0
       o = 0
       while (o < n) {
-        off(o) = l.offsets(s)
-        if (s < l.size && l.srcs(s) == ids(o)) {
-          var j = l.offsets(s)
-          while (j < l.offsets(s + 1)) { links(j) = ordinal(l.dsts(j)); j += 1 }
-          s += 1
-        }
+        if (s < l.size && l.srcs(s) == ids(o)) { row(o) = s; s += 1 }
+        else row(o) = -1
         o += 1
       }
-      off(n) = l.offsets(s)
       if (s < l.size) ordinal(l.srcs(s)) // throws: a src without a vector
-      layerOffsets(lc) = off
-      layerLinks(lc) = links
-      lc += 1
+      linkCsr(n, ordinal,
+        r => { val i = row(r); if (i < 0) 0 else l.offsets(i + 1) - l.offsets(i) },
+        (r, k) => l.dsts(l.offsets(row(r)) + k))
     }
-
-    val (entry, entryLayer) = model.snapshot.entryPoint match {
-      case Some(ep) => (ordinal(ep.point), ep.layer)
-      case None     => (-1, -1)
-    }
-    new ServingLayout(ids, offsets, data, normSq, layerOffsets, layerLinks,
-      entry, entryLayer)
+    new ServingLayout(ids, offsets, data, normSq, csr.map(_._1), csr.map(_._2),
+      snap.entryPoint.fold(-1)(ep => ordinal(ep.point)),
+      snap.entryPoint.fold(-1)(_.layer))
   }
 
-  /** Sum of squares in index order — the norm term of [[Metrics.cosineDist]]. */
-  private[hnsw] def squaredNorm(v: Array[Float]): Double = {
-    var s = 0.0
-    var i = 0
-    while (i < v.length) { val x = v(i).toDouble; s += x * x; i += 1 }
-    s
+  /** The image of a streaming index: its arena's vectors and its live
+    * graph's links, copied, so the index may keep mutating both. Arena
+    * ordinals are in insertion order; the vectors are permuted into rank
+    * order. */
+  def of(arena: ArenaVectorStore, graph: InMemoryGraph): ServingLayout = {
+    val n = arena.size
+    val ids = java.util.Arrays.copyOf(arena.ids, n)
+    java.util.Arrays.sort(ids)
+    // rank -> arena ordinal, and back
+    val perm = ids.map(arena.ordinalOf)
+    val rank = new Array[Int](n)
+    val offsets = new Array[Int](n + 1)
+    val normSq = new Array[Double](n)
+    var r = 0
+    while (r < n) {
+      val a = perm(r)
+      rank(a) = r
+      offsets(r + 1) = offsets(r) + arena.offsets(a + 1) - arena.offsets(a)
+      normSq(r) = arena.norms(a)
+      r += 1
+    }
+    val data = new Array[Float](offsets(n))
+    r = 0
+    while (r < n) {
+      val a = perm(r)
+      System.arraycopy(arena.data, arena.offsets(a), data, offsets(r), offsets(r + 1) - offsets(r))
+      r += 1
+    }
+    val ordinal = (id: Long) => {
+      val a = arena.ordinalOf(id)
+      vertex(id, if (a < 0) a else rank(a))
+    }
+
+    val csr = Array.tabulate(graph.numLayers) { lc =>
+      val rows = new Array[FurthestQueue](n)
+      var found = 0
+      var r = 0
+      while (r < n) {
+        rows(r) = graph.linksOrNull(ids(r), lc)
+        if (rows(r) != null) found += 1
+        r += 1
+      }
+      if (found != graph.layerSize(lc)) throw new IllegalStateException(
+        s"layer $lc has ${graph.layerSize(lc) - found} vertices without a vector")
+      linkCsr(n, ordinal,
+        r => if (rows(r) == null) 0 else rows(r).size,
+        (r, k) => rows(r).dstAt(k))
+    }
+    val ep = graph.getEntryPoint
+    new ServingLayout(ids, offsets, data, normSq, csr.map(_._1), csr.map(_._2),
+      ep.fold(-1)(e => ordinal(e.point)), ep.fold(-1)(_.layer))
   }
+
+  private def vertex(id: Long, o: Int): Int =
+    if (o < 0) throw new IllegalStateException(s"graph vertex $id has no vector")
+    else o
+
+  /** One layer's Int-ordinal CSR in rank order: rank `r`'s row holds
+    * `ordinal(dst(r, k))` for `k < degree(r)` — the one id -> ordinal
+    * pass behind both sources. */
+  private def linkCsr(n: Int, ordinal: Long => Int, degree: Int => Int,
+                      dst: (Int, Int) => Long): (Array[Int], Array[Int]) = {
+    val off = new Array[Int](n + 1)
+    var r = 0
+    while (r < n) { off(r + 1) = off(r) + degree(r); r += 1 }
+    val links = new Array[Int](off(n))
+    r = 0
+    while (r < n) {
+      var j = off(r)
+      var k = 0
+      while (j < off(r + 1)) { links(j) = ordinal(dst(r, k)); j += 1; k += 1 }
+      r += 1
+    }
+    (off, links)
+  }
+}
+
+/** What [[HnswDistributed.searchBroadcast]] serves: a broadcast value
+  * that builds a per-partition [[ModelKernel]]. */
+trait KernelSource extends Serializable {
+  def kernel(): ModelKernel
+}
+
+/** A [[ServingLayout]] with the parameters and metric its kernel needs —
+  * what a streaming index broadcasts after each mutation in place of its
+  * id-keyed [[HnswModel]]. */
+final case class ServingImage(params: HnswParams, metricName: String,
+                              layout: ServingLayout) extends KernelSource {
+  def size: Int = layout.size
+  def kernel(): ModelKernel = new LayoutKernel(layout, params, metricName)
 }
 
 /** Per-partition k-NN over one [[HnswModel]]: built once per task
@@ -128,9 +198,9 @@ sealed trait ModelKernel {
 }
 
 /** The generic path: the engine's [[HnswSearcher]] over the model's
-  * id-keyed vectors and graph snapshot. Serves models that are replaced
-  * after every mutation, where building a layout per snapshot would cost
-  * more than it saves. */
+  * id-keyed vectors and graph snapshot. Serves a streaming index's
+  * snapshot ([[graft.streaming.StreamingIngest.IncrementalIndex.model]])
+  * when a caller serves that model directly. */
 private[hnsw] final class StoreKernel(m: HnswModel) extends ModelKernel {
   private[this] val searcher = new HnswSearcher(m.params)
   // the -1 query slot is re-staged per query
@@ -160,58 +230,34 @@ private[hnsw] final class StoreKernel(m: HnswModel) extends ModelKernel {
   * across queries, a query's squared norm is summed once, and a stored
   * vector's comes from the layout. Distances equal
   * [[Metrics.cosineDist]]/[[Metrics.l2Sq]]/[[Metrics.negDot]] bit for
-  * bit: the same terms summed in the same order. */
+  * bit ([[ArenaVectorStore.measure]]). */
 private[hnsw] final class LayoutKernel(l: ServingLayout, params: HnswParams,
                                        metricName: String) extends ModelKernel {
-  private[this] val metric = metricName match {
-    case "cosine" => 0
-    case "l2"     => 1
-    case "dot"    => 2
-    case other    => throw new IllegalArgumentException(s"unknown metric: $other")
-  }
+  private[this] val metric = ArenaVectorStore.metricCode(metricName)
   private[this] val marks = new Array[Int](l.size)
   private[this] var epoch = 0
   private[this] val w = FurthestQueue.empty
   private[this] val c = NearestQueue.empty
   private[this] var q: Array[Float] = Array.emptyFloatArray
   private[this] var qNormSq = 0.0
+  // one expansion's unvisited neighbors and their distances
+  private[this] var fresh = new Array[Int](64)
+  private[this] var freshDist = new Array[Double](64)
 
   private[this] def stage(qvec: Array[Float]): Unit = {
     q = qvec
-    qNormSq = ServingLayout.squaredNorm(qvec)
+    qNormSq = ArenaVectorStore.squaredNorm(qvec)
   }
 
   /** Distance from the staged query to ordinal `o` — the query is the
     * metrics' left operand, as [[ArrayVectorStore.evalDistance]] passes it. */
-  private[this] def dist(o: Int): Double = {
-    val a = q
-    val b = l.data
-    val from = l.offsets(o)
-    val len = l.offsets(o + 1) - from
-    val n = math.min(a.length, len)
-    var acc = 0.0
-    var i = 0
-    if (metric == 0) {
-      // the cached norms cover whole vectors; a length mismatch sums
-      // norms over the common prefix instead
-      if (len != a.length)
-        return Metrics.cosineDist(a, java.util.Arrays.copyOfRange(b, from, from + len))
-      while (i < n) { acc += a(i).toDouble * b(from + i).toDouble; i += 1 }
-      val na = qNormSq
-      val nb = l.normSq(o)
-      if (na == 0.0 || nb == 0.0) 1.0 else 1.0 - acc / math.sqrt(na * nb)
-    } else if (metric == 1) {
-      while (i < n) { val d = a(i).toDouble - b(from + i).toDouble; acc += d * d; i += 1 }
-      acc
-    } else {
-      while (i < n) { acc += a(i).toDouble * b(from + i).toDouble; i += 1 }
-      -acc
-    }
-  }
+  private[this] def dist(o: Int): Double =
+    ArenaVectorStore.dist(metric, q, qNormSq, l.data, l.offsets, l.normSq, o)
 
-  /** [[HnswSearcher.searchLayer]] on ordinals: neighbors are marked,
-    * measured and admitted one at a time, which admits exactly what the
-    * engine's mark-all / measure-all / admit-all batches admit. */
+  /** [[HnswSearcher.searchLayer]] on ordinals: an expansion marks its
+    * unvisited neighbors, measures them four per pass, then admits them
+    * in link order, as the engine's mark-all / measure-all / admit-all
+    * batches do. */
   private[this] def searchLayer(ef: Int, lc: Int): Unit = {
     if (epoch == Int.MaxValue) { java.util.Arrays.fill(marks, 0); epoch = 0 }
     epoch += 1
@@ -228,25 +274,34 @@ private[hnsw] final class LayoutKernel(l: ServingLayout, params: HnswParams,
       val cand = c.popNearestDst().toInt
       if (fq < cq) continue = false
       else if (hasLayer) {
-        var j = off(cand)
         val end = off(cand + 1)
+        if (fresh.length < end - off(cand)) {
+          fresh = new Array[Int](end - off(cand))
+          freshDist = new Array[Double](end - off(cand))
+        }
+        var m = 0
+        var j = off(cand)
         while (j < end) {
           val e = links(j)
-          if (marks(e) != epoch) {
-            marks(e) = epoch
-            val eq = dist(e)
-            var admit = true
-            if (w.size >= ef) {
-              if (eq < fq) w.dropFurthest()
-              else admit = false
-            }
-            if (admit) {
-              c.insert(e, eq)
-              w.insert(e, eq)
-              fq = w.furthestDist
-            }
-          }
+          if (marks(e) != epoch) { marks(e) = epoch; fresh(m) = e; m += 1 }
           j += 1
+        }
+        ArenaVectorStore.measure(metric, q, qNormSq, l.data, l.offsets, l.normSq,
+          fresh, m, freshDist)
+        var i = 0
+        while (i < m) {
+          val eq = freshDist(i)
+          var admit = true
+          if (w.size >= ef) {
+            if (eq < fq) w.dropFurthest()
+            else admit = false
+          }
+          if (admit) {
+            c.insert(fresh(i), eq)
+            w.insert(fresh(i), eq)
+            fq = w.furthestDist
+          }
+          i += 1
         }
       }
     }

@@ -1,0 +1,268 @@
+package graft.store
+
+import graft.hnsw.{LongLongMap, LongVecMap}
+
+/** Append-only float-arena vector store: the live store of a streaming
+  * index ([[graft.streaming.StreamingIngest.IncrementalIndex]]).
+  *
+  *  - every stored vector back to back in one float arena, vector `o` in
+  *    `[offsets(o), offsets(o + 1))` — ordinals in insertion order;
+  *  - a primitive id -> ordinal map, and the ordinal's id in `ids`;
+  *  - each vector's squared norm, summed in [[Metrics.cosineDist]]'s
+  *    order, so a cosine distance reads only the dot product per pair;
+  *  - one pending-query slot: a staged query lives there until
+  *    [[insert]] appends it, so a query that is searched and skipped
+  *    leaves nothing behind.
+  *
+  * Every distance equals [[Metrics.cosineDist]]/[[Metrics.l2Sq]]/
+  * [[Metrics.negDot]] with the query as left operand, bit for bit
+  * ([[ArenaVectorStore.measure]]). Re-inserting a stored id (an orphan
+  * restored from a mirror) overwrites its vector in place.
+  *
+  * @param matchThreshold distance at/below which two vectors are duplicates
+  */
+final class ArenaVectorStore(metricName: String, matchThreshold: Double = 1e-12)
+    extends VectorStore {
+  import ArenaVectorStore._
+  type Raw = Array[Float]
+
+  private[this] val metric = metricCode(metricName)
+  private[this] var n = 0
+  private[this] var nextId = 0L
+  private[graft] var data = new Array[Float](0)
+  private[graft] var offsets = new Array[Int](1)
+  private[graft] var norms = new Array[Double](0)
+  private[graft] var ids = new Array[Long](0)
+  private[this] val ordinals = new LongLongMap()
+
+  private[this] var pendingId = 0L
+  private[this] var pending: Array[Float] = null
+  private[this] var pendingNorm = 0.0
+
+  // evalDistanceBatch scratch: the resolved ordinals of one call
+  private[this] var scratch = new Array[Int](64)
+
+  /** Number of stored vectors. */
+  def size: Int = n
+
+  /** The stored ordinal of `id`, or -1. */
+  private[graft] def ordinalOf(id: Long): Int = ordinals.getOrElse(id, -1L).toInt
+
+  /** A copy of `id`'s stored vector. */
+  def vector(id: Long): Array[Float] = {
+    val o = ordinalOf(id)
+    if (o < 0) throw new NoSuchElementException(s"key not found: $id")
+    java.util.Arrays.copyOfRange(data, offsets(o), offsets(o + 1))
+  }
+
+  /** Id -> copy of the vector, for every stored vector. */
+  def toLongVecMap: LongVecMap = {
+    val m = new LongVecMap(n)
+    var o = 0
+    while (o < n) {
+      m.put(ids(o), java.util.Arrays.copyOfRange(data, offsets(o), offsets(o + 1)))
+      o += 1
+    }
+    m
+  }
+
+  /** Room for one more vector of `floats` floats, growing by half. */
+  private[this] def grow(floats: Int): Unit = {
+    if (n == ids.length) {
+      val cap = math.max(n + 1, ids.length + ids.length / 2)
+      ids = java.util.Arrays.copyOf(ids, cap)
+      norms = java.util.Arrays.copyOf(norms, cap)
+      offsets = java.util.Arrays.copyOf(offsets, cap + 1)
+    }
+    val need = offsets(n).toLong + floats
+    if (need > data.length) {
+      require(need <= MaxFloats, s"vector arena of $need floats exceeds one array")
+      val cap = math.min(MaxFloats.toLong, math.max(need, data.length + data.length / 2L))
+      data = java.util.Arrays.copyOf(data, cap.toInt)
+    }
+  }
+
+  def prepareQueryWithId(id: Long, raw: Array[Float]): Long = {
+    pendingId = id
+    pending = raw
+    pendingNorm = squaredNorm(raw)
+    if (id >= nextId) nextId = id + 1
+    id
+  }
+
+  override def prepareQuery(raw: Array[Float]): Long = prepareQueryWithId(nextId, raw)
+
+  /** Persist the staged query: append it, or overwrite the vector of an
+    * id already stored (which must keep its length). */
+  override def insert(q: Long): Long = {
+    if (pending == null || q != pendingId)
+      throw new NoSuchElementException(s"insert($q): no staged query under that id")
+    val v = pending
+    val o = ordinalOf(q)
+    if (o >= 0) {
+      require(offsets(o + 1) - offsets(o) == v.length,
+        s"id $q re-inserted with ${v.length} floats, stored with ${offsets(o + 1) - offsets(o)}")
+      System.arraycopy(v, 0, data, offsets(o), v.length)
+      norms(o) = pendingNorm
+    } else {
+      grow(v.length)
+      System.arraycopy(v, 0, data, offsets(n), v.length)
+      offsets(n + 1) = offsets(n) + v.length
+      norms(n) = pendingNorm
+      ids(n) = q
+      ordinals.put(q, n)
+      n += 1
+    }
+    pending = null
+    q
+  }
+
+  override def isMatch(d: Double): Boolean = d <= matchThreshold
+
+  /** The staged query, or the stored vector, under `id`. */
+  private[this] def raw(id: Long): Array[Float] =
+    if (pending != null && id == pendingId) pending else vector(id)
+
+  override def evalDistance(q: Long, v: Long): Double =
+    if (pending != null && q == pendingId && v != pendingId) {
+      val o = ordinalOf(v)
+      if (o < 0) throw new NoSuchElementException(s"key not found: $v")
+      dist(metric, pending, pendingNorm, data, offsets, norms, o)
+    } else Metrics.byName(metricName)(raw(q), raw(v))
+
+  /** The staged query against stored vectors, four per pass
+    * ([[ArenaVectorStore.measure]]); anything else pair by pair. */
+  override def evalDistanceBatch(q: Long, vs: Array[Long]): Array[Double] = {
+    val m = vs.length
+    val out = new Array[Double](m)
+    if (pending == null || q != pendingId) {
+      var i = 0
+      while (i < m) { out(i) = evalDistance(q, vs(i)); i += 1 }
+      return out
+    }
+    if (scratch.length < m) scratch = new Array[Int](math.max(m, scratch.length * 2))
+    var i = 0
+    while (i < m) {
+      val v = vs(i)
+      val o = ordinalOf(v)
+      if (o < 0 || v == pendingId) {
+        var j = 0
+        while (j < m) { out(j) = evalDistance(q, vs(j)); j += 1 }
+        return out
+      }
+      scratch(i) = o
+      i += 1
+    }
+    measure(metric, pending, pendingNorm, data, offsets, norms, scratch, m, out)
+    out
+  }
+}
+
+/** The distance kernels over an arena layout (`data`, `offsets`,
+  * `normSq`), shared by [[ArenaVectorStore]] and the serving layout's
+  * kernel ([[graft.hnsw.LayoutKernel]]). The query is the left operand, as
+  * the stores pass it; each result sums the same terms in the same order
+  * as [[Metrics]], so it is bit-identical. */
+object ArenaVectorStore {
+  private[graft] final val Cosine = 0
+  private[graft] final val L2 = 1
+  private[graft] final val Dot = 2
+
+  /** The largest float array the JVM allocates: the arena's cap. */
+  private final val MaxFloats = Int.MaxValue - 8
+
+  private[graft] def metricCode(name: String): Int = name match {
+    case "cosine" => Cosine
+    case "l2"     => L2
+    case "dot"    => Dot
+    case other    => throw new IllegalArgumentException(s"unknown metric: $other")
+  }
+
+  /** Sum of squares in index order — the norm term of [[Metrics.cosineDist]]. */
+  def squaredNorm(v: Array[Float]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < v.length) { val x = v(i).toDouble; s += x * x; i += 1 }
+    s
+  }
+
+  @inline private def cosine(dot: Double, na: Double, nb: Double): Double =
+    if (na == 0.0 || nb == 0.0) 1.0 else 1.0 - dot / math.sqrt(na * nb)
+
+  /** Distance from `q` (squared norm `qNormSq`) to stored vector `o`. */
+  private[graft] def dist(metric: Int, q: Array[Float], qNormSq: Double, data: Array[Float],
+                          offsets: Array[Int], normSq: Array[Double], o: Int): Double = {
+    val from = offsets(o)
+    val len = offsets(o + 1) - from
+    val n = math.min(q.length, len)
+    var acc = 0.0
+    var i = 0
+    if (metric == Cosine) {
+      // the cached norms cover whole vectors; a length mismatch sums
+      // norms over the common prefix instead
+      if (len != q.length)
+        return Metrics.cosineDist(q, java.util.Arrays.copyOfRange(data, from, from + len))
+      while (i < n) { acc += q(i).toDouble * data(from + i).toDouble; i += 1 }
+      cosine(acc, qNormSq, normSq(o))
+    } else if (metric == L2) {
+      while (i < n) { val d = q(i).toDouble - data(from + i).toDouble; acc += d * d; i += 1 }
+      acc
+    } else {
+      while (i < n) { acc += q(i).toDouble * data(from + i).toDouble; i += 1 }
+      -acc
+    }
+  }
+
+  /** Distances from `q` to stored ordinals `os(0 until m)` into
+    * `out(0 until m)`. Four vectors of the query's length are measured per
+    * pass over the query, each pair with its own sequential accumulator;
+    * the rest one at a time. */
+  private[graft] def measure(metric: Int, q: Array[Float], qNormSq: Double, data: Array[Float],
+                             offsets: Array[Int], normSq: Array[Double],
+                             os: Array[Int], m: Int, out: Array[Double]): Unit = {
+    val n = q.length
+    var i = 0
+    while (i + 4 <= m) {
+      val o0 = os(i); val o1 = os(i + 1); val o2 = os(i + 2); val o3 = os(i + 3)
+      val f0 = offsets(o0); val f1 = offsets(o1); val f2 = offsets(o2); val f3 = offsets(o3)
+      if (offsets(o0 + 1) - f0 != n || offsets(o1 + 1) - f1 != n ||
+          offsets(o2 + 1) - f2 != n || offsets(o3 + 1) - f3 != n) {
+        var j = i
+        while (j < i + 4) { out(j) = dist(metric, q, qNormSq, data, offsets, normSq, os(j)); j += 1 }
+      } else {
+        var a0 = 0.0; var a1 = 0.0; var a2 = 0.0; var a3 = 0.0
+        var k = 0
+        if (metric == L2) {
+          while (k < n) {
+            val x = q(k).toDouble
+            val d0 = x - data(f0 + k).toDouble; a0 += d0 * d0
+            val d1 = x - data(f1 + k).toDouble; a1 += d1 * d1
+            val d2 = x - data(f2 + k).toDouble; a2 += d2 * d2
+            val d3 = x - data(f3 + k).toDouble; a3 += d3 * d3
+            k += 1
+          }
+          out(i) = a0; out(i + 1) = a1; out(i + 2) = a2; out(i + 3) = a3
+        } else {
+          while (k < n) {
+            val x = q(k).toDouble
+            a0 += x * data(f0 + k).toDouble
+            a1 += x * data(f1 + k).toDouble
+            a2 += x * data(f2 + k).toDouble
+            a3 += x * data(f3 + k).toDouble
+            k += 1
+          }
+          if (metric == Cosine) {
+            out(i) = cosine(a0, qNormSq, normSq(o0))
+            out(i + 1) = cosine(a1, qNormSq, normSq(o1))
+            out(i + 2) = cosine(a2, qNormSq, normSq(o2))
+            out(i + 3) = cosine(a3, qNormSq, normSq(o3))
+          } else {
+            out(i) = -a0; out(i + 1) = -a1; out(i + 2) = -a2; out(i + 3) = -a3
+          }
+        }
+      }
+      i += 4
+    }
+    while (i < m) { out(i) = dist(metric, q, qNormSq, data, offsets, normSq, os(i)); i += 1 }
+  }
+}

@@ -178,9 +178,12 @@ final class InMemoryGraph extends GraphStore {
     entry = Some(EntryPoint(point, layer))
   }
 
+  // room for the one reverse edge connect_bidir inserts before it trims
+  // and stores the queue back: a full row would otherwise double its
+  // arrays and keep the unused half for as long as the graph lives
   override def getLinks(base: Long, lc: Int): FurthestQueue =
     if (lc >= layers.size) FurthestQueue.empty
-    else layers(lc).getOrElse(base, FurthestQueue.empty).copy()
+    else layers(lc).getOrElse(base, FurthestQueue.empty).copy(extra = 1)
 
   override def foreachLink(base: Long, lc: Int)(f: Long => Unit): Unit =
     if (lc < layers.size) layers(lc).get(base).foreach(_.iterator.foreach(n => f(n.dst)))
@@ -198,6 +201,14 @@ final class InMemoryGraph extends GraphStore {
     while (layers.size < n) layers += mutable.LongMap.empty
 
   override def numLayers: Int = layers.size
+
+  /** `base`'s neighbor queue at `lc` without the copy, or null — a
+    * read-only view for layout builders, which must not mutate it. */
+  private[graft] def linksOrNull(base: Long, lc: Int): FurthestQueue =
+    if (lc >= layers.size) null else layers(lc).getOrNull(base)
+
+  /** Number of vertices with a row at layer `lc`. */
+  private[graft] def layerSize(lc: Int): Int = if (lc >= layers.size) 0 else layers(lc).size
 
   /** G7: export the adjacency of one layer. */
   def layerLinks(lc: Int): Map[Long, FurthestQueue] = layers(lc).toMap

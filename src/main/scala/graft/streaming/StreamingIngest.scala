@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.hnsw.{HnswDistributed, HnswModel, HnswSearcher}
+import graft.hnsw.{HnswModel, HnswSearcher, LongSet, ServingImage, ServingLayout}
 import graft.hnsw.HnswDistributed.BuildConfig
-import graft.store.{ArrayVectorStore, InMemoryGraph, Metrics}
+import graft.store.{ArenaVectorStore, GraphStore, InMemoryGraph, RecordingGraphStore}
 
 /** Structured-Streaming ingest for the vector engine — the true-streaming
   * analog of the reference's coroutine insert protocol
@@ -26,6 +26,10 @@ object StreamingIngest {
   /** Mutable index handle shared across micro-batches. Thread-safe for
     * the single-writer foreachBatch contract.
     *
+    * Vectors live in an [[graft.store.ArenaVectorStore]]; after each
+    * mutation, serving reads a [[graft.hnsw.ServingImage]] built from the
+    * arena and the live graph ([[image]], [[modelBroadcast]]).
+    *
     * @param mirror optional durable graph mirror: after each batch, the
     *               adjacency rows the batch touched (tracked by a
     *               [[graft.store.RecordingGraphStore]]) are written
@@ -35,37 +39,42 @@ object StreamingIngest {
   final class IncrementalIndex(cfg: BuildConfig,
                                mirror: Option[graft.store.ParquetGraphStore] = None)
       extends Serializable {
-    private val metric = Metrics.byName(cfg.metric)
     private val searcher = new HnswSearcher(cfg.params)
-    private val store = new ArrayVectorStore(metric, matchThreshold = 1e-9)
+    private val store = new ArenaVectorStore(cfg.metric, matchThreshold = 1e-9)
     private val inner = new InMemoryGraph
-    private val graph = new graft.store.RecordingGraphStore(inner)
-    private val vecs = scala.collection.mutable.Map.empty[Long, Array[Float]]
+    // touched rows are recorded only for a mirror to write out
+    private val recorder = mirror.map(_ => new RecordingGraphStore(inner))
+    private val graph: GraphStore = recorder.getOrElse(inner)
     // ids whose INSERTION completed (graph membership) — distinct from
-    // `vecs`, which after a restore may also hold orphan vectors whose
+    // the store, which after a restore may also hold orphan vectors whose
     // graph rows never made it to the mirror before a crash; those must
     // re-insert on redelivery, fully-inserted ids must not
-    private val insertedIds = scala.collection.mutable.Set.empty[Long]
+    private val insertedIds = new LongSet()
 
     /** Mirror the batch delta: the batch's new vectors first (an orphan
       * vector is harmless on restore; a graph row referencing a missing
       * vector is not), then the touched adjacency rows + entry point. */
-    private def mirrorDelta(newRows: Seq[(Long, Array[Float])]): Unit = mirror.foreach { pg =>
-      if (newRows.nonEmpty) {
-        val sess = pg.spark
-        import sess.implicits._
-        newRows.toDF("id", "vec").write.mode("append").parquet(s"${pg.path}/vectors")
+    private def mirrorDelta(newRows: Seq[(Long, Array[Float])]): Unit =
+      for (pg <- mirror; rec <- recorder) {
+        if (newRows.nonEmpty) {
+          val sess = pg.spark
+          import sess.implicits._
+          newRows.toDF("id", "vec").write.mode("append").parquet(s"${pg.path}/vectors")
+        }
+        rec.touched.foreach { case (src, lc) =>
+          pg.setLinks(src, inner.getLinks(src, lc), lc)
+        }
+        if (rec.entryPointTouched)
+          inner.getEntryPoint.foreach(ep => pg.setEntryPoint(ep.point, ep.layer))
+        // delta flush: O(rows touched this batch), not a full-table
+        // rewrite per batch — the write volume the class doc promises
+        pg.flushDelta()
+        rec.clearRecording()
       }
-      graph.touched.foreach { case (src, lc) =>
-        pg.setLinks(src, inner.getLinks(src, lc), lc)
-      }
-      if (graph.entryPointTouched)
-        inner.getEntryPoint.foreach(ep => pg.setEntryPoint(ep.point, ep.layer))
-      // delta flush: O(rows touched this batch), not a full-table
-      // rewrite per batch — the write volume the class doc promises
-      pg.flushDelta()
-      graph.clearRecording()
-    }
+
+    /** Id-sorted, id-distinct rows not inserted yet. */
+    private def toInsert(rows: Array[(Long, Array[Float])]): Array[(Long, Array[Float])] =
+      rows.sortBy(_._1).distinctBy(_._1).filterNot(r => insertedIds.contains(r._1))
 
     def insertRows(rows: Array[(Long, Array[Float])]): Unit = synchronized {
       // Deterministic order within the batch (reference inserts are
@@ -75,13 +84,11 @@ object StreamingIngest {
       // across redelivered batches — must not insert twice (the second
       // insert would find the first at distance 0 and connect_bidir a
       // self-loop that permanently wastes a degree slot).
-      val sorted = rows.sortBy(_._1).distinctBy(_._1)
-        .filterNot(r => insertedIds(r._1))
+      val sorted = toInsert(rows)
       sorted.foreach { case (id, v) =>
         val q = store.prepareQueryWithId(id, v)
-        vecs(id) = v
         searcher.insert(store, graph, q, searcher.selectLayerByHash(id, cfg.seed))
-        insertedIds += id
+        insertedIds.add(id)
       }
       if (sorted.nonEmpty) bumpVersion()
       mirrorDelta(sorted.toSeq)
@@ -96,8 +103,7 @@ object StreamingIngest {
       // vector matches itself at distance 0, so the second is skipped by
       // the isMatch test — only the explicit guard for ids restored from
       // the mirror is needed
-      rows.sortBy(_._1).distinctBy(_._1)
-        .filterNot(r => insertedIds(r._1)).foreach { case (id, v) =>
+      toInsert(rows).foreach { case (id, v) =>
         val q = store.prepareQueryWithId(id, v)
         val lay = searcher.selectLayerByHash(id, cfg.seed)
         val (neighbors, setEp) = searcher.searchToInsert(store, graph, q, lay)
@@ -105,9 +111,8 @@ object StreamingIngest {
         else {
           store.insert(q)
           searcher.insertFromSearchResults(store, graph, q, neighbors, setEp)
-          vecs(id) = v
           inserted += ((id, v))
-          insertedIds += id
+          insertedIds.add(id)
           ins += 1
         }
       }
@@ -116,48 +121,62 @@ object StreamingIngest {
       (ins, skip)
     }
 
-    def size: Int = synchronized(vecs.size)
+    def size: Int = synchronized(store.size)
 
-    // model snapshots memoized by mutation count: a search stream calls
-    // model once per micro-batch, and unmemoized each call would copy
-    // the whole graph + vector map — O(index) driver work per batch on
-    // an index that only grows between some batches. The counter bumps
-    // on any successful insert or restore; a hit returns the previous
-    // immutable snapshot.
+    // snapshots and images memoized by mutation count: a search stream
+    // asks once per micro-batch, and unmemoized each call would copy the
+    // whole graph and vector arena — O(index) driver work per batch on an
+    // index that only grows between some batches. The counter bumps on
+    // any successful insert or restore; a hit returns the previous
+    // immutable value.
     private var mutations = 0L
     private var snapAt = -1L
     private var snapCache: HnswModel = null
+    private var imageAt = -1L
+    private var imageCache: ServingImage = null
 
     private[streaming] def bumpVersion(): Unit = mutations += 1
 
+    /** The id-keyed model of the current state (graph snapshot plus a
+      * copy of every vector) for callers that want an [[HnswModel]];
+      * serving reads [[image]] instead. */
     def model: HnswModel = synchronized {
       if (snapAt != mutations) {
         snapCache = HnswModel(cfg.params, cfg.metric, inner.snapshot,
-          graft.hnsw.LongVecMap.from(vecs.iterator, vecs.size))(frozen = false)
+          store.toLongVecMap)(frozen = false)
         snapAt = mutations
       }
       snapCache
     }
 
+    /** The serving image of the current state: ordinal layout, no edge
+      * distances, arrays of its own. */
+    def image: ServingImage = synchronized {
+      if (imageAt != mutations) {
+        imageCache = ServingImage(cfg.params, cfg.metric, ServingLayout.of(store, inner))
+        imageAt = mutations
+      }
+      imageCache
+    }
+
     @transient private var bcastAt = -1L
     @transient private var bcastApp: String = null
-    @transient private var bcastCache: org.apache.spark.broadcast.Broadcast[HnswModel] = null
+    @transient private var bcastCache: org.apache.spark.broadcast.Broadcast[ServingImage] = null
 
-    /** Broadcast of [[model]], memoized with it: a serving stream asks
-      * for the model once per micro-batch, and re-broadcasting an
-      * UNCHANGED model would re-serialize and re-ship the whole index
-      * each batch — the driver-side snapshot memoization alone doesn't
-      * prevent that. The stale broadcast is dropped by reference only
-      * (Spark's ContextCleaner unpersists garbage-collected broadcasts);
-      * never destroyed eagerly, an in-flight batch may still read it. */
+    /** Broadcast of [[image]], memoized with it: a serving stream asks
+      * once per micro-batch, and re-broadcasting an UNCHANGED image would
+      * re-serialize and re-ship the whole index each batch. The stale
+      * broadcast is dropped by reference only (Spark's ContextCleaner
+      * unpersists garbage-collected broadcasts); never destroyed
+      * eagerly, an in-flight batch may still read it. */
     def modelBroadcast(spark: org.apache.spark.sql.SparkSession)
-        : org.apache.spark.broadcast.Broadcast[HnswModel] = synchronized {
+        : org.apache.spark.broadcast.Broadcast[ServingImage] = synchronized {
       // keyed by applicationId too: an index outliving a SparkContext
       // restart must not serve a broadcast created on the dead context
       // (tasks would fail "Attempted to use Broadcast after destroy")
       val app = spark.sparkContext.applicationId
       if (bcastAt != mutations || bcastCache == null || bcastApp != app) {
-        bcastCache = spark.sparkContext.broadcast(model)
+        bcastCache = spark.sparkContext.broadcast(image)
         bcastAt = mutations
         bcastApp = app
       }
@@ -174,7 +193,6 @@ object StreamingIngest {
       rows.foreach { case (id, v) =>
         store.prepareQueryWithId(id, v)
         store.insert(id)
-        vecs(id) = v
       }
       snap.entryPoint.foreach(ep => inner.setEntryPoint(ep.point, ep.layer))
       // the links may run AHEAD of the entry point (mirror crash between
@@ -195,7 +213,7 @@ object StreamingIngest {
       // re-insert when its batch is redelivered
       rows.foreach { case (id, _) =>
         if (snap.entryPoint.exists(_.point == id) || snap.layers.exists(_.contains(id)))
-          insertedIds += id
+          insertedIds.add(id)
       }
       bumpVersion()
     }

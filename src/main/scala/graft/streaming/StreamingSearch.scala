@@ -23,8 +23,9 @@ import graft.store.ParquetGraphStore
   * mirror the batch serving tiers:
   *
   *  - [[attach]]: the index lives on the driver ([[IncrementalIndex]]);
-  *    each batch snapshots the model ONCE and broadcasts it, queries fan
-  *    out over executors ([[HnswDistributed.searchBroadcast]]).
+  *    each batch broadcasts the index's serving image (rebuilt only after
+  *    a mutation), queries fan out over executors
+  *    ([[HnswDistributed.searchBroadcast]]).
   *  - [[attachDurable]]: beyond-driver-memory serving from a
   *    [[ParquetGraphStore]] — upper layers broadcast, layer 0 via
   *    frontier joins, tombstones honored ([[HnswDurable.searchExcluding]]),
@@ -45,9 +46,9 @@ object StreamingSearch {
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], resultSchema)
 
   /** One serving micro-batch against a live [[IncrementalIndex]]. The
-    * model snapshot AND its broadcast are memoized by the index's
-    * mutation count, so an idle index pays neither the snapshot copy
-    * nor a re-broadcast per batch — only a changed index re-ships. An
+    * serving image AND its broadcast are memoized by the index's
+    * mutation count, so an idle index pays neither the image copy nor a
+    * re-broadcast per batch — only a changed index re-ships. An
     * empty index serves an empty result — a search stream may
     * legitimately start before its ingest stream has delivered
     * anything. */

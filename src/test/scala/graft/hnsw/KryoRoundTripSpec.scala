@@ -179,4 +179,25 @@ class KryoRoundTripSpec extends SparkSpec {
     assert(smRt.vectors.size == sm.vectors.size &&
       smRt.vectors.keySet == sm.vectors.keySet)
   }
+
+  test("a streaming index's ServingImage Kryo round-trips and serves identically") {
+    val index = new graft.streaming.StreamingIngest.IncrementalIndex(cfg)
+    def rows(ids: Range) = ids.map(i => (i.toLong, vecFromHash(i.toLong, 17L, 16))).toArray
+    index.insertRows(rows(400 until 700))
+    index.insertRows(rows(0 until 300)) // ids out of order: a permuted image
+    val image = index.image
+    val rt = kryoRoundTrip(image)
+    assert(rt.metricName == image.metricName)
+    assert(rt.layout.ids.sameElements(image.layout.ids) && rt.size == 600)
+    def bits(q: FurthestQueue): Seq[(Long, Long)] =
+      q.iterator.map(nb => (nb.dst, java.lang.Double.doubleToRawLongBits(nb.dist))).toSeq
+    val (rtKernel, kernel) = (rt.kernel(), image.kernel())
+    (0 until 10).foreach { qi =>
+      val qvec = vecFromHash(qi + 80000L, 19L, 16)
+      assert(bits(rtKernel.search(qvec, 10, 0)) == bits(kernel.search(qvec, 10, 0)),
+        s"serve diverged for query $qi")
+      assert(bits(rtKernel.exactTopK(qvec, 10, _ % 2 == 0)) ==
+        bits(kernel.exactTopK(qvec, 10, _ % 2 == 0)))
+    }
+  }
 }

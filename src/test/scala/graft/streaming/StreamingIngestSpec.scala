@@ -116,6 +116,36 @@ class StreamingIngestSpec extends SparkSpec {
     }
   }
 
+  test("durable mirror: each flush holds exactly the rows its batch touched") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-stream-delta").toString
+    val index = new IncrementalIndex(cfg, mirror = Some(new graft.store.ParquetGraphStore(spark, dir)))
+    val b1 = vecsOf(25).toArray
+    val b2 = vecsOf(25, offset = 25).toArray
+    index.insertRows(b1)
+    index.insertRows(b2)
+
+    // the same inserts through a recording graph, cleared between batches
+    val searcher = new graft.hnsw.HnswSearcher(cfg.params)
+    val store = new graft.store.ArrayVectorStore(graft.store.Metrics.byName(cfg.metric))
+    val rec = new graft.store.RecordingGraphStore(new graft.store.InMemoryGraph)
+    def insert(rows: Array[(Long, Array[Float])]): Set[(Long, Int)] = {
+      rows.foreach { case (id, v) =>
+        searcher.insert(store, rec, store.prepareQueryWithId(id, v),
+          searcher.selectLayerByHash(id, cfg.seed))
+      }
+      val touched = rec.touched.toSet
+      rec.clearRecording()
+      touched
+    }
+    def rowsAt(piece: String): Set[(Long, Int)] =
+      spark.read.parquet(s"$dir/$piece").select(col("src"), col("layer").cast("int"))
+        .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+    // the first flush is the base version, the second a delta
+    assert(rowsAt("links_v0") == insert(b1))
+    assert(rowsAt("links_d1") == insert(b2))
+    assert(spark.read.parquet(s"$dir/vectors").count() == 50)
+  }
+
   test("restart recovery: restore from mirror, continue ingesting, equal the uninterrupted run") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-stream-restart").toString
