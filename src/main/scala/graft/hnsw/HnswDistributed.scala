@@ -12,13 +12,9 @@ import graft.store.{ArrayVectorStore, GraphSnapshot, InMemoryGraph, Metrics}
   * merge — the 100 TB path, where each shard holds only its partition's
   * vectors and graph).
   *
-  * `frozen` says where the model came from: a build or a compaction
-  * (true), whose model never changes, or a streaming snapshot (false),
-  * replaced after every mutation. A frozen model serves through its
-  * [[ServingLayout]], built once per JVM on first use and never
-  * serialized; a snapshot serves through the generic [[HnswSearcher]]
-  * path. A streaming index does not serve its snapshot: it broadcasts a
-  * [[ServingImage]] built from its arena instead
+  * A model serves through its [[ServingLayout]], built once per JVM on
+  * first use and never serialized. A streaming index does not serve its
+  * model: it broadcasts a [[ServingImage]] built from its arena instead
   * ([[graft.streaming.StreamingIngest.IncrementalIndex.modelBroadcast]]).
   */
 final case class HnswModel(
@@ -31,15 +27,13 @@ final case class HnswModel(
     // (the round-16 PQ-tier SIGSEGV — see LongVecMap's scaladoc); it is
     // also the no-boxed-lookup shape every distance eval wants
     vectors: LongVecMap
-)(val frozen: Boolean) extends KernelSource {
+) extends KernelSource {
   def size: Int = vectors.size
 
   @transient lazy val layout: ServingLayout = ServingLayout.of(this)
 
   /** A fresh per-partition searcher over this model (see [[ModelKernel]]). */
-  override def kernel(): ModelKernel =
-    if (frozen) new LayoutKernel(layout, params, metricName)
-    else new StoreKernel(this)
+  override def kernel(): ModelKernel = new LayoutKernel(layout, params, metricName)
 }
 
 /** Distributed HNSW build & search over DataFrames.
@@ -131,7 +125,7 @@ object HnswDistributed {
       store, searcher, graph, cfg.seedBatch, cfg.maxBatch,
       cfg.growthDenom, cfg.batchCeiling)
 
-    HnswModel(cfg.params, cfg.metric, graph.snapshot, vecMap)(frozen = true)
+    HnswModel(cfg.params, cfg.metric, graph.snapshot, vecMap)
   }
 
   /** The shared seed + micro-batched build loop over any broadcastable
@@ -495,7 +489,7 @@ object HnswDistributed {
       }
     val snap = GraphFrames.fromLinksDF(compacted, entry)
     compacted.unpersist(blocking = false)
-    HnswModel(model.params, model.metricName, snap, survivors)(frozen = true)
+    HnswModel(model.params, model.metricName, snap, survivors)
   }
 
   /** Process-wide compacted-model memo (the modelCache pattern; the

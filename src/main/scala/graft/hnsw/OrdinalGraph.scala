@@ -1,0 +1,415 @@
+package graft.hnsw
+
+import graft.store.{ArenaVectorStore, EntryPoint, GraphSnapshot, LayerCsr}
+
+/** The live HNSW graph of a streaming index, on the ordinals of its
+  * [[ArenaVectorStore]]: the engine's two-phase insert
+  * ([[HnswSearcher.searchToInsert]], [[HnswSearcher.isMatch]],
+  * [[HnswSearcher.insertFromSearchResults]]) with no id lookup per edge.
+  *
+  *  - per layer and ordinal, an `Int` neighbour row and its `Double`
+  *    distances (null: no row at that layer);
+  *  - the entry point as an ordinal;
+  *  - visited marks as an epoch stamp per ordinal;
+  *  - distances measured four stored vectors per pass
+  *    ([[ArenaVectorStore.measure]]).
+  *
+  * Arena ordinals are insertion order, not id order, so every row and beam
+  * here breaks distance ties by the ordinal's id, as [[FurthestQueue]] and
+  * [[NearestQueue]] do: each row, entry point and beam is the one
+  * [[HnswSearcher]] builds over an id-keyed store and an
+  * [[graft.store.InMemoryGraph]] fed the same inserts. Ids cross into
+  * ordinals only at the edges: [[restore]], [[snapshot]] and the rows a
+  * mirror reads ([[foreachTouched]]).
+  */
+final class OrdinalGraph(params: HnswParams, arena: ArenaVectorStore) extends Serializable {
+  // per layer, indexed by ordinal: neighbour ordinals, their distances,
+  // the row's length
+  private[hnsw] var rows = Array.empty[Array[Array[Int]]]
+  private[hnsw] var rowDists = Array.empty[Array[Array[Double]]]
+  private[hnsw] var degrees = Array.empty[Array[Int]]
+  /** entry ordinal, -1 for an empty graph */
+  private[hnsw] var entry = -1
+  private[hnsw] var entryLayer = -1
+
+  private[this] var marks = new Array[Int](0)
+  private[this] var epoch = 0
+  private[this] val frontier = new OrdinalFrontier
+  // one expansion's unvisited neighbours and their distances
+  private[this] var fresh = new Array[Int](64)
+  private[this] var freshDist = new Array[Double](64)
+
+  // rows and entry written since the last clearTouched, for a mirror
+  private[this] var recording = false
+  private[this] var touchedKeys = new LongSet()
+  private[this] var touched = new Array[Long](64)
+  private[this] var nTouched = 0
+  private[this] var entryTouched = false
+
+  def numLayers: Int = rows.length
+
+  /** Whether ordinal `o`'s insertion completed: it has a row or is the entry. */
+  def contains(o: Int): Boolean = o == entry || {
+    var lc = 0
+    while (lc < rows.length && !(o < rows(lc).length && rows(lc)(o) != null)) lc += 1
+    lc < rows.length
+  }
+
+  /** Grow the layer stack to `n` layers without moving the entry point. */
+  private[this] def ensureLayers(n: Int): Unit =
+    while (rows.length < n) {
+      rows :+= new Array[Array[Int]](0)
+      rowDists :+= new Array[Array[Double]](0)
+      degrees :+= new Array[Int](0)
+    }
+
+  /** Room for ordinal `o` at layer `lc`, growing by half. */
+  private[this] def reserve(lc: Int, o: Int): Unit =
+    if (o >= rows(lc).length) {
+      val cap = math.max(o + 1, rows(lc).length + rows(lc).length / 2)
+      rows(lc) = java.util.Arrays.copyOf(rows(lc), cap)
+      rowDists(lc) = java.util.Arrays.copyOf(rowDists(lc), cap)
+      degrees(lc) = java.util.Arrays.copyOf(degrees(lc), cap)
+    }
+
+  /** Record every write from now on, for [[foreachTouched]]. */
+  def recordTouches(): Unit = recording = true
+
+  private[this] def touch(o: Int, lc: Int): Unit =
+    if (recording && touchedKeys.add((o.toLong << 8) | lc)) {
+      if (nTouched == touched.length) touched = java.util.Arrays.copyOf(touched, nTouched * 2)
+      touched(nTouched) = (o.toLong << 8) | lc
+      nTouched += 1
+    }
+
+  /** `f(ordinal, layer)` for each row written since [[clearTouched]]. */
+  def foreachTouched(f: (Int, Int) => Unit): Unit = {
+    var i = 0
+    while (i < nTouched) { f((touched(i) >>> 8).toInt, (touched(i) & 0xff).toInt); i += 1 }
+  }
+
+  def entryPointTouched: Boolean = entryTouched
+
+  /** The entry point by id. */
+  def entryPoint: Option[EntryPoint] =
+    if (entry < 0) None else Some(EntryPoint(arena.ids(entry), entryLayer))
+
+  def clearTouched(): Unit = {
+    if (nTouched > 0) touchedKeys = new LongSet()
+    nTouched = 0
+    entryTouched = false
+  }
+
+  /** The entry point; a new one must be on a strictly higher layer. */
+  private[this] def setEntry(o: Int, layer: Int): Unit = {
+    require(entry < 0 || entryLayer < layer,
+      s"a new entry point must be on a higher layer ($entryLayer -> $layer)")
+    ensureLayers(layer + 1)
+    entry = o
+    entryLayer = layer
+    entryTouched = recording
+  }
+
+  /** Replace `o`'s row at layer `lc` with `m` neighbours. */
+  private[this] def setRow(o: Int, lc: Int, os: Array[Int], ds: Array[Double], m: Int): Unit = {
+    require(lc < rows.length, s"layer $lc not initialized (have ${rows.length})")
+    reserve(lc, o)
+    rows(lc)(o) = java.util.Arrays.copyOf(os, m)
+    rowDists(lc)(o) = java.util.Arrays.copyOf(ds, m)
+    degrees(lc)(o) = m
+    touch(o, lc)
+  }
+
+  /** [[HnswSearcher.connectBidir]]'s reverse edge: insert `(q, d)` into
+    * `n`'s row at `lc` in `(dist, id)` order, then keep the first
+    * `maxLinks`. */
+  private[this] def addLink(n: Int, lc: Int, q: Int, d: Double, maxLinks: Int): Unit = {
+    reserve(lc, n)
+    if (rows(lc)(n) == null) {
+      rows(lc)(n) = new Array[Int](0)
+      rowDists(lc)(n) = new Array[Double](0)
+    }
+    var row = rows(lc)(n)
+    var dist = rowDists(lc)(n)
+    val cnt = degrees(lc)(n)
+    val ids = arena.ids
+    val qid = ids(q)
+    var left = 0
+    var right = cnt
+    while (left < right) {
+      val mid = (left + right) >>> 1
+      val c = java.lang.Double.compare(dist(mid), d)
+      if (c < 0 || (c == 0 && ids(row(mid)) < qid)) left = mid + 1
+      else right = mid
+    }
+    val next = math.min(cnt + 1, maxLinks)
+    if (next > row.length) {
+      // grow by a quarter, up to maxLinks: a row fills in a few steps
+      // and keeps little unused room
+      val cap = math.min(maxLinks, math.max(next, row.length + row.length / 4 + 2))
+      row = java.util.Arrays.copyOf(row, cap)
+      dist = java.util.Arrays.copyOf(dist, cap)
+      rows(lc)(n) = row
+      rowDists(lc)(n) = dist
+    }
+    if (left < next) {
+      System.arraycopy(row, left, row, left + 1, next - 1 - left)
+      System.arraycopy(dist, left, dist, left + 1, next - 1 - left)
+      row(left) = q
+      dist(left) = d
+    }
+    degrees(lc)(n) = next
+    touch(n, lc)
+  }
+
+  /** [[HnswSearcher.searchLayer]] on ordinals: an expansion marks its
+    * unvisited neighbours, measures them four per pass, then admits them
+    * in row order. */
+  private[this] def searchLayer(q: Array[Float], qNormSq: Double, w: OrdinalQueue,
+                                ef: Int, lc: Int): Unit = {
+    if (marks.length < arena.size)
+      marks = java.util.Arrays.copyOf(marks, math.max(arena.size, marks.length + marks.length / 2))
+    if (epoch == Int.MaxValue) { java.util.Arrays.fill(marks, 0); epoch = 0 }
+    epoch += 1
+    var vi = 0
+    while (vi < w.size) { marks(w.ordAt(vi)) = epoch; vi += 1 }
+    val ids = arena.ids
+    val c = frontier
+    c.loadFrom(w)
+    var fq = w.furthestDist
+    val layer = if (lc < rows.length) rows(lc) else Array.empty[Array[Int]]
+    var continue = true
+    while (continue && c.nonEmpty) {
+      val cq = c.nearestDist
+      val cand = c.popNearest()
+      if (fq < cq) continue = false
+      else if (cand < layer.length && layer(cand) != null) {
+        val row = layer(cand)
+        val deg = degrees(lc)(cand)
+        if (fresh.length < deg) {
+          fresh = new Array[Int](deg)
+          freshDist = new Array[Double](deg)
+        }
+        var m = 0
+        var j = 0
+        while (j < deg) {
+          val e = row(j)
+          if (marks(e) != epoch) { marks(e) = epoch; fresh(m) = e; m += 1 }
+          j += 1
+        }
+        arena.measure(q, qNormSq, fresh, m, freshDist)
+        var i = 0
+        while (i < m) {
+          val eq = freshDist(i)
+          var admit = true
+          if (w.size >= ef) {
+            if (eq < fq) w.dropFurthest()
+            else admit = false
+          }
+          if (admit) {
+            c.insert(fresh(i), eq, ids)
+            w.insert(fresh(i), eq, ids)
+            fq = w.furthestDist
+          }
+          i += 1
+        }
+      }
+    }
+  }
+
+  /** [[HnswSearcher.searchToInsert]]: the beam of query `q` at every layer
+    * at or below `insertionLayer` (index = layer; empty above the graph's
+    * top). */
+  def searchToInsert(q: Array[Float], insertionLayer: Int): Array[OrdinalQueue] = {
+    val qNormSq = ArenaVectorStore.squaredNorm(q)
+    val found = new Array[OrdinalQueue](insertionLayer + 1)
+    val w = new OrdinalQueue
+    if (entry >= 0) w.insert(entry, arena.dist(q, qNormSq, entry), arena.ids)
+    var lc = if (entry >= 0) entryLayer else -1
+    while (lc >= 0) {
+      val ef = if (lc > insertionLayer) params.getEfConstrSearch(lc)
+               else params.getEfConstrInsert(lc)
+      searchLayer(q, qNormSq, w, ef, lc)
+      if (lc <= insertionLayer) found(lc) = if (lc == 0) w else w.copy()
+      lc -= 1
+    }
+    var l = 0
+    while (l <= insertionLayer) { if (found(l) == null) found(l) = new OrdinalQueue; l += 1 }
+    found
+  }
+
+  /** [[HnswSearcher.isMatch]]: the nearest bottom-layer hit is within the
+    * arena's match threshold. */
+  def isMatch(found: Array[OrdinalQueue]): Boolean =
+    found(0).nonEmpty && arena.isMatch(found(0).distAt(0))
+
+  /** [[HnswSearcher.insertFromSearchResults]] for stored ordinal `q`: it
+    * becomes the entry point when it tops the graph, then connects layer
+    * by layer top-down. */
+  def connect(q: Int, found: Array[OrdinalQueue]): Unit = {
+    if (found.length - 1 > entryLayer) setEntry(q, found.length - 1)
+    var lc = found.length - 1
+    while (lc >= 0) {
+      val nb = found(lc)
+      nb.trimTo(params.getM(lc))
+      val maxLinks = params.getMMax(lc)
+      var i = 0
+      while (i < nb.size) { addLink(nb.ordAt(i), lc, q, nb.distAt(i), maxLinks); i += 1 }
+      setRow(q, lc, nb.ordinals, nb.dists, nb.size)
+      lc -= 1
+    }
+  }
+
+  /** `o`'s row at `lc` as an id-keyed queue (empty without a row). */
+  def linksOf(o: Int, lc: Int): FurthestQueue = {
+    val q = FurthestQueue.empty
+    if (lc < rows.length && o < rows(lc).length && rows(lc)(o) != null) {
+      val ids = arena.ids
+      var k = 0
+      while (k < degrees(lc)(o)) { q.insert(ids(rows(lc)(o)(k)), rowDists(lc)(o)(k)); k += 1 }
+    }
+    q
+  }
+
+  /** Load an id-keyed snapshot whose every vertex is already in the arena;
+    * the links may run above the entry point's layer. Writes nothing to
+    * the record of touched rows. */
+  def restore(snap: GraphSnapshot): Unit = {
+    def ordinal(id: Long): Int = {
+      val o = arena.ordinalOf(id)
+      if (o < 0) throw new IllegalStateException(s"graph vertex $id has no vector")
+      o
+    }
+    snap.entryPoint.foreach(ep => setEntry(ordinal(ep.point), ep.layer))
+    ensureLayers(snap.layers.length)
+    snap.layers.zipWithIndex.foreach { case (l, lc) =>
+      var i = 0
+      while (i < l.size) {
+        val from = l.offsets(i)
+        val m = l.offsets(i + 1) - from
+        val os = Array.tabulate(m)(k => ordinal(l.dsts(from + k)))
+        setRow(ordinal(l.srcs(i)), lc, os, java.util.Arrays.copyOfRange(l.dists, from, from + m), m)
+        i += 1
+      }
+    }
+    clearTouched()
+  }
+
+  /** The id-keyed image of the graph: rows in id order, `ids(o)` for
+    * every ordinal. */
+  def snapshot: GraphSnapshot = {
+    val order = arena.idOrder
+    val ids = arena.ids
+    GraphSnapshot(entryPoint,
+      Array.tabulate(rows.length) { lc =>
+        val layer = rows(lc)
+        val deg = degrees(lc)
+        val present = order.filter(o => o < layer.length && layer(o) != null)
+        val offsets = new Array[Int](present.length + 1)
+        var i = 0
+        while (i < present.length) { offsets(i + 1) = offsets(i) + deg(present(i)); i += 1 }
+        val dsts = new Array[Long](offsets(present.length))
+        val dists = new Array[Double](dsts.length)
+        i = 0
+        while (i < present.length) {
+          val o = present(i)
+          var j = offsets(i)
+          var k = 0
+          while (k < deg(o)) { dsts(j) = ids(layer(o)(k)); j += 1; k += 1 }
+          System.arraycopy(rowDists(lc)(o), 0, dists, offsets(i), deg(o))
+          i += 1
+        }
+        LayerCsr(present.map(o => ids(o)), offsets, dsts, dists)
+      })
+  }
+}
+
+/** `(dist, id)`-ascending list of arena ordinals — [[FurthestQueue]] on
+  * ordinals, ties broken by each ordinal's id in the `ids` passed to
+  * [[insert]]. */
+final class OrdinalQueue private (
+    private[hnsw] var ordinals: Array[Int],
+    private[hnsw] var dists: Array[Double],
+    private var n: Int) extends Serializable {
+
+  def this() = this(new Array[Int](8), new Array[Double](8), 0)
+
+  def size: Int = n
+  def nonEmpty: Boolean = n > 0
+  def ordAt(i: Int): Int = ordinals(i)
+  def distAt(i: Int): Double = dists(i)
+  /** Requires nonEmpty. */
+  def furthestDist: Double = dists(n - 1)
+
+  def insert(o: Int, d: Double, ids: Array[Long]): Unit = {
+    val id = ids(o)
+    var left = 0
+    var right = n
+    while (left < right) {
+      val mid = (left + right) >>> 1
+      val c = java.lang.Double.compare(dists(mid), d)
+      if (c < 0 || (c == 0 && ids(ordinals(mid)) < id)) left = mid + 1
+      else right = mid
+    }
+    if (n == ordinals.length) {
+      ordinals = java.util.Arrays.copyOf(ordinals, n * 2)
+      dists = java.util.Arrays.copyOf(dists, n * 2)
+    }
+    System.arraycopy(ordinals, left, ordinals, left + 1, n - left)
+    System.arraycopy(dists, left, dists, left + 1, n - left)
+    ordinals(left) = o
+    dists(left) = d
+    n += 1
+  }
+
+  def dropFurthest(): Unit = if (n > 0) n -= 1
+  def trimTo(k: Int): Unit = if (k < n) n = k
+  def copy(): OrdinalQueue = new OrdinalQueue(
+    java.util.Arrays.copyOf(ordinals, math.max(n, 1)), java.util.Arrays.copyOf(dists, math.max(n, 1)), n)
+}
+
+/** The traversal frontier of an ordinal layer search — [[NearestQueue]]
+  * on ordinals: pops in `(dist, id)`-ascending order. */
+private[hnsw] final class OrdinalFrontier extends Serializable {
+  private[this] var os = new Array[Int](8)
+  private[this] var ds = new Array[Double](8)
+  private[this] var n = 0
+
+  def nonEmpty: Boolean = n > 0
+  /** Requires nonEmpty. */
+  def nearestDist: Double = ds(n - 1)
+  def popNearest(): Int = { n -= 1; os(n) }
+
+  def insert(o: Int, d: Double, ids: Array[Long]): Unit = {
+    val id = ids(o)
+    var left = 0
+    var right = n
+    while (left < right) {
+      val mid = (left + right) >>> 1
+      val c = java.lang.Double.compare(ds(mid), d)
+      if (c > 0 || (c == 0 && ids(os(mid)) > id)) left = mid + 1
+      else right = mid
+    }
+    if (n == os.length) {
+      os = java.util.Arrays.copyOf(os, n * 2)
+      ds = java.util.Arrays.copyOf(ds, n * 2)
+    }
+    System.arraycopy(os, left, os, left + 1, n - left)
+    System.arraycopy(ds, left, ds, left + 1, n - left)
+    os(left) = o
+    ds(left) = d
+    n += 1
+  }
+
+  /** Replace the contents with `w` in visit order. */
+  def loadFrom(w: OrdinalQueue): Unit = {
+    val m = w.size
+    if (m > os.length) {
+      os = new Array[Int](m)
+      ds = new Array[Double](m)
+    }
+    var i = 0
+    while (i < m) { os(i) = w.ordAt(m - 1 - i); ds(i) = w.distAt(m - 1 - i); i += 1 }
+    n = m
+  }
+}

@@ -1,6 +1,6 @@
 package graft.hnsw
 
-import graft.store.{ArenaVectorStore, ArrayVectorStore, InMemoryGraph, Metrics}
+import graft.store.{ArenaVectorStore, ArrayVectorStore, Metrics}
 
 /** Read-only, ordinal-indexed serving image of an HNSW graph and its
   * vectors — the layout behind [[LayoutKernel]]. The engine reads vectors
@@ -17,10 +17,10 @@ import graft.store.{ArenaVectorStore, ArrayVectorStore, InMemoryGraph, Metrics}
   *  - per layer an Int-ordinal CSR (`layerOffsets(lc)` has n + 1 entries,
   *    `layerLinks(lc)` the neighbor ordinals in the graph's order).
   *
-  * Two sources build it: a frozen [[HnswModel]] ([[ServingLayout.of]],
-  * once per JVM, never serialized) and a streaming index's arena and
-  * live graph (once per mutation, broadcast as a [[ServingImage]]). The
-  * layout owns its arrays. A graph that names an id without a vector is
+  * Two sources build it: an [[HnswModel]] ([[ServingLayout.of]], once
+  * per JVM, never serialized) and a streaming index's arena and ordinal
+  * graph (once per mutation, broadcast as a [[ServingImage]]). The layout
+  * owns its arrays. A model graph that names an id without a vector is
   * rejected.
   */
 final class ServingLayout private (
@@ -91,15 +91,13 @@ object ServingLayout {
   }
 
   /** The image of a streaming index: its arena's vectors and its live
-    * graph's links, copied, so the index may keep mutating both. Arena
-    * ordinals are in insertion order; the vectors are permuted into rank
-    * order. */
-  def of(arena: ArenaVectorStore, graph: InMemoryGraph): ServingLayout = {
+    * graph's rows, copied, so the index may keep mutating both. Arena
+    * ordinals are in insertion order; vectors and rows are permuted into
+    * rank order, and each link maps to its rank through one `Int` array. */
+  def of(arena: ArenaVectorStore, graph: OrdinalGraph): ServingLayout = {
     val n = arena.size
-    val ids = java.util.Arrays.copyOf(arena.ids, n)
-    java.util.Arrays.sort(ids)
-    // rank -> arena ordinal, and back
-    val perm = ids.map(arena.ordinalOf)
+    val perm = arena.idOrder // rank -> arena ordinal
+    val ids = perm.map(a => arena.ids(a))
     val rank = new Array[Int](n)
     val offsets = new Array[Int](n + 1)
     val normSq = new Array[Double](n)
@@ -118,29 +116,37 @@ object ServingLayout {
       System.arraycopy(arena.data, arena.offsets(a), data, offsets(r), offsets(r + 1) - offsets(r))
       r += 1
     }
-    val ordinal = (id: Long) => {
-      val a = arena.ordinalOf(id)
-      vertex(id, if (a < 0) a else rank(a))
-    }
 
-    val csr = Array.tabulate(graph.numLayers) { lc =>
-      val rows = new Array[FurthestQueue](n)
-      var found = 0
-      var r = 0
+    val layerOffsets = new Array[Array[Int]](graph.numLayers)
+    val layerLinks = new Array[Array[Int]](graph.numLayers)
+    var lc = 0
+    while (lc < graph.numLayers) {
+      val rows = graph.rows(lc)
+      val deg = graph.degrees(lc)
+      val off = new Array[Int](n + 1)
+      r = 0
       while (r < n) {
-        rows(r) = graph.linksOrNull(ids(r), lc)
-        if (rows(r) != null) found += 1
+        val a = perm(r)
+        off(r + 1) = off(r) + (if (a < rows.length && rows(a) != null) deg(a) else 0)
         r += 1
       }
-      if (found != graph.layerSize(lc)) throw new IllegalStateException(
-        s"layer $lc has ${graph.layerSize(lc) - found} vertices without a vector")
-      linkCsr(n, ordinal,
-        r => if (rows(r) == null) 0 else rows(r).size,
-        (r, k) => rows(r).dstAt(k))
+      val links = new Array[Int](off(n))
+      r = 0
+      while (r < n) {
+        var j = off(r)
+        if (j < off(r + 1)) {
+          val row = rows(perm(r))
+          var k = 0
+          while (j < off(r + 1)) { links(j) = rank(row(k)); j += 1; k += 1 }
+        }
+        r += 1
+      }
+      layerOffsets(lc) = off
+      layerLinks(lc) = links
+      lc += 1
     }
-    val ep = graph.getEntryPoint
-    new ServingLayout(ids, offsets, data, normSq, csr.map(_._1), csr.map(_._2),
-      ep.fold(-1)(e => ordinal(e.point)), ep.fold(-1)(_.layer))
+    new ServingLayout(ids, offsets, data, normSq, layerOffsets, layerLinks,
+      if (graph.entry < 0) -1 else rank(graph.entry), graph.entryLayer)
   }
 
   private def vertex(id: Long, o: Int): Int =
@@ -184,9 +190,8 @@ final case class ServingImage(params: HnswParams, metricName: String,
 
 /** Per-partition k-NN over one [[HnswModel]]: built once per task
   * partition by [[HnswModel.kernel]], then reused for every query of the
-  * partition (single-threaded). Both implementations return the same
-  * `(id, dist)` lists as [[HnswSearcher.searchWithEf]] over an
-  * [[ArrayVectorStore]]. */
+  * partition (single-threaded). It returns the same `(id, dist)` lists
+  * as [[HnswSearcher.searchWithEf]] over an [[ArrayVectorStore]]. */
 sealed trait ModelKernel {
   /** The k nearest ids, layer-0 beam floored at `ef0` (see
     * [[HnswSearcher.searchWithEf]]; `ef0 = 0` is plain search). */
@@ -195,33 +200,6 @@ sealed trait ModelKernel {
   /** Exact top-k, by `(dist, id)`, among the model's vectors whose id
     * passes `keep`. */
   def exactTopK(qvec: Array[Float], k: Int, keep: Long => Boolean): FurthestQueue
-}
-
-/** The generic path: the engine's [[HnswSearcher]] over the model's
-  * id-keyed vectors and graph snapshot. Serves a streaming index's
-  * snapshot ([[graft.streaming.StreamingIngest.IncrementalIndex.model]])
-  * when a caller serves that model directly. */
-private[hnsw] final class StoreKernel(m: HnswModel) extends ModelKernel {
-  private[this] val searcher = new HnswSearcher(m.params)
-  // the -1 query slot is re-staged per query
-  private[this] val store =
-    new ArrayVectorStore(Metrics.byName(m.metricName), base = m.vectors)
-
-  def search(qvec: Array[Float], k: Int, ef0: Int): FurthestQueue =
-    searcher.searchWithEf(store, m.snapshot,
-      store.prepareQueryWithId(-1L, qvec), k, ef0)
-
-  def exactTopK(qvec: Array[Float], k: Int, keep: Long => Boolean): FurthestQueue = {
-    val q = store.prepareQueryWithId(-1L, qvec)
-    val out = FurthestQueue.empty
-    m.vectors.foreachKey { id =>
-      if (keep(id)) {
-        out.insert(id, store.evalDistance(q, id))
-        if (out.size > k) out.dropFurthest()
-      }
-    }
-    out
-  }
 }
 
 /** [[HnswSearcher.searchWithEf]] over a [[ServingLayout]]: the same

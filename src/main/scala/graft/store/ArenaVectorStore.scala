@@ -9,38 +9,27 @@ import graft.hnsw.{LongLongMap, LongVecMap}
   *    `[offsets(o), offsets(o + 1))` — ordinals in insertion order;
   *  - a primitive id -> ordinal map, and the ordinal's id in `ids`;
   *  - each vector's squared norm, summed in [[Metrics.cosineDist]]'s
-  *    order, so a cosine distance reads only the dot product per pair;
-  *  - one pending-query slot: a staged query lives there until
-  *    [[insert]] appends it, so a query that is searched and skipped
-  *    leaves nothing behind.
+  *    order, so a cosine distance reads only the dot product per pair.
   *
-  * Every distance equals [[Metrics.cosineDist]]/[[Metrics.l2Sq]]/
-  * [[Metrics.negDot]] with the query as left operand, bit for bit
-  * ([[ArenaVectorStore.measure]]). Re-inserting a stored id (an orphan
-  * restored from a mirror) overwrites its vector in place.
+  * Callers address vectors by ordinal and measure a query against them
+  * with [[dist]] and [[measure]]; every distance equals
+  * [[Metrics.cosineDist]]/[[Metrics.l2Sq]]/[[Metrics.negDot]] with the
+  * query as left operand, bit for bit. Re-inserting a stored id (an
+  * orphan restored from a mirror) overwrites its vector in place.
   *
   * @param matchThreshold distance at/below which two vectors are duplicates
   */
 final class ArenaVectorStore(metricName: String, matchThreshold: Double = 1e-12)
-    extends VectorStore {
+    extends Serializable {
   import ArenaVectorStore._
-  type Raw = Array[Float]
 
-  private[this] val metric = metricCode(metricName)
+  private[graft] val metric = metricCode(metricName)
   private[this] var n = 0
-  private[this] var nextId = 0L
   private[graft] var data = new Array[Float](0)
   private[graft] var offsets = new Array[Int](1)
   private[graft] var norms = new Array[Double](0)
   private[graft] var ids = new Array[Long](0)
   private[this] val ordinals = new LongLongMap()
-
-  private[this] var pendingId = 0L
-  private[this] var pending: Array[Float] = null
-  private[this] var pendingNorm = 0.0
-
-  // evalDistanceBatch scratch: the resolved ordinals of one call
-  private[this] var scratch = new Array[Int](64)
 
   /** Number of stored vectors. */
   def size: Int = n
@@ -66,6 +55,13 @@ final class ArenaVectorStore(metricName: String, matchThreshold: Double = 1e-12)
     m
   }
 
+  /** The stored ordinals in ascending id order. */
+  private[graft] def idOrder: Array[Int] = {
+    val sorted = java.util.Arrays.copyOf(ids, n)
+    java.util.Arrays.sort(sorted)
+    sorted.map(ordinalOf)
+  }
+
   /** Room for one more vector of `floats` floats, growing by half. */
   private[this] def grow(floats: Int): Unit = {
     if (n == ids.length) {
@@ -82,80 +78,40 @@ final class ArenaVectorStore(metricName: String, matchThreshold: Double = 1e-12)
     }
   }
 
-  def prepareQueryWithId(id: Long, raw: Array[Float]): Long = {
-    pendingId = id
-    pending = raw
-    pendingNorm = squaredNorm(raw)
-    if (id >= nextId) nextId = id + 1
-    id
-  }
-
-  override def prepareQuery(raw: Array[Float]): Long = prepareQueryWithId(nextId, raw)
-
-  /** Persist the staged query: append it, or overwrite the vector of an
-    * id already stored (which must keep its length). */
-  override def insert(q: Long): Long = {
-    if (pending == null || q != pendingId)
-      throw new NoSuchElementException(s"insert($q): no staged query under that id")
-    val v = pending
-    val o = ordinalOf(q)
+  /** Store `v` under `id` and return its ordinal: append it, or
+    * overwrite the vector of an id already stored (which must keep its
+    * length). */
+  def insert(id: Long, v: Array[Float]): Int = {
+    val o = ordinalOf(id)
     if (o >= 0) {
       require(offsets(o + 1) - offsets(o) == v.length,
-        s"id $q re-inserted with ${v.length} floats, stored with ${offsets(o + 1) - offsets(o)}")
+        s"id $id re-inserted with ${v.length} floats, stored with ${offsets(o + 1) - offsets(o)}")
       System.arraycopy(v, 0, data, offsets(o), v.length)
-      norms(o) = pendingNorm
+      norms(o) = squaredNorm(v)
+      o
     } else {
       grow(v.length)
       System.arraycopy(v, 0, data, offsets(n), v.length)
       offsets(n + 1) = offsets(n) + v.length
-      norms(n) = pendingNorm
-      ids(n) = q
-      ordinals.put(q, n)
+      norms(n) = squaredNorm(v)
+      ids(n) = id
+      ordinals.put(id, n)
       n += 1
+      n - 1
     }
-    pending = null
-    q
   }
 
-  override def isMatch(d: Double): Boolean = d <= matchThreshold
+  def isMatch(d: Double): Boolean = d <= matchThreshold
 
-  /** The staged query, or the stored vector, under `id`. */
-  private[this] def raw(id: Long): Array[Float] =
-    if (pending != null && id == pendingId) pending else vector(id)
+  /** Distance from `q` (squared norm `qNormSq`) to stored ordinal `o`. */
+  def dist(q: Array[Float], qNormSq: Double, o: Int): Double =
+    ArenaVectorStore.dist(metric, q, qNormSq, data, offsets, norms, o)
 
-  override def evalDistance(q: Long, v: Long): Double =
-    if (pending != null && q == pendingId && v != pendingId) {
-      val o = ordinalOf(v)
-      if (o < 0) throw new NoSuchElementException(s"key not found: $v")
-      dist(metric, pending, pendingNorm, data, offsets, norms, o)
-    } else Metrics.byName(metricName)(raw(q), raw(v))
-
-  /** The staged query against stored vectors, four per pass
-    * ([[ArenaVectorStore.measure]]); anything else pair by pair. */
-  override def evalDistanceBatch(q: Long, vs: Array[Long]): Array[Double] = {
-    val m = vs.length
-    val out = new Array[Double](m)
-    if (pending == null || q != pendingId) {
-      var i = 0
-      while (i < m) { out(i) = evalDistance(q, vs(i)); i += 1 }
-      return out
-    }
-    if (scratch.length < m) scratch = new Array[Int](math.max(m, scratch.length * 2))
-    var i = 0
-    while (i < m) {
-      val v = vs(i)
-      val o = ordinalOf(v)
-      if (o < 0 || v == pendingId) {
-        var j = 0
-        while (j < m) { out(j) = evalDistance(q, vs(j)); j += 1 }
-        return out
-      }
-      scratch(i) = o
-      i += 1
-    }
-    measure(metric, pending, pendingNorm, data, offsets, norms, scratch, m, out)
-    out
-  }
+  /** Distances from `q` to stored ordinals `os(0 until m)` into
+    * `out(0 until m)`, four per pass ([[ArenaVectorStore.measure]]). */
+  def measure(q: Array[Float], qNormSq: Double, os: Array[Int], m: Int,
+              out: Array[Double]): Unit =
+    ArenaVectorStore.measure(metric, q, qNormSq, data, offsets, norms, os, m, out)
 }
 
 /** The distance kernels over an arena layout (`data`, `offsets`,

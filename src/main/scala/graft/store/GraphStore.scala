@@ -202,14 +202,6 @@ final class InMemoryGraph extends GraphStore {
 
   override def numLayers: Int = layers.size
 
-  /** `base`'s neighbor queue at `lc` without the copy, or null — a
-    * read-only view for layout builders, which must not mutate it. */
-  private[graft] def linksOrNull(base: Long, lc: Int): FurthestQueue =
-    if (lc >= layers.size) null else layers(lc).getOrNull(base)
-
-  /** Number of vertices with a row at layer `lc`. */
-  private[graft] def layerSize(lc: Int): Int = if (lc >= layers.size) 0 else layers(lc).size
-
   /** G7: export the adjacency of one layer. */
   def layerLinks(lc: Int): Map[Long, FurthestQueue] = layers(lc).toMap
 

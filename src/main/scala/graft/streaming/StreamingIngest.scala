@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.hnsw.{HnswModel, HnswSearcher, LongSet, ServingImage, ServingLayout}
+import graft.hnsw.{HnswModel, HnswSearcher, OrdinalGraph, ServingImage, ServingLayout}
 import graft.hnsw.HnswDistributed.BuildConfig
-import graft.store.{ArenaVectorStore, GraphStore, InMemoryGraph, RecordingGraphStore}
+import graft.store.ArenaVectorStore
 
 /** Structured-Streaming ingest for the vector engine — the true-streaming
   * analog of the reference's coroutine insert protocol
@@ -26,69 +26,70 @@ object StreamingIngest {
   /** Mutable index handle shared across micro-batches. Thread-safe for
     * the single-writer foreachBatch contract.
     *
-    * Vectors live in an [[graft.store.ArenaVectorStore]]; after each
-    * mutation, serving reads a [[graft.hnsw.ServingImage]] built from the
-    * arena and the live graph ([[image]], [[modelBroadcast]]).
+    * Vectors live in an [[graft.store.ArenaVectorStore]] and the graph in
+    * an [[graft.hnsw.OrdinalGraph]] on the arena's ordinals: an insert
+    * reads and writes `Int` rows and epoch-stamped marks, never an id
+    * map. After each mutation, serving reads a [[graft.hnsw.ServingImage]]
+    * built from both ([[image]], [[modelBroadcast]]).
     *
     * @param mirror optional durable graph mirror: after each batch, the
-    *               adjacency rows the batch touched (tracked by a
-    *               [[graft.store.RecordingGraphStore]]) are written
-    *               through to the parquet store — the delta, not the
-    *               whole graph — so the index survives restarts.
+    *               adjacency rows the batch touched are written through
+    *               to the parquet store — the delta, not the whole
+    *               graph — so the index survives restarts.
     */
   final class IncrementalIndex(cfg: BuildConfig,
                                mirror: Option[graft.store.ParquetGraphStore] = None)
       extends Serializable {
     private val searcher = new HnswSearcher(cfg.params)
     private val store = new ArenaVectorStore(cfg.metric, matchThreshold = 1e-9)
-    private val inner = new InMemoryGraph
+    private val graph = new OrdinalGraph(cfg.params, store)
     // touched rows are recorded only for a mirror to write out
-    private val recorder = mirror.map(_ => new RecordingGraphStore(inner))
-    private val graph: GraphStore = recorder.getOrElse(inner)
-    // ids whose INSERTION completed (graph membership) — distinct from
-    // the store, which after a restore may also hold orphan vectors whose
-    // graph rows never made it to the mirror before a crash; those must
-    // re-insert on redelivery, fully-inserted ids must not
-    private val insertedIds = new LongSet()
+    if (mirror.isDefined) graph.recordTouches()
 
     /** Mirror the batch delta: the batch's new vectors first (an orphan
       * vector is harmless on restore; a graph row referencing a missing
       * vector is not), then the touched adjacency rows + entry point. */
     private def mirrorDelta(newRows: Seq[(Long, Array[Float])]): Unit =
-      for (pg <- mirror; rec <- recorder) {
+      for (pg <- mirror) {
         if (newRows.nonEmpty) {
           val sess = pg.spark
           import sess.implicits._
           newRows.toDF("id", "vec").write.mode("append").parquet(s"${pg.path}/vectors")
         }
-        rec.touched.foreach { case (src, lc) =>
-          pg.setLinks(src, inner.getLinks(src, lc), lc)
-        }
-        if (rec.entryPointTouched)
-          inner.getEntryPoint.foreach(ep => pg.setEntryPoint(ep.point, ep.layer))
+        graph.foreachTouched((o, lc) => pg.setLinks(store.ids(o), graph.linksOf(o, lc), lc))
+        if (graph.entryPointTouched)
+          graph.entryPoint.foreach(ep => pg.setEntryPoint(ep.point, ep.layer))
         // delta flush: O(rows touched this batch), not a full-table
         // rewrite per batch — the write volume the class doc promises
         pg.flushDelta()
-        rec.clearRecording()
+        graph.clearTouched()
       }
+
+    /** Whether `id`'s insertion completed (graph membership) — distinct
+      * from the store, which after a restore may also hold orphan vectors
+      * whose graph rows never made it to the mirror before a crash; those
+      * must re-insert on redelivery, fully-inserted ids must not. */
+    private def inserted(id: Long): Boolean = {
+      val o = store.ordinalOf(id)
+      o >= 0 && graph.contains(o)
+    }
 
     /** Id-sorted, id-distinct rows not inserted yet. */
     private def toInsert(rows: Array[(Long, Array[Float])]): Array[(Long, Array[Float])] =
-      rows.sortBy(_._1).distinctBy(_._1).filterNot(r => insertedIds.contains(r._1))
+      rows.sortBy(_._1).distinctBy(_._1).filterNot(r => inserted(r._1))
 
     def insertRows(rows: Array[(Long, Array[Float])]): Unit = synchronized {
       // Deterministic order within the batch (reference inserts are
       // strictly sequential; a micro-batch is our sequential unit).
-      // distinctBy + the insertedIds guard make redelivery idempotent:
+      // distinctBy + the inserted guard make redelivery idempotent:
       // an at-least-once source repeating an id — within one batch or
       // across redelivered batches — must not insert twice (the second
       // insert would find the first at distance 0 and connect_bidir a
       // self-loop that permanently wastes a degree slot).
       val sorted = toInsert(rows)
       sorted.foreach { case (id, v) =>
-        val q = store.prepareQueryWithId(id, v)
-        searcher.insert(store, graph, q, searcher.selectLayerByHash(id, cfg.seed))
-        insertedIds.add(id)
+        val found = graph.searchToInsert(v, searcher.selectLayerByHash(id, cfg.seed))
+        graph.connect(store.insert(id, v), found)
       }
       if (sorted.nonEmpty) bumpVersion()
       mirrorDelta(sorted.toSeq)
@@ -98,26 +99,22 @@ object StreamingIngest {
       * already match something in the index; returns (inserted, skipped). */
     def insertIfNoMatch(rows: Array[(Long, Array[Float])]): (Int, Int) = synchronized {
       var ins = 0; var skip = 0
-      val inserted = Seq.newBuilder[(Long, Array[Float])]
+      val added = Seq.newBuilder[(Long, Array[Float])]
       // redelivered ids are inherently idempotent here: the first copy's
       // vector matches itself at distance 0, so the second is skipped by
       // the isMatch test — only the explicit guard for ids restored from
       // the mirror is needed
       toInsert(rows).foreach { case (id, v) =>
-        val q = store.prepareQueryWithId(id, v)
-        val lay = searcher.selectLayerByHash(id, cfg.seed)
-        val (neighbors, setEp) = searcher.searchToInsert(store, graph, q, lay)
-        if (searcher.isMatch(store, neighbors)) { skip += 1 }
+        val found = graph.searchToInsert(v, searcher.selectLayerByHash(id, cfg.seed))
+        if (graph.isMatch(found)) { skip += 1 }
         else {
-          store.insert(q)
-          searcher.insertFromSearchResults(store, graph, q, neighbors, setEp)
-          inserted += ((id, v))
-          insertedIds.add(id)
+          graph.connect(store.insert(id, v), found)
+          added += ((id, v))
           ins += 1
         }
       }
       if (ins > 0) bumpVersion()
-      mirrorDelta(inserted.result())
+      mirrorDelta(added.result())
       (ins, skip)
     }
 
@@ -142,8 +139,8 @@ object StreamingIngest {
       * serving reads [[image]] instead. */
     def model: HnswModel = synchronized {
       if (snapAt != mutations) {
-        snapCache = HnswModel(cfg.params, cfg.metric, inner.snapshot,
-          store.toLongVecMap)(frozen = false)
+        snapCache = HnswModel(cfg.params, cfg.metric, graph.snapshot,
+          store.toLongVecMap)
         snapAt = mutations
       }
       snapCache
@@ -153,7 +150,7 @@ object StreamingIngest {
       * distances, arrays of its own. */
     def image: ServingImage = synchronized {
       if (imageAt != mutations) {
-        imageCache = ServingImage(cfg.params, cfg.metric, ServingLayout.of(store, inner))
+        imageCache = ServingImage(cfg.params, cfg.metric, ServingLayout.of(store, graph))
         imageAt = mutations
       }
       imageCache
@@ -185,36 +182,19 @@ object StreamingIngest {
 
     /** Warm-start from mirrored state (restart recovery): load the
       * persisted vectors into the store and the adjacency/entry point
-      * into the in-memory graph. Writes bypass the recording decorator —
-      * restored state is already durable and must not re-mirror. */
+      * into the ordinal graph. Restored state is already durable and is
+      * not recorded for the mirror. The links may run AHEAD of the entry
+      * point (mirror crash between the links write and the entry write):
+      * the graph grows its layer stack to the snapshot's height, or the
+      * restore would refuse that state on every restart. Only ids the
+      * GRAPH knows count as inserted; a vector row with no graph presence
+      * is an orphan from a crash mid-mirror and re-inserts when its batch
+      * is redelivered. */
     private[streaming] def restoreState(
         snap: graft.store.GraphSnapshot,
         rows: Array[(Long, Array[Float])]): Unit = synchronized {
-      rows.foreach { case (id, v) =>
-        store.prepareQueryWithId(id, v)
-        store.insert(id)
-      }
-      snap.entryPoint.foreach(ep => inner.setEntryPoint(ep.point, ep.layer))
-      // the links may run AHEAD of the entry point (mirror crash between
-      // the links write and the entry write): grow the layer stack to
-      // the snapshot's height or the restore would refuse that state on
-      // every restart — exactly the scenario this module exists to
-      // recover from
-      inner.ensureLayers(snap.layers.length)
-      snap.layers.zipWithIndex.foreach { case (layer, lc) =>
-        layer.entriesIterator.foreach { case (src, dsts, dists) =>
-          inner.setLinks(src, graft.hnsw.FurthestQueue.fromAscending(
-            Array.tabulate(dsts.length)(i =>
-              graft.hnsw.Neighbor(dsts(i), dists(i))).toSeq), lc)
-        }
-      }
-      // only ids the GRAPH knows count as inserted; a vector row with no
-      // graph presence is an orphan from a crash mid-mirror and must
-      // re-insert when its batch is redelivered
-      rows.foreach { case (id, _) =>
-        if (snap.entryPoint.exists(_.point == id) || snap.layers.exists(_.contains(id)))
-          insertedIds.add(id)
-      }
+      rows.foreach { case (id, v) => store.insert(id, v) }
+      graph.restore(snap)
       bumpVersion()
     }
   }

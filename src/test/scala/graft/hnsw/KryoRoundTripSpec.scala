@@ -156,7 +156,6 @@ class KryoRoundTripSpec extends SparkSpec {
       searcher.search(store, m.snapshot, q, 10).iterator
         .map(nb => (nb.dst, nb.dist)).toSeq
     }
-    assert(rt.frozen)
     val (rtKernel, kernel) = (rt.kernel(), model.kernel())
     assert(rtKernel.isInstanceOf[LayoutKernel])
     (0 until 10).foreach { qi =>

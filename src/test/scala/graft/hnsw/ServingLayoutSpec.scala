@@ -7,7 +7,7 @@ import graft.hnsw.HnswDistributed.BuildConfig
 import graft.plans.{HnswSql, HnswStrategy}
 import graft.store.{ArrayVectorStore, Metrics}
 
-/** The layout kernel against the engine it replaces on frozen models:
+/** The layout kernel against the engine it replaces on built models:
   * every query's `(id, dist)` list must equal [[HnswSearcher.searchWithEf]]
   * over an [[ArrayVectorStore]] and the model's snapshot, distances bit for
   * bit. The data holds the cases where an ordinal layout can go wrong:
@@ -69,7 +69,6 @@ class ServingLayoutSpec extends SparkSpec {
   test("layout kernel equals HnswSearcher.searchWithEf under cosine, l2 and dot") {
     var tiedRuns = 0
     models.foreach { case (metric, m) =>
-      assert(m.frozen)
       val kernel = m.kernel()
       assert(kernel.isInstanceOf[LayoutKernel])
       assert(m.snapshot.layers.length > 1, "the data must give a multi-layer graph")
@@ -110,46 +109,75 @@ class ServingLayoutSpec extends SparkSpec {
       assert(bits(one.kernel().search(qvec, 10, 0)) == reference(one, qvec, 10, 0))
   }
 
-  test("only built and compacted models are frozen; streaming snapshots serve generically") {
+  test("compacted models and streaming snapshots serve through the layout kernel, equal to HnswSearcher") {
     val m = models("cosine")
     val deleted = Seq(rows(3)._1, rows(4)._1).toDF("id")
     val compacted = HnswDistributed.compactModel(m, deleted)
-    assert(compacted.frozen && compacted.kernel().isInstanceOf[LayoutKernel])
     val index = new graft.streaming.StreamingIngest.IncrementalIndex(
       BuildConfig(params, metric = "cosine", seed = 7L))
-    index.insertRows(rows.take(50))
-    assert(!index.model.frozen && index.model.kernel().isInstanceOf[StoreKernel])
+    index.insertRows(rows.take(50) :+ rows.last) // id -1 included
+    for (model <- Seq(compacted, index.model)) {
+      val kernel = model.kernel()
+      assert(kernel.isInstanceOf[LayoutKernel])
+      for (qvec <- queries; (k, ef0) <- Seq((10, 0), (40, 40)))
+        assert(bits(kernel.search(qvec, k, ef0)) == reference(model, qvec, k, ef0), s"k=$k ef0=$ef0")
+    }
     // the layout of the compacted model serves the survivors only
     val kept = compacted.layout.ids.toSet
     assert(kept == rows.map(_._1).toSet -- Set(rows(3)._1, rows(4)._1))
   }
 
-  test("frozen serve sites return the generic path's rows, down to the exact-scan fallback") {
-    // the generic path stages its query under id -1, so this data leaves it out
-    val data = rows.filter(_._1 != -1L)
-    val frozen = build("cosine", data)
-    val generic = frozen.copy()(frozen = false)
+  test("serve sites return HnswSearcher.searchWithEf's rows, down to the exact-scan fallback") {
+    val m = build("cosine")
     val qDf = queries.zipWithIndex
       .map { case (v, i) => (i.toLong, v) }.toDF("qid", "qvec")
-    def rowsOf(df: DataFrame): Set[(Long, Long, Long, Int)] =
+    type Rows = Set[(Long, Long, Long, Int)]
+    def rowsOf(df: DataFrame): Rows =
       df.select("qid", "id", "dist", "rank").collect().map(r =>
         (r.getLong(0), r.getLong(1),
           java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getInt(3))).toSet
-    def same(f: HnswModel => DataFrame): Unit = {
-      val got = rowsOf(f(frozen))
-      assert(got.nonEmpty && got == rowsOf(f(generic)))
+    /** The rows a serve site must return when each query's hits are `hits`. */
+    def expected(hits: (Array[Float], Long) => List[(Long, Long)]): Rows =
+      queries.zipWithIndex.flatMap { case (v, i) =>
+        hits(v, i.toLong).zipWithIndex.map { case ((id, d), r) => (i.toLong, id, d, r + 1) }
+      }.toSet
+    def plain(k: Int, ef0: Int): Rows = expected((v, _) => reference(m, v, k, ef0))
+    /** searchPredicated's overfetch loop on the reference engine, with a
+      * brute-force `(dist, id)` scan where the beam spans the index. */
+    def predicated(keep: Long => Boolean, k: Int): Rows = expected { (v, _) =>
+      val n = m.size
+      var kp = math.max(4 * k, params.getEfSearch(0))
+      var out: List[(Long, Long)] = null
+      while (out == null) {
+        val found = reference(m, v, kp, kp).filter(h => keep(h._1)).take(k)
+        if (found.length >= k) out = found
+        else if (kp >= n) {
+          val dist = Metrics.byName(m.metricName)
+          out = rows.filter(r => keep(r._1)).map { case (id, u) => (id, dist(v, u)) }
+            .sortBy { case (id, d) => (d, id) }.take(k)
+            .map { case (id, d) => (id, java.lang.Double.doubleToRawLongBits(d)) }.toList
+        } else kp = math.min(n, kp * 4)
+      }
+      out
     }
-    val few = data.take(40).map(_._1).filter(_ % 2 == 0).take(3).toSeq.toDF("id")
-    val allButFew = data.drop(3).map(_._1).toSeq.toDF("id")
-    same(HnswDistributed.search(qDf, _, 10))
-    same(HnswDistributed.search(qDf, _, 40)) // k > efSearch(0)
+    val few = rows.take(40).map(_._1).filter(_ % 2 == 0).take(3).toSet
+    val allButFew = rows.drop(3).map(_._1).toSet
+    def idsDf(ids: Set[Long]) = ids.toSeq.toDF("id")
+    def same(got: DataFrame, want: Rows): Unit = {
+      assert(want.nonEmpty)
+      assert(rowsOf(got) == want)
+    }
+    same(HnswDistributed.search(qDf, m, 10), plain(10, 0))
+    same(HnswDistributed.search(qDf, m, 40), plain(40, 0)) // k > efSearch(0)
     // 3 allowed ids, k = 5: the beam spans the index and the exact scan answers
-    same(HnswDistributed.searchFiltered(qDf, _, few, 5))
-    same(HnswDistributed.searchFiltered(qDf, _, data.map(_._1).toSeq.toDF("id"), 10))
-    same(HnswDistributed.searchExcluding(qDf, _, allButFew, 5))
-    same(HnswDistributed.searchExcluding(qDf, _, few, 10))
+    same(HnswDistributed.searchFiltered(qDf, m, idsDf(few), 5), predicated(few, 5))
+    same(HnswDistributed.searchFiltered(qDf, m, idsDf(rows.map(_._1).toSet), 10),
+      predicated(_ => true, 10))
+    same(HnswDistributed.searchExcluding(qDf, m, idsDf(allButFew), 5),
+      predicated(id => !allButFew(id), 5))
+    same(HnswDistributed.searchExcluding(qDf, m, idsDf(few), 10), predicated(id => !few(id), 10))
     spark.experimental.extraStrategies =
       spark.experimental.extraStrategies.filterNot(_.isInstanceOf[HnswStrategy]) :+ new HnswStrategy
-    same(HnswSql.knn(qDf, _, 40))
+    same(HnswSql.knn(qDf, m, 40), plain(40, 40))
   }
 }

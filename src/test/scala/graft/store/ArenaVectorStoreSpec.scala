@@ -40,30 +40,34 @@ class ArenaVectorStoreSpec extends AnyFunSuite {
 
   private def arenaOf(metric: String): ArenaVectorStore = {
     val s = new ArenaVectorStore(metric)
-    stored.foreach { case (id, v) => s.insert(s.prepareQueryWithId(id, v)) }
+    stored.foreach { case (id, v) => s.insert(id, v) }
     s
   }
 
-  test("evalDistance and evalDistanceBatch are bit-identical to Metrics for batches of 0-9") {
+  test("dist and measure are bit-identical to Metrics for batches of 0-9") {
     val pick = new scala.util.Random(3)
     metrics.foreach { metric =>
       val f = Metrics.byName(metric)
       val s = arenaOf(metric)
       queries.zipWithIndex.foreach { case (qvec, qi) =>
-        val q = s.prepareQueryWithId(10000L + qi, qvec)
+        val qn = ArenaVectorStore.squaredNorm(qvec)
         stored.foreach { case (id, v) =>
-          assert(bits(s.evalDistance(q, id)) == bits(f(qvec, v)), s"$metric q$qi id $id")
+          assert(bits(s.dist(qvec, qn, s.ordinalOf(id))) == bits(f(qvec, v)), s"$metric q$qi id $id")
         }
         for (m <- 0 to 9; _ <- 0 until 4) {
           val batch = Array.fill(m)(stored(pick.nextInt(stored.size)))
-          val got = s.evalDistanceBatch(q, batch.map(_._1)).map(bits).toSeq
-          assert(got == batch.map { case (_, v) => bits(f(qvec, v)) }.toSeq,
+          // room past m: measure must fill exactly the first m slots
+          val out = Array.fill(m + 3)(-7.0)
+          s.measure(qvec, qn, batch.map(r => s.ordinalOf(r._1)) ++ Array(0, 1, 2), m, out)
+          assert(out.take(m).map(bits).toSeq == batch.map { case (_, v) => bits(f(qvec, v)) }.toSeq,
             s"$metric q$qi batch of $m")
+          assert(out.drop(m).forall(_ == -7.0))
         }
-        // a stored vector as the left operand, and both operands stored
-        assert(bits(s.evalDistance(stored(2)._1, stored(7)._1)) ==
-          bits(f(stored(2)._2, stored(7)._2)))
-        assert(bits(s.evalDistance(stored(7)._1, q)) == bits(f(stored(7)._2, qvec)))
+        // a stored vector as the query
+        val (id2, v2) = stored(2)
+        assert(bits(s.dist(v2, ArenaVectorStore.squaredNorm(v2), s.ordinalOf(stored(7)._1))) ==
+          bits(f(v2, stored(7)._2)))
+        assert(s.ordinalOf(id2) == 2)
       }
     }
   }
@@ -73,18 +77,18 @@ class ArenaVectorStoreSpec extends AnyFunSuite {
     val (id, _) = stored(6)
     val ordinal = s.ordinalOf(id)
     val replacement = vecFromHash(555L, 8L, dim)
-    s.insert(s.prepareQueryWithId(id, replacement))
+    assert(s.insert(id, replacement) == ordinal)
     assert(s.size == stored.size)
     assert(s.ordinalOf(id) == ordinal)
     assert(s.vector(id).toSeq == replacement.toSeq)
-    val q = s.prepareQueryWithId(-5L, queries.head)
-    assert(bits(s.evalDistance(q, id)) == bits(Metrics.cosineDist(queries.head, replacement)))
+    val qn = ArenaVectorStore.squaredNorm(queries.head)
+    assert(bits(s.dist(queries.head, qn, ordinal)) == bits(Metrics.cosineDist(queries.head, replacement)))
     // its neighbours in the arena are untouched
     assert(s.vector(stored(5)._1).toSeq == stored(5)._2.toSeq)
     assert(s.vector(stored(7)._1).toSeq == stored(7)._2.toSeq)
-    // a staged query that is never inserted leaves nothing behind
-    s.prepareQueryWithId(77777L, queries.head)
-    assert(s.size == stored.size && s.ordinalOf(77777L) < 0)
+    // ordinals follow insertion order; idOrder lists them by id
+    assert(s.ordinalOf(77777L) < 0)
+    assert(s.idOrder.map(o => s.ids(o)).toSeq == stored.map(_._1).sorted)
   }
 
   /** Batches with ids out of order across batches, in-batch repeats and
