@@ -132,15 +132,8 @@ object Ivf {
     val probed = queries
       .withColumn("cell", explode(graft.functions.IvfFunctions.ivfProbes(
         col("qvec"), model.centroids, model.metricName, nProbe)))
-    val pairs = probed.join(assigned, "cell")
+    ExactKnn.rankPerQuery(probed.join(assigned, "cell")
       .select(col("qid"), col("id"),
-        score(col("qvec"), col(payloadCol)).as("score"))
-    val topk = udaf(new ExactKnn.TopKAggregator(k, ascending))
-    pairs
-      .groupBy(col("qid"))
-      .agg(topk(col("id"), col("score")).as("nn"))
-      .select(col("qid"), posexplode(col("nn")).as(Seq("pos", "n")))
-      .select(col("qid"), col("n.id").as("id"), col("n.score").as("score"),
-        (col("pos") + 1).cast("int").as("rank"))
+        score(col("qvec"), col(payloadCol)).as("score")), k, ascending)
   }
 }
