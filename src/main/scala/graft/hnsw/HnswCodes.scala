@@ -3,7 +3,7 @@ package graft.hnsw
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.store.{CodeVectorStore, GraphSnapshot, InMemoryGraph}
+import graft.store.{GraphSnapshot, InMemoryGraph}
 
 /** HNSW over u64 bit-codes compared by Hamming distance — the reference's
   * native vector representation (lazy_memory_store.rs:14-21, 49-54),
@@ -77,11 +77,21 @@ object HnswCodes {
     val codeMap = LongLongMap.from(rows.iterator, rows.length)
     val store = new CodeStoreWithIds(codeMap)
     val graph = new InMemoryGraph
-    val insLayers = rows.map { case (id, _) => searcher.selectLayerByHash(id, seed) }
+    val ids = rows.map(_._1)
+    val insLayers = ids.map(id => searcher.selectLayerByHash(id, seed))
 
-    HnswDistributed.batchedBuildLoop(spark, rows.map(_._1), insLayers, codeMap,
-      (m: LongLongMap) => new CodeStoreWithIds(m),
-      store, searcher, graph, seedBatch, maxBatch, growthDenom, batchCeiling)
+    HnswDistributed.batchedBuildLoop(spark, ids, insLayers, params, seedBatch, maxBatch,
+      growthDenom, batchCeiling)(codeMap,
+      i => searcher.insert(store, graph, ids(i), insLayers(i)),
+      () => graph.snapshot,
+      (m: LongLongMap, snap: GraphSnapshot) => {
+        val local = new CodeStoreWithIds(m)
+        (id: Long, layer: Int) => searcher.searchToInsert(local, snap, id, layer)._1.map(_.toArray)
+      },
+      (id: Long, found: Vector[Array[Neighbor]]) => {
+        val links = found.map(a => FurthestQueue.fromAscending(a.toSeq))
+        searcher.insertFromSearchResults(store, graph, id, links, links.size > graph.numLayers)
+      })
 
     CodeModel(params, graph.snapshot, codeMap)
   }

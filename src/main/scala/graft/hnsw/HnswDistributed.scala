@@ -1,9 +1,11 @@
 package graft.hnsw
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.store.{ArrayVectorStore, GraphSnapshot, InMemoryGraph, Metrics}
+import graft.store.{ArenaVectorStore, ArrayVectorStore, GraphSnapshot, Metrics}
 
 /** A built HNSW index ready for distributed search: the (small, broadcast-
   * able) layered graph plus the vector table keyed by id. At broadcast
@@ -36,15 +38,30 @@ final case class HnswModel(
   override def kernel(): ModelKernel = new LayoutKernel(layout, params, metricName)
 }
 
+/** A batched float build's vectors, broadcast once: `ids(i)` and
+  * `vecs(i)` are row `i` in build order. Per-vector arrays, as a
+  * [[LongVecMap]] payload has, so no single array nears Kryo's 2 GiB
+  * limit; each JVM builds its [[arena]] once on first use, never
+  * serialized, with ordinal `i` for row `i`. */
+private[hnsw] final class BuildVectors(metricName: String, val ids: Array[Long],
+                                       val vecs: Array[Array[Float]]) extends Serializable {
+  @transient lazy val arena: ArenaVectorStore = {
+    val a = new ArenaVectorStore(metricName)
+    ids.indices.foreach(i => a.insert(ids(i), vecs(i)))
+    a
+  }
+}
+
 /** Distributed HNSW build & search over DataFrames.
   *
   * Build (S10 batched): the reference inserts one vector at a time, each
   * insert reading the graph built by all previous ones
   * (hawk_searcher.rs:311-332). The batch-parallel variant processes
   * micro-batches: phase 1 (search_to_insert, read-only — the expensive
-  * part) runs data-parallel on executors against a broadcast snapshot of
-  * the current graph; phase 2 (connect_bidir mutations) applies the batch
-  * results in deterministic id order. Same-batch vectors don't see each
+  * part) runs data-parallel on executors against a broadcast copy of the
+  * current graph's `Int` rows; phase 2 (connect_bidir mutations) applies
+  * the batch results in deterministic id order, both on an arena's
+  * ordinals ([[OrdinalGraph]]). Same-batch vectors don't see each
   * other during phase 1, so batch size is capped at the current graph size
   * (each node always links into a graph at least as large as its batch) —
   * the standard recall/parallelism tradeoff of distributed HNSW builds,
@@ -109,116 +126,98 @@ object HnswDistributed {
     // while the insertion loop runs per ROW, linking a vertex to itself
     // and inflating its degree) — keep the first occurrence
     val rows = rows0.distinctBy(_._1)
-    val metric = Metrics.byName(cfg.metric)
-    val searcher = new HnswSearcher(cfg.params)
-    // primitive-keyed: this map backs EVERY distance eval of the build
-    // (executor-side through the broadcast payload, driver-side in the
-    // merge) — a boxed trie here costs a Long box + trie walk per eval
-    val vecMap = LongVecMap.from(rows.iterator, rows.length)
-    val store = new ArrayVectorStore(metric, base = vecMap)
-    rows.foreach { case (id, v) => store.prepareQueryWithId(id, v) }
-    val graph = new InMemoryGraph
-    val insLayers = rows.map { case (id, _) => searcher.selectLayerByHash(id, cfg.seed) }
+    val ids = rows.map(_._1)
+    val params = cfg.params
+    val searcher = new HnswSearcher(params)
+    val insLayers = ids.map(id => searcher.selectLayerByHash(id, cfg.seed))
+    // ordinal i is row i: the driver's arena and every executor's agree
+    val vectors = new BuildVectors(cfg.metric, ids, rows.map(_._2))
+    val arena = vectors.arena
+    val graph = new OrdinalGraph(params, arena)
 
-    batchedBuildLoop(spark, rows.map(_._1), insLayers, vecMap,
-      (m: LongVecMap) => new ArrayVectorStore(metric, base = m),
-      store, searcher, graph, cfg.seedBatch, cfg.maxBatch,
-      cfg.growthDenom, cfg.batchCeiling)
+    batchedBuildLoop(spark, ids, insLayers, params, cfg.seedBatch, cfg.maxBatch,
+      cfg.growthDenom, cfg.batchCeiling)(vectors,
+      i => graph.connect(i, graph.searchToInsert(vectors.vecs(i), insLayers(i))),
+      () => graph.rowCopy,
+      (p: BuildVectors, copy: OrdinalRows) => {
+        val view = new OrdinalGraph(params, p.arena, copy)
+        (id: Long, layer: Int) => view.searchToInsert(p.vecs(p.arena.ordinalOf(id)), layer)
+      },
+      (id: Long, found: Array[OrdinalQueue]) => graph.connect(arena.ordinalOf(id), found))
 
-    HnswModel(cfg.params, cfg.metric, graph.snapshot, vecMap)
+    HnswModel(params, cfg.metric, graph.snapshot, LongVecMap.from(rows.iterator, rows.length))
   }
 
-  /** The shared seed + micro-batched build loop over any broadcastable
-    * store payload (float vectors here, u64 codes in
-    * [[HnswCodes.buildBatched]]): strictly sequential seed inserts, then
-    * per batch a distributed phase-1 search_to_insert against a
-    * broadcast snapshot and an id-ordered driver-side phase-2 merge
-    * (set_ep recomputed against the live graph — another same-batch
-    * element may have raised the top layer). Batch size is capped at the
-    * current graph size. */
-  private[hnsw] def batchedBuildLoop[P: scala.reflect.ClassTag](
-      spark: SparkSession,
-      ids: Array[Long], insLayers: Array[Int],
-      payload: P, mkExecutorStore: P => graft.store.VectorStore,
-      driverStore: graft.store.VectorStore, searcher: HnswSearcher,
-      graph: InMemoryGraph, seedBatch: Int, maxBatch: Int,
-      growthDenom: Int = 4, batchCeiling: Int = 262144): Unit = {
+  /** The shared seed + micro-batched build loop over the caller's
+    * representation ([[buildFromArray]], [[HnswCodes.buildBatched]]):
+    * `seedInsert(i)` inserts row `i` on the driver; per batch, each
+    * phase-1 task runs `phase1(payload, snapshot())` on its `(id,
+    * insertion layer)` rows, and `merge` connects the results in id
+    * order against the live graph, so set_ep is decided there. Batch
+    * size is capped at the current graph size. */
+  private[hnsw] def batchedBuildLoop[P: ClassTag, S: ClassTag, R: ClassTag](
+      spark: SparkSession, ids: Array[Long], insLayers: Array[Int],
+      params: HnswParams, seedBatch: Int, maxBatch: Int,
+      growthDenom: Int = 4, batchCeiling: Int = 262144)(
+      payload: P, seedInsert: Int => Unit, snapshot: () => S,
+      phase1: (P, S) => (Long, Int) => R, merge: (Long, R) => Unit): Unit = {
     require(growthDenom >= 1, "growthDenom must be >= 1")
     val n = ids.length
-    // Fail FAST on the broadcast tier's hard envelope instead of 20+
-    // minutes into the build: Kryo's Unsafe bulk writer takes an int
-    // BYTE count, so any single primitive array over ~2 GiB
-    // (layer-0 dsts/dists at ~2.7e8 edges) dies in copyMemoryChecks at
-    // the first over-sized snapshot broadcast — measured at n=1e7,
-    // m=32: 23 min of build, then KryoException. The bound below is
-    // edges <= n * mMax0, reached in practice (HNSW fills degrees).
-    // Graphs past it belong on the tiers built for that scale:
-    // buildSharded / HnswRouted (per-cell graphs under the wall) or
-    // HnswDurable (no full-graph broadcast at all).
-    // Documented tradeoff (round-11 advice): this is a WORST-CASE edge
-    // bound — a sparse borderline graph whose actual layer-0 edge count
-    // would land under the wall is rejected where it might have
-    // completed. Accepted deliberately: "sometimes dies 23 minutes in,
-    // depending on degree fill" is not an envelope a user can plan
-    // around, and the escape hatch is zero-risk — the sharded/routed/
-    // durable tiers named in the message serve the same index contract.
-    val maxEdges = n.toLong * searcher.params.mMax.max
+    // Fail FAST on the broadcast tier's hard envelope, not at the first
+    // over-sized broadcast (measured at n=1e7, m=32: 23 min of build,
+    // then KryoException): Kryo's Unsafe bulk writer takes an int BYTE
+    // count, so no single primitive array may pass ~2 GiB. The binding
+    // arrays are the model's layer-0 `LayerCsr` columns, 8-byte dsts and
+    // dists, which broadcastModel ships (the u64 build also broadcasts
+    // them per batch; the float build's row copy is per-vertex Int rows).
+    // edges <= n * mMax0 is a WORST-CASE bound, reached in practice (HNSW
+    // fills degrees): a sparse borderline graph is rejected where it
+    // might have fit, the price of an envelope a user can plan around.
+    // Graphs past it belong on buildSharded / HnswRouted (per-cell
+    // graphs under the wall) or HnswDurable (no full-graph broadcast).
+    val maxEdges = n.toLong * params.mMax.max
     require(maxEdges * 8L <= Int.MaxValue.toLong,
       s"single-graph broadcast build envelope exceeded: n=$n x mMax0=" +
-        s"${searcher.params.mMax.max} bounds ${maxEdges} layer-0 edges, whose " +
-        "8-byte columns pass Kryo's 2 GiB per-array serialization limit. " +
+        s"${params.mMax.max} bounds ${maxEdges} layer-0 edges, whose " +
+        "8-byte model columns pass Kryo's 2 GiB per-array serialization limit. " +
         "Use HnswDistributed.buildSharded, HnswRouted.build, or " +
         "HnswDurable.ingest for graphs of this size.")
     val seedN = math.min(seedBatch, n)
     var pos = 0
     while (pos < seedN) {
-      searcher.insert(driverStore, graph, ids(pos), insLayers(pos))
+      seedInsert(pos)
       pos += 1
     }
 
     val sc = spark.sparkContext
     // broadcasts released on EVERY path: a transient job failure with a
-    // catch-and-retry caller would otherwise leak one full-graph
-    // snapshot + the whole vector payload per attempt
+    // catch-and-retry caller would otherwise leak one graph copy + the
+    // whole vector payload per attempt
     val payloadB = sc.broadcast(payload)
     try {
       while (pos < n) {
-        // Batch schedule: min(maxBatch, pos) early (never insert more
-        // than the built prefix at once — intra-batch nodes can't link
-        // to each other in phase 1), then GROWING with the prefix
-        // (pos/growthDenom) once past maxBatch. A fixed cap
-        // re-broadcasts the full O(n) snapshot every maxBatch inserts —
-        // Σ O(n²/maxBatch) bytes, measured 40x-superlinear at n=1e6
-        // (396 s, ~250 broadcasts of a ~130 MB-avg snapshot); the
-        // geometric schedule needs O(log n) broadcasts, Σ ~5x the final
-        // snapshot. The stale-snapshot fraction stays <= 1/growthDenom
-        // past the cap (it is 1.0 during the early doubling phase the
-        // parity specs pin; the grown-regime cross-query recall floor
-        // is pinned by its own spec), and the batchCeiling bounds the
-        // driver-side phase-1 result collect regardless of n.
+        // Batch schedule: min(maxBatch, pos) early (intra-batch nodes
+        // can't link to each other in phase 1), then GROWING with the
+        // prefix (pos/growthDenom). A fixed cap re-broadcasts the O(n)
+        // graph every maxBatch inserts — measured 40x-superlinear at
+        // n=1e6 (396 s, ~250 broadcasts of a ~130 MB-avg snapshot); the
+        // geometric schedule needs O(log n) broadcasts. The stale
+        // fraction stays <= 1/growthDenom past the cap (1.0 in the early
+        // doubling phase), and batchCeiling bounds the phase-1 collect.
         val grown = math.max(maxBatch, math.min(pos / growthDenom, batchCeiling))
         val batchSize = math.min(math.min(grown, pos), n - pos)
         val batch = (pos until pos + batchSize).map(i => (ids(i), insLayers(i)))
-        val snapB = sc.broadcast(graph.snapshot)
+        val snapB = sc.broadcast(snapshot())
         val results =
           try {
             val slices = math.max(1, math.min(batch.size / 16, sc.defaultParallelism))
             sc.parallelize(batch, slices).mapPartitions { it =>
-              val localStore = mkExecutorStore(payloadB.value)
-              val snap = snapB.value
-              it.map { case (id, insLayer) =>
-                val (links, _) = searcher.searchToInsert(localStore, snap, id, insLayer)
-                (id, links.map(_.toArray))
-              }
+              val search = phase1(payloadB.value, snapB.value)
+              it.map { case (id, insLayer) => (id, search(id, insLayer)) }
             }.collect()
           } finally snapB.destroy()
 
-        results.sortBy(_._1).foreach { case (id, linkArrays) =>
-          val links = linkArrays.map(a => FurthestQueue.fromAscending(a.toSeq))
-          val setEp = links.size > graph.numLayers
-          driverStore.insert(id)
-          searcher.insertFromSearchResults(driverStore, graph, id, links, setEp)
-        }
+        results.sortBy(_._1).foreach { case (id, found) => merge(id, found) }
         pos += batchSize
       }
     } finally payloadB.destroy()
@@ -386,19 +385,16 @@ object HnswDistributed {
       .repartition(nShards, col("id"))
       .as(pairEnc)
       .mapPartitions { it =>
-        val shard = it.toArray.sortBy(_._1)
+        // distinctBy: a repeated id would insert twice (see buildFromArray)
+        val shard = it.toArray.sortBy(_._1).distinctBy(_._1)
         if (shard.isEmpty) Iterator.empty
         else {
-          val metric = Metrics.byName(cfg.metric)
           val searcher = new HnswSearcher(cfg.params)
-          val vecMap = LongVecMap.from(shard.iterator, shard.length)
-          val store = new ArrayVectorStore(metric, base = vecMap)
-          shard.foreach { case (id, v) => store.prepareQueryWithId(id, v) }
-          val graph = new InMemoryGraph
-          shard.foreach { case (id, _) =>
-            searcher.insert(store, graph, id, searcher.selectLayerByHash(id, cfg.seed))
+          val graph = new OrdinalGraph(cfg.params, new ArenaVectorStore(cfg.metric))
+          shard.foreach { case (id, v) =>
+            graph.insert(id, v, searcher.selectLayerByHash(id, cfg.seed))
           }
-          Iterator.single(ShardModel(vecMap, graph.snapshot))
+          Iterator.single(ShardModel(LongVecMap.from(shard.iterator, shard.length), graph.snapshot))
         }
       }(Encoders.kryo[ShardModel])
       .rdd

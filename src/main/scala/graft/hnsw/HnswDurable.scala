@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 
 import graft.hnsw.HnswDistributed.BuildConfig
-import graft.store.{ArrayVectorStore, Metrics, ParquetGraphStore}
+import graft.store.{ArenaVectorStore, ArrayVectorStore, Metrics, ParquetGraphStore}
 
 /** Beyond-broadcast HNSW build against a durable [[ParquetGraphStore]] —
   * the 100 TB build path. Unlike [[HnswDistributed.build]] (which collects
@@ -163,11 +163,9 @@ object HnswDurable {
     if (graphSize == 0L) {
       val seedN = math.min(cfg.seedBatch.toLong, n)
       val seedRows = batchVectors(0, seedN).as(pairEnc).collect().sortBy(_._1)
-      val seedStore = new ArrayVectorStore(metric)
-      seedRows.foreach { case (id, v) => seedStore.prepareQueryWithId(id, v) }
-      val seedGraph = new graft.store.InMemoryGraph
-      seedRows.foreach { case (id, _) =>
-        searcher.insert(seedStore, seedGraph, id, searcher.selectLayerByHash(id, cfg.seed))
+      val seedGraph = new OrdinalGraph(params, new ArenaVectorStore(cfg.metric))
+      seedRows.foreach { case (id, v) =>
+        seedGraph.insert(id, v, searcher.selectLayerByHash(id, cfg.seed))
       }
       store.save(seedGraph.snapshot)
       pos = seedN

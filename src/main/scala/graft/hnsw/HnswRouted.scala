@@ -8,7 +8,7 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.hnsw.HnswDistributed.BuildConfig
 import graft.operators.Ivf
-import graft.store.{ArrayVectorStore, GraphSnapshot, InMemoryGraph, Metrics}
+import graft.store.{ArenaVectorStore, ArrayVectorStore, GraphSnapshot, Metrics}
 
 /** IVF-routed sharded HNSW — the two-level ANN serving architecture
   * (FAISS's IVF+graph composition, re-expressed Spark-first): a coarse
@@ -382,13 +382,16 @@ object HnswRouted {
         s"routed ingest: id $id already present in cell $cell — " +
           "re-inserting a vertex would corrupt its graph")
     }
-    val graph = prior.fold(new InMemoryGraph)(p => InMemoryGraph.fromSnapshot(p.snapshot))
-    val store = new ArrayVectorStore(Metrics.byName(cfg.metric), base = vecMap)
+    val arena = new ArenaVectorStore(cfg.metric)
+    val graph = new OrdinalGraph(cfg.params, arena)
+    prior.foreach { p =>
+      p.vectors.foreach { case (id, v) => arena.insert(id, v) }
+      graph.restore(p.snapshot)
+    }
     val searcher = new HnswSearcher(cfg.params)
-    rows.foreach { case (id, v) => store.prepareQueryWithId(id, v) }
     rows.foreach { case (id, v) =>
       vecMap(id) = v
-      searcher.insert(store, graph, id, searcher.selectLayerByHash(id, cfg.seed))
+      graph.insert(id, v, searcher.selectLayerByHash(id, cfg.seed))
     }
     CellShard(cell, vecMap, graph.snapshot)
   }

@@ -16,14 +16,11 @@ import scala.collection.mutable
   */
 final class HnswSearcher(val params: HnswParams) extends Serializable {
 
-  /** S3: sample the insertion layer ~ Geometric(1 - p) (number of
-    * successes before the first failure), reference hawk_searcher.rs:178-183. */
-  def selectLayer(rng: scala.util.Random): Int =
-    layerFromUniform(rng.nextDouble())
-
-  /** Deterministic S3 for reproducible distributed builds: derive the
-    * geometric sample from a 64-bit mix of (id, seed) — the Spark analog
-    * of the reference's seeded AesRng (hawk_searcher.rs:445). */
+  /** S3, deterministic for reproducible distributed builds: the insertion
+    * layer ~ Geometric(1 - p) (number of successes before the first
+    * failure, reference hawk_searcher.rs:178-183), drawn from a 64-bit mix
+    * of (id, seed) — the Spark analog of the reference's seeded AesRng
+    * (hawk_searcher.rs:445). */
   def selectLayerByHash(id: Long, seed: Long): Int =
     layerFromUniform(HnswSearcher.uniformFromHash(id, seed))
 

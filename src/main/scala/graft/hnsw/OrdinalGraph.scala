@@ -2,8 +2,8 @@ package graft.hnsw
 
 import graft.store.{ArenaVectorStore, EntryPoint, GraphSnapshot, LayerCsr}
 
-/** The live HNSW graph of a streaming index, on the ordinals of its
-  * [[ArenaVectorStore]]: the engine's two-phase insert
+/** The live HNSW graph of a streaming index or a float build, on the
+  * ordinals of its [[ArenaVectorStore]]: the engine's two-phase insert
   * ([[HnswSearcher.searchToInsert]], [[HnswSearcher.isMatch]],
   * [[HnswSearcher.insertFromSearchResults]]) with no id lookup per edge.
   *
@@ -45,6 +45,13 @@ final class OrdinalGraph(params: HnswParams, arena: ArenaVectorStore) extends Se
   private[this] var touched = new Array[Long](64)
   private[this] var nTouched = 0
   private[this] var entryTouched = false
+
+  /** A view of `copy` over `arena` with marks and a frontier of its own:
+    * it serves [[searchToInsert]]; without distances it cannot connect. */
+  def this(params: HnswParams, arena: ArenaVectorStore, copy: OrdinalRows) = {
+    this(params, arena)
+    rows = copy.rows; degrees = copy.degrees; entry = copy.entry; entryLayer = copy.entryLayer
+  }
 
   def numLayers: Int = rows.length
 
@@ -238,6 +245,15 @@ final class OrdinalGraph(params: HnswParams, arena: ArenaVectorStore) extends Se
     found
   }
 
+  /** [[HnswSearcher.insert]]: store `v` under `id` and connect it at every
+    * layer up to `insertionLayer`. Returns its ordinal. */
+  def insert(id: Long, v: Array[Float], insertionLayer: Int): Int = {
+    val found = searchToInsert(v, insertionLayer)
+    val o = arena.insert(id, v)
+    connect(o, found)
+    o
+  }
+
   /** [[HnswSearcher.isMatch]]: the nearest bottom-layer hit is within the
     * arena's match threshold. */
   def isMatch(found: Array[OrdinalQueue]): Boolean =
@@ -295,6 +311,19 @@ final class OrdinalGraph(params: HnswParams, arena: ArenaVectorStore) extends Se
     clearTouched()
   }
 
+  /** What [[searchToInsert]] reads, copied: each row trimmed to its
+    * length, the lengths and the entry point. Without distances it
+    * serializes at about 4 bytes per edge. */
+  def rowCopy: OrdinalRows = {
+    val n = arena.size
+    OrdinalRows(Array.tabulate(rows.length) { lc =>
+      Array.tabulate(math.min(n, rows(lc).length)) { o =>
+        val row = rows(lc)(o)
+        if (row == null) null else java.util.Arrays.copyOf(row, degrees(lc)(o))
+      }
+    }, degrees.map(d => java.util.Arrays.copyOf(d, math.min(n, d.length))), entry, entryLayer)
+  }
+
   /** The id-keyed image of the graph: rows in id order, `ids(o)` for
     * every ordinal. */
   def snapshot: GraphSnapshot = {
@@ -323,6 +352,11 @@ final class OrdinalGraph(params: HnswParams, arena: ArenaVectorStore) extends Se
       })
   }
 }
+
+/** [[OrdinalGraph.rowCopy]]: per layer and ordinal, the neighbour
+  * ordinals (null: no row) and their count, and the entry point. */
+final case class OrdinalRows(rows: Array[Array[Array[Int]]], degrees: Array[Array[Int]],
+                             entry: Int, entryLayer: Int)
 
 /** `(dist, id)`-ascending list of arena ordinals — [[FurthestQueue]] on
   * ordinals, ties broken by each ordinal's id in the `ids` passed to

@@ -32,9 +32,12 @@ import graft.store.ArenaVectorStore.{metricCode, squaredNorm, Cosine, L2}
   *     |queries| * |vectors| rows — wrong at scale; kept as
   *     [[searchWindowed]] for plan comparison and small inputs.
   *
-  * Every path ranks by (score, id) with NaN scores last, and a null score
-  * (a null vector on either side) is no candidate: a null query returns no
-  * rows.
+  * Every path ranks by (score, id), and a null score (a null vector on
+  * either side) is no candidate: a null query returns no rows. A NaN
+  * score (a NaN component) ranks last on [[search]] and [[searchWith]].
+  * [[searchWindowed]] sorts as the SQL oracle it mirrors does: Spark and
+  * DuckDB both order NaN above every double, so NaN ranks first under a
+  * descending score (cosine, dot) and last under an ascending one (l2).
   */
 object ExactKnn {
 
@@ -187,8 +190,9 @@ object ExactKnn {
   }
 
   /** Small-data / oracle-shaped variant: full cross product + window.
-    * Simple and exactly mirrors the SQL oracle; shuffles the whole
-    * cartesian product, so only for modest |queries| x |vectors|. */
+    * Simple and exactly mirrors the SQL oracle, NaN order included (first
+    * under a descending score); shuffles the whole cartesian product, so
+    * only for modest |queries| x |vectors|. */
   def searchWindowed(queries: DataFrame, vectors: DataFrame, k: Int,
                      metric: String = "cosine",
                      queryVecCol: String = "qvec", vecCol: String = "vec"): DataFrame = {

@@ -193,13 +193,6 @@ final class InMemoryGraph extends GraphStore {
     layers(lc)(base) = links
   }
 
-  /** Grow the layer stack to `n` layers without moving the entry point —
-    * for restoring persisted state whose links run AHEAD of its entry
-    * (a mirror crash between the links write and the entry write leaves
-    * exactly that; setLinks would otherwise refuse the restore forever). */
-  def ensureLayers(n: Int): Unit =
-    while (layers.size < n) layers += mutable.LongMap.empty
-
   override def numLayers: Int = layers.size
 
   /** G7: export the adjacency of one layer. */
@@ -225,19 +218,10 @@ final class InMemoryGraph extends GraphStore {
 
   /** G6: rebuild this graph with vertex ids / distances rewritten,
     * preserving structure; the metric is assumed unchanged so order is
-    * preserved (reference graph_mem.rs:43-76 `from_another`). The
-    * same-type fast path of [[remapTo]] (stays on LongMap + queues). */
-  def remap(vectorMap: Long => Long, distMap: Double => Double = identity): InMemoryGraph = {
-    val out = new InMemoryGraph
-    entry.foreach(ep => out.setEntryPoint(vectorMap(ep.point), ep.layer))
-    while (out.layers.size < layers.size) out.layers += mutable.LongMap.empty
-    layers.zipWithIndex.foreach { case (layer, lc) =>
-      layer.foreach { case (src, q) =>
-        out.layers(lc)(vectorMap(src)) = q.map(vectorMap, distMap)
-      }
-    }
-    out
-  }
+    * preserved (reference graph_mem.rs:43-76 `from_another`): the
+    * same-type case of [[remapTo]]. */
+  def remap(vectorMap: Long => Long, distMap: Double => Double = identity): InMemoryGraph =
+    remapTo(vectorMap, distMap).toInMemory
 
   /** G6, type-GENERIC: the reference's `from_another` converts a graph
     * between vector-ref and distance-ref TYPES (`GraphMem<U> ->
@@ -302,28 +286,6 @@ final case class TypedGraph[V, D](
           ns.map { case (dst, d) => Neighbor(evV(dst), evD(d)) })
       })
     )
-}
-
-/** Decorator that records which (src, layer) adjacency rows a mutation
-  * touched — the change feed a durable mirror needs to persist exactly
-  * the delta of a batch instead of the whole graph. */
-final class RecordingGraphStore(inner: GraphStore) extends GraphStore {
-  private val touchedKeys = scala.collection.mutable.LinkedHashSet.empty[(Long, Int)]
-  private var entryTouched = false
-
-  override def getEntryPoint: Option[EntryPoint] = inner.getEntryPoint
-  override def setEntryPoint(point: Long, layer: Int): Unit = {
-    inner.setEntryPoint(point, layer); entryTouched = true
-  }
-  override def getLinks(base: Long, lc: Int): FurthestQueue = inner.getLinks(base, lc)
-  override def setLinks(base: Long, links: FurthestQueue, lc: Int): Unit = {
-    inner.setLinks(base, links, lc); touchedKeys += ((base, lc))
-  }
-  override def numLayers: Int = inner.numLayers
-
-  def touched: Seq[(Long, Int)] = touchedKeys.toSeq
-  def entryPointTouched: Boolean = entryTouched
-  def clearRecording(): Unit = { touchedKeys.clear(); entryTouched = false }
 }
 
 object InMemoryGraph {

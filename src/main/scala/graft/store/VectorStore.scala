@@ -133,8 +133,6 @@ final class ArrayVectorStore(
     val p = points.getOrNull(id)
     if (p != null) p.data else base(id)
   }
-  def isPersistent(id: Long): Boolean = points.get(id).exists(_.isPersistent)
-  def persistedCount: Int = points.count(_._2.isPersistent)
 }
 
 /** u64 bit-code store compared by Hamming distance — the reference's native

@@ -87,10 +87,7 @@ object StreamingIngest {
       // insert would find the first at distance 0 and connect_bidir a
       // self-loop that permanently wastes a degree slot).
       val sorted = toInsert(rows)
-      sorted.foreach { case (id, v) =>
-        val found = graph.searchToInsert(v, searcher.selectLayerByHash(id, cfg.seed))
-        graph.connect(store.insert(id, v), found)
-      }
+      sorted.foreach { case (id, v) => graph.insert(id, v, searcher.selectLayerByHash(id, cfg.seed)) }
       if (sorted.nonEmpty) bumpVersion()
       mirrorDelta(sorted.toSeq)
     }

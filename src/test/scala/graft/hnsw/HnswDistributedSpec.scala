@@ -252,16 +252,14 @@ class HnswDistributedSpec extends SparkSpec {
     // column, past Int.MaxValue: the build must throw at entry (not 20
     // minutes in, at the first over-sized snapshot broadcast) and route
     // to the sharded/routed/durable tiers
-    import graft.store.{ArrayVectorStore, InMemoryGraph, Metrics}
     val params = HnswParams.standard(64, 32, 32) // mMax0 = 64
-    val searcher = new HnswSearcher(params)
     val n = 5000000
     val ids = Array.tabulate(n)(_.toLong)
     val layers = new Array[Int](n)
-    def store() = new ArrayVectorStore(Metrics.byName("cosine"), base = Map.empty)
     val e = intercept[IllegalArgumentException] {
-      HnswDistributed.batchedBuildLoop(spark, ids, layers,
-        (), (_: Unit) => store(), store(), searcher, new InMemoryGraph, 128, 4096)
+      HnswDistributed.batchedBuildLoop(spark, ids, layers, params, 128, 4096)(
+        (), (_: Int) => (), () => (), (_: Unit, _: Unit) => (_: Long, _: Int) => (),
+        (_: Long, _: Unit) => ())
     }
     assert(e.getMessage.contains("envelope"), e.getMessage)
     assert(e.getMessage.contains("buildSharded"), e.getMessage)

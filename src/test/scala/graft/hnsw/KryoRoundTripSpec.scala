@@ -179,6 +179,39 @@ class KryoRoundTripSpec extends SparkSpec {
       smRt.vectors.keySet == sm.vectors.keySet)
   }
 
+  test("the batched build's phase-1 state round-trips and searches identically") {
+    // local-mode tasks read the driver's broadcast object as it is, so
+    // only an explicit round-trip shows what a cluster's tasks would get
+    val ser = org.apache.spark.SparkEnv.get.serializer.newInstance()
+    def roundTrip[T: scala.reflect.ClassTag](v: T): T = ser.deserialize[T](ser.serialize(v))
+    val n = 1200
+    val built = 800
+    val ids = Array.tabulate(n)(i => (i * 7919L) % 5000L) // out of id order
+    val vectors = new BuildVectors(cfg.metric, ids, ids.map(vecFromHash(_, 23L, 16)))
+    val searcher = new HnswSearcher(cfg.params)
+    val layers = ids.map(searcher.selectLayerByHash(_, cfg.seed))
+    val graph = new OrdinalGraph(cfg.params, vectors.arena)
+    (0 until built).foreach(i => graph.connect(i, graph.searchToInsert(vectors.vecs(i), layers(i))))
+    val copy = graph.rowCopy
+    val (rtVectors, rtCopy) = (roundTrip(vectors), roundTrip(copy))
+    assert(rtVectors.arena.ids.take(n).sameElements(ids))
+
+    def beams(p: BuildVectors, c: OrdinalRows): Seq[Seq[Seq[(Int, Long)]]] = {
+      val view = new OrdinalGraph(cfg.params, p.arena, c)
+      (built until n).map { i =>
+        view.searchToInsert(p.vecs(i), layers(i)).toSeq.map(q =>
+          (0 until q.size).map(j => (q.ordAt(j), java.lang.Double.doubleToRawLongBits(q.distAt(j)))))
+      }
+    }
+    val want = beams(vectors, copy)
+    assert(want.exists(_.head.nonEmpty))
+    assert(beams(rtVectors, rtCopy) == want)
+    // the per-batch broadcast: Int rows without distances, at most half
+    // the bytes of the id-keyed snapshot of the same graph
+    val (copyBytes, snapBytes) = (ser.serialize(copy).remaining, ser.serialize(graph.snapshot).remaining)
+    assert(copyBytes * 2 <= snapBytes, s"row copy $copyBytes B, snapshot $snapBytes B")
+  }
+
   test("a streaming index's ServingImage Kryo round-trips and serves identically") {
     val index = new graft.streaming.StreamingIngest.IncrementalIndex(cfg)
     def rows(ids: Range) = ids.map(i => (i.toLong, vecFromHash(i.toLong, 17L, 16))).toArray

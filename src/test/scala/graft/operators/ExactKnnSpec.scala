@@ -117,4 +117,29 @@ class ExactKnnSpec extends SparkSpec {
       }
     }
   }
+
+  test("NaN scores: last on search and searchWith, first in searchWindowed under a descending score") {
+    // Spark, like DuckDB, orders NaN above every double: the window's
+    // ORDER BY score DESC (cosine, dot) puts it first, as the SQL oracle
+    // does, and its ascending l2 order puts it last; the bounded top-k
+    // paths rank it last on every metric
+    val table = Seq((1L, Array(1f, Float.NaN, 0f, 0f)), (2L, Array(1f, 0f, 0f, 0f)),
+      (3L, Array(0f, 1f, 0f, 0f))).toDF("id", "vec")
+    val qs = Seq((10L, Array(1f, 0f, 0f, 0f))).toDF("qid", "qvec")
+    // ids in rank order: (search and searchWith, searchWindowed)
+    val expected = Map(
+      "cosine" -> (Seq(2L, 3L, 1L), Seq(1L, 2L, 3L)),
+      "dot" -> (Seq(2L, 3L, 1L), Seq(1L, 2L, 3L)),
+      "l2" -> (Seq(2L, 3L, 1L), Seq(2L, 3L, 1L)))
+    def ranked(df: DataFrame): Seq[Long] =
+      df.select("id", "rank").collect().map(r => (r.getInt(1), r.getLong(0))).sorted.map(_._2).toSeq
+    for ((metric, (topK, windowed)) <- expected) {
+      val asc = ExactKnn.metricAscending(metric)
+      assert(ranked(ExactKnn.search(qs, table, 3, metric)) == topK, s"search, $metric")
+      assert(ranked(ExactKnn.searchWith(qs, table, 3, ExactKnn.scoreCol(metric), asc)) == topK,
+        s"searchWith, $metric")
+      assert(ranked(ExactKnn.searchWindowed(qs, table, 3, metric)) == windowed,
+        s"searchWindowed, $metric")
+    }
+  }
 }

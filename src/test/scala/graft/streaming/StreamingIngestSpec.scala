@@ -127,7 +127,7 @@ class StreamingIngestSpec extends SparkSpec {
     // the same inserts through a recording graph, cleared between batches
     val searcher = new graft.hnsw.HnswSearcher(cfg.params)
     val store = new graft.store.ArrayVectorStore(graft.store.Metrics.byName(cfg.metric))
-    val rec = new graft.store.RecordingGraphStore(new graft.store.InMemoryGraph)
+    val rec = new RecordingGraphStore(new graft.store.InMemoryGraph)
     def insert(rows: Array[(Long, Array[Float])]): Set[(Long, Int)] = {
       rows.foreach { case (id, v) =>
         searcher.insert(store, rec, store.prepareQueryWithId(id, v),
@@ -353,4 +353,21 @@ class StreamingIngestSpec extends SparkSpec {
     assert(rows(1).getAs[String]("event_type") == "view")
     q.stop()
   }
+}
+
+/** Records which (src, layer) rows a mutation wrote on the id-keyed
+  * engine: the rows a durable mirror must persist for it. */
+private final class RecordingGraphStore(inner: graft.store.GraphStore) extends graft.store.GraphStore {
+  private val touchedKeys = scala.collection.mutable.LinkedHashSet.empty[(Long, Int)]
+
+  override def getEntryPoint: Option[graft.store.EntryPoint] = inner.getEntryPoint
+  override def setEntryPoint(point: Long, layer: Int): Unit = inner.setEntryPoint(point, layer)
+  override def getLinks(base: Long, lc: Int): graft.hnsw.FurthestQueue = inner.getLinks(base, lc)
+  override def setLinks(base: Long, links: graft.hnsw.FurthestQueue, lc: Int): Unit = {
+    inner.setLinks(base, links, lc); touchedKeys += ((base, lc))
+  }
+  override def numLayers: Int = inner.numLayers
+
+  def touched: Seq[(Long, Int)] = touchedKeys.toSeq
+  def clearRecording(): Unit = touchedKeys.clear()
 }
