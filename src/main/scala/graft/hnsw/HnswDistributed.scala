@@ -5,7 +5,7 @@ import scala.reflect.ClassTag
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.store.{ArenaVectorStore, ArrayVectorStore, GraphSnapshot, Metrics}
+import graft.store.{ArenaVectorStore, GraphSnapshot}
 
 /** A built HNSW index ready for distributed search: the (small, broadcast-
   * able) layered graph plus the vector table keyed by id. At broadcast
@@ -14,9 +14,10 @@ import graft.store.{ArenaVectorStore, ArrayVectorStore, GraphSnapshot, Metrics}
   * merge — the 100 TB path, where each shard holds only its partition's
   * vectors and graph).
   *
-  * A model serves through its [[ServingLayout]], built once per JVM on
+  * A model serves through [[OrdinalGraph]] views over one arena and one
+  * set of `Int` rows ([[OrdinalGraph.frozen]]), built once per JVM on
   * first use and never serialized. A streaming index does not serve its
-  * model: it broadcasts a [[ServingImage]] built from its arena instead
+  * model: it broadcasts a [[ServingImage]] of its arena and rows instead
   * ([[graft.streaming.StreamingIngest.IncrementalIndex.modelBroadcast]]).
   */
 final case class HnswModel(
@@ -32,10 +33,10 @@ final case class HnswModel(
 ) extends KernelSource {
   def size: Int = vectors.size
 
-  @transient lazy val layout: ServingLayout = ServingLayout.of(this)
+  @transient private lazy val frozen = new FrozenGraph(vectors, snapshot)
 
-  /** A fresh per-partition searcher over this model (see [[ModelKernel]]). */
-  override def kernel(): ModelKernel = new LayoutKernel(layout, params, metricName)
+  /** A fresh per-partition view over this model's arena and rows. */
+  override def kernel(): OrdinalGraph = frozen.view(params, metricName)
 }
 
 /** A batched float build's vectors, broadcast once: `ids(i)` and
@@ -45,11 +46,7 @@ final case class HnswModel(
   * serialized, with ordinal `i` for row `i`. */
 private[hnsw] final class BuildVectors(metricName: String, val ids: Array[Long],
                                        val vecs: Array[Array[Float]]) extends Serializable {
-  @transient lazy val arena: ArenaVectorStore = {
-    val a = new ArenaVectorStore(metricName)
-    ids.indices.foreach(i => a.insert(ids(i), vecs(i)))
-    a
-  }
+  @transient lazy val arena: ArenaVectorStore = ArenaVectorStore.of(metricName, ids, vecs)
 }
 
 /** Distributed HNSW build & search over DataFrames.
@@ -362,7 +359,13 @@ object HnswDistributed {
       // corrupted scala LongMap state (see LongVecMap's scaladoc)
       vectors: LongVecMap,
       snapshot: GraphSnapshot
-  ) extends Serializable
+  ) extends Serializable {
+    @transient private lazy val frozen = new FrozenGraph(vectors, snapshot)
+
+    /** A fresh view over the shard's arena and rows (see
+      * [[HnswModel.kernel]]). */
+    def view(cfg: BuildConfig): OrdinalGraph = frozen.view(cfg.params, cfg.metric)
+  }
 
   /** A prebuilt sharded index: build once, serve many query batches. The
     * shard RDD is persisted (memory, spilling to disk) so repeated
@@ -418,14 +421,9 @@ object HnswDistributed {
       queries.select(col("qid"), col("qvec")).as(pairEnc).collect())
     import spark.implicits._
     val perShard = index.shards.flatMap { m =>
-      val metric = Metrics.byName(cfg.metric)
-      val searcher = new HnswSearcher(cfg.params)
-      // one store per shard, -1 query slot re-staged per query
-      val qStore = new ArrayVectorStore(metric, base = m.vectors)
+      val view = m.view(cfg)
       qB.value.iterator.flatMap { case (qid, qvec) =>
-        val q = qStore.prepareQueryWithId(-1L, qvec)
-        val w = searcher.search(qStore, m.snapshot, q, k)
-        w.iterator.map(nb => (qid, nb.dst, nb.dist))
+        view.search(qvec, k, 0).iterator.map(nb => (qid, nb.dst, nb.dist))
       }
     }.toDF("qid", "id", "dist")
 

@@ -187,7 +187,7 @@ object HnswDurable {
       var linksNow: DataFrame = null
       var phase1: DataFrame = null
       var upperB: org.apache.spark.broadcast.Broadcast[
-        (graft.store.GraphSnapshot, Map[Long, Array[Float]])] = null
+        (graft.store.GraphSnapshot, LongVecMap)] = null
       try {
       batch.cache()
 
@@ -206,9 +206,10 @@ object HnswDurable {
         linksNow.filter(col("layer") >= 1), Some(entry))
       val upperIds: Set[Long] = upperSnap.layers.iterator.drop(1).flatMap(l =>
         l.srcs.iterator ++ l.dsts.iterator).toSet + entry.point
-      val upperVecs = vecs
+      val upperRows = vecs
         .join(broadcast(upperIds.toSeq.toDF("id")), "id")
-        .select(col("id"), col("vec")).as(pairEnc).collect().toMap
+        .select(col("id"), col("vec")).as(pairEnc).collect()
+      val upperVecs = LongVecMap.from(upperRows, upperRows.length)
       val sc = spark.sparkContext
       upperB = sc.broadcast((upperSnap, upperVecs))
       val seed = cfg.seed
@@ -216,13 +217,15 @@ object HnswDurable {
       // Phase 1a (executors): kernel descent through layers top..1 per
       // batch vector — construction beams for layers 1..L (trimmed to M),
       // empty neighborhoods for fresh top layers, and the beam exiting
-      // layer 1 as the layer-0 frontier seed (tagged layer = -1).
+      // layer 1 as the layer-0 frontier seed (tagged layer = -1). One
+      // store per partition stages each row under its own id: batch ids
+      // are new to the graph, so no stored vector is shadowed.
       val ub = upperB // stable val for closure capture (upperB is a var)
       phase1 = batch.as(pairEnc).mapPartitions { it =>
         val (snap, vecs) = ub.value
+        val vs = new ArrayVectorStore(metric, base = vecs)
         it.flatMap { case (id, vec) =>
           val insLayer = searcher.selectLayerByHash(id, seed)
-          val vs = new ArrayVectorStore(metric, base = vecs)
           vs.prepareQueryWithId(id, vec)
           val (w, nLayers) = searcher.searchInit(vs, snap, id)
           val out = Seq.newBuilder[(Long, Int, Array[Long], Array[Double])]

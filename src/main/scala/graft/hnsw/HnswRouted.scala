@@ -8,7 +8,7 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.hnsw.HnswDistributed.BuildConfig
 import graft.operators.Ivf
-import graft.store.{ArenaVectorStore, ArrayVectorStore, GraphSnapshot, Metrics}
+import graft.store.{ArenaVectorStore, GraphSnapshot, Metrics}
 
 /** IVF-routed sharded HNSW — the two-level ANN serving architecture
   * (FAISS's IVF+graph composition, re-expressed Spark-first): a coarse
@@ -56,7 +56,13 @@ object HnswRouted {
       cell: Int,
       vectors: LongVecMap,
       snapshot: GraphSnapshot
-  ) extends Serializable
+  ) extends Serializable {
+    @transient private lazy val frozen = new FrozenGraph(vectors, snapshot)
+
+    /** A fresh view over the cell's arena and rows (see
+      * [[HnswModel.kernel]]). */
+    def view(cfg: BuildConfig): OrdinalGraph = frozen.view(cfg.params, cfg.metric)
+  }
 
   /** Max secondary cells per split primary cell; also the stride of the
     * composite cell id (global = primary * SubCellCap + sub). */
@@ -967,13 +973,12 @@ object HnswRouted {
     RoutedServe.top(perShard, "dist", k)
 
   /** One serve over the shared transport ([[RoutedServe]]) with the
-    * float kernel: the cell's vectors, a plain beam over one store per
-    * shard (-1 query slot re-staged per query — the searchSharded
-    * pattern) and the metric's exact distance. Exhaustive regime: the
-    * probe set covers every primary cell, so predicated serving can
-    * GUARANTEE exactness by taking the exact scan in every probed cell
-    * (every eligible id lives in exactly one cell, and each cell
-    * contributes its true top-k-eligible) — the configuration the
+    * float kernel: the cell's vectors, and a beam and the metric's exact
+    * distance from one [[OrdinalGraph]] view per shard serve. Exhaustive
+    * regime: the probe set covers every primary cell, so predicated
+    * serving can GUARANTEE exactness by taking the exact scan in every
+    * probed cell (every eligible id lives in exactly one cell, and each
+    * cell contributes its true top-k-eligible) — the configuration the
     * hash-oracle rows ride. In the nProbe regime the beam-accept path
     * serves: approximate like the plain kernel, never less accurate
     * than it. */
@@ -983,14 +988,10 @@ object HnswRouted {
     new RoutedServe.Request(FloatTier, index, nProbe, "dist",
       (m: CellShard, probes: Iterator[(Long, Array[Float])], hasAllow: Boolean,
        allow: Array[Long], dead: Array[Long]) => {
-        val searcher = new HnswSearcher(cfg.params)
-        val qStore = new ArrayVectorStore(Metrics.byName(cfg.metric), base = m.vectors)
-        def stage(qv: Array[Float]): Long = qStore.prepareQueryWithId(-1L, qv)
+        val view = m.view(cfg)
         PredicatedCensus.serve(PredicatedCensus.Members.ofVecMap(m.vectors),
           probes, k, cellEf(cfg.params, ef0, m.vectors.size), exhaustive,
-          hasAllow, allow, dead)(
-          (qv, kk, ef) => searcher.searchWithEf(qStore, m.snapshot, stage(qv), kk, ef),
-          qv => { val q = stage(qv); id => qStore.evalDistance(q, id) })
+          hasAllow, allow, dead)(view.search, view.distances)
       })
   }
 

@@ -2,25 +2,32 @@ package graft.hnsw
 
 import graft.store.{ArenaVectorStore, EntryPoint, GraphSnapshot, LayerCsr}
 
-/** The live HNSW graph of a streaming index or a float build, on the
-  * ordinals of its [[ArenaVectorStore]]: the engine's two-phase insert
-  * ([[HnswSearcher.searchToInsert]], [[HnswSearcher.isMatch]],
-  * [[HnswSearcher.insertFromSearchResults]]) with no id lookup per edge.
+/** The HNSW graph of every float index on the ordinals of its
+  * [[ArenaVectorStore]] — the one engine that builds and serves it. A
+  * live graph (a streaming index, a float build) runs the engine's
+  * two-phase insert ([[HnswSearcher.searchToInsert]],
+  * [[HnswSearcher.isMatch]], [[HnswSearcher.insertFromSearchResults]]); a
+  * read-only view over [[OrdinalRows]] serves k-NN ([[search]],
+  * [[exactTopK]]) for a frozen model, a shard, a routed cell or a
+  * streaming image, with no id lookup per edge.
   *
   *  - per layer and ordinal, an `Int` neighbour row and its `Double`
-  *    distances (null: no row at that layer);
+  *    distances (null: no row at that layer; a view has no distances);
   *  - the entry point as an ordinal;
   *  - visited marks as an epoch stamp per ordinal;
   *  - distances measured four stored vectors per pass
   *    ([[ArenaVectorStore.measure]]).
   *
-  * Arena ordinals are insertion order, not id order, so every row and beam
-  * here breaks distance ties by the ordinal's id, as [[FurthestQueue]] and
-  * [[NearestQueue]] do: each row, entry point and beam is the one
-  * [[HnswSearcher]] builds over an id-keyed store and an
-  * [[graft.store.InMemoryGraph]] fed the same inserts. Ids cross into
-  * ordinals only at the edges: [[restore]], [[snapshot]] and the rows a
-  * mirror reads ([[foreachTouched]]).
+  * Arena ordinals need not follow id order, so every row and beam here
+  * breaks distance ties by the ordinal's id, as [[FurthestQueue]] and
+  * [[NearestQueue]] do: each row, entry point, beam and result list is
+  * the one [[HnswSearcher]] builds or returns over an id-keyed store and
+  * an [[graft.store.InMemoryGraph]] fed the same inserts. Ids cross into
+  * ordinals only at the edges: [[restore]], [[snapshot]], the rows a
+  * mirror reads ([[foreachTouched]]), [[OrdinalGraph.frozen]] and the
+  * results of a search.
+  *
+  * One graph or view serves one thread at a time.
   */
 final class OrdinalGraph(params: HnswParams, arena: ArenaVectorStore) extends Serializable {
   // per layer, indexed by ordinal: neighbour ordinals, their distances,
@@ -35,6 +42,7 @@ final class OrdinalGraph(params: HnswParams, arena: ArenaVectorStore) extends Se
   private[this] var marks = new Array[Int](0)
   private[this] var epoch = 0
   private[this] val frontier = new OrdinalFrontier
+  private[this] val beam = new OrdinalQueue
   // one expansion's unvisited neighbours and their distances
   private[this] var fresh = new Array[Int](64)
   private[this] var freshDist = new Array[Double](64)
@@ -46,8 +54,9 @@ final class OrdinalGraph(params: HnswParams, arena: ArenaVectorStore) extends Se
   private[this] var nTouched = 0
   private[this] var entryTouched = false
 
-  /** A view of `copy` over `arena` with marks and a frontier of its own:
-    * it serves [[searchToInsert]]; without distances it cannot connect. */
+  /** A read-only view of `copy` over `arena` with marks, a frontier and a
+    * beam of its own: it serves [[searchToInsert]], [[search]] and
+    * [[exactTopK]]; without distances it cannot connect. */
   def this(params: HnswParams, arena: ArenaVectorStore, copy: OrdinalRows) = {
     this(params, arena)
     rows = copy.rows; degrees = copy.degrees; entry = copy.entry; entryLayer = copy.entryLayer
@@ -245,6 +254,49 @@ final class OrdinalGraph(params: HnswParams, arena: ArenaVectorStore) extends Se
     found
   }
 
+  /** [[HnswSearcher.searchWithEf]] on ordinals: the k nearest ids of `q`
+    * by `(dist, id)`, the layer-0 beam floored at `ef0` (0: plain
+    * search). */
+  def search(q: Array[Float], k: Int, ef0: Int): FurthestQueue = {
+    val qNormSq = ArenaVectorStore.squaredNorm(q)
+    val ids = arena.ids
+    val w = beam
+    w.clear()
+    if (entry >= 0) {
+      w.insert(entry, arena.dist(q, qNormSq, entry), ids)
+      var lc = entryLayer
+      while (lc >= 1) { searchLayer(q, qNormSq, w, params.getEfSearch(lc), lc); lc -= 1 }
+      searchLayer(q, qNormSq, w, math.max(params.getEfSearch(0), ef0), 0)
+    }
+    val out = FurthestQueue.empty
+    var i = 0
+    while (i < math.min(k, w.size)) { out.insert(ids(w.ordAt(i)), w.distAt(i)); i += 1 }
+    out
+  }
+
+  /** Exact top-k of `q` by `(dist, id)` among the stored vectors whose id
+    * passes `keep`. */
+  def exactTopK(q: Array[Float], k: Int, keep: Long => Boolean): FurthestQueue = {
+    val qNormSq = ArenaVectorStore.squaredNorm(q)
+    val ids = arena.ids
+    val out = FurthestQueue.empty
+    var o = 0
+    while (o < arena.size) {
+      if (keep(ids(o))) {
+        out.insert(ids(o), arena.dist(q, qNormSq, o))
+        if (out.size > k) out.dropFurthest()
+      }
+      o += 1
+    }
+    out
+  }
+
+  /** `q`'s distance to the stored vector of an id, by its ordinal. */
+  def distances(q: Array[Float]): Long => Double = {
+    val qNormSq = ArenaVectorStore.squaredNorm(q)
+    id => arena.dist(q, qNormSq, arena.ordinalOf(id))
+  }
+
   /** [[HnswSearcher.insert]]: store `v` under `id` and connect it at every
     * layer up to `insertionLayer`. Returns its ordinal. */
   def insert(id: Long, v: Array[Float], insertionLayer: Int): Int = {
@@ -358,6 +410,74 @@ final class OrdinalGraph(params: HnswParams, arena: ArenaVectorStore) extends Se
 final case class OrdinalRows(rows: Array[Array[Array[Int]]], degrees: Array[Array[Int]],
                              entry: Int, entryLayer: Int)
 
+object OrdinalGraph {
+  /** A frozen graph's serving form: `vectors` in an arena in id order and
+    * `snap`'s rows on its ordinals, without distances, for a read-only
+    * view. A graph vertex without a vector is rejected. */
+  def frozen(metricName: String, vectors: LongVecMap,
+             snap: GraphSnapshot): (ArenaVectorStore, OrdinalRows) = {
+    val ids = vectors.keysIterator.toArray
+    java.util.Arrays.sort(ids)
+    val n = ids.length
+    def ordinal(id: Long): Int = {
+      val o = java.util.Arrays.binarySearch(ids, id)
+      if (o < 0) throw new IllegalStateException(s"graph vertex $id has no vector")
+      o
+    }
+    val rows = snap.layers.map { l =>
+      val layer = new Array[Array[Int]](n)
+      var i = 0
+      while (i < l.size) {
+        val from = l.offsets(i)
+        layer(ordinal(l.srcs(i))) = Array.tabulate(l.offsets(i + 1) - from)(k => ordinal(l.dsts(from + k)))
+        i += 1
+      }
+      layer
+    }
+    (ArenaVectorStore.of(metricName, ids, ids.map(vectors)),
+      OrdinalRows(rows, rows.map(_.map(r => if (r == null) 0 else r.length)),
+        snap.entryPoint.fold(-1)(ep => ordinal(ep.point)), snap.entryPoint.fold(-1)(_.layer)))
+  }
+}
+
+/** A frozen graph served through [[OrdinalGraph]] views: its
+  * [[OrdinalGraph.frozen]] arena and rows are built on the first [[view]]
+  * and shared by every later one. Its owner ([[HnswModel]], a shard, a
+  * routed cell) holds it `@transient`, so they are built once per JVM and
+  * never serialized. */
+private[hnsw] final class FrozenGraph(vectors: LongVecMap, snapshot: GraphSnapshot) {
+  private[this] var metricName: String = null
+  private[this] var built: (ArenaVectorStore, OrdinalRows) = null
+
+  /** A fresh view, for one thread, of the graph under `metric`. */
+  def view(params: HnswParams, metric: String): OrdinalGraph = {
+    val (arena, rows) = synchronized {
+      if (metricName != metric) {
+        built = OrdinalGraph.frozen(metric, vectors, snapshot)
+        metricName = metric
+      }
+      built
+    }
+    new OrdinalGraph(params, arena, rows)
+  }
+}
+
+/** What [[HnswDistributed.searchBroadcast]] serves: a broadcast value
+  * that gives each task partition a fresh [[OrdinalGraph]] view. */
+trait KernelSource extends Serializable {
+  def kernel(): OrdinalGraph
+}
+
+/** What a streaming index broadcasts after each mutation in place of its
+  * id-keyed [[HnswModel]]: a trimmed copy of its arena, whose id map
+  * stays behind and is rebuilt on first lookup, and its rows without
+  * distances ([[OrdinalGraph.rowCopy]]). */
+final case class ServingImage(params: HnswParams, arena: ArenaVectorStore,
+                              rows: OrdinalRows) extends KernelSource {
+  def size: Int = arena.size
+  def kernel(): OrdinalGraph = new OrdinalGraph(params, arena, rows)
+}
+
 /** `(dist, id)`-ascending list of arena ordinals — [[FurthestQueue]] on
   * ordinals, ties broken by each ordinal's id in the `ids` passed to
   * [[insert]]. */
@@ -398,6 +518,7 @@ final class OrdinalQueue private (
 
   def dropFurthest(): Unit = if (n > 0) n -= 1
   def trimTo(k: Int): Unit = if (k < n) n = k
+  def clear(): Unit = n = 0
   def copy(): OrdinalQueue = new OrdinalQueue(
     java.util.Arrays.copyOf(ordinals, math.max(n, 1)), java.util.Arrays.copyOf(dists, math.max(n, 1)), n)
 }

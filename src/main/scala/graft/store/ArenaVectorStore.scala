@@ -3,11 +3,14 @@ package graft.store
 import graft.hnsw.{LongLongMap, LongVecMap}
 
 /** Append-only float-arena vector store: the live store of a streaming
-  * index ([[graft.streaming.StreamingIngest.IncrementalIndex]]).
+  * index ([[graft.streaming.StreamingIngest.IncrementalIndex]]) and of
+  * every float build, and the store an [[graft.hnsw.OrdinalGraph]] view
+  * serves a frozen model from.
   *
   *  - every stored vector back to back in one float arena, vector `o` in
   *    `[offsets(o), offsets(o + 1))` — ordinals in insertion order;
-  *  - a primitive id -> ordinal map, and the ordinal's id in `ids`;
+  *  - the ordinal's id in `ids`, and a primitive id -> ordinal map built
+  *    from `ids` on first lookup and never serialized;
   *  - each vector's squared norm, summed in [[Metrics.cosineDist]]'s
   *    order, so a cosine distance reads only the dot product per pair.
   *
@@ -24,12 +27,17 @@ final class ArenaVectorStore(metricName: String, matchThreshold: Double = 1e-12)
   import ArenaVectorStore._
 
   private[graft] val metric = metricCode(metricName)
-  private[this] var n = 0
+  private var n = 0
   private[graft] var data = new Array[Float](0)
   private[graft] var offsets = new Array[Int](1)
   private[graft] var norms = new Array[Double](0)
   private[graft] var ids = new Array[Long](0)
-  private[this] val ordinals = new LongLongMap()
+  @transient private[this] lazy val ordinals: LongLongMap = {
+    val m = new LongLongMap(n)
+    var o = 0
+    while (o < n) { m.put(ids(o), o); o += 1 }
+    m
+  }
 
   /** Number of stored vectors. */
   def size: Int = n
@@ -60,6 +68,18 @@ final class ArenaVectorStore(metricName: String, matchThreshold: Double = 1e-12)
     val sorted = java.util.Arrays.copyOf(ids, n)
     java.util.Arrays.sort(sorted)
     sorted.map(ordinalOf)
+  }
+
+  /** A copy trimmed to the stored vectors. The id map stays behind: the
+    * copy rebuilds it on its first lookup. */
+  def copy(): ArenaVectorStore = {
+    val c = new ArenaVectorStore(metricName, matchThreshold)
+    c.n = n
+    c.ids = java.util.Arrays.copyOf(ids, n)
+    c.offsets = java.util.Arrays.copyOf(offsets, n + 1)
+    c.data = java.util.Arrays.copyOf(data, offsets(n))
+    c.norms = java.util.Arrays.copyOf(norms, n)
+    c
   }
 
   /** Room for one more vector of `floats` floats, growing by half. */
@@ -104,21 +124,85 @@ final class ArenaVectorStore(metricName: String, matchThreshold: Double = 1e-12)
   def isMatch(d: Double): Boolean = d <= matchThreshold
 
   /** Distance from `q` (squared norm `qNormSq`) to stored ordinal `o`. */
-  def dist(q: Array[Float], qNormSq: Double, o: Int): Double =
-    ArenaVectorStore.dist(metric, q, qNormSq, data, offsets, norms, o)
+  def dist(q: Array[Float], qNormSq: Double, o: Int): Double = {
+    val data = this.data
+    val from = offsets(o)
+    val len = offsets(o + 1) - from
+    val n = math.min(q.length, len)
+    var acc = 0.0
+    var i = 0
+    if (metric == Cosine) {
+      // the cached norms cover whole vectors; a length mismatch sums
+      // norms over the common prefix instead
+      if (len != q.length)
+        return Metrics.cosineDist(q, java.util.Arrays.copyOfRange(data, from, from + len))
+      while (i < n) { acc += q(i).toDouble * data(from + i).toDouble; i += 1 }
+      cosine(acc, qNormSq, norms(o))
+    } else if (metric == L2) {
+      while (i < n) { val d = q(i).toDouble - data(from + i).toDouble; acc += d * d; i += 1 }
+      acc
+    } else {
+      while (i < n) { acc += q(i).toDouble * data(from + i).toDouble; i += 1 }
+      -acc
+    }
+  }
 
   /** Distances from `q` to stored ordinals `os(0 until m)` into
-    * `out(0 until m)`, four per pass ([[ArenaVectorStore.measure]]). */
+    * `out(0 until m)`. Four vectors of the query's length are measured per
+    * pass over the query, each pair with its own sequential accumulator;
+    * the rest one at a time. */
   def measure(q: Array[Float], qNormSq: Double, os: Array[Int], m: Int,
-              out: Array[Double]): Unit =
-    ArenaVectorStore.measure(metric, q, qNormSq, data, offsets, norms, os, m, out)
+              out: Array[Double]): Unit = {
+    val data = this.data
+    val offsets = this.offsets
+    val norms = this.norms
+    val n = q.length
+    var i = 0
+    while (i + 4 <= m) {
+      val o0 = os(i); val o1 = os(i + 1); val o2 = os(i + 2); val o3 = os(i + 3)
+      val f0 = offsets(o0); val f1 = offsets(o1); val f2 = offsets(o2); val f3 = offsets(o3)
+      if (offsets(o0 + 1) - f0 != n || offsets(o1 + 1) - f1 != n ||
+          offsets(o2 + 1) - f2 != n || offsets(o3 + 1) - f3 != n) {
+        var j = i
+        while (j < i + 4) { out(j) = dist(q, qNormSq, os(j)); j += 1 }
+      } else {
+        var a0 = 0.0; var a1 = 0.0; var a2 = 0.0; var a3 = 0.0
+        var k = 0
+        if (metric == L2) {
+          while (k < n) {
+            val x = q(k).toDouble
+            val d0 = x - data(f0 + k).toDouble; a0 += d0 * d0
+            val d1 = x - data(f1 + k).toDouble; a1 += d1 * d1
+            val d2 = x - data(f2 + k).toDouble; a2 += d2 * d2
+            val d3 = x - data(f3 + k).toDouble; a3 += d3 * d3
+            k += 1
+          }
+          out(i) = a0; out(i + 1) = a1; out(i + 2) = a2; out(i + 3) = a3
+        } else {
+          while (k < n) {
+            val x = q(k).toDouble
+            a0 += x * data(f0 + k).toDouble
+            a1 += x * data(f1 + k).toDouble
+            a2 += x * data(f2 + k).toDouble
+            a3 += x * data(f3 + k).toDouble
+            k += 1
+          }
+          if (metric == Cosine) {
+            out(i) = cosine(a0, qNormSq, norms(o0))
+            out(i + 1) = cosine(a1, qNormSq, norms(o1))
+            out(i + 2) = cosine(a2, qNormSq, norms(o2))
+            out(i + 3) = cosine(a3, qNormSq, norms(o3))
+          } else {
+            out(i) = -a0; out(i + 1) = -a1; out(i + 2) = -a2; out(i + 3) = -a3
+          }
+        }
+      }
+      i += 4
+    }
+    while (i < m) { out(i) = dist(q, qNormSq, os(i)); i += 1 }
+  }
 }
 
-/** The distance kernels over an arena layout (`data`, `offsets`,
-  * `normSq`), shared by [[ArenaVectorStore]] and the serving layout's
-  * kernel ([[graft.hnsw.LayoutKernel]]). The query is the left operand, as
-  * the stores pass it; each result sums the same terms in the same order
-  * as [[Metrics]], so it is bit-identical. */
 object ArenaVectorStore {
   private[graft] final val Cosine = 0
   private[graft] final val L2 = 1
@@ -145,80 +229,31 @@ object ArenaVectorStore {
   @inline private def cosine(dot: Double, na: Double, nb: Double): Double =
     if (na == 0.0 || nb == 0.0) 1.0 else 1.0 - dot / math.sqrt(na * nb)
 
-  /** Distance from `q` (squared norm `qNormSq`) to stored vector `o`. */
-  private[graft] def dist(metric: Int, q: Array[Float], qNormSq: Double, data: Array[Float],
-                          offsets: Array[Int], normSq: Array[Double], o: Int): Double = {
-    val from = offsets(o)
-    val len = offsets(o + 1) - from
-    val n = math.min(q.length, len)
-    var acc = 0.0
+  /** An arena holding `vecs(i)` under `ids(i)` at ordinal `i`, its arrays
+    * sized to fit; the ids must be distinct. */
+  private[graft] def of(metricName: String, ids: Array[Long],
+                        vecs: Array[Array[Float]]): ArenaVectorStore = {
+    val a = new ArenaVectorStore(metricName)
+    val n = ids.length
+    val offsets = new Array[Int](n + 1)
     var i = 0
-    if (metric == Cosine) {
-      // the cached norms cover whole vectors; a length mismatch sums
-      // norms over the common prefix instead
-      if (len != q.length)
-        return Metrics.cosineDist(q, java.util.Arrays.copyOfRange(data, from, from + len))
-      while (i < n) { acc += q(i).toDouble * data(from + i).toDouble; i += 1 }
-      cosine(acc, qNormSq, normSq(o))
-    } else if (metric == L2) {
-      while (i < n) { val d = q(i).toDouble - data(from + i).toDouble; acc += d * d; i += 1 }
-      acc
-    } else {
-      while (i < n) { acc += q(i).toDouble * data(from + i).toDouble; i += 1 }
-      -acc
+    while (i < n) {
+      val end = offsets(i).toLong + vecs(i).length
+      require(end <= MaxFloats, s"vector arena of $end floats exceeds one array")
+      offsets(i + 1) = end.toInt
+      i += 1
     }
-  }
-
-  /** Distances from `q` to stored ordinals `os(0 until m)` into
-    * `out(0 until m)`. Four vectors of the query's length are measured per
-    * pass over the query, each pair with its own sequential accumulator;
-    * the rest one at a time. */
-  private[graft] def measure(metric: Int, q: Array[Float], qNormSq: Double, data: Array[Float],
-                             offsets: Array[Int], normSq: Array[Double],
-                             os: Array[Int], m: Int, out: Array[Double]): Unit = {
-    val n = q.length
-    var i = 0
-    while (i + 4 <= m) {
-      val o0 = os(i); val o1 = os(i + 1); val o2 = os(i + 2); val o3 = os(i + 3)
-      val f0 = offsets(o0); val f1 = offsets(o1); val f2 = offsets(o2); val f3 = offsets(o3)
-      if (offsets(o0 + 1) - f0 != n || offsets(o1 + 1) - f1 != n ||
-          offsets(o2 + 1) - f2 != n || offsets(o3 + 1) - f3 != n) {
-        var j = i
-        while (j < i + 4) { out(j) = dist(metric, q, qNormSq, data, offsets, normSq, os(j)); j += 1 }
-      } else {
-        var a0 = 0.0; var a1 = 0.0; var a2 = 0.0; var a3 = 0.0
-        var k = 0
-        if (metric == L2) {
-          while (k < n) {
-            val x = q(k).toDouble
-            val d0 = x - data(f0 + k).toDouble; a0 += d0 * d0
-            val d1 = x - data(f1 + k).toDouble; a1 += d1 * d1
-            val d2 = x - data(f2 + k).toDouble; a2 += d2 * d2
-            val d3 = x - data(f3 + k).toDouble; a3 += d3 * d3
-            k += 1
-          }
-          out(i) = a0; out(i + 1) = a1; out(i + 2) = a2; out(i + 3) = a3
-        } else {
-          while (k < n) {
-            val x = q(k).toDouble
-            a0 += x * data(f0 + k).toDouble
-            a1 += x * data(f1 + k).toDouble
-            a2 += x * data(f2 + k).toDouble
-            a3 += x * data(f3 + k).toDouble
-            k += 1
-          }
-          if (metric == Cosine) {
-            out(i) = cosine(a0, qNormSq, normSq(o0))
-            out(i + 1) = cosine(a1, qNormSq, normSq(o1))
-            out(i + 2) = cosine(a2, qNormSq, normSq(o2))
-            out(i + 3) = cosine(a3, qNormSq, normSq(o3))
-          } else {
-            out(i) = -a0; out(i + 1) = -a1; out(i + 2) = -a2; out(i + 3) = -a3
-          }
-        }
-      }
-      i += 4
+    a.data = new Array[Float](offsets(n))
+    a.norms = new Array[Double](n)
+    i = 0
+    while (i < n) {
+      System.arraycopy(vecs(i), 0, a.data, offsets(i), vecs(i).length)
+      a.norms(i) = squaredNorm(vecs(i))
+      i += 1
     }
-    while (i < m) { out(i) = dist(metric, q, qNormSq, data, offsets, normSq, os(i)); i += 1 }
+    a.n = n
+    a.ids = ids
+    a.offsets = offsets
+    a
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.hnsw.{HnswModel, HnswSearcher, OrdinalGraph, ServingImage, ServingLayout}
+import graft.hnsw.{HnswModel, HnswSearcher, OrdinalGraph, ServingImage}
 import graft.hnsw.HnswDistributed.BuildConfig
 import graft.store.ArenaVectorStore
 
@@ -30,7 +30,8 @@ object StreamingIngest {
     * an [[graft.hnsw.OrdinalGraph]] on the arena's ordinals: an insert
     * reads and writes `Int` rows and epoch-stamped marks, never an id
     * map. After each mutation, serving reads a [[graft.hnsw.ServingImage]]
-    * built from both ([[image]], [[modelBroadcast]]).
+    * — a trimmed copy of the arena and the graph's rows — through an
+    * ordinal view ([[image]], [[modelBroadcast]]).
     *
     * @param mirror optional durable graph mirror: after each batch, the
     *               adjacency rows the batch touched are written through
@@ -143,11 +144,12 @@ object StreamingIngest {
       snapCache
     }
 
-    /** The serving image of the current state: ordinal layout, no edge
-      * distances, arrays of its own. */
+    /** The serving image of the current state: the arena's arrays trimmed
+      * to its vectors and the graph's rows without distances, copied, in
+      * insertion order. */
     def image: ServingImage = synchronized {
       if (imageAt != mutations) {
-        imageCache = ServingImage(cfg.params, cfg.metric, ServingLayout.of(store, graph))
+        imageCache = ServingImage(cfg.params, store.copy(), graph.rowCopy)
         imageAt = mutations
       }
       imageCache

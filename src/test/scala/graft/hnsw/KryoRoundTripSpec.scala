@@ -147,7 +147,7 @@ class KryoRoundTripSpec extends SparkSpec {
       assert(rt.vectors(id).toSeq == v.toSeq, s"model vector mismatch at $id")
     }
     // serve through the round-tripped model: same kNN as the original,
-    // on the generic engine and through the rebuilt serving layout
+    // on the generic engine and through the rebuilt serving view
     val metric = Metrics.byName(cfg.metric)
     def knn(m: HnswModel, qvec: Array[Float]): Seq[(Long, Double)] = {
       val searcher = new HnswSearcher(m.params)
@@ -156,27 +156,41 @@ class KryoRoundTripSpec extends SparkSpec {
       searcher.search(store, m.snapshot, q, 10).iterator
         .map(nb => (nb.dst, nb.dist)).toSeq
     }
+    def served(view: OrdinalGraph, qvec: Array[Float]): Seq[(Long, Double)] =
+      view.search(qvec, 10, 0).iterator.map(nb => (nb.dst, nb.dist)).toSeq
+    val queries = (0 until 10).map(qi => vecFromHash(qi + 70000L, 13L, 16))
     val (rtKernel, kernel) = (rt.kernel(), model.kernel())
-    assert(rtKernel.isInstanceOf[LayoutKernel])
-    (0 until 10).foreach { qi =>
-      val qvec = vecFromHash(qi + 70000L, 13L, 16)
+    queries.zipWithIndex.foreach { case (qvec, qi) =>
       assert(knn(rt, qvec) == knn(model, qvec), s"serve diverged for query $qi")
-      val served = rtKernel.search(qvec, 10, 0).iterator.map(nb => (nb.dst, nb.dist)).toSeq
-      assert(served == kernel.search(qvec, 10, 0).iterator.map(nb => (nb.dst, nb.dist)).toSeq)
-      assert(served == knn(model, qvec), s"layout serve diverged for query $qi")
+      assert(served(rtKernel, qvec) == served(kernel, qvec))
+      assert(served(rtKernel, qvec) == knn(model, qvec), s"view serve diverged for query $qi")
     }
-    // the layout never rides in the broadcast payload: a model serializes
-    // to the same bytes whether or not its layout was built first
+    // the view's arena and rows never ride in the payload: each holder
+    // serializes to the same bytes whether or not its view was built
+    // first, and a round-tripped holder serves as the original
     val ser = new org.apache.spark.serializer.KryoSerializer(
       spark.sparkContext.getConf).newInstance()
+    def sameBytes(holder: AnyRef, view: () => OrdinalGraph): Unit = {
+      val before = ser.serialize(holder)
+      assert(view().exactTopK(queries.head, rows.size, _ => true).size == rows.size)
+      assert(ser.serialize(holder) == before)
+    }
     val fresh = HnswDistributed.buildFromArray(spark, rows.toArray, cfg)
-    val before = ser.serialize(fresh)
-    assert(fresh.layout.size == rows.size)
-    assert(ser.serialize(fresh) == before)
+    sameBytes(fresh, () => fresh.kernel())
     val sm = HnswDistributed.ShardModel(rt.vectors, rt.snapshot)
+    sameBytes(sm, () => sm.view(cfg))
     val smRt = kryoRoundTrip(sm)
     assert(smRt.vectors.size == sm.vectors.size &&
       smRt.vectors.keySet == sm.vectors.keySet)
+    val cell = HnswRouted.CellShard(3, rt.vectors, rt.snapshot)
+    sameBytes(cell, () => cell.view(cfg))
+    val cellRt = kryoRoundTrip(cell)
+    assert(cellRt.cell == 3)
+    queries.foreach { qvec =>
+      assert(served(smRt.view(cfg), qvec) == served(sm.view(cfg), qvec))
+      assert(served(cellRt.view(cfg), qvec) == served(cell.view(cfg), qvec))
+      assert(served(cellRt.view(cfg), qvec) == knn(model, qvec))
+    }
   }
 
   test("the batched build's phase-1 state round-trips and searches identically") {
@@ -218,9 +232,17 @@ class KryoRoundTripSpec extends SparkSpec {
     index.insertRows(rows(400 until 700))
     index.insertRows(rows(0 until 300)) // ids out of order: a permuted image
     val image = index.image
+    // the arena's id map never rides: the image serializes to the same
+    // bytes before and after a lookup built it
+    val ser = new org.apache.spark.serializer.KryoSerializer(
+      spark.sparkContext.getConf).newInstance()
+    val before = ser.serialize(image)
+    assert(image.arena.ordinalOf(0L) == 300) // insertion order
+    assert(ser.serialize(image) == before)
     val rt = kryoRoundTrip(image)
-    assert(rt.metricName == image.metricName)
-    assert(rt.layout.ids.sameElements(image.layout.ids) && rt.size == 600)
+    assert(rt.arena.metric == image.arena.metric && rt.size == 600)
+    assert(rt.arena.ids.sameElements(image.arena.ids))
+    assert((0L until 300L).forall(id => rt.arena.ordinalOf(id) == image.arena.ordinalOf(id)))
     def bits(q: FurthestQueue): Seq[(Long, Long)] =
       q.iterator.map(nb => (nb.dst, java.lang.Double.doubleToRawLongBits(nb.dist))).toSeq
     val (rtKernel, kernel) = (rt.kernel(), image.kernel())

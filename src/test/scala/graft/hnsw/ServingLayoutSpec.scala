@@ -7,13 +7,13 @@ import graft.hnsw.HnswDistributed.BuildConfig
 import graft.plans.{HnswSql, HnswStrategy}
 import graft.store.{ArrayVectorStore, Metrics}
 
-/** The layout kernel against the engine it replaces on built models:
-  * every query's `(id, dist)` list must equal [[HnswSearcher.searchWithEf]]
-  * over an [[ArrayVectorStore]] and the model's snapshot, distances bit for
-  * bit. The data holds the cases where an ordinal layout can go wrong:
-  * exact duplicate vectors (ties must come back in id order), zero
-  * vectors, vectors shorter than the rest, and non-contiguous negative
-  * ids. */
+/** The serving view ([[OrdinalGraph.search]]) against the reference
+  * engine on built models: every query's `(id, dist)` list must equal
+  * [[HnswSearcher.searchWithEf]] over an [[ArrayVectorStore]] and the
+  * model's snapshot, distances bit for bit. The data holds the cases where
+  * an ordinal layout can go wrong: exact duplicate vectors (ties must come
+  * back in id order), zero vectors, vectors shorter than the rest, and
+  * non-contiguous negative ids, id -1 among them. */
 class ServingLayoutSpec extends SparkSpec {
   import spark.implicits._
 
@@ -70,7 +70,6 @@ class ServingLayoutSpec extends SparkSpec {
     var tiedRuns = 0
     models.foreach { case (metric, m) =>
       val kernel = m.kernel()
-      assert(kernel.isInstanceOf[LayoutKernel])
       assert(m.snapshot.layers.length > 1, "the data must give a multi-layer graph")
       // (k, ef0): plain search, k past efSearch(0) with and without the
       // beam floor, and a single hit
@@ -107,6 +106,8 @@ class ServingLayoutSpec extends SparkSpec {
     val one = build("l2", rows.take(1))
     for (qvec <- queries)
       assert(bits(one.kernel().search(qvec, 10, 0)) == reference(one, qvec, 10, 0))
+    // a graph vertex without a vector is rejected
+    intercept[IllegalStateException](one.copy(vectors = new LongVecMap()).kernel())
   }
 
   test("compacted models and streaming snapshots serve through the layout kernel, equal to HnswSearcher") {
@@ -118,12 +119,12 @@ class ServingLayoutSpec extends SparkSpec {
     index.insertRows(rows.take(50) :+ rows.last) // id -1 included
     for (model <- Seq(compacted, index.model)) {
       val kernel = model.kernel()
-      assert(kernel.isInstanceOf[LayoutKernel])
       for (qvec <- queries; (k, ef0) <- Seq((10, 0), (40, 40)))
         assert(bits(kernel.search(qvec, k, ef0)) == reference(model, qvec, k, ef0), s"k=$k ef0=$ef0")
     }
-    // the layout of the compacted model serves the survivors only
-    val kept = compacted.layout.ids.toSet
+    // the view of the compacted model serves the survivors only
+    val kept = compacted.kernel().exactTopK(queries.head, rows.length, _ => true)
+      .iterator.map(_.dst).toSet
     assert(kept == rows.map(_._1).toSet -- Set(rows(3)._1, rows(4)._1))
   }
 
@@ -179,5 +180,45 @@ class ServingLayoutSpec extends SparkSpec {
     spark.experimental.extraStrategies =
       spark.experimental.extraStrategies.filterNot(_.isInstanceOf[HnswStrategy]) :+ new HnswStrategy
     same(HnswSql.knn(qDf, m, 40), plain(40, 40))
+
+    // the sharded and routed tiers: a partition-local top-k per shard or
+    // probed cell, then one (dist, id) merge. Id -1 is stored in a shard
+    // and a cell; the reference stages each query under an unused id.
+    /** Each query's rows from its shards' `(id, dist-bits)` lists, merged. */
+    def merged(qs: Seq[(Array[Float], Long)], k: Int)(
+        perShard: Array[Float] => Seq[List[(Long, Long)]]): Rows =
+      qs.flatMap { case (v, qid) =>
+        perShard(v).flatten
+          .sortBy { case (id, d) => (java.lang.Double.longBitsToDouble(d), id) }.take(k)
+          .zipWithIndex.map { case ((id, d), r) => (qid, id, d, r + 1) }
+      }.toSet
+    val cfg = BuildConfig(params, metric = "cosine", seed = 7L)
+    val rowsDf = rows.toSeq.toDF("id", "vec")
+    val sharded = HnswDistributed.buildSharded(rowsDf, cfg, numShards = 3)
+    try {
+      val shards = sharded.shards.collect()
+      assert(shards.length == 3 && shards.exists(_.vectors.contains(-1L)))
+      val qs = queries.zipWithIndex.map { case (v, i) => (v, i.toLong) }
+      for (k <- Seq(10, 40))
+        same(HnswDistributed.searchSharded(sharded, qDf, k), merged(qs, k)(v =>
+          shards.toSeq.map(s => reference(HnswModel(params, "cosine", s.snapshot, s.vectors), v, k, 0))))
+    } finally sharded.unpersist()
+
+    // k-means routes full-length vectors: the short rows and queries stay out
+    val full = rows.filter(_._2.length == dim)
+    val fullQ = queries.zipWithIndex.collect { case (v, i) if v.length == dim => (v, i.toLong) }
+    val routed = HnswRouted.build(full.toSeq.toDF("id", "vec"), cfg, nCells = 4, persist = false)
+    val cells = routed.shards.collect().toSeq
+    assert(cells.exists(_._2.vectors.contains(-1L)))
+    val fullDf = fullQ.map { case (v, i) => (i, v) }.toDF("qid", "qvec")
+    for (nProbe <- Seq(routed.router.nPrimary, 2)) {
+      same(HnswRouted.search(routed, fullDf, 10, nProbe), merged(fullQ, 10) { v =>
+        val probed = routed.router.probeCells(v, nProbe).toSet
+        cells.filter(c => probed(c._1)).map { case (_, c) =>
+          reference(HnswModel(params, "cosine", c.snapshot, c.vectors), v, 10,
+            HnswRouted.cellEf(params, 0, c.vectors.size))
+        }
+      })
+    }
   }
 }

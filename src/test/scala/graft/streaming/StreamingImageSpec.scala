@@ -75,7 +75,6 @@ class StreamingImageSpec extends SparkSpec {
       tied += got.values.count(_.sliding(2).exists { case Seq(a, b) => a._2 == b._2; case _ => false })
     }
     assert(tied > 0, "no result list held a distance tie")
-    assert(index.image.layout.ids.toSeq == index.image.layout.ids.sorted.toSeq)
     assert(index.image.size == index.size)
   }
 
