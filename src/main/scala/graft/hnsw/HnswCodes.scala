@@ -3,22 +3,31 @@ package graft.hnsw
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.store.{GraphSnapshot, InMemoryGraph}
+import graft.store.{CodeArena, CodeQuery, GraphSnapshot}
 
 /** HNSW over u64 bit-codes compared by Hamming distance — the reference's
   * native vector representation (lazy_memory_store.rs:14-21, 49-54),
   * end-to-end distributed: driver-sequential index build (Hamming evals
   * are single XOR+popcounts; build cost is dwarfed by one Spark job until
   * ~10^6 codes — switch to the float path's micro-batching beyond), then
-  * broadcast-model mapPartitions search. */
+  * broadcast-model mapPartitions search, both on the ordinal engine
+  * ([[OrdinalGraph]]) over a [[CodeArena]]. */
 object HnswCodes {
 
+  /** A built code index: its graph and codes by id, served through
+    * [[OrdinalGraph]] views whose store and rows ([[FrozenGraph]]) are
+    * built once per JVM and never serialized. */
   final case class CodeModel(
       params: HnswParams,
       snapshot: GraphSnapshot,
-      codes: LongLongMap // primitive-keyed AND -valued: probed twice per Hamming eval
-  ) extends Serializable
+      codes: LongLongMap
+  ) extends Serializable {
+    @transient private lazy val frozen = new FrozenGraph(snapshot, codes.keysIterator)(
+      (_, ids) => CodeArena.of(ids, ids.map(codes(_))))
 
+    /** A fresh view, for one thread. */
+    def view(): OrdinalGraph[CodeQuery] = frozen.view(params)
+  }
   private val pairEnc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
 
   /** Process-wide model memo (the [[HnswDistributed.buildCached]]
@@ -51,49 +60,35 @@ object HnswCodes {
     // degree) while rows.toMap collapsed it silently
     val rows = codes.select(col("id"), col("code")).as(pairEnc).collect()
       .sortBy(_._1).distinctBy(_._1)
-    val searcher = new HnswSearcher(params)
-    val store = new CodeStoreWithIds
-    val graph = new InMemoryGraph
-    rows.foreach { case (id, code) =>
-      store.stage(id, code)
-      searcher.insert(store, graph, id, searcher.selectLayerByHash(id, seed))
-    }
-    CodeModel(params, graph.snapshot, LongLongMap.from(rows.iterator, rows.length))
+    CodeModel(params, OrdinalGraph.grow(params, seed, new CodeArena, None,
+      rows.iterator.map { case (id, code) => (id, CodeQuery.hamming(code)) }),
+      LongLongMap.from(rows.iterator, rows.length))
   }
 
   /** Micro-batched build for code tables beyond comfortable sequential
     * range (the u64 twin of [[HnswDistributed.buildFromArray]]): seed
     * phase strictly sequential, then phase-1 search_to_insert distributed
-    * against a broadcast snapshot of the current graph, phase-2 merges in
-    * deterministic id order. The code table itself broadcasts at any
-    * realistic scale (8 bytes per vector). */
+    * against a broadcast copy of the current graph's `Int` rows, phase-2
+    * merges in deterministic id order. The code table itself broadcasts
+    * at any realistic scale (8 bytes per vector). */
   def buildBatched(codes: DataFrame, params: HnswParams, seed: Long = 42L,
                    seedBatch: Int = 128, maxBatch: Int = 4096,
                    growthDenom: Int = 4, batchCeiling: Int = 262144): CodeModel = {
     val spark = codes.sparkSession
     val rows = codes.select(col("id"), col("code")).as(pairEnc).collect()
       .sortBy(_._1).distinctBy(_._1)
-    val searcher = new HnswSearcher(params)
-    val codeMap = LongLongMap.from(rows.iterator, rows.length)
-    val store = new CodeStoreWithIds(codeMap)
-    val graph = new InMemoryGraph
     val ids = rows.map(_._1)
-    val insLayers = ids.map(id => searcher.selectLayerByHash(id, seed))
+    val graph = HnswDistributed.batchedBuildLoop(spark, ids,
+      ids.map(params.selectLayerByHash(_, seed)), params, seedBatch, maxBatch,
+      growthDenom, batchCeiling)(new BuildCodes(ids, rows.map(_._2)))
+    CodeModel(params, graph.snapshot, LongLongMap.from(rows.iterator, rows.length))
+  }
 
-    HnswDistributed.batchedBuildLoop(spark, ids, insLayers, params, seedBatch, maxBatch,
-      growthDenom, batchCeiling)(codeMap,
-      i => searcher.insert(store, graph, ids(i), insLayers(i)),
-      () => graph.snapshot,
-      (m: LongLongMap, snap: GraphSnapshot) => {
-        val local = new CodeStoreWithIds(m)
-        (id: Long, layer: Int) => searcher.searchToInsert(local, snap, id, layer)._1.map(_.toArray)
-      },
-      (id: Long, found: Vector[Array[Neighbor]]) => {
-        val links = found.map(a => FurthestQueue.fromAscending(a.toSeq))
-        searcher.insertFromSearchResults(store, graph, id, links, links.size > graph.numLayers)
-      })
-
-    CodeModel(params, graph.snapshot, codeMap)
+  /** A batched code build's rows: `codes(i)` under `ids(i)`. */
+  private final class BuildCodes(ids: Array[Long], codes: Array[Long])
+      extends BuildRows[CodeQuery] {
+    @transient lazy val store: CodeArena = CodeArena.of(ids, codes)
+    def query(i: Int): CodeQuery = CodeQuery.hamming(codes(i))
   }
 
   /** Distributed k-NN over codes: (qid, qcode) -> (qid, id, hamming, rank).
@@ -113,40 +108,13 @@ object HnswCodes {
       Encoders.scalaInt, Encoders.scalaInt)
     queries.select(col("qid"), col("qcode")).as(pairEnc)
       .mapPartitions { it =>
-        val m = modelB.value
-        val searcher = new HnswSearcher(m.params)
-        // read-through store over the broadcast map (no per-partition
-        // copy); the query slot (-1) is re-staged per row
-        val store = new CodeStoreWithIds(m.codes)
+        val view = modelB.value.view()
         it.flatMap { case (qid, qcode) =>
-          store.stage(-1L, qcode)
-          val w = searcher.search(store, m.snapshot, -1L, k)
-          w.iterator.zipWithIndex.map { case (nb, i) =>
+          view.search(CodeQuery.hamming(qcode), k, 0).iterator.zipWithIndex.map { case (nb, i) =>
             (qid, nb.dst, nb.dist.toInt, i + 1)
           }
         }
       }(resEnc)
       .toDF("qid", "id", "hamming", "rank")
-  }
-
-  /** CodeVectorStore with caller-assigned ids (the dense auto-id variant
-    * lives in graft.store; HNSW needs the table's own ids). `base` backs
-    * ids not staged locally — executors wrap the broadcast code table
-    * without copying it. */
-  private final class CodeStoreWithIds(
-      base: LongLongMap = new LongLongMap())
-      extends graft.store.VectorStore {
-    type Raw = Long
-    private val staged = new LongLongMap()
-    def stage(id: Long, code: Long): Unit = staged.put(id, code)
-    // two primitive probes (staged miss -> base hit) — no Option, no boxing
-    private def code(id: Long): Long =
-      if (staged.contains(id)) staged(id) else base(id)
-    override def prepareQuery(raw: Long): Long =
-      throw new UnsupportedOperationException("use stage(id, code)")
-    override def insert(q: Long): Long = q
-    override def evalDistance(q: Long, v: Long): Double =
-      java.lang.Long.bitCount(code(q) ^ code(v)).toDouble
-    override def isMatch(d: Double): Boolean = d <= 0.0
   }
 }

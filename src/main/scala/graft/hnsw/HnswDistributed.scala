@@ -1,11 +1,9 @@
 package graft.hnsw
 
-import scala.reflect.ClassTag
-
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.store.{ArenaVectorStore, GraphSnapshot}
+import graft.store.{ArenaVectorStore, GraphSnapshot, OrdinalStore}
 
 /** A built HNSW index ready for distributed search: the (small, broadcast-
   * able) layered graph plus the vector table keyed by id. At broadcast
@@ -15,7 +13,7 @@ import graft.store.{ArenaVectorStore, GraphSnapshot}
   * vectors and graph).
   *
   * A model serves through [[OrdinalGraph]] views over one arena and one
-  * set of `Int` rows ([[OrdinalGraph.frozen]]), built once per JVM on
+  * set of `Int` rows ([[OrdinalGraph.frozenRows]]), built once per JVM on
   * first use and never serialized. A streaming index does not serve its
   * model: it broadcasts a [[ServingImage]] of its arena and rows instead
   * ([[graft.streaming.StreamingIngest.IncrementalIndex.modelBroadcast]]).
@@ -33,20 +31,27 @@ final case class HnswModel(
 ) extends KernelSource {
   def size: Int = vectors.size
 
-  @transient private lazy val frozen = new FrozenGraph(vectors, snapshot)
+  @transient private lazy val frozen = new FrozenGraph(snapshot, vectors.keysIterator)(
+    (m, ids) => ArenaVectorStore.of(m, ids, ids.map(vectors(_))))
 
   /** A fresh per-partition view over this model's arena and rows. */
-  override def kernel(): OrdinalGraph = frozen.view(params, metricName)
+  override def kernel(): OrdinalGraph[Array[Float]] = frozen.view(params, metricName)
 }
 
-/** A batched float build's vectors, broadcast once: `ids(i)` and
-  * `vecs(i)` are row `i` in build order. Per-vector arrays, as a
-  * [[LongVecMap]] payload has, so no single array nears Kryo's 2 GiB
-  * limit; each JVM builds its [[arena]] once on first use, never
-  * serialized, with ordinal `i` for row `i`. */
+/** What a batched build broadcasts once: row `i`'s query, and a [[store]]
+  * holding row `i` at ordinal `i`, built once per JVM, never serialized. */
+private[hnsw] abstract class BuildRows[Q] extends Serializable {
+  def store: OrdinalStore[Q]
+  def query(i: Int): Q
+}
+
+/** A batched float build's rows, per-vector arrays as a [[LongVecMap]]
+  * has, so no single array nears Kryo's 2 GiB limit. */
 private[hnsw] final class BuildVectors(metricName: String, val ids: Array[Long],
-                                       val vecs: Array[Array[Float]]) extends Serializable {
+                                       val vecs: Array[Array[Float]]) extends BuildRows[Array[Float]] {
   @transient lazy val arena: ArenaVectorStore = ArenaVectorStore.of(metricName, ids, vecs)
+  def store: ArenaVectorStore = arena
+  def query(i: Int): Array[Float] = vecs(i)
 }
 
 /** Distributed HNSW build & search over DataFrames.
@@ -65,7 +70,7 @@ private[hnsw] final class BuildVectors(metricName: String, val ids: Array[Long],
   * measured against the exact oracle in the test suite.
   *
   * Determinism: layer assignment is hash-based (S3,
-  * [[HnswSearcher.selectLayerByHash]]), batches are id-ordered, and all
+  * [[HnswParams.selectLayerByHash]]), batches are id-ordered, and all
   * queue orders are total — the same input yields bit-identical graphs
   * regardless of cluster layout.
   */
@@ -124,40 +129,24 @@ object HnswDistributed {
     // and inflating its degree) — keep the first occurrence
     val rows = rows0.distinctBy(_._1)
     val ids = rows.map(_._1)
-    val params = cfg.params
-    val searcher = new HnswSearcher(params)
-    val insLayers = ids.map(id => searcher.selectLayerByHash(id, cfg.seed))
-    // ordinal i is row i: the driver's arena and every executor's agree
-    val vectors = new BuildVectors(cfg.metric, ids, rows.map(_._2))
-    val arena = vectors.arena
-    val graph = new OrdinalGraph(params, arena)
-
-    batchedBuildLoop(spark, ids, insLayers, params, cfg.seedBatch, cfg.maxBatch,
-      cfg.growthDenom, cfg.batchCeiling)(vectors,
-      i => graph.connect(i, graph.searchToInsert(vectors.vecs(i), insLayers(i))),
-      () => graph.rowCopy,
-      (p: BuildVectors, copy: OrdinalRows) => {
-        val view = new OrdinalGraph(params, p.arena, copy)
-        (id: Long, layer: Int) => view.searchToInsert(p.vecs(p.arena.ordinalOf(id)), layer)
-      },
-      (id: Long, found: Array[OrdinalQueue]) => graph.connect(arena.ordinalOf(id), found))
-
-    HnswModel(params, cfg.metric, graph.snapshot, LongVecMap.from(rows.iterator, rows.length))
+    val graph = batchedBuildLoop(spark, ids, ids.map(cfg.params.selectLayerByHash(_, cfg.seed)),
+      cfg.params, cfg.seedBatch, cfg.maxBatch, cfg.growthDenom, cfg.batchCeiling)(
+      new BuildVectors(cfg.metric, ids, rows.map(_._2)))
+    HnswModel(cfg.params, cfg.metric, graph.snapshot, LongVecMap.from(rows.iterator, rows.length))
   }
 
-  /** The shared seed + micro-batched build loop over the caller's
-    * representation ([[buildFromArray]], [[HnswCodes.buildBatched]]):
-    * `seedInsert(i)` inserts row `i` on the driver; per batch, each
-    * phase-1 task runs `phase1(payload, snapshot())` on its `(id,
-    * insertion layer)` rows, and `merge` connects the results in id
-    * order against the live graph, so set_ep is decided there. Batch
-    * size is capped at the current graph size. */
-  private[hnsw] def batchedBuildLoop[P: ClassTag, S: ClassTag, R: ClassTag](
+  /** The seed + micro-batched build loop of [[buildFromArray]] and
+    * [[HnswCodes.buildBatched]] over `rows`, row `i` being id `ids(i)` at
+    * layer `insLayers(i)`: seed rows insert on the driver's graph; per
+    * batch, each phase-1 task runs [[OrdinalGraph.searchToInsert]] on a
+    * view of the broadcast [[OrdinalGraph.rowCopy]], and the driver
+    * connects the results in id order, so set_ep is decided there. Batch
+    * size is capped at the current graph size. Returns the graph. */
+  private[hnsw] def batchedBuildLoop[Q](
       spark: SparkSession, ids: Array[Long], insLayers: Array[Int],
       params: HnswParams, seedBatch: Int, maxBatch: Int,
       growthDenom: Int = 4, batchCeiling: Int = 262144)(
-      payload: P, seedInsert: Int => Unit, snapshot: () => S,
-      phase1: (P, S) => (Long, Int) => R, merge: (Long, R) => Unit): Unit = {
+      rows: BuildRows[Q]): OrdinalGraph[Q] = {
     require(growthDenom >= 1, "growthDenom must be >= 1")
     val n = ids.length
     // Fail FAST on the broadcast tier's hard envelope, not at the first
@@ -165,8 +154,8 @@ object HnswDistributed {
     // then KryoException): Kryo's Unsafe bulk writer takes an int BYTE
     // count, so no single primitive array may pass ~2 GiB. The binding
     // arrays are the model's layer-0 `LayerCsr` columns, 8-byte dsts and
-    // dists, which broadcastModel ships (the u64 build also broadcasts
-    // them per batch; the float build's row copy is per-vertex Int rows).
+    // dists, which broadcastModel ships for the float and the u64 model
+    // alike (phase 1 ships per-vertex Int rows, `rowCopy`, for both).
     // edges <= n * mMax0 is a WORST-CASE bound, reached in practice (HNSW
     // fills degrees): a sparse borderline graph is rejected where it
     // might have fit, the price of an envelope a user can plan around.
@@ -179,18 +168,19 @@ object HnswDistributed {
         "8-byte model columns pass Kryo's 2 GiB per-array serialization limit. " +
         "Use HnswDistributed.buildSharded, HnswRouted.build, or " +
         "HnswDurable.ingest for graphs of this size.")
+    val graph = new OrdinalGraph(params, rows.store)
     val seedN = math.min(seedBatch, n)
     var pos = 0
     while (pos < seedN) {
-      seedInsert(pos)
+      graph.connect(pos, graph.searchToInsert(rows.query(pos), insLayers(pos)))
       pos += 1
     }
 
     val sc = spark.sparkContext
     // broadcasts released on EVERY path: a transient job failure with a
     // catch-and-retry caller would otherwise leak one graph copy + the
-    // whole vector payload per attempt
-    val payloadB = sc.broadcast(payload)
+    // whole row payload per attempt
+    val rowsB = sc.broadcast(rows)
     try {
       while (pos < n) {
         // Batch schedule: min(maxBatch, pos) early (intra-batch nodes
@@ -203,21 +193,23 @@ object HnswDistributed {
         // doubling phase), and batchCeiling bounds the phase-1 collect.
         val grown = math.max(maxBatch, math.min(pos / growthDenom, batchCeiling))
         val batchSize = math.min(math.min(grown, pos), n - pos)
-        val batch = (pos until pos + batchSize).map(i => (ids(i), insLayers(i)))
-        val snapB = sc.broadcast(snapshot())
+        val batch = (pos until pos + batchSize).map(i => (i, insLayers(i)))
+        val copyB = sc.broadcast(graph.rowCopy)
         val results =
           try {
             val slices = math.max(1, math.min(batch.size / 16, sc.defaultParallelism))
             sc.parallelize(batch, slices).mapPartitions { it =>
-              val search = phase1(payloadB.value, snapB.value)
-              it.map { case (id, insLayer) => (id, search(id, insLayer)) }
+              val p = rowsB.value
+              val view = new OrdinalGraph(params, p.store, copyB.value)
+              it.map { case (i, insLayer) => (i, view.searchToInsert(p.query(i), insLayer)) }
             }.collect()
-          } finally snapB.destroy()
+          } finally copyB.destroy()
 
-        results.sortBy(_._1).foreach { case (id, found) => merge(id, found) }
+        results.sortBy(r => ids(r._1)).foreach { case (i, found) => graph.connect(i, found) }
         pos += batchSize
       }
-    } finally payloadB.destroy()
+    } finally rowsB.destroy()
+    graph
   }
 
   /** Distributed k-NN search (S6): broadcast the model, run the
@@ -360,11 +352,12 @@ object HnswDistributed {
       vectors: LongVecMap,
       snapshot: GraphSnapshot
   ) extends Serializable {
-    @transient private lazy val frozen = new FrozenGraph(vectors, snapshot)
+    @transient private lazy val frozen = new FrozenGraph(snapshot, vectors.keysIterator)(
+      (m, ids) => ArenaVectorStore.of(m, ids, ids.map(vectors(_))))
 
     /** A fresh view over the shard's arena and rows (see
       * [[HnswModel.kernel]]). */
-    def view(cfg: BuildConfig): OrdinalGraph = frozen.view(cfg.params, cfg.metric)
+    def view(cfg: BuildConfig): OrdinalGraph[Array[Float]] = frozen.view(cfg.params, cfg.metric)
   }
 
   /** A prebuilt sharded index: build once, serve many query batches. The
@@ -391,14 +384,9 @@ object HnswDistributed {
         // distinctBy: a repeated id would insert twice (see buildFromArray)
         val shard = it.toArray.sortBy(_._1).distinctBy(_._1)
         if (shard.isEmpty) Iterator.empty
-        else {
-          val searcher = new HnswSearcher(cfg.params)
-          val graph = new OrdinalGraph(cfg.params, new ArenaVectorStore(cfg.metric))
-          shard.foreach { case (id, v) =>
-            graph.insert(id, v, searcher.selectLayerByHash(id, cfg.seed))
-          }
-          Iterator.single(ShardModel(LongVecMap.from(shard.iterator, shard.length), graph.snapshot))
-        }
+        else Iterator.single(ShardModel(LongVecMap.from(shard.iterator, shard.length),
+          OrdinalGraph.grow(cfg.params, cfg.seed, new ArenaVectorStore(cfg.metric), None,
+            shard.iterator)))
       }(Encoders.kryo[ShardModel])
       .rdd
     if (persist) {

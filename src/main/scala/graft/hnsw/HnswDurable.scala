@@ -163,11 +163,8 @@ object HnswDurable {
     if (graphSize == 0L) {
       val seedN = math.min(cfg.seedBatch.toLong, n)
       val seedRows = batchVectors(0, seedN).as(pairEnc).collect().sortBy(_._1)
-      val seedGraph = new OrdinalGraph(params, new ArenaVectorStore(cfg.metric))
-      seedRows.foreach { case (id, v) =>
-        seedGraph.insert(id, v, searcher.selectLayerByHash(id, cfg.seed))
-      }
-      store.save(seedGraph.snapshot)
+      store.save(OrdinalGraph.grow(params, cfg.seed, new ArenaVectorStore(cfg.metric), None,
+        seedRows.iterator))
       pos = seedN
       graphSize = seedN
     }

@@ -41,6 +41,17 @@ final case class HnswParams(
   def getEfConstrInsert(lc: Int): Int = clamp(efConstrInsert, lc)
   def getEfSearch(lc: Int): Int = clamp(efSearch, lc)
   def mL: Double = HnswParams.mLFromLayerProbability(layerProbability)
+
+  /** S3, deterministic for reproducible distributed builds: the insertion
+    * layer ~ Geometric(1 - p) (number of successes before the first
+    * failure, reference hawk_searcher.rs:178-183), drawn from a 64-bit mix
+    * of (id, seed) — the Spark analog of the reference's seeded AesRng
+    * (hawk_searcher.rs:445) — by the inverse CDF floor(ln(u)/ln(p)). */
+  def selectLayerByHash(id: Long, seed: Long): Int = {
+    val u = HnswSearcher.uniformFromHash(id, seed)
+    if (u <= 0.0) 0
+    else math.floor(math.log(u) / math.log(layerProbability)).toInt.max(0)
+  }
 }
 
 object HnswParams {

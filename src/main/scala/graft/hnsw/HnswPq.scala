@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.PqKernels
 import graft.operators.Pq
-import graft.store.{AdcVectorStore, GraphSnapshot}
+import graft.store.{CodeArena, CodeQuery, GraphSnapshot}
 
 /** HNSW graph traversal in PQ-compressed space — the memory-tier shape of
   * DiskANN-style serving: what every executor holds is the layered graph
@@ -22,16 +22,16 @@ import graft.store.{AdcVectorStore, GraphSnapshot}
   *
   * Distance contract: ADC reconstructs squared L2, so the graph must be
   * BUILT with the l2 metric for traversal order to agree with serving
-  * order (asserted). Search itself is the unchanged kernel
-  * ([[HnswSearcher.searchWithEf]]) — only the [[graft.store.VectorStore]]
-  * implementation changes ([[AdcVectorStore]]), the store-swap the trait
-  * split exists for (reference: src/traits.rs:18-95).
+  * order (asserted). Search runs the ordinal engine ([[OrdinalGraph]])
+  * over a [[CodeArena]], each query measured through its ADC table, bit
+  * for bit the reference [[graft.store.AdcVectorStore]] — the store swap
+  * the reference's trait split exists for (src/traits.rs:18-95).
   */
 object HnswPq {
 
   /** Everything an executor needs to serve: graph + codes + codebook.
     * NO raw vectors — at dim=64 this broadcasts 32x smaller than the
-    * equivalent [[HnswModel]]. */
+    * equivalent [[HnswModel]]. Served like a [[HnswCodes.CodeModel]]. */
   final case class PqServingModel(
       params: HnswParams,
       snapshot: GraphSnapshot,
@@ -39,6 +39,12 @@ object HnswPq {
       codes: Map[Long, Long]
   ) extends Serializable {
     def size: Int = codes.size
+
+    @transient private lazy val frozen = new FrozenGraph(snapshot, codes.keysIterator)(
+      (_, ids) => CodeArena.of(ids, ids.map(codes)))
+
+    /** A fresh view, for one thread. */
+    def view(): OrdinalGraph[CodeQuery] = frozen.view(params)
   }
 
   private val modelCache =
@@ -110,14 +116,10 @@ object HnswPq {
     queries.select(col("qid"), col("qvec")).as(pairEnc)
       .mapPartitions { it =>
         val m = modelB.value
-        val searcher = new HnswSearcher(m.params)
-        // one store per partition (the serving-path allocation rule),
-        // re-staging the -1 query slot per row
-        val store = new AdcVectorStore(m.codebook, m.codes)
+        val view = m.view()
         val beam = math.max(ef, k)
         it.flatMap { case (qid, qvec) =>
-          val q = store.prepareQueryWithId(-1L, qvec)
-          val w = searcher.searchWithEf(store, m.snapshot, q, beam, beam)
+          val w = view.search(CodeQuery.adc(qvec, m.codebook), beam, beam)
           w.iterator.zipWithIndex.map { case (nb, i) => (qid, nb.dst, nb.dist, i + 1) }
         }
       }(resEnc)

@@ -57,11 +57,12 @@ object HnswRouted {
       vectors: LongVecMap,
       snapshot: GraphSnapshot
   ) extends Serializable {
-    @transient private lazy val frozen = new FrozenGraph(vectors, snapshot)
+    @transient private lazy val frozen = new FrozenGraph(snapshot, vectors.keysIterator)(
+      (m, ids) => ArenaVectorStore.of(m, ids, ids.map(vectors(_))))
 
     /** A fresh view over the cell's arena and rows (see
       * [[HnswModel.kernel]]). */
-    def view(cfg: BuildConfig): OrdinalGraph = frozen.view(cfg.params, cfg.metric)
+    def view(cfg: BuildConfig): OrdinalGraph[Array[Float]] = frozen.view(cfg.params, cfg.metric)
   }
 
   /** Max secondary cells per split primary cell; also the stride of the
@@ -377,9 +378,9 @@ object HnswRouted {
   /** The float tier's one cell kernel — build, ingest and compaction
     * all grow a cell here: `prior`'s graph (copy-on-merge: a cached
     * shard is never mutated) absorbs the id-sorted `rows` in order,
-    * layers from the id hash; with no prior the cell builds fresh, so a
-    * compacted cell is graph-identical to a fresh build of its
-    * surviving rows (same insert order, same layer draws). */
+    * layers from the id hash ([[OrdinalGraph.grow]]); with no prior the
+    * cell builds fresh, so a compacted cell is graph-identical to a fresh
+    * build of its surviving rows (same insert order, same layer draws). */
   private[hnsw] def growCell(cfg: BuildConfig)(cell: Int, prior: Option[CellShard],
                                                rows: Array[(Long, Array[Float])]): CellShard = {
     val vecMap = prior.fold(new LongVecMap(rows.length))(_.vectors.copy(extra = rows.length))
@@ -389,17 +390,10 @@ object HnswRouted {
           "re-inserting a vertex would corrupt its graph")
     }
     val arena = new ArenaVectorStore(cfg.metric)
-    val graph = new OrdinalGraph(cfg.params, arena)
-    prior.foreach { p =>
-      p.vectors.foreach { case (id, v) => arena.insert(id, v) }
-      graph.restore(p.snapshot)
-    }
-    val searcher = new HnswSearcher(cfg.params)
-    rows.foreach { case (id, v) =>
-      vecMap(id) = v
-      graph.insert(id, v, searcher.selectLayerByHash(id, cfg.seed))
-    }
-    CellShard(cell, vecMap, graph.snapshot)
+    prior.foreach(_.vectors.foreach { case (id, v) => arena.insert(id, v) })
+    rows.foreach { case (id, v) => vecMap(id) = v }
+    CellShard(cell, vecMap,
+      OrdinalGraph.grow(cfg.params, cfg.seed, arena, prior.map(_.snapshot), rows.iterator))
   }
 
   /** `modalitySplit`: opt-in BUILD-TIME modality guard (round-15; the

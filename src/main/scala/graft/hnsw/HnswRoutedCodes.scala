@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.store.{GraphSnapshot, InMemoryGraph}
+import graft.store.{CodeArena, CodeQuery, GraphSnapshot}
 
 /** IVF-routed sharded HNSW over u64 bit-codes under Hamming distance —
   * [[HnswRouted]]'s architecture applied to the reference's NATIVE
@@ -39,10 +39,18 @@ import graft.store.{GraphSnapshot, InMemoryGraph}
   * duplicate-id fail-fast. */
 object HnswRoutedCodes {
 
+  /** One cell: its codes by id and its graph, served like a
+    * [[HnswCodes.CodeModel]]. */
   final case class CodeCellShard(
       cell: Int,
       codes: LongLongMap,
-      snapshot: GraphSnapshot) extends Serializable
+      snapshot: GraphSnapshot) extends Serializable {
+    @transient private lazy val frozen = new FrozenGraph(snapshot, codes.keysIterator)(
+      (_, ids) => CodeArena.of(ids, ids.map(codes(_))))
+
+    /** A fresh view, for one thread. */
+    def view(params: HnswParams): OrdinalGraph[CodeQuery] = frozen.view(params)
+  }
 
   /** `tombstones` is the index's deletion set (sorted ids) — the float
     * tier's soft-delete contract ([[HnswRouted.RoutedIndex]]):
@@ -205,26 +213,23 @@ object HnswRoutedCodes {
   /** The code tier's one cell kernel — build, ingest and compaction all
     * grow a cell here: `prior`'s graph and code map (copy-on-merge: a
     * cached shard is never mutated) absorb the id-sorted `rows` in
-    * order, layers from the id hash; with no prior the cell builds
-    * fresh, so a compacted cell is graph-identical to a fresh build of
-    * its surviving rows (same insert order, same layer draws). */
-  private def growCell(params: HnswParams, seed: Long)(cell: Int,
+    * order, layers from the id hash ([[OrdinalGraph.grow]]); with no
+    * prior the cell builds fresh, so a compacted cell is graph-identical
+    * to a fresh build of its surviving rows (same insert order, same
+    * layer draws). */
+  private[hnsw] def growCell(params: HnswParams, seed: Long)(cell: Int,
       prior: Option[CodeCellShard], rows: Array[(Long, Long)]): CodeCellShard = {
     val codes = prior.fold(new LongLongMap(math.max(8, rows.length)))(
       _.codes.copy(extra = rows.length))
+    val arena = CodeArena.of(codes.keysIterator.toArray, codes.keysIterator.map(codes(_)).toArray)
     rows.foreach { case (id, c) =>
       require(!codes.contains(id),
         s"routed-codes ingest: id $id already present in cell $cell — " +
           "re-inserting a vertex would corrupt its graph")
       codes.put(id, c)
     }
-    val store = new CellCodeStore(codes)
-    val graph = prior.fold(new InMemoryGraph)(p => InMemoryGraph.fromSnapshot(p.snapshot))
-    val searcher = new HnswSearcher(params)
-    rows.foreach { case (id, _) =>
-      searcher.insert(store, graph, id, searcher.selectLayerByHash(id, seed))
-    }
-    CodeCellShard(cell, codes, graph.snapshot)
+    CodeCellShard(cell, codes, OrdinalGraph.grow(params, seed, arena, prior.map(_.snapshot),
+      rows.iterator.map { case (id, c) => (id, CodeQuery.hamming(c)) }))
   }
 
   /** Per-cell row budget (see [[HnswRouted.DefaultMaxCellRows]]): codes
@@ -648,46 +653,24 @@ object HnswRoutedCodes {
 
   /** One serve over the shared transport ([[RoutedServe]]) with the
     * shared predicated kernel ([[PredicatedCensus.serve]]) on the code
-    * representation: the cell's code map, a plain beam over the staged
-    * query code, and Hamming as the exact distance (INTEGER distances —
-    * ties are the common case, and the kernel's total (dist, id) queue
-    * order carries the oracle's tie-breaking). The probe set covering
-    * every cell is the exhaustive regime (forced exact scan). */
+    * representation: the cell's code map, and a beam and the Hamming
+    * distance from one [[OrdinalGraph]] view per shard serve (INTEGER
+    * distances — ties are the common case, and the kernel's total (dist,
+    * id) queue order carries the oracle's tie-breaking). The probe set
+    * covering every cell is the exhaustive regime (forced exact scan). */
   private def request(index: RoutedCodeIndex, k: Int, nProbe: Int, ef0: Int) = {
     val params = index.params
     val exhaustive = nProbe >= index.anchors.length
     new RoutedServe.Request(CodeTier, index, nProbe, "hamming",
       (m: CodeCellShard, probes: Iterator[(Long, Long)], hasAllow: Boolean,
        allow: Array[Long], dead: Array[Long]) => {
-        val searcher = new HnswSearcher(params)
-        val store = new CellCodeStore(m.codes)
+        val view = m.view(params)
         PredicatedCensus.serve(PredicatedCensus.Members.ofLongLongMap(m.codes),
-          probes, k, HnswRouted.cellEf(params, ef0, m.codes.size), exhaustive,
-          hasAllow, allow, dead)(
-          (qc, kk, ef) => {
-            store.stage(-1L, qc)
-            searcher.searchWithEf(store, m.snapshot, -1L, kk, ef)
-          },
-          qc => id => hamming(qc, m.codes(id)).toDouble)
+          probes.map { case (qid, qc) => (qid, CodeQuery.hamming(qc)) }, k,
+          HnswRouted.cellEf(params, ef0, m.codes.size), exhaustive,
+          hasAllow, allow, dead)(view.search, view.distances)
           .map { case (qid, id, d) => (qid, id, d.toInt) }
       })
-  }
-
-  /** Read-through code store with one stageable query slot (the
-    * HnswCodes.CodeStoreWithIds shape, shard-local). */
-  private final class CellCodeStore(val codes: LongLongMap)
-      extends graft.store.VectorStore {
-    type Raw = Long
-    private var qId = Long.MinValue
-    private var qCode = 0L
-    def stage(id: Long, code: Long): Unit = { qId = id; qCode = code }
-    private def codeOf(id: Long): Long = if (id == qId) qCode else codes(id)
-    override def prepareQuery(raw: Long): Long =
-      throw new UnsupportedOperationException("use stage(id, code)")
-    override def insert(q: Long): Long = q
-    override def evalDistance(q: Long, v: Long): Double =
-      java.lang.Long.bitCount(codeOf(q) ^ codeOf(v)).toDouble
-    override def isMatch(d: Double): Boolean = d <= 0.0
   }
 
   /** Nest-safe process-wide memo of the catalog's lifecycle handles. */

@@ -9,7 +9,7 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.functions.PqKernels
 import graft.operators.Pq
-import graft.store.{AdcVectorStore, GraphSnapshot, InMemoryGraph}
+import graft.store.{CodeArena, CodeQuery, GraphSnapshot}
 
 /** Routed + PQ compose — per-cell ADC codes on the routed serving tier:
   * the beyond-memory shape at the SCALE tier. [[HnswRouted]] holds full
@@ -73,7 +73,13 @@ object HnswRoutedPq {
       codes: LongLongMap,
       snapshot: GraphSnapshot,
       fingerprint: Long
-  ) extends Serializable
+  ) extends Serializable {
+    @transient private lazy val frozen = new FrozenGraph(snapshot, codes.keysIterator)(
+      (_, ids) => CodeArena.of(ids, ids.map(codes(_))))
+
+    /** A fresh view, for one thread (see [[HnswCodes.CodeModel]]). */
+    def view(params: HnswParams): OrdinalGraph[CodeQuery] = frozen.view(params)
+  }
 
   /** splitmix64 finalizer (the repo's standard mixer). */
   @inline private def mix64(z0: Long): Long = {
@@ -226,7 +232,7 @@ object HnswRoutedPq {
     *  3. ONE shuffle of (id, vec) to cells, then per cell the SOLO
     *     ingest kernel builds the graph in ADC space (the new point's
     *     raw float serves its own insertion beam, then drops to code
-    *     precision — [[AdcVectorStore]]'s quantize-on-insert), codes
+    *     precision — [[CodeQuery.quantized]]'s quantize-on-insert), codes
     *     encode, and a TRUE content fingerprint digests the rows.
     *
     * What a task retains per cell is graph + 8 B/row codes; the cell's
@@ -422,30 +428,28 @@ object HnswRoutedPq {
       hasAllow, allow, dead)
     @inline def eligible(id: Long): Boolean = cen.eligible(id)
     val cellN = cen.cellN
-    val searcher = new HnswSearcher(params)
-    val store = new AdcVectorStore(cb, m.codes(_))
+    // the beam's view, built on the first query that takes the beam
+    lazy val view = m.view(params)
     val ef = HnswRouted.cellEf(params, ef0, cellN)
     val c = math.max(1, candidates)
     // exact ADC scan: k-bounded queue selection over the eligible
     // ids (the routed exactScan, with the LUT kernel per query)
-    def adcScan(qid: Long, qvec: Array[Float]): Iterator[(Long, Long, Double)] = {
-      val lut = PqKernels.lutFor(qvec, cb)
+    def adcScan(qid: Long, q: CodeQuery): Iterator[(Long, Long, Double)] =
       PredicatedCensus.exactScanTopK(cen.eligibleIds, c,
-          id => PqKernels.adcLut(lut, m.codes(id)))
+          id => PqKernels.adcLut(q.lut, m.codes(id)))
         .iterator.map(nb => (qid, nb.dst, nb.dist))
-    }
     if (cen.eligibleCount == 0) Iterator.empty
     else probes.flatMap { case (qid, qvec) =>
+      val q = CodeQuery.adc(qvec, cb)
       if (exhaustive || cen.cutoverToExact(c))
-        adcScan(qid, qvec)
+        adcScan(qid, q)
       else {
-        val q = store.prepareQueryWithId(-1L, qvec)
         val beam = math.max(c, ef)
-        val w = searcher.searchWithEf(store, m.snapshot, q, beam, beam)
+        val w = view.search(q, beam, beam)
         val hits = w.iterator.filter(nb => eligible(nb.dst)).take(c).toList
         if (hits.length >= math.min(c, cen.eligibleCount))
           hits.iterator.map(nb => (qid, nb.dst, nb.dist))
-        else adcScan(qid, qvec)
+        else adcScan(qid, q)
       }
     }
   }
@@ -473,7 +477,7 @@ object HnswRoutedPq {
   // SOLO lifecycle — the attached tier without its float source.
   // [[attach]] restores graph + codes with no float index anywhere; the
   // lifecycle must not then require one. ingest quantizes-on-insert in
-  // ADC space (the [[AdcVectorStore]] discipline: the new point's raw
+  // ADC space ([[CodeQuery.quantized]]: the new point's raw
   // float serves its own insertion beam, then drops to code precision
   // like every other member); compactSolo folds tombstones by
   // rebuilding ONLY touched cells from the raw-vector table (the
@@ -494,10 +498,10 @@ object HnswRoutedPq {
     * attached tier's grow path. Routing, guards and the cogroup merge
     * mirror [[HnswRouted.ingest]] verbatim (global duplicate-id guard,
     * tombstone fail-fast, untouched cells pass by reference); the
-    * per-cell insert runs the unchanged HNSW kernel over
-    * [[AdcVectorStore]] — the new point's raw float serves its own
-    * insertion beam (asymmetric ADC against member codes), then
-    * [[AdcVectorStore.insert]] QUANTIZES it: from that moment the point
+    * per-cell insert runs the ordinal engine over the cell's
+    * [[CodeArena]] — the new point's raw float serves its own
+    * insertion beam (asymmetric ADC against member codes), then the
+    * insert stores its code ([[CodeQuery.quantized]]): from that moment the point
     * is searchable at code precision exactly like every restored
     * member, in-session or after the next save/attach. The exact
     * re-rank join keeps end-to-end exactness wherever the raw-vector
@@ -522,30 +526,30 @@ object HnswRoutedPq {
       if (seed == Long.MinValue) index.buildSeed else seed, ingested = true))
 
   /** The solo cell kernel — [[buildSolo]], [[ingest]] and the
-    * `floatExact = false` compaction rebuild all grow a cell here: each
-    * id-sorted row's RAW float serves its own insertion beam against
-    * member codes (asymmetric ADC), then [[AdcVectorStore.insert]]
-    * QUANTIZES it — from that moment the point serves at code precision
-    * exactly like every restored member; `prior`'s graph and codes
-    * absorb the rows copy-on-merge (a cached shard is never mutated).
+    * `floatExact = false` compaction rebuild all grow a cell here
+    * ([[OrdinalGraph.grow]]): each id-sorted row's RAW float serves its
+    * own insertion beam against member codes (asymmetric ADC), then the
+    * insert QUANTIZES it ([[CodeQuery.quantized]]) — from that moment the
+    * point serves at code precision exactly like every restored member;
+    * `prior`'s graph and codes absorb the rows copy-on-merge (a cached
+    * shard is never mutated).
     * The fingerprint is the TRUE content digest of a fresh cell's rows;
     * `ingested` folds the new ids into the prior digest instead
     * ([[ingestedFp]]; 0 for a cell that had no shard). */
-  private def growSolo(cbB: Broadcast[Array[Array[Array[Float]]]], params: HnswParams,
+  private[hnsw] def growSolo(cbB: Broadcast[Array[Array[Array[Float]]]], params: HnswParams,
                        seed: Long, ingested: Boolean)(cell: Int, prior: Option[PqCellShard],
                        rows: Array[(Long, Array[Float])]): PqCellShard = {
     val cb = cbB.value
     val codes = prior.fold(new LongLongMap(rows.length))(_.codes.copy(extra = rows.length))
-    val graph = prior.fold(new InMemoryGraph)(p => InMemoryGraph.fromSnapshot(p.snapshot))
-    val store = new AdcVectorStore(cb, base = codes(_))
-    val searcher = new HnswSearcher(params)
-    rows.foreach { case (id, v) =>
+    val arena = CodeArena.of(codes.keysIterator.toArray, codes.keysIterator.map(codes(_)).toArray)
+    val queries = rows.map { case (id, v) =>
       require(!codes.contains(id), s"routed-pq ingest: id $id already present in cell $cell")
-      store.prepareQueryWithId(id, v)
-      searcher.insert(store, graph, id, searcher.selectLayerByHash(id, seed))
-      codes.put(id, PqKernels.encodeArray(v, cb))
+      val q = CodeQuery.quantized(v, cb)
+      codes.put(id, q.code)
+      (id, q)
     }
-    PqCellShard(cell, codes, graph.snapshot,
+    PqCellShard(cell, codes, OrdinalGraph.grow(params, seed, arena, prior.map(_.snapshot),
+      queries.iterator),
       if (ingested) ingestedFp(prior.fold(0L)(_.fingerprint), rows.iterator.map(_._1))
       else contentFingerprintRows(rows.iterator))
   }

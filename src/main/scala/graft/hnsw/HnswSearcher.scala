@@ -2,34 +2,21 @@ package graft.hnsw
 
 import graft.store.{GraphStore, VectorStore}
 
-import scala.collection.mutable
-
 /** The HNSW engine (arXiv:1603.09320), operating purely through the
   * pluggable [[graft.store.VectorStore]] / [[graft.store.GraphStore]]
   * contracts — the Spark-native counterpart of the reference's
   * HawkSearcher (src/hawk_searcher.rs:132-429).
   *
-  * This is the executor-local kernel: [[graft.hnsw.HnswDistributed]] runs
-  * it per query partition against a broadcast [[graft.store.GraphSnapshot]]
-  * (search), and per micro-batch during the distributed build. All loops
-  * here touch only in-memory state — no Spark types.
+  * This is the engine's id-keyed reference implementation: every build
+  * and serve site runs the same algorithm on dense ordinals
+  * ([[OrdinalGraph]]), and the specs hold those graphs and result lists
+  * to this one, row for row. All loops here touch only in-memory state —
+  * no Spark types.
   */
 final class HnswSearcher(val params: HnswParams) extends Serializable {
 
-  /** S3, deterministic for reproducible distributed builds: the insertion
-    * layer ~ Geometric(1 - p) (number of successes before the first
-    * failure, reference hawk_searcher.rs:178-183), drawn from a 64-bit mix
-    * of (id, seed) — the Spark analog of the reference's seeded AesRng
-    * (hawk_searcher.rs:445). */
-  def selectLayerByHash(id: Long, seed: Long): Int =
-    layerFromUniform(HnswSearcher.uniformFromHash(id, seed))
-
-  /** Inverse-CDF of the geometric distribution: floor(ln(u)/ln(p)). */
-  private def layerFromUniform(u: Double): Int = {
-    val p = params.layerProbability
-    if (u <= 0.0) 0
-    else math.floor(math.log(u) / math.log(p)).toInt.max(0)
-  }
+  /** [[HnswParams.selectLayerByHash]]. */
+  def selectLayerByHash(id: Long, seed: Long): Int = params.selectLayerByHash(id, seed)
 
   /** S4: seed the working set with the entry point and its distance;
     * returns (W, layer count); empty index -> (empty, 0)

@@ -1,35 +1,37 @@
 package graft.hnsw
 
-import graft.store.{ArenaVectorStore, EntryPoint, GraphSnapshot, LayerCsr}
+import graft.store.{ArenaVectorStore, EntryPoint, GraphSnapshot, LayerCsr, OrdinalStore}
 
-/** The HNSW graph of every float index on the ordinals of its
-  * [[ArenaVectorStore]] — the one engine that builds and serves it. A
-  * live graph (a streaming index, a float build) runs the engine's
-  * two-phase insert ([[HnswSearcher.searchToInsert]],
-  * [[HnswSearcher.isMatch]], [[HnswSearcher.insertFromSearchResults]]); a
-  * read-only view over [[OrdinalRows]] serves k-NN ([[search]],
-  * [[exactTopK]]) for a frozen model, a shard, a routed cell or a
-  * streaming image, with no id lookup per edge.
+/** The HNSW graph of every index on the ordinals of its
+  * [[OrdinalStore]] — the one engine that builds and serves float vectors
+  * ([[ArenaVectorStore]]) and u64 codes under Hamming distance or PQ ADC
+  * ([[graft.store.CodeArena]]). A live graph (a streaming index, a build,
+  * a routed cell's grow) runs the engine's two-phase insert
+  * ([[HnswSearcher.searchToInsert]], [[HnswSearcher.isMatch]],
+  * [[HnswSearcher.insertFromSearchResults]]); a read-only view over
+  * [[OrdinalRows]] serves k-NN ([[search]], [[exactTopK]]) for a frozen
+  * model, a shard, a routed cell or a streaming image, with no id lookup
+  * per edge.
   *
   *  - per layer and ordinal, an `Int` neighbour row and its `Double`
   *    distances (null: no row at that layer; a view has no distances);
   *  - the entry point as an ordinal;
   *  - visited marks as an epoch stamp per ordinal;
-  *  - distances measured four stored vectors per pass
-  *    ([[ArenaVectorStore.measure]]).
+  *  - a query prepared once per search, then measured against each
+  *    expansion's unvisited neighbours in one [[OrdinalStore.measure]].
   *
-  * Arena ordinals need not follow id order, so every row and beam here
+  * Store ordinals need not follow id order, so every row and beam here
   * breaks distance ties by the ordinal's id, as [[FurthestQueue]] and
   * [[NearestQueue]] do: each row, entry point, beam and result list is
   * the one [[HnswSearcher]] builds or returns over an id-keyed store and
   * an [[graft.store.InMemoryGraph]] fed the same inserts. Ids cross into
   * ordinals only at the edges: [[restore]], [[snapshot]], the rows a
-  * mirror reads ([[foreachTouched]]), [[OrdinalGraph.frozen]] and the
+  * mirror reads ([[foreachTouched]]), [[OrdinalGraph.frozenRows]] and the
   * results of a search.
   *
   * One graph or view serves one thread at a time.
   */
-final class OrdinalGraph(params: HnswParams, arena: ArenaVectorStore) extends Serializable {
+final class OrdinalGraph[Q](params: HnswParams, store: OrdinalStore[Q]) extends Serializable {
   // per layer, indexed by ordinal: neighbour ordinals, their distances,
   // the row's length
   private[hnsw] var rows = Array.empty[Array[Array[Int]]]
@@ -54,11 +56,11 @@ final class OrdinalGraph(params: HnswParams, arena: ArenaVectorStore) extends Se
   private[this] var nTouched = 0
   private[this] var entryTouched = false
 
-  /** A read-only view of `copy` over `arena` with marks, a frontier and a
+  /** A read-only view of `copy` over `store` with marks, a frontier and a
     * beam of its own: it serves [[searchToInsert]], [[search]] and
     * [[exactTopK]]; without distances it cannot connect. */
-  def this(params: HnswParams, arena: ArenaVectorStore, copy: OrdinalRows) = {
-    this(params, arena)
+  def this(params: HnswParams, store: OrdinalStore[Q], copy: OrdinalRows) = {
+    this(params, store)
     rows = copy.rows; degrees = copy.degrees; entry = copy.entry; entryLayer = copy.entryLayer
   }
 
@@ -108,7 +110,7 @@ final class OrdinalGraph(params: HnswParams, arena: ArenaVectorStore) extends Se
 
   /** The entry point by id. */
   def entryPoint: Option[EntryPoint] =
-    if (entry < 0) None else Some(EntryPoint(arena.ids(entry), entryLayer))
+    if (entry < 0) None else Some(EntryPoint(store.ids(entry), entryLayer))
 
   def clearTouched(): Unit = {
     if (nTouched > 0) touchedKeys = new LongSet()
@@ -148,7 +150,7 @@ final class OrdinalGraph(params: HnswParams, arena: ArenaVectorStore) extends Se
     var row = rows(lc)(n)
     var dist = rowDists(lc)(n)
     val cnt = degrees(lc)(n)
-    val ids = arena.ids
+    val ids = store.ids
     val qid = ids(q)
     var left = 0
     var right = cnt
@@ -179,17 +181,16 @@ final class OrdinalGraph(params: HnswParams, arena: ArenaVectorStore) extends Se
   }
 
   /** [[HnswSearcher.searchLayer]] on ordinals: an expansion marks its
-    * unvisited neighbours, measures them four per pass, then admits them
-    * in row order. */
-  private[this] def searchLayer(q: Array[Float], qNormSq: Double, w: OrdinalQueue,
-                                ef: Int, lc: Int): Unit = {
-    if (marks.length < arena.size)
-      marks = java.util.Arrays.copyOf(marks, math.max(arena.size, marks.length + marks.length / 2))
+    * unvisited neighbours, measures them in one pass, then admits them in
+    * row order. */
+  private[this] def searchLayer(p: store.Prepared, w: OrdinalQueue, ef: Int, lc: Int): Unit = {
+    if (marks.length < store.size)
+      marks = java.util.Arrays.copyOf(marks, math.max(store.size, marks.length + marks.length / 2))
     if (epoch == Int.MaxValue) { java.util.Arrays.fill(marks, 0); epoch = 0 }
     epoch += 1
     var vi = 0
     while (vi < w.size) { marks(w.ordAt(vi)) = epoch; vi += 1 }
-    val ids = arena.ids
+    val ids = store.ids
     val c = frontier
     c.loadFrom(w)
     var fq = w.furthestDist
@@ -213,7 +214,7 @@ final class OrdinalGraph(params: HnswParams, arena: ArenaVectorStore) extends Se
           if (marks(e) != epoch) { marks(e) = epoch; fresh(m) = e; m += 1 }
           j += 1
         }
-        arena.measure(q, qNormSq, fresh, m, freshDist)
+        store.measure(p, fresh, m, freshDist)
         var i = 0
         while (i < m) {
           val eq = freshDist(i)
@@ -236,16 +237,16 @@ final class OrdinalGraph(params: HnswParams, arena: ArenaVectorStore) extends Se
   /** [[HnswSearcher.searchToInsert]]: the beam of query `q` at every layer
     * at or below `insertionLayer` (index = layer; empty above the graph's
     * top). */
-  def searchToInsert(q: Array[Float], insertionLayer: Int): Array[OrdinalQueue] = {
-    val qNormSq = ArenaVectorStore.squaredNorm(q)
+  def searchToInsert(q: Q, insertionLayer: Int): Array[OrdinalQueue] = {
+    val p = store.prepare(q)
     val found = new Array[OrdinalQueue](insertionLayer + 1)
     val w = new OrdinalQueue
-    if (entry >= 0) w.insert(entry, arena.dist(q, qNormSq, entry), arena.ids)
+    if (entry >= 0) w.insert(entry, store.dist(p, entry), store.ids)
     var lc = if (entry >= 0) entryLayer else -1
     while (lc >= 0) {
       val ef = if (lc > insertionLayer) params.getEfConstrSearch(lc)
                else params.getEfConstrInsert(lc)
-      searchLayer(q, qNormSq, w, ef, lc)
+      searchLayer(p, w, ef, lc)
       if (lc <= insertionLayer) found(lc) = if (lc == 0) w else w.copy()
       lc -= 1
     }
@@ -257,16 +258,16 @@ final class OrdinalGraph(params: HnswParams, arena: ArenaVectorStore) extends Se
   /** [[HnswSearcher.searchWithEf]] on ordinals: the k nearest ids of `q`
     * by `(dist, id)`, the layer-0 beam floored at `ef0` (0: plain
     * search). */
-  def search(q: Array[Float], k: Int, ef0: Int): FurthestQueue = {
-    val qNormSq = ArenaVectorStore.squaredNorm(q)
-    val ids = arena.ids
+  def search(q: Q, k: Int, ef0: Int): FurthestQueue = {
+    val p = store.prepare(q)
+    val ids = store.ids
     val w = beam
     w.clear()
     if (entry >= 0) {
-      w.insert(entry, arena.dist(q, qNormSq, entry), ids)
+      w.insert(entry, store.dist(p, entry), ids)
       var lc = entryLayer
-      while (lc >= 1) { searchLayer(q, qNormSq, w, params.getEfSearch(lc), lc); lc -= 1 }
-      searchLayer(q, qNormSq, w, math.max(params.getEfSearch(0), ef0), 0)
+      while (lc >= 1) { searchLayer(p, w, params.getEfSearch(lc), lc); lc -= 1 }
+      searchLayer(p, w, math.max(params.getEfSearch(0), ef0), 0)
     }
     val out = FurthestQueue.empty
     var i = 0
@@ -274,16 +275,16 @@ final class OrdinalGraph(params: HnswParams, arena: ArenaVectorStore) extends Se
     out
   }
 
-  /** Exact top-k of `q` by `(dist, id)` among the stored vectors whose id
+  /** Exact top-k of `q` by `(dist, id)` among the stored points whose id
     * passes `keep`. */
-  def exactTopK(q: Array[Float], k: Int, keep: Long => Boolean): FurthestQueue = {
-    val qNormSq = ArenaVectorStore.squaredNorm(q)
-    val ids = arena.ids
+  def exactTopK(q: Q, k: Int, keep: Long => Boolean): FurthestQueue = {
+    val p = store.prepare(q)
+    val ids = store.ids
     val out = FurthestQueue.empty
     var o = 0
-    while (o < arena.size) {
+    while (o < store.size) {
       if (keep(ids(o))) {
-        out.insert(ids(o), arena.dist(q, qNormSq, o))
+        out.insert(ids(o), store.dist(p, o))
         if (out.size > k) out.dropFurthest()
       }
       o += 1
@@ -291,25 +292,25 @@ final class OrdinalGraph(params: HnswParams, arena: ArenaVectorStore) extends Se
     out
   }
 
-  /** `q`'s distance to the stored vector of an id, by its ordinal. */
-  def distances(q: Array[Float]): Long => Double = {
-    val qNormSq = ArenaVectorStore.squaredNorm(q)
-    id => arena.dist(q, qNormSq, arena.ordinalOf(id))
+  /** `q`'s distance to the stored point of an id, by its ordinal. */
+  def distances(q: Q): Long => Double = {
+    val p = store.prepare(q)
+    id => store.dist(p, store.ordinalOf(id))
   }
 
-  /** [[HnswSearcher.insert]]: store `v` under `id` and connect it at every
-    * layer up to `insertionLayer`. Returns its ordinal. */
-  def insert(id: Long, v: Array[Float], insertionLayer: Int): Int = {
-    val found = searchToInsert(v, insertionLayer)
-    val o = arena.insert(id, v)
+  /** [[HnswSearcher.insert]]: store `q`'s point under `id` and connect it
+    * at every layer up to `insertionLayer`. Returns its ordinal. */
+  def insert(id: Long, q: Q, insertionLayer: Int): Int = {
+    val found = searchToInsert(q, insertionLayer)
+    val o = store.insert(id, q)
     connect(o, found)
     o
   }
 
   /** [[HnswSearcher.isMatch]]: the nearest bottom-layer hit is within the
-    * arena's match threshold. */
+    * store's match threshold. */
   def isMatch(found: Array[OrdinalQueue]): Boolean =
-    found(0).nonEmpty && arena.isMatch(found(0).distAt(0))
+    found(0).nonEmpty && store.isMatch(found(0).distAt(0))
 
   /** [[HnswSearcher.insertFromSearchResults]] for stored ordinal `q`: it
     * becomes the entry point when it tops the graph, then connects layer
@@ -332,19 +333,19 @@ final class OrdinalGraph(params: HnswParams, arena: ArenaVectorStore) extends Se
   def linksOf(o: Int, lc: Int): FurthestQueue = {
     val q = FurthestQueue.empty
     if (lc < rows.length && o < rows(lc).length && rows(lc)(o) != null) {
-      val ids = arena.ids
+      val ids = store.ids
       var k = 0
       while (k < degrees(lc)(o)) { q.insert(ids(rows(lc)(o)(k)), rowDists(lc)(o)(k)); k += 1 }
     }
     q
   }
 
-  /** Load an id-keyed snapshot whose every vertex is already in the arena;
+  /** Load an id-keyed snapshot whose every vertex is already stored;
     * the links may run above the entry point's layer. Writes nothing to
     * the record of touched rows. */
   def restore(snap: GraphSnapshot): Unit = {
     def ordinal(id: Long): Int = {
-      val o = arena.ordinalOf(id)
+      val o = store.ordinalOf(id)
       if (o < 0) throw new IllegalStateException(s"graph vertex $id has no vector")
       o
     }
@@ -367,7 +368,7 @@ final class OrdinalGraph(params: HnswParams, arena: ArenaVectorStore) extends Se
     * length, the lengths and the entry point. Without distances it
     * serializes at about 4 bytes per edge. */
   def rowCopy: OrdinalRows = {
-    val n = arena.size
+    val n = store.size
     OrdinalRows(Array.tabulate(rows.length) { lc =>
       Array.tabulate(math.min(n, rows(lc).length)) { o =>
         val row = rows(lc)(o)
@@ -379,8 +380,8 @@ final class OrdinalGraph(params: HnswParams, arena: ArenaVectorStore) extends Se
   /** The id-keyed image of the graph: rows in id order, `ids(o)` for
     * every ordinal. */
   def snapshot: GraphSnapshot = {
-    val order = arena.idOrder
-    val ids = arena.ids
+    val order = store.idOrder
+    val ids = store.ids
     GraphSnapshot(entryPoint,
       Array.tabulate(rows.length) { lc =>
         val layer = rows(lc)
@@ -411,13 +412,10 @@ final case class OrdinalRows(rows: Array[Array[Array[Int]]], degrees: Array[Arra
                              entry: Int, entryLayer: Int)
 
 object OrdinalGraph {
-  /** A frozen graph's serving form: `vectors` in an arena in id order and
-    * `snap`'s rows on its ordinals, without distances, for a read-only
-    * view. A graph vertex without a vector is rejected. */
-  def frozen(metricName: String, vectors: LongVecMap,
-             snap: GraphSnapshot): (ArenaVectorStore, OrdinalRows) = {
-    val ids = vectors.keysIterator.toArray
-    java.util.Arrays.sort(ids)
+  /** `snap`'s rows on the ordinals of the ascending `ids`, without
+    * distances: a frozen graph's serving form, for a read-only view. A
+    * graph vertex not in `ids` is rejected. */
+  def frozenRows(ids: Array[Long], snap: GraphSnapshot): OrdinalRows = {
     val n = ids.length
     def ordinal(id: Long): Int = {
       val o = java.util.Arrays.binarySearch(ids, id)
@@ -434,38 +432,52 @@ object OrdinalGraph {
       }
       layer
     }
-    (ArenaVectorStore.of(metricName, ids, ids.map(vectors)),
-      OrdinalRows(rows, rows.map(_.map(r => if (r == null) 0 else r.length)),
-        snap.entryPoint.fold(-1)(ep => ordinal(ep.point)), snap.entryPoint.fold(-1)(_.layer)))
+    OrdinalRows(rows, rows.map(_.map(r => if (r == null) 0 else r.length)),
+      snap.entryPoint.fold(-1)(ep => ordinal(ep.point)), snap.entryPoint.fold(-1)(_.layer))
+  }
+
+  /** The grow path of every sequential build and routed cell kernel: load
+    * `prior`, whose vertices `store` holds, then insert `rows` in order at
+    * their hashed layers. Returns the grown graph's snapshot. */
+  def grow[Q](params: HnswParams, seed: Long, store: OrdinalStore[Q],
+              prior: Option[GraphSnapshot], rows: Iterator[(Long, Q)]): GraphSnapshot = {
+    val graph = new OrdinalGraph(params, store)
+    prior.foreach(graph.restore)
+    rows.foreach { case (id, q) => graph.insert(id, q, params.selectLayerByHash(id, seed)) }
+    graph.snapshot
   }
 }
 
-/** A frozen graph served through [[OrdinalGraph]] views: its
-  * [[OrdinalGraph.frozen]] arena and rows are built on the first [[view]]
-  * and shared by every later one. Its owner ([[HnswModel]], a shard, a
-  * routed cell) holds it `@transient`, so they are built once per JVM and
-  * never serialized. */
-private[hnsw] final class FrozenGraph(vectors: LongVecMap, snapshot: GraphSnapshot) {
-  private[this] var metricName: String = null
-  private[this] var built: (ArenaVectorStore, OrdinalRows) = null
+/** A frozen graph served through [[OrdinalGraph]] views: its store, built
+  * by `store(key, ids)` from its member `ids` in ascending order, and its
+  * [[OrdinalGraph.frozenRows]] are built on the first [[view]] under a key
+  * (a float metric) and shared by every later one. Its owner (a model, a
+  * shard, a routed cell) holds it `@transient`, so they are built once per
+  * JVM and never serialized. */
+private[hnsw] final class FrozenGraph[Q](snapshot: GraphSnapshot, ids: => Iterator[Long])(
+    store: (String, Array[Long]) => OrdinalStore[Q]) {
+  private[this] var builtKey: String = null
+  private[this] var built: (OrdinalStore[Q], OrdinalRows) = null
 
-  /** A fresh view, for one thread, of the graph under `metric`. */
-  def view(params: HnswParams, metric: String): OrdinalGraph = {
-    val (arena, rows) = synchronized {
-      if (metricName != metric) {
-        built = OrdinalGraph.frozen(metric, vectors, snapshot)
-        metricName = metric
+  /** A fresh view, for one thread, of the graph under `key`. */
+  def view(params: HnswParams, key: String = ""): OrdinalGraph[Q] = {
+    val (s, rows) = synchronized {
+      if (builtKey != key) {
+        val sorted = ids.toArray
+        java.util.Arrays.sort(sorted)
+        built = (store(key, sorted), OrdinalGraph.frozenRows(sorted, snapshot))
+        builtKey = key
       }
       built
     }
-    new OrdinalGraph(params, arena, rows)
+    new OrdinalGraph(params, s, rows)
   }
 }
 
 /** What [[HnswDistributed.searchBroadcast]] serves: a broadcast value
   * that gives each task partition a fresh [[OrdinalGraph]] view. */
 trait KernelSource extends Serializable {
-  def kernel(): OrdinalGraph
+  def kernel(): OrdinalGraph[Array[Float]]
 }
 
 /** What a streaming index broadcasts after each mutation in place of its
@@ -475,7 +487,7 @@ trait KernelSource extends Serializable {
 final case class ServingImage(params: HnswParams, arena: ArenaVectorStore,
                               rows: OrdinalRows) extends KernelSource {
   def size: Int = arena.size
-  def kernel(): OrdinalGraph = new OrdinalGraph(params, arena, rows)
+  def kernel(): OrdinalGraph[Array[Float]] = new OrdinalGraph(params, arena, rows)
 }
 
 /** `(dist, id)`-ascending list of arena ordinals — [[FurthestQueue]] on

@@ -680,7 +680,7 @@ object Hnsw {
     // attached tier's grow path): 90% of the corpus builds + derives,
     // the remaining 10% ingests in ADC space — the new point's raw
     // float serves its own insertion beam against member CODES, then
-    // quantizes (AdcVectorStore's contract). Exhaustive serve + exact
+    // quantizes (CodeQuery.quantized). Exhaustive serve + exact
     // re-rank over the union must match the exact-L2 oracle: the
     // re-rank table holds every row full-precision, so quantized
     // insertion costs candidate recall only, which the exhaustive

@@ -4,11 +4,14 @@ import graft.functions.PqKernels
 
 /** Asymmetric-distance vector store: persisted vectors exist only as
   * packed PQ codes (8 bytes each), queries stay full-precision and carry a
-  * per-query ADC lookup table. Plugging this store into the unchanged HNSW
-  * search kernel gives graph traversal in compressed space — the
+  * per-query ADC lookup table — the id-keyed reference for the
   * DiskANN/FAISS "graph + codes in memory, raw vectors only for re-rank"
   * serving tier (reference analog: the store swap the trait split of
-  * src/traits.rs:18-95 exists to allow).
+  * src/traits.rs:18-95 exists to allow). The PQ tiers build and serve on
+  * the ordinal engine over a [[CodeArena]] whose ADC queries measure
+  * exactly these distances ([[CodeQuery.adc]], [[CodeQuery.quantized]]);
+  * the specs run [[graft.hnsw.HnswSearcher]] over this store to check
+  * them.
   *
   * Memory per indexed vector: 8 B code vs dim x 4 B raw (32x at dim=64,
   * 384x at dim=3072) — the difference between one executor holding 10^8
@@ -23,13 +26,7 @@ import graft.functions.PqKernels
   */
 final class AdcVectorStore(
     codebook: Array[Array[Array[Float]]],
-    base: Long => Long, // any code source: scala Map, primitive
-                        // LongLongMap via eta-expansion — KRYO NOTE:
-                        // serving state must never ride a
-                        // scala.collection.mutable.LongMap (its
-                        // defaultEntry closure field corrupts under the
-                        // Kryo round-trip a DISK_ONLY shard pays; the
-                        // 1e7 pq_solo_build rung crashed the JVM on it)
+    base: Long => Long, // any code source: a scala Map, a LongLongMap
     matchThreshold: Double = 1e-12
 ) extends VectorStore {
   type Raw = Array[Float]

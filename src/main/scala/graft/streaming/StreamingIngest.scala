@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.hnsw.{HnswModel, HnswSearcher, OrdinalGraph, ServingImage}
+import graft.hnsw.{HnswModel, OrdinalGraph, ServingImage}
 import graft.hnsw.HnswDistributed.BuildConfig
 import graft.store.ArenaVectorStore
 
@@ -41,7 +41,6 @@ object StreamingIngest {
   final class IncrementalIndex(cfg: BuildConfig,
                                mirror: Option[graft.store.ParquetGraphStore] = None)
       extends Serializable {
-    private val searcher = new HnswSearcher(cfg.params)
     private val store = new ArenaVectorStore(cfg.metric, matchThreshold = 1e-9)
     private val graph = new OrdinalGraph(cfg.params, store)
     // touched rows are recorded only for a mirror to write out
@@ -88,7 +87,7 @@ object StreamingIngest {
       // insert would find the first at distance 0 and connect_bidir a
       // self-loop that permanently wastes a degree slot).
       val sorted = toInsert(rows)
-      sorted.foreach { case (id, v) => graph.insert(id, v, searcher.selectLayerByHash(id, cfg.seed)) }
+      sorted.foreach { case (id, v) => graph.insert(id, v, cfg.params.selectLayerByHash(id, cfg.seed)) }
       if (sorted.nonEmpty) bumpVersion()
       mirrorDelta(sorted.toSeq)
     }
@@ -103,7 +102,7 @@ object StreamingIngest {
       // the isMatch test — only the explicit guard for ids restored from
       // the mirror is needed
       toInsert(rows).foreach { case (id, v) =>
-        val found = graph.searchToInsert(v, searcher.selectLayerByHash(id, cfg.seed))
+        val found = graph.searchToInsert(v, cfg.params.selectLayerByHash(id, cfg.seed))
         if (graph.isMatch(found)) { skip += 1 }
         else {
           graph.connect(store.insert(id, v), found)

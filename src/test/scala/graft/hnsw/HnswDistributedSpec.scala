@@ -258,8 +258,7 @@ class HnswDistributedSpec extends SparkSpec {
     val layers = new Array[Int](n)
     val e = intercept[IllegalArgumentException] {
       HnswDistributed.batchedBuildLoop(spark, ids, layers, params, 128, 4096)(
-        (), (_: Int) => (), () => (), (_: Unit, _: Unit) => (_: Long, _: Int) => (),
-        (_: Long, _: Unit) => ())
+        null: BuildRows[Array[Float]])
     }
     assert(e.getMessage.contains("envelope"), e.getMessage)
     assert(e.getMessage.contains("buildSharded"), e.getMessage)

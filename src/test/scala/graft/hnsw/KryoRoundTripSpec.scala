@@ -6,7 +6,7 @@ import org.apache.spark.storage.StorageLevel
 import graft.SparkSpec
 import graft.hnsw.HnswDistributed.BuildConfig
 import graft.operators.ExactKnn
-import graft.store.{ArrayVectorStore, Metrics}
+import graft.store.{ArrayVectorStore, CodeQuery, Metrics}
 
 /** Forced serialization round-trips of every cached/broadcast shard
   * payload. The hazard class is real, not theoretical: scala's
@@ -156,7 +156,7 @@ class KryoRoundTripSpec extends SparkSpec {
       searcher.search(store, m.snapshot, q, 10).iterator
         .map(nb => (nb.dst, nb.dist)).toSeq
     }
-    def served(view: OrdinalGraph, qvec: Array[Float]): Seq[(Long, Double)] =
+    def served(view: OrdinalGraph[Array[Float]], qvec: Array[Float]): Seq[(Long, Double)] =
       view.search(qvec, 10, 0).iterator.map(nb => (nb.dst, nb.dist)).toSeq
     val queries = (0 until 10).map(qi => vecFromHash(qi + 70000L, 13L, 16))
     val (rtKernel, kernel) = (rt.kernel(), model.kernel())
@@ -170,7 +170,7 @@ class KryoRoundTripSpec extends SparkSpec {
     // first, and a round-tripped holder serves as the original
     val ser = new org.apache.spark.serializer.KryoSerializer(
       spark.sparkContext.getConf).newInstance()
-    def sameBytes(holder: AnyRef, view: () => OrdinalGraph): Unit = {
+    def sameBytes(holder: AnyRef, view: () => OrdinalGraph[Array[Float]]): Unit = {
       val before = ser.serialize(holder)
       assert(view().exactTopK(queries.head, rows.size, _ => true).size == rows.size)
       assert(ser.serialize(holder) == before)
@@ -191,6 +191,47 @@ class KryoRoundTripSpec extends SparkSpec {
       assert(served(cellRt.view(cfg), qvec) == served(cell.view(cfg), qvec))
       assert(served(cellRt.view(cfg), qvec) == knn(model, qvec))
     }
+  }
+
+  test("code and PQ models and shards serialize the same with or without a view, and round-trip") {
+    @inline def mix(z0: Long): Long = {
+      var z = z0 + 0x9E3779B97F4A7C15L
+      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+      z ^ (z >>> 31)
+    }
+    val ser = new org.apache.spark.serializer.KryoSerializer(
+      spark.sparkContext.getConf).newInstance()
+    def bits(q: FurthestQueue): Seq[(Long, Long)] =
+      q.iterator.map(nb => (nb.dst, java.lang.Double.doubleToRawLongBits(nb.dist))).toSeq
+    /** The holder's bytes do not change when its view is built, and its
+      * round-trip's view serves the original's rows. */
+    def check[H <: AnyRef: scala.reflect.ClassTag](holder: H, queries: Seq[CodeQuery])(
+        view: H => OrdinalGraph[CodeQuery]): Unit = {
+      val before = ser.serialize(holder)
+      val want = queries.map(q => bits(view(holder).search(q, 10, 0)))
+      assert(want.forall(_.nonEmpty))
+      assert(ser.serialize(holder) == before, s"${holder.getClass.getSimpleName} bytes changed")
+      val rt = kryoRoundTrip(holder)
+      assert(queries.map(q => bits(view(rt).search(q, 10, 0))) == want)
+    }
+    val params = cfg.params
+    val codesDf = (0L until 900L).map(i => (i, mix(i))).toDF("id", "code")
+    val hamming = (0 until 20).map(q => CodeQuery.hamming(mix(q + 50000L)))
+    check(HnswCodes.build(codesDf, params), hamming)(_.view())
+    val codeShard = HnswRoutedCodes.build(codesDf, params, nCells = 3, persist = false)
+      .shards.collect().map(_._2).maxBy(_.codes.size)
+    check(codeShard, hamming)(_.view(params))
+
+    val vecs = (0 until 900).map(i => (i.toLong, vecFromHash(i.toLong, 7L, 16))).toArray
+    val model = HnswDistributed.buildFromArray(spark, vecs, cfg.copy(metric = "l2"))
+    val pq = HnswPq.fromModelCached(model, "kryo-round-trip")
+    val adc = (0 until 20).map(q => CodeQuery.adc(vecFromHash(q + 50000L, 9L, 16), pq.codebook))
+    check(pq, adc)(_.view())
+    val pqShard = HnswRoutedPq.fromRouted(HnswRouted.build(vecs.toSeq.toDF("id", "vec"),
+      cfg.copy(metric = "l2"), nCells = 3, persist = false), persist = false)
+      .shards.collect().map(_._2).maxBy(_.codes.size)
+    check(pqShard, adc)(_.view(params))
   }
 
   test("the batched build's phase-1 state round-trips and searches identically") {
