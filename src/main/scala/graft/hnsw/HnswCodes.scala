@@ -21,12 +21,11 @@ object HnswCodes {
       params: HnswParams,
       snapshot: GraphSnapshot,
       codes: LongLongMap
-  ) extends Serializable {
-    @transient private lazy val frozen = new FrozenGraph(snapshot, codes.keysIterator)(
-      (_, ids) => CodeArena.of(ids, ids.map(codes(_))))
+  ) extends FrozenCodes {
+    protected def codeArena: CodeArena = CodeArena.of(codes)
 
     /** A fresh view, for one thread. */
-    def view(): OrdinalGraph[CodeQuery] = frozen.view(params)
+    def view(): OrdinalGraph[CodeQuery] = view(params)
   }
   private val pairEnc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
 
@@ -85,7 +84,7 @@ object HnswCodes {
   }
 
   /** A batched code build's rows: `codes(i)` under `ids(i)`. */
-  private final class BuildCodes(ids: Array[Long], codes: Array[Long])
+  private[hnsw] final class BuildCodes(val ids: Array[Long], codes: Array[Long])
       extends BuildRows[CodeQuery] {
     @transient lazy val store: CodeArena = CodeArena.of(ids, codes)
     def query(i: Int): CodeQuery = CodeQuery.hamming(codes(i))

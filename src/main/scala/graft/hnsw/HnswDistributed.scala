@@ -28,14 +28,11 @@ final case class HnswModel(
     // (the round-16 PQ-tier SIGSEGV — see LongVecMap's scaladoc); it is
     // also the no-boxed-lookup shape every distance eval wants
     vectors: LongVecMap
-) extends KernelSource {
+) extends KernelSource with FrozenVectors {
   def size: Int = vectors.size
 
-  @transient private lazy val frozen = new FrozenGraph(snapshot, vectors.keysIterator)(
-    (m, ids) => ArenaVectorStore.of(m, ids, ids.map(vectors(_))))
-
   /** A fresh per-partition view over this model's arena and rows. */
-  override def kernel(): OrdinalGraph[Array[Float]] = frozen.view(params, metricName)
+  override def kernel(): OrdinalGraph[Array[Float]] = frozenView(params, metricName)
 }
 
 /** What a batched build broadcasts once: row `i`'s query, and a [[store]]
@@ -47,10 +44,9 @@ private[hnsw] abstract class BuildRows[Q] extends Serializable {
 
 /** A batched float build's rows, per-vector arrays as a [[LongVecMap]]
   * has, so no single array nears Kryo's 2 GiB limit. */
-private[hnsw] final class BuildVectors(metricName: String, val ids: Array[Long],
+private[hnsw] final class BuildVectors(val metricName: String, val ids: Array[Long],
                                        val vecs: Array[Array[Float]]) extends BuildRows[Array[Float]] {
-  @transient lazy val arena: ArenaVectorStore = ArenaVectorStore.of(metricName, ids, vecs)
-  def store: ArenaVectorStore = arena
+  @transient lazy val store: ArenaVectorStore = ArenaVectorStore.of(metricName, ids, vecs)
   def query(i: Int): Array[Float] = vecs(i)
 }
 
@@ -351,13 +347,10 @@ object HnswDistributed {
       // corrupted scala LongMap state (see LongVecMap's scaladoc)
       vectors: LongVecMap,
       snapshot: GraphSnapshot
-  ) extends Serializable {
-    @transient private lazy val frozen = new FrozenGraph(snapshot, vectors.keysIterator)(
-      (m, ids) => ArenaVectorStore.of(m, ids, ids.map(vectors(_))))
-
+  ) extends FrozenVectors {
     /** A fresh view over the shard's arena and rows (see
       * [[HnswModel.kernel]]). */
-    def view(cfg: BuildConfig): OrdinalGraph[Array[Float]] = frozen.view(cfg.params, cfg.metric)
+    def view(cfg: BuildConfig): OrdinalGraph[Array[Float]] = frozenView(cfg.params, cfg.metric)
   }
 
   /** A prebuilt sharded index: build once, serve many query batches. The

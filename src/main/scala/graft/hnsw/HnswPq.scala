@@ -37,14 +37,15 @@ object HnswPq {
       snapshot: GraphSnapshot,
       codebook: Array[Array[Array[Float]]],
       codes: Map[Long, Long]
-  ) extends Serializable {
+  ) extends FrozenCodes {
     def size: Int = codes.size
-
-    @transient private lazy val frozen = new FrozenGraph(snapshot, codes.keysIterator)(
-      (_, ids) => CodeArena.of(ids, ids.map(codes)))
+    protected def codeArena: CodeArena = {
+      val ids = codes.keys.toArray
+      CodeArena.of(ids, ids.map(codes))
+    }
 
     /** A fresh view, for one thread. */
-    def view(): OrdinalGraph[CodeQuery] = frozen.view(params)
+    def view(): OrdinalGraph[CodeQuery] = view(params)
   }
 
   private val modelCache =

@@ -56,13 +56,10 @@ object HnswRouted {
       cell: Int,
       vectors: LongVecMap,
       snapshot: GraphSnapshot
-  ) extends Serializable {
-    @transient private lazy val frozen = new FrozenGraph(snapshot, vectors.keysIterator)(
-      (m, ids) => ArenaVectorStore.of(m, ids, ids.map(vectors(_))))
-
+  ) extends FrozenVectors {
     /** A fresh view over the cell's arena and rows (see
       * [[HnswModel.kernel]]). */
-    def view(cfg: BuildConfig): OrdinalGraph[Array[Float]] = frozen.view(cfg.params, cfg.metric)
+    def view(cfg: BuildConfig): OrdinalGraph[Array[Float]] = frozenView(cfg.params, cfg.metric)
   }
 
   /** Max secondary cells per split primary cell; also the stride of the

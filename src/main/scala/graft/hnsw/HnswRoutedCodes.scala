@@ -44,12 +44,11 @@ object HnswRoutedCodes {
   final case class CodeCellShard(
       cell: Int,
       codes: LongLongMap,
-      snapshot: GraphSnapshot) extends Serializable {
-    @transient private lazy val frozen = new FrozenGraph(snapshot, codes.keysIterator)(
-      (_, ids) => CodeArena.of(ids, ids.map(codes(_))))
-
-    /** A fresh view, for one thread. */
-    def view(params: HnswParams): OrdinalGraph[CodeQuery] = frozen.view(params)
+      snapshot: GraphSnapshot) extends FrozenCodes {
+    protected def codeArena: CodeArena = CodeArena.of(codes)
+    // a DISK_ONLY cell deserializes afresh for every serve: convert only
+    // the rows a serve visits
+    override protected def sharedRows: Boolean = false
   }
 
   /** `tombstones` is the index's deletion set (sorted ids) — the float
@@ -221,7 +220,7 @@ object HnswRoutedCodes {
       prior: Option[CodeCellShard], rows: Array[(Long, Long)]): CodeCellShard = {
     val codes = prior.fold(new LongLongMap(math.max(8, rows.length)))(
       _.codes.copy(extra = rows.length))
-    val arena = CodeArena.of(codes.keysIterator.toArray, codes.keysIterator.map(codes(_)).toArray)
+    val arena = CodeArena.of(codes)
     rows.foreach { case (id, c) =>
       require(!codes.contains(id),
         s"routed-codes ingest: id $id already present in cell $cell — " +
@@ -653,8 +652,8 @@ object HnswRoutedCodes {
 
   /** One serve over the shared transport ([[RoutedServe]]) with the
     * shared predicated kernel ([[PredicatedCensus.serve]]) on the code
-    * representation: the cell's code map, and a beam and the Hamming
-    * distance from one [[OrdinalGraph]] view per shard serve (INTEGER
+    * representation: the cell's code map, a beam on the cell's
+    * [[OrdinalGraph]] view and the Hamming distance by id (INTEGER
     * distances — ties are the common case, and the kernel's total (dist,
     * id) queue order carries the oracle's tie-breaking). The probe set
     * covering every cell is the exhaustive regime (forced exact scan). */
@@ -664,11 +663,13 @@ object HnswRoutedCodes {
     new RoutedServe.Request(CodeTier, index, nProbe, "hamming",
       (m: CodeCellShard, probes: Iterator[(Long, Long)], hasAllow: Boolean,
        allow: Array[Long], dead: Array[Long]) => {
-        val view = m.view(params)
+        // built on the first beam: an exact scan reads the code map only
+        lazy val view = m.view(params)
         PredicatedCensus.serve(PredicatedCensus.Members.ofLongLongMap(m.codes),
-          probes.map { case (qid, qc) => (qid, CodeQuery.hamming(qc)) }, k,
-          HnswRouted.cellEf(params, ef0, m.codes.size), exhaustive,
-          hasAllow, allow, dead)(view.search, view.distances)
+          probes, k, HnswRouted.cellEf(params, ef0, m.codes.size), exhaustive,
+          hasAllow, allow, dead)(
+          (qc, kk, ef) => view.search(CodeQuery.hamming(qc), kk, ef),
+          qc => id => hamming(qc, m.codes(id)).toDouble)
           .map { case (qid, id, d) => (qid, id, d.toInt) }
       })
   }

@@ -73,12 +73,11 @@ object HnswRoutedPq {
       codes: LongLongMap,
       snapshot: GraphSnapshot,
       fingerprint: Long
-  ) extends Serializable {
-    @transient private lazy val frozen = new FrozenGraph(snapshot, codes.keysIterator)(
-      (_, ids) => CodeArena.of(ids, ids.map(codes(_))))
-
-    /** A fresh view, for one thread (see [[HnswCodes.CodeModel]]). */
-    def view(params: HnswParams): OrdinalGraph[CodeQuery] = frozen.view(params)
+  ) extends FrozenCodes {
+    protected def codeArena: CodeArena = CodeArena.of(codes)
+    // a DISK_ONLY cell deserializes afresh for every serve: convert only
+    // the rows a serve visits
+    override protected def sharedRows: Boolean = false
   }
 
   /** splitmix64 finalizer (the repo's standard mixer). */
@@ -541,15 +540,16 @@ object HnswRoutedPq {
                        rows: Array[(Long, Array[Float])]): PqCellShard = {
     val cb = cbB.value
     val codes = prior.fold(new LongLongMap(rows.length))(_.codes.copy(extra = rows.length))
-    val arena = CodeArena.of(codes.keysIterator.toArray, codes.keysIterator.map(codes(_)).toArray)
-    val queries = rows.map { case (id, v) =>
-      require(!codes.contains(id), s"routed-pq ingest: id $id already present in cell $cell")
-      val q = CodeQuery.quantized(v, cb)
-      codes.put(id, q.code)
-      (id, q)
-    }
+    val arena = CodeArena.of(codes)
+    // one query (and its lookup table) alive at a time: each row is
+    // checked, stored and quantized as the grow reaches it
     PqCellShard(cell, codes, OrdinalGraph.grow(params, seed, arena, prior.map(_.snapshot),
-      queries.iterator),
+      rows.iterator.map { case (id, v) =>
+        require(!codes.contains(id), s"routed-pq ingest: id $id already present in cell $cell")
+        val q = CodeQuery.quantized(v, cb)
+        codes.put(id, q.code)
+        (id, q)
+      }),
       if (ingested) ingestedFp(prior.fold(0L)(_.fingerprint), rows.iterator.map(_._1))
       else contentFingerprintRows(rows.iterator))
   }

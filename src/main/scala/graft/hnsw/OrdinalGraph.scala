@@ -1,6 +1,7 @@
 package graft.hnsw
 
-import graft.store.{ArenaVectorStore, EntryPoint, GraphSnapshot, LayerCsr, OrdinalStore}
+import graft.store.{ArenaVectorStore, CodeArena, CodeQuery, EntryPoint, GraphSnapshot, LayerCsr,
+  OrdinalStore}
 
 /** The HNSW graph of every index on the ordinals of its
   * [[OrdinalStore]] — the one engine that builds and serves float vectors
@@ -9,9 +10,10 @@ import graft.store.{ArenaVectorStore, EntryPoint, GraphSnapshot, LayerCsr, Ordin
   * a routed cell's grow) runs the engine's two-phase insert
   * ([[HnswSearcher.searchToInsert]], [[HnswSearcher.isMatch]],
   * [[HnswSearcher.insertFromSearchResults]]); a read-only view over
-  * [[OrdinalRows]] serves k-NN ([[search]], [[exactTopK]]) for a frozen
-  * model, a shard, a routed cell or a streaming image, with no id lookup
-  * per edge.
+  * [[OrdinalRows]], or over a snapshot whose rows it converts once, as a
+  * search first expands them, serves k-NN ([[search]], [[exactTopK]]) for
+  * a frozen model, a shard, a routed cell or a streaming image, with no id
+  * lookup per edge walked.
   *
   *  - per layer and ordinal, an `Int` neighbour row and its `Double`
   *    distances (null: no row at that layer; a view has no distances);
@@ -26,7 +28,7 @@ import graft.store.{ArenaVectorStore, EntryPoint, GraphSnapshot, LayerCsr, Ordin
   * the one [[HnswSearcher]] builds or returns over an id-keyed store and
   * an [[graft.store.InMemoryGraph]] fed the same inserts. Ids cross into
   * ordinals only at the edges: [[restore]], [[snapshot]], the rows a
-  * mirror reads ([[foreachTouched]]), [[OrdinalGraph.frozenRows]] and the
+  * mirror reads ([[foreachTouched]]), a frozen graph's rows and the
   * results of a search.
   *
   * One graph or view serves one thread at a time.
@@ -56,12 +58,38 @@ final class OrdinalGraph[Q](params: HnswParams, store: OrdinalStore[Q]) extends 
   private[this] var nTouched = 0
   private[this] var entryTouched = false
 
+  // a lazy view's graph, whose rows convert onto ordinals on first expansion
+  private[this] var source: GraphSnapshot = null
+
   /** A read-only view of `copy` over `store` with marks, a frontier and a
     * beam of its own: it serves [[searchToInsert]], [[search]] and
     * [[exactTopK]]; without distances it cannot connect. */
   def this(params: HnswParams, store: OrdinalStore[Q], copy: OrdinalRows) = {
     this(params, store)
     rows = copy.rows; degrees = copy.degrees; entry = copy.entry; entryLayer = copy.entryLayer
+  }
+
+  /** A read-only view of `snap` over `store` that converts a row onto
+    * ordinals when a search first expands it, so it pays for the rows its
+    * searches visit, not for every edge ([[OrdinalGraph.frozenRows]]). */
+  def this(params: HnswParams, store: OrdinalStore[Q], snap: GraphSnapshot) = {
+    this(params, store)
+    source = snap
+    rows = Array.fill(snap.layers.length)(new Array[Array[Int]](store.size))
+    degrees = Array.fill(snap.layers.length)(new Array[Int](store.size))
+    snap.entryPoint.foreach { ep => entry = OrdinalGraph.ordinalOn(store, ep.point); entryLayer = ep.layer }
+  }
+
+  /** A lazy view's row of ordinal `o` at layer `lc`, converted from its
+    * snapshot; false if `o` has none there. */
+  private[this] def convert(lc: Int, o: Int): Boolean = {
+    val l = source.layers(lc)
+    val i = l.indexOf(store.ids(o))
+    i >= 0 && {
+      rows(lc)(o) = OrdinalGraph.rowOn(store, l, i)
+      degrees(lc)(o) = rows(lc)(o).length
+      true
+    }
   }
 
   def numLayers: Int = rows.length
@@ -200,7 +228,7 @@ final class OrdinalGraph[Q](params: HnswParams, store: OrdinalStore[Q]) extends 
       val cq = c.nearestDist
       val cand = c.popNearest()
       if (fq < cq) continue = false
-      else if (cand < layer.length && layer(cand) != null) {
+      else if (cand < layer.length && (layer(cand) != null || source != null && convert(lc, cand))) {
         val row = layer(cand)
         val deg = degrees(lc)(cand)
         if (fresh.length < deg) {
@@ -412,28 +440,33 @@ final case class OrdinalRows(rows: Array[Array[Array[Int]]], degrees: Array[Arra
                              entry: Int, entryLayer: Int)
 
 object OrdinalGraph {
-  /** `snap`'s rows on the ordinals of the ascending `ids`, without
-    * distances: a frozen graph's serving form, for a read-only view. A
-    * graph vertex not in `ids` is rejected. */
-  def frozenRows(ids: Array[Long], snap: GraphSnapshot): OrdinalRows = {
-    val n = ids.length
-    def ordinal(id: Long): Int = {
-      val o = java.util.Arrays.binarySearch(ids, id)
-      if (o < 0) throw new IllegalStateException(s"graph vertex $id has no vector")
-      o
-    }
+  /** The ordinal of graph vertex `id` in `store`, which must hold it. */
+  private[hnsw] def ordinalOn(store: OrdinalStore[_], id: Long): Int = {
+    val o = store.ordinalOf(id)
+    if (o < 0) throw new IllegalStateException(s"graph vertex $id has no vector")
+    o
+  }
+
+  /** Row `i` of `l` on `store`'s ordinals. */
+  private[hnsw] def rowOn(store: OrdinalStore[_], l: LayerCsr, i: Int): Array[Int] = {
+    val from = l.offsets(i)
+    val row = new Array[Int](l.offsets(i + 1) - from)
+    var k = 0
+    while (k < row.length) { row(k) = ordinalOn(store, l.dsts(from + k)); k += 1 }
+    row
+  }
+
+  /** Every row of `snap` on `store`'s ordinals, without distances: a
+    * frozen graph's serving form, for read-only views that share it. */
+  def frozenRows(store: OrdinalStore[_], snap: GraphSnapshot): OrdinalRows = {
     val rows = snap.layers.map { l =>
-      val layer = new Array[Array[Int]](n)
+      val layer = new Array[Array[Int]](store.size)
       var i = 0
-      while (i < l.size) {
-        val from = l.offsets(i)
-        layer(ordinal(l.srcs(i))) = Array.tabulate(l.offsets(i + 1) - from)(k => ordinal(l.dsts(from + k)))
-        i += 1
-      }
+      while (i < l.size) { layer(ordinalOn(store, l.srcs(i))) = rowOn(store, l, i); i += 1 }
       layer
     }
     OrdinalRows(rows, rows.map(_.map(r => if (r == null) 0 else r.length)),
-      snap.entryPoint.fold(-1)(ep => ordinal(ep.point)), snap.entryPoint.fold(-1)(_.layer))
+      snap.entryPoint.fold(-1)(ep => ordinalOn(store, ep.point)), snap.entryPoint.fold(-1)(_.layer))
   }
 
   /** The grow path of every sequential build and routed cell kernel: load
@@ -448,30 +481,51 @@ object OrdinalGraph {
   }
 }
 
-/** A frozen graph served through [[OrdinalGraph]] views: its store, built
-  * by `store(key, ids)` from its member `ids` in ascending order, and its
-  * [[OrdinalGraph.frozenRows]] are built on the first [[view]] under a key
-  * (a float metric) and shared by every later one. Its owner (a model, a
-  * shard, a routed cell) holds it `@transient`, so they are built once per
-  * JVM and never serialized. */
-private[hnsw] final class FrozenGraph[Q](snapshot: GraphSnapshot, ids: => Iterator[Long])(
-    store: (String, Array[Long]) => OrdinalStore[Q]) {
-  private[this] var builtKey: String = null
-  private[this] var built: (OrdinalStore[Q], OrdinalRows) = null
+/** A frozen graph (a model, a shard, a routed cell) served through
+  * [[OrdinalGraph]] views. Its store, built by [[frozenStore]] on the
+  * first view under a key (a float metric), serves every later view; so
+  * do its [[OrdinalGraph.frozenRows]], unless [[sharedRows]] is off and
+  * each view converts the rows it visits. Both are held in transient
+  * fields: built once per JVM, never serialized. */
+trait FrozenGraph[Q] extends Serializable {
+  def snapshot: GraphSnapshot
+  /** The graph's members in a store, under `key`. */
+  protected def frozenStore(key: String): OrdinalStore[Q]
+  protected def sharedRows: Boolean = true
+  @transient private[this] var builtKey: String = null
+  @transient private[this] var built: (OrdinalStore[Q], OrdinalRows) = null
 
   /** A fresh view, for one thread, of the graph under `key`. */
-  def view(params: HnswParams, key: String = ""): OrdinalGraph[Q] = {
+  protected final def frozenView(params: HnswParams, key: String): OrdinalGraph[Q] = {
     val (s, rows) = synchronized {
       if (builtKey != key) {
-        val sorted = ids.toArray
-        java.util.Arrays.sort(sorted)
-        built = (store(key, sorted), OrdinalGraph.frozenRows(sorted, snapshot))
+        val s = frozenStore(key)
+        built = (s, if (sharedRows) OrdinalGraph.frozenRows(s, snapshot) else null)
         builtKey = key
       }
       built
     }
-    new OrdinalGraph(params, s, rows)
+    if (rows != null) new OrdinalGraph(params, s, rows) else new OrdinalGraph(params, s, snapshot)
   }
+}
+
+/** A frozen graph of float vectors, served under a metric. */
+trait FrozenVectors extends FrozenGraph[Array[Float]] {
+  def vectors: LongVecMap
+  protected final def frozenStore(metric: String): OrdinalStore[Array[Float]] = {
+    val ids = vectors.keysIterator.toArray
+    ArenaVectorStore.of(metric, ids, ids.map(vectors(_)))
+  }
+}
+
+/** A frozen graph of u64 codes (a code model or a routed code/PQ cell). */
+trait FrozenCodes extends FrozenGraph[CodeQuery] {
+  /** The graph's codes in a store (code stores take no key). */
+  protected def codeArena: CodeArena
+  protected final def frozenStore(key: String): OrdinalStore[CodeQuery] = codeArena
+
+  /** A fresh view, for one thread. */
+  def view(params: HnswParams): OrdinalGraph[CodeQuery] = frozenView(params, "")
 }
 
 /** What [[HnswDistributed.searchBroadcast]] serves: a broadcast value

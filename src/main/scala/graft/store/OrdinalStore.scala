@@ -110,4 +110,12 @@ object CodeArena {
     a.n = ids.length
     a
   }
+
+  /** `m`'s codes under their ids, in `m`'s order. */
+  def of(m: LongLongMap): CodeArena = {
+    val (ids, codes) = (new Array[Long](m.size), new Array[Long](m.size))
+    var i = 0
+    m.foreach { (id, c) => ids(i) = id; codes(i) = c; i += 1 }
+    of(ids, codes)
+  }
 }

@@ -245,14 +245,19 @@ class KryoRoundTripSpec extends SparkSpec {
     val vectors = new BuildVectors(cfg.metric, ids, ids.map(vecFromHash(_, 23L, 16)))
     val searcher = new HnswSearcher(cfg.params)
     val layers = ids.map(searcher.selectLayerByHash(_, cfg.seed))
-    val graph = new OrdinalGraph(cfg.params, vectors.arena)
+    val graph = new OrdinalGraph(cfg.params, vectors.store)
     (0 until built).foreach(i => graph.connect(i, graph.searchToInsert(vectors.vecs(i), layers(i))))
     val copy = graph.rowCopy
     val (rtVectors, rtCopy) = (roundTrip(vectors), roundTrip(copy))
-    assert(rtVectors.arena.ids.take(n).sameElements(ids))
+    assert(rtVectors.store.ids.take(n).sameElements(ids))
+    // so do the u64 build's rows, also shipped after the driver built its store
+    val codeRows = new HnswCodes.BuildCodes(ids, ids.map(_ * 31L))
+    assert(codeRows.store.size == n)
+    val rtCodes = roundTrip(codeRows).store
+    assert(rtCodes.ids.sameElements(ids) && rtCodes.codes.sameElements(ids.map(_ * 31L)))
 
     def beams(p: BuildVectors, c: OrdinalRows): Seq[Seq[Seq[(Int, Long)]]] = {
-      val view = new OrdinalGraph(cfg.params, p.arena, c)
+      val view = new OrdinalGraph(cfg.params, p.store, c)
       (built until n).map { i =>
         view.searchToInsert(p.vecs(i), layers(i)).toSeq.map(q =>
           (0 until q.size).map(j => (q.ordAt(j), java.lang.Double.doubleToRawLongBits(q.distAt(j)))))

@@ -36,15 +36,18 @@ class OrdinalBuildSpec extends SparkSpec {
   private def vecFromHash(i: Long, dim: Int = 8): Array[Float] =
     Array.tabulate(dim)(j => (HnswSearcher.uniformFromHash(i * 31 + j, 4L) * 2.0 - 1.0).toFloat)
 
-  /** Distinct ids out of id order, 40 of them copies of earlier vectors,
-    * one vector three floats longer. */
+  /** Distinct ids out of id order, 52 of them copies of earlier vectors
+    * (40 under larger ids, 12 under smaller ones), one vector three floats
+    * longer. */
   private val distinctRows: Array[(Long, Array[Float])] = {
     val base = (0 until 260).map { i =>
       val id = (i * 7919L) % 1000L
       (id, vecFromHash(id, if (i == 97) 11 else 8))
     }
     val copies = (0 until 40).map(i => (2000L - i * 3, base(i * 5)._2.clone))
-    (base ++ copies).toArray
+    val free = (0L until 1000L).filterNot(base.map(_._1).toSet).iterator
+    val under = base.filter(_._1 > 600).take(12).map { case (_, v) => (free.next(), v.clone) }
+    (base ++ copies ++ under).toArray
   }
 
   /** `distinctRows` with one id repeated under another vector. */
