@@ -14,18 +14,15 @@ import graft.store.{CodeArena, CodeQuery, GraphSnapshot}
   * ([[OrdinalGraph]]) over a [[CodeArena]]. */
 object HnswCodes {
 
-  /** A built code index: its graph and codes by id, served through
-    * [[OrdinalGraph]] views whose store and rows ([[FrozenGraph]]) are
-    * built once per JVM and never serialized. */
-  final case class CodeModel(
-      params: HnswParams,
-      snapshot: GraphSnapshot,
-      codes: LongLongMap
-  ) extends FrozenCodes {
-    protected def codeArena: CodeArena = CodeArena.of(codes)
-
+  /** A built code index: its graph in the form it was built in (a
+    * [[CodeArena]] and `Int` rows), served through [[OrdinalGraph]] views
+    * that share it. */
+  final case class CodeModel(params: HnswParams, form: OrdinalForm.Codes) {
     /** A fresh view, for one thread. */
-    def view(): OrdinalGraph[CodeQuery] = view(params)
+    def view(): OrdinalGraph[CodeQuery] = form.view(params)
+    def snapshot: GraphSnapshot = form.snapshot
+    /** Id -> code, derived once. */
+    @transient lazy val codes: LongLongMap = LongLongMap.from(form.store.rows, form.size)
   }
   private val pairEnc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
 
@@ -60,8 +57,7 @@ object HnswCodes {
     val rows = codes.select(col("id"), col("code")).as(pairEnc).collect()
       .sortBy(_._1).distinctBy(_._1)
     CodeModel(params, OrdinalGraph.grow(params, seed, new CodeArena, None,
-      rows.iterator.map { case (id, code) => (id, CodeQuery.hamming(code)) }),
-      LongLongMap.from(rows.iterator, rows.length))
+      rows.iterator.map { case (id, code) => (id, CodeQuery.hamming(code)) }))
   }
 
   /** Micro-batched build for code tables beyond comfortable sequential
@@ -77,10 +73,11 @@ object HnswCodes {
     val rows = codes.select(col("id"), col("code")).as(pairEnc).collect()
       .sortBy(_._1).distinctBy(_._1)
     val ids = rows.map(_._1)
+    val build = new BuildCodes(ids, rows.map(_._2))
     val graph = HnswDistributed.batchedBuildLoop(spark, ids,
       ids.map(params.selectLayerByHash(_, seed)), params, seedBatch, maxBatch,
-      growthDenom, batchCeiling)(new BuildCodes(ids, rows.map(_._2)))
-    CodeModel(params, graph.snapshot, LongLongMap.from(rows.iterator, rows.length))
+      growthDenom, batchCeiling)(build)
+    CodeModel(params, graph.form[CodeArena](build.store))
   }
 
   /** A batched code build's rows: `codes(i)` under `ids(i)`. */

@@ -5,34 +5,31 @@ import org.apache.spark.sql.functions._
 
 import graft.store.{ArenaVectorStore, GraphSnapshot, OrdinalStore}
 
-/** A built HNSW index ready for distributed search: the (small, broadcast-
-  * able) layered graph plus the vector table keyed by id. At broadcast
-  * scale both ship to every executor once; beyond that, shard with
+/** A built HNSW index ready for distributed search: its graph in the
+  * form it was built in ([[OrdinalForm]]: the vector arena and `Int`
+  * rows with their distances), shipped as is. At broadcast scale it
+  * ships to every executor once; beyond that, shard with
   * [[HnswDistributed.buildSharded]] (independent per-shard graphs + top-k
   * merge — the 100 TB path, where each shard holds only its partition's
   * vectors and graph).
   *
-  * A model serves through [[OrdinalGraph]] views over one arena and one
-  * set of `Int` rows ([[OrdinalGraph.frozenRows]]), built once per JVM on
-  * first use and never serialized. A streaming index does not serve its
-  * model: it broadcasts a [[ServingImage]] of its arena and rows instead
+  * Every view shares the form's arena and rows. A streaming index does
+  * not serve its model: it broadcasts a [[ServingImage]] of its arena and
+  * rows instead
   * ([[graft.streaming.StreamingIngest.IncrementalIndex.modelBroadcast]]).
   */
-final case class HnswModel(
-    params: HnswParams,
-    metricName: String,
-    snapshot: GraphSnapshot,
-    // the primitive LongVecMap, not a scala map: the model BROADCASTS
-    // (Kryo-serialized torrent blocks), and scala's mutable.LongMap
-    // deserialized corrupt under that round-trip in cached shard state
-    // (the round-16 PQ-tier SIGSEGV — see LongVecMap's scaladoc); it is
-    // also the no-boxed-lookup shape every distance eval wants
-    vectors: LongVecMap
-) extends KernelSource with FrozenVectors {
-  def size: Int = vectors.size
+final case class HnswModel(params: HnswParams, form: OrdinalForm.Floats) extends KernelSource {
+  def metricName: String = form.store.metricName
+  def size: Int = form.size
 
   /** A fresh per-partition view over this model's arena and rows. */
-  override def kernel(): OrdinalGraph[Array[Float]] = frozenView(params, metricName)
+  override def kernel(): OrdinalGraph[Array[Float]] = form.view(params)
+
+  /** The id-keyed graph, derived once (see [[OrdinalForm.snapshot]]). */
+  @transient lazy val snapshot: GraphSnapshot = form.snapshot
+
+  /** Id -> vector, derived once. */
+  @transient lazy val vectors: LongVecMap = form.store.toLongVecMap
 }
 
 /** What a batched build broadcasts once: row `i`'s query, and a [[store]]
@@ -125,10 +122,10 @@ object HnswDistributed {
     // and inflating its degree) — keep the first occurrence
     val rows = rows0.distinctBy(_._1)
     val ids = rows.map(_._1)
+    val build = new BuildVectors(cfg.metric, ids, rows.map(_._2))
     val graph = batchedBuildLoop(spark, ids, ids.map(cfg.params.selectLayerByHash(_, cfg.seed)),
-      cfg.params, cfg.seedBatch, cfg.maxBatch, cfg.growthDenom, cfg.batchCeiling)(
-      new BuildVectors(cfg.metric, ids, rows.map(_._2)))
-    HnswModel(cfg.params, cfg.metric, graph.snapshot, LongVecMap.from(rows.iterator, rows.length))
+      cfg.params, cfg.seedBatch, cfg.maxBatch, cfg.growthDenom, cfg.batchCeiling)(build)
+    HnswModel(cfg.params, graph.form[ArenaVectorStore](build.store))
   }
 
   /** The seed + micro-batched build loop of [[buildFromArray]] and
@@ -148,10 +145,12 @@ object HnswDistributed {
     // Fail FAST on the broadcast tier's hard envelope, not at the first
     // over-sized broadcast (measured at n=1e7, m=32: 23 min of build,
     // then KryoException): Kryo's Unsafe bulk writer takes an int BYTE
-    // count, so no single primitive array may pass ~2 GiB. The binding
-    // arrays are the model's layer-0 `LayerCsr` columns, 8-byte dsts and
-    // dists, which broadcastModel ships for the float and the u64 model
-    // alike (phase 1 ships per-vertex Int rows, `rowCopy`, for both).
+    // count, so no single primitive array may pass ~2 GiB. The bound was
+    // derived for the id-keyed model's layer-0 `LayerCsr` columns, 8-byte
+    // dsts and dists; the model now ships its serving form, one row array
+    // per vertex, whose largest arrays are per point (ids, and the float
+    // arena or the codes), so for the rows it is conservative (phase 1
+    // ships per-vertex Int rows, `rowCopy`, too).
     // edges <= n * mMax0 is a WORST-CASE bound, reached in practice (HNSW
     // fills degrees): a sparse borderline graph is rejected where it
     // might have fit, the price of an envelope a user can plan around.
@@ -338,19 +337,15 @@ object HnswDistributed {
       .select(col("qid").as("id"), (col("dist") <= matchThreshold).as("matched"))
   }
 
-  /** One shard of a sharded index: the shard's own vectors + graph, held
-    * executor-side inside a persisted RDD — the serving handle never
-    * routes through the driver. */
-  final case class ShardModel(
-      // LongVecMap, not a scala map — the shard RDD persists (memory
-      // spilling to disk) through Encoders.kryo, the round-trip that
-      // corrupted scala LongMap state (see LongVecMap's scaladoc)
-      vectors: LongVecMap,
-      snapshot: GraphSnapshot
-  ) extends FrozenVectors {
-    /** A fresh view over the shard's arena and rows (see
-      * [[HnswModel.kernel]]). */
-    def view(cfg: BuildConfig): OrdinalGraph[Array[Float]] = frozenView(cfg.params, cfg.metric)
+  /** One shard of a sharded index: the shard's own vectors + graph in
+    * their serving form, held executor-side inside a persisted RDD — the
+    * serving handle never routes through the driver. */
+  final case class ShardModel(form: OrdinalForm.Floats) {
+    /** A fresh view over the shard's arena and rows. */
+    def view(cfg: BuildConfig): OrdinalGraph[Array[Float]] = form.view(cfg.params)
+    def snapshot: GraphSnapshot = form.snapshot
+    /** Id -> vector, derived once. */
+    @transient lazy val vectors: LongVecMap = form.store.toLongVecMap
   }
 
   /** A prebuilt sharded index: build once, serve many query batches. The
@@ -377,9 +372,8 @@ object HnswDistributed {
         // distinctBy: a repeated id would insert twice (see buildFromArray)
         val shard = it.toArray.sortBy(_._1).distinctBy(_._1)
         if (shard.isEmpty) Iterator.empty
-        else Iterator.single(ShardModel(LongVecMap.from(shard.iterator, shard.length),
-          OrdinalGraph.grow(cfg.params, cfg.seed, new ArenaVectorStore(cfg.metric), None,
-            shard.iterator)))
+        else Iterator.single(ShardModel(OrdinalGraph.grow(cfg.params, cfg.seed,
+          new ArenaVectorStore(cfg.metric), None, shard.iterator)))
       }(Encoders.kryo[ShardModel])
       .rdd
     if (persist) {
@@ -443,11 +437,9 @@ object HnswDistributed {
     import spark.implicits._
     val delIds = deleted
       .select(col(deleted.columns.head).cast("long")).as[Long].collect().toSet
-    val survivors = new LongVecMap(model.vectors.size)
-    model.vectors.foreach { case (id, v) =>
-      if (!delIds.contains(id)) survivors.put(id, v)
-    }
-    val vecsDf = survivors.iterator.toSeq.toDF("id", "vec")
+    val (ids, vecs) = model.form.store.rows.filterNot(r => delIds.contains(r._1)).toArray.unzip
+    val survivors = ArenaVectorStore.of(model.metricName, ids, vecs)
+    val vecsDf = ids.zip(vecs).toSeq.toDF("id", "vec")
     val compacted = GraphFrames.compactTombstones(
       GraphFrames.toLinksDF(spark, model.snapshot), deleted, vecsDf,
       model.metricName, model.params)
@@ -464,7 +456,7 @@ object HnswDistributed {
       }
     val snap = GraphFrames.fromLinksDF(compacted, entry)
     compacted.unpersist(blocking = false)
-    HnswModel(model.params, model.metricName, snap, survivors)
+    HnswModel(model.params, OrdinalForm.of(survivors, snap))
   }
 
   /** Process-wide compacted-model memo (the modelCache pattern; the

@@ -164,7 +164,7 @@ object HnswDurable {
       val seedN = math.min(cfg.seedBatch.toLong, n)
       val seedRows = batchVectors(0, seedN).as(pairEnc).collect().sortBy(_._1)
       store.save(OrdinalGraph.grow(params, cfg.seed, new ArenaVectorStore(cfg.metric), None,
-        seedRows.iterator))
+        seedRows.iterator).snapshot)
       pos = seedN
       graphSize = seedN
     }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
-import graft.store.{ArrayVectorStore, EntryPoint, GraphSnapshot, Metrics}
+import graft.store.{ArenaVectorStore, GraphSnapshot}
 
 /** Frontier-join HNSW search — the pure-DataFrame variant of
   * search_layer for graphs too large to broadcast (SURVEY §2 S5 strategy
@@ -221,39 +221,32 @@ object HnswFrontier {
   /** Kernel descent through layers top..1: greedy (ef=1) down to layer 2,
     * beam width `seedEf` at layer 1. Returns each query's layer-0 seed
     * candidates (qid, id) — up to seedEf rows per query (exactly the
-    * layer-1 beam; with seedEf=1 this is the classic greedy entry). */
-  private def descendUpper(spark: SparkSession, upper: GraphSnapshot,
-                           vectors: DataFrame, queries: DataFrame,
-                           metricName: String, seedEf: Int = 1): DataFrame = {
+    * layer-1 beam; with seedEf=1 this is the classic greedy entry). The
+    * walk is an [[OrdinalGraph]] view over an arena of the upper layers'
+    * vectors, so a query is never staged under an id a stored vertex may
+    * hold. */
+  private[hnsw] def descendUpper(spark: SparkSession, upper: GraphSnapshot,
+                                 vectors: DataFrame, queries: DataFrame,
+                                 metricName: String, seedEf: Int = 1): DataFrame = {
     import org.apache.spark.sql.Encoders
-    val metric = Metrics.byName(metricName)
     // upper layers hold few distinct ids; ship only the vectors they touch
     val upperIds: Set[Long] = (upper.entryPoint.map(_.point).toSet ++
       upper.layers.iterator.flatMap(l =>
         l.srcs.iterator ++ l.dsts.iterator)).toSet
     val idsB = spark.sparkContext.broadcast(upperIds)
     val vecEnc = Encoders.tuple(Encoders.scalaLong, ExprEnc.floatArray)
-    val upperVecs = vectors.select(col("id"), col("vec")).as(vecEnc)
-      .filter(r => idsB.value.contains(r._1)).collect().toMap
-    val upperB = spark.sparkContext.broadcast((upper, upperVecs))
+    val (ids, vecs) = vectors.select(col("id"), col("vec")).as(vecEnc)
+      .filter(r => idsB.value.contains(r._1)).collect().sortBy(_._1).unzip
+    val formB = spark.sparkContext.broadcast(
+      OrdinalForm.of(ArenaVectorStore.of(metricName, ids, vecs), upper))
+    // the layer-0 ef bounds nothing here: the form has no layer-0 rows
+    val params = HnswParams.standard(1, 1, 16).copy(efSearch = Array(seedEf, seedEf, 1, 1, 1))
 
     val outEnc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
     queries.select(col("qid"), col("qvec")).as(vecEnc)
       .mapPartitions { it =>
-        val (snap, vecs) = upperB.value
-        val searcher = new HnswSearcher(HnswParams.standard(1, 1, 16))
-        // one store per partition, -1 query slot re-staged per row
-        val store = new ArrayVectorStore(metric, base = vecs)
-        it.flatMap { case (qid, qvec) =>
-          store.prepareQueryWithId(-1L, qvec)
-          val (w, nLayers) = searcher.searchInit(store, snap, -1L)
-          var lc = nLayers - 1
-          while (lc >= 1) {
-            searcher.searchLayer(store, snap, -1L, w, if (lc == 1) seedEf else 1, lc)
-            lc -= 1
-          }
-          w.toArray.map(n => (qid, n.dst))
-        }
+        val view = formB.value.view(params)
+        it.flatMap { case (qid, qvec) => view.search(qvec, seedEf, 0).iterator.map(n => (qid, n.dst)) }
       }(outEnc)
       .toDF("qid", "id")
   }

@@ -32,20 +32,15 @@ object HnswPq {
   /** Everything an executor needs to serve: graph + codes + codebook.
     * NO raw vectors — at dim=64 this broadcasts 32x smaller than the
     * equivalent [[HnswModel]]. Served like a [[HnswCodes.CodeModel]]. */
-  final case class PqServingModel(
-      params: HnswParams,
-      snapshot: GraphSnapshot,
-      codebook: Array[Array[Array[Float]]],
-      codes: Map[Long, Long]
-  ) extends FrozenCodes {
-    def size: Int = codes.size
-    protected def codeArena: CodeArena = {
-      val ids = codes.keys.toArray
-      CodeArena.of(ids, ids.map(codes))
-    }
+  final case class PqServingModel(params: HnswParams, form: OrdinalForm.Codes,
+                                  codebook: Array[Array[Array[Float]]]) {
+    def size: Int = form.size
 
     /** A fresh view, for one thread. */
-    def view(): OrdinalGraph[CodeQuery] = view(params)
+    def view(): OrdinalGraph[CodeQuery] = form.view(params)
+    def snapshot: GraphSnapshot = form.snapshot
+    /** Id -> code, derived once. */
+    @transient lazy val codes: Map[Long, Long] = form.store.rows.toMap
   }
 
   private val modelCache =
@@ -70,12 +65,13 @@ object HnswPq {
         require(model.metricName == "l2",
           s"HnswPq serves squared-L2 (ADC); graph metric was ${model.metricName}" +
             " — traversal order would disagree with serving order")
-        val sample = model.vectors.valuesIterator.take(100000).toArray
+        // in the id -> vector map's order, which fixes the trained codebook
+        val sample = model.form.store.toLongVecMap.valuesIterator.take(100000).toArray
         val codebook = trainOnArrays(sample, seed)
-        val codes = model.vectors.iterator.map { case (id, v) =>
-          (id, PqKernels.encodeArray(v, codebook))
-        }.toMap
-        PqServingModel(model.params, model.snapshot, codebook, codes)
+        // the codes on the model's own ordinals, under its graph
+        val arena = model.form.store
+        PqServingModel(model.params, model.form.over(CodeArena.of(arena.ids,
+          arena.rows.map(r => PqKernels.encodeArray(r._2, codebook)).toArray)), codebook)
       })
   }
 

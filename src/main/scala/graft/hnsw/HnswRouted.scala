@@ -46,20 +46,16 @@ import graft.store.{ArenaVectorStore, GraphSnapshot, Metrics}
   */
 object HnswRouted {
 
-  /** One cell's shard: its id, vectors, and private graph. `vectors` is
-    * the primitive [[LongVecMap]], NOT a scala map: shards persist at
+  /** One cell's shard: its id, and its private graph in the form it was
+    * grown in (the cell's vector arena and `Int` rows). Shards persist at
     * MEMORY_AND_DISK, and under eviction they Kryo-round-trip through
-    * disk — the exact trigger that deserialized a scala
-    * `mutable.LongMap` corrupt and SIGSEGV'd the PQ tier (see
-    * [[LongVecMap]]'s scaladoc; pinned by KryoRoundTripSpec). */
-  final case class CellShard(
-      cell: Int,
-      vectors: LongVecMap,
-      snapshot: GraphSnapshot
-  ) extends FrozenVectors {
-    /** A fresh view over the cell's arena and rows (see
-      * [[HnswModel.kernel]]). */
-    def view(cfg: BuildConfig): OrdinalGraph[Array[Float]] = frozenView(cfg.params, cfg.metric)
+    * disk into exactly what they serve (pinned by KryoRoundTripSpec). */
+  final case class CellShard(cell: Int, form: OrdinalForm.Floats) {
+    /** A fresh view over the cell's arena and rows. */
+    def view(cfg: BuildConfig): OrdinalGraph[Array[Float]] = form.view(cfg.params)
+    def snapshot: GraphSnapshot = form.snapshot
+    /** Id -> vector, derived once. */
+    @transient lazy val vectors: LongVecMap = form.store.toLongVecMap
   }
 
   /** Max secondary cells per split primary cell; also the stride of the
@@ -204,7 +200,7 @@ object HnswRouted {
 
   /** The float tier's [[RoutedTier]] binding — one shared lifecycle
     * ([[RoutedLifecycle]]) across the three serving tiers; only the
-    * representation (LongVecMap members, float-exact cell rebuild)
+    * representation (float vectors, float-exact cell rebuild)
     * lives here. */
   private[graft] object FloatTier
       extends RoutedServing[CellShard, RoutedIndex, Array[Float], Router] {
@@ -220,10 +216,7 @@ object HnswRouted {
     val unpersistBlocking = false
     val resurrectHint = "Run compact() first (frees the ids), or route " +
       "through the CDC stream, which filters tombstoned inserts"
-    def memberCount(s: CellShard): Int = s.vectors.size
-    def containsId(s: CellShard, id: Long): Boolean = s.vectors.contains(id)
-    def idIterator(s: CellShard): Iterator[Long] = s.vectors.keysIterator
-    def snapshot(s: CellShard): GraphSnapshot = s.snapshot
+    def form(s: CellShard): OrdinalForm.Floats = s.form
     val queryCol = "qvec"
     def queryEnc: Encoder[(Long, Array[Float])] =
       Encoders.tuple(Encoders.scalaLong, ExprEnc.floatArray)
@@ -232,7 +225,7 @@ object HnswRouted {
       r.probeCells(q, nProbe)
     val vectors = RoutedImage.Payload[CellShard, Array[Float]]("vectors", "vec",
       Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong, ExprEnc.floatArray),
-      _.vectors.iterator)
+      _.form.store.rows)
     def rebuild(i: RoutedIndex): RoutedLifecycle.Rebuild[CellShard] =
       RoutedLifecycle.Rebuild.local(vectors.rows)(growCell(i.cfg))
   }
@@ -380,17 +373,13 @@ object HnswRouted {
     * build of its surviving rows (same insert order, same layer draws). */
   private[hnsw] def growCell(cfg: BuildConfig)(cell: Int, prior: Option[CellShard],
                                                rows: Array[(Long, Array[Float])]): CellShard = {
-    val vecMap = prior.fold(new LongVecMap(rows.length))(_.vectors.copy(extra = rows.length))
+    val arena = prior.fold(new ArenaVectorStore(cfg.metric))(_.form.store.copy())
     rows.foreach { case (id, _) =>
-      require(!vecMap.contains(id),
+      require(arena.ordinalOf(id) < 0,
         s"routed ingest: id $id already present in cell $cell — " +
           "re-inserting a vertex would corrupt its graph")
     }
-    val arena = new ArenaVectorStore(cfg.metric)
-    prior.foreach(_.vectors.foreach { case (id, v) => arena.insert(id, v) })
-    rows.foreach { case (id, v) => vecMap(id) = v }
-    CellShard(cell, vecMap,
-      OrdinalGraph.grow(cfg.params, cfg.seed, arena, prior.map(_.snapshot), rows.iterator))
+    CellShard(cell, OrdinalGraph.grow(cfg.params, cfg.seed, arena, prior.map(_.form), rows.iterator))
   }
 
   /** `modalitySplit`: opt-in BUILD-TIME modality guard (round-15; the
@@ -567,7 +556,7 @@ object HnswRouted {
     * redelivered ids for idempotence where batch ingest fail-fasts.
     * `ids` must be sorted ascending; returns a sorted subset. */
   def presentIds(index: RoutedIndex, ids: Array[Long]): Array[Long] =
-    RoutedOps.presentIds(index.shards, ids)((s, f) => s.vectors.foreachKey(f))
+    RoutedOps.presentIds(index.shards, ids)((s, f) => s.form.store.idIterator.foreach(f))
 
   /** Tombstone delete — delete-without-rebuild on the routed tier: adds
     * `ids` to the index's deletion set and returns a new handle SHARING
@@ -696,7 +685,7 @@ object HnswRouted {
       // ([[MergedCellAudit.auditCell]] — also run by the PQ tier over
       // code reconstructions and by the codes tier in Hamming space);
       // sampling/seeding rationale lives on the kernel
-      MergedCellAudit.auditCell(s.vectors.toArray.sortBy(_._1),
+      MergedCellAudit.auditCell(s.form.store.rows.toArray.sortBy(_._1),
         Metrics.byName(metricName), isDead, nDead, sampleMax, iters, kSplit)
     }
   }
@@ -766,14 +755,14 @@ object HnswRouted {
     * after it, which is exactly the kernel/plan warm-up this probe
     * pays. Returns the number of cells probed. */
   def warmProbe(index: RoutedIndex, ef: Int = 16): Long =
-    RoutedServe.warmProbe(FloatTier, index)(_.vectors.valuesIterator)(
+    RoutedServe.warmProbe(FloatTier, index)(_.form.store.rows.map(_._2))(
       search(index, _, k = 1, nProbe = 1, ef0 = ef))
 
   /** Per-cell occupancy (cell, rows) — the drift audit surface: compare
     * against the build-time histogram to decide when frozen centroids
     * have drifted far enough to warrant retraining. */
   def cellStats(index: RoutedIndex): Array[(Int, Long)] =
-    RoutedOps.cellStats(index.shards)(_.vectors.size)
+    RoutedOps.cellStats(index.shards)(_.form.size)
 
   /** Drift audit as a DataFrame — the routed tier's silent-recall-killer
     * alarm: frozen centroids under distribution shift send new mass to
@@ -980,9 +969,8 @@ object HnswRouted {
       (m: CellShard, probes: Iterator[(Long, Array[Float])], hasAllow: Boolean,
        allow: Array[Long], dead: Array[Long]) => {
         val view = m.view(cfg)
-        PredicatedCensus.serve(PredicatedCensus.Members.ofVecMap(m.vectors),
-          probes, k, cellEf(cfg.params, ef0, m.vectors.size), exhaustive,
-          hasAllow, allow, dead)(view.search, view.distances)
+        PredicatedCensus.serve(m.form.store, probes, k, cellEf(cfg.params, ef0, m.form.size),
+          exhaustive, hasAllow, allow, dead)(view.search, view.distances)
       })
   }
 
@@ -1012,8 +1000,10 @@ object HnswRouted {
     val router = RoutedImage.readRouter(spark, dir, cfg.metric)
     RoutedIndex(cfg, router, RoutedImage.shards(FloatTier, spark, dir,
       FloatTier.vectors, partitionerFor(router), persist,
-      StorageLevel.MEMORY_AND_DISK)((cell, vs, snap) =>
-      CellShard(cell, LongVecMap.from(vs.iterator), snap)),
+      StorageLevel.MEMORY_AND_DISK) { (cell, vs, snap) =>
+      val (ids, vecs) = vs.toArray.unzip
+      CellShard(cell, OrdinalForm.of(ArenaVectorStore.of(cfg.metric, ids, vecs), snap))
+    },
       RoutedImage.readTombstones(spark, dir))
   }
 

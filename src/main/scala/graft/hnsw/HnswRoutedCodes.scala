@@ -39,16 +39,15 @@ import graft.store.{CodeArena, CodeQuery, GraphSnapshot}
   * duplicate-id fail-fast. */
 object HnswRoutedCodes {
 
-  /** One cell: its codes by id and its graph, served like a
-    * [[HnswCodes.CodeModel]]. */
-  final case class CodeCellShard(
-      cell: Int,
-      codes: LongLongMap,
-      snapshot: GraphSnapshot) extends FrozenCodes {
-    protected def codeArena: CodeArena = CodeArena.of(codes)
-    // a DISK_ONLY cell deserializes afresh for every serve: convert only
-    // the rows a serve visits
-    override protected def sharedRows: Boolean = false
+  /** One cell: its graph in the form it was grown in (the cell's
+    * [[CodeArena]] and `Int` rows), served like a
+    * [[HnswCodes.CodeModel]]. A DISK_ONLY cell deserializes straight into
+    * what it serves. */
+  final case class CodeCellShard(cell: Int, form: OrdinalForm.Codes) {
+    def view(params: HnswParams): OrdinalGraph[CodeQuery] = form.view(params)
+    def snapshot: GraphSnapshot = form.snapshot
+    /** Id -> code, derived once. */
+    @transient lazy val codes: LongLongMap = LongLongMap.from(form.store.rows, form.size)
   }
 
   /** `tombstones` is the index's deletion set (sorted ids) — the float
@@ -72,7 +71,7 @@ object HnswRoutedCodes {
 
   /** The u64-code tier's [[RoutedTier]] binding — one shared lifecycle
     * ([[RoutedLifecycle]]) across the three serving tiers; only the
-    * representation (LongLongMap members, Hamming-space rebuild) lives
+    * representation (u64 codes, Hamming-space rebuild) lives
     * here. `unpersistBlocking`: this is the DISK_ONLY-decade tier —
     * the superseded image is ~the index's full footprint, reclaim it
     * before the caller's next job rather than racing the async
@@ -94,17 +93,14 @@ object HnswRoutedCodes {
     val unpersistBlocking = true
     val resurrectHint = "Run compact() first (frees the ids), or route " +
       "through the CDC stream, which filters tombstoned inserts"
-    def memberCount(s: CodeCellShard): Int = s.codes.size
-    def containsId(s: CodeCellShard, id: Long): Boolean = s.codes.contains(id)
-    def idIterator(s: CodeCellShard): Iterator[Long] = s.codes.keysIterator
-    def snapshot(s: CodeCellShard): GraphSnapshot = s.snapshot
+    def form(s: CodeCellShard): OrdinalForm.Codes = s.form
     val queryCol = "qcode"
     def queryEnc: Encoder[(Long, Long)] = pairEnc
     def router(i: RoutedCodeIndex): Array[Long] = i.anchors
     def probeCells(anchors: Array[Long], qc: Long, nProbe: Int): Iterator[Int] =
       probeCellsCode(qc, anchors, nProbe)
     val codes = RoutedImage.Payload[CodeCellShard, Long]("codes", "code",
-      RoutedImage.codeRowEnc, _.codes.toSeq.iterator)
+      RoutedImage.codeRowEnc, _.form.store.rows)
     def rebuild(i: RoutedCodeIndex): RoutedLifecycle.Rebuild[CodeCellShard] =
       RoutedLifecycle.Rebuild.local(codes.rows)(growCell(i.params, i.seed))
   }
@@ -210,7 +206,7 @@ object HnswRoutedCodes {
   }
 
   /** The code tier's one cell kernel — build, ingest and compaction all
-    * grow a cell here: `prior`'s graph and code map (copy-on-merge: a
+    * grow a cell here: `prior`'s graph and codes (copy-on-merge: a
     * cached shard is never mutated) absorb the id-sorted `rows` in
     * order, layers from the id hash ([[OrdinalGraph.grow]]); with no
     * prior the cell builds fresh, so a compacted cell is graph-identical
@@ -218,16 +214,13 @@ object HnswRoutedCodes {
     * layer draws). */
   private[hnsw] def growCell(params: HnswParams, seed: Long)(cell: Int,
       prior: Option[CodeCellShard], rows: Array[(Long, Long)]): CodeCellShard = {
-    val codes = prior.fold(new LongLongMap(math.max(8, rows.length)))(
-      _.codes.copy(extra = rows.length))
-    val arena = CodeArena.of(codes)
-    rows.foreach { case (id, c) =>
-      require(!codes.contains(id),
+    val arena = prior.fold(new CodeArena)(_.form.store.copy())
+    rows.foreach { case (id, _) =>
+      require(arena.ordinalOf(id) < 0,
         s"routed-codes ingest: id $id already present in cell $cell — " +
           "re-inserting a vertex would corrupt its graph")
-      codes.put(id, c)
     }
-    CodeCellShard(cell, codes, OrdinalGraph.grow(params, seed, arena, prior.map(_.snapshot),
+    CodeCellShard(cell, OrdinalGraph.grow(params, seed, arena, prior.map(_.form),
       rows.iterator.map { case (id, c) => (id, CodeQuery.hamming(c)) }))
   }
 
@@ -377,9 +370,8 @@ object HnswRoutedCodes {
     * full path at k = 1, paying the kernel JIT + plan warm-up that
     * [[warm]]'s block sweep leaves on the first real serve. */
   def warmProbe(index: RoutedCodeIndex, ef: Int = 16): Long =
-    // headOption stops at the first occupied slot — the probe-rep
-    // collection is O(nCells), not O(index)
-    RoutedServe.warmProbe(CodeTier, index)(_.codes.headOption.iterator.map(_._2))(
+    // the rows are lazy: the probe-rep collection is O(nCells), not O(index)
+    RoutedServe.warmProbe(CodeTier, index)(_.form.store.rows.map(_._2))(
       search(index, _, k = 1, nProbe = 1, ef0 = ef))
 
   /** Drift recovery — [[HnswRouted.retrain]] on the code
@@ -401,7 +393,7 @@ object HnswRoutedCodes {
     * (one narrow broadcast scan; CDC idempotence). */
   def presentIds(index: RoutedCodeIndex, ids: Array[Long]): Array[Long] =
     RoutedOps.presentIds(index.shards, ids)(
-      (s, f) => s.codes.foreach((id, _) => f(id)))
+      (s, f) => s.form.store.idIterator.foreach(f))
 
   /** Tombstone delete-without-rebuild — [[HnswRouted.delete]]'s
     * contract on the code representation: O(set) handle metadata, the
@@ -516,7 +508,7 @@ object HnswRoutedCodes {
                       kSplit: Int = 8): DataFrame =
     RoutedLifecycle.mergedCellAudit(CodeTier)(index, minCellRows, minDeadBp,
         maxDeadBp) { (s, isDead, nDead) =>
-      MergedCellAudit.audit(s.codes.toSeq.toArray.sortBy(_._1),
+      MergedCellAudit.audit(s.form.store.rows.toArray.sortBy(_._1),
         (a: Long, b: Long) => hamming(a, b).toDouble, majority, isDead, nDead,
         sampleMax, iters, kSplit)
     }
@@ -580,9 +572,9 @@ object HnswRoutedCodes {
     }
 
   /** Restore WITHOUT rebuilding: newest complete version, one
-    * co-partitioned cogroup reassembling per-cell code maps + CSR
-    * snapshots — a parquet scan, no k-majority training, no graph
-    * construction. */
+    * co-partitioned cogroup reassembling per-cell codes + CSR
+    * snapshots into each cell's serving form ([[OrdinalForm.of]]) — a
+    * parquet scan, no k-majority training, no graph construction. */
   def attach(spark: SparkSession, path: String,
              persist: Boolean = true,
              storage: StorageLevel = DefaultStorage): RoutedCodeIndex = {
@@ -591,8 +583,10 @@ object HnswRoutedCodes {
       .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1).map(_._2)
     RoutedCodeIndex(RoutedImage.paramsFromMeta(meta), meta.getAs[Long]("seed"),
       anchors, RoutedImage.shards(CodeTier, spark, dir, CodeTier.codes,
-        partitionerFor(anchors), persist, storage)((cell, cs, snap) =>
-        CodeCellShard(cell, LongLongMap.from(cs.iterator, 64), snap)),
+        partitionerFor(anchors), persist, storage) { (cell, cs, snap) =>
+        val (ids, codes) = cs.toArray.unzip
+        CodeCellShard(cell, OrdinalForm.of(CodeArena.of(ids, codes), snap))
+      },
       RoutedImage.readTombstones(spark, dir))
   }
 
@@ -652,8 +646,8 @@ object HnswRoutedCodes {
 
   /** One serve over the shared transport ([[RoutedServe]]) with the
     * shared predicated kernel ([[PredicatedCensus.serve]]) on the code
-    * representation: the cell's code map, a beam on the cell's
-    * [[OrdinalGraph]] view and the Hamming distance by id (INTEGER
+    * representation: the cell's codes, a beam on the cell's
+    * [[OrdinalGraph]] view and the Hamming distance by ordinal (INTEGER
     * distances — ties are the common case, and the kernel's total (dist,
     * id) queue order carries the oracle's tie-breaking). The probe set
     * covering every cell is the exhaustive regime (forced exact scan). */
@@ -663,13 +657,11 @@ object HnswRoutedCodes {
     new RoutedServe.Request(CodeTier, index, nProbe, "hamming",
       (m: CodeCellShard, probes: Iterator[(Long, Long)], hasAllow: Boolean,
        allow: Array[Long], dead: Array[Long]) => {
-        // built on the first beam: an exact scan reads the code map only
-        lazy val view = m.view(params)
-        PredicatedCensus.serve(PredicatedCensus.Members.ofLongLongMap(m.codes),
-          probes, k, HnswRouted.cellEf(params, ef0, m.codes.size), exhaustive,
-          hasAllow, allow, dead)(
+        val view = m.view(params)
+        PredicatedCensus.serve(m.form.store, probes, k,
+          HnswRouted.cellEf(params, ef0, m.form.size), exhaustive, hasAllow, allow, dead)(
           (qc, kk, ef) => view.search(CodeQuery.hamming(qc), kk, ef),
-          qc => id => hamming(qc, m.codes(id)).toDouble)
+          qc => view.distances(CodeQuery.hamming(qc)))
           .map { case (qid, id, d) => (qid, id, d.toInt) }
       })
   }

@@ -9,7 +9,7 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.functions.PqKernels
 import graft.operators.Pq
-import graft.store.{CodeArena, CodeQuery, GraphSnapshot}
+import graft.store.{ArenaVectorStore, CodeArena, CodeQuery, GraphSnapshot}
 
 /** Routed + PQ compose — per-cell ADC codes on the routed serving tier:
   * the beyond-memory shape at the SCALE tier. [[HnswRouted]] holds full
@@ -56,28 +56,19 @@ import graft.store.{CodeArena, CodeQuery, GraphSnapshot}
   */
 object HnswRoutedPq {
 
-  /** One cell's serving state: graph + codes, NO raw vectors.
-    * `fingerprint` is an order-independent 64-bit content digest of the
-    * (id, vec) pairs the codes were encoded from — [[rederive]] compares
-    * it against the source cell's current content to decide carry-over
-    * vs re-encode without ever holding the old vectors. */
-  /** `codes` is the repo's PRIMITIVE LongLongMap, not
-    * scala.collection.mutable.LongMap: the scala map boxes its values
-    * (16+ B/row of pure overhead at 1e8) AND carries a defaultEntry
-    * closure field that corrupts under the Kryo round-trip a
-    * DISK_ONLY shard pays — the 1e7 pq_solo_build rung SIGSEGV'd the
-    * JVM reading a deserialized one. The primitive map is the codes
-    * tier's shape, proven through Kryo + DISK_ONLY at 1e8. */
-  final case class PqCellShard(
-      cell: Int,
-      codes: LongLongMap,
-      snapshot: GraphSnapshot,
-      fingerprint: Long
-  ) extends FrozenCodes {
-    protected def codeArena: CodeArena = CodeArena.of(codes)
-    // a DISK_ONLY cell deserializes afresh for every serve: convert only
-    // the rows a serve visits
-    override protected def sharedRows: Boolean = false
+  /** One cell's serving state: its graph in the form it was grown or
+    * encoded in (the cell's [[CodeArena]] and `Int` rows with their
+    * distances), NO raw vectors. A DISK_ONLY cell deserializes straight
+    * into what it serves. `fingerprint` is an order-independent 64-bit
+    * content digest of the (id, vec) pairs the codes were encoded from —
+    * [[rederive]] compares it against the source cell's current content
+    * to decide carry-over vs re-encode without ever holding the old
+    * vectors. */
+  final case class PqCellShard(cell: Int, form: OrdinalForm.Codes, fingerprint: Long) {
+    def view(params: HnswParams): OrdinalGraph[CodeQuery] = form.view(params)
+    def snapshot: GraphSnapshot = form.snapshot
+    /** Id -> code, derived once. */
+    @transient lazy val codes: LongLongMap = LongLongMap.from(form.store.rows, form.size)
   }
 
   /** splitmix64 finalizer (the repo's standard mixer). */
@@ -97,8 +88,8 @@ object HnswRoutedPq {
     * noise only — the exact re-rank still orders true candidates);
     * at 64 well-mixed bits per cell the chance is ~nCells/2^64 per
     * rederive, far below any operational concern. */
-  private[hnsw] def contentFingerprint(vectors: LongVecMap): Long =
-    contentFingerprintRows(vectors.iterator)
+  private[hnsw] def contentFingerprint(vectors: ArenaVectorStore): Long =
+    contentFingerprintRows(vectors.rows)
 
   /** Same fold over a row iterator (order-independent by the addition
     * combine) — the [[buildSolo]] path digests the build rows directly
@@ -161,17 +152,14 @@ object HnswRoutedPq {
     val unpersistBlocking = false
     val resurrectHint = "Run compactSolo() first (frees the ids), or " +
       "rederive from a compacted float source"
-    def memberCount(s: PqCellShard): Int = s.codes.size
-    def containsId(s: PqCellShard, id: Long): Boolean = s.codes.contains(id)
-    def idIterator(s: PqCellShard): Iterator[Long] = s.codes.keysIterator
-    def snapshot(s: PqCellShard): GraphSnapshot = s.snapshot
+    def form(s: PqCellShard): OrdinalForm.Codes = s.form
     val queryCol = "qvec"
     def queryEnc: Encoder[(Long, Array[Float])] = pairEnc
     def router(i: RoutedPqIndex): HnswRouted.Router = i.router
     def probeCells(r: HnswRouted.Router, q: Array[Float], nProbe: Int): Iterator[Int] =
       r.probeCells(q, nProbe)
     val codes = RoutedImage.Payload[PqCellShard, Long]("codes", "code",
-      RoutedImage.codeRowEnc, _.codes.toSeq.iterator)
+      RoutedImage.codeRowEnc, _.form.store.rows)
   }
 
   /** Derive the PQ serving tier from a built routed index: train one
@@ -193,7 +181,8 @@ object HnswRoutedPq {
     // sees the full support even when k-means packed most rows into a
     // few cells (a head-only sample would quantize the tail badly)
     val sample = index.shards.flatMap { case (_, s) =>
-      s.vectors.valuesIterator.take(perCell)
+      // in the id -> vector map's order, which fixes the trained codebook
+      s.form.store.toLongVecMap.valuesIterator.take(perCell)
     }.collect()
     val codebook = HnswPq.trainOnArrays(sample, seed)
     fromRoutedWith(index, codebook, persist)
@@ -314,14 +303,14 @@ object HnswRoutedPq {
         s"with ${source.cfg.metric} — traversal order would disagree " +
         "with candidate order")
 
-  /** Encode one float cell shard: codes + content fingerprint. */
-  private def encodeShard(s: HnswRouted.CellShard,
-                          cb: Array[Array[Array[Float]]]): PqCellShard = {
-    val codes = new LongLongMap(s.vectors.size)
-    s.vectors.foreach { case (id, v) =>
-      codes.put(id, PqKernels.encodeArray(v, cb))
-    }
-    PqCellShard(s.cell, codes, s.snapshot, contentFingerprint(s.vectors))
+  /** Encode one float cell shard: codes on the cell's own ordinals (its
+    * graph, float distances included, carried as is) + content
+    * fingerprint. */
+  private[hnsw] def encodeShard(s: HnswRouted.CellShard,
+                                cb: Array[Array[Array[Float]]]): PqCellShard = {
+    val arena = s.form.store
+    PqCellShard(s.cell, s.form.over(CodeArena.of(arena.ids,
+      arena.rows.map(r => PqKernels.encodeArray(r._2, cb)).toArray)), contentFingerprint(arena))
   }
 
   private val pairEnc = Encoders.tuple(Encoders.scalaLong, ExprEnc.floatArray)
@@ -411,31 +400,25 @@ object HnswRoutedPq {
     * only if allowed AND not tombstoned. Unlike the float/codes kernel
     * ([[PredicatedCensus.serve]]) it always runs the census and has no
     * identity-filter branch — its candidate contract differs. */
-  private def serveAdcShard(
+  private[hnsw] def serveAdcShard(
       params: HnswParams, m: PqCellShard,
       cb: Array[Array[Array[Float]]], dead: Array[Long],
       probes: Iterator[(Long, Array[Float])],
       candidates: Int, exhaustive: Boolean,
       ef0: Int, hasAllow: Boolean,
       allow: Array[Long]): Iterator[(Long, Long, Double)] = {
-    // census/eligibleIds/exact-scan machinery is the shared
+    // census/eligibleOrdinals/exact-scan machinery is the shared
     // [[PredicatedCensus]] kernel (one copy across the three routed
-    // tiers) — which also gives this tier the small-allow
-    // eligibleIds fast path the float/codes tiers have
-    val cen = new PredicatedCensus.Census(
-      PredicatedCensus.Members.ofLongLongMap(m.codes),
-      hasAllow, allow, dead)
+    // tiers)
+    val cen = new PredicatedCensus.Census(m.form.store, hasAllow, allow, dead)
     @inline def eligible(id: Long): Boolean = cen.eligible(id)
-    val cellN = cen.cellN
-    // the beam's view, built on the first query that takes the beam
-    lazy val view = m.view(params)
-    val ef = HnswRouted.cellEf(params, ef0, cellN)
+    val view = m.view(params)
+    val ef = HnswRouted.cellEf(params, ef0, cen.cellN)
     val c = math.max(1, candidates)
     // exact ADC scan: k-bounded queue selection over the eligible
-    // ids (the routed exactScan, with the LUT kernel per query)
+    // ordinals (the routed exactScan, with the LUT kernel per query)
     def adcScan(qid: Long, q: CodeQuery): Iterator[(Long, Long, Double)] =
-      PredicatedCensus.exactScanTopK(cen.eligibleIds, c,
-          id => PqKernels.adcLut(q.lut, m.codes(id)))
+      PredicatedCensus.exactScanTopK(cen.eligibleOrdinals, m.form.store.ids, c, view.distances(q))
         .iterator.map(nb => (qid, nb.dst, nb.dist))
     if (cen.eligibleCount == 0) Iterator.empty
     else probes.flatMap { case (qid, qvec) =>
@@ -539,16 +522,13 @@ object HnswRoutedPq {
                        seed: Long, ingested: Boolean)(cell: Int, prior: Option[PqCellShard],
                        rows: Array[(Long, Array[Float])]): PqCellShard = {
     val cb = cbB.value
-    val codes = prior.fold(new LongLongMap(rows.length))(_.codes.copy(extra = rows.length))
-    val arena = CodeArena.of(codes)
+    val arena = prior.fold(new CodeArena)(_.form.store.copy())
     // one query (and its lookup table) alive at a time: each row is
     // checked, stored and quantized as the grow reaches it
-    PqCellShard(cell, codes, OrdinalGraph.grow(params, seed, arena, prior.map(_.snapshot),
+    PqCellShard(cell, OrdinalGraph.grow(params, seed, arena, prior.map(_.form),
       rows.iterator.map { case (id, v) =>
-        require(!codes.contains(id), s"routed-pq ingest: id $id already present in cell $cell")
-        val q = CodeQuery.quantized(v, cb)
-        codes.put(id, q.code)
-        (id, q)
+        require(arena.ordinalOf(id) < 0, s"routed-pq ingest: id $id already present in cell $cell")
+        (id, CodeQuery.quantized(v, cb))
       }),
       if (ingested) ingestedFp(prior.fold(0L)(_.fingerprint), rows.iterator.map(_._1))
       else contentFingerprintRows(rows.iterator))
@@ -570,19 +550,18 @@ object HnswRoutedPq {
     * concern, not the index's. */
   def warmProbe(index: RoutedPqIndex, ef: Int = 16): Long = {
     val cbB = index.shards.sparkContext.broadcast(index.codebook)
-    // headOption stops at the first occupied slot — the probe-rep
-    // collection is O(nCells) decodes, not a full code-map walk
-    RoutedServe.warmProbe(PqTier, index)(_.codes.headOption.iterator.map {
+    // the rows are lazy: the probe-rep collection is O(nCells) decodes
+    RoutedServe.warmProbe(PqTier, index)(_.form.store.rows.map {
       case (_, c) => PqKernels.decodeArray(c, cbB.value) })(
       searchCoarse(index, _, candidates = math.max(1, ef), nProbe = 1, ef0 = ef))
   }
 
-  /** Which of `ids` are present in the index's code maps — one narrow
-    * scan of the shard key sets (no shuffle; the [[HnswRouted
+  /** Which of `ids` are present in the index's cells — one narrow
+    * scan of the shards' stored ids (no shuffle; the [[HnswRouted
     * .presentIds]] contract on the compressed tier). Sorted. */
   def presentIds(index: RoutedPqIndex, ids: Array[Long]): Array[Long] =
     RoutedOps.presentIds(index.shards, ids)(
-      (s, f) => s.codes.foreach((id, _) => f(id)))
+      (s, f) => s.form.store.idIterator.foreach(f))
 
   /** Fold the deletion set out of the PQ tier WITHOUT a float source:
     * cells holding a tombstoned id rebuild from the raw-vector table
@@ -668,9 +647,8 @@ object HnswRoutedPq {
     RoutedLifecycle.mergedCellAudit(PqTier)(index, minCellRows, minDeadBp,
         maxDeadBp) { (s, isDead, nDead) =>
       val cb = cbB.value
-      val buf = new scala.collection.mutable.ArrayBuffer[(Long, Array[Float])](s.codes.size)
-      s.codes.foreach { (id, c) => buf += ((id, PqKernels.decodeArray(c, cb))) }
-      MergedCellAudit.auditCell(buf.toArray.sortBy(_._1),
+      MergedCellAudit.auditCell(
+        s.form.store.rows.map { case (id, c) => (id, PqKernels.decodeArray(c, cb)) }.toArray.sortBy(_._1),
         graft.store.Metrics.byName("l2"), isDead, nDead, sampleMax, iters, kSplit)
     }
   }
@@ -771,9 +749,10 @@ object HnswRoutedPq {
     * few members re-converges most cells onto identical member sets
     * under new cell ids. The cross-layout path matches old cells to
     * new cells BY content fingerprint (one cheap digest pass over the
-    * source — no encode), ships only the matched cells' code maps
+    * source — no encode), ships only the matched cells' code stores
     * through the new partitioner (a shuffle bounded by the carried
-    * code bytes, 8 B/row), and re-encodes just the unmatched cells.
+    * id and code bytes, 16 B/row), and re-encodes just the unmatched
+    * cells.
     * Solo-ingested cells can never false-match ([[ingestedFp]] keeps
     * their digests outside the content-digest family).
     *
@@ -800,7 +779,7 @@ object HnswRoutedPq {
       case _                  => false
     }
     val prior =
-      if (samePartitioning) Some(old.shards.mapValues(s => (s.codes, s.fingerprint)))
+      if (samePartitioning) Some(old.shards.mapValues(s => (s.form.store, s.fingerprint)))
       else {
         // layout changed (retrain / foreign attach): carry BY CONTENT
         // FINGERPRINT across the layouts (see the Scaladoc). Driver
@@ -810,16 +789,16 @@ object HnswRoutedPq {
           .collect().toMap // fp collision across cells: content-distinct
                            // cells (ids partition) — 2^-64 class
         val carryByNewCell = source.shards.map { case (c, s) =>
-          (c, contentFingerprint(s.vectors))
+          (c, contentFingerprint(s.form.store))
         }.collect().flatMap { case (nc, fp) => oldFps.get(fp).map(oc => (oc, nc)) }
         // no carry: one narrow encode pass, no shuffle
         if (carryByNewCell.isEmpty) None
         else {
           val carryMapB = source.shards.sparkContext.broadcast(carryByNewCell.toMap)
-          // ship matched cells' code maps keyed by the NEW cell id (the
-          // only shuffle; 8 B/row code bytes of carried cells)
+          // ship matched cells' code stores keyed by the NEW cell id (the
+          // only shuffle; 16 B/row id and code bytes of carried cells)
           Some(old.shards.flatMap { case (oc, s) =>
-            carryMapB.value.get(oc).map(nc => (nc, (s.codes, s.fingerprint)))
+            carryMapB.value.get(oc).map(nc => (nc, (s.form.store, s.fingerprint)))
           }.partitionBy(source.shards.partitioner.getOrElse(
             HnswRouted.partitionerFor(source.router))))
         }
@@ -832,28 +811,31 @@ object HnswRoutedPq {
   /** The one encode pass of [[fromRoutedWith]] and [[rederive]]: each
     * source cell carries the prior (codes, fingerprint) delivered for
     * it (`prior`, co-partitioned with the source) when the sizes agree
-    * and the fingerprint matches its current content — codes by
-    * reference, the source's graph snapshot (free: content-identical
+    * and the fingerprint matches its current content — its codes put on
+    * the source cell's ordinals, the source's graph (free: content-identical
     * cells rebuild graph-identically), a TRUE content digest — and
     * re-encodes otherwise. Returns (index, reencodedCells,
     * carriedCells); the counters ride accumulators, so with `persist =
     * false` only `forceCount` populates them. */
   private def derive(source: HnswRouted.RoutedIndex,
                      codebook: Array[Array[Array[Float]]],
-                     prior: Option[RDD[(Int, (LongLongMap, Long))]],
+                     prior: Option[RDD[(Int, (CodeArena, Long))]],
                      persist: Boolean, forceCount: Boolean): (RoutedPqIndex, Long, Long) = {
     val sc = source.shards.sparkContext
     val cbB = sc.broadcast(codebook)
     val reenc = sc.longAccumulator("pq-rederive-reencoded")
     val carry = sc.longAccumulator("pq-rederive-carried")
     def pass(it: Iterator[(Int, HnswRouted.CellShard)],
-             carried: Map[Int, (LongLongMap, Long)]) = it.map { case (cell, s) =>
+             carried: Map[Int, (CodeArena, Long)]) = it.map { case (cell, s) =>
+      val ids = s.form.store.ids
       carried.get(cell).filter { case (codes, fp) =>
-        codes.size == s.vectors.size && fp == contentFingerprint(s.vectors)
+        codes.size == s.form.size && fp == contentFingerprint(s.form.store)
       } match {
         case Some((codes, fp)) =>
+          // the same content, its codes put on the source cell's ordinals
           carry.add(1)
-          cell -> PqCellShard(cell, codes, s.snapshot, fp)
+          cell -> PqCellShard(cell,
+            s.form.over(CodeArena.of(ids, ids.map(id => codes.codes(codes.ordinalOf(id))))), fp)
         case None =>
           reenc.add(1)
           cell -> encodeShard(s, cbB.value)
@@ -932,8 +914,10 @@ object HnswRoutedPq {
     // entries table recorded presence keep their empty cells through it
     val shards = RoutedImage.shards(PqTier, spark, dir, PqTier.codes,
       HnswRouted.partitionerFor(router), persist, storage, fps.keySet)(
-      (cell, cs, snap) => PqCellShard(cell, LongLongMap.from(cs.iterator, 64),
-        snap, fpB.value.getOrElse(cell, 0L)))
+      { (cell, cs, snap) =>
+        val (ids, codes) = cs.toArray.unzip
+        PqCellShard(cell, OrdinalForm.of(CodeArena.of(ids, codes), snap), fpB.value.getOrElse(cell, 0L))
+      })
     RoutedPqIndex(RoutedImage.paramsFromMeta(meta), router, codebook, shards,
       RoutedImage.readTombstones(spark, dir), buildSeed)
   }

@@ -12,9 +12,10 @@ package graft.hnsw
   * nonnegative, but the set must not silently corrupt if they aren't).
   */
 /** Open-addressing primitive long -> long map (same design notes as
-  * [[LongSet]]): the code table of the Hamming store, probed twice per
-  * distance eval — `mutable.LongMap[Long]` boxes its values and its
-  * getOrElse allocates an Option per lookup. No removal. */
+  * [[LongSet]]): a store's id -> ordinal map, and the id-keyed view of a
+  * code holder's codes, derived on demand — `mutable.LongMap[Long]`
+  * boxes its values and its getOrElse allocates an Option per lookup.
+  * No removal. */
 final class LongLongMap(initialCapacity: Int = 64) extends Serializable {
   private[this] val Empty = Long.MinValue
   private[this] var mask = {
@@ -87,27 +88,6 @@ final class LongLongMap(initialCapacity: Int = 64) extends Serializable {
   def size: Int = n + (if (hasEmptyKey) 1 else 0)
 
   def isEmpty: Boolean = size == 0
-
-  /** First (key, value) in table order, or None when empty — the
-    * covering probes' one-representative pick. Stops at the first
-    * occupied slot instead of walking the whole table the way a
-    * `foreach`-with-flag does (a probe over a 1e8-row index walks
-    * nCells entries, not 1e8). */
-  def headOption: Option[(Long, Long)] =
-    if (hasEmptyKey) Some((Empty, emptyKeyVal))
-    else {
-      var j = 0
-      while (j < keys.length && keys(j) == Empty) j += 1
-      if (j < keys.length) Some((keys(j), vals(j))) else None
-    }
-
-  /** Independent copy (plus headroom for `extra` expected puts) — the
-    * ingest merge must never mutate a shard that is still cached. */
-  def copy(extra: Int = 0): LongLongMap = {
-    val m = new LongLongMap(size + math.max(0, extra))
-    foreach((k, v) => m.put(k, v))
-    m
-  }
 
   def toSeq: Seq[(Long, Long)] = {
     val b = Seq.newBuilder[(Long, Long)]

@@ -1,31 +1,27 @@
 package graft.hnsw
 
-/** Open-addressing primitive long -> Array[Float] map — the vector
-  * payload of every shard/model that an RDD persist or broadcast will
-  * serialize ([[HnswRouted.CellShard]], [[HnswModel]],
-  * [[HnswDistributed.ShardModel]]).
+/** Open-addressing primitive long -> Array[Float] map: the id-keyed view
+  * of a float holder's vectors, derived on demand
+  * ([[HnswModel.vectors]]), and the upper-layer vectors of the durable
+  * build's phase 1a.
   *
   * Why not `scala.collection.mutable.LongMap`: that class carries a
   * `defaultEntry` closure field and chill registers default serializers
   * for scala collection types, and the combination deserialized CORRUPT
   * under Spark's KryoSerializer when cached shard state round-tripped
   * through disk — the round-16 PqCellShard SIGSEGV (hs_err frame inside
-  * `LongMap.foreachKey` after a DISK_ONLY eviction at the 1e7 rung;
-  * fixed there by migrating to [[LongLongMap]]). The float tier
-  * survived only because its shards stayed memory-resident at rehearsed
-  * scales — exactly the assumption a 100x scale-up breaks. This class
-  * is the same proven shape as [[LongLongMap]]: pure data fields
+  * `LongMap.foreachKey` after a DISK_ONLY eviction at the 1e7 rung).
+  * This class is the shape of [[LongLongMap]]: pure data fields
   * (primitive key array + value array, no closures, no scala-collection
   * supertype for chill to claim), safe under Kryo's FieldSerializer by
   * construction, pinned by KryoRoundTripSpec's forced
-  * serialize -> deserialize -> serve cycle.
+  * serialize -> deserialize cycle.
   *
   * Same design as [[LongSet]]/[[LongLongMap]]: linear probing,
-  * power-of-two table, growth at 2/3 load, no removal (lifecycle
-  * deletes run through tombstones + compaction rebuilds, never in-place
-  * mutation of a cached shard). `Long.MinValue` marks empty slots with
-  * a side flag so any id is a valid key. Extends `Long => Array[Float]`
-  * so it drops into `ArrayVectorStore(base = ...)` directly.
+  * power-of-two table, growth at 2/3 load, no removal. `Long.MinValue`
+  * marks empty slots with a side flag so any id is a valid key. Extends
+  * `Long => Array[Float]` so it drops into `ArrayVectorStore(base = ...)`
+  * directly.
   */
 final class LongVecMap(initialCapacity: Int = 64)
     extends (Long => Array[Float]) with Serializable {
@@ -143,14 +139,6 @@ final class LongVecMap(initialCapacity: Int = 64)
     var o = 0
     foreach { kv => out(o) = kv; o += 1 }
     out
-  }
-
-  /** Independent copy (plus headroom for `extra` expected puts) — the
-    * ingest merge must never mutate a shard that is still cached. */
-  def copy(extra: Int = 0): LongVecMap = {
-    val m = new LongVecMap(size + math.max(0, extra))
-    foreach { case (k, v) => m.put(k, v) }
-    m
   }
 
   private[this] def grow(): Unit = {

@@ -10,10 +10,10 @@ import graft.store.{ArenaVectorStore, CodeArena, CodeQuery, EntryPoint, GraphSna
   * a routed cell's grow) runs the engine's two-phase insert
   * ([[HnswSearcher.searchToInsert]], [[HnswSearcher.isMatch]],
   * [[HnswSearcher.insertFromSearchResults]]); a read-only view over
-  * [[OrdinalRows]], or over a snapshot whose rows it converts once, as a
-  * search first expands them, serves k-NN ([[search]], [[exactTopK]]) for
-  * a frozen model, a shard, a routed cell or a streaming image, with no id
-  * lookup per edge walked.
+  * [[OrdinalRows]] serves k-NN ([[search]], [[exactTopK]]) for a frozen
+  * model, a shard, a routed cell or a streaming image, with no id lookup
+  * per edge walked. A frozen graph keeps the form it was grown in
+  * ([[OrdinalForm]]): its store and rows, shared by every view.
   *
   *  - per layer and ordinal, an `Int` neighbour row and its `Double`
   *    distances (null: no row at that layer; a view has no distances);
@@ -27,9 +27,9 @@ import graft.store.{ArenaVectorStore, CodeArena, CodeQuery, EntryPoint, GraphSna
   * [[NearestQueue]] do: each row, entry point, beam and result list is
   * the one [[HnswSearcher]] builds or returns over an id-keyed store and
   * an [[graft.store.InMemoryGraph]] fed the same inserts. Ids cross into
-  * ordinals only at the edges: [[restore]], [[snapshot]], the rows a
-  * mirror reads ([[foreachTouched]]), a frozen graph's rows and the
-  * results of a search.
+  * ordinals only at the edges: [[OrdinalForm.of]] and
+  * [[OrdinalForm.snapshot]], the rows a mirror reads ([[foreachTouched]])
+  * and the results of a search.
   *
   * One graph or view serves one thread at a time.
   */
@@ -58,38 +58,12 @@ final class OrdinalGraph[Q](params: HnswParams, store: OrdinalStore[Q]) extends 
   private[this] var nTouched = 0
   private[this] var entryTouched = false
 
-  // a lazy view's graph, whose rows convert onto ordinals on first expansion
-  private[this] var source: GraphSnapshot = null
-
   /** A read-only view of `copy` over `store` with marks, a frontier and a
     * beam of its own: it serves [[searchToInsert]], [[search]] and
     * [[exactTopK]]; without distances it cannot connect. */
   def this(params: HnswParams, store: OrdinalStore[Q], copy: OrdinalRows) = {
     this(params, store)
     rows = copy.rows; degrees = copy.degrees; entry = copy.entry; entryLayer = copy.entryLayer
-  }
-
-  /** A read-only view of `snap` over `store` that converts a row onto
-    * ordinals when a search first expands it, so it pays for the rows its
-    * searches visit, not for every edge ([[OrdinalGraph.frozenRows]]). */
-  def this(params: HnswParams, store: OrdinalStore[Q], snap: GraphSnapshot) = {
-    this(params, store)
-    source = snap
-    rows = Array.fill(snap.layers.length)(new Array[Array[Int]](store.size))
-    degrees = Array.fill(snap.layers.length)(new Array[Int](store.size))
-    snap.entryPoint.foreach { ep => entry = OrdinalGraph.ordinalOn(store, ep.point); entryLayer = ep.layer }
-  }
-
-  /** A lazy view's row of ordinal `o` at layer `lc`, converted from its
-    * snapshot; false if `o` has none there. */
-  private[this] def convert(lc: Int, o: Int): Boolean = {
-    val l = source.layers(lc)
-    val i = l.indexOf(store.ids(o))
-    i >= 0 && {
-      rows(lc)(o) = OrdinalGraph.rowOn(store, l, i)
-      degrees(lc)(o) = rows(lc)(o).length
-      true
-    }
   }
 
   def numLayers: Int = rows.length
@@ -228,7 +202,7 @@ final class OrdinalGraph[Q](params: HnswParams, store: OrdinalStore[Q]) extends 
       val cq = c.nearestDist
       val cand = c.popNearest()
       if (fq < cq) continue = false
-      else if (cand < layer.length && (layer(cand) != null || source != null && convert(lc, cand))) {
+      else if (cand < layer.length && layer(cand) != null) {
         val row = layer(cand)
         val deg = degrees(lc)(cand)
         if (fresh.length < deg) {
@@ -320,10 +294,10 @@ final class OrdinalGraph[Q](params: HnswParams, store: OrdinalStore[Q]) extends 
     out
   }
 
-  /** `q`'s distance to the stored point of an id, by its ordinal. */
-  def distances(q: Q): Long => Double = {
+  /** `q`'s distance to the stored point of an ordinal. */
+  def distances(q: Q): Int => Double = {
     val p = store.prepare(q)
-    id => store.dist(p, store.ordinalOf(id))
+    o => store.dist(p, o)
   }
 
   /** [[HnswSearcher.insert]]: store `q`'s point under `id` and connect it
@@ -368,28 +342,19 @@ final class OrdinalGraph[Q](params: HnswParams, store: OrdinalStore[Q]) extends 
     q
   }
 
-  /** Load an id-keyed snapshot whose every vertex is already stored;
-    * the links may run above the entry point's layer. Writes nothing to
-    * the record of touched rows. */
-  def restore(snap: GraphSnapshot): Unit = {
-    def ordinal(id: Long): Int = {
-      val o = store.ordinalOf(id)
-      if (o < 0) throw new IllegalStateException(s"graph vertex $id has no vector")
-      o
-    }
-    snap.entryPoint.foreach(ep => setEntry(ordinal(ep.point), ep.layer))
-    ensureLayers(snap.layers.length)
-    snap.layers.zipWithIndex.foreach { case (l, lc) =>
-      var i = 0
-      while (i < l.size) {
-        val from = l.offsets(i)
-        val m = l.offsets(i + 1) - from
-        val os = Array.tabulate(m)(k => ordinal(l.dsts(from + k)))
-        setRow(ordinal(l.srcs(i)), lc, os, java.util.Arrays.copyOfRange(l.dists, from, from + m), m)
-        i += 1
-      }
-    }
-    clearTouched()
+  /** Load `f`'s rows into this empty graph, copied: its store must hold
+    * `f`'s points at the same ordinals (a copy of `f.store`, grown or
+    * not, or a store encoded from it). Writes nothing to the record of
+    * touched rows. */
+  def restore(f: OrdinalForm[_, _]): Unit = {
+    require(entry < 0 && rows.isEmpty, "restore needs an empty graph")
+    require(f.size <= store.size, s"a form of ${f.size} points over a store of ${store.size}")
+    rows = f.links.rows.map(_.map(r => if (r == null) null else r.clone()))
+    rowDists = f.dists.map(_.map(d => if (d == null) null else d.clone()))
+    degrees = f.links.degrees.map(_.clone())
+    entry = f.links.entry
+    entryLayer = f.links.entryLayer
+    ensureLayers(entryLayer + 1)
   }
 
   /** What [[searchToInsert]] reads, copied: each row trimmed to its
@@ -405,33 +370,24 @@ final class OrdinalGraph[Q](params: HnswParams, store: OrdinalStore[Q]) extends 
     }, degrees.map(d => java.util.Arrays.copyOf(d, math.min(n, d.length))), entry, entryLayer)
   }
 
+  /** The graph frozen over `over`, which holds this graph's points at the
+    * same ordinals (the graph's own store, or a copy of it): [[rowCopy]]
+    * and each row's distances, trimmed likewise. */
+  def form[S <: OrdinalStore[Q]](over: S with OrdinalStore[Q]): OrdinalForm[Q, S] = {
+    require(over.size == store.size, s"a graph of ${store.size} points frozen over ${over.size}")
+    val links = rowCopy
+    OrdinalForm[Q, S](over, links, Array.tabulate(links.rows.length) { lc =>
+      Array.tabulate(links.rows(lc).length) { o =>
+        val d = rowDists(lc)(o)
+        if (d == null) null else java.util.Arrays.copyOf(d, degrees(lc)(o))
+      }
+    })
+  }
+
   /** The id-keyed image of the graph: rows in id order, `ids(o)` for
     * every ordinal. */
-  def snapshot: GraphSnapshot = {
-    val order = store.idOrder
-    val ids = store.ids
-    GraphSnapshot(entryPoint,
-      Array.tabulate(rows.length) { lc =>
-        val layer = rows(lc)
-        val deg = degrees(lc)
-        val present = order.filter(o => o < layer.length && layer(o) != null)
-        val offsets = new Array[Int](present.length + 1)
-        var i = 0
-        while (i < present.length) { offsets(i + 1) = offsets(i) + deg(present(i)); i += 1 }
-        val dsts = new Array[Long](offsets(present.length))
-        val dists = new Array[Double](dsts.length)
-        i = 0
-        while (i < present.length) {
-          val o = present(i)
-          var j = offsets(i)
-          var k = 0
-          while (k < deg(o)) { dsts(j) = ids(layer(o)(k)); j += 1; k += 1 }
-          System.arraycopy(rowDists(lc)(o), 0, dists, offsets(i), deg(o))
-          i += 1
-        }
-        LayerCsr(present.map(o => ids(o)), offsets, dsts, dists)
-      })
-  }
+  def snapshot: GraphSnapshot =
+    OrdinalForm[Q, OrdinalStore[Q]](store, OrdinalRows(rows, degrees, entry, entryLayer), rowDists).snapshot
 }
 
 /** [[OrdinalGraph.rowCopy]]: per layer and ordinal, the neighbour
@@ -440,92 +396,107 @@ final case class OrdinalRows(rows: Array[Array[Array[Int]]], degrees: Array[Arra
                              entry: Int, entryLayer: Int)
 
 object OrdinalGraph {
-  /** The ordinal of graph vertex `id` in `store`, which must hold it. */
-  private[hnsw] def ordinalOn(store: OrdinalStore[_], id: Long): Int = {
-    val o = store.ordinalOf(id)
-    if (o < 0) throw new IllegalStateException(s"graph vertex $id has no vector")
-    o
-  }
-
-  /** Row `i` of `l` on `store`'s ordinals. */
-  private[hnsw] def rowOn(store: OrdinalStore[_], l: LayerCsr, i: Int): Array[Int] = {
-    val from = l.offsets(i)
-    val row = new Array[Int](l.offsets(i + 1) - from)
-    var k = 0
-    while (k < row.length) { row(k) = ordinalOn(store, l.dsts(from + k)); k += 1 }
-    row
-  }
-
-  /** Every row of `snap` on `store`'s ordinals, without distances: a
-    * frozen graph's serving form, for read-only views that share it. */
-  def frozenRows(store: OrdinalStore[_], snap: GraphSnapshot): OrdinalRows = {
-    val rows = snap.layers.map { l =>
-      val layer = new Array[Array[Int]](store.size)
-      var i = 0
-      while (i < l.size) { layer(ordinalOn(store, l.srcs(i))) = rowOn(store, l, i); i += 1 }
-      layer
-    }
-    OrdinalRows(rows, rows.map(_.map(r => if (r == null) 0 else r.length)),
-      snap.entryPoint.fold(-1)(ep => ordinalOn(store, ep.point)), snap.entryPoint.fold(-1)(_.layer))
-  }
-
   /** The grow path of every sequential build and routed cell kernel: load
-    * `prior`, whose vertices `store` holds, then insert `rows` in order at
-    * their hashed layers. Returns the grown graph's snapshot. */
-  def grow[Q](params: HnswParams, seed: Long, store: OrdinalStore[Q],
-              prior: Option[GraphSnapshot], rows: Iterator[(Long, Q)]): GraphSnapshot = {
+    * `prior`, whose points `store` holds at the same ordinals, then insert
+    * `rows` in order at their hashed layers. Returns the grown graph's
+    * form over `store`, trimmed. */
+  def grow[Q, S <: OrdinalStore[Q]](params: HnswParams, seed: Long, store: S with OrdinalStore[Q],
+                                    prior: Option[OrdinalForm[_, _]],
+                                    rows: Iterator[(Long, Q)]): OrdinalForm[Q, S] = {
     val graph = new OrdinalGraph(params, store)
     prior.foreach(graph.restore)
     rows.foreach { case (id, q) => graph.insert(id, q, params.selectLayerByHash(id, seed)) }
-    graph.snapshot
+    store.trim()
+    graph.form[S](store)
   }
 }
 
-/** A frozen graph (a model, a shard, a routed cell) served through
-  * [[OrdinalGraph]] views. Its store, built by [[frozenStore]] on the
-  * first view under a key (a float metric), serves every later view; so
-  * do its [[OrdinalGraph.frozenRows]], unless [[sharedRows]] is off and
-  * each view converts the rows it visits. Both are held in transient
-  * fields: built once per JVM, never serialized. */
-trait FrozenGraph[Q] extends Serializable {
-  def snapshot: GraphSnapshot
-  /** The graph's members in a store, under `key`. */
-  protected def frozenStore(key: String): OrdinalStore[Q]
-  protected def sharedRows: Boolean = true
-  @transient private[this] var builtKey: String = null
-  @transient private[this] var built: (OrdinalStore[Q], OrdinalRows) = null
+/** A frozen graph in the form it was grown in, the serving form of every
+  * holder (a model, a shard, a routed cell): its store, and on the
+  * store's ordinals every row ([[OrdinalRows]]) with its distances.
+  * Views share the rows ([[view]]); a grow restores them by array copy
+  * ([[OrdinalGraph.restore]]). Serialized as is, at about 12 bytes per
+  * edge; nothing is rebuilt after a round trip. The distances stay
+  * because neither a PQ cell encoded from a float cell (float distances
+  * that its codes cannot recompute) nor a solo-built cell (ADC distances
+  * from raw vectors it no longer holds) could derive them again, and the
+  * id-keyed image carries them. */
+final case class OrdinalForm[Q, S <: OrdinalStore[Q]](store: S, links: OrdinalRows,
+                                                      dists: Array[Array[Array[Double]]]) {
+  def size: Int = store.size
 
-  /** A fresh view, for one thread, of the graph under `key`. */
-  protected final def frozenView(params: HnswParams, key: String): OrdinalGraph[Q] = {
-    val (s, rows) = synchronized {
-      if (builtKey != key) {
-        val s = frozenStore(key)
-        built = (s, if (sharedRows) OrdinalGraph.frozenRows(s, snapshot) else null)
-        builtKey = key
-      }
-      built
+  /** A fresh read-only view, for one thread. */
+  def view(params: HnswParams): OrdinalGraph[Q] = new OrdinalGraph(params, store, links)
+
+  /** The same graph over `s`, which holds this form's ids at the same
+    * ordinals (the codes a PQ tier encodes from a float form). */
+  def over[Q2, S2 <: OrdinalStore[Q2]](s: S2 with OrdinalStore[Q2]): OrdinalForm[Q2, S2] = {
+    require(s.size == size, s"a form of $size points over a store of ${s.size}")
+    OrdinalForm[Q2, S2](s, links, dists)
+  }
+
+  def entryPoint: Option[EntryPoint] =
+    if (links.entry < 0) None else Some(EntryPoint(store.ids(links.entry), links.entryLayer))
+
+  /** The id-keyed image: rows in id order, `ids(o)` for every ordinal.
+    * Only the id-keyed edges derive it: the parquet image, the links
+    * table and the frontier setup. */
+  def snapshot: GraphSnapshot = {
+    val order = store.idOrder
+    val ids = store.ids
+    GraphSnapshot(entryPoint,
+      Array.tabulate(links.rows.length) { lc =>
+        val layer = links.rows(lc)
+        val deg = links.degrees(lc)
+        val present = order.filter(o => o < layer.length && layer(o) != null)
+        val offsets = new Array[Int](present.length + 1)
+        var i = 0
+        while (i < present.length) { offsets(i + 1) = offsets(i) + deg(present(i)); i += 1 }
+        val dsts = new Array[Long](offsets(present.length))
+        val ds = new Array[Double](dsts.length)
+        i = 0
+        while (i < present.length) {
+          val o = present(i)
+          var j = offsets(i)
+          var k = 0
+          while (k < deg(o)) { dsts(j) = ids(layer(o)(k)); j += 1; k += 1 }
+          System.arraycopy(dists(lc)(o), 0, ds, offsets(i), deg(o))
+          i += 1
+        }
+        LayerCsr(present.map(o => ids(o)), offsets, dsts, ds)
+      })
+  }
+}
+
+object OrdinalForm {
+  type Floats = OrdinalForm[Array[Float], ArenaVectorStore]
+  type Codes = OrdinalForm[CodeQuery, CodeArena]
+
+  /** `snap` on the ordinals of `store`, which must hold every vertex:
+    * how an id-keyed graph (a parquet image, a compacted links table, a
+    * mirror) becomes a serving form. */
+  def of[Q, S <: OrdinalStore[Q]](store: S with OrdinalStore[Q], snap: GraphSnapshot): OrdinalForm[Q, S] = {
+    def ordinal(id: Long): Int = {
+      val o = store.ordinalOf(id)
+      if (o < 0) throw new IllegalStateException(s"graph vertex $id has no vector")
+      o
     }
-    if (rows != null) new OrdinalGraph(params, s, rows) else new OrdinalGraph(params, s, snapshot)
+    val n = store.size
+    val rows = snap.layers.map(_ => new Array[Array[Int]](n))
+    val dists = snap.layers.map(_ => new Array[Array[Double]](n))
+    snap.layers.zipWithIndex.foreach { case (l, lc) =>
+      var i = 0
+      while (i < l.size) {
+        val from = l.offsets(i)
+        val o = ordinal(l.srcs(i))
+        rows(lc)(o) = Array.tabulate(l.offsets(i + 1) - from)(k => ordinal(l.dsts(from + k)))
+        dists(lc)(o) = java.util.Arrays.copyOfRange(l.dists, from, l.offsets(i + 1))
+        i += 1
+      }
+    }
+    OrdinalForm[Q, S](store, OrdinalRows(rows, rows.map(_.map(r => if (r == null) 0 else r.length)),
+      snap.entryPoint.fold(-1)(ep => ordinal(ep.point)), snap.entryPoint.fold(-1)(_.layer)), dists)
   }
-}
-
-/** A frozen graph of float vectors, served under a metric. */
-trait FrozenVectors extends FrozenGraph[Array[Float]] {
-  def vectors: LongVecMap
-  protected final def frozenStore(metric: String): OrdinalStore[Array[Float]] = {
-    val ids = vectors.keysIterator.toArray
-    ArenaVectorStore.of(metric, ids, ids.map(vectors(_)))
-  }
-}
-
-/** A frozen graph of u64 codes (a code model or a routed code/PQ cell). */
-trait FrozenCodes extends FrozenGraph[CodeQuery] {
-  /** The graph's codes in a store (code stores take no key). */
-  protected def codeArena: CodeArena
-  protected final def frozenStore(key: String): OrdinalStore[CodeQuery] = codeArena
-
-  /** A fresh view, for one thread. */
-  def view(params: HnswParams): OrdinalGraph[CodeQuery] = frozenView(params, "")
 }
 
 /** What [[HnswDistributed.searchBroadcast]] serves: a broadcast value

@@ -1,29 +1,26 @@
 package graft.hnsw
 
+import graft.store.OrdinalStore
+
 /** The predicated-serving census machinery shared by all three routed
   * serving tiers — float ([[HnswRouted]]), u64 Hamming codes
   * ([[HnswRoutedCodes]]) and PQ/ADC ([[HnswRoutedPq]]). One kernel,
   * parameterized over the member representation, so a fix lands once
-  * instead of three hand-synced times (the round-15 failure mode:
-  * "iterate the smaller side" was one fix applied three times by hand,
-  * and the small-allow eligibleIds fast path then missed the PQ copy).
+  * instead of three hand-synced times (the round-15 failure mode: one
+  * fix applied three times by hand, and a later fast path then missed
+  * the PQ copy).
   *
   * Contract per predicated shard serve:
   *  - `eligible(id)`: allowed (sorted allow-set membership when an
   *    allow-set rides) AND not tombstoned (sorted dead-set membership).
-  *  - `eligibleCount`: ONE census per shard, iterating the SMALLER
-  *    side — a label partition's allow-set can be 16M ids (the
-  *    driver-path ceiling) while a cell holds tens of thousands;
-  *    walking the allow array per cell would cost O(|allow| × nCells)
-  *    across the batch where walking the cell's keys costs
-  *    O(cellN log |allow|), and vice versa for tiny allow-sets.
-  *  - `eligibleIds`: materialized lazily, ONCE per shard, and only if
-  *    some query needs an exact scan (per-query whole-cell
+  *  - `eligibleCount`: ONE census per shard, one pass over the cell's
+  *    stored ids (`ids(o)` on the store's ordinals) with a binary
+  *    search into each sorted set: O(cellN log(|allow| + |dead|)), and
+  *    no id -> ordinal map, so a cell read afresh from disk builds none.
+  *  - `eligibleOrdinals`: materialized lazily, ONCE per shard, and only
+  *    if some query needs an exact scan (per-query whole-cell
   *    re-filtering was a measured 2.5× serving tax concentrated in the
-  *    mostly-dead cells' tasks). Takes the small-allow fast path too:
-  *    with a tiny allow-set in the exhaustive/exact-scan regime,
-  *    iterating the cell's keys would pay O(cellN log |allow|) per
-  *    shard where O(|allow| log dead) suffices.
+  *    mostly-dead cells' tasks).
   *  - `cutoverToExact`: the density-aware regime switch — a cell whose
   *    eligible FRACTION is low defeats the beam (the top-beam of a
   *    98%-dead cell holds ~no eligible ids, so nearly every query
@@ -39,72 +36,34 @@ package graft.hnsw
   */
 private[hnsw] object PredicatedCensus {
 
-  /** Minimal read view of one cell's member-id set — the only part of
-    * the member representation the census needs. */
-  trait Members {
-    def size: Int
-    def contains(id: Long): Boolean
-    def foreachKey(f: Long => Unit): Unit
-  }
-
-  object Members {
-    def ofVecMap(m: LongVecMap): Members =
-      new Members {
-        def size: Int = m.size
-        def contains(id: Long): Boolean = m.contains(id)
-        def foreachKey(f: Long => Unit): Unit = m.foreachKey(f)
-      }
-    def ofLongLongMap(m: LongLongMap): Members =
-      new Members {
-        def size: Int = m.size
-        def contains(id: Long): Boolean = m.contains(id)
-        def foreachKey(f: Long => Unit): Unit = m.foreach((id, _) => f(id))
-      }
-  }
-
-  /** Per-shard eligibility census over `allow` (sorted; consulted only
-    * when `hasAllow`) and `dead` (sorted tombstones). Constructed once
-    * per shard serve; `eligibleIds` stays unmaterialized unless an
-    * exact scan runs. */
-  final class Census(m: Members, hasAllow: Boolean,
+  /** Per-shard eligibility census of `store`'s points over `allow`
+    * (sorted; consulted only when `hasAllow`) and `dead` (sorted
+    * tombstones). Constructed once per shard serve; `eligibleOrdinals`
+    * stays unmaterialized unless an exact scan runs. */
+  final class Census(store: OrdinalStore[_], hasAllow: Boolean,
                      allow: Array[Long], dead: Array[Long]) {
 
-    val cellN: Int = m.size
+    val cellN: Int = store.size
+    private[this] val ids = store.ids
 
     @inline def eligible(id: Long): Boolean =
       (!hasAllow || java.util.Arrays.binarySearch(allow, id) >= 0) &&
         (dead.length == 0 || java.util.Arrays.binarySearch(dead, id) < 0)
 
-    /** Eligible-member count — iterates the smaller of (allow, cell). */
     val eligibleCount: Int =
-      if (hasAllow) {
-        if (allow.length <= cellN)
-          allow.count(id => m.contains(id) &&
-            (dead.length == 0 || java.util.Arrays.binarySearch(dead, id) < 0))
-        else {
-          var c = 0
-          m.foreachKey(id => if (eligible(id)) c += 1)
-          c
-        }
+      if (!hasAllow && dead.length == 0) cellN
+      else {
+        var c = 0
+        var o = 0
+        while (o < cellN) { if (eligible(ids(o))) c += 1; o += 1 }
+        c
       }
-      else if (dead.length == 0) cellN
-      else cellN - dead.count(m.contains)
 
-    /** Materialized once, on first exact scan; smaller-side iteration
-      * like the count (the allow array is sorted, and the map-key path
-      * is unordered — both are fine: every consumer is a total-order
-      * queue selection, order-independent by construction). */
-    lazy val eligibleIds: Array[Long] = {
-      val b = Array.newBuilder[Long]
-      if (hasAllow && allow.length <= cellN)
-        // iterating the allow array IS the allow check — only the
-        // dead-set probe remains (eligible() would redo the allow
-        // binary search the iteration already answered)
-        allow.foreach(id => if (m.contains(id) &&
-          (dead.length == 0 || java.util.Arrays.binarySearch(dead, id) < 0)) b += id)
-      else m.foreachKey(id => if (eligible(id)) b += id)
-      b.result()
-    }
+    /** Materialized once, on first exact scan, in ordinal order (every
+      * consumer is a total-order queue selection). */
+    lazy val eligibleOrdinals: Array[Int] =
+      if (eligibleCount == cellN) Array.range(0, cellN)
+      else Array.range(0, cellN).filter(o => eligible(ids(o)))
 
     /** Density-aware cutover: serve by exact scan when the eligible set
       * is smaller than the beam or below ~25% of the cell. */
@@ -128,18 +87,18 @@ private[hnsw] object PredicatedCensus {
     * eligible prefix carries the queue's total (dist, id) order). The
     * PQ tier's ADC kernel stays separate: its candidate contract always
     * runs the census and has no identity-filter branch. */
-  def serve[Q](m: Members, probes: Iterator[(Long, Q)], k: Int, ef: Int,
+  def serve[Q](store: OrdinalStore[_], probes: Iterator[(Long, Q)], k: Int, ef: Int,
                exhaustive: Boolean, hasAllow: Boolean, allow: Array[Long],
                dead: Array[Long])(
                beam: (Q, Int, Int) => FurthestQueue,
-               dist: Q => Long => Double): Iterator[(Long, Long, Double)] = {
+               dist: Q => Int => Double): Iterator[(Long, Long, Double)] = {
     def plain(qid: Long, q: Q): Iterator[(Long, Long, Double)] =
       beam(q, k, ef).iterator.map(nb => (qid, nb.dst, nb.dist))
     if (!hasAllow && dead.isEmpty)
       return probes.flatMap { case (qid, q) => plain(qid, q) }
-    val cen = new Census(m, hasAllow, allow, dead)
+    val cen = new Census(store, hasAllow, allow, dead)
     def exactScan(qid: Long, q: Q): List[(Long, Long, Double)] =
-      exactScanTopK(cen.eligibleIds, k, dist(q))
+      exactScanTopK(cen.eligibleOrdinals, store.ids, k, dist(q))
         .iterator.map(nb => (qid, nb.dst, nb.dist)).toList
     val kp0 = math.max(4 * k, ef)
     if (cen.eligibleCount == 0) Iterator.empty
@@ -185,16 +144,17 @@ private[hnsw] object PredicatedCensus {
     }
   }
 
-  /** k-bounded exact selection over `eligibleIds`: one primitive
-    * admission compare rejects almost every candidate; the returned
-    * queue carries the total (dist, id) order at the boundary. */
-  def exactScanTopK(eligibleIds: Array[Long], k: Int,
-                    dist: Long => Double): FurthestQueue = {
+  /** k-bounded exact selection over ordinals `ords` of a store whose
+    * ids are `ids`: one primitive admission compare rejects almost every
+    * candidate; the returned queue carries the total (dist, id) order at
+    * the boundary. */
+  def exactScanTopK(ords: Array[Int], ids: Array[Long], k: Int,
+                    dist: Int => Double): FurthestQueue = {
     val fq = new FurthestQueue()
     var i = 0
-    while (i < eligibleIds.length) {
-      val id = eligibleIds(i)
-      val d = dist(id)
+    while (i < ords.length) {
+      val id = ids(ords(i))
+      val d = dist(ords(i))
       if (fq.size < k || d < fq.furthestDist ||
           (d == fq.furthestDist && id < fq.dstAt(fq.size - 1))) {
         fq.insert(id, d)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions.{col, lit, max}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.LongAccumulator
 
-import graft.store.{EntryPoint, GraphSnapshot, LayerCsr}
+import graft.store.{EntryPoint, GraphSnapshot, LayerCsr, OrdinalStore}
 
 /** One tier's binding into the SHARED routed lifecycle
   * ([[RoutedLifecycle]]): the float ([[HnswRouted]]), u64-code
@@ -53,12 +53,13 @@ private[graft] trait RoutedTier[S, I] extends Serializable {
   /** Remedy hint appended to the ingest resurrect fail-fast. */
   def resurrectHint: String
   // ---- shard surface (executor-side) ----
-  def memberCount(s: S): Int
-  def containsId(s: S, id: Long): Boolean
+  /** The shard's graph in its serving form. */
+  def form(s: S): OrdinalForm[_, _ <: OrdinalStore[_]]
+  final def memberCount(s: S): Int = form(s).size
+  final def containsId(s: S, id: Long): Boolean = form(s).store.ordinalOf(id) >= 0
   /** LAZY member-id walk — callers `exists`/`take` without paying a
     * full-table foreach. */
-  def idIterator(s: S): Iterator[Long]
-  def snapshot(s: S): GraphSnapshot
+  final def idIterator(s: S): Iterator[Long] = form(s).store.idIterator
 }
 
 /** The shared lifecycle over [[RoutedTier]] — every function here is
@@ -651,7 +652,7 @@ private[hnsw] object RoutedImage {
                             dir: String, shards: RDD[(Int, S)]): Unit = {
     val tt = t
     spark.createDataset(shards.flatMap { case (cell, s) =>
-      tt.snapshot(s).layers.iterator.zipWithIndex.flatMap { case (csr, lc) =>
+      tt.form(s).snapshot.layers.iterator.zipWithIndex.flatMap { case (csr, lc) =>
         csr.entriesIterator.map { case (src, dsts, dists) =>
           (cell, lc, src, dsts, dists)
         }
@@ -660,7 +661,7 @@ private[hnsw] object RoutedImage {
       .write.mode("overwrite").parquet(s"$dir/links")
 
     spark.createDataset(shards.map { case (cell, s) =>
-      tt.snapshot(s).entryPoint.fold((cell, -1L, -1))(ep => (cell, ep.point, ep.layer))
+      tt.form(s).entryPoint.fold((cell, -1L, -1))(ep => (cell, ep.point, ep.layer))
     })(entryRowEnc).toDF("cell", "point", "layer")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/entries")
   }

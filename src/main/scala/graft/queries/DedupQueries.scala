@@ -415,7 +415,7 @@ object DedupQueries {
         HnswParams.standard(efConstruction = 64, efSearch = 128, m = 16),
         seed = 42L, key = s"$dir|simhash64", batched = true)
       import s.implicits._
-      val queries = s.createDataset(model.codes.toSeq.sortBy(_._1))
+      val queries = s.createDataset(model.form.store.rows.toSeq.sortBy(_._1))
         .toDF("qid", "qcode")
       HnswCodes.search(queries, model, 64)
         .filter(col("hamming") <= 5)

@@ -20,7 +20,7 @@ import graft.hnsw.LongVecMap
   *
   * @param matchThreshold distance at/below which two vectors are duplicates
   */
-final class ArenaVectorStore(metricName: String, matchThreshold: Double = 1e-12)
+final class ArenaVectorStore(val metricName: String, matchThreshold: Double = 1e-12)
     extends OrdinalStore[Array[Float]] {
   import ArenaVectorStore._
 
@@ -38,16 +38,13 @@ final class ArenaVectorStore(metricName: String, matchThreshold: Double = 1e-12)
     java.util.Arrays.copyOfRange(data, offsets(o), offsets(o + 1))
   }
 
-  /** Id -> copy of the vector, for every stored vector. */
-  def toLongVecMap: LongVecMap = {
-    val m = new LongVecMap(n)
-    var o = 0
-    while (o < n) {
-      m.put(ids(o), java.util.Arrays.copyOfRange(data, offsets(o), offsets(o + 1)))
-      o += 1
-    }
-    m
-  }
+  /** Copies of the stored vectors in ordinal order, under their ids. */
+  def rows: Iterator[(Long, Array[Float])] =
+    Iterator.range(0, n).map(o => (ids(o), java.util.Arrays.copyOfRange(data, offsets(o), offsets(o + 1))))
+
+  /** Id -> copy of the vector, for every stored vector, put in ordinal
+    * order. */
+  def toLongVecMap: LongVecMap = LongVecMap.from(rows, n)
 
   /** A copy trimmed to the stored vectors. The id map stays behind: the
     * copy rebuilds it on its first lookup. */
@@ -59,6 +56,13 @@ final class ArenaVectorStore(metricName: String, matchThreshold: Double = 1e-12)
     c.data = java.util.Arrays.copyOf(data, offsets(n))
     c.norms = java.util.Arrays.copyOf(norms, n)
     c
+  }
+
+  override private[graft] def trim(): Unit = {
+    super.trim()
+    offsets = java.util.Arrays.copyOf(offsets, n + 1)
+    data = java.util.Arrays.copyOf(data, offsets(n))
+    norms = java.util.Arrays.copyOf(norms, n)
   }
 
   /** Room for one more vector of `floats` floats, growing by half. */

@@ -9,20 +9,32 @@ import graft.hnsw.LongLongMap
   * ordinal ([[dist]]) or a run of them ([[measure]]). Two implementations,
   * so the engine's call sites stay at most bimorphic: [[ArenaVectorStore]]
   * (float vectors) and [[CodeArena]] (u64 codes). The id -> ordinal map is
-  * built from `ids` on first lookup and never serialized.
+  * built from `ids` on first lookup and never serialized; a search reads
+  * `ids` only, so a store that only serves never builds it.
   */
 abstract class OrdinalStore[Q] extends Serializable {
   type Prepared
   private[store] var n = 0
   private[graft] var ids = new Array[Long](0)
-  @transient private[this] lazy val ordinals: LongLongMap = {
-    val m = new LongLongMap(n)
-    var o = 0
-    while (o < n) { m.put(ids(o), o); o += 1 }
-    m
+  @transient private[this] var idMap: LongLongMap = null
+
+  private[this] def ordinals: LongLongMap = {
+    if (idMap == null) {
+      val m = new LongLongMap(n)
+      var o = 0
+      while (o < n) { m.put(ids(o), o); o += 1 }
+      idMap = m
+    }
+    idMap
   }
 
   def size: Int = n
+
+  /** Whether the id -> ordinal map has been built. */
+  private[graft] def idMapBuilt: Boolean = idMap != null
+
+  /** The stored ids in ordinal order. */
+  private[graft] def idIterator: Iterator[Long] = ids.iterator.take(n)
 
   /** The stored ordinal of `id`, or -1. */
   private[graft] def ordinalOf(id: Long): Int = ordinals.getOrElse(id, -1L).toInt
@@ -41,6 +53,9 @@ abstract class OrdinalStore[Q] extends Serializable {
     n += 1
     n - 1
   }
+
+  /** Shrink every array to the stored points. */
+  private[graft] def trim(): Unit = ids = java.util.Arrays.copyOf(ids, n)
 
   /** Whether two points at distance `d` are duplicates. */
   def isMatch(d: Double): Boolean
@@ -80,6 +95,18 @@ final class CodeArena extends OrdinalStore[CodeQuery] {
   def isMatch(d: Double): Boolean = d <= 0.0
   def prepare(q: CodeQuery): CodeQuery = q
 
+  /** The stored codes in ordinal order, under their ids. */
+  def rows: Iterator[(Long, Long)] = Iterator.range(0, n).map(o => (ids(o), codes(o)))
+
+  /** A copy trimmed to the stored codes; its id map is rebuilt on first
+    * lookup. */
+  def copy(): CodeArena = CodeArena.of(java.util.Arrays.copyOf(ids, n), java.util.Arrays.copyOf(codes, n))
+
+  override private[graft] def trim(): Unit = {
+    super.trim()
+    codes = java.util.Arrays.copyOf(codes, n)
+  }
+
   /** Append `q.code` under `id`, which must be new. */
   def insert(id: Long, q: CodeQuery): Int = {
     if (n == ids.length) {
@@ -109,13 +136,5 @@ object CodeArena {
     a.codes = codes
     a.n = ids.length
     a
-  }
-
-  /** `m`'s codes under their ids, in `m`'s order. */
-  def of(m: LongLongMap): CodeArena = {
-    val (ids, codes) = (new Array[Long](m.size), new Array[Long](m.size))
-    var i = 0
-    m.foreach { (id, c) => ids(i) = id; codes(i) = c; i += 1 }
-    of(ids, codes)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.hnsw.{HnswModel, OrdinalGraph, ServingImage}
+import graft.hnsw.{HnswModel, OrdinalForm, OrdinalGraph, ServingImage}
 import graft.hnsw.HnswDistributed.BuildConfig
 import graft.store.ArenaVectorStore
 
@@ -131,13 +131,12 @@ object StreamingIngest {
 
     private[streaming] def bumpVersion(): Unit = mutations += 1
 
-    /** The id-keyed model of the current state (graph snapshot plus a
-      * copy of every vector) for callers that want an [[HnswModel]];
-      * serving reads [[image]] instead. */
+    /** The model of the current state, copied (the arena and the graph's
+      * rows with their distances) for callers that want an
+      * [[HnswModel]]; serving reads [[image]] instead. */
     def model: HnswModel = synchronized {
       if (snapAt != mutations) {
-        snapCache = HnswModel(cfg.params, cfg.metric, graph.snapshot,
-          store.toLongVecMap)
+        snapCache = HnswModel(cfg.params, graph.form[ArenaVectorStore](store.copy()))
         snapAt = mutations
       }
       snapCache
@@ -192,7 +191,7 @@ object StreamingIngest {
         snap: graft.store.GraphSnapshot,
         rows: Array[(Long, Array[Float])]): Unit = synchronized {
       rows.foreach { case (id, v) => store.insert(id, v) }
-      graph.restore(snap)
+      graph.restore(OrdinalForm.of(store, snap))
       bumpVersion()
     }
   }

@@ -161,16 +161,18 @@ class HnswRoutedPqLifecycleSpec extends SparkSpec {
 
   test("content fingerprint is order-independent and content-sensitive") {
     val rows = (0 until 64).map(i => i.toLong -> vecFromHash(i.toLong, 3L, 8))
-    val a = LongVecMap.from(rows.iterator)
-    val b = LongVecMap.from(rows.reverseIterator)
+    def arena(rs: Seq[(Long, Array[Float])]) =
+      graft.store.ArenaVectorStore.of("l2", rs.map(_._1).toArray, rs.map(_._2).toArray)
+    val a = arena(rows)
+    val b = arena(rows.reverse)
     assert(HnswRoutedPq.contentFingerprint(a) ==
       HnswRoutedPq.contentFingerprint(b))
-    val mutated = LongVecMap.from(rows.iterator)
-    mutated(5L) = mutated(5L).clone()
-    mutated(5L)(0) += 1e-4f
+    val changed = rows(5)._2.clone()
+    changed(0) += 1e-4f
+    val mutated = arena(rows.updated(5, (5L, changed)))
     assert(HnswRoutedPq.contentFingerprint(a) !=
       HnswRoutedPq.contentFingerprint(mutated))
-    val dropped = LongVecMap.from(rows.drop(1).iterator)
+    val dropped = arena(rows.drop(1))
     assert(HnswRoutedPq.contentFingerprint(a) !=
       HnswRoutedPq.contentFingerprint(dropped))
   }

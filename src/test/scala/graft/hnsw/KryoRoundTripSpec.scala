@@ -6,7 +6,7 @@ import org.apache.spark.storage.StorageLevel
 import graft.SparkSpec
 import graft.hnsw.HnswDistributed.BuildConfig
 import graft.operators.ExactKnn
-import graft.store.{ArrayVectorStore, CodeQuery, Metrics}
+import graft.store.{ArenaVectorStore, ArrayVectorStore, CodeQuery, Metrics}
 
 /** Forced serialization round-trips of every cached/broadcast shard
   * payload. The hazard class is real, not theoretical: scala's
@@ -177,12 +177,15 @@ class KryoRoundTripSpec extends SparkSpec {
     }
     val fresh = HnswDistributed.buildFromArray(spark, rows.toArray, cfg)
     sameBytes(fresh, () => fresh.kernel())
-    val sm = HnswDistributed.ShardModel(rt.vectors, rt.snapshot)
+    // a holder restored from an id-keyed graph, its arena in map order
+    val (ids, vs) = rt.vectors.iterator.toArray.unzip
+    val restored = OrdinalForm.of(ArenaVectorStore.of(cfg.metric, ids, vs), rt.snapshot)
+    val sm = HnswDistributed.ShardModel(restored)
     sameBytes(sm, () => sm.view(cfg))
     val smRt = kryoRoundTrip(sm)
     assert(smRt.vectors.size == sm.vectors.size &&
       smRt.vectors.keySet == sm.vectors.keySet)
-    val cell = HnswRouted.CellShard(3, rt.vectors, rt.snapshot)
+    val cell = HnswRouted.CellShard(3, restored)
     sameBytes(cell, () => cell.view(cfg))
     val cellRt = kryoRoundTrip(cell)
     assert(cellRt.cell == 3)
@@ -299,5 +302,79 @@ class KryoRoundTripSpec extends SparkSpec {
       assert(bits(rtKernel.exactTopK(qvec, 10, _ % 2 == 0)) ==
         bits(kernel.exactTopK(qvec, 10, _ % 2 == 0)))
     }
+  }
+
+  test("all seven holders round-trip into what they serve; a code or PQ cell serves without an id map") {
+    @inline def mix(z0: Long): Long = {
+      var z = z0 + 0x9E3779B97F4A7C15L
+      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+      z ^ (z >>> 31)
+    }
+    def b(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+    def bits(q: FurthestQueue): Seq[(Long, Long)] = q.iterator.map(nb => (nb.dst, b(nb.dist))).toSeq
+    def sig(s: graft.store.GraphSnapshot) = (s.entryPoint, s.layers.toSeq.map(l =>
+      (l.srcs.toSeq, l.offsets.toSeq, l.dsts.toSeq, l.dists.toSeq.map(b))))
+    /** The round trip serves the original's top-k, bits included, and
+      * derives the original's snapshot. */
+    def check[H: scala.reflect.ClassTag, Q](holder: H, queries: Seq[Q])(view: H => OrdinalGraph[Q],
+        snap: H => graft.store.GraphSnapshot): H = {
+      val name = holder.getClass.getSimpleName
+      val rt = kryoRoundTrip(holder)
+      val (got, want) = (view(rt), view(holder))
+      queries.foreach(q => assert(bits(got.search(q, 10, 0)) == bits(want.search(q, 10, 0)), name))
+      assert(sig(snap(rt)) == sig(snap(holder)), s"$name snapshot")
+      rt
+    }
+    val params = cfg.params
+    val rows = (0 until 900).map(i => (i.toLong * 7 - 300, vecFromHash(i.toLong, 29L, 16)))
+    val vecQueries = (0 until 12).map(q => vecFromHash(q + 60000L, 31L, 16))
+    val rowsDf = rows.toDF("id", "vec")
+    check(HnswDistributed.buildFromArray(spark, rows.toArray, cfg), vecQueries)(_.kernel(), _.snapshot)
+    HnswDistributed.buildSharded(rowsDf, cfg, numShards = 2, persist = false).shards.collect()
+      .foreach(s => check(s, vecQueries)(_.view(cfg), _.snapshot))
+    HnswRouted.build(rowsDf, cfg, nCells = 3, persist = false).shards.collect()
+      .foreach { case (_, c) => check(c, vecQueries)(_.view(cfg), _.snapshot) }
+
+    val codesDf = rows.map { case (id, _) => (id, mix(id)) }.toDF("id", "code")
+    val hamming = (0 until 12).map(q => CodeQuery.hamming(mix(q + 70000L)))
+    check(HnswCodes.build(codesDf, params), hamming)(_.view(), _.snapshot)
+    val codeCells = HnswRoutedCodes.build(codesDf, params, nCells = 3, persist = false)
+      .shards.collect().map(_._2)
+    codeCells.foreach(c => check(c, hamming)(_.view(params), _.snapshot))
+    val l2 = cfg.copy(metric = "l2")
+    val pq = HnswPq.fromModelCached(HnswDistributed.buildFromArray(spark, rows.toArray, l2), "kryo-seven")
+    val adc = vecQueries.map(CodeQuery.adc(_, pq.codebook))
+    check(pq, adc)(_.view(), _.snapshot)
+    val routedPq = HnswRoutedPq.fromRouted(HnswRouted.build(rowsDf, l2, nCells = 3, persist = false),
+      persist = false)
+    val pqCells = routedPq.shards.collect().map(_._2)
+    pqCells.foreach(c => check(c, adc)(_.view(params), _.snapshot))
+
+    // a beam query and an exhaustive (exact-scan) query on a fresh round
+    // trip, as a DISK_ONLY serve reads it: equal to the original's, and
+    // the store's id -> ordinal map is never built
+    val codeCell = codeCells.maxBy(_.form.size)
+    val dead = Array(codeCell.form.store.ids(0))
+    def codeServe(c: HnswRoutedCodes.CodeCellShard, exhaustive: Boolean) = {
+      val view = c.view(params)
+      PredicatedCensus.serve(c.form.store, Iterator((0L, hamming.head.code)), 10, 16, exhaustive,
+        hasAllow = false, Array.empty, dead)(
+        (qc, kk, ef) => view.search(CodeQuery.hamming(qc), kk, ef),
+        qc => view.distances(CodeQuery.hamming(qc))).toList
+    }
+    val codeRt = kryoRoundTrip(codeCell)
+    for (exhaustive <- Seq(false, true))
+      assert(codeServe(codeRt, exhaustive) == codeServe(codeCell, exhaustive))
+    assert(!codeRt.form.store.idMapBuilt, "a round-tripped code cell built its id map to serve")
+
+    val pqCell = pqCells.maxBy(_.form.size)
+    def pqServe(c: HnswRoutedPq.PqCellShard, exhaustive: Boolean) =
+      HnswRoutedPq.serveAdcShard(params, c, routedPq.codebook, Array(c.form.store.ids(0)),
+        Iterator((0L, vecQueries.head)), 10, exhaustive, 0, hasAllow = false, Array.empty).toList
+    val pqRt = kryoRoundTrip(pqCell)
+    for (exhaustive <- Seq(false, true))
+      assert(pqServe(pqRt, exhaustive) == pqServe(pqCell, exhaustive))
+    assert(!pqRt.form.store.idMapBuilt, "a round-tripped PQ cell built its id map to serve")
   }
 }

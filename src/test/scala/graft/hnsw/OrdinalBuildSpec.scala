@@ -3,7 +3,8 @@ package graft.hnsw
 import graft.SparkSpec
 import graft.functions.PqKernels
 import graft.hnsw.HnswDistributed.BuildConfig
-import graft.store.{AdcVectorStore, ArrayVectorStore, GraphSnapshot, InMemoryGraph, Metrics,
+import graft.store.{AdcVectorStore, ArenaVectorStore, ArrayVectorStore, CodeArena, GraphSnapshot, InMemoryGraph,
+  Metrics,
   VectorStore}
 
 /** Every ordinal build against the id-keyed engine it replaced:
@@ -164,6 +165,11 @@ class OrdinalBuildSpec extends SparkSpec {
     }
   }
 
+  private def kryoRoundTrip[T: scala.reflect.ClassTag](v: T): T = {
+    val ser = new org.apache.spark.serializer.KryoSerializer(spark.sparkContext.getConf).newInstance()
+    ser.deserialize[T](ser.serialize(v))
+  }
+
   /** Rows holding two neighbours at one distance. */
   private def tiedRows(s: GraphSnapshot): Int =
     s.layers.map(l => (0 until l.size).count { i =>
@@ -215,7 +221,8 @@ class OrdinalBuildSpec extends SparkSpec {
       assertSameGraph(fresh.snapshot, want, s"$metric fresh cell")
 
       val priorSnap = referenceSequential(cfg, first.toSeq)
-      val prior = HnswRouted.CellShard(3, LongVecMap.from(first.iterator, first.length), priorSnap)
+      val prior = HnswRouted.CellShard(3,
+        OrdinalForm.of(ArenaVectorStore.of(metric, first.map(_._1), first.map(_._2)), priorSnap))
       val grown = HnswRouted.growCell(cfg)(3, Some(prior), rest)
       assertSameGraph(grown.snapshot,
         referenceSequential(cfg, rest.toSeq, Some(priorSnap), first.toSeq), s"$metric grown cell")
@@ -262,7 +269,8 @@ class OrdinalBuildSpec extends SparkSpec {
     assertSameGraph(grow(2, None, sorted).snapshot, want, "fresh code cell")
 
     val priorSnap = referenceGrow(cfg, store, first.map(_._1).toSeq, None)(_ => ())
-    val prior = HnswRoutedCodes.CodeCellShard(2, LongLongMap.from(first.iterator, first.length), priorSnap)
+    val prior = HnswRoutedCodes.CodeCellShard(2,
+      OrdinalForm.of(CodeArena.of(first.map(_._1), first.map(_._2)), priorSnap))
     val grown = grow(2, Some(prior), rest)
     assertSameGraph(grown.snapshot,
       referenceGrow(cfg, store, rest.map(_._1).toSeq, Some(priorSnap))(_ => ()), "grown code cell")
@@ -296,9 +304,52 @@ class OrdinalBuildSpec extends SparkSpec {
     val priorCodes = LongLongMap.from(first.iterator.map { case (id, v) =>
       (id, PqKernels.encodeArray(v, cb)) }, first.length)
     val priorSnap = reference(first.toSeq, None)
-    val grown = grow(1, Some(HnswRoutedPq.PqCellShard(1, priorCodes, priorSnap, 5L)), rest)
+    val grown = grow(1, Some(HnswRoutedPq.PqCellShard(1,
+      OrdinalForm.of(CodeArena.of(first.map(_._1), first.map(r => priorCodes(r._1))), priorSnap), 5L)), rest)
     assertSameGraph(grown.snapshot, reference(rest.toSeq, Some((priorSnap, priorCodes))), "grown pq cell")
     assert(grown.codes.size == sorted.length)
     sorted.foreach { case (id, v) => assert(grown.codes(id) == PqKernels.encodeArray(v, cb)) }
+  }
+
+  test("growCell on a Kryo round-tripped prior is row-identical to the id-keyed build (float and codes)") {
+    val cfg = cfgFor("l2")
+    val (first, rest) = distinctRows.sortBy(_._1).splitAt(170)
+    val priorSnap = referenceSequential(cfg, first.toSeq)
+    val prior = kryoRoundTrip(HnswRouted.growCell(cfg)(3, None, first))
+    assertSameGraph(prior.snapshot, priorSnap, "round-tripped float prior")
+    assertSameGraph(HnswRouted.growCell(cfg)(3, Some(prior), rest).snapshot,
+      referenceSequential(cfg, rest.toSeq, Some(priorSnap), first.toSeq), "float cell on a round-tripped prior")
+
+    val (cFirst, cRest) = codeRows.sortBy(_._1).splitAt(260)
+    val store = new HammingStore(codeOf)
+    val grow = HnswRoutedCodes.growCell(params, cfg.seed) _
+    val cPriorSnap = referenceGrow(cfg, store, cFirst.map(_._1).toSeq, None)(_ => ())
+    val cPrior = kryoRoundTrip(grow(2, None, cFirst))
+    assertSameGraph(cPrior.snapshot, cPriorSnap, "round-tripped code prior")
+    assertSameGraph(grow(2, Some(cPrior), cRest).snapshot,
+      referenceGrow(cfg, store, cRest.map(_._1).toSeq, Some(cPriorSnap))(_ => ()),
+      "code cell on a round-tripped prior")
+  }
+
+  test("growSolo on a PQ cell encoded from a float cell keeps its float distances, row-identical to the id-keyed path") {
+    val cfg = cfgFor("l2")
+    // 16 floats: one per PQ subspace; exact copies under smaller ids
+    val base = distinctRows.take(260).map { case (id, _) => (id, vecFromHash(id, 16)) }
+    val sorted = (base ++ (0 until 40).map(i => (-5L - i * 3, base(i * 5)._2.clone))).sortBy(_._1)
+    val cb = HnswPq.trainOnArrays(sorted.map(_._2), 13L)
+    val (first, rest) = sorted.splitAt(180)
+    // the prior's float L2 distances, which its codes cannot recompute
+    val priorSnap = referenceSequential(cfg, first.toSeq)
+    val encoded = kryoRoundTrip(HnswRoutedPq.encodeShard(HnswRouted.growCell(cfg)(1, None, first), cb))
+    assertSameGraph(encoded.snapshot, priorSnap, "encoded cell")
+    val grown = HnswRoutedPq.growSolo(spark.sparkContext.broadcast(cb), params, cfg.seed,
+      ingested = true)(1, Some(encoded), rest)
+    val priorCodes = first.map { case (id, v) => id -> PqKernels.encodeArray(v, cb) }.toMap
+    val store = new AdcVectorStore(cb, priorCodes)
+    val vec = rest.toMap
+    val want = referenceGrow(cfg, store, rest.map(_._1).toSeq, Some(priorSnap))(id =>
+      store.prepareQueryWithId(id, vec(id)))
+    assert(tiedRows(want) > 5, "too few rows hold a distance tie")
+    assertSameGraph(grown.snapshot, want, "pq cell grown on an encoded float cell")
   }
 }

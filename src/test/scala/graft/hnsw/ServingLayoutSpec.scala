@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import graft.SparkSpec
 import graft.hnsw.HnswDistributed.BuildConfig
 import graft.plans.{HnswSql, HnswStrategy}
-import graft.store.{ArrayVectorStore, Metrics}
+import graft.store.{ArenaVectorStore, ArrayVectorStore, GraphSnapshot, Metrics}
 
 /** The serving view ([[OrdinalGraph.search]]) against the reference
   * engine on built models: every query's `(id, dist)` list must equal
@@ -60,6 +60,12 @@ class ServingLayoutSpec extends SparkSpec {
 
   /** The engine over the model's id-keyed store, the query staged under
     * an id the data does not use. */
+  /** A cosine model of `snap` over `vecs`, through the factory attach uses. */
+  private def modelOf(snap: GraphSnapshot, vecs: LongVecMap): HnswModel = {
+    val (ids, vs) = vecs.iterator.toArray.unzip
+    HnswModel(params, OrdinalForm.of(ArenaVectorStore.of("cosine", ids, vs), snap))
+  }
+
   private def reference(m: HnswModel, qvec: Array[Float], k: Int, ef0: Int): List[(Long, Long)] = {
     val store = new ArrayVectorStore(Metrics.byName(m.metricName), base = m.vectors)
     val q = store.prepareQueryWithId(Long.MinValue, qvec)
@@ -107,7 +113,8 @@ class ServingLayoutSpec extends SparkSpec {
     for (qvec <- queries)
       assert(bits(one.kernel().search(qvec, 10, 0)) == reference(one, qvec, 10, 0))
     // a graph vertex without a vector is rejected
-    intercept[IllegalStateException](one.copy(vectors = new LongVecMap()).kernel())
+    intercept[IllegalStateException](
+      OrdinalForm.of(ArenaVectorStore.of("l2", Array.empty, Array.empty), one.snapshot))
   }
 
   test("compacted models and streaming snapshots serve through the layout kernel, equal to HnswSearcher") {
@@ -201,7 +208,7 @@ class ServingLayoutSpec extends SparkSpec {
       val qs = queries.zipWithIndex.map { case (v, i) => (v, i.toLong) }
       for (k <- Seq(10, 40))
         same(HnswDistributed.searchSharded(sharded, qDf, k), merged(qs, k)(v =>
-          shards.toSeq.map(s => reference(HnswModel(params, "cosine", s.snapshot, s.vectors), v, k, 0))))
+          shards.toSeq.map(s => reference(modelOf(s.snapshot, s.vectors), v, k, 0))))
     } finally sharded.unpersist()
 
     // k-means routes full-length vectors: the short rows and queries stay out
@@ -215,7 +222,7 @@ class ServingLayoutSpec extends SparkSpec {
       same(HnswRouted.search(routed, fullDf, 10, nProbe), merged(fullQ, 10) { v =>
         val probed = routed.router.probeCells(v, nProbe).toSet
         cells.filter(c => probed(c._1)).map { case (_, c) =>
-          reference(HnswModel(params, "cosine", c.snapshot, c.vectors), v, 10,
+          reference(modelOf(c.snapshot, c.vectors), v, 10,
             HnswRouted.cellEf(params, 0, c.vectors.size))
         }
       })

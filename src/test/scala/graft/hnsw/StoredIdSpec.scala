@@ -5,15 +5,16 @@ import org.apache.spark.sql.DataFrame
 import graft.SparkSpec
 import graft.functions.PqKernels
 import graft.hnsw.HnswDistributed.BuildConfig
-import graft.store.{AdcVectorStore, VectorStore}
+import graft.store.{AdcVectorStore, ArrayVectorStore, Metrics, VectorStore}
 
-/** The u64 Hamming and PQ serve sites return stored ids -1,
-  * `Long.MinValue` and `Long.MaxValue` at their true distance from the
-  * query. An engine that stages each query under a reserved id would
-  * shadow the stored point of that id and report it at distance 0. Each
-  * site's rows must also equal the reference engine's
-  * ([[HnswSearcher.searchWithEf]]) over the same graph, with the query
-  * staged under an id no row uses, as in [[ServingLayoutSpec]]. */
+/** The u64 Hamming and PQ serve sites, and the frontier tier's
+  * upper-layer descent, return stored ids -1, `Long.MinValue` and
+  * `Long.MaxValue` at their true distance from the query. An engine that
+  * stages each query under a reserved id would shadow the stored point of
+  * that id and report it at distance 0. Each site's rows must also equal
+  * the reference engine's ([[HnswSearcher]]) over the same graph, with
+  * the query staged under an id no row uses, as in
+  * [[ServingLayoutSpec]]. */
 class StoredIdSpec extends SparkSpec {
   import spark.implicits._
 
@@ -161,5 +162,31 @@ class StoredIdSpec extends SparkSpec {
         hits.map { case (id, d) => (qid, id, bits(d)) }
       }
     }.toSet)
+  }
+
+  test("HnswFrontier's upper descent seeds stored ids -1, MinValue and MaxValue at their true distance") {
+    // a layer seed that puts all three special ids on the upper layers
+    val seed = Iterator.from(1).map(_.toLong)
+      .find(sd => special.forall(params.selectLayerByHash(_, sd) >= 1)).get
+    val cfg = BuildConfig(params, metric = "cosine", seed = seed, seedBatch = 64, maxBatch = 128)
+    val upper = HnswFrontier.upperSnapshot(
+      HnswDistributed.buildFromArray(spark, vectors.toArray, cfg).snapshot)
+    assert(upper.layers.length > 2 && special.forall(upper.layers(1).contains))
+    val seedEf = 8
+    val seeds = HnswFrontier.descendUpper(spark, upper, vectors.toSeq.toDF("id", "vec"),
+      vecQueries.toDF("qid", "qvec"), "cosine", seedEf)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // greedy above layer 1, a seedEf beam at layer 1
+    val searcher = new HnswSearcher(params)
+    val want = vecQueries.flatMap { case (qid, qv) =>
+      val store = new ArrayVectorStore(Metrics.cosineDist, base = vectors)
+      val q = store.prepareQueryWithId(unused, qv)
+      val (w, nLayers) = searcher.searchInit(store, upper, q)
+      (nLayers - 1 to 1 by -1).foreach(lc =>
+        searcher.searchLayer(store, upper, q, w, if (lc == 1) seedEf else 1, lc))
+      w.iterator.map(nb => (qid, nb.dst))
+    }.toSet
+    special.foreach(id => assert(want.exists(_._2 == id), s"id $id seeds no query"))
+    assert(seeds == want)
   }
 }
