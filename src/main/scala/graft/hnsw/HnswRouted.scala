@@ -1,8 +1,10 @@
 package graft.hnsw
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.Partitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -44,16 +46,19 @@ import graft.store.{ArenaVectorStore, GraphSnapshot, Metrics}
   * no graph construction. The designated 1e7+ serving tier no longer
   * costs its full build per session.
   */
-object HnswRouted {
+object HnswRouted extends LocalRoutedTier {
+  type S = CellShard
+  type I = RoutedIndex
+  type Q = Array[Float]
+  type P = Router
 
   /** One cell's shard: its id, and its private graph in the form it was
     * grown in (the cell's vector arena and `Int` rows). Shards persist at
     * MEMORY_AND_DISK, and under eviction they Kryo-round-trip through
     * disk into exactly what they serve (pinned by KryoRoundTripSpec). */
-  final case class CellShard(cell: Int, form: OrdinalForm.Floats) {
+  final case class CellShard(cell: Int, form: OrdinalForm.Floats) extends RoutedCell {
     /** A fresh view over the cell's arena and rows. */
     def view(cfg: BuildConfig): OrdinalGraph[Array[Float]] = form.view(cfg.params)
-    def snapshot: GraphSnapshot = form.snapshot
     /** Id -> vector, derived once. */
     @transient lazy val vectors: LongVecMap = form.store.toLongVecMap
   }
@@ -127,27 +132,25 @@ object HnswRouted {
   }
 
   /** `tombstones` is the index's deletion set (sorted ids): [[delete]]
-    * adds to it without touching any shard — O(deletes) handle
-    * metadata, the soft-delete posture the broadcast tier's
-    * searchExcluding established — and [[search]] excludes it
-    * transparently. [[compact]] folds it out by rebuilding ONLY the
-    * cells that hold a tombstoned id, emptying the set and freeing the
-    * ids for re-[[ingest]]. */
-  /** `overlay`: persisted patch RDDs this handle OWNS beyond `shards`
-    * (the [[compactCellsPatched]] rebuilt-cells overlay) — released
-    * with the handle. `shards` itself may be an UNPERSISTED composite
-    * whose lineage reads the base index's cached blocks plus the
-    * overlay; see the patched-compaction notes there. */
+    * adds to it without touching any shard and serving excludes it;
+    * the compactions fold it out by rebuilding ONLY the cells that hold
+    * a tombstoned id, freeing the ids for re-[[ingest]]. `overlay`:
+    * persisted patch RDDs this handle OWNS beyond `shards` (the
+    * [[compactCellsPatched]] rebuilt-cells overlay); `shards` itself may
+    * then be an UNPERSISTED composite over the base index's cached
+    * blocks. `storage`: the residency every new full image persists at
+    * ([[RoutedHandle]]). */
   final case class RoutedIndex(
       cfg: BuildConfig,
       router: Router,
       shards: RDD[(Int, CellShard)],
       tombstones: Array[Long] = Array.empty,
-      overlay: Seq[RDD[_]] = Nil) {
-    def unpersist(): Unit = {
-      overlay.foreach(_.unpersist())
-      shards.unpersist()
-    }
+      overlay: Seq[RDD[_]] = Nil,
+      storage: StorageLevel = StorageLevel.MEMORY_AND_DISK)
+      extends RoutedHandle[CellShard, RoutedIndex] {
+    private[graft] def withState(shards: RDD[(Int, CellShard)], tombstones: Array[Long],
+                                 overlay: Seq[RDD[_]]): RoutedIndex =
+      copy(shards = shards, tombstones = tombstones, overlay = overlay)
   }
 
   /** One-partition-per-cell partitioner keyed by the cell's RANK in the
@@ -198,36 +201,35 @@ object HnswRouted {
   private[hnsw] def routeBy(router: Router)(df: DataFrame): RDD[(Int, (Long, Array[Float]))] =
     keyedByCell(df.withColumn("cell", router.cellCol(col("vec"))))
 
-  /** The float tier's [[RoutedTier]] binding — one shared lifecycle
-    * ([[RoutedLifecycle]]) across the three serving tiers; only the
-    * representation (float vectors, float-exact cell rebuild)
-    * lives here. */
-  private[graft] object FloatTier
-      extends RoutedServing[CellShard, RoutedIndex, Array[Float], Router] {
-    def shards(i: RoutedIndex): RDD[(Int, CellShard)] = i.shards
-    def tombstones(i: RoutedIndex): Array[Long] = i.tombstones
-    def overlays(i: RoutedIndex): Seq[RDD[_]] = i.overlay
-    def make(i: RoutedIndex, shards: RDD[(Int, CellShard)],
-             tombstones: Array[Long], overlays: Seq[RDD[_]]): RoutedIndex =
-      RoutedIndex(i.cfg, i.router, shards, tombstones, overlays)
-    def partitioner(i: RoutedIndex): Partitioner = partitionerFor(i.router)
-    val cacheName = "graft-hnsw-routed"
-    val tierName = "routed"
-    val unpersistBlocking = false
-    val resurrectHint = "Run compact() first (frees the ids), or route " +
-      "through the CDC stream, which filters tombstoned inserts"
-    def form(s: CellShard): OrdinalForm.Floats = s.form
-    val queryCol = "qvec"
-    def queryEnc: Encoder[(Long, Array[Float])] =
-      Encoders.tuple(Encoders.scalaLong, ExprEnc.floatArray)
-    def router(i: RoutedIndex): Router = i.router
-    def probeCells(r: Router, q: Array[Float], nProbe: Int): Iterator[Int] =
-      r.probeCells(q, nProbe)
-    val vectors = RoutedImage.Payload[CellShard, Array[Float]]("vectors", "vec",
-      Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong, ExprEnc.floatArray),
-      _.form.store.rows)
-    def rebuild(i: RoutedIndex): RoutedLifecycle.Rebuild[CellShard] =
-      RoutedLifecycle.Rebuild.local(vectors.rows)(growCell(i.cfg))
+  // ---- the float representation's binding ([[RoutedTier]]) ----
+  implicit protected def cellTag: ClassTag[CellShard] = ClassTag(classOf[CellShard])
+  implicit protected def routingTag: ClassTag[Router] = ClassTag(classOf[Router])
+  private[graft] val tierName = "routed"
+  private[graft] val payloadCol = "vec"
+  private[hnsw] val distCol = "dist"
+  private[hnsw] def queryEnc: Encoder[(Long, Array[Float])] =
+    Encoders.tuple(Encoders.scalaLong, ExprEnc.floatArray)
+  private[hnsw] def routing(i: RoutedIndex): Router = i.router
+  private[graft] def probeCells(r: Router, q: Array[Float], nProbe: Int): Iterator[Int] =
+    r.probeCells(q, nProbe)
+  protected def partitioner(i: RoutedIndex): Partitioner = partitionerFor(i.router)
+  protected def memberRows(i: RoutedIndex): CellShard => Iterator[(Long, Array[Float])] =
+    _.form.store.rows
+  protected def grow(i: RoutedIndex) = growCell(i.cfg) _
+  protected def route(i: RoutedIndex) = routeBy(i.router) _
+  protected def rebuildFrom(index: RoutedIndex, rows: DataFrame, nCells: Int,
+                            persist: Boolean, maxCellRows: Long): RoutedIndex =
+    buildAt(rows, index.cfg, if (nCells > 0) nCells else index.router.nPrimary,
+      persist, maxCellRows, modalitySplit = false, index.storage)
+
+  /** The separability test is the SHARED float kernel
+    * ([[MergedCellAudit.auditCell]] — also run by the PQ tier over code
+    * reconstructions); sampling/seeding rationale lives on the kernel. */
+  protected def auditKernel(i: RoutedIndex, sampleMax: Int, iters: Int, kSplit: Int) = {
+    val metricName = i.cfg.metric
+    (rows: Array[(Long, Array[Float])], isDead: Long => Boolean, nDead: Int) =>
+      MergedCellAudit.auditCell(rows, Metrics.byName(metricName), isDead, nDead,
+        sampleMax, iters, kSplit)
   }
 
   private val tripleEncPcellFirst = Encoders.tuple(
@@ -404,7 +406,13 @@ object HnswRouted {
   def build(vectors: DataFrame, cfg: BuildConfig = BuildConfig(),
             nCells: Int = 16, persist: Boolean = true,
             maxCellRows: Long = DefaultMaxCellRows,
-            modalitySplit: Boolean = false): RoutedIndex = {
+            modalitySplit: Boolean = false): RoutedIndex =
+    buildAt(vectors, cfg, nCells, persist, maxCellRows, modalitySplit,
+      StorageLevel.MEMORY_AND_DISK)
+
+  private def buildAt(vectors: DataFrame, cfg: BuildConfig, nCells: Int,
+                      persist: Boolean, maxCellRows: Long, modalitySplit: Boolean,
+                      storage: StorageLevel): RoutedIndex = {
     // GLOBAL id dedup before cell assignment (the HnswDistributed.build
     // duplicate-id guard, but cross-cell: duplicate rows with different
     // vectors would route to DIFFERENT cells and surface the same id
@@ -423,8 +431,8 @@ object HnswRouted {
       // persist=false shards stay lazy and recompute per action (the
       // test-only contract); after the unpersist below that recompute
       // re-runs the dedup shuffle — the caller opted out of pinning
-      RoutedIndex(cfg, router, RoutedLifecycle.build(FloatTier, keyedByCell(cells),
-        partitionerFor(router), persist, StorageLevel.MEMORY_AND_DISK)(growCell(cfg)))
+      RoutedIndex(cfg, router, buildShards(keyedByCell(cells), partitionerFor(router),
+        persist, storage)(growCell(cfg)), storage = storage)
     } finally deduped.unpersist(blocking = false)
   }
 
@@ -529,241 +537,6 @@ object HnswRouted {
     (router, cells)
   }
 
-  /** Incremental ingest: route `newRows` by cell and merge PER CELL —
-    * each touched cell's graph absorbs its batch slice with the same
-    * sequential kernel the build uses (the HnswDurable.ingest pattern,
-    * per cell). The index side has a NARROW dependency (shards are
-    * already partitioned by cell): only the batch shuffles, never the
-    * corpus. Rows landing in a cell the router knows but the index
-    * holds no shard for (possible after attach of a pruned save) start
-    * a fresh shard. Ids must be new to the INDEX — a global broadcast
-    * guard fails fast naming the cell that already holds a clashing id
-    * (the per-cell check alone would miss an id whose drifted vector
-    * routes to a different cell). The CENTROIDS ARE FROZEN —
-    * routing drift under distribution shift is the audit
-    * [[cellStats]] exists for; retrain + rebuild is the recovery.
-    * Returns a NEW index sharing the router; the old shards are
-    * unpersisted when `persist` is set. */
-  def ingest(index: RoutedIndex, newRows: DataFrame,
-             persist: Boolean = true): RoutedIndex =
-    RoutedLifecycle.ingest(FloatTier)(index, newRows, "vec", persist,
-      unpersistPrior = true, StorageLevel.MEMORY_AND_DISK)(
-      routeBy(index.router))(growCell(index.cfg))
-
-  /** Which of `ids` are present in the index (any cell) — ONE narrow
-    * broadcast scan over the shard key sets (the ingest guard's
-    * machinery, exposed as a query): the CDC stream uses it to DROP
-    * redelivered ids for idempotence where batch ingest fail-fasts.
-    * `ids` must be sorted ascending; returns a sorted subset. */
-  def presentIds(index: RoutedIndex, ids: Array[Long]): Array[Long] =
-    RoutedOps.presentIds(index.shards, ids)((s, f) => s.form.store.idIterator.foreach(f))
-
-  /** Tombstone delete — delete-without-rebuild on the routed tier: adds
-    * `ids` to the index's deletion set and returns a new handle SHARING
-    * the shards (no RDD job beyond collecting the id column — deletes
-    * are O(set) driver/broadcast metadata, the posture the broadcast
-    * tier's searchExcluding and the durable tier's tombstones share).
-    * [[search]]/[[searchFiltered]] exclude the set transparently;
-    * tombstoned vertices still CONDUCT the in-cell traversal (their
-    * edges remain — standard soft delete). A deleted id cannot be
-    * re-[[ingest]]ed until [[compact]] folds it out of its cell (the
-    * ingest guard still sees it in the shard's key set — by design: the
-    * graph still holds the old vector). Deleting an id ABSENT from the
-    * index is accepted (membership is never checked) but is NOT a pure
-    * no-op: the id joins the deletion set, so a later [[ingest]] of it
-    * fail-fasts until [[compact]] clears the set — delete-wins is the
-    * deliberate resolution of a delete/insert race, and the guard is
-    * what keeps a late insert from landing rows that search excludes
-    * and the next compact would erase. */
-  def delete(index: RoutedIndex, ids: DataFrame): RoutedIndex =
-    RoutedLifecycle.delete(FloatTier)(index, ids)
-
-  /** Fold the deletion set out of the graphs: rebuild ONLY the cells
-    * that hold a tombstoned id — untouched cells pass through BY
-    * REFERENCE (no copy, no rebuild, no shuffle; the map is narrow on
-    * the pinned partitioner), so compaction cost is proportional to
-    * AFFECTED cells, not the index. A compacted cell is rebuilt fresh
-    * from its survivors with the build kernel ([[growCell]]:
-    * ascending id order, layers from the id hash), so it is
-    * graph-identical to a fresh build of the remaining rows — the
-    * "compaction preserves the served result" contract, spec-checked.
-    * The returned index has an EMPTY deletion set; compacted-away ids
-    * are free to re-[[ingest]]. `unpersistPrior = false` leaves the
-    * input index's shards cached (for callers serving both handles,
-    * e.g. the catalog's shared build). */
-  def compact(index: RoutedIndex, persist: Boolean = true,
-              unpersistPrior: Boolean = true): RoutedIndex =
-    RoutedLifecycle.compact(FloatTier)(index, FloatTier.rebuild(index), persist,
-      unpersistPrior, StorageLevel.MEMORY_AND_DISK)._1
-
-  /** Targeted compaction: fold the deletion set out of ONLY the listed
-    * cells — the [[mergedCellAudit]] remedy. [[compact]]'s whole-index
-    * sibling rebuilds every touched cell; this rebuilds the flagged
-    * subset (narrow map, untouched cells pass by reference) and
-    * SHRINKS the tombstone set by exactly the ids that lived there, so
-    * the remaining deletion set keeps serving the untouched cells'
-    * soft deletes. A remediated cell's members are all live again →
-    * predicated serving takes the identity-filter plain kernel on it
-    * (the structural form of the "≤1.2× plain" remedy: the 1.5×
-    * merged-cell floor was the exact scan over eligible mass the beam
-    * can't reach; post-compact there is no ineligible mass to dodge).
-    * Cost: O(listed cells) rebuild CPU + one pruned pass to collect
-    * the folded-out ids (bounded by |tombstones|). */
-  def compactCells(index: RoutedIndex, cells: Array[Int],
-                   persist: Boolean = true,
-                   unpersistPrior: Boolean = true): RoutedIndex =
-    RoutedLifecycle.compactCells(FloatTier)(index, cells,
-      FloatTier.rebuild(index), persist, unpersistPrior,
-      StorageLevel.MEMORY_AND_DISK)
-
-  /** [[compactCells]] with O(touched) PERSISTED BYTES — the patch
-    * answer to the measured cost of targeted compaction: the plain
-    * variant's narrow map is O(touched) CPU but persisting its output
-    * materializes a full-size new image while the old stays live (the
-    * 1e8 rung read 839.7 s to fold 3 of 1024 cells — all block churn,
-    * and the first post-compact serve paid a 33 s cold read of the
-    * freshly spilled copy). Here only the REBUILT cells persist (an
-    * overlay RDD whose untouched partitions are empty blocks), and the
-    * served `shards` is an unpersisted partitioner-preserving
-    * zipPartitions COMPOSITE: overlay shard if present, else the
-    * base's cached block (object-shared, no copy). The base index must
-    * STAY cached (the composite reads its blocks — that is the point);
-    * the returned handle owns only the overlay. Patches STACK (a
-    * patched index can be patched again); fold the stack back to one
-    * full image with [[foldOverlay]] on a cadence, or let the next
-    * whole-index [[compact]]/[[retrain]]/[[ingest]] materialize a full
-    * image anyway. Serving results are row-identical to
-    * [[compactCells]] (spec-pinned). */
-  def compactCellsPatched(index: RoutedIndex, cells: Array[Int],
-                          persist: Boolean = true): RoutedIndex =
-    RoutedLifecycle.compactCellsPatched(FloatTier)(index, cells,
-      FloatTier.rebuild(index), persist)
-
-  /** Materialize a patched index back into ONE persisted full image
-    * and release the overlay stack — the fold that bounds patch-stack
-    * depth. A handle with no overlay returns unchanged. */
-  def foldOverlay(index: RoutedIndex): RoutedIndex =
-    RoutedLifecycle.foldOverlay(FloatTier)(index,
-      StorageLevel.MEMORY_AND_DISK)
-
-  /** Merged-cell audit — detection for the regime the per-cell density
-    * census cannot see (ROUND14 §5's residual): k-means merged a DEAD
-    * cluster and a live cluster into one cell, so the cell reads ~50%
-    * eligible cell-wide while a query arriving on the dead side has
-    * ~zero eligible among its nearest — predicated serving there pays
-    * the exact scan every probe (the measured 1.5× floor).
-    *
-    * Detection is a per-cell geometric SEPARABILITY test, one narrow
-    * pass, no shuffle: cells whose dead fraction is bimodal-eligible
-    * (inside [minDeadBp, maxDeadBp], at least `minCellRows` members)
-    * run a deterministic `kSplit`-means whose first two seeds are the
-    * dead-member mean and the live-member mean (the hypothesis-shaped
-    * init) and whose remaining seeds are farthest-point picks — k > 2
-    * is load-bearing: a dense cell can merge SEVERAL clusters (the 1e6
-    * rehearsal packed four), and a single 2-means split then finds the
-    * dominant geometric structure, not the dead/live boundary (measured:
-    * a 25%-dead four-cluster cell read 50/0 purity at k=2 — unflagged
-    * at a 9× serving tax). If dead and live are interleaved, every
-    * component's dead fraction reads ≈ the cell-wide fraction (no
-    * flag); if the dead mass is its own cluster, some component
-    * isolates it. A cell is flagged `merged` when ≥80%-pure-dead
-    * components hold ≥80% of the cell's dead mass and a clearly-live
-    * component (≤20% dead) exists. Returns one row per AUDITED cell:
-    * (cell, n, n_dead, dead_bp, hi_dead_bp = max component purity,
-    * lo_dead_bp = min component purity, dead_mass_hi_bp = dead mass in
-    * pure-dead components, merged). Remedy: [[compactCells]] on the
-    * flagged ids (or the skew-split/retrain path when live density
-    * also warrants re-routing). */
-  def mergedCellAudit(index: RoutedIndex, minCellRows: Int = 1024,
-                      minDeadBp: Int = 1000, maxDeadBp: Int = 9000,
-                      sampleMax: Int = 4096, iters: Int = 8,
-                      kSplit: Int = 8): DataFrame = {
-    val metricName = index.cfg.metric
-    RoutedLifecycle.mergedCellAudit(FloatTier)(index, minCellRows, minDeadBp,
-        maxDeadBp) { (s, isDead, nDead) =>
-      // the separability test is the SHARED kernel
-      // ([[MergedCellAudit.auditCell]] — also run by the PQ tier over
-      // code reconstructions and by the codes tier in Hamming space);
-      // sampling/seeding rationale lives on the kernel
-      MergedCellAudit.auditCell(s.form.store.rows.toArray.sortBy(_._1),
-        Metrics.byName(metricName), isDead, nDead, sampleMax, iters, kSplit)
-    }
-  }
-
-  /** Detect-and-remediate: [[mergedCellAudit]] → targeted compaction
-    * on the flagged cells — PATCHED by default (O(touched) persisted
-    * bytes; the base index stays cached and keeps serving its own
-    * handle), the full-copy [[compactCells]] when `patched = false`
-    * (`unpersistPrior` applies only there). Returns the remediated
-    * index (the input handle, unchanged, when nothing is flagged) and
-    * the flagged cell ids. */
-  def remediateMergedCells(index: RoutedIndex, minCellRows: Int = 1024,
-                           persist: Boolean = true,
-                           unpersistPrior: Boolean = true,
-                           patched: Boolean = true): (RoutedIndex, Array[Int]) = {
-    val flagged = RoutedLifecycle.flaggedCells(mergedCellAudit(index, minCellRows))
-    if (flagged.isEmpty) (index, flagged)
-    else if (patched) (compactCellsPatched(index, flagged, persist), flagged)
-    else (compactCells(index, flagged, persist, unpersistPrior), flagged)
-  }
-
-  /** The drift RECOVERY operator — the global fold the [[driftAudit]]
-    * alarm points at ("retrain + rebuild", since [[ingest]] never
-    * moves centroids): re-train the router on the index's CURRENT
-    * corpus and rebuild from its own shards — no external table
-    * needed. One extraction pass over the shards (tombstones fold out
-    * here, so the deletion set empties like [[compact]]), then the
-    * standard [[build]]: fresh k-means on the live distribution,
-    * histogram/skew guard, ONE shuffle, per-cell construction. Skewed
-    * cells rebalance; split cells may unsplit; `nCells = 0` keeps the
-    * current primary cell count. Exhaustive-regime results are
-    * unchanged by construction (routing never affects the exhaustive
-    * oracle) — what changes is the nProbe-regime recall the drift was
-    * eroding. */
-  def retrain(index: RoutedIndex, nCells: Int = 0, persist: Boolean = true,
-              maxCellRows: Long = DefaultMaxCellRows): RoutedIndex = {
-    val rows = RoutedLifecycle.liveRows(FloatTier)(index, FloatTier.vectors.rows)
-    val df = SparkSession.active.createDataset(rows)(
-      Encoders.tuple(Encoders.scalaLong, ExprEnc.floatArray)).toDF("id", "vec")
-    build(df, index.cfg, if (nCells > 0) nCells else index.router.nPrimary,
-      persist, maxCellRows)
-  }
-
-  /** Opt-in serving WARM-UP — the post-attach/fold first-serve
-    * discipline. The measured tax (BASELINE rounds 14-15): the first
-    * serve after a build/attach/fold reads 10-40x the steady band at
-    * the DISK_ONLY decades (42.6 s vs 4-8 s at 1e7; 128.3 s composite
-    * at 1e8), diagnosed via PlanProbe and per-serve task counts as
-    * COLD BLOCK READS with pruning intact (RoutedPruningSpec pins the
-    * pruning) — the bytes had to come off disk
-    * sometime, and "sometime" was the first query. This pass moves
-    * that read OFF the serving path: one full deserializing sweep of
-    * every shard partition (base + overlay blocks for a patched
-    * composite), priming the OS page cache / block-manager residency
-    * the first probes would otherwise pay for. Serving results are
-    * untouched (the pass only counts); returns the shard count.
-    * Operate it on the fold/attach cadence, not per query. */
-  def warm(index: RoutedIndex): Long = RoutedOps.warm(index.shards)
-
-  /** Covering-probe warm-up: ONE real k=1 serve whose query batch holds
-    * one member vector per cell — each query routes back to its own
-    * cell (the router that assigned it is frozen), so every cell runs a
-    * real beam and the whole serving path (driver routing, codegen,
-    * broadcast, the per-cell kernel's JIT + allocation ramp) executes
-    * once off the serving path. [[warm]]'s block sweep pays only the
-    * disk read — the 1e7 rung measured a 1.9x first-serve residual
-    * after it, which is exactly the kernel/plan warm-up this probe
-    * pays. Returns the number of cells probed. */
-  def warmProbe(index: RoutedIndex, ef: Int = 16): Long =
-    RoutedServe.warmProbe(FloatTier, index)(_.form.store.rows.map(_._2))(
-      search(index, _, k = 1, nProbe = 1, ef0 = ef))
-
-  /** Per-cell occupancy (cell, rows) — the drift audit surface: compare
-    * against the build-time histogram to decide when frozen centroids
-    * have drifted far enough to warrant retraining. */
-  def cellStats(index: RoutedIndex): Array[(Int, Long)] =
-    RoutedOps.cellStats(index.shards)(_.form.size)
-
   /** Drift audit as a DataFrame — the routed tier's silent-recall-killer
     * alarm: frozen centroids under distribution shift send new mass to
     * cells whose graphs were built for a different density, so recall
@@ -832,55 +605,6 @@ object HnswRouted {
       case None => shards
     }
 
-  /** Search the routed index: only the nProbe cells a query routed to
-    * ever see it; per-cell HNSW answers top-k; tiny global merge
-    * (<= k rows per query per probed cell). Returns (qid, id, dist, rank).
-    *
-    * `ef0` widens ONLY the in-cell layer-0 beam — the recall knob the
-    * 1e7 rehearsal identified (dense cells miss at the default
-    * ef_search regardless of how many cells are probed). `ef0 = 0` (the
-    * default) applies the density-adaptive [[autoEf]] per cell; an
-    * explicit value pins the beam manually. Widening ef costs
-    * per-probed-cell work; adding cells costs fan-out — independent
-    * dials for the two loss modes. */
-  def search(index: RoutedIndex, queries: DataFrame, k: Int,
-             nProbe: Int, ef0: Int = 0): DataFrame =
-    ranked(request(index, k, nProbe, ef0).routed(queries, None), k)
-
-  /** Attribute-filtered routed k-NN: top-k among only the ids in
-    * `allowed` (one id column) — the broadcast tier's
-    * [[HnswDistributed.searchFiltered]] contract on the scale tier.
-    * The allow-set broadcasts as a sorted primitive array (8 B/id,
-    * binary-search membership — the id list of a label partition); each
-    * probed cell serves one overfetched beam with an exact in-cell
-    * fallback ([[PredicatedCensus.serve]]). Routing is UNCHANGED: a
-    * query still probes its nProbe nearest cells, so a selective
-    * predicate whose mass lives in unprobed cells costs recall exactly
-    * like any other cross-boundary neighbor — the exhaustive regime
-    * (nProbe = nCells) forces the exact path and is the oracle-exact
-    * configuration, and tombstones compose (an id must be allowed AND
-    * not deleted).
-    *
-    * ROUTING: the allow-set is `distinct().collect()`ed here once per
-    * call while it fits [[AllowCollectMax]] (a caller issuing many
-    * batches against the SAME small allow-set should collect once and
-    * reuse via [[searchFilteredIds]]); above the cutover the call
-    * reroutes through [[searchFilteredDistributed]] — no driver-side
-    * copy at any size. */
-  def searchFiltered(index: RoutedIndex, queries: DataFrame,
-                     allowed: DataFrame, k: Int, nProbe: Int,
-                     ef0: Int = 0): DataFrame =
-    ranked(request(index, k, nProbe, ef0).filtered(queries, allowed), k)
-
-  /** [[searchFiltered]] with a pre-collected allow-set — the repeat-
-    * caller path (collect + sort the id array once, serve many query
-    * batches against it without re-running the distinct/collect job).
-    * `allowedIds` must be sorted ascending and duplicate-free. */
-  def searchFilteredIds(index: RoutedIndex, queries: DataFrame,
-                        allowedIds: Array[Long], k: Int, nProbe: Int,
-                        ef0: Int = 0): DataFrame =
-    ranked(request(index, k, nProbe, ef0).routed(queries, Some(allowedIds)), k)
-
   /** Allow-sets above this count route DISTRIBUTEDLY
     * ([[searchFilteredDistributed]]) instead of through the driver
     * collect: the driver copy is 8 B/id plus boxing, and it repeats
@@ -888,20 +612,6 @@ object HnswRouted {
     * collect is an OOM wall. 16M ids ≈ 128 MB driver-side keeps the
     * common online filter on the cheap path. */
   val AllowCollectMax: Int = 16 * 1024 * 1024
-
-  /** Fully distributed attribute-filtered serving — no driver-side
-    * materialization of EITHER the query batch or the allow-set: the
-    * allow-set joins against the index's own (id → cell) pairs (each id
-    * lives in exactly one cell, so the join output is |allow| rows),
-    * shuffles by the pinned partitioner, and rides a 3-way
-    * zipPartitions with the shards and the routed queries; the per-cell
-    * sorted allow array is built executor-side. Same per-shard kernel
-    * as every other path (row-identity spec-pinned). [[searchFiltered]]
-    * auto-selects this path above [[AllowCollectMax]] ids. */
-  def searchFilteredDistributed(index: RoutedIndex, queries: DataFrame,
-                                allowed: DataFrame, k: Int, nProbe: Int,
-                                ef0: Int = 0): DataFrame =
-    ranked(request(index, k, nProbe, ef0).filteredDistributed(queries, allowed), k)
 
   private[hnsw] def sortedIdArray(ids: DataFrame): Array[Long] = {
     val arr = ids.select(col(ids.columns.head).cast("long")).distinct()
@@ -919,28 +629,6 @@ object HnswRouted {
     * copy is ~300 MB; the cutover keeps it there. */
   val DriverRouteMax: Int = 262144
 
-  /** Distributed query routing — the BATCH-side serving path: queries
-    * stay a DataFrame end-to-end. Each query row fans out to its
-    * nProbe cells against the broadcast router (centroids are tiny
-    * next to everything), and the ONLY shuffle is the query side,
-    * keyed by the index's pinned [[CellPartitioner]] — the shard side
-    * is a narrow zipPartitions, exactly the ingest discipline. Result
-    * rows are identical to [[search]] (same per-shard kernel, same
-    * (dist, id)-ordered global merge), spec-pinned on both paths.
-    * Per-executor bound: one cell's routed query mass must fit its
-    * task (at 1e6 queries × nProbe 4 over 16 cells ≈ 250k rows/cell —
-    * ~70 MB at dim 64), which scales out with nCells where the driver
-    * path's bound cannot. [[search]] auto-selects this path above
-    * [[DriverRouteMax]] queries. */
-  def searchDistributed(index: RoutedIndex, queries: DataFrame, k: Int,
-                        nProbe: Int, ef0: Int = 0): DataFrame =
-    searchImplDistributed(index, queries, k, nProbe, ef0, allowed = None)
-
-  private[hnsw] def searchImplDistributed(
-      index: RoutedIndex, queries: DataFrame, k: Int,
-      nProbe: Int, ef0: Int, allowed: Option[Array[Long]]): DataFrame =
-    ranked(request(index, k, nProbe, ef0).distributed(queries, allowed), k)
-
   /** The in-cell layer-0 beam of the three tiers' kernels: an explicit
     * `ef0` pins it (never below the configured ef_search); 0 applies
     * the density-adaptive [[autoEf]]. */
@@ -949,134 +637,95 @@ object HnswRouted {
     if (ef0 > 0) math.max(ef0, base) else autoEf(base, cellSize)
   }
 
-  private def ranked(perShard: DataFrame, k: Int): DataFrame =
-    RoutedServe.top(perShard, "dist", k)
-
-  /** One serve over the shared transport ([[RoutedServe]]) with the
-    * float kernel: the cell's vectors, and a beam and the metric's exact
-    * distance from one [[OrdinalGraph]] view per shard serve. Exhaustive
-    * regime: the probe set covers every primary cell, so predicated
-    * serving can GUARANTEE exactness by taking the exact scan in every
-    * probed cell (every eligible id lives in exactly one cell, and each
-    * cell contributes its true top-k-eligible) — the configuration the
-    * hash-oracle rows ride. In the nProbe regime the beam-accept path
-    * serves: approximate like the plain kernel, never less accurate
-    * than it. */
-  private def request(index: RoutedIndex, k: Int, nProbe: Int, ef0: Int) = {
+  /** The float kernel ([[RoutedServe]]): the cell's vectors, and a beam
+    * and the metric's exact distance from one [[OrdinalGraph]] view per
+    * shard serve. Exhaustive regime: the probe set covers every primary
+    * cell, so predicated serving GUARANTEES exactness by taking the exact
+    * scan in every probed cell (every eligible id lives in exactly one
+    * cell) — the configuration the hash-oracle rows ride. In the nProbe
+    * regime the beam-accept path serves: approximate like the plain
+    * kernel, never less accurate than it. */
+  private[hnsw] def kernel(index: RoutedIndex, k: Int, nProbe: Int,
+                           ef0: Int): RoutedServe.Kernel[CellShard, Array[Float]] = {
     val cfg = index.cfg
     val exhaustive = nProbe >= index.router.nPrimary
-    new RoutedServe.Request(FloatTier, index, nProbe, "dist",
-      (m: CellShard, probes: Iterator[(Long, Array[Float])], hasAllow: Boolean,
-       allow: Array[Long], dead: Array[Long]) => {
-        val view = m.view(cfg)
-        PredicatedCensus.serve(m.form.store, probes, k, cellEf(cfg.params, ef0, m.form.size),
-          exhaustive, hasAllow, allow, dead)(view.search, view.distances)
-      })
+    (m, probes, hasAllow, allow, dead) => {
+      val view = m.view(cfg)
+      PredicatedCensus.serve(m.form.store, probes, k, cellEf(cfg.params, ef0, m.form.size),
+        exhaustive, hasAllow, allow, dead)(view.search, view.distances)
+    }
   }
 
   // --------------------------------------------------------------------
-  // Durability: versioned parquet persistence + attach-without-rebuild.
+  // Durability: the image is meta (config), centroids (both router
+  // levels), vectors, links, entries and tombstones ([[RoutedTier.save]]).
   // --------------------------------------------------------------------
 
-  /** Persist the index under `path` as a new complete version
-    * ([[RoutedImage.save]]): meta (config), centroids (both router
-    * levels), vectors, links (per-cell CSR rows), entries, tombstones
-    * (the live deletion set — restarts keep serving accepted deletes). */
-  def save(index: RoutedIndex, path: String, keepVersions: Int = 1): Unit =
-    RoutedImage.save(FloatTier)(index, path, keepVersions, index.cfg.params,
-      Seq("metric" -> index.cfg.metric, "seed" -> index.cfg.seed,
-        "n_primary" -> index.router.nPrimary), FloatTier.vectors)(
-      RoutedImage.writeRouter(_, _, index.router))
+  private[hnsw] val payload = RoutedImage.Payload[CellShard, Array[Float]]("vectors", "vec",
+    Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong, ExprEnc.floatArray),
+    _.form.store.rows)
 
-  /** Restore a saved index WITHOUT rebuilding: read the newest complete
-    * version, reassemble per-cell snapshots with one co-partitioned
-    * cogroup (the attach cost is a parquet scan + CSR assembly — no
-    * k-means, no HNSW construction; measured ≫ cheaper than build). */
-  def attach(spark: SparkSession, path: String,
-             persist: Boolean = true): RoutedIndex = {
-    val (dir, meta) = RoutedImage.open(spark, path)
+  protected def imageMeta(i: RoutedIndex): (HnswParams, Seq[(String, Any)]) =
+    (i.cfg.params, Seq("metric" -> i.cfg.metric, "seed" -> i.cfg.seed,
+      "n_primary" -> i.router.nPrimary))
+
+  protected def writeTables(i: RoutedIndex, spark: SparkSession, dir: String): Unit =
+    RoutedImage.writeRouter(spark, dir, i.router)
+
+  private[hnsw] def restore(spark: SparkSession, dir: String, meta: Row,
+                            persist: Boolean, storage: StorageLevel): RoutedIndex = {
     val cfg = BuildConfig(RoutedImage.paramsFromMeta(meta),
       meta.getAs[String]("metric"), meta.getAs[Long]("seed"))
     val router = RoutedImage.readRouter(spark, dir, cfg.metric)
-    RoutedIndex(cfg, router, RoutedImage.shards(FloatTier, spark, dir,
-      FloatTier.vectors, partitionerFor(router), persist,
-      StorageLevel.MEMORY_AND_DISK) { (cell, vs, snap) =>
+    RoutedIndex(cfg, router, RoutedImage.shards(cacheName, spark, dir, payload,
+      partitionerFor(router), persist, storage) { (cell, vs, snap) =>
       val (ids, vecs) = vs.toArray.unzip
       CellShard(cell, OrdinalForm.of(ArenaVectorStore.of(cfg.metric, ids, vecs), snap))
-    },
-      RoutedImage.readTombstones(spark, dir))
+    }, RoutedImage.readTombstones(spark, dir), storage = storage)
   }
 
-  /** Nest-safe process-wide memo of the catalog's lifecycle handles. */
-  private val memo = new HandleMemo[RoutedIndex](_.unpersist())
+  // --------------------------------------------------------------------
+  // The catalog's memoized handles.
+  // --------------------------------------------------------------------
 
-  private[hnsw] def releaseCaches(): Unit = memo.releaseAll()
+  private def catalog(vectors: DataFrame, cfg: BuildConfig, nCells: Int, key: String) =
+    new Catalog(vectors, key, Seq(nCells, HnswDistributed.cacheKey(cfg)),
+      build(vectors, cfg, nCells))
 
   def buildCached(vectors: DataFrame, cfg: BuildConfig, nCells: Int,
-                  key: String): RoutedIndex =
-    memo(HandleMemo.appId(vectors), key, nCells, HnswDistributed.cacheKey(cfg))(
-      graft.BuildLedger.timed("hnsw_routed_build")(
-        build(vectors, cfg, nCells)))
+                  key: String): RoutedIndex = catalog(vectors, cfg, nCells, key).built
 
   /** Memoized build-then-ingest — the catalog's incremental-growth
     * handle: the base corpus builds, the tail INGESTS (per-cell merge
     * into live graphs), and the serving result is held to the same
     * exhaustive-regime oracle as a from-scratch build. */
-  def growCached(baseVectors: DataFrame, newRows: DataFrame,
-                 cfg: BuildConfig, nCells: Int, key: String): RoutedIndex =
-    memo(HandleMemo.appId(baseVectors), "grow", key, nCells, HnswDistributed.cacheKey(cfg))(
-      graft.BuildLedger.timed("hnsw_routed_grow") {
-        ingest(build(baseVectors, cfg, nCells), newRows)
-      })
+  def growCached(baseVectors: DataFrame, newRows: DataFrame, cfg: BuildConfig,
+                 nCells: Int, key: String): RoutedIndex =
+    catalog(baseVectors, cfg, nCells, key).grown(newRows)
 
   /** Memoized save+attach round-trip of a built index — the catalog's
-    * durable-tier serving handle (built once, persisted once, served
-    * from the ATTACHED copy so the oracle rides the restore path). */
+    * durable-tier serving handle. */
   def attachCached(vectors: DataFrame, cfg: BuildConfig, nCells: Int,
-                   key: String): RoutedIndex =
-    memo(HandleMemo.appId(vectors), "attach", key, nCells, HnswDistributed.cacheKey(cfg))(
-      graft.BuildLedger.timed("hnsw_routed_save_attach") {
-        val built = buildCached(vectors, cfg, nCells, key)
-        val dir = graft.TempDirs.create("graft_routed_")
-        save(built, dir)
-        attach(vectors.sparkSession, dir)
-      })
+                   key: String): RoutedIndex = catalog(vectors, cfg, nCells, key).attached
 
   /** Memoized tombstone-serving handle: [[delete]] over the SHARED
-    * cached build — delete is O(set) handle metadata, so the catalog's
-    * tombstone row serves from the same shards as its plain-search
-    * twin, paying only the deletion-set collect once. */
-  def deleteCached(vectors: DataFrame, deleted: DataFrame,
-                   cfg: BuildConfig, nCells: Int, key: String,
-                   delKey: String): RoutedIndex =
-    memo(HandleMemo.appId(vectors), "tomb", key, delKey, nCells,
-      HnswDistributed.cacheKey(cfg))(
-      delete(buildCached(vectors, cfg, nCells, key), deleted))
+    * cached build — the catalog's tombstone row serves from the same
+    * shards as its plain-search twin, paying only the deletion-set
+    * collect once. */
+  def deleteCached(vectors: DataFrame, deleted: DataFrame, cfg: BuildConfig, nCells: Int,
+                   key: String, delKey: String): RoutedIndex =
+    catalog(vectors, cfg, nCells, key).deleted(deleted, delKey)
 
   /** Memoized retrain of the cached grown index — the drift-recovery
-    * handle: the grown corpus re-routes through a freshly trained
-    * quantizer (built from the index's own shards; the grown handle
-    * keeps serving its rows). */
-  def retrainCached(baseVectors: DataFrame, newRows: DataFrame,
-                    cfg: BuildConfig, nCells: Int, key: String): RoutedIndex =
-    memo(HandleMemo.appId(baseVectors), "retrain", key, nCells,
-      HnswDistributed.cacheKey(cfg))(
-      graft.BuildLedger.timed("hnsw_routed_retrain") {
-        retrain(growCached(baseVectors, newRows, cfg, nCells, key))
-      })
+    * handle (the grown handle keeps serving its rows). */
+  def retrainCached(baseVectors: DataFrame, newRows: DataFrame, cfg: BuildConfig,
+                    nCells: Int, key: String): RoutedIndex =
+    catalog(baseVectors, cfg, nCells, key).retrained(newRows)
 
-  /** Memoized compaction of the cached tombstoned index — the deletion
-    * set folded OUT of the graphs (affected cells rebuilt, untouched
-    * cells pass through by reference). `unpersistPrior = false`: the
-    * prior shards are the shared cached build, still serving the
-    * plain/tombstone rows. */
-  def compactCached(vectors: DataFrame, deleted: DataFrame,
-                    cfg: BuildConfig, nCells: Int, key: String,
-                    delKey: String): RoutedIndex =
-    memo(HandleMemo.appId(vectors), "compact", key, delKey, nCells,
-      HnswDistributed.cacheKey(cfg))(
-      graft.BuildLedger.timed("hnsw_routed_compact") {
-        compact(deleteCached(vectors, deleted, cfg, nCells, key, delKey),
-          unpersistPrior = false)
-      })
+  /** Memoized compaction of the cached tombstoned index; the prior shards
+    * are the shared cached build, still serving the plain/tombstone
+    * rows. */
+  def compactCached(vectors: DataFrame, deleted: DataFrame, cfg: BuildConfig, nCells: Int,
+                    key: String, delKey: String): RoutedIndex =
+    catalog(vectors, cfg, nCells, key).compacted(deleted, delKey)
 }

@@ -1,8 +1,10 @@
 package graft.hnsw
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.{HashPartitioner, Partitioner}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -37,73 +39,66 @@ import graft.store.{CodeArena, CodeQuery, GraphSnapshot}
   * training, no graph construction; [[ingest]] merges a batch per
   * cell with a narrow dependency on the index side and a global
   * duplicate-id fail-fast. */
-object HnswRoutedCodes {
+object HnswRoutedCodes extends LocalRoutedTier {
+  type S = CodeCellShard
+  type I = RoutedCodeIndex
+  type Q = Long
+  type P = Array[Long]
 
   /** One cell: its graph in the form it was grown in (the cell's
     * [[CodeArena]] and `Int` rows), served like a
     * [[HnswCodes.CodeModel]]. A DISK_ONLY cell deserializes straight into
     * what it serves. */
-  final case class CodeCellShard(cell: Int, form: OrdinalForm.Codes) {
+  final case class CodeCellShard(cell: Int, form: OrdinalForm.Codes) extends RoutedCell {
     def view(params: HnswParams): OrdinalGraph[CodeQuery] = form.view(params)
-    def snapshot: GraphSnapshot = form.snapshot
     /** Id -> code, derived once. */
     @transient lazy val codes: LongLongMap = LongLongMap.from(form.store.rows, form.size)
   }
-
   /** `tombstones` is the index's deletion set (sorted ids) — the float
     * tier's soft-delete contract ([[HnswRouted.RoutedIndex]]):
     * [[delete]] adds, [[search]] excludes, [[compact]] folds out per
-    * affected cell and frees the ids for re-[[ingest]]. */
+    * affected cell and frees the ids for re-[[ingest]]. `storage` is the
+    * residency it was built or attached with ([[RoutedHandle]]). */
   final case class RoutedCodeIndex(
       params: HnswParams,
       seed: Long,
       anchors: Array[Long],
       shards: RDD[(Int, CodeCellShard)],
       tombstones: Array[Long] = Array.empty,
-      overlay: Seq[RDD[_]] = Nil) {
-    def unpersist(): Unit = {
-      overlay.foreach(_.unpersist())
-      shards.unpersist()
-    }
+      overlay: Seq[RDD[_]] = Nil,
+      storage: StorageLevel = DefaultStorage)
+      extends RoutedHandle[CodeCellShard, RoutedCodeIndex] {
+    private[graft] def withState(shards: RDD[(Int, CodeCellShard)], tombstones: Array[Long],
+                                 overlay: Seq[RDD[_]]): RoutedCodeIndex =
+      copy(shards = shards, tombstones = tombstones, overlay = overlay)
   }
 
   private val pairEnc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
 
-  /** The u64-code tier's [[RoutedTier]] binding — one shared lifecycle
-    * ([[RoutedLifecycle]]) across the three serving tiers; only the
-    * representation (u64 codes, Hamming-space rebuild) lives
-    * here. `unpersistBlocking`: this is the DISK_ONLY-decade tier —
-    * the superseded image is ~the index's full footprint, reclaim it
-    * before the caller's next job rather than racing the async
-    * cleaner. */
-  private[graft] object CodeTier
-      extends RoutedServing[CodeCellShard, RoutedCodeIndex, Long, Array[Long]] {
-    def shards(i: RoutedCodeIndex): RDD[(Int, CodeCellShard)] = i.shards
-    def tombstones(i: RoutedCodeIndex): Array[Long] = i.tombstones
-    def overlays(i: RoutedCodeIndex): Seq[RDD[_]] = i.overlay
-    def make(i: RoutedCodeIndex, shards: RDD[(Int, CodeCellShard)],
-             tombstones: Array[Long], overlays: Seq[RDD[_]]): RoutedCodeIndex =
-      RoutedCodeIndex(i.params, i.seed, i.anchors, shards, tombstones, overlays)
-    /** Keys are anchor RANKS (0..n-1), so the plain HashPartitioner is
-      * the identity here (unlike the float tier's composite ids — see
-      * [[HnswRouted.CellPartitioner]]). */
-    def partitioner(i: RoutedCodeIndex): Partitioner = partitionerFor(i.anchors)
-    val cacheName = "graft-hnsw-routed-codes"
-    val tierName = "routed-codes"
-    val unpersistBlocking = true
-    val resurrectHint = "Run compact() first (frees the ids), or route " +
-      "through the CDC stream, which filters tombstoned inserts"
-    def form(s: CodeCellShard): OrdinalForm.Codes = s.form
-    val queryCol = "qcode"
-    def queryEnc: Encoder[(Long, Long)] = pairEnc
-    def router(i: RoutedCodeIndex): Array[Long] = i.anchors
-    def probeCells(anchors: Array[Long], qc: Long, nProbe: Int): Iterator[Int] =
-      probeCellsCode(qc, anchors, nProbe)
-    val codes = RoutedImage.Payload[CodeCellShard, Long]("codes", "code",
-      RoutedImage.codeRowEnc, _.form.store.rows)
-    def rebuild(i: RoutedCodeIndex): RoutedLifecycle.Rebuild[CodeCellShard] =
-      RoutedLifecycle.Rebuild.local(codes.rows)(growCell(i.params, i.seed))
-  }
+  // ---- the u64-code representation's binding ([[RoutedTier]]) ----
+  implicit protected def cellTag: ClassTag[CodeCellShard] = ClassTag(classOf[CodeCellShard])
+  implicit protected def routingTag: ClassTag[Array[Long]] = ClassTag(classOf[Array[Long]])
+  private[graft] val tierName = "routed-codes"
+  private[graft] val payloadCol = "code"
+  private[hnsw] val distCol = "hamming"
+  private[hnsw] def queryEnc: Encoder[(Long, Long)] = pairEnc
+  private[hnsw] def routing(i: RoutedCodeIndex): Array[Long] = i.anchors
+  /** Keys are anchor RANKS (0..n-1), so the plain HashPartitioner is the
+    * identity here (unlike the float tier's composite ids — see
+    * [[HnswRouted.CellPartitioner]]). */
+  protected def partitioner(i: RoutedCodeIndex): Partitioner = partitionerFor(i.anchors)
+  /** This is the DISK_ONLY-decade tier: the superseded image is ~the
+    * index's full footprint, so reclaim it before the caller's next job
+    * rather than racing the async cleaner. */
+  override protected def unpersistBlocking: Boolean = true
+  protected def memberRows(i: RoutedCodeIndex): CodeCellShard => Iterator[(Long, Long)] =
+    _.form.store.rows
+  protected def grow(i: RoutedCodeIndex) = growCell(i.params, i.seed) _
+  protected def route(i: RoutedCodeIndex) = keyedByAnchor(_: DataFrame, i.anchors)
+  protected def rebuildFrom(index: RoutedCodeIndex, rows: DataFrame, nCells: Int,
+                            persist: Boolean, maxCellRows: Long): RoutedCodeIndex =
+    build(rows, index.params, if (nCells > 0) nCells else index.anchors.length,
+      index.seed, persist, maxCellRows, index.storage)
 
   private def partitionerFor(anchors: Array[Long]): Partitioner =
     new HashPartitioner(math.max(1, anchors.length))
@@ -338,110 +333,9 @@ object HnswRoutedCodes {
         "executor memory per cell), or use HnswCodes.buildBatched (the " +
         "single-graph micro-batched tier) for collapsed code mass")
 
-    RoutedCodeIndex(params, seed, anchors, RoutedLifecycle.build(CodeTier,
-      keyedRaw, partitionerFor(anchors), persist, storage)(growCell(params, seed)))
+    RoutedCodeIndex(params, seed, anchors, buildShards(keyedRaw, partitionerFor(anchors),
+      persist, storage)(growCell(params, seed)), storage = storage)
   }
-
-  /** Incremental ingest — [[HnswRouted.ingest]]'s contract on the code
-    * representation: route the batch by nearest anchor, merge PER CELL
-    * into the live graphs (untouched cells pass through by reference;
-    * a cell with no prior shard starts fresh). The index side has a
-    * NARROW dependency on its pinned partitioner — only the batch
-    * shuffles, never the corpus. Ids must be new to the INDEX: a
-    * global broadcast guard fails fast naming the cell that already
-    * holds a clashing id (the cross-cell double-registration hazard —
-    * a redelivered id whose code drifted routes to a different cell).
-    * The ANCHORS ARE FROZEN; drift recovery is retrain + rebuild. */
-  def ingest(index: RoutedCodeIndex, newRows: DataFrame,
-             persist: Boolean = true,
-             storage: StorageLevel = DefaultStorage): RoutedCodeIndex =
-    RoutedLifecycle.ingest(CodeTier)(index, newRows, "code", persist,
-      unpersistPrior = true, storage)(keyedByAnchor(_, index.anchors))(
-      growCell(index.params, index.seed))
-
-  /** Opt-in serving warm-up — [[HnswRouted.warm]] on the code
-    * representation (this tier runs the DISK_ONLY decades where the
-    * cold-first-serve tax is largest). One deserializing sweep off
-    * the serving path; returns the shard count. */
-  def warm(index: RoutedCodeIndex): Long = RoutedOps.warm(index.shards)
-
-  /** Covering-probe warm-up — [[HnswRouted.warmProbe]] on the code
-    * representation: one member code per cell served back through the
-    * full path at k = 1, paying the kernel JIT + plan warm-up that
-    * [[warm]]'s block sweep leaves on the first real serve. */
-  def warmProbe(index: RoutedCodeIndex, ef: Int = 16): Long =
-    // the rows are lazy: the probe-rep collection is O(nCells), not O(index)
-    RoutedServe.warmProbe(CodeTier, index)(_.form.store.rows.map(_._2))(
-      search(index, _, k = 1, nProbe = 1, ef0 = ef))
-
-  /** Drift recovery — [[HnswRouted.retrain]] on the code
-    * representation: re-train the k-majority anchors on the index's
-    * current corpus and rebuild from its own shards (tombstones fold
-    * out; cells rebalance; `nCells = 0` keeps the current count). */
-  def retrain(index: RoutedCodeIndex, nCells: Int = 0,
-              persist: Boolean = true,
-              maxCellRows: Long = DefaultMaxCellRows,
-              storage: StorageLevel = DefaultStorage): RoutedCodeIndex = {
-    val n = if (nCells > 0) nCells else index.anchors.length
-    val df = SparkSession.active.createDataset(RoutedLifecycle.liveRows(CodeTier)(
-      index, CodeTier.codes.rows))(pairEnc).toDF("id", "code")
-    build(df, index.params, n, index.seed, persist, maxCellRows, storage)
-  }
-
-  /** Which of `ids` (sorted ascending) are present in the index — the
-    * float tier's [[HnswRouted.presentIds]] on the code representation
-    * (one narrow broadcast scan; CDC idempotence). */
-  def presentIds(index: RoutedCodeIndex, ids: Array[Long]): Array[Long] =
-    RoutedOps.presentIds(index.shards, ids)(
-      (s, f) => s.form.store.idIterator.foreach(f))
-
-  /** Tombstone delete-without-rebuild — [[HnswRouted.delete]]'s
-    * contract on the code representation: O(set) handle metadata, the
-    * shards are SHARED with the input handle. [[search]] excludes the
-    * set transparently (tombstoned vertices still conduct the in-cell
-    * traversal); [[compact]] folds it out and frees the ids. */
-  def delete(index: RoutedCodeIndex, ids: DataFrame): RoutedCodeIndex =
-    RoutedLifecycle.delete(CodeTier)(index, ids)
-
-  /** Fold the deletion set out of the graphs — [[HnswRouted.compact]]:
-    * ONLY cells holding a tombstoned id rebuild (fresh, via
-    * [[growCell]] — graph-identical to a fresh build of the
-    * survivors); untouched cells pass through by reference. Returns an
-    * index with an empty deletion set; compacted-away ids can
-    * re-[[ingest]]. */
-  def compact(index: RoutedCodeIndex, persist: Boolean = true,
-              unpersistPrior: Boolean = true,
-              storage: StorageLevel = DefaultStorage): RoutedCodeIndex =
-    RoutedLifecycle.compact(CodeTier)(index, CodeTier.rebuild(index), persist,
-      unpersistPrior, storage)._1
-
-  /** PATCHED compaction — [[HnswRouted.compactCellsPatched]] on the
-    * codes tier, with the touched set derived from the deletion set
-    * itself (one narrow membership pass): only the rebuilt cells
-    * persist (an overlay whose untouched partitions are empty blocks);
-    * the served `shards` is an unpersisted partitioner-preserving
-    * composite reading the base's cached blocks everywhere else. The
-    * regime where this pays is a MEMORY-RESIDENT base (the cluster
-    * posture): measured 0.99-1.01× plain serving with a cheaper fold
-    * at 4e5-1e7. The honest 1e8 DISK_ONLY result (BASELINE round-15):
-    * the fold costs the same ~840 s as the full copy (the one full
-    * deserialize pass dominates, not the write churn) and the
-    * composite's serving read 128 s vs 2.6 s on the warm base while
-    * staying exactly correct — at the local disk decade prefer the
-    * full-copy [[compact]]; the composite tax there is an open
-    * round-16 diagnosis. The base index must STAY cached; fold the
-    * patch stack back to one full image with [[foldOverlay]] on a
-    * cadence. */
-  def compactPatched(index: RoutedCodeIndex,
-                     persist: Boolean = true): RoutedCodeIndex =
-    RoutedLifecycle.compactPatched(CodeTier)(index, CodeTier.rebuild(index),
-      persist)
-
-  /** Materialize a patched index back into ONE persisted full image and
-    * release the overlay stack (see [[HnswRouted.foldOverlay]]). */
-  def foldOverlay(index: RoutedCodeIndex,
-                  storage: StorageLevel = DefaultStorage): RoutedCodeIndex =
-    RoutedLifecycle.foldOverlay(CodeTier)(index, storage)
 
   // --------------------------------------------------------------------
   // Merged-cell detection + targeted remedy — [[HnswRouted
@@ -486,252 +380,112 @@ object HnswRoutedCodes {
       majority(codes.indices.iterator.filter(x => in(assign(x))).map(codes(_)))
     }
 
-  /** Merged-cell audit — [[HnswRouted.mergedCellAudit]] on the code
-    * representation, for the regime the per-cell density census cannot
-    * see: the k-majority router packed a now-DEAD code mode and a live
-    * mode into one cell, so the cell reads ~50% eligible cell-wide
-    * while queries arriving on the dead side have ~zero eligible among
-    * their nearest — predicated serving there pays the exact scan
-    * every probe. One narrow pass, no shuffle: cells whose dead
-    * fraction is bimodal-eligible run the shared separability kernel
-    * ([[MergedCellAudit.audit]]) in Hamming space — a deterministic
-    * k-majority split whose first two seeds are the dead-member and
-    * live-member majority codes (hypothesis-shaped init; k > 2 catches cells that
-    * merged SEVERAL modes), then a full-member purity census per
-    * component — flagged `merged` when ≥80%-pure-dead components hold
-    * ≥80% of the dead mass beside a clearly-live component. Schema and
-    * thresholds identical to the float audit. Remedy:
-    * [[compactCells]]/[[compactCellsPatched]] on the flagged ids. */
-  def mergedCellAudit(index: RoutedCodeIndex, minCellRows: Int = 1024,
-                      minDeadBp: Int = 1000, maxDeadBp: Int = 9000,
-                      sampleMax: Int = 4096, iters: Int = 8,
-                      kSplit: Int = 8): DataFrame =
-    RoutedLifecycle.mergedCellAudit(CodeTier)(index, minCellRows, minDeadBp,
-        maxDeadBp) { (s, isDead, nDead) =>
-      MergedCellAudit.audit(s.form.store.rows.toArray.sortBy(_._1),
-        (a: Long, b: Long) => hamming(a, b).toDouble, majority, isDead, nDead,
-        sampleMax, iters, kSplit)
-    }
+  /** The merged-cell separability kernel in Hamming space
+    * ([[MergedCellAudit.audit]]): a deterministic k-majority split seeded
+    * by the dead-member and live-member majority codes, then a
+    * full-member purity census per component. Schema and thresholds
+    * identical to the float audit. */
+  protected def auditKernel(i: RoutedCodeIndex, sampleMax: Int, iters: Int, kSplit: Int) =
+    (rows: Array[(Long, Long)], isDead: Long => Boolean, nDead: Int) =>
+      MergedCellAudit.audit(rows, (a: Long, b: Long) => hamming(a, b).toDouble, majority,
+        isDead, nDead, sampleMax, iters, kSplit)
 
-  /** Targeted compaction — [[HnswRouted.compactCells]] on the code
-    * representation: fold the deletion set out of ONLY the listed
-    * cells (narrow map, untouched cells pass by reference) and SHRINK
-    * the tombstone set by exactly the ids that lived there. */
-  def compactCells(index: RoutedCodeIndex, cells: Array[Int],
-                   persist: Boolean = true,
-                   unpersistPrior: Boolean = true,
-                   storage: StorageLevel = DefaultStorage): RoutedCodeIndex =
-    RoutedLifecycle.compactCells(CodeTier)(index, cells,
-      CodeTier.rebuild(index), persist, unpersistPrior, storage)
+  // --------------------------------------------------------------------
+  // Durability: the image is meta, anchors, codes, links, entries and
+  // tombstones ([[RoutedTier.save]]); a 1e8-code index is ~800 MB of
+  // codes + its graphs, restored without training or construction.
+  // --------------------------------------------------------------------
 
-  /** [[compactCells]] with O(touched) persisted bytes — the float
-    * tier's [[HnswRouted.compactCellsPatched]] overlay discipline on
-    * the code representation (only the rebuilt cells persist; the
-    * served composite reads the base's cached blocks everywhere else;
-    * the base handle must stay cached and keeps serving its own
-    * answer; patches stack, [[foldOverlay]] bounds the stack). */
-  def compactCellsPatched(index: RoutedCodeIndex, cells: Array[Int],
-                          persist: Boolean = true): RoutedCodeIndex =
-    RoutedLifecycle.compactCellsPatched(CodeTier)(index, cells,
-      CodeTier.rebuild(index), persist)
+  private[hnsw] val payload = RoutedImage.Payload[CodeCellShard, Long]("codes", "code",
+    RoutedImage.codeRowEnc, _.form.store.rows)
 
-  /** Detect-and-remediate — [[HnswRouted.remediateMergedCells]] on the
-    * code representation: [[mergedCellAudit]] → targeted compaction on
-    * the flagged cells, PATCHED by default. Returns the remediated
-    * index (the input handle when nothing is flagged) and the flagged
-    * cell ids. */
-  def remediateMergedCells(index: RoutedCodeIndex, minCellRows: Int = 1024,
-                           persist: Boolean = true,
-                           unpersistPrior: Boolean = true,
-                           patched: Boolean = true): (RoutedCodeIndex, Array[Int]) = {
-    val flagged = RoutedLifecycle.flaggedCells(mergedCellAudit(index, minCellRows))
-    if (flagged.isEmpty) (index, flagged)
-    else if (patched) (compactCellsPatched(index, flagged, persist), flagged)
-    else (compactCells(index, flagged, persist, unpersistPrior), flagged)
+  protected def imageMeta(i: RoutedCodeIndex): (HnswParams, Seq[(String, Any)]) =
+    (i.params, Seq("seed" -> i.seed))
+
+  protected def writeTables(i: RoutedCodeIndex, spark: SparkSession, dir: String): Unit = {
+    import spark.implicits._
+    i.anchors.zipWithIndex.map { case (a, n) => (n, a) }.toSeq
+      .toDF("idx", "anchor")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/anchors")
   }
 
-  // --------------------------------------------------------------------
-  // Durability: versioned parquet image + attach-without-rebuild
-  // ([[VersionedIndexDirs]] discipline, the float tier's shape on four
-  // data tables — meta, anchors, codes, links — plus per-cell entries
-  // and the live tombstone set).
-  // --------------------------------------------------------------------
-
-
-  /** Persist as a new complete `idx_v{N}` version ([[RoutedImage.save]]:
-    * meta, anchors, codes, links, entries, tombstones). A 1e8-code index
-    * is ~800 MB of codes + its graphs — the designated 1e8-decade tier
-    * no longer costs its full build per session. */
-  def save(index: RoutedCodeIndex, path: String, keepVersions: Int = 1): Unit =
-    RoutedImage.save(CodeTier)(index, path, keepVersions, index.params,
-      Seq("seed" -> index.seed), CodeTier.codes) { (spark, dir) =>
-      import spark.implicits._
-      index.anchors.zipWithIndex.map { case (a, i) => (i, a) }.toSeq
-        .toDF("idx", "anchor")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/anchors")
-    }
-
-  /** Restore WITHOUT rebuilding: newest complete version, one
-    * co-partitioned cogroup reassembling per-cell codes + CSR
-    * snapshots into each cell's serving form ([[OrdinalForm.of]]) — a
-    * parquet scan, no k-majority training, no graph construction. */
-  def attach(spark: SparkSession, path: String,
-             persist: Boolean = true,
-             storage: StorageLevel = DefaultStorage): RoutedCodeIndex = {
-    val (dir, meta) = RoutedImage.open(spark, path)
+  private[hnsw] def restore(spark: SparkSession, dir: String, meta: Row,
+                            persist: Boolean, storage: StorageLevel): RoutedCodeIndex = {
     val anchors = spark.read.parquet(s"$dir/anchors").collect()
       .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1).map(_._2)
     RoutedCodeIndex(RoutedImage.paramsFromMeta(meta), meta.getAs[Long]("seed"),
-      anchors, RoutedImage.shards(CodeTier, spark, dir, CodeTier.codes,
+      anchors, RoutedImage.shards(cacheName, spark, dir, payload,
         partitionerFor(anchors), persist, storage) { (cell, cs, snap) =>
         val (ids, codes) = cs.toArray.unzip
         CodeCellShard(cell, OrdinalForm.of(CodeArena.of(ids, codes), snap))
       },
-      RoutedImage.readTombstones(spark, dir))
+      RoutedImage.readTombstones(spark, dir), storage = storage)
   }
 
-  /** Routed Hamming k-NN: (qid, qcode) -> (qid, id, hamming, rank) —
-    * the flat tier's output contract ([[HnswCodes.search]]). ef0
-    * follows the float tier's density-adaptive default
-    * ([[HnswRouted.autoEf]]); explicit ef0 pins the in-cell beam. */
-  def search(index: RoutedCodeIndex, queries: DataFrame, k: Int,
-             nProbe: Int, ef0: Int = 0): DataFrame =
-    ranked(request(index, k, nProbe, ef0).routed(queries, None), k)
-
-  /** Attribute-filtered routed Hamming k-NN — the float tier's
-    * [[HnswRouted.searchFiltered]] contract on the code
-    * representation (allow-set as a sorted broadcast array; per-cell
-    * one-beam-then-exact; tombstones compose; exhaustive regime forces
-    * the exact path). Above [[HnswRouted.AllowCollectMax]] ids the
-    * call reroutes through [[searchFilteredDistributed]] — no
-    * driver-side copy at any size (the float tier's cutover). */
-  def searchFiltered(index: RoutedCodeIndex, queries: DataFrame,
-                     allowed: DataFrame, k: Int, nProbe: Int,
-                     ef0: Int = 0): DataFrame =
-    ranked(request(index, k, nProbe, ef0).filtered(queries, allowed), k)
-
-  /** Fully distributed filtered serving — the float tier's
-    * [[HnswRouted.searchFilteredDistributed]] on the code
-    * representation: allow-set joined against the index's own
-    * (id → cell) pairs, shuffled by the pinned partitioner, 3-way
-    * zipPartitions with shards + routed queries; per-cell sorted allow
-    * arrays built executor-side. */
-  def searchFilteredDistributed(index: RoutedCodeIndex, queries: DataFrame,
-                                allowed: DataFrame, k: Int, nProbe: Int,
-                                ef0: Int = 0): DataFrame =
-    ranked(request(index, k, nProbe, ef0).filteredDistributed(queries, allowed), k)
+  /** Served Hamming distances stay INTEGERS — the flat tier's output
+    * contract ([[HnswCodes.search]]): (qid, id, hamming, rank). */
+  override protected def ranked(perShard: DataFrame, k: Int): DataFrame =
+    RoutedServe.top(perShard.withColumn(distCol, col(distCol).cast("int")), distCol, k)
 
   /** Probe set for one query code: the nProbe nearest anchors by
     * Hamming distance, ties by anchor index. */
-  private def probeCellsCode(qc: Long, anchors: Array[Long],
-                             nProbe: Int): Iterator[Int] = {
+  private[graft] def probeCells(anchors: Array[Long], qc: Long, nProbe: Int): Iterator[Int] = {
     val byDist = Array.tabulate(anchors.length)(a => (a, hamming(qc, anchors(a))))
     java.util.Arrays.sort(byDist,
       Ordering.by[(Int, Int), (Int, Int)](x => (x._2, x._1)))
     byDist.iterator.take(nProbe).map(_._1)
   }
 
-  /** Distributed query routing on the codes tier — the float tier's
-    * [[HnswRouted.searchDistributed]] contract at 8 bytes/row: queries
-    * stay a DataFrame, fan to their probe cells against the broadcast
-    * anchors, and shuffle by the pinned partitioner while the shard
-    * side rides narrow. [[search]] auto-selects this path above
-    * [[HnswRouted.DriverRouteMax]] queries. */
-  def searchDistributed(index: RoutedCodeIndex, queries: DataFrame, k: Int,
-                        nProbe: Int, ef0: Int = 0): DataFrame =
-    ranked(request(index, k, nProbe, ef0).distributed(queries, None), k)
-
-  private def ranked(perShard: DataFrame, k: Int): DataFrame =
-    RoutedServe.top(perShard, "hamming", k)
-
-  /** One serve over the shared transport ([[RoutedServe]]) with the
-    * shared predicated kernel ([[PredicatedCensus.serve]]) on the code
-    * representation: the cell's codes, a beam on the cell's
+  /** The shared predicated kernel ([[PredicatedCensus.serve]]) on the
+    * code representation: the cell's codes, a beam on the cell's
     * [[OrdinalGraph]] view and the Hamming distance by ordinal (INTEGER
     * distances — ties are the common case, and the kernel's total (dist,
     * id) queue order carries the oracle's tie-breaking). The probe set
     * covering every cell is the exhaustive regime (forced exact scan). */
-  private def request(index: RoutedCodeIndex, k: Int, nProbe: Int, ef0: Int) = {
+  private[hnsw] def kernel(index: RoutedCodeIndex, k: Int, nProbe: Int,
+                           ef0: Int): RoutedServe.Kernel[CodeCellShard, Long] = {
     val params = index.params
     val exhaustive = nProbe >= index.anchors.length
-    new RoutedServe.Request(CodeTier, index, nProbe, "hamming",
-      (m: CodeCellShard, probes: Iterator[(Long, Long)], hasAllow: Boolean,
-       allow: Array[Long], dead: Array[Long]) => {
-        val view = m.view(params)
-        PredicatedCensus.serve(m.form.store, probes, k,
-          HnswRouted.cellEf(params, ef0, m.form.size), exhaustive, hasAllow, allow, dead)(
-          (qc, kk, ef) => view.search(CodeQuery.hamming(qc), kk, ef),
-          qc => view.distances(CodeQuery.hamming(qc)))
-          .map { case (qid, id, d) => (qid, id, d.toInt) }
-      })
+    (m, probes, hasAllow, allow, dead) => {
+      val view = m.view(params)
+      PredicatedCensus.serve(m.form.store, probes, k,
+        HnswRouted.cellEf(params, ef0, m.form.size), exhaustive, hasAllow, allow, dead)(
+        (qc, kk, ef) => view.search(CodeQuery.hamming(qc), kk, ef),
+        qc => view.distances(CodeQuery.hamming(qc)))
+    }
   }
 
-  /** Nest-safe process-wide memo of the catalog's lifecycle handles. */
-  private val memo = new HandleMemo[RoutedCodeIndex](_.unpersist())
-
-  private[hnsw] def releaseCaches(): Unit = memo.releaseAll()
-
-  /** Memo key tail shared by every codes-tier handle. */
-  private def paramKey(nCells: Int, seed: Long, params: HnswParams): Seq[Any] =
-    Seq(nCells, seed, params.m.toList, params.mMax.toList,
+  /** The memoized handle family of one codes corpus. */
+  private def catalog(codes: DataFrame, params: HnswParams, nCells: Int, seed: Long,
+                      key: String) =
+    new Catalog(codes, key, Seq(nCells, seed, params.m.toList, params.mMax.toList,
       params.efConstrSearch.toList, params.efConstrInsert.toList,
-      params.efSearch.toList, params.layerProbability)
+      params.efSearch.toList, params.layerProbability), build(codes, params, nCells, seed))
 
   def buildCached(codes: DataFrame, params: HnswParams, nCells: Int,
                   seed: Long, key: String): RoutedCodeIndex =
-    memo(HandleMemo.appId(codes), key +: paramKey(nCells, seed, params): _*)(
-      graft.BuildLedger.timed("hnsw_routed_codes_build")(
-        build(codes, params, nCells, seed)))
+    catalog(codes, params, nCells, seed, key).built
 
   /** Memoized save+attach round-trip — the catalog's durable-tier
-    * serving handle for the code representation (built once, persisted
-    * once, served from the ATTACHED copy so the oracle rides the
-    * restore path). */
+    * serving handle for the code representation. */
   def attachCached(codes: DataFrame, params: HnswParams, nCells: Int,
                    seed: Long, key: String): RoutedCodeIndex =
-    memo(HandleMemo.appId(codes),
-      Seq("attach", key) ++ paramKey(nCells, seed, params): _*)(
-      graft.BuildLedger.timed("hnsw_routed_codes_save_attach") {
-        val built = buildCached(codes, params, nCells, seed, key)
-        val dir = graft.TempDirs.create("graft_routed_codes_")
-        save(built, dir)
-        attach(codes.sparkSession, dir)
-      })
+    catalog(codes, params, nCells, seed, key).attached
 
-  /** Memoized build-then-ingest — the incremental-growth handle: the
-    * base corpus builds, the tail INGESTS per cell, the grown index is
-    * held to the same exhaustive-regime oracle as a from-scratch
-    * build. */
-  def growCached(baseCodes: DataFrame, newRows: DataFrame,
-                 params: HnswParams, nCells: Int, seed: Long,
-                 key: String): RoutedCodeIndex =
-    memo(HandleMemo.appId(baseCodes),
-      Seq("grow", key) ++ paramKey(nCells, seed, params): _*)(
-      graft.BuildLedger.timed("hnsw_routed_codes_grow") {
-        ingest(build(baseCodes, params, nCells, seed), newRows)
-      })
+  /** Memoized build-then-ingest — the incremental-growth handle, held to
+    * the same exhaustive-regime oracle as a from-scratch build. */
+  def growCached(baseCodes: DataFrame, newRows: DataFrame, params: HnswParams,
+                 nCells: Int, seed: Long, key: String): RoutedCodeIndex =
+    catalog(baseCodes, params, nCells, seed, key).grown(newRows)
 
-  /** Memoized tombstone-serving handle over the SHARED cached build
-    * ([[HnswRouted.deleteCached]]'s contract): delete is O(set) handle
-    * metadata, the shards are the plain row's. */
-  def deleteCached(codes: DataFrame, deleted: DataFrame,
-                   params: HnswParams, nCells: Int, seed: Long,
-                   key: String, delKey: String): RoutedCodeIndex =
-    memo(HandleMemo.appId(codes),
-      Seq("tomb", key, delKey) ++ paramKey(nCells, seed, params): _*)(
-      delete(buildCached(codes, params, nCells, seed, key), deleted))
+  /** Memoized tombstone-serving handle over the SHARED cached build. */
+  def deleteCached(codes: DataFrame, deleted: DataFrame, params: HnswParams, nCells: Int,
+                   seed: Long, key: String, delKey: String): RoutedCodeIndex =
+    catalog(codes, params, nCells, seed, key).deleted(deleted, delKey)
 
-  /** Memoized compaction of the cached tombstoned index
-    * ([[HnswRouted.compactCached]]'s contract — affected cells rebuild,
-    * untouched cells pass through; the prior shards stay cached for the
-    * sibling rows). */
-  def compactCached(codes: DataFrame, deleted: DataFrame,
-                    params: HnswParams, nCells: Int, seed: Long,
-                    key: String, delKey: String): RoutedCodeIndex =
-    memo(HandleMemo.appId(codes),
-      Seq("compact", key, delKey) ++ paramKey(nCells, seed, params): _*)(
-      graft.BuildLedger.timed("hnsw_routed_codes_compact") {
-        compact(deleteCached(codes, deleted, params, nCells, seed, key, delKey),
-          unpersistPrior = false)
-      })
+  /** Memoized compaction of the cached tombstoned index (the prior shards
+    * stay cached for the sibling rows). */
+  def compactCached(codes: DataFrame, deleted: DataFrame, params: HnswParams, nCells: Int,
+                    seed: Long, key: String, delKey: String): RoutedCodeIndex =
+    catalog(codes, params, nCells, seed, key).compacted(deleted, delKey)
 }

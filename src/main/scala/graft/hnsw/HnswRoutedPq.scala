@@ -1,9 +1,11 @@
 package graft.hnsw
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.Partitioner
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -54,7 +56,11 @@ import graft.store.{ArenaVectorStore, CodeArena, CodeQuery, GraphSnapshot}
   * table), [[save]]/[[attach]] durability, and the filtered serving
   * surface ([[searchFiltered]]/[[searchFilteredDistributed]]).
   */
-object HnswRoutedPq {
+object HnswRoutedPq extends RoutedTier {
+  type S = PqCellShard
+  type I = RoutedPqIndex
+  type Q = Array[Float]
+  type P = HnswRouted.Router
 
   /** One cell's serving state: its graph in the form it was grown or
     * encoded in (the cell's [[CodeArena]] and `Int` rows with their
@@ -64,9 +70,9 @@ object HnswRoutedPq {
     * [[rederive]] compares it against the source cell's current content
     * to decide carry-over vs re-encode without ever holding the old
     * vectors. */
-  final case class PqCellShard(cell: Int, form: OrdinalForm.Codes, fingerprint: Long) {
+  final case class PqCellShard(cell: Int, form: OrdinalForm.Codes, fingerprint: Long)
+      extends RoutedCell {
     def view(params: HnswParams): OrdinalGraph[CodeQuery] = form.view(params)
-    def snapshot: GraphSnapshot = form.snapshot
     /** Id -> code, derived once. */
     @transient lazy val codes: LongLongMap = LongLongMap.from(form.store.rows, form.size)
   }
@@ -115,7 +121,10 @@ object HnswRoutedPq {
     * and solo ingest layer draws use it so a solo-compacted cell is
     * graph-identical to the float tier's rebuild of the same
     * survivors — not just content-identical (the pre-round-16 gap:
-    * a hardcoded seed 13 made the equivalence content-level only). */
+    * a hardcoded seed 13 made the equivalence content-level only).
+    * `overlay`: patch RDDs still pinned under `shards` (the
+    * [[compactSoloCellsPatched]] rebuilt-cells overlay). `storage`: the
+    * residency it was built or attached with ([[RoutedHandle]]). */
   final case class RoutedPqIndex(
       params: HnswParams,
       router: HnswRouted.Router,
@@ -123,44 +132,57 @@ object HnswRoutedPq {
       shards: RDD[(Int, PqCellShard)],
       tombstones: Array[Long],
       buildSeed: Long = 13L,
-      // patch RDDs still pinned under `shards` (the
-      // [[compactSoloCellsPatched]] rebuilt-cells overlay) — released
-      // by [[foldOverlay]] or [[unpersist]]
-      overlay: Seq[RDD[_]] = Nil) {
-    def unpersist(): Unit = {
-      overlay.foreach(_.unpersist())
-      shards.unpersist()
-    }
+      overlay: Seq[RDD[_]] = Nil,
+      storage: StorageLevel = StorageLevel.MEMORY_AND_DISK)
+      extends RoutedHandle[PqCellShard, RoutedPqIndex] {
+    private[graft] def withState(shards: RDD[(Int, PqCellShard)], tombstones: Array[Long],
+                                 overlay: Seq[RDD[_]]): RoutedPqIndex =
+      copy(shards = shards, tombstones = tombstones, overlay = overlay)
   }
 
-  /** The PQ tier's [[RoutedTier]] binding — the shared lifecycle runs
-    * through it; the tier's compactions rebuild from survivor floats
-    * FETCHED from the raw-vector table ([[soloRebuild]]), since codes
-    * cannot rebuild a servable graph. */
-  private[graft] object PqTier extends RoutedServing[PqCellShard,
-      RoutedPqIndex, Array[Float], HnswRouted.Router] {
-    def shards(i: RoutedPqIndex): RDD[(Int, PqCellShard)] = i.shards
-    def tombstones(i: RoutedPqIndex): Array[Long] = i.tombstones
-    def overlays(i: RoutedPqIndex): Seq[RDD[_]] = i.overlay
-    def make(i: RoutedPqIndex, shards: RDD[(Int, PqCellShard)],
-             tombstones: Array[Long], overlays: Seq[RDD[_]]): RoutedPqIndex =
-      RoutedPqIndex(i.params, i.router, i.codebook, shards, tombstones,
-        i.buildSeed, overlays)
-    def partitioner(i: RoutedPqIndex): Partitioner = HnswRouted.partitionerFor(i.router)
-    val cacheName = "graft-hnsw-routed-pq"
-    val tierName = "routed-pq"
-    val unpersistBlocking = false
-    val resurrectHint = "Run compactSolo() first (frees the ids), or " +
-      "rederive from a compacted float source"
-    def form(s: PqCellShard): OrdinalForm.Codes = s.form
-    val queryCol = "qvec"
-    def queryEnc: Encoder[(Long, Array[Float])] = pairEnc
-    def router(i: RoutedPqIndex): HnswRouted.Router = i.router
-    def probeCells(r: HnswRouted.Router, q: Array[Float], nProbe: Int): Iterator[Int] =
-      r.probeCells(q, nProbe)
-    val codes = RoutedImage.Payload[PqCellShard, Long]("codes", "code",
-      RoutedImage.codeRowEnc, _.form.store.rows)
+  // ---- the PQ representation's binding ([[RoutedTier]]): compactions
+  // rebuild from survivor floats FETCHED from the raw-vector table
+  // ([[soloRebuild]]), since codes cannot rebuild a servable graph ----
+  implicit protected def cellTag: ClassTag[PqCellShard] = ClassTag(classOf[PqCellShard])
+  implicit protected def routingTag: ClassTag[HnswRouted.Router] =
+    ClassTag(classOf[HnswRouted.Router])
+  private[graft] val tierName = "routed-pq"
+  private[graft] val payloadCol = "vec"
+  private[hnsw] val distCol = "adc"
+  private[hnsw] def queryEnc: Encoder[(Long, Array[Float])] = pairEnc
+  private[hnsw] def routing(i: RoutedPqIndex): HnswRouted.Router = i.router
+  private[graft] def probeCells(r: HnswRouted.Router, q: Array[Float], nProbe: Int): Iterator[Int] =
+    r.probeCells(q, nProbe)
+  protected def partitioner(i: RoutedPqIndex): Partitioner = HnswRouted.partitionerFor(i.router)
+  override protected def resurrectHint: String = "Run compactSolo() first (frees the ids), or " +
+    "rederive from a compacted float source"
+  private[graft] def streamIngest(i: RoutedPqIndex, rows: DataFrame): RoutedPqIndex =
+    ingest(i, rows, unpersistPrior = true)
+
+  /** Members as code RECONSTRUCTIONS ([[PqKernels.decodeArray]] — 16
+    * centroid lookups each): what the merged-cell audit and the
+    * covering-probe warm-up read, with no float source. */
+  protected def memberRows(i: RoutedPqIndex): PqCellShard => Iterator[(Long, Array[Float])] = {
+    val cbB = i.shards.sparkContext.broadcast(i.codebook)
+    _.form.store.rows.map { case (id, c) => (id, PqKernels.decodeArray(c, cbB.value)) }
   }
+
+  /** The float separability kernel ([[MergedCellAudit.auditCell]]) over
+    * reconstructions: dead/live mode separation is orders of magnitude
+    * above the codebook's quantization radius, and members of one mode
+    * reconstruct into the same small centroid neighborhood. Remedy:
+    * [[compactSoloCells]] / [[compactSoloCellsPatched]] on the flagged
+    * ids. */
+  protected def auditKernel(i: RoutedPqIndex, sampleMax: Int, iters: Int, kSplit: Int) =
+    (rows: Array[(Long, Array[Float])], isDead: Long => Boolean, nDead: Int) =>
+      MergedCellAudit.auditCell(rows, graft.store.Metrics.byName("l2"), isDead, nDead,
+        sampleMax, iters, kSplit)
+
+  /** The coarse ADC path at k = `ef` — no float table, usable in the
+    * solo/attached posture; the exact re-rank join reads the external
+    * raw-vector table, whose warmth is the table owner's concern. */
+  protected def warmServe(i: RoutedPqIndex, ef: Int): DataFrame => DataFrame =
+    searchCoarse(i, _, candidates = math.max(1, ef), nProbe = 1, ef0 = ef)
 
   /** Derive the PQ serving tier from a built routed index: train one
     * GLOBAL codebook on a per-cell-capped driver sample (≤ `sampleMax`
@@ -198,7 +220,8 @@ object HnswRoutedPq {
                      codebook: Array[Array[Array[Float]]],
                      persist: Boolean = true): RoutedPqIndex = {
     requireL2(index)
-    derive(index, codebook, None, persist, forceCount = false)._1
+    derive(index, codebook, None, persist, forceCount = false,
+      StorageLevel.MEMORY_AND_DISK)._1
   }
 
   /** Build the PQ tier DIRECTLY from a vector table — no float index
@@ -289,11 +312,11 @@ object HnswRoutedPq {
         maxCellRows, modalitySplit)
       // the per-cell build fail-fasts on an in-cell duplicate id (the
       // documented dedupIds = false contract)
-      val shards = RoutedLifecycle.build(PqTier, HnswRouted.keyedByCell(cells),
+      val shards = buildShards(HnswRouted.keyedByCell(cells),
         HnswRouted.partitionerFor(router), persist, storage)(growSolo(
         spark.sparkContext.broadcast(cb), cfg.params, cfg.seed, ingested = false))
       RoutedPqIndex(cfg.params, router, cb, shards, Array.empty,
-        buildSeed = cfg.seed)
+        buildSeed = cfg.seed, storage = storage)
     } finally if (pinInput) { deduped.unpersist(blocking = false); () }
   }
 
@@ -325,7 +348,7 @@ object HnswRoutedPq {
     * transport ([[RoutedServe]]): driver collect below
     * [[HnswRouted.DriverRouteMax]], distributed (query-side-only
     * shuffle keyed by the pinned partitioner, narrow zipPartitions on
-    * the shard side) above it — same kernel, spec-pinned identical. */
+    * the shard side) — same kernel, spec-pinned identical. */
   def searchCoarse(index: RoutedPqIndex, queries: DataFrame,
                    candidates: Int, nProbe: Int, ef0: Int = 0): DataFrame =
     request(index, candidates, nProbe, ef0).routed(queries, None)
@@ -381,18 +404,16 @@ object HnswRoutedPq {
                        queries: DataFrame, k: Int): DataFrame =
     Pq.rerank(coarse.select(col("qid"), col("id")), vectors, queries, k)
 
-  /** One serve over the shared transport ([[RoutedServe]]) with the ADC
-    * candidate kernel. */
-  private def request(index: RoutedPqIndex, candidates: Int, nProbe: Int,
-                      ef0: Int) = {
+  /** The ADC candidate kernel ([[serveAdcShard]]) at `candidates` rows
+    * per (query, probed cell). */
+  private[hnsw] def kernel(index: RoutedPqIndex, candidates: Int, nProbe: Int,
+                           ef0: Int): RoutedServe.Kernel[PqCellShard, Array[Float]] = {
     val params = index.params
     val exhaustive = nProbe >= index.router.nPrimary
     val cbB = index.shards.sparkContext.broadcast(index.codebook)
-    new RoutedServe.Request(PqTier, index, nProbe, "adc",
-      (m: PqCellShard, probes: Iterator[(Long, Array[Float])], hasAllow: Boolean,
-       allow: Array[Long], dead: Array[Long]) =>
-        serveAdcShard(params, m, cbB.value, dead, probes, candidates,
-          exhaustive, ef0, hasAllow, allow))
+    (m, probes, hasAllow, allow, dead) =>
+      serveAdcShard(params, m, cbB.value, dead, probes, candidates,
+        exhaustive, ef0, hasAllow, allow)
   }
 
   /** Per-shard ADC candidate kernel of every serving path. `allow` is a
@@ -444,16 +465,6 @@ object HnswRoutedPq {
     reranked(searchCoarse(index, queries, math.max(candidates, k), nProbe,
       ef0), vectors, queries, k)
 
-  /** Tombstone delete on the PQ tier — O(set) handle metadata, sharing
-    * the shards (the [[HnswRouted.delete]] semantics verbatim: serving
-    * excludes the set transparently; deleting an ABSENT id is accepted
-    * and delete-wins against later inserts of it). Folding the set out
-    * has two paths: when a float source is live, compact IT and
-    * [[rederive]] (re-encodes only touched cells); with no float
-    * source (the attached posture), [[compactSolo]] rebuilds touched
-    * cells from the raw-vector table. */
-  def delete(index: RoutedPqIndex, ids: DataFrame): RoutedPqIndex =
-    RoutedLifecycle.delete(PqTier)(index, ids)
 
   // --------------------------------------------------------------------
   // SOLO lifecycle — the attached tier without its float source.
@@ -501,11 +512,9 @@ object HnswRoutedPq {
   def ingest(index: RoutedPqIndex, newRows: DataFrame,
              persist: Boolean = true, unpersistPrior: Boolean = false,
              seed: Long = Long.MinValue): RoutedPqIndex =
-    RoutedLifecycle.ingest(PqTier)(index, newRows, "vec", persist,
-      unpersistPrior, StorageLevel.MEMORY_AND_DISK)(
-      HnswRouted.routeBy(index.router))(growSolo(
-      newRows.sparkSession.sparkContext.broadcast(index.codebook), index.params,
-      if (seed == Long.MinValue) index.buildSeed else seed, ingested = true))
+    ingestWith(index, newRows, persist, unpersistPrior)(HnswRouted.routeBy(index.router))(
+      growSolo(newRows.sparkSession.sparkContext.broadcast(index.codebook), index.params,
+        if (seed == Long.MinValue) index.buildSeed else seed, ingested = true))
 
   /** The solo cell kernel — [[buildSolo]], [[ingest]] and the
     * `floatExact = false` compaction rebuild all grow a cell here
@@ -533,35 +542,6 @@ object HnswRoutedPq {
       if (ingested) ingestedFp(prior.fold(0L)(_.fingerprint), rows.iterator.map(_._1))
       else contentFingerprintRows(rows.iterator))
   }
-
-  /** Opt-in serving warm-up — [[HnswRouted.warm]] on the compressed
-    * tier: one deserializing sweep of graph + code blocks off the
-    * serving path (the attach posture's first-serve discipline).
-    * Returns the shard count. */
-  def warm(index: RoutedPqIndex): Long = RoutedOps.warm(index.shards)
-
-  /** Covering-probe warm-up — [[HnswRouted.warmProbe]] on the
-    * compressed tier: one member RECONSTRUCTION per cell served back
-    * through the coarse ADC path at k = 1 (no float table — usable in
-    * the solo/attached posture), paying the kernel JIT + plan warm-up
-    * that [[warm]]'s block sweep leaves on the first real serve. The
-    * exact re-rank join is deliberately not driven: it reads the
-    * external raw-vector table, whose warmth is the table owner's
-    * concern, not the index's. */
-  def warmProbe(index: RoutedPqIndex, ef: Int = 16): Long = {
-    val cbB = index.shards.sparkContext.broadcast(index.codebook)
-    // the rows are lazy: the probe-rep collection is O(nCells) decodes
-    RoutedServe.warmProbe(PqTier, index)(_.form.store.rows.map {
-      case (_, c) => PqKernels.decodeArray(c, cbB.value) })(
-      searchCoarse(index, _, candidates = math.max(1, ef), nProbe = 1, ef0 = ef))
-  }
-
-  /** Which of `ids` are present in the index's cells — one narrow
-    * scan of the shards' stored ids (no shuffle; the [[HnswRouted
-    * .presentIds]] contract on the compressed tier). Sorted. */
-  def presentIds(index: RoutedPqIndex, ids: Array[Long]): Array[Long] =
-    RoutedOps.presentIds(index.shards, ids)(
-      (s, f) => s.form.store.idIterator.foreach(f))
 
   /** Fold the deletion set out of the PQ tier WITHOUT a float source:
     * cells holding a tombstoned id rebuild from the raw-vector table
@@ -592,8 +572,8 @@ object HnswRoutedPq {
       forceCount: Boolean = true,
       floatExact: Boolean = true): (RoutedPqIndex, Long, Long) =
     if (index.tombstones.isEmpty) (index, 0L, index.router.allCells.size.toLong)
-    else RoutedLifecycle.compact(PqTier)(index, soloRebuild(index, vectors,
-      floatExact), persist, unpersistPrior, StorageLevel.MEMORY_AND_DISK, forceCount)
+    else compactBy(index, soloRebuild(index, vectors, floatExact), persist,
+      unpersistPrior, forceCount)
 
   /** The solo compactions' cell rebuild: survivor floats FETCHED from
     * the raw-vector table (the re-rank table — the one full-precision
@@ -606,51 +586,14 @@ object HnswRoutedPq {
     * so a float-exact rebuild is graph-identical to the float tier's
     * compaction of the same survivors. */
   private def soloRebuild(index: RoutedPqIndex, vectors: DataFrame,
-                          floatExact: Boolean): RoutedLifecycle.Rebuild[PqCellShard] = {
+                          floatExact: Boolean): RoutedTier.Rebuild[PqCellShard] = {
     val cbB = vectors.sparkSession.sparkContext.broadcast(index.codebook)
     val float = HnswRouted.growCell(
       HnswDistributed.BuildConfig(index.params, "l2", seed = index.buildSeed)) _
     val solo = growSolo(cbB, index.params, index.buildSeed, ingested = false) _
-    RoutedLifecycle.Rebuild((cell, _, _, rows) =>
+    RoutedTier.Rebuild((cell, _, _, rows) =>
       if (floatExact) encodeShard(float(cell, None, rows), cbB.value)
       else solo(cell, None, rows), Some(vectors))
-  }
-
-  // --------------------------------------------------------------------
-  // Merged-cell detection + targeted remedy — the float/codes tiers'
-  // audit on the COMPRESSED tier, the last one unguarded against the
-  // dead-side serving tax (float measured 11.6x, codes 7.0x from ONE
-  // merged cell). The census runs over code RECONSTRUCTIONS
-  // ([[PqKernels.decodeArray]] — 16 centroid lookups per member), so a
-  // solo-built index whose floats live only on disk audits WITHOUT
-  // touching the float source; the remedy (a targeted rebuild) is the
-  // one step that genuinely needs survivor floats, and it fetches them
-  // for ONLY the flagged cells through the same join the exact re-rank
-  // already uses.
-  // --------------------------------------------------------------------
-
-  /** Merged-cell audit — [[HnswRouted.mergedCellAudit]] on the
-    * compressed representation: cells in the suspicious dead-fraction
-    * band decode their codes to reconstructions and run the SHARED
-    * float-space separability kernel ([[MergedCellAudit.auditCell]]).
-    * Quantization cannot hide the structure the audit hunts: dead/live
-    * mode separation is orders of magnitude above the codebook's
-    * quantization radius, and members of one mode reconstruct into the
-    * same small centroid neighborhood. Schema and thresholds identical
-    * to the float/codes audits. Remedy: [[compactSoloCells]] /
-    * [[compactSoloCellsPatched]] on the flagged ids. */
-  def mergedCellAudit(index: RoutedPqIndex, minCellRows: Int = 1024,
-                      minDeadBp: Int = 1000, maxDeadBp: Int = 9000,
-                      sampleMax: Int = 4096, iters: Int = 8,
-                      kSplit: Int = 8): DataFrame = {
-    val cbB = index.shards.sparkContext.broadcast(index.codebook)
-    RoutedLifecycle.mergedCellAudit(PqTier)(index, minCellRows, minDeadBp,
-        maxDeadBp) { (s, isDead, nDead) =>
-      val cb = cbB.value
-      MergedCellAudit.auditCell(
-        s.form.store.rows.map { case (id, c) => (id, PqKernels.decodeArray(c, cb)) }.toArray.sortBy(_._1),
-        graft.store.Metrics.byName("l2"), isDead, nDead, sampleMax, iters, kSplit)
-    }
   }
 
   /** Targeted solo compaction: [[compactSolo]] restricted to the listed
@@ -682,8 +625,8 @@ object HnswRoutedPq {
                        cells: Array[Int], persist: Boolean = true,
                        unpersistPrior: Boolean = false,
                        floatExact: Boolean = true): RoutedPqIndex =
-    RoutedLifecycle.compactCells(PqTier)(index, cells, soloRebuild(index,
-      vectors, floatExact), persist, unpersistPrior, StorageLevel.MEMORY_AND_DISK)
+    compactCellsBy(index, cells, soloRebuild(index, vectors, floatExact), persist,
+      unpersistPrior)
 
   /** [[compactSoloCells]] with O(touched) PERSISTED BYTES — the
     * float/codes tiers' patch-overlay discipline on the compressed
@@ -697,15 +640,8 @@ object HnswRoutedPq {
                               cells: Array[Int],
                               persist: Boolean = true,
                               floatExact: Boolean = true): RoutedPqIndex =
-    RoutedLifecycle.compactCellsPatched(PqTier)(index, cells,
-      soloRebuild(index, vectors, floatExact), persist)
-
-  /** Fold stacked patch overlays into one self-contained persisted
-    * image — [[HnswRoutedCodes.foldOverlay]] on the compressed tier. */
-  def foldOverlay(index: RoutedPqIndex,
-                  storage: StorageLevel =
-                    StorageLevel.MEMORY_AND_DISK): RoutedPqIndex =
-    RoutedLifecycle.foldOverlay(PqTier)(index, storage)
+    compactCellsBy(index, cells, soloRebuild(index, vectors, floatExact), persist,
+      unpersistPrior = false, patched = true)
 
   /** Detect-and-remediate — [[HnswRouted.remediateMergedCells]] on the
     * compressed tier: [[mergedCellAudit]] (over reconstructions — no
@@ -718,16 +654,9 @@ object HnswRoutedPq {
                                persist: Boolean = true,
                                unpersistPrior: Boolean = false,
                                patched: Boolean = true,
-                               floatExact: Boolean = true): (RoutedPqIndex, Array[Int]) = {
-    val flagged = RoutedLifecycle.flaggedCells(mergedCellAudit(index, minCellRows))
-    if (flagged.isEmpty) (index, flagged)
-    else if (patched)
-      (compactSoloCellsPatched(index, vectors, flagged, persist,
-        floatExact), flagged)
-    else
-      (compactSoloCells(index, vectors, flagged, persist, unpersistPrior,
-        floatExact), flagged)
-  }
+                               floatExact: Boolean = true): (RoutedPqIndex, Array[Int]) =
+    remediateBy(index, minCellRows, persist, unpersistPrior, patched)(
+      soloRebuild(index, vectors, floatExact))
 
   /** Follow the float source tier through its lifecycle: after
     * [[HnswRouted.ingest]]/[[HnswRouted.compact]]/compactCells[Patched]/
@@ -803,7 +732,7 @@ object HnswRoutedPq {
             HnswRouted.partitionerFor(source.router))))
         }
       }
-    val out = derive(source, old.codebook, prior, persist, forceCount)
+    val out = derive(source, old.codebook, prior, persist, forceCount, old.storage)
     if (unpersistPrior) old.unpersist()
     out
   }
@@ -820,7 +749,8 @@ object HnswRoutedPq {
   private def derive(source: HnswRouted.RoutedIndex,
                      codebook: Array[Array[Array[Float]]],
                      prior: Option[RDD[(Int, (CodeArena, Long))]],
-                     persist: Boolean, forceCount: Boolean): (RoutedPqIndex, Long, Long) = {
+                     persist: Boolean, forceCount: Boolean,
+                     storage: StorageLevel): (RoutedPqIndex, Long, Long) = {
     val sc = source.shards.sparkContext
     val cbB = sc.broadcast(codebook)
     val reenc = sc.longAccumulator("pq-rederive-reencoded")
@@ -844,57 +774,50 @@ object HnswRoutedPq {
     val shards = prior.fold(source.shards.mapPartitions(pass(_, Map.empty),
       preservesPartitioning = true))(p => source.shards.zipPartitions(p,
       preservesPartitioning = true)((f, c) => pass(f, c.toMap)))
-    if (persist) RoutedLifecycle.materialize(shards, PqTier.cacheName,
-      StorageLevel.MEMORY_AND_DISK)
+    if (persist) RoutedTier.materialize(shards, cacheName, storage)
     else if (forceCount) shards.count()
     (RoutedPqIndex(source.cfg.params, source.router, codebook, shards,
-      source.tombstones, buildSeed = source.cfg.seed), reenc.value, carry.value)
+      source.tombstones, buildSeed = source.cfg.seed, storage = storage),
+      reenc.value, carry.value)
   }
 
   // --------------------------------------------------------------------
-  // Durability: versioned parquet persistence + attach-without-rederive.
-  // The 1e8 serving posture NEEDS this: deriving the PQ tier requires
-  // the float source resident, so a restart that re-derives would pay
-  // the full float build + encode — attach pays a parquet scan + CSR
-  // assembly instead, and the float source never has to exist on the
-  // serving cluster at all (graph + codes restore directly; raw
-  // vectors stay wherever the re-rank join reads them from).
+  // Durability: attach-without-rederive. The 1e8 serving posture NEEDS
+  // it: deriving the PQ tier requires the float source resident, so a
+  // restart that re-derives would pay the full float build + encode —
+  // attach pays a parquet scan + CSR assembly instead, and the float
+  // source never has to exist on the serving cluster at all. Eight
+  // tables ([[RoutedTier.save]]): meta (params + router arity + build
+  // seed), centroids (both router levels), codebook, codes (8 B/row),
+  // links, entries, fingerprints (per-cell content digests — [[rederive]]
+  // keeps its incremental carry across a restart), tombstones. The
+  // metric is structurally `l2` (the [[fromRouted]] requirement).
   // --------------------------------------------------------------------
 
+  private[hnsw] val payload = RoutedImage.Payload[PqCellShard, Long]("codes", "code",
+    RoutedImage.codeRowEnc, _.form.store.rows)
 
-  /** Persist the PQ tier under `path` as a new complete version
-    * ([[RoutedImage.save]], the discipline shared with the float/codes
-    * tiers). Eight tables: meta (params + router arity + build seed),
-    * centroids (both router levels), codebook (the global PQ codebook),
-    * codes (8 B/row per cell), links, entries, fingerprints (per-cell
-    * content digests — [[rederive]] keeps its incremental carry across
-    * a restart), tombstones. The metric is structurally `l2` (the
-    * [[fromRouted]] requirement) so no metric column is stored. */
-  def save(index: RoutedPqIndex, path: String, keepVersions: Int = 1): Unit =
-    RoutedImage.save(PqTier)(index, path, keepVersions, index.params,
-      Seq("n_primary" -> index.router.nPrimary, "build_seed" -> index.buildSeed),
-      PqTier.codes) { (spark, dir) =>
-      import spark.implicits._
-      RoutedImage.writeRouter(spark, dir, index.router)
-      index.codebook.zipWithIndex.flatMap { case (sub, s) =>
-        sub.zipWithIndex.map { case (c, i) => (s, i, c.toSeq) }
-      }.toSeq.toDF("sub", "idx", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebook")
-      index.shards.map { case (cell, s) => (cell, s.fingerprint) }.toDF("cell", "fingerprint")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/fingerprints")
-    }
+  protected def imageMeta(i: RoutedPqIndex): (HnswParams, Seq[(String, Any)]) =
+    (i.params, Seq("n_primary" -> i.router.nPrimary, "build_seed" -> i.buildSeed))
 
-  /** Restore a saved PQ tier WITHOUT the float source: read the newest
-    * complete version, reassemble per-cell shards with one
-    * co-partitioned cogroup keyed by the pinned [[HnswRouted
-    * .CellPartitioner]] (value-equal to the source index's, so a later
-    * [[rederive]] against a re-attached float source still carries
-    * unchanged cells by fingerprint). Attach cost is a parquet scan +
-    * CSR assembly — no k-means, no HNSW construction, no encode. */
-  def attach(spark: SparkSession, path: String,
-             persist: Boolean = true,
-             storage: StorageLevel = StorageLevel.MEMORY_AND_DISK): RoutedPqIndex = {
-    val (dir, meta) = RoutedImage.open(spark, path)
+  protected def writeTables(i: RoutedPqIndex, spark: SparkSession, dir: String): Unit = {
+    import spark.implicits._
+    RoutedImage.writeRouter(spark, dir, i.router)
+    i.codebook.zipWithIndex.flatMap { case (sub, s) =>
+      sub.zipWithIndex.map { case (c, n) => (s, n, c.toSeq) }
+    }.toSeq.toDF("sub", "idx", "centroid")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebook")
+    i.shards.map { case (cell, s) => (cell, s.fingerprint) }.toDF("cell", "fingerprint")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/fingerprints")
+  }
+
+  /** Restore WITHOUT the float source, keyed by the pinned
+    * [[HnswRouted.CellPartitioner]] (value-equal to the source index's,
+    * so a later [[rederive]] against a re-attached float source still
+    * carries unchanged cells by fingerprint) — no k-means, no HNSW
+    * construction, no encode. */
+  private[hnsw] def restore(spark: SparkSession, dir: String, meta: Row,
+                            persist: Boolean, storage: StorageLevel): RoutedPqIndex = {
     // build_seed persists since round 16; older images fall back to the
     // historical hardcoded solo seed (13) they were operated with
     val buildSeed =
@@ -912,49 +835,34 @@ object HnswRoutedPq {
     // per-cell PRESENCE also rides the fingerprints table (one row per
     // SHARD, zero-code cells included) — images written before the
     // entries table recorded presence keep their empty cells through it
-    val shards = RoutedImage.shards(PqTier, spark, dir, PqTier.codes,
+    val shards = RoutedImage.shards(cacheName, spark, dir, payload,
       HnswRouted.partitionerFor(router), persist, storage, fps.keySet)(
       { (cell, cs, snap) =>
         val (ids, codes) = cs.toArray.unzip
         PqCellShard(cell, OrdinalForm.of(CodeArena.of(ids, codes), snap), fpB.value.getOrElse(cell, 0L))
       })
     RoutedPqIndex(RoutedImage.paramsFromMeta(meta), router, codebook, shards,
-      RoutedImage.readTombstones(spark, dir), buildSeed)
+      RoutedImage.readTombstones(spark, dir), buildSeed, storage = storage)
   }
-
-  /** Nest-safe process-wide memo of the catalog's handles (the source
-    * index comes from [[HnswRouted.buildCached]], which may build inside
-    * these calls). */
-  private val memo = new HandleMemo[RoutedPqIndex](_.unpersist())
-
-  private[hnsw] def releaseCaches(): Unit = memo.releaseAll()
 
   /** Memoized save→attach round-trip over the cached derivation — the
     * catalog's durable-path handle (the [[HnswRouted.attachCached]]
     * pattern): derive once, persist the eight-table image, restore it
     * WITHOUT the float source, serve from the attached copy. */
   def attachCached(index: HnswRouted.RoutedIndex, key: String): RoutedPqIndex =
-    memo(index.shards.sparkContext.applicationId, "pqattach", key)(
-      graft.BuildLedger.timed("hnsw_routed_pq_save_attach") {
-        val spark = SparkSession.active
-        val derived = fromRoutedCached(index, key)
-        val dir = graft.TempDirs.create("graft_routed_pq_")
-        save(derived, dir)
-        attach(spark, dir)
-      })
+    memoized(index.shards.sparkContext.applicationId, "save_attach", "pqattach", key)(
+      roundTrip(fromRoutedCached(index, key)))
 
   /** Memoized [[buildSolo]] — the catalog handle for the float-free
     * build path (one build per session per key). */
   def buildSoloCached(vectors: DataFrame, cfg: HnswDistributed.BuildConfig,
                       nCells: Int, key: String): RoutedPqIndex =
-    memo(HandleMemo.appId(vectors), "pqsolobuild", key, nCells)(
-      graft.BuildLedger.timed("hnsw_routed_pq_solo_build")(
-        buildSolo(vectors, cfg, nCells)))
+    memoized(HandleMemo.appId(vectors), "solo_build", "pqsolobuild", key, nCells)(
+      buildSolo(vectors, cfg, nCells))
 
   /** Memoized derivation. */
   def fromRoutedCached(index: HnswRouted.RoutedIndex, key: String,
                        seed: Long = 13L): RoutedPqIndex =
-    memo(index.shards.sparkContext.applicationId, "pq", key, seed,
-      index.tombstones.length)(
-      graft.BuildLedger.timed("hnsw_routed_pq_encode")(fromRouted(index, seed)))
+    memoized(index.shards.sparkContext.applicationId, "encode", "pq", key, seed,
+      index.tombstones.length)(fromRouted(index, seed))
 }

@@ -2,54 +2,11 @@ package graft.hnsw
 
 import org.apache.spark.rdd.RDD
 
-/** Shard-generic lifecycle plumbing shared by the three routed serving
-  * tiers (float / u64 codes / PQ) — the [[PredicatedCensus]] /
-  * [[MergedCellAudit]] extraction discipline applied to the
-  * representation-independent operations: these existed as three
-  * hand-synced textual copies, the round-15 failure mode (one fix
-  * applied N times by hand misses a copy). The member REPRESENTATION
-  * stays per-tier (a lambda per call); the RDD shape, broadcast
-  * discipline, and sortedness contracts live once, here. */
+/** Shard-generic helpers of the routed tiers ([[RoutedTier]]). */
 private[graft] object RoutedOps {
-
-  /** One deserializing sweep of the shard blocks off the serving path —
-    * the block-touch warm (the first-serve disk tax moved to a chosen
-    * moment; the kernel/plan ramp needs the tiers' covering probes).
-    * Returns the shard count. */
-  def warm[S](shards: RDD[(Int, S)]): Long =
-    shards.mapPartitions({ it =>
-      var n = 0L; it.foreach(_ => n += 1); Iterator.single(n)
-    }, preservesPartitioning = true).fold(0L)(_ + _)
-
-  /** Which of `ids` (sorted) are present in the shards' member sets —
-    * one narrow scan of the key sets (no shuffle). `foreachId` walks
-    * one shard's member ids. Returns sorted hits. */
-  def presentIds[S](shards: RDD[(Int, S)], ids: Array[Long])
-                   (foreachId: (S, Long => Unit) => Unit): Array[Long] =
-    if (ids.isEmpty) ids
-    else {
-      val idsB = shards.sparkContext.broadcast(ids)
-      val hits = shards.flatMap { case (_, s) =>
-        val a = idsB.value
-        val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-        foreachId(s, id =>
-          if (java.util.Arrays.binarySearch(a, id) >= 0) out += id)
-        out.iterator
-      }.collect()
-      java.util.Arrays.sort(hits); hits
-    }
 
   /** (cell, rows) occupancy — the threshold-compaction / drift-audit
     * stat (nCells rows collected). */
   def cellStats[S](shards: RDD[(Int, S)])(sizeOf: S => Int): Array[(Int, Long)] =
     shards.map { case (c, s) => (c, sizeOf(s).toLong) }.collect()
-
-  /** Tombstone-set merge of the three tiers' O(set)-metadata delete:
-    * sorted distinct union (delete of an absent id is accepted;
-    * re-delete is idempotent). */
-  def mergeTombstones(existing: Array[Long], del: Array[Long]): Array[Long] = {
-    val merged = (existing ++ del).distinct
-    java.util.Arrays.sort(merged)
-    merged
-  }
 }

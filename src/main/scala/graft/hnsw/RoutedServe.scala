@@ -1,27 +1,11 @@
 package graft.hnsw
 
 import scala.reflect.ClassTag
-import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, row_number}
-
-/** A routed tier's serving binding: beside its [[RoutedTier]] lifecycle
-  * surface, the tier names only its query payload and its routing —
-  * [[RoutedServe]] owns the transport. */
-private[graft] trait RoutedServing[S, I, Q, P] extends RoutedTier[S, I] {
-  /** Query payload column ("qvec" / "qcode"). */
-  def queryCol: String
-  def queryEnc: Encoder[(Long, Q)]
-  /** Routing state (router / anchors): used in place on the driver,
-    * broadcast by the distributed paths. */
-  def router(i: I): P
-  /** The probe cells of one query — the SAME function on both routing
-    * paths, so routing is path-independent. */
-  def probeCells(p: P, q: Q, nProbe: Int): Iterator[Int]
-}
 
 /** The routed serving transport shared by the float, u64-code and PQ
   * tiers — partition-local top-k with a global merge (the REPOSE
@@ -34,16 +18,15 @@ private[graft] object RoutedServe {
   /** Per-shard kernel: (shard, its routed (qid, payload) probes,
     * hasAllow, sorted allow-set, sorted tombstones) → per-shard rows
     * (qid, id, dist). */
-  type Kernel[S, Q, R] =
-    (S, Iterator[(Long, Q)], Boolean, Array[Long], Array[Long]) => Iterator[R]
+  type Kernel[S, Q] = (S, Iterator[(Long, Q)], Boolean, Array[Long], Array[Long]) =>
+    Iterator[(Long, Long, Double)]
 
-  /** One serve over `index`: the tier, its probe width, the distance
-    * column its rows carry and its per-shard kernel. The paths return
-    * the UNMERGED per-shard rows; tiers finish with [[top]] (float,
+  /** One serve over `index`: the tier, its probe width and its per-shard
+    * kernel. The paths return the UNMERGED per-shard rows (qid, id, and
+    * the tier's distance column); tiers finish with [[top]] (float,
     * codes) or the exact re-rank join (PQ). */
-  final class Request[S, I, Q, P: ClassTag, R <: Product : ClassTag : TypeTag](
-      t: RoutedServing[S, I, Q, P], index: I, nProbe: Int, distCol: String,
-      serve: Kernel[S, Q, R]) {
+  final class Request[S <: RoutedCell, I <: RoutedHandle[S, I], Q, P: ClassTag](
+      t: RoutedTier.Aux[S, I, Q, P], index: I, nProbe: Int, serve: Kernel[S, Q]) {
 
     /** Driver-routed serving: an ONLINE query batch is tiny next to the
       * corpus and routing state is tiny next to everything — assign each
@@ -61,18 +44,18 @@ private[graft] object RoutedServe {
         .limit(HnswRouted.DriverRouteMax + 1).as(t.queryEnc).collect()
       if (qArr.length > HnswRouted.DriverRouteMax)
         return distributed(queries, allowed)
-      val router = t.router(index)
+      val router = t.routing(index)
       val byCell = qArr.iterator.flatMap { case (qid, q) =>
         t.probeCells(router, q, nProbe).map(c => (c, (qid, q)))
       }.toArray.groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2) }
       val qB = spark.sparkContext.broadcast(byCell)
       val kernel = bound(allowed)
       import spark.implicits._
-      HnswRouted.prunedShards(t.shards(index), byCell.keys).flatMap {
+      HnswRouted.prunedShards(index.shards, byCell.keys).flatMap {
         case (cell, m) =>
           val probes = qB.value.getOrElse(cell, Array.empty[(Long, Q)])
           if (probes.isEmpty) Iterator.empty else kernel(m, probes.iterator)
-      }.toDF("qid", "id", distCol)
+      }.toDF("qid", "id", t.distCol)
     }
 
     /** Distributed query routing — the BATCH-side path: the ONLY
@@ -81,18 +64,19 @@ private[graft] object RoutedServe {
     def distributed(queries: DataFrame, allowed: Option[Array[Long]]): DataFrame = {
       val spark = queries.sparkSession
       import spark.implicits._
-      zipServe(t.shards(index), routedQueries(queries))(bound(allowed))
-        .toDF("qid", "id", distCol)
+      zipServe(index.shards, routedQueries(queries))(bound(allowed))
+        .toDF("qid", "id", t.distCol)
     }
 
     /** The kernel with its predicate state bound: both sets ride as
       * sorted primitive broadcast arrays (the searchPredicated shape —
       * O(set), never O(corpus)). */
-    private def bound(allowed: Option[Array[Long]]): (S, Iterator[(Long, Q)]) => Iterator[R] = {
-      val sc = t.shards(index).sparkContext
+    private def bound(allowed: Option[Array[Long]])
+        : (S, Iterator[(Long, Q)]) => Iterator[(Long, Long, Double)] = {
+      val sc = index.shards.sparkContext
       val hasAllow = allowed.nonEmpty
       val allowB = sc.broadcast(allowed.getOrElse(Array.empty[Long]))
-      val tombB = sc.broadcast(t.tombstones(index))
+      val tombB = sc.broadcast(index.tombstones)
       val kernel = serve
       (m, probes) => kernel(m, probes, hasAllow, allowB.value, tombB.value)
     }
@@ -109,14 +93,14 @@ private[graft] object RoutedServe {
       * 3-way zipPartitions with the shards and the routed queries. */
     def filteredDistributed(queries: DataFrame, allowed: DataFrame): DataFrame = {
       val spark = queries.sparkSession
-      val tombB = spark.sparkContext.broadcast(t.tombstones(index))
+      val tombB = spark.sparkContext.broadcast(index.tombstones)
       val routed = routedQueries(queries)
-      val allow = allowByCell(t)(index, allowed, routed.partitioner.get)
+      val allow = allowByCell(index.shards, allowed, routed.partitioner.get)
       val kernel = serve
       import spark.implicits._
-      zipServeFiltered(t.shards(index), routed, allow) { (m, probes, al) =>
+      zipServeFiltered(index.shards, routed, allow) { (m, probes, al) =>
         kernel(m, probes, true, al, tombB.value)
-      }.toDF("qid", "id", distCol)
+      }.toDF("qid", "id", t.distCol)
     }
 
     /** Fan each query to its probe cells against the broadcast routing
@@ -125,32 +109,15 @@ private[graft] object RoutedServe {
       * theirs) — every build/attach/ingest/compact output pins it, so
       * absence is a construction bug, not a servable state. */
     private def routedQueries(queries: DataFrame): RDD[(Int, (Long, Q))] = {
-      val part = t.shards(index).partitioner.getOrElse(throw new IllegalStateException(
+      val part = index.shards.partitioner.getOrElse(throw new IllegalStateException(
         "distributed routing needs the index's pinned CellPartitioner"))
-      val routerB = queries.sparkSession.sparkContext.broadcast(t.router(index))
+      val routerB = queries.sparkSession.sparkContext.broadcast(t.routing(index))
       val (tt, n) = (t, nProbe)
       queries.select(col("qid"), col(t.queryCol)).as(t.queryEnc).rdd
         .flatMap { case (qid, q) =>
           tt.probeCells(routerB.value, q, n).map(c => (c, (qid, q)))
         }.partitionBy(part)
     }
-  }
-
-  /** Covering-probe warm-up: ONE real serve (`serve`) whose query batch
-    * holds one representative per cell (`rep`) — each query routes back
-    * to its own cell, so every cell runs its kernel once off the serving
-    * path. Returns the number of cells probed. */
-  def warmProbe[S, I, Q, P](t: RoutedServing[S, I, Q, P], index: I)(
-      rep: S => Iterator[Q])(serve: DataFrame => DataFrame): Long = {
-    val reps = t.shards(index).flatMap { case (cell, s) =>
-      rep(s).take(1).map(q => (cell.toLong, q))
-    }.collect()
-    if (reps.nonEmpty) {
-      val spark = org.apache.spark.sql.SparkSession.active
-      serve(spark.createDataset(reps.toSeq)(t.queryEnc).toDF("qid", t.queryCol))
-        .count()
-    }
-    reps.length.toLong
   }
 
   /** Global top-k merge over per-shard rows: row_number over the total
@@ -237,15 +204,13 @@ private[graft] object RoutedServe {
   private val idCellCache =
     new java.util.WeakHashMap[RDD[_], RDD[(Long, Int)]]()
 
-  private def idCellOf[S, I](t: RoutedTier[S, I])(index: I): RDD[(Long, Int)] =
+  private def idCellOf[S <: RoutedCell](sh: RDD[(Int, S)]): RDD[(Long, Int)] =
     idCellCache.synchronized {
-      val sh = t.shards(index)
       val hit = idCellCache.get(sh)
       if (hit != null) hit
       else {
-        val tt = t
         val built = sh.flatMap { case (c, s) =>
-          tt.idIterator(s).map(id => (id, c))
+          s.form.store.idIterator.map(id => (id, c))
         }.partitionBy(new org.apache.spark.HashPartitioner(
           math.max(sh.partitions.length, sh.sparkContext.defaultParallelism)))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -262,10 +227,9 @@ private[graft] object RoutedServe {
     * like everything else. Per-call shuffle is now O(|allow|): the
     * allow side hash-partitions to the memo's layout and the join is
     * narrow on the index side. */
-  def allowByCell[S, I](t: RoutedTier[S, I])(
-      index: I, allowed: DataFrame,
-      part: org.apache.spark.Partitioner): RDD[(Int, Long)] = {
-    val idCell = idCellOf(t)(index)
+  def allowByCell[S <: RoutedCell](shards: RDD[(Int, S)], allowed: DataFrame,
+                                   part: org.apache.spark.Partitioner): RDD[(Int, Long)] = {
+    val idCell = idCellOf(shards)
     val allowRdd = allowed
       .select(col(allowed.columns.head).cast("long")).distinct()
       .as(Encoders.scalaLong).rdd.map(id => (id, ()))

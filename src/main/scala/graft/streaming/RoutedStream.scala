@@ -4,40 +4,25 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.hnsw.{RoutedLifecycle, RoutedOps, RoutedTier}
+import graft.hnsw.{LocalRoutedTier, RoutedCell, RoutedHandle, RoutedOps, RoutedTier}
 
-/** One routed tier's binding into the shared streaming loop
-  * ([[RoutedStream]]): beside the tier's lifecycle surface (deletes,
-  * tombstones, row counts, overlays), the ops the CDC step and the
-  * checkpoint rebase call, the batch's payload column ("vec" /
-  * "code"), and the ledger label of the covering-probe warm-up.
-  * `warmAfterCompact` also probes the image the threshold fold leaves
-  * (the PQ solo tier, whose fold rebuilds cells from the raw-vector
-  * table). `save` must keep the prior version (see [[RoutedStream.rebase]]). */
-private[streaming] final case class RoutedStreamOps[S, I](
-    tier: RoutedTier[S, I],
-    payload: String,
-    presentIds: (I, Array[Long]) => Array[Long],
-    ingest: (I, DataFrame) => I,
-    compact: I => I,
-    foldOverlay: I => I,
-    warmProbe: I => Long,
-    warmLabel: String,
-    warmAfterCompact: Boolean,
-    save: (I, String) => Unit,
-    attach: (SparkSession, String) => I,
-    unpersist: I => Unit)
+/** The routed index a streaming loop evolves, shared across
+  * micro-batches; volatile so serving threads see the latest fold. */
+class RoutedStreamHandle[S <: RoutedCell, I <: RoutedHandle[S, I]](@volatile var index: I) {
+  /** Per-cell occupancy (cell, rows): each cell's member count. */
+  def cellStats: Array[(Int, Long)] = RoutedOps.cellStats(index.shards)(_.form.size)
+}
 
 /** The CDC step and checkpoint-cadence loop shared by the three routed
   * streaming tiers ([[StreamingRouted]], [[StreamingRoutedCodes]],
-  * [[StreamingRoutedPq]]). */
+  * [[StreamingRoutedPq]]), over the tier object itself. */
 private[streaming] object RoutedStream {
 
   /** Covering-probe a fresh image off the serving path: a fold or an
     * attach leaves an image whose first serve pays the cold tax (6x on
     * the warm-up rung); ledger-tracked as one-time. */
-  def warm[I](ops: RoutedStreamOps[_, I], index: I): I = {
-    graft.BuildLedger.timed(ops.warmLabel)(ops.warmProbe(index))
+  def warmed(t: RoutedTier)(index: t.I): t.I = {
+    graft.BuildLedger.timed(s"${t.tierName.replace('-', '_')}_warm_probe")(t.warmProbe(index))
     index
   }
 
@@ -55,14 +40,13 @@ private[streaming] object RoutedStream {
     *     ids already LIVE in the index (a redelivered insert is an
     *     idempotent no-op where batch ingest fail-fasts);
     *  3. when tombstones reach `compactThreshold` of the index's rows,
-    *     the tier's compaction folds them out mid-stream (affected cells
-    *     only) — after which those ids are REUSABLE;
+    *     `compact` folds them out mid-stream (affected cells only) —
+    *     after which those ids are REUSABLE;
     *  4. an overlay stack at `maxOverlayDepth` or deeper folds to one
     *     full image (results identical — spec-pinned; the threshold-
     *     compaction pattern applied to patch depth; <= 0 disables). */
-  def cdcStep[S, I](ops: RoutedStreamOps[S, I])(index0: I, batch: DataFrame,
-      compactThreshold: Double, maxOverlayDepth: Int): (I, Int) = {
-    val t = ops.tier
+  def cdcStep(t: RoutedTier)(index0: t.I, batch: DataFrame, compactThreshold: Double,
+                             maxOverlayDepth: Int)(compact: t.I => t.I): (t.I, Int) = {
     var index = index0
     var n = 0
     val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -72,16 +56,16 @@ private[streaming] object RoutedStream {
       val delIds = dels.collect().map(_.getLong(0))
       java.util.Arrays.sort(delIds)
       if (delIds.nonEmpty) {
-        index = RoutedLifecycle.delete(t)(index, dels)
+        index = t.delete(index, dels)
         n += 1
       }
       val insAll = b.filter(col("op") =!= "delete")
-        .select(col("id").cast("long").as("id"), col(ops.payload))
+        .select(col("id").cast("long").as("id"), col(t.payloadCol))
         .dropDuplicates("id")
       val insIds = insAll.select(col("id")).collect().map(_.getLong(0))
       java.util.Arrays.sort(insIds)
-      val dead = t.tombstones(index)
-      val live = ops.presentIds(index, insIds)
+      val dead = index.tombstones
+      val live = t.presentIds(index, insIds)
       val dropId: Long => Boolean = id =>
         java.util.Arrays.binarySearch(delIds, id) >= 0 ||
           java.util.Arrays.binarySearch(dead, id) >= 0 ||
@@ -91,24 +75,23 @@ private[streaming] object RoutedStream {
         // filter DataFrame-side by the kept id set (batch-sized)
         val keepDf = insAll.sparkSession.createDataset(keep.toSeq)(
           Encoders.scalaLong).toDF("id")
-        index = ops.ingest(index, insAll.join(broadcast(keepDf), Seq("id")))
+        index = t.streamIngest(index, insAll.join(broadcast(keepDf), Seq("id")))
         n += 1
       }
       // threshold compaction: tombstones vs total graph rows (one
       // nCells-row stats collect, only on batches that deleted)
       if (delIds.nonEmpty && compactThreshold > 0 &&
-          t.tombstones(index).length >= compactThreshold * math.max(1L,
-            RoutedOps.cellStats(t.shards(index))(t.memberCount).map(_._2).sum)) {
-        index = ops.compact(index)
+          index.tombstones.length >= compactThreshold * math.max(1L,
+            t.cellStats(index).map(_._2).sum)) {
+        index = compact(index)
         n += 1
-        if (ops.warmAfterCompact) warm(ops, index)
       }
       // overlay-depth fold: a compaction above already materializes a
       // full image when it fires, so this only triggers on streams whose
       // handle accumulated patches (e.g. entered the stream patched by
       // remediateMergedCells' default) without crossing the threshold
-      if (maxOverlayDepth > 0 && t.overlays(index).length >= maxOverlayDepth) {
-        index = warm(ops, ops.foldOverlay(index))
+      if (maxOverlayDepth > 0 && index.overlay.length >= maxOverlayDepth) {
+        index = warmed(t)(t.foldOverlay(index))
         n += 1
       }
       (index, n)
@@ -128,13 +111,33 @@ private[streaming] object RoutedStream {
     * otherwise-unbounded ingest-cogroup lineage chain a long-running
     * stream accumulates (a deep recompute after executor loss would
     * otherwise replay every micro-batch merge). */
-  def rebase[I](ops: RoutedStreamOps[_, I])(prior: I, spark: SparkSession,
-                                            path: String): I = {
-    ops.save(prior, path)
-    val next = ops.attach(spark, path)
-    ops.unpersist(prior)
-    warm(ops, next)
+  def rebase(t: RoutedTier)(prior: t.I, spark: SparkSession, path: String): t.I = {
+    t.save(prior, path, keepVersions = 2)
+    val next = t.attach(spark, path, storage = prior.storage)
+    prior.unpersist()
+    warmed(t)(next)
   }
+
+  /** Insert-only ingest of `stream` into `handle` through the tier's
+    * ingest, checkpointed by [[rebase]] on the [[loop]] cadence. */
+  def attach(t: LocalRoutedTier)(stream: DataFrame, handle: RoutedStreamHandle[t.S, t.I],
+                                 checkpoint: Option[(String, Int)]): StreamingQuery =
+    loop(stream, checkpoint) { batch =>
+      handle.index = t.ingest(handle.index, batch)
+      1
+    } { (spark, path) => handle.index = rebase(t)(handle.index, spark, path) }
+
+  /** CDC micro-batches into `handle` ([[cdcStep]] with the tier's own
+    * compaction), checkpointed by [[rebase]] on the [[loop]] cadence. */
+  def attachCdc(t: LocalRoutedTier)(stream: DataFrame, handle: RoutedStreamHandle[t.S, t.I],
+                                    checkpoint: Option[(String, Int)], compactThreshold: Double,
+                                    maxOverlayDepth: Int): StreamingQuery =
+    loop(stream, checkpoint) { batch =>
+      val (next, n) = cdcStep(t)(handle.index, batch, compactThreshold,
+        maxOverlayDepth)(t.compact(_))
+      handle.index = next
+      n
+    } { (spark, path) => handle.index = rebase(t)(handle.index, spark, path) }
 
   /** Wire `stream` into `step` via foreachBatch (single-writer
     * contract: one callback at a time, so plain vars are safe). Empty

@@ -26,23 +26,7 @@ object StreamingRouted {
 
   /** Mutable routed-index handle shared across micro-batches; volatile
     * so serving threads see the latest fold. */
-  final class Handle(@volatile var index: RoutedIndex) {
-    def cellStats: Array[(Int, Long)] = HnswRouted.cellStats(index)
-  }
-
-  private[streaming] val ops = RoutedStreamOps[CellShard, RoutedIndex](
-    tier = HnswRouted.FloatTier,
-    payload = "vec",
-    presentIds = HnswRouted.presentIds,
-    ingest = (i, df) => HnswRouted.ingest(i, df),
-    compact = i => HnswRouted.compact(i),
-    foldOverlay = HnswRouted.foldOverlay,
-    warmProbe = i => HnswRouted.warmProbe(i),
-    warmLabel = "routed_warm_probe",
-    warmAfterCompact = false,
-    save = (i, path) => HnswRouted.save(i, path, keepVersions = 2),
-    attach = (spark, path) => HnswRouted.attach(spark, path),
-    unpersist = _.unpersist())
+  type Handle = RoutedStreamHandle[CellShard, RoutedIndex]
 
   /** Wire `stream` (id: long, vec: array<float>) into the handle via
     * foreachBatch, insert-only; checkpoint cadence and empty-batch
@@ -50,12 +34,7 @@ object StreamingRouted {
     * [[RoutedStream.rebase]]. */
   def attach(stream: DataFrame, handle: Handle,
              checkpoint: Option[(String, Int)] = None): StreamingQuery =
-    RoutedStream.loop(stream, checkpoint) { batch =>
-      handle.index = HnswRouted.ingest(handle.index, batch)
-      1
-    } { (spark, path) =>
-      handle.index = RoutedStream.rebase(ops)(handle.index, spark, path)
-    }
+    RoutedStream.attach(HnswRouted)(stream, handle, checkpoint)
 
   /** CDC streaming against the routed tier: `(id, vec, op)` micro-
     * batches ([[RoutedStream.cdcStep]]), the
@@ -69,13 +48,8 @@ object StreamingRouted {
   def attachCdc(stream: DataFrame, handle: Handle,
                 checkpoint: Option[(String, Int)] = None,
                 compactThreshold: Double = 0.2): StreamingQuery =
-    RoutedStream.loop(stream, checkpoint) { batch =>
-      val (next, n) = cdcStep(handle.index, batch, compactThreshold)
-      handle.index = next
-      n
-    } { (spark, path) =>
-      handle.index = RoutedStream.rebase(ops)(handle.index, spark, path)
-    }
+    RoutedStream.attachCdc(HnswRouted)(stream, handle, checkpoint, compactThreshold,
+      DefaultMaxOverlayDepth)
 
   /** Patch stacks deeper than this fold to one full image inside the
     * CDC loop ([[HnswRouted.foldOverlay]]) — before round 16 the stack
@@ -89,11 +63,12 @@ object StreamingRouted {
   val DefaultMaxOverlayDepth = 4
 
   /** One CDC micro-batch against a routed index ([[RoutedStream.cdcStep]]
-    * on the float tier) — also the float-source step of
+    * with the float tier's compaction) — also the float-source step of
     * [[StreamingRoutedPq.attachCdc]]. Returns (next index, mutating ops
     * applied). */
   private[streaming] def cdcStep(index0: RoutedIndex, batch: DataFrame,
                                  compactThreshold: Double,
                                  maxOverlayDepth: Int = DefaultMaxOverlayDepth): (RoutedIndex, Int) =
-    RoutedStream.cdcStep(ops)(index0, batch, compactThreshold, maxOverlayDepth)
+    RoutedStream.cdcStep(HnswRouted)(index0, batch, compactThreshold,
+      maxOverlayDepth)(HnswRouted.compact(_))
 }

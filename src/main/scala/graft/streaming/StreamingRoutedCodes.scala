@@ -18,24 +18,7 @@ object StreamingRoutedCodes {
 
   /** Mutable routed-code-index handle shared across micro-batches;
     * volatile so serving threads see the latest fold. */
-  final class Handle(@volatile var index: RoutedCodeIndex) {
-    def cellStats: Array[(Int, Long)] =
-      graft.hnsw.RoutedOps.cellStats(index.shards)(_.codes.size)
-  }
-
-  private val ops = RoutedStreamOps[CodeCellShard, RoutedCodeIndex](
-    tier = HnswRoutedCodes.CodeTier,
-    payload = "code",
-    presentIds = HnswRoutedCodes.presentIds,
-    ingest = (i, df) => HnswRoutedCodes.ingest(i, df),
-    compact = i => HnswRoutedCodes.compact(i),
-    foldOverlay = i => HnswRoutedCodes.foldOverlay(i),
-    warmProbe = i => HnswRoutedCodes.warmProbe(i),
-    warmLabel = "routed_codes_warm_probe",
-    warmAfterCompact = false,
-    save = (i, path) => HnswRoutedCodes.save(i, path, keepVersions = 2),
-    attach = (spark, path) => HnswRoutedCodes.attach(spark, path),
-    unpersist = _.unpersist())
+  type Handle = RoutedStreamHandle[CodeCellShard, RoutedCodeIndex]
 
   /** Wire `stream` (id: long, code: long) into the handle via
     * foreachBatch — insert-only ([[StreamingRouted.attach]]'s shape:
@@ -43,12 +26,7 @@ object StreamingRoutedCodes {
     * cadence). */
   def attach(stream: DataFrame, handle: Handle,
              checkpoint: Option[(String, Int)] = None): StreamingQuery =
-    RoutedStream.loop(stream, checkpoint) { batch =>
-      handle.index = HnswRoutedCodes.ingest(handle.index, batch)
-      1
-    } { (spark, path) =>
-      handle.index = RoutedStream.rebase(ops)(handle.index, spark, path)
-    }
+    RoutedStream.attach(HnswRoutedCodes)(stream, handle, checkpoint)
 
   /** CDC micro-batches `(id, code, op)` with op `"insert"`/`"upsert"`
     * or `"delete"` — [[StreamingRouted.attachCdc]]'s semantics on the
@@ -64,12 +42,6 @@ object StreamingRoutedCodes {
                 compactThreshold: Double = 0.2,
                 maxOverlayDepth: Int =
                   StreamingRouted.DefaultMaxOverlayDepth): StreamingQuery =
-    RoutedStream.loop(stream, checkpoint) { batch =>
-      val (next, n) = RoutedStream.cdcStep(ops)(handle.index, batch,
-        compactThreshold, maxOverlayDepth)
-      handle.index = next
-      n
-    } { (spark, path) =>
-      handle.index = RoutedStream.rebase(ops)(handle.index, spark, path)
-    }
+    RoutedStream.attachCdc(HnswRoutedCodes)(stream, handle, checkpoint, compactThreshold,
+      maxOverlayDepth)
 }

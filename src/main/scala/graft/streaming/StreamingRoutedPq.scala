@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.hnsw.{HnswRouted, HnswRoutedPq}
 import graft.hnsw.HnswRouted.RoutedIndex
-import graft.hnsw.HnswRoutedPq.{PqCellShard, RoutedPqIndex}
+import graft.hnsw.HnswRoutedPq.RoutedPqIndex
 
 /** CDC streaming for the routed+PQ serving tier: the PQ index is
   * DERIVED state (per-cell ADC codes over the float tier's cell
@@ -43,28 +43,16 @@ object StreamingRoutedPq {
     * attached-image posture). Serving threads read `pq` volatile. */
   final class SoloHandle(@volatile var pq: RoutedPqIndex)
 
-  /** The solo lifecycle's binding: [[HnswRoutedPq.ingest]] releases the
-    * prior image, and the threshold fold is [[HnswRoutedPq.compactSolo]]
-    * over `vectors` (`floatExact` false takes the buildSolo-kernel
-    * rebuild — the serving-cadence choice, BASELINE round-18: solo
-    * build-serve geometry at 0.94x plain, 7x cheaper rebuild; default
-    * true preserves the float-exact graph contract). The saved image is
-    * the PQ image itself. */
-  private def soloOps(vectors: DataFrame, floatExact: Boolean) =
-    RoutedStreamOps[PqCellShard, RoutedPqIndex](
-      tier = HnswRoutedPq.PqTier,
-      payload = "vec",
-      presentIds = HnswRoutedPq.presentIds,
-      ingest = (i, df) => HnswRoutedPq.ingest(i, df, unpersistPrior = true),
-      compact = i => HnswRoutedPq.compactSolo(i, vectors,
-        unpersistPrior = true, floatExact = floatExact),
-      foldOverlay = i => HnswRoutedPq.foldOverlay(i),
-      warmProbe = i => HnswRoutedPq.warmProbe(i),
-      warmLabel = "routed_pq_warm_probe",
-      warmAfterCompact = true,
-      save = (i, path) => HnswRoutedPq.save(i, path, keepVersions = 2),
-      attach = (spark, path) => HnswRoutedPq.attach(spark, path),
-      unpersist = _.unpersist())
+  /** The solo threshold fold: [[HnswRoutedPq.compactSolo]] over
+    * `vectors`, releasing the prior image (`floatExact` false takes the
+    * buildSolo-kernel rebuild — the serving-cadence choice, BASELINE
+    * round-18: solo build-serve geometry at 0.94x plain, 7x cheaper
+    * rebuild; default true preserves the float-exact graph contract),
+    * then a covering probe of the folded image. */
+  private def soloCompact(vectors: DataFrame, floatExact: Boolean)(
+      i: RoutedPqIndex): RoutedPqIndex =
+    RoutedStream.warmed(HnswRoutedPq)(HnswRoutedPq.compactSolo(i, vectors,
+      unpersistPrior = true, floatExact = floatExact))
 
   /** SOLO CDC — the float-source-free streaming loop for an attached
     * PQ tier: `(id, vec, op)` micro-batches mutate the compressed
@@ -94,14 +82,13 @@ object StreamingRoutedPq {
                     maxOverlayDepth: Int =
                       StreamingRouted.DefaultMaxOverlayDepth,
                     floatExact: Boolean = true): StreamingQuery = {
-    val ops = soloOps(vectors, floatExact)
     RoutedStream.loop(stream, checkpoint) { batch =>
-      val (next, n) = RoutedStream.cdcStep(ops)(handle.pq, batch,
-        compactThreshold, maxOverlayDepth)
+      val (next, n) = RoutedStream.cdcStep(HnswRoutedPq)(handle.pq, batch,
+        compactThreshold, maxOverlayDepth)(soloCompact(vectors, floatExact))
       handle.pq = next
       n
     } { (spark, path) =>
-      handle.pq = RoutedStream.rebase(ops)(handle.pq, spark, path)
+      handle.pq = RoutedStream.rebase(HnswRoutedPq)(handle.pq, spark, path)
     }
   }
 
@@ -133,12 +120,10 @@ object StreamingRoutedPq {
       // exists to cut. One narrow encode pass per save cadence, O(index)
       // like the save itself.
       val priorPq = handle.pq
-      handle.float = RoutedStream.rebase(StreamingRouted.ops)(
-        handle.float, spark, path)
+      handle.float = RoutedStream.rebase(HnswRouted)(handle.float, spark, path)
       handle.pq = HnswRoutedPq.fromRoutedWith(handle.float, priorPq.codebook)
       priorPq.unpersist()
-      graft.BuildLedger.timed("routed_pq_warm_probe")(
-        HnswRoutedPq.warmProbe(handle.pq))
+      RoutedStream.warmed(HnswRoutedPq)(handle.pq)
       ()
     }
 }

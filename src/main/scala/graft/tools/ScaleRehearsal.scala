@@ -570,7 +570,7 @@ object ScaleRehearsal {
               .map(id => (id, codeOf(id))).toDF("id", "code")
               .localCheckpoint(true)
             val t3 = System.nanoTime()
-            val grown = HnswRoutedCodes.ingest(restored, batch, storage = storage)
+            val grown = HnswRoutedCodes.ingest(restored, batch)
             val s = (System.nanoTime() - t3) / 1e9
             grown.unpersist()
             (s, f"ingest5pct_s=$s%.1f ingest_over_build=${s / buildS}%.3f")

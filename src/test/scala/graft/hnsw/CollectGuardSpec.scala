@@ -33,7 +33,7 @@ class CollectGuardSpec extends AnyFunSuite {
     // tier (ONE member per cell — nCells rows by construction); then
     // presentIds/cellStats MOVED to the shared RoutedOps (same audited
     // sites, one copy — id-set-bounded and nCells-bounded)
-    "graft/hnsw/RoutedOps.scala" -> 2,
+    "graft/hnsw/RoutedOps.scala" -> 1,
     // round-18 re-pin (RoutedLifecycle unification — sites MOVED, none
     // added): the per-tier targeted-compaction `removed` collects now
     // live ONCE in RoutedLifecycle.collectRemoved (deletion-set-
@@ -57,9 +57,15 @@ class CollectGuardSpec extends AnyFunSuite {
     // RoutedLifecycle.ingest, and their three attach meta-row reads (one
     // metadata row) one in RoutedImage.open (5 + 2 = 7); each tier shed
     // those 2 copies (8->6, 7->5, 8->6).
-    "graft/hnsw/RoutedLifecycle.scala" -> 7,
-    "graft/hnsw/RoutedServe.scala" -> 3,
-    "graft/hnsw/HnswRouted.scala" -> 6,
+    // one-surface re-pin (sites MOVED, none added): presentIds' hit
+    // collect (id-set-bounded) moved from RoutedOps and warmProbe's
+    // one-member-per-cell collect from RoutedServe into the RoutedTier
+    // trait (7 + 2 = 9; RoutedOps 2 -> 1, RoutedServe 3 -> 2); the float
+    // tier's 6 -> 5 is a Scaladoc mention of `distinct().collect()` that
+    // left with the per-tier searchFiltered.
+    "graft/hnsw/RoutedLifecycle.scala" -> 9,
+    "graft/hnsw/RoutedServe.scala" -> 2,
+    "graft/hnsw/HnswRouted.scala" -> 5,
     "graft/hnsw/HnswRoutedCodes.scala" -> 5,
     "graft/hnsw/HnswRoutedPq.scala" -> 6,
     "graft/streaming/StreamingChunkDedup.scala" -> 1,

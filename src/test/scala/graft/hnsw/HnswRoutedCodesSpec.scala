@@ -195,8 +195,7 @@ class HnswRoutedCodesSpec extends SparkSpec {
     assert(onDisk.shards.getStorageLevel == StorageLevel.DISK_ONLY)
     assert(searchRows(onDisk, qDf, 10, 4) == searchRows(inMem, qDf, 10, 4))
     val grown = HnswRoutedCodes.ingest(onDisk,
-      Seq((90000L, codeOf(90000L, 23L))).toDF("id", "code"),
-      storage = StorageLevel.DISK_ONLY)
+      Seq((90000L, codeOf(90000L, 23L))).toDF("id", "code"))
     assert(grown.shards.getStorageLevel == StorageLevel.DISK_ONLY)
     assert(grown.shards.map(_._2.codes.size.toLong).sum() == 1201)
     grown.unpersist()

@@ -121,7 +121,7 @@ class StoredIdSpec extends SparkSpec {
       val routed = served(HnswRoutedCodes.search(index, qDf, 10, nProbe), "hamming")
       assertTrue(routed, codeQueries)(hamming)
       assert(routed == merged(codeQueries, 10) { qc =>
-        val probed = HnswRoutedCodes.CodeTier.probeCells(index.anchors, qc, nProbe).toSet
+        val probed = HnswRoutedCodes.probeCells(index.anchors, qc, nProbe).toSet
         cells.filter(c => probed(c._1)).map { case (_, c) =>
           hammingRef(c.snapshot, qc, 10, HnswRouted.cellEf(params, 0, c.codes.size))
         }
