@@ -93,53 +93,6 @@ object Bench {
     }
   }
 
-  /** Collects per-task wall durations between reset() calls; median/max
-    * expose executor-side skew (one straggler partition vs a uniformly
-    * slow machine read very differently). Round-9: also totals
-    * shuffle-spill bytes and the max per-task peak execution memory, so
-    * a degraded cell can be attributed to heap pressure from the JSON
-    * alone (the r8 n100k cells read 4x with a healthy cpu calib — the
-    * open question was heap ceiling vs host, unanswerable without
-    * these). */
-  private final class TaskStats extends org.apache.spark.scheduler.SparkListener {
-    private val durs = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
-    private val spillBytes = new java.util.concurrent.atomic.AtomicLong()
-    private val peakExecBytes = new java.util.concurrent.atomic.AtomicLong()
-    override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      if (e.taskInfo != null) durs.add(e.taskInfo.duration)
-      val m = e.taskMetrics
-      if (m != null) {
-        // diskBytesSpilled ONLY: memoryBytesSpilled is the in-memory
-        // size of the SAME spill events (the UI's two 'Spill' columns);
-        // summing them would double-count every spill ~2x
-        spillBytes.addAndGet(m.diskBytesSpilled)
-        peakExecBytes.accumulateAndGet(m.peakExecutionMemory, Math.max(_: Long, _: Long))
-      }
-    }
-    def reset(): Unit = { durs.clear(); spillBytes.set(0L); peakExecBytes.set(0L) }
-    /** (taskCount, medianSec, maxSec, spillMB, peakExecMB) since reset.
-      * Task-end events arrive on the async listener bus, so the
-      * last-finishing task — exactly the straggler these columns exist
-      * to expose — may still be in flight when the job action returns:
-      * poll until the task count is stable (two consecutive equal
-      * readings, 1 s cap) before reading. */
-    def snapshot(): (Int, Double, Double, Double, Double) = {
-      import scala.jdk.CollectionConverters._
-      var prev = -1
-      var waited = 0
-      while (durs.size != prev && waited < 1000) {
-        prev = durs.size
-        Thread.sleep(50)
-        waited += 50
-      }
-      val a = durs.asScala.map(_.longValue).toArray.sorted
-      val spillMb = spillBytes.get / 1e6
-      val peakMb = peakExecBytes.get / 1e6
-      if (a.isEmpty) (0, 0.0, 0.0, spillMb, peakMb)
-      else (a.length, a(a.length / 2) / 1e3, a.last / 1e3, spillMb, peakMb)
-    }
-  }
-
   /** One grid cell with its attribution telemetry. `linCalibMs` /
     * `linMemCalibMs` stamp the host immediately before the LINEAR scan
     * trials (round-15): the r14 driver run read the n100000 linear cell
@@ -185,8 +138,9 @@ object Bench {
     // catalog's accumulated cached blocks / pinned localCheckpoint RDDs
     // — driver-measured builds swung 3-9x vs the same cells measured
     // standalone. Catalog queries are warmed independently above.
-    val taskStats = new TaskStats
-    spark.sparkContext.addSparkListener(taskStats)
+    // every grid build trial and catalog row runs in its own span; the
+    // collector charges each its Spark jobs, stages and tasks
+    val collector = graft.trace.Collector.install(spark.sparkContext)
     // Host/session facts, measured not configured: requested CPUs vs the
     // parallelism Spark actually got vs what the kernel exposes, and the
     // single-thread calibration before any bench load.
@@ -194,7 +148,7 @@ object Bench {
     val procs = Runtime.getRuntime.availableProcessors
     val calibStart = Instr.cpuCalibMs()
     val memCalibStart = Instr.memCalibMs()
-    val cells = vectorGrid(spark, taskStats)
+    val cells = vectorGrid(spark, collector)
     spark.catalog.clearCache()
     System.gc()
 
@@ -224,19 +178,23 @@ object Bench {
     // rebuild is a DUPLICATE of a pass-1 ledger entry — it must still be
     // subtracted from the row's wall (serving comparability) but must
     // not inflate one_time_s / the headline total.
+    // each first-pass row's span: its jobs, stages, tasks and bytes, with
+    // the build and phase spans nested in it
+    val rowSpans = scala.collection.mutable.LinkedHashMap.empty[String, graft.trace.Record]
     def runOne(name: String, fn: (SparkSession, String) => DataFrame,
                recordBuilds: Boolean = true): (String, Double) = {
         val mark = BuildLedger.size
-        val t0 = System.nanoTime()
         // noop sink materializes every output row (column pruning can't
         // eliminate aggregates/sorts the way `.count()` lets it).
         // A crashing query reports -1, never its elapsed time — a failure
         // must not be indistinguishable from a fast success.
-        val ok =
+        val (ok, span) = collector.measure(name) {
           try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
           catch { case t: Throwable =>
             System.err.println(s"bench query $name FAILED: ${t.getMessage}"); false }
-        val elapsed = (System.nanoTime() - t0) / 1e9
+        }
+        val elapsed = span.seconds
+        if (recordBuilds) rowSpans(name) = span
         val built = BuildLedger.since(mark)
         // a FAILED query's wall was always excluded from the totals
         // (rounds 1-4 contract); its builds must be too, or `value` stops
@@ -283,7 +241,7 @@ object Bench {
     // contended. Threshold bounds the extra wall (sub-threshold rows
     // can together drift the total by at most ~n_queries x threshold).
     graft.hnsw.IndexCaches.releaseAll(); System.gc()
-    val retimeTh = sys.env.getOrElse("SPARK_GRAFT_RETIME_S", "1.0").toDouble
+    val retimeTh = 1.0
     val retimeCalibCpu = Instr.cpuCalibMs()
     val retimeCalibMem = Instr.memCalibMs()
     val qByName = SparkEntry.queries
@@ -399,6 +357,8 @@ object Bench {
       .map(k => s"\"$k\":${firstPass(k)}").mkString("{", ",", "}")
     val pass2Json = secondPass.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
+    val rowsJson = rowSpans.toSeq.sortBy(_._1)
+      .map { case (k, r) => s"\"$k\":${r.json}" }.mkString("{", ",", "}")
     val fullLine =
       s"""{"metric":"total","value":$total,"unit":"sec","serve_total_s":$serveTotal,""" +
         s""""serve_total_norm_s":${jnum(serveNormS)},""" +
@@ -407,7 +367,7 @@ object Bench {
         s""""s_per_query_norm_fam":${f"$sPerQueryNormFam%.3f"},""" +
         s""""env":$envJson,"one_time_s":$oneTimeJson,"queries":$fullQs,""" +
         s""""retime_pass1":$pass1Json,"retime_pass2":$pass2Json,""" +
-        s""""sf":"$sfDir","vector_grid":$grid}"""
+        s""""sf":"$sfDir","vector_grid":$grid,"rows":$rowsJson}"""
     try {
       val w = new java.io.PrintWriter("BENCH_FULL.json")
       try w.println(fullLine) finally w.close()
@@ -487,23 +447,21 @@ object Bench {
     * cell starts from an explicit GC so the driver-sequential build
     * phase isn't taxed by the previous cell's garbage.
     *
-    * Builds are min-of-N too since round-13 (default 2 trials,
-    * `SPARK_GRAFT_GRID_TRIALS`), each trial carrying its OWN cpu+mem
-    * calibration stamps: the round-12 driver run read the n100000 build
-    * at 27.8 s vs the 10.5-12 s historical band on an untouched code
-    * path — a single-shot cell cannot distinguish a real regression
+    * Builds are min-of-N too since round-13 (2 trials), each trial
+    * carrying its OWN cpu+mem calibration stamps: the round-12 bench
+    * run read the n100000 build at 27.8 s vs the 10.5-12 s historical
+    * band on an untouched code path — a single-shot cell cannot distinguish a real regression
     * from one unlucky contention window (and this exact cell hid a REAL
     * regression in round 8). The reported telemetry is the min-time
     * trial's; a quiet-host round-13 re-run read 11.35 s, supporting the
     * memory-contention attribution of the r12 outlier.
     */
-  private def vectorGrid(spark: SparkSession, taskStats: TaskStats): Seq[Cell] = {
+  private def vectorGrid(spark: SparkSession, collector: graft.trace.Collector): Seq[Cell] = {
     import graft.hnsw.{HnswDistributed, HnswParams, HnswSearcher}
     import graft.hnsw.HnswDistributed.BuildConfig
     import graft.operators.ExactKnn
 
-    val sizes = sys.env.getOrElse("SPARK_GRAFT_GRID", "1000,10000,100000")
-      .split(",").filter(_.nonEmpty).map(_.toInt).toSeq
+    val sizes = Seq(1000, 10000, 100000)
     val dim = 64
     val nQueries = 200
     val k = 10
@@ -528,13 +486,12 @@ object Bench {
     def bestOf(n: Int)(mk: => DataFrame): Double =
       Seq.fill(n)(time(materialize(mk))._2).min
 
-    val buildTrials = sys.env.getOrElse("SPARK_GRAFT_GRID_TRIALS", "2")
-      .toInt.max(1)
+    val buildTrials = 2
     /** Min-of-N build: runs `mk` `buildTrials` times, returns the LAST
       * model (builds are deterministic — any trial's model is the same
       * index) and the telemetry of the FASTEST trial. Each trial opens
-      * its own GC/task windows after an explicit collection, so trial 2
-      * isn't taxed by trial 1's garbage. */
+      * its own GC window and span after an explicit collection, so trial
+      * 2 isn't taxed by trial 1's garbage. */
     def bestBuild[M](mk: => M): (M, BuildProbe) = {
       var model: Option[M] = None
       var best: Option[BuildProbe] = None
@@ -544,12 +501,11 @@ object Bench {
         val calib = Instr.cpuCalibMs()
         val memCalib = Instr.memCalibMs()
         val gc0 = Instr.gcMs()
-        taskStats.reset()
-        val (m, t) = time(mk)
+        val ((m, t), span) = collector.measure("grid_build")(time(mk))
         val gcBuild = (Instr.gcMs() - gc0) / 1e3
-        val (taskN, taskMed, taskMax, spillMb, peakExecMb) = taskStats.snapshot()
-        val probe = BuildProbe(t, gcBuild, taskN, taskMed, taskMax,
-          spillMb, peakExecMb, calib, memCalib)
+        val c = span.total
+        val probe = BuildProbe(t, gcBuild, c.tasks.toInt, c.taskMedianMs / 1e3,
+          c.taskMaxMs / 1e3, c.spillBytes / 1e6, c.peakExecBytes / 1e6, calib, memCalib)
         model = Some(m)
         if (best.forall(_.t > probe.t)) best = Some(probe)
         trial += 1

@@ -21,32 +21,18 @@ object BuildLedger {
   private val entries =
     new java.util.concurrent.CopyOnWriteArrayList[Entry]()
 
-  /** Per-thread stack of accumulated nested-build seconds: a build that
-    * triggers another memoized build (dup_components → the minhash
-    * candidate stage) records EXCLUSIVE time in each entry, so summing a
-    * query's entries equals its one-time wall-clock and attribution
-    * never double-subtracts. */
-  private val frames = ThreadLocal.withInitial[java.util.ArrayDeque[java.lang.Double]](
-    () => new java.util.ArrayDeque[java.lang.Double]())
-
-  /** Time `f` and append (label, exclusive-seconds) on success. A failed
-    * build records nothing (the memo also rejects it), but still credits
-    * its wall to an enclosing build. */
+  /** Runs `f` in a build span ([[graft.trace.Span]]) and appends
+    * (label, exclusive seconds) on success: the span's self time, its
+    * wall less the builds nested in it. A build that triggers another
+    * memoized build (dup_components → the minhash candidate stage) so
+    * records each entry's own share, a query's entries sum to its
+    * one-time wall-clock and attribution never double-subtracts. A failed
+    * build records nothing (the memo also rejects it), but its wall still
+    * leaves the enclosing build's self time. */
   def timed[A](label: String)(f: => A): A = {
-    val stack = frames.get()
-    stack.push(0.0)
-    val t0 = System.nanoTime()
-    var ok = false
-    try {
-      val a = f
-      ok = true
-      a
-    } finally {
-      val total = (System.nanoTime() - t0) / 1e9
-      val nested: Double = stack.pop()
-      if (!stack.isEmpty) stack.push(stack.pop() + total)
-      if (ok) entries.add(Entry(label, total - nested))
-    }
+    val (a, self) = graft.trace.Span.build(label)(f)
+    entries.add(Entry(label, self))
+    a
   }
 
   /** Current entry count — snapshot before a query, pass to [[since]]. */

@@ -85,6 +85,7 @@ object HnswCodes {
       extends BuildRows[CodeQuery] {
     @transient lazy val store: CodeArena = CodeArena.of(ids, codes)
     def query(i: Int): CodeQuery = CodeQuery.hamming(codes(i))
+    def pointBytes: Long = codes.length * 8L
   }
 
   /** Distributed k-NN over codes: (qid, qcode) -> (qid, id, hamming, rank).

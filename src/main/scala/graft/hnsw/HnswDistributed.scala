@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.store.{ArenaVectorStore, GraphSnapshot, OrdinalStore}
+import graft.trace.Span
 
 /** A built HNSW index ready for distributed search: its graph in the
   * form it was built in ([[OrdinalForm]]: the vector arena and `Int`
@@ -37,6 +38,9 @@ final case class HnswModel(params: HnswParams, form: OrdinalForm.Floats) extends
 private[hnsw] abstract class BuildRows[Q] extends Serializable {
   def store: OrdinalStore[Q]
   def query(i: Int): Q
+  /** Bytes of the store's point array (the float arena or the codes),
+    * read from the rows without building the store. */
+  def pointBytes: Long
 }
 
 /** A batched float build's rows, per-vector arrays as a [[LongVecMap]]
@@ -45,6 +49,7 @@ private[hnsw] final class BuildVectors(val metricName: String, val ids: Array[Lo
                                        val vecs: Array[Array[Float]]) extends BuildRows[Array[Float]] {
   @transient lazy val store: ArenaVectorStore = ArenaVectorStore.of(metricName, ids, vecs)
   def query(i: Int): Array[Float] = vecs(i)
+  def pointBytes: Long = vecs.iterator.map(_.length.toLong).sum * 4L
 }
 
 /** Distributed HNSW build & search over DataFrames.
@@ -145,30 +150,28 @@ object HnswDistributed {
     // Fail FAST on the broadcast tier's hard envelope, not at the first
     // over-sized broadcast (measured at n=1e7, m=32: 23 min of build,
     // then KryoException): Kryo's Unsafe bulk writer takes an int BYTE
-    // count, so no single primitive array may pass ~2 GiB. The bound was
-    // derived for the id-keyed model's layer-0 `LayerCsr` columns, 8-byte
-    // dsts and dists; the model now ships its serving form, one row array
-    // per vertex, whose largest arrays are per point (ids, and the float
-    // arena or the codes), so for the rows it is conservative (phase 1
-    // ships per-vertex Int rows, `rowCopy`, too).
-    // edges <= n * mMax0 is a WORST-CASE bound, reached in practice (HNSW
-    // fills degrees): a sparse borderline graph is rejected where it
-    // might have fit, the price of an envelope a user can plan around.
+    // count, so no single primitive array the model ships may pass
+    // ~2 GiB. The serving form's largest arrays are per point: the
+    // store's point array (the float arena, n x dim x 4 bytes, or the
+    // codes, n x 8) and its ids (n x 8). Its rows are one short array per
+    // vertex, and their per-layer degree columns (n x 4) stay under the
+    // ids; phase 1 ships the same rows (`rowCopy`) and the build rows.
     // Graphs past it belong on buildSharded / HnswRouted (per-cell
     // graphs under the wall) or HnswDurable (no full-graph broadcast).
-    val maxEdges = n.toLong * params.mMax.max
-    require(maxEdges * 8L <= Int.MaxValue.toLong,
-      s"single-graph broadcast build envelope exceeded: n=$n x mMax0=" +
-        s"${params.mMax.max} bounds ${maxEdges} layer-0 edges, whose " +
-        "8-byte model columns pass Kryo's 2 GiB per-array serialization limit. " +
+    val largest = math.max(rows.pointBytes, n * 8L)
+    require(largest <= Int.MaxValue.toLong,
+      s"single-graph broadcast build envelope exceeded: n=$n points need a " +
+        s"$largest-byte array, past Kryo's 2 GiB per-array serialization limit. " +
         "Use HnswDistributed.buildSharded, HnswRouted.build, or " +
         "HnswDurable.ingest for graphs of this size.")
     val graph = new OrdinalGraph(params, rows.store)
     val seedN = math.min(seedBatch, n)
     var pos = 0
-    while (pos < seedN) {
-      graph.connect(pos, graph.searchToInsert(rows.query(pos), insLayers(pos)))
-      pos += 1
+    Span.run("build.seed") {
+      while (pos < seedN) {
+        graph.connect(pos, graph.searchToInsert(rows.query(pos), insLayers(pos)))
+        pos += 1
+      }
     }
 
     val sc = spark.sparkContext
@@ -189,8 +192,8 @@ object HnswDistributed {
         val grown = math.max(maxBatch, math.min(pos / growthDenom, batchCeiling))
         val batchSize = math.min(math.min(grown, pos), n - pos)
         val batch = (pos until pos + batchSize).map(i => (i, insLayers(i)))
-        val copyB = sc.broadcast(graph.rowCopy)
-        val results =
+        val results = Span.run("build.phase1") {
+          val copyB = sc.broadcast(graph.rowCopy)
           try {
             val slices = math.max(1, math.min(batch.size / 16, sc.defaultParallelism))
             sc.parallelize(batch, slices).mapPartitions { it =>
@@ -199,8 +202,10 @@ object HnswDistributed {
               it.map { case (i, insLayer) => (i, view.searchToInsert(p.query(i), insLayer)) }
             }.collect()
           } finally copyB.destroy()
+        }
 
-        results.sortBy(r => ids(r._1)).foreach { case (i, found) => graph.connect(i, found) }
+        Span.run("build.merge")(
+          results.sortBy(r => ids(r._1)).foreach { case (i, found) => graph.connect(i, found) })
         pos += batchSize
       }
     } finally rowsB.destroy()

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.hnsw.HnswDistributed.BuildConfig
 import graft.store.{ArenaVectorStore, ArrayVectorStore, Metrics, ParquetGraphStore}
+import graft.trace.Span
 
 /** Beyond-broadcast HNSW build against a durable [[ParquetGraphStore]] —
   * the 100 TB build path. Unlike [[HnswDistributed.build]] (which collects
@@ -160,7 +161,7 @@ object HnswDurable {
     // ---- Seed phase (fresh store only): strictly sequential kernel
     // inserts (reference semantics) until the graph can absorb parallel
     // batches. Only the seed batch's vectors ever reach the driver.
-    if (graphSize == 0L) {
+    if (graphSize == 0L) Span.run("durable.seed") {
       val seedN = math.min(cfg.seedBatch.toLong, n)
       val seedRows = batchVectors(0, seedN).as(pairEnc).collect().sortBy(_._1)
       store.save(OrdinalGraph.grow(params, cfg.seed, new ArenaVectorStore(cfg.metric), None,
@@ -197,6 +198,8 @@ object HnswDurable {
       val entry = store.getEntryPoint.getOrElse(
         throw new IllegalStateException("durable build: store lost its entry point"))
 
+      // phase 1a's frame materializes in 1b, in its first frontier job
+      Span.run("durable.phase1a") {
       // Upper layers (>= 1): small by the geometric layer law — collect
       // the adjacency + only the vectors it touches, broadcast both.
       val upperSnap = GraphFrames.fromLinksDF(
@@ -261,6 +264,7 @@ object HnswDurable {
           out.result()
         }
       }(outEnc).toDF("q", "layer", "dsts", "dists").cache()
+      }
 
       val upperLinks = phase1.filter(col("layer") >= 1)
         .select(col("q"), col("layer"),
@@ -276,11 +280,11 @@ object HnswDurable {
       // bounds the tail rounds where single stragglers trickle into the
       // beam (graph quality is insensitive to those — the exact-parity
       // spec holds).
-      val beam0 = HnswFrontier.searchLayer0(
+      val beam0 = Span.run("durable.phase1b")(HnswFrontier.searchLayer0(
         linksNow, vecs, queries0, seeds0,
         k = m0, ef = params.getEfConstrInsert(0), metricName = cfg.metric,
         maxRounds = math.min(maxRounds, ConstructionRoundCap),
-        bulkLayout = Some(false))
+        bulkLayout = Some(false)))
       val links0 = beam0
         .groupBy(col("qid"))
         .agg(expr("transform(array_sort(collect_list(struct(dist AS dist, id AS dst)))," +
@@ -288,6 +292,7 @@ object HnswDurable {
         .select(col("qid").as("q"), lit(0).as("layer"), col("links"))
 
       // Phase 2: relational connect_bidir merge into the parquet store.
+      Span.run("durable.phase2") {
       store.mergeBatch(upperLinks.unionByName(links0), params, Some(linksNow))
 
       // Entry point: first-in-id-order vector reaching the batch maximum
@@ -298,6 +303,7 @@ object HnswDurable {
       epCand.headOption.foreach { r =>
         val (q, l) = (r.getLong(0), r.getInt(1))
         if (l > entry.layer) { store.setEntryPoint(q, l); store.flush() }
+      }
       }
       } finally {
         if (phase1 != null) phase1.unpersist()

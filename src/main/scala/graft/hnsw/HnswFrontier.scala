@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
 import graft.store.{ArenaVectorStore, GraphSnapshot}
+import graft.trace.Span
 
 /** Frontier-join HNSW search — the pure-DataFrame variant of
   * search_layer for graphs too large to broadcast (SURVEY §2 S5 strategy
@@ -48,7 +49,8 @@ object HnswFrontier {
     // dominant cost locally and the synchronization cost at cluster
     // scale) roughly in half. Beam quality only improves: searchLayer0
     // starts from a superset of the greedy entry.
-    val entrySeeds = descendUpper(spark, upper, vectors, queries, metricName, seedEf = ef)
+    val entrySeeds = Span.run("frontier.descent")(
+      descendUpper(spark, upper, vectors, queries, metricName, seedEf = ef))
     searchLayer0(links, vectors, queries, entrySeeds, k, ef, metricName, maxRounds)
   }
 
@@ -141,10 +143,11 @@ object HnswFrontier {
     // materialized partitions. localCheckpoint also truncates lineage:
     // iterative self-referential DataFrames otherwise grow an
     // exponential plan.
-    var ranked = withDist(seeds.select(col("qid"), col("id")).distinct())
-      .withColumn("is_new", lit(false))
-      .withColumn("r", row_number().over(rankW))
-      .localCheckpoint()
+    var ranked = Span.run("frontier.seed")(
+      withDist(seeds.select(col("qid"), col("id")).distinct())
+        .withColumn("is_new", lit(false))
+        .withColumn("r", row_number().over(rankW))
+        .localCheckpoint())
     // the initial frontier is EVERY seed (callers may pass more than ef
     // per query — the durable build's construction beam does); from
     // round 1 on, expansion is restricted to new beam members
@@ -159,7 +162,7 @@ object HnswFrontier {
     // returned frame derives only from the checkpointed leaf, so the
     // release is safe before the caller materializes it
     try {
-      while (rounds < maxRounds && !done) {
+      while (rounds < maxRounds && !done) Span.run("frontier.round") {
         // expand every frontier node's neighborhood in one join
         val discovered = frontier
           .join(layer0, frontier("id") === layer0("src"))

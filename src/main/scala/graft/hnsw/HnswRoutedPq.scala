@@ -220,8 +220,7 @@ object HnswRoutedPq extends RoutedTier {
                      codebook: Array[Array[Array[Float]]],
                      persist: Boolean = true): RoutedPqIndex = {
     requireL2(index)
-    derive(index, codebook, None, persist, forceCount = false,
-      StorageLevel.MEMORY_AND_DISK)._1
+    derive(index, codebook, None, persist, forceCount = false, index.storage)._1
   }
 
   /** Build the PQ tier DIRECTLY from a vector table — no float index

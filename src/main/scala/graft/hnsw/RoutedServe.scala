@@ -197,9 +197,9 @@ private[graft] object RoutedServe {
     * (compact/ingest/fold/supersede) produces a new handle with a new
     * shards RDD, which misses the cache by construction — no
     * invalidation wiring, no stale reads. Entries are weakly keyed and
-    * MEMORY_AND_DISK-persisted: when a handle is released and its shards
-    * RDD becomes unreachable, the ContextCleaner unpersists the memo
-    * with it (eviction goes to disk, never to a recompute through a
+    * persisted at the shards' level: when a handle is released and its
+    * shards RDD becomes unreachable, the ContextCleaner unpersists the
+    * memo with it (eviction goes to disk, never to a recompute through a
     * possibly-released parent). */
   private val idCellCache =
     new java.util.WeakHashMap[RDD[_], RDD[(Long, Int)]]()
@@ -213,7 +213,10 @@ private[graft] object RoutedServe {
           s.form.store.idIterator.map(id => (id, c))
         }.partitionBy(new org.apache.spark.HashPartitioner(
           math.max(sh.partitions.length, sh.sparkContext.defaultParallelism)))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // at the shards' own residency: a DISK_ONLY index keeps its
+        // projection off executor memory too
+        if (sh.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
+          built.persist(sh.getStorageLevel)
         idCellCache.put(sh, built)
         built
       }

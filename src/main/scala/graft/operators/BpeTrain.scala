@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.trace.Span
 
 /** Distributed BPE (byte-pair-encoding) tokenizer TRAINING — learning
   * the merge table from the corpus itself, the step upstream of every
@@ -232,13 +233,13 @@ object BpeTrain {
     // under memory pressure; a production-scale run with tens of
     // thousands of merges wants reliable checkpoint() against a
     // checkpoint dir instead.)
-    var state = docs
+    var state = Span.run("bpe.vocab")(docs
       .select(explode(split(col(textCol), "\\s+")).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy(col("word")).agg(count(lit(1)).as("n"))
       .as[(String, Long)]
       .map { case (w, n) => (codePointSymbols(w), n) }
-      .localCheckpoint(true)
+      .localCheckpoint(true))
 
     // route: vocab-sized state on one machine when it fits (a round
     // then touches only affected words); distributed loop beyond.
@@ -250,19 +251,19 @@ object BpeTrain {
     // a conservative JVM object model), and the budget is a quarter of
     // the driver heap, leaving room for trainLocal's inverted
     // pair->words index (same order as the state itself).
-    val statsRow = state.toDF("syms", "n")
+    val statsRow = Span.run("bpe.route")(state.toDF("syms", "n")
       .agg(count(lit(1)).as("words"),
         coalesce(sum(size(col("syms"))), lit(0L)).as("symbols"))
-      .head
+      .head)
     val (nWords, totalSyms) = (statsRow.getLong(0), statsRow.getLong(1))
     val estLocalBytes = nWords * 48L + totalSyms * 64L
     val localBudget = Runtime.getRuntime.maxMemory / 4
     if (nWords <= localVocabThreshold && estLocalBytes <= localBudget)
-      return trainLocal(state.collect(), nMerges)
+      return Span.run("bpe.local")(trainLocal(state.collect(), nMerges))
 
     // the ONE full corpus-wide pair count — every later round merges
     // signed deltas into this frame instead of recounting
-    var pairCounts = state
+    var pairCounts = Span.run("bpe.pairs")(state
       .flatMap { case (syms, n) =>
         if (syms.length < 2) Iterator.empty
         else (0 until syms.length - 1).iterator
@@ -270,14 +271,14 @@ object BpeTrain {
       }
       .toDF("l", "r", "n")
       .groupBy(col("l"), col("r")).agg(sum(col("n")).as("freq"))
-      .localCheckpoint(true)
+      .localCheckpoint(true))
 
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
     var rank = 0
     var done = false
     var chainDepth = 0
     val ckptEvery = 6
-    while (rank < nMerges && !done) {
+    while (rank < nMerges && !done) Span.run("bpe.round") {
       // argmax over the RUNNING counts with the deterministic
       // (freq desc, left asc, right asc) tie-break — a 1-row collect
       val top = pairCounts

@@ -28,8 +28,7 @@ object PipelineRehearsal {
       .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val stats = new ScaleRehearsal.ShuffleStats
-    spark.sparkContext.addSparkListener(stats)
+    val collector = graft.trace.Collector.install(spark.sparkContext)
 
     for (n <- Seq(1000, 10000, 100000)) {
       val docs = ScaleRehearsal.mkDocs(spark, n)
@@ -41,11 +40,10 @@ object PipelineRehearsal {
         .select(explode(split(col("text"), " ")).as("w"))
         .agg(countDistinct(col("w"))).head.getLong(0)
 
-      stats.reset()
-      val t0 = System.nanoTime()
-      val merges = graft.operators.BpeTrain.train(docs, "text", nMerges = 12)
-      val bpeS = (System.nanoTime() - t0) / 1e9
-      val bpeShuffleRecords = stats.records
+      val (merges, bpe) = collector.measure("bpe_train")(
+        graft.operators.BpeTrain.train(docs, "text", nMerges = 12))
+      val bpeS = bpe.seconds
+      val bpeShuffleRecords = bpe.total.shuffleWriteRecords
       // the beyond-driver-memory route, forced (threshold 0) — the
       // auto route picks local below 2M distinct words, so both paths
       // stay measured per decade

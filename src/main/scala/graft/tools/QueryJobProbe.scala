@@ -1,16 +1,13 @@
 package graft.tools
 
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-
-import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 
 /** Per-query orchestration attribution: run each named query twice
-  * (second = warm) and report, for the warm run, the wall time, number
-  * of Spark jobs, stages, tasks, and summed task wall — a query whose
-  * wall is far above its summed-task/parallelism floor is scheduling/
-  * planning-bound, not compute-bound. No args after the sf dir = the
-  * full catalog. */
+  * (second = warm) and report, for the warm run's span, the wall time,
+  * number of Spark jobs, stages, tasks, and summed task wall — a query
+  * whose wall is far above its summed-task/parallelism floor is
+  * scheduling/planning-bound, not compute-bound. No args after the sf
+  * dir = the full catalog. */
 object QueryJobProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -22,21 +19,7 @@ object QueryJobProbe {
       .master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // GRAFT_AQE=false: floor-composition experiment — how much of the
-    // per-job latency is AQE's one-job-per-stage submission model
-    sys.env.get("GRAFT_AQE").foreach(v =>
-      spark.conf.set("spark.sql.adaptive.enabled", v))
-
-    val jobs = new AtomicInteger; val stages = new AtomicInteger
-    val tasks = new AtomicInteger; val taskMs = new AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet(); tasks.addAndGet(s.stageInfo.numTasks)
-      }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (e.taskInfo != null) taskMs.addAndGet(e.taskInfo.duration)
-    })
+    val collector = graft.trace.Collector.install(spark.sparkContext)
 
     spark.read.parquet(s"$sfDir/documents.parquet")
       .write.format("noop").mode("overwrite").save()
@@ -45,13 +28,12 @@ object QueryJobProbe {
       val fn = graft.SparkEntry.queries(n)
       try {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save() // warm
-        Thread.sleep(200)
-        jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0)
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300) // listener bus drain
-        println(f"PROBE $n $wall%.2f ${jobs.get} ${stages.get} ${tasks.get} ${taskMs.get / 1e3}%.2f")
+        val (_, span) = collector.measure(n)(
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+        val c = span.total
+        println(f"PROBE $n ${span.seconds}%.2f ${c.jobs} ${c.stages} ${c.tasks} ${c.taskMs / 1e3}%.2f")
+        span.children.foreach(r => println(f"  SPAN ${r.name} ${r.seconds}%.2f " +
+          f"${r.total.jobs} ${r.total.stages} ${r.total.tasks} ${r.total.taskMs / 1e3}%.2f"))
       } catch { case t: Throwable =>
         println(s"PROBE $n FAILED ${t.getMessage}")
       }

@@ -18,62 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object ScaleRehearsal {
 
-  private[tools] final class ShuffleStats extends org.apache.spark.scheduler.SparkListener {
-    private val recs = new java.util.concurrent.atomic.AtomicLong()
-    val runMs = new java.util.concurrent.atomic.AtomicLong()
-    val deserMs = new java.util.concurrent.atomic.AtomicLong()
-    val gcMs = new java.util.concurrent.atomic.AtomicLong()
-    val cpuMs = new java.util.concurrent.atomic.AtomicLong()
-    val schedDelayMs = new java.util.concurrent.atomic.AtomicLong()
-    private val taskLog =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long)]()
-    override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        recs.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-        runMs.addAndGet(m.executorRunTime)
-        deserMs.addAndGet(m.executorDeserializeTime)
-        gcMs.addAndGet(m.jvmGCTime)
-        cpuMs.addAndGet(m.executorCpuTime / 1000000L)
-        // scheduler delay, the UI's definition: wall not accounted to
-        // execution/deser/result-serialization — queueing + dispatch
-        if (e.taskInfo != null)
-          schedDelayMs.addAndGet(math.max(0L,
-            e.taskInfo.duration - m.executorRunTime -
-              m.executorDeserializeTime - m.resultSerializationTime))
-        taskLog.add((e.stageId, e.taskInfo.index.toLong, m.executorRunTime))
-      }
-    }
-    def taskSnapshot: String = {
-      import scala.jdk.CollectionConverters._
-      val top = taskLog.asScala.toSeq.sortBy(-_._3).take(4)
-        .map { case (s, i, ms) => s"stage$s/t$i=${ms}ms" }.mkString(",")
-      s"run=${runMs.get} cpu=${cpuMs.get} deser=${deserMs.get} gc=${gcMs.get} " +
-        s"sched=${schedDelayMs.get} top=[$top]"
-    }
-    def resetTasks(): Unit = {
-      runMs.set(0); deserMs.set(0); gcMs.set(0); cpuMs.set(0)
-      schedDelayMs.set(0); taskLog.clear()
-    }
-    def reset(): Unit = { recs.set(0L); resetTasks() }
-    def records: Long = recs.get
-
-    /** Mid-run snapshot: the listener bus delivers task-end events
-      * asynchronously, so a read right after collect() can miss (or
-      * later misattribute) trailing events. Poll until the counter is
-      * quiet for 300 ms before trusting a between-jobs boundary. */
-    def settledRecords(): Long = {
-      var prev = recs.get
-      var quiet = 0
-      while (quiet < 3) {
-        Thread.sleep(100)
-        val now = recs.get
-        if (now == prev) quiet += 1 else { quiet = 0; prev = now }
-      }
-      prev
-    }
-  }
-
   /** Vocabulary SCALES with corpus size (Heaps' law posture): with a
     * fixed vocab, background per-word document frequency grows ~n/vocab
     * and at n=100k every 1-word shingle sat just under the df cap,
@@ -138,17 +82,13 @@ object ScaleRehearsal {
       .master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val stats = new ShuffleStats
-    spark.sparkContext.addSparkListener(stats)
+    val collector = graft.trace.Collector.install(spark.sparkContext)
 
     def run(label: String, n: Int)(mk: => (Long, String)): Unit = {
       System.gc()
-      stats.reset()
-      val t0 = System.nanoTime()
-      val (outRows, extra) = mk
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"REHEARSAL $label n=$n out_rows=$outRows shuffle_records=${stats.records} " +
-        f"wall=$sec%.2fs $extra")
+      val ((outRows, extra), span) = collector.measure(label)(mk)
+      println(f"REHEARSAL $label n=$n out_rows=$outRows " +
+        f"shuffle_records=${span.total.shuffleWriteRecords} wall=${span.seconds}%.2fs $extra")
     }
 
     scales.foreach { n =>
@@ -2087,16 +2027,15 @@ object ScaleRehearsal {
           pmod(xxhash64(col("id")), lit(math.max(1L, n.toLong / 2))).as("key"))
         val sk = graft.operators.Kmv.sketch(rows, col("key"), Seq(col("g")), k)
           .withColumn("n_est", graft.operators.Kmv.estimate(col("kmv"), k))
-        val est = sk.select(col("g"), col("n_est")).collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        // the listener bus is async: collect() can return while task-end
-        // events are still queued, which would misattribute trailing
-        // sketch-stage records to the exact job — settle before snapshot
-        val sketchRecords = stats.settledRecords()
-        val exact = rows.groupBy(col("g"))
-          .agg(countDistinct(col("key")).as("n")).collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        val exactRecords = stats.settledRecords() - sketchRecords
+        val (est, sketch) = collector.measure("kmv_sketch")(
+          sk.select(col("g"), col("n_est")).collect()
+            .map(r => r.getString(0) -> r.getLong(1)).toMap)
+        val (exact, exactSpan) = collector.measure("kmv_exact")(
+          rows.groupBy(col("g"))
+            .agg(countDistinct(col("key")).as("n")).collect()
+            .map(r => r.getString(0) -> r.getLong(1)).toMap)
+        val sketchRecords = sketch.total.shuffleWriteRecords
+        val exactRecords = exactSpan.total.shuffleWriteRecords
         val maxErrBp = est.map { case (g, e) =>
           math.abs(e - exact(g)) * 10000 / math.max(1L, exact(g)) }.max
         (est.size.toLong, s"sketch_records=$sketchRecords " +

@@ -18,6 +18,14 @@ object Bridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** Blocks until every listener has seen every event posted so far
+    * (`SparkContext.listenerBus` is private[spark]). */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** Posts `e` to every listener, after the events posted before it. */
+  def post(sc: org.apache.spark.SparkContext, e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+    sc.listenerBus.post(e)
 }
 
 /** Input-type contract: (array<float>, array<float>). */

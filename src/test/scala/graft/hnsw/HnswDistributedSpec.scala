@@ -248,20 +248,26 @@ class HnswDistributedSpec extends SparkSpec {
   }
 
   test("broadcast build tier fails fast past the Kryo 2 GiB per-array envelope") {
-    // n=5e6 x mMax0=64 bounds 3.2e8 edges -> 2.56e9 bytes per 8-byte
-    // column, past Int.MaxValue: the build must throw at entry (not 20
-    // minutes in, at the first over-sized snapshot broadcast) and route
-    // to the sharded/routed/durable tiers
+    // the model ships its float arena as one n x dim x 4-byte array:
+    // 5e6 x 128-d (2.56e9 bytes) and 700k x 768-d (2.15e9 bytes) pass
+    // Int.MaxValue, so the build must throw at entry (not 20 minutes in,
+    // at the first over-sized broadcast) and route to the
+    // sharded/routed/durable tiers. Every row references one vector, so
+    // nothing of that size is allocated.
     val params = HnswParams.standard(64, 32, 32) // mMax0 = 64
-    val n = 5000000
-    val ids = Array.tabulate(n)(_.toLong)
-    val layers = new Array[Int](n)
-    val e = intercept[IllegalArgumentException] {
-      HnswDistributed.batchedBuildLoop(spark, ids, layers, params, 128, 4096)(
-        null: BuildRows[Array[Float]])
+    def rejects(n: Int, dim: Int): Unit = {
+      val ids = Array.tabulate(n)(_.toLong)
+      val layers = new Array[Int](n)
+      val one = new Array[Float](dim)
+      val e = intercept[IllegalArgumentException] {
+        HnswDistributed.batchedBuildLoop(spark, ids, layers, params, 128, 4096)(
+          new BuildVectors("cosine", ids, Array.fill(n)(one)))
+      }
+      assert(e.getMessage.contains("envelope"), e.getMessage)
+      assert(e.getMessage.contains("buildSharded"), e.getMessage)
     }
-    assert(e.getMessage.contains("envelope"), e.getMessage)
-    assert(e.getMessage.contains("buildSharded"), e.getMessage)
+    rejects(5000000, 128)
+    rejects(700000, 768)
   }
 
   test("prebuilt sharded handle serves repeated query batches without rebuild") {

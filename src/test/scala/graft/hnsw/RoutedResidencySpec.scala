@@ -21,6 +21,16 @@ class RoutedResidencySpec extends SparkSpec {
   private def assertDisk(label: String, shards: org.apache.spark.rdd.RDD[_]): Unit =
     assert(shards.getStorageLevel == Disk, s"$label persisted at ${shards.getStorageLevel}")
 
+  /** Runs `f` and asserts it left no new RDD persisted in executor memory. */
+  private def assertNoMemoryPins(label: String)(f: => Unit): Unit = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    f
+    val pinned = spark.sparkContext.getPersistentRDDs.collect {
+      case (id, r) if !before(id) && r.getStorageLevel.useMemory => s"$id ${r.name} ${r.getStorageLevel}"
+    }
+    assert(pinned.isEmpty, s"$label pinned in memory: $pinned")
+  }
+
   @inline private def mix(z0: Long): Long = {
     var z = z0 + 0x9E3779B97F4A7C15L
     z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
@@ -99,5 +109,33 @@ class RoutedResidencySpec extends SparkSpec {
       minCellRows = 100, patched = false)
     assert(flagged.nonEmpty, "the planted merged cell must be flagged")
     assertDisk("remediateMergedCellsSolo", remedied.shards)
+  }
+
+  test("a DISK_ONLY codes index serves searchFilteredDistributed without a memory pin") {
+    val index = HnswRoutedCodes.build(
+      (0L until 3200L).map(i => (i, clusterCode(i))).toDF("id", "code"),
+      HnswParams.standard(48, 96, 16), nCells = 2, storage = Disk)
+    val queries = (0L until 4L).map(i => (i, clusterCode(i * 801L))).toDF("qid", "qcode")
+    assertNoMemoryPins("searchFilteredDistributed") {
+      HnswRoutedCodes.searchFilteredDistributed(index, queries, (0L until 3200L by 3).toDF("id"),
+        5, nProbe = 2).collect()
+    }
+    index.unpersist()
+  }
+
+  test("fromRouted of a DISK_ONLY float index derives a DISK_ONLY PQ tier") {
+    val cfg = BuildConfig(HnswParams.standard(64, 128, 16), metric = "l2", seed = 42L)
+    val built = HnswRouted.build((0L until 3200L).map(i => (i, clusterVec(i))).toDF("id", "vec"),
+      cfg, nCells = 2)
+    val dir = java.nio.file.Files.createTempDirectory("graft_residency_pq_").toString
+    HnswRouted.save(built, dir)
+    built.unpersist()
+    val float = HnswRouted.attach(spark, dir, storage = Disk)
+    assertDisk("attach", float.shards)
+    var pq: HnswRoutedPq.RoutedPqIndex = null
+    assertNoMemoryPins("fromRouted") { pq = HnswRoutedPq.fromRouted(float) }
+    assertDisk("fromRouted", pq.shards)
+    pq.unpersist()
+    float.unpersist()
   }
 }
