@@ -457,7 +457,7 @@ object Bench {
     * memory-contention attribution of the r12 outlier.
     */
   private def vectorGrid(spark: SparkSession, collector: graft.trace.Collector): Seq[Cell] = {
-    import graft.hnsw.{HnswDistributed, HnswParams, HnswSearcher}
+    import graft.hnsw.{HnswDistributed, HnswParams}
     import graft.hnsw.HnswDistributed.BuildConfig
     import graft.operators.ExactKnn
 
@@ -470,7 +470,7 @@ object Bench {
     def mkVectors(n: Int): Array[(Long, Array[Float])] =
       Array.tabulate(n) { i =>
         (i.toLong, Array.tabulate(dim)(d =>
-          (HnswSearcher.uniformFromHash(i.toLong * 131 + d, 17L) * 2.0 - 1.0).toFloat))
+          (HnswParams.uniformFromHash(i.toLong * 131 + d, 17L) * 2.0 - 1.0).toFloat))
       }
 
     def time[A](f: => A): (A, Double) = {
@@ -586,7 +586,7 @@ object Bench {
     val hammingCells = sizes.map { n =>
       val codes = Array.tabulate(n) { i =>
         (i.toLong, java.lang.Double.doubleToRawLongBits(
-          HnswSearcher.uniformFromHash(i.toLong, 23L)))
+          HnswParams.uniformFromHash(i.toLong, 23L)))
       }
       import spark.implicits._
       val codesDf = spark.createDataset(codes.toSeq).toDF("id", "code").cache()

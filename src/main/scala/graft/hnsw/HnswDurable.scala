@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 
 import graft.hnsw.HnswDistributed.BuildConfig
-import graft.store.{ArenaVectorStore, ArrayVectorStore, Metrics, ParquetGraphStore}
+import graft.store.{ArenaVectorStore, ParquetGraphStore}
 import graft.trace.Span
 
 /** Beyond-broadcast HNSW build against a durable [[ParquetGraphStore]] —
@@ -15,8 +15,9 @@ import graft.trace.Span
   *
   *  - phase 1 (search_to_insert, reference hawk_searcher.rs:350-389) runs
   *    against the *current persisted graph*: layers >= 1 are broadcast
-  *    (they hold ~n*p^l vertices — the same contract that makes greedy
-  *    upper descent cheap, SURVEY §1.4), while layer 0 — the big one —
+  *    as a serving form (they hold ~n*p^l vertices — the same contract
+  *    that makes greedy upper descent cheap, SURVEY §1.4) and walked by
+  *    [[OrdinalGraph.searchToInsert]] on a view, while layer 0 — the big one —
   *    is searched via iterative frontier joins over the links table
   *    ([[HnswFrontier.searchLayer0]]), seeded with each vector's
   *    construction beam exiting layer 1;
@@ -87,20 +88,11 @@ object HnswDurable {
              maxRounds: Int = 30): Unit = {
     val spark = newRows.sparkSession
     import spark.implicits._
-    val params = cfg.params
-    val searcher = new HnswSearcher(params)
-    val metric = Metrics.byName(cfg.metric)
-    val pairEnc = ExpressionEncoder[(Long, Array[Float])]()
 
     // The vector table is read by every frontier round, every batch join
-    // and every upper-vector lookup — pin it for the whole ingest. A flat
-    // (unpartitioned) pin is the right layout at EVERY scale here:
-    // construction batches are capped at cfg.maxBatch (4096) rows, so the
-    // frontier side of each round's distance join always broadcasts and
-    // the pinned table streams through with zero exchanges (the
-    // searchLayer0 size-adaptive layout note). (At cluster scale this is
-    // a distributed cache of the id+vec projection, spilling to disk; it
-    // never lands on the driver.)
+    // and every upper-vector lookup — pin it, flat, for the whole ingest.
+    // (At cluster scale this is a distributed cache of the id+vec
+    // projection, spilling to disk; it never lands on the driver.)
     val vecs = allVectors.select(col("id"), col("vec"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
@@ -117,18 +109,14 @@ object HnswDurable {
       .toDF("id", "rank").cache()
     // the cached frames must not outlive the call on ANY path — the
     // duplicate-id require below is an expected exit
-    try { ingestRanked(store, vecs, ranked, cfg, maxRounds, searcher, metric, pairEnc) }
+    try { ingestRanked(store, vecs, ranked, cfg, maxRounds) }
     finally { ranked.unpersist(); vecs.unpersist() }
   }
 
   private def ingestRanked(store: ParquetGraphStore, vecs: DataFrame,
-                           ranked: DataFrame, cfg: BuildConfig, maxRounds: Int,
-                           searcher: HnswSearcher,
-                           metric: (Array[Float], Array[Float]) => Double,
-                           pairEnc: org.apache.spark.sql.Encoder[(Long, Array[Float])]): Unit = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
+                           ranked: DataFrame, cfg: BuildConfig, maxRounds: Int): Unit = {
     val params = cfg.params
+    val pairEnc = ExpressionEncoder[(Long, Array[Float])]()
     val n = ranked.count()
     if (n == 0) return
 
@@ -184,15 +172,14 @@ object HnswDurable {
       val batch = batchVectors(pos, pos + batchSize)
       var linksNow: DataFrame = null
       var phase1: DataFrame = null
-      var upperB: org.apache.spark.broadcast.Broadcast[
-        (graft.store.GraphSnapshot, LongVecMap)] = null
+      var upperB: org.apache.spark.broadcast.Broadcast[OrdinalForm.Floats] = null
       try {
       batch.cache()
 
       // The store's links table is now an LSM resolution (full + deltas,
       // latest wins) — a shuffle, not a bare scan. It feeds the upper
-      // snapshot, every frontier round and the merge: resolve once per
-      // batch and pin it.
+      // form, every frontier round and the merge: resolve once per batch
+      // and pin it.
       linksNow = store.linksTable
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val entry = store.getEntryPoint.getOrElse(
@@ -201,67 +188,18 @@ object HnswDurable {
       // phase 1a's frame materializes in 1b, in its first frontier job
       Span.run("durable.phase1a") {
       // Upper layers (>= 1): small by the geometric layer law — collect
-      // the adjacency + only the vectors it touches, broadcast both.
-      val upperSnap = GraphFrames.fromLinksDF(
-        linksNow.filter(col("layer") >= 1), Some(entry))
-      val upperIds: Set[Long] = upperSnap.layers.iterator.drop(1).flatMap(l =>
-        l.srcs.iterator ++ l.dsts.iterator).toSet + entry.point
-      val upperRows = vecs
-        .join(broadcast(upperIds.toSeq.toDF("id")), "id")
-        .select(col("id"), col("vec")).as(pairEnc).collect()
-      val upperVecs = LongVecMap.from(upperRows, upperRows.length)
-      val sc = spark.sparkContext
-      upperB = sc.broadcast((upperSnap, upperVecs))
-      val seed = cfg.seed
-
-      // Phase 1a (executors): kernel descent through layers top..1 per
-      // batch vector — construction beams for layers 1..L (trimmed to M),
-      // empty neighborhoods for fresh top layers, and the beam exiting
-      // layer 1 as the layer-0 frontier seed (tagged layer = -1). One
-      // store per partition stages each row under its own id: batch ids
-      // are new to the graph, so no stored vector is shadowed.
+      // the adjacency and the vectors it touches, broadcast their form.
+      upperB = HnswFrontier.upperForm(vecs.sparkSession, GraphFrames.fromLinksDF(
+        linksNow.filter(col("layer") >= 1), Some(entry)), vecs, cfg.metric)
       val ub = upperB // stable val for closure capture (upperB is a var)
+      val seed = cfg.seed
+      // Phase 1a (executors): one ordinal walk per batch vector through
+      // layers top..1 (phase1aRows), on one view per partition.
       phase1 = batch.as(pairEnc).mapPartitions { it =>
-        val (snap, vecs) = ub.value
-        val vs = new ArrayVectorStore(metric, base = vecs)
+        val view = ub.value.view(phase1aParams(params))
+        val ids = ub.value.store.ids
         it.flatMap { case (id, vec) =>
-          val insLayer = searcher.selectLayerByHash(id, seed)
-          vs.prepareQueryWithId(id, vec)
-          val (w, nLayers) = searcher.searchInit(vs, snap, id)
-          val out = Seq.newBuilder[(Long, Int, Array[Long], Array[Double])]
-          var lc = nLayers - 1
-          while (lc >= 1) {
-            // At layer 1 the beam is ALSO the layer-0 frontier seed set:
-            // widen it to the layer-0 construction ef (free — the upper
-            // layers are in this executor's memory) so the frontier BFS
-            // starts near-converged and pays fewer rounds (each round is
-            // a full BSP barrier). Above the insertion layer this only
-            // changes the seeds, never the recorded links (links are
-            // recorded for lc <= insLayer, where ef is already the
-            // construction ef, so max() is the identity there).
-            val ef = if (lc > insLayer)
-                       (if (lc == 1) math.max(params.getEfConstrInsert(0),
-                                              params.getEfConstrSearch(lc))
-                        else params.getEfConstrSearch(lc))
-                     else params.getEfConstrInsert(lc)
-            searcher.searchLayer(vs, snap, id, w, ef, lc)
-            if (lc <= insLayer) {
-              val trimmed = w.copy()
-              trimmed.trimToKNearest(params.getM(lc))
-              val arr = trimmed.toArray
-              out += ((id, lc, arr.map(_.dst), arr.map(_.dist)))
-            }
-            lc -= 1
-          }
-          // fresh top layers: stored as explicit empty neighborhoods
-          var flc = nLayers
-          while (flc <= insLayer) {
-            out += ((id, flc, Array.empty[Long], Array.empty[Double]))
-            flc += 1
-          }
-          val seeds = w.toArray
-          out += ((id, -1, seeds.map(_.dst), seeds.map(_.dist)))
-          out.result()
+          phase1aRows(view, ids, params, id, vec, params.selectLayerByHash(id, seed))
         }
       }(outEnc).toDF("q", "layer", "dsts", "dists").cache()
       }
@@ -283,8 +221,7 @@ object HnswDurable {
       val beam0 = Span.run("durable.phase1b")(HnswFrontier.searchLayer0(
         linksNow, vecs, queries0, seeds0,
         k = m0, ef = params.getEfConstrInsert(0), metricName = cfg.metric,
-        maxRounds = math.min(maxRounds, ConstructionRoundCap),
-        bulkLayout = Some(false)))
+        maxRounds = math.min(maxRounds, ConstructionRoundCap)))
       val links0 = beam0
         .groupBy(col("qid"))
         .agg(expr("transform(array_sort(collect_list(struct(dist AS dist, id AS dst)))," +
@@ -314,6 +251,37 @@ object HnswDurable {
       pos += batchSize
       graphSize += batchSize
     }
+  }
+
+  /** Phase 1a's view params: `params` with the layer-1 beam above the
+    * insertion layer widened to the layer-0 construction ef. That beam is
+    * also the layer-0 frontier seed set, so widening it (free: the upper
+    * layers are in executor memory) starts the frontier near-converged
+    * and saves rounds, each a full BSP barrier. Links are recorded only
+    * at or below the insertion layer, where the ef is
+    * `efConstrInsert`, so they do not change. */
+  private[hnsw] def phase1aParams(params: HnswParams): HnswParams = {
+    val efs = params.efConstrSearch.clone()
+    efs(1) = math.max(params.getEfConstrInsert(0), params.getEfConstrSearch(1))
+    params.copy(efConstrSearch = efs)
+  }
+
+  /** Phase 1a of one batch row `(id, vec)` at insertion layer `insLayer`:
+    * [[OrdinalGraph.searchToInsert]] on `view`, a view of the upper
+    * layers' form (`ids`: its store's ids) with [[phase1aParams]]. Rows
+    * `(id, layer, dsts, dists)`: the construction beam trimmed to
+    * `M(layer)` for each layer 1..insLayer (empty above the graph's top:
+    * the fresh layers' explicit empty neighborhoods), then the layer-1
+    * beam, untrimmed, as the layer-0 frontier seeds (layer -1). The view
+    * has no layer-0 rows, so its layer-0 beam is the layer-1 beam. */
+  private[hnsw] def phase1aRows(view: OrdinalGraph[Array[Float]], ids: Array[Long],
+                                params: HnswParams, id: Long, vec: Array[Float],
+                                insLayer: Int): Seq[(Long, Int, Array[Long], Array[Double])] = {
+    val found = view.searchToInsert(vec, insLayer)
+    def row(layer: Int, q: OrdinalQueue) =
+      (id, layer, Array.tabulate(q.size)(i => ids(q.ordAt(i))), Array.tabulate(q.size)(q.distAt))
+    (1 to insLayer).map { lc => found(lc).trimTo(params.getM(lc)); row(lc, found(lc)) } :+
+      row(-1, found(0))
   }
 
   /** Hard cap on frontier rounds during CONSTRUCTION (search is not

@@ -1,6 +1,7 @@
 package graft.hnsw
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -54,33 +55,13 @@ object HnswFrontier {
     searchLayer0(links, vectors, queries, entrySeeds, k, ef, metricName, maxRounds)
   }
 
-  /** True when the query batch is too large for its frontier to
-    * broadcast — the regime where per-round joins plan as sort-merge and
-    * shuffle volume (not per-round scheduling latency) is the cost. */
-  private def bulkRegime(queries: DataFrame): Boolean = {
-    val conf = queries.sparkSession.sessionState.conf
-    val t = conf.autoBroadcastJoinThreshold
-    t <= 0 || queries.queryExecution.optimizedPlan.stats.sizeInBytes > t
-  }
-
   /** Layer-0 frontier search from caller-supplied seeds (qid, id) — the
     * shared tail of [[search]] and the durable build's phase 1, whose
     * seeds are the construction beam exiting layer 1 rather than a greedy
     * descent. Layer 0 is only ever touched through distributed joins. */
-  /** @param bulkLayout Some(b) pins the cache layout (see the layout
-    *                    note below); None derives it from the query
-    *                    batch's planner size estimate. HnswDurable's
-    *                    construction passes Some(false): its batches are
-    *                    capped at cfg.maxBatch rows — always broadcast-
-    *                    sized — while the batch frame's JOIN-derived
-    *                    stats overestimate wildly before the cache
-    *                    materializes (measured round 20: the estimate
-    *                    flipped the build to the pre-partitioned layout
-    *                    and paid two pointless full-table fills). */
   def searchLayer0(links: DataFrame, vectors: DataFrame, queries: DataFrame,
                    seeds: DataFrame, k: Int, ef: Int,
-                   metricName: String, maxRounds: Int = 30,
-                   bulkLayout: Option[Boolean] = None): DataFrame = {
+                   metricName: String, maxRounds: Int = 30): DataFrame = {
     // the beam must be at least k wide: a node dropped from the beam is
     // gone for good, so returning ranks beyond the beam width would
     // surface arbitrary last-round rejects instead of true neighbors
@@ -89,40 +70,19 @@ object HnswFrontier {
     // every round joins against the adjacency and the vector table — pin
     // both for the loop (unpersisted after: the returned frame derives
     // only from the final localCheckpoint'd frame, never re-reading
-    // either). Cache LAYOUT is size-adaptive (round 20): when the query
-    // batch is small enough that the frontier side broadcasts, the cached
-    // tables stream through every per-round BroadcastHashJoin with ZERO
-    // exchanges — a flat cache is optimal and pre-partitioning would add
-    // two full-table shuffle+sorts to the fill for nothing (measured
-    // +~1 s/call at sf0.1, interleaved same-JVM A/B min-of-4:
-    // flat 3.65 s vs prepart 4.64 s — OPTIMIZATION_r20.md). When the batch is too big to
-    // broadcast (bulk serving at the decade), every round plans a
-    // sort-merge join and an unpartitioned cache would re-exchange and
-    // re-sort the FULL index table each round — R x |index| shuffled
-    // bytes; pre-partitioning + pre-sorting the cache on the join key
-    // moves that to the fill, once, and rounds shuffle only the
-    // frontier-sized side. The partition count is explicit —
-    // repartition(col) alone is AQE-coalesced to ONE partition on small
-    // input, serializing every downstream join (measured round 19).
-    val spark0 = links.sparkSession
-    val np = spark0.sparkContext.defaultParallelism
-    val prepart = bulkLayout.getOrElse(bulkRegime(queries))
-    def keyed(df: DataFrame, key: String): DataFrame =
-      if (prepart) df.repartition(np, col(key)).sortWithinPartitions(key)
-      else df
-    val layer0 = keyed(links.filter(col("layer") === 0)
-      .select(col("src"), col("links")), "src")
+    // either). Both caches are flat (unpartitioned), one layout for
+    // every caller.
+    val layer0 = links.filter(col("layer") === 0)
+      .select(col("src"), col("links"))
       .cache()
     // skip the cache when the caller already persisted the vector table
-    // (HnswDurable pins it FLAT — unpartitioned — for the whole ingest;
-    // re-caching here would materialize a second full copy per
-    // micro-batch); the projection still reads through the caller's
-    // InMemoryRelation in whatever layout the caller pinned
+    // (HnswDurable pins it for the whole ingest; re-caching here would
+    // materialize a second full copy per micro-batch)
     val vecsCachedHere =
       vectors.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     val vecs = {
       val projected = vectors.select(col("id"), col("vec"))
-      if (vecsCachedHere) keyed(projected, "id").cache() else projected
+      if (vecsCachedHere) projected.cache() else projected
     }
 
     val qvecs = queries.select(col("qid"), col("qvec"))
@@ -221,27 +181,34 @@ object HnswFrontier {
         if (lc == 0) graft.store.LayerCsr.empty else m
       })
 
-  /** Kernel descent through layers top..1: greedy (ef=1) down to layer 2,
-    * beam width `seedEf` at layer 1. Returns each query's layer-0 seed
-    * candidates (qid, id) — up to seedEf rows per query (exactly the
-    * layer-1 beam; with seedEf=1 this is the classic greedy entry). The
-    * walk is an [[OrdinalGraph]] view over an arena of the upper layers'
-    * vectors, so a query is never staged under an id a stored vertex may
-    * hold. */
-  private[hnsw] def descendUpper(spark: SparkSession, upper: GraphSnapshot,
-                                 vectors: DataFrame, queries: DataFrame,
-                                 metricName: String, seedEf: Int = 1): DataFrame = {
-    import org.apache.spark.sql.Encoders
+  /** The upper layers of `upper` (layers >= 1 and the entry point) as a
+    * broadcast serving form: the vectors of the ids they touch, collected
+    * in id order into an arena, under [[OrdinalForm.of]]. The frontier
+    * descent and the durable build's phase 1a both walk it. */
+  private[hnsw] def upperForm(spark: SparkSession, upper: GraphSnapshot, vectors: DataFrame,
+                              metricName: String): Broadcast[OrdinalForm.Floats] = {
     // upper layers hold few distinct ids; ship only the vectors they touch
     val upperIds: Set[Long] = (upper.entryPoint.map(_.point).toSet ++
       upper.layers.iterator.flatMap(l =>
         l.srcs.iterator ++ l.dsts.iterator)).toSet
     val idsB = spark.sparkContext.broadcast(upperIds)
-    val vecEnc = Encoders.tuple(Encoders.scalaLong, ExprEnc.floatArray)
     val (ids, vecs) = vectors.select(col("id"), col("vec")).as(vecEnc)
       .filter(r => idsB.value.contains(r._1)).collect().sortBy(_._1).unzip
-    val formB = spark.sparkContext.broadcast(
-      OrdinalForm.of(ArenaVectorStore.of(metricName, ids, vecs), upper))
+    spark.sparkContext.broadcast(OrdinalForm.of(ArenaVectorStore.of(metricName, ids, vecs), upper))
+  }
+
+  private val vecEnc = Encoders.tuple(Encoders.scalaLong, ExprEnc.floatArray)
+
+  /** Kernel descent through layers top..1: greedy (ef=1) down to layer 2,
+    * beam width `seedEf` at layer 1. Returns each query's layer-0 seed
+    * candidates (qid, id) — up to seedEf rows per query (exactly the
+    * layer-1 beam; with seedEf=1 this is the classic greedy entry). The
+    * walk is an [[OrdinalGraph]] view over [[upperForm]], so a query is
+    * never staged under an id a stored vertex may hold. */
+  private[hnsw] def descendUpper(spark: SparkSession, upper: GraphSnapshot,
+                                 vectors: DataFrame, queries: DataFrame,
+                                 metricName: String, seedEf: Int = 1): DataFrame = {
+    val formB = upperForm(spark, upper, vectors, metricName)
     // the layer-0 ef bounds nothing here: the form has no layer-0 rows
     val params = HnswParams.standard(1, 1, 16).copy(efSearch = Array(seedEf, seedEf, 1, 1, 1))
 

@@ -48,7 +48,7 @@ final case class HnswParams(
     * of (id, seed) — the Spark analog of the reference's seeded AesRng
     * (hawk_searcher.rs:445) — by the inverse CDF floor(ln(u)/ln(p)). */
   def selectLayerByHash(id: Long, seed: Long): Int = {
-    val u = HnswSearcher.uniformFromHash(id, seed)
+    val u = HnswParams.uniformFromHash(id, seed)
     if (u <= 0.0) 0
     else math.floor(math.log(u) / math.log(layerProbability)).toInt.max(0)
   }
@@ -93,6 +93,19 @@ object HnswParams {
       efSearch = Array.fill(NParamLayers)(ef),
       layerProbability = 1.0 / m
     )
+  }
+
+  /** splitmix64 finalizer — maps (id, seed) to a uniform double in (0,1):
+    * the layer draw of [[HnswParams.selectLayerByHash]] and the seeded
+    * sampling of the IVF, PQ and routed trainers. */
+  def uniformFromHash(id: Long, seed: Long): Double = {
+    var z = id + seed * 0x9E3779B97F4A7C15L + 0x9E3779B97F4A7C15L
+    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+    z = z ^ (z >>> 31)
+    // take 53 high bits -> double in [0,1); nudge 0 to the smallest ulp
+    val u = (z >>> 11).toDouble / (1L << 53).toDouble
+    if (u <= 0.0) Double.MinPositiveValue else u
   }
 
   /** m_L = -1/ln(p) (reference src/hawk_searcher.rs:85-87). */

@@ -157,7 +157,7 @@ object HnswRoutedCodes extends LocalRoutedTier {
       var exhausted = false
       while (i < math.min(nCells, sample.length) && !exhausted) {
         val start =
-          ((HnswSearcher.uniformFromHash(i.toLong, seed) * sample.length).toInt)
+          ((HnswParams.uniformFromHash(i.toLong, seed) * sample.length).toInt)
             .min(sample.length - 1)
         var off = 0
         var picked = false
@@ -273,7 +273,7 @@ object HnswRoutedCodes extends LocalRoutedTier {
           val sampled = keyed0.flatMap { case (cell, (id, c)) =>
             keepB.value.get(cell) match {
               case Some(keep)
-                if HnswSearcher.uniformFromHash(id, seed ^ 0x9E3779B9L) < keep =>
+                if HnswParams.uniformFromHash(id, seed ^ 0x9E3779B9L) < keep =>
                 Iterator.single((cell, id, c))
               case _ => Iterator.empty
             }

@@ -210,16 +210,3 @@ final class HnswSearcher(val params: HnswParams) extends Serializable {
       case Some(nearest) => vectors.isMatch(nearest.dist)
     }
 }
-
-object HnswSearcher {
-  /** splitmix64 finalizer — maps (id, seed) to a uniform double in (0,1). */
-  def uniformFromHash(id: Long, seed: Long): Double = {
-    var z = id + seed * 0x9E3779B97F4A7C15L + 0x9E3779B97F4A7C15L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z = z ^ (z >>> 31)
-    // take 53 high bits -> double in [0,1); nudge 0 to the smallest ulp
-    val u = (z >>> 11).toDouble / (1L << 53).toDouble
-    if (u <= 0.0) Double.MinPositiveValue else u
-  }
-}

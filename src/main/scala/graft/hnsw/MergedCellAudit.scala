@@ -64,7 +64,7 @@ private[hnsw] object MergedCellAudit {
     // affordable).
     val keep = math.min(1.0, sampleMax.toDouble / all.length)
     val hashed = all.filter { case (id, _) =>
-      HnswSearcher.uniformFromHash(id, 0x9E3779B9L) < keep }
+      HnswParams.uniformFromHash(id, 0x9E3779B9L) < keep }
     val sample =
       if (hashed.length >= 32 && hashed.exists(r => isDead(r._1)) &&
           hashed.exists(r => !isDead(r._1))) hashed

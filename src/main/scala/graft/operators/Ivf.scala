@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
-import graft.hnsw.HnswSearcher
+import graft.hnsw.HnswParams
 import graft.store.Metrics
 
 /** IVF (inverted-file) approximate nearest neighbor — the
@@ -69,7 +69,7 @@ object Ivf {
 
     // splitmix-seeded distinct starting points
     var centroids = Array.tabulate(math.min(nCells, sample.length)) { i =>
-      val idx = (HnswSearcher.uniformFromHash(i.toLong, seed) * sample.length).toInt
+      val idx = (HnswParams.uniformFromHash(i.toLong, seed) * sample.length).toInt
         .min(sample.length - 1)
       sample(idx).clone()
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{PqFunctions, PqKernels}
-import graft.hnsw.HnswSearcher
+import graft.hnsw.HnswParams
 
 /** Product quantization — the compression member of the ANN family
   * (alongside HNSW, IVF and SimHash-LSH): vectors are split into
@@ -58,7 +58,7 @@ object Pq {
         Array.tabulate(width)(i => v(off + i))
       }
       var cents = Array.tabulate(math.min(PqKernels.NumCentroids, slices.length)) { c =>
-        val idx = (HnswSearcher.uniformFromHash(c.toLong * 31 + s, seed) * slices.length).toInt
+        val idx = (HnswParams.uniformFromHash(c.toLong * 31 + s, seed) * slices.length).toInt
           .min(slices.length - 1)
         slices(idx).clone()
       }

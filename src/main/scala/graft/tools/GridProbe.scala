@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   * without paying the full catalog bench. */
 object GridProbe {
   def main(args: Array[String]): Unit = {
-    import graft.hnsw.{HnswCodes, HnswDistributed, HnswParams, HnswSearcher}
+    import graft.hnsw.{HnswCodes, HnswDistributed, HnswParams}
     import graft.hnsw.HnswDistributed.BuildConfig
     val sizes = if (args.nonEmpty) args(0).split(",").map(_.toInt).toSeq
                 else Seq(100000)
@@ -33,7 +33,7 @@ object GridProbe {
     locally {
       val wRows = Array.tabulate(256) { i =>
         (i.toLong, Array.tabulate(dim)(d =>
-          (HnswSearcher.uniformFromHash(i.toLong * 131 + d, 17L) * 2.0 - 1.0).toFloat))
+          (HnswParams.uniformFromHash(i.toLong * 131 + d, 17L) * 2.0 - 1.0).toFloat))
       }
       HnswDistributed.buildFromArray(spark, wRows, cfg)
       val wCodes = Array.tabulate(256)(i =>
@@ -48,7 +48,7 @@ object GridProbe {
         System.gc()
         val rows = Array.tabulate(n) { i =>
           (i.toLong, Array.tabulate(dim)(d =>
-            (HnswSearcher.uniformFromHash(i.toLong * 131 + d, 17L) * 2.0 - 1.0).toFloat))
+            (HnswParams.uniformFromHash(i.toLong * 131 + d, 17L) * 2.0 - 1.0).toFloat))
         }
         val gc0 = gcMs(); val t0 = System.nanoTime()
         val model = HnswDistributed.buildFromArray(spark, rows, cfg)
@@ -61,7 +61,7 @@ object GridProbe {
         System.gc()
         val codes = Array.tabulate(n) { i =>
           (i.toLong, java.lang.Double.doubleToRawLongBits(
-            HnswSearcher.uniformFromHash(i.toLong, 23L)))
+            HnswParams.uniformFromHash(i.toLong, 23L)))
         }
         import spark.implicits._
         val codesDf = spark.createDataset(codes.toSeq).toDF("id", "code").cache()

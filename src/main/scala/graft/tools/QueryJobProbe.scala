@@ -25,8 +25,8 @@ object QueryJobProbe {
       .write.format("noop").mode("overwrite").save()
     println("query wall_s jobs stages tasks task_sum_s")
     names.foreach { n =>
-      val fn = graft.SparkEntry.queries(n)
       try {
+        val fn = graft.SparkEntry.queries(n)
         fn(spark, sfDir).write.format("noop").mode("overwrite").save() // warm
         val (_, span) = collector.measure(n)(
           fn(spark, sfDir).write.format("noop").mode("overwrite").save())

@@ -58,7 +58,7 @@ object ScaleRehearsal {
   }
 
   private def mkVecs(spark: SparkSession, n: Int): DataFrame = {
-    import graft.hnsw.HnswSearcher.uniformFromHash
+    import graft.hnsw.HnswParams.uniformFromHash
     val dim = 64
     val rows = (0 until n).map { i =>
       val srcId = if (i % 10 == 9) i - 1 else i // 10% near-dup of neighbor
@@ -149,12 +149,12 @@ object ScaleRehearsal {
       // directly on the driver (a Spark-job round-trip would ship the
       // same ~n x 64 floats through serialization twice for nothing).
       if (ops("annserve_float")) run("ann_serve_float", n) {
-        import graft.hnsw.{HnswDistributed, HnswParams, HnswSearcher}
+        import graft.hnsw.{HnswDistributed, HnswParams}
         import graft.hnsw.HnswDistributed.BuildConfig
         import spark.implicits._
         val dim = 64
         def vecOf(id: Long): Array[Float] = Array.tabulate(dim)(d =>
-          (HnswSearcher.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat)
+          (HnswParams.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat)
         val rows = Array.tabulate(n)(i => (i.toLong, vecOf(i.toLong)))
         val cfg = BuildConfig(HnswParams.standard(64, 32, 32), "cosine", seed = 9L)
         val t0 = System.nanoTime()
@@ -242,15 +242,15 @@ object ScaleRehearsal {
       // clustered corpus (64 planted centers; the regime the router is
       // FOR — the catalog's uniform corpus measures the other regime).
       if (ops("routed")) run("ann_routed", n) {
-        import graft.hnsw.{HnswDistributed, HnswParams, HnswRouted, HnswSearcher}
+        import graft.hnsw.{HnswDistributed, HnswParams, HnswRouted}
         import spark.implicits._
         val dim = 64
         val nCells = 64
         def vecOf(id: Long): Array[Float] = {
           val c = (id % nCells).toInt
           Array.tabulate(dim)(d =>
-            (HnswSearcher.uniformFromHash(c.toLong * 997 + d, 77L) * 20.0 - 10.0).toFloat +
-              (HnswSearcher.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat)
+            (HnswParams.uniformFromHash(c.toLong * 997 + d, 77L) * 20.0 - 10.0).toFloat +
+              (HnswParams.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat)
         }
         val vecs = spark.range(n.toLong).as[Long]
           .map(id => (id, vecOf(id))).toDF("id", "vec")
@@ -285,15 +285,15 @@ object ScaleRehearsal {
       // reattach ≪ rebuild (attach is a parquet scan + CSR assembly; no
       // k-means, no graph construction) with search row-count parity.
       if (ops("routed_durable")) run("ann_routed_durable", n) {
-        import graft.hnsw.{HnswDistributed, HnswParams, HnswRouted, HnswSearcher}
+        import graft.hnsw.{HnswDistributed, HnswParams, HnswRouted}
         import spark.implicits._
         val dim = 64
         val nCells = 64
         def vecOf(id: Long): Array[Float] = {
           val c = (id % nCells).toInt
           Array.tabulate(dim)(d =>
-            (HnswSearcher.uniformFromHash(c.toLong * 997 + d, 77L) * 20.0 - 10.0).toFloat +
-              (HnswSearcher.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat)
+            (HnswParams.uniformFromHash(c.toLong * 997 + d, 77L) * 20.0 - 10.0).toFloat +
+              (HnswParams.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat)
         }
         val vecs = spark.range(n.toLong).as[Long]
           .map(id => (id, vecOf(id))).toDF("id", "vec")
@@ -329,19 +329,19 @@ object ScaleRehearsal {
       // the heavy cells instead of materializing them whole, the build
       // completes on the default heap, and routed recall holds a floor.
       if (ops("routed_skew")) run("ann_routed_skew", n) {
-        import graft.hnsw.{HnswDistributed, HnswParams, HnswRouted, HnswSearcher}
+        import graft.hnsw.{HnswDistributed, HnswParams, HnswRouted}
         import spark.implicits._
         val dim = 64
         val nCells = 16
         def clusterOf(id: Long): Int = {
-          val u = HnswSearcher.uniformFromHash(id, 41L)
+          val u = HnswParams.uniformFromHash(id, 41L)
           math.min(15, (-math.log(math.max(1e-12, 1.0 - u)) / math.log(2.0)).toInt)
         }
         def vecOf(id: Long): Array[Float] = {
           val c = clusterOf(id)
           Array.tabulate(dim)(d =>
-            (HnswSearcher.uniformFromHash(c.toLong * 997 + d, 77L) * 20.0 - 10.0).toFloat +
-              (HnswSearcher.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat)
+            (HnswParams.uniformFromHash(c.toLong * 997 + d, 77L) * 20.0 - 10.0).toFloat +
+              (HnswParams.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat)
         }
         val vecs = spark.range(n.toLong).as[Long]
           .map(id => (id, vecOf(id))).toDF("id", "vec")
@@ -370,7 +370,7 @@ object ScaleRehearsal {
       // the claim is build parallelizes across cells, probe cost tracks
       // nProbe/nCells, and self-match holds on a clustered corpus.
       if (ops("routed_hamming")) run("ann_routed_hamming", n) {
-        import graft.hnsw.{HnswParams, HnswRoutedCodes, HnswSearcher}
+        import graft.hnsw.{HnswParams, HnswRoutedCodes}
         import spark.implicits._
         // keep cells ~100k rows across decades (the healthy ladder):
         // 1e6/64, 1e7/256, 1e8/1024 — per-cell graphs materialize in
@@ -379,7 +379,7 @@ object ScaleRehearsal {
           if (n >= 100000000) 1024 else if (n >= 10000000) 256 else 64
         def anchorOf(c: Int): Long =
           java.lang.Double.doubleToRawLongBits(
-            HnswSearcher.uniformFromHash(c.toLong, 77L))
+            HnswParams.uniformFromHash(c.toLong, 77L))
         def codeOf(id: Long): Long = {
           // cluster member: anchor with 12 seeded bit flips. Flip
           // entropy matters for the SELF-MATCH stat: at 4 flips the
@@ -390,7 +390,7 @@ object ScaleRehearsal {
           var code = anchorOf((id % nCells).toInt)
           var k = 0
           while (k < 12) {
-            val bit = (HnswSearcher.uniformFromHash(id * 13 + k, 13L) * 64).toInt.min(63)
+            val bit = (HnswParams.uniformFromHash(id * 13 + k, 13L) * 64).toInt.min(63)
             code ^= (1L << bit)
             k += 1
           }
@@ -443,18 +443,18 @@ object ScaleRehearsal {
       // corpus never moves — narrow index-side dependency), search
       // parity across the round-trip.
       if (ops("routed_codes_durable")) run("ann_routed_codes_durable", n) {
-        import graft.hnsw.{HnswParams, HnswRoutedCodes, HnswSearcher}
+        import graft.hnsw.{HnswParams, HnswRoutedCodes}
         import spark.implicits._
         val nCells =
           if (n >= 100000000) 1024 else if (n >= 10000000) 256 else 64
         def anchorOf(c: Int): Long =
           java.lang.Double.doubleToRawLongBits(
-            HnswSearcher.uniformFromHash(c.toLong, 77L))
+            HnswParams.uniformFromHash(c.toLong, 77L))
         def codeOf(id: Long): Long = {
           var code = anchorOf((id % nCells).toInt)
           var k = 0
           while (k < 12) {
-            val bit = (HnswSearcher.uniformFromHash(id * 13 + k, 13L) * 64).toInt.min(63)
+            val bit = (HnswParams.uniformFromHash(id * 13 + k, 13L) * 64).toInt.min(63)
             code ^= (1L << bit)
             k += 1
           }
@@ -532,18 +532,18 @@ object ScaleRehearsal {
       // numbers; (4) deleted ids never surface (exclusion correctness
       // at scale).
       if (ops("routed_delete")) run("ann_routed_delete", n) {
-        import graft.hnsw.{HnswParams, HnswRoutedCodes, HnswSearcher}
+        import graft.hnsw.{HnswParams, HnswRoutedCodes}
         import spark.implicits._
         val nCells =
           if (n >= 100000000) 1024 else if (n >= 10000000) 256 else 64
         def anchorOf(c: Int): Long =
           java.lang.Double.doubleToRawLongBits(
-            HnswSearcher.uniformFromHash(c.toLong, 77L))
+            HnswParams.uniformFromHash(c.toLong, 77L))
         def codeOf(id: Long): Long = {
           var code = anchorOf((id % nCells).toInt)
           var k = 0
           while (k < 12) {
-            val bit = (HnswSearcher.uniformFromHash(id * 13 + k, 13L) * 64).toInt.min(63)
+            val bit = (HnswParams.uniformFromHash(id * 13 + k, 13L) * 64).toInt.min(63)
             code ^= (1L << bit)
             k += 1
           }
@@ -710,17 +710,17 @@ object ScaleRehearsal {
       // vectors instead of 8 B codes — the memory-heavy tier where the
       // compaction copy-through costs proportionally more).
       if (ops("routed_delete_float")) run("ann_routed_delete_float", n) {
-        import graft.hnsw.{HnswDistributed, HnswParams, HnswRouted, HnswSearcher}
+        import graft.hnsw.{HnswDistributed, HnswParams, HnswRouted}
         import spark.implicits._
         val dim = 64
         val nCells = if (n >= 10000000) 256 else 64
         def centerOf(c: Int): Array[Float] =
           Array.tabulate(dim)(d =>
-            (HnswSearcher.uniformFromHash(c.toLong * 997 + d, 77L) * 20.0 - 10.0).toFloat)
+            (HnswParams.uniformFromHash(c.toLong * 997 + d, 77L) * 20.0 - 10.0).toFloat)
         def vecOf(id: Long): Array[Float] = {
           val c = centerOf((id % nCells).toInt)
           Array.tabulate(dim)(d => c(d) +
-            (HnswSearcher.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat)
+            (HnswParams.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat)
         }
         val vecs = spark.range(n.toLong).as[Long]
           .map(id => (id, vecOf(id))).toDF("id", "vec")
@@ -788,17 +788,17 @@ object ScaleRehearsal {
       // above DriverRouteMax through the distributed path, whose only
       // query-side state is one shuffle of (cell, qid, vec) rows.
       if (ops("routed_distrib")) run("ann_routed_distrib", n) {
-        import graft.hnsw.{HnswDistributed, HnswParams, HnswRouted, HnswSearcher}
+        import graft.hnsw.{HnswDistributed, HnswParams, HnswRouted}
         import spark.implicits._
         val dim = 64
         val nCells = if (n >= 10000000) 256 else 64
         def centerOf(c: Int): Array[Float] =
           Array.tabulate(dim)(d =>
-            (HnswSearcher.uniformFromHash(c.toLong * 997 + d, 77L) * 20.0 - 10.0).toFloat)
+            (HnswParams.uniformFromHash(c.toLong * 997 + d, 77L) * 20.0 - 10.0).toFloat)
         def vecOf(id: Long): Array[Float] = {
           val c = centerOf((id % nCells).toInt)
           Array.tabulate(dim)(d => c(d) +
-            (HnswSearcher.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat)
+            (HnswParams.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat)
         }
         val vecs = spark.range(n.toLong).as[Long]
           .map(id => (id, vecOf(id))).toDF("id", "vec")
@@ -832,7 +832,7 @@ object ScaleRehearsal {
       // cell and the targeted compact must bring dead-side serving back
       // to ~plain (<= 1.2x is the round-15 done bar).
       if (ops("merged_remedy")) run("ann_merged_remedy", n) {
-        import graft.hnsw.{HnswDistributed, HnswParams, HnswRouted, HnswSearcher}
+        import graft.hnsw.{HnswDistributed, HnswParams, HnswRouted}
         import spark.implicits._
         val dim = 64
         val nCells = if (n >= 10000000) 64 else 16
@@ -840,13 +840,13 @@ object ScaleRehearsal {
         def subCenter(g: Int): Array[Float] = {
           val sup = g / 2
           Array.tabulate(dim)(d =>
-            (((HnswSearcher.uniformFromHash(sup.toLong * 997 + d, 77L) * 2 - 1) * 40.0) +
-             ((HnswSearcher.uniformFromHash(1000L + g.toLong * 31 + d, 99L) * 2 - 1) * 6.0)).toFloat)
+            (((HnswParams.uniformFromHash(sup.toLong * 997 + d, 77L) * 2 - 1) * 40.0) +
+             ((HnswParams.uniformFromHash(1000L + g.toLong * 31 + d, 99L) * 2 - 1) * 6.0)).toFloat)
         }
         def vecOf(id: Long): Array[Float] = {
           val c = subCenter((id % nSub).toInt)
           Array.tabulate(dim)(d => c(d) +
-            (HnswSearcher.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat)
+            (HnswParams.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat)
         }
         val vecs = spark.range(n.toLong).as[Long]
           .map(id => (id, vecOf(id))).toDF("id", "vec")
@@ -1033,7 +1033,7 @@ object ScaleRehearsal {
       // float/codes legs measured at 11.6x/7.0x. Done-bar: post-remedy
       // dead-side serving ≤ 1.2x plain.
       if (ops("merged_remedy_pq")) run("ann_merged_remedy_pq", n) {
-        import graft.hnsw.{HnswDistributed, HnswParams, HnswRoutedPq, HnswSearcher}
+        import graft.hnsw.{HnswDistributed, HnswParams, HnswRoutedPq}
         import spark.implicits._
         val dim = 64
         val nCells = if (n >= 10000000) 64 else 16
@@ -1041,13 +1041,13 @@ object ScaleRehearsal {
         def subCenter(g: Int): Array[Float] = {
           val sup = g / 2
           Array.tabulate(dim)(d =>
-            (((HnswSearcher.uniformFromHash(sup.toLong * 997 + d, 77L) * 2 - 1) * 40.0) +
-             ((HnswSearcher.uniformFromHash(1000L + g.toLong * 31 + d, 99L) * 2 - 1) * 6.0)).toFloat)
+            (((HnswParams.uniformFromHash(sup.toLong * 997 + d, 77L) * 2 - 1) * 40.0) +
+             ((HnswParams.uniformFromHash(1000L + g.toLong * 31 + d, 99L) * 2 - 1) * 6.0)).toFloat)
         }
         def vecOf(id: Long): Array[Float] = {
           val c = subCenter((id % nSub).toInt)
           Array.tabulate(dim)(d => c(d) +
-            (HnswSearcher.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat)
+            (HnswParams.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat)
         }
         val vecs = spark.range(n.toLong).as[Long]
           .map(id => (id, vecOf(id))).toDF("id", "vec")
@@ -1250,17 +1250,17 @@ object ScaleRehearsal {
       // solo lifecycle on the built handle: serve → save → attach →
       // delete → leak check → compactSolo → solo ingest.
       if (ops("pq_solo_build")) run("ann_pq_solo_build", n) {
-        import graft.hnsw.{HnswDistributed, HnswParams, HnswRoutedPq, HnswSearcher}
+        import graft.hnsw.{HnswDistributed, HnswParams, HnswRoutedPq}
         import spark.implicits._
         val dim = 64
         val nCells = if (n >= 10000000) 256 else 64
         def centerOf(c: Int): Array[Float] =
           Array.tabulate(dim)(d =>
-            (HnswSearcher.uniformFromHash(c.toLong * 997 + d, 77L) * 20.0 - 10.0).toFloat)
+            (HnswParams.uniformFromHash(c.toLong * 997 + d, 77L) * 20.0 - 10.0).toFloat)
         def vecOf(id: Long): Array[Float] = {
           val c = centerOf((id % nCells).toInt)
           Array.tabulate(dim)(d => c(d) +
-            (HnswSearcher.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat)
+            (HnswParams.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat)
         }
         // the 1e8 decade: vecs stay a LAZY generator DF (the checkpoint
         // would pin ~30 GB the host's disk budget needs for the index +
@@ -1410,7 +1410,7 @@ object ScaleRehearsal {
       // against the pre-save serve. Done-bar: attach ≪ build, probed
       // first serve ≤ 1.5x steady, parity exact.
       if (ops("pq_save_attach")) run("ann_pq_save_attach", n) {
-        import graft.hnsw.{HnswDistributed, HnswParams, HnswRoutedPq, HnswSearcher}
+        import graft.hnsw.{HnswDistributed, HnswParams, HnswRoutedPq}
         import spark.implicits._
         def tmpFreeGb: Double = {
           val store = java.nio.file.Files.getFileStore(
@@ -1421,11 +1421,11 @@ object ScaleRehearsal {
         val nCells = if (n >= 10000000) 256 else 64
         def centerOf(c: Int): Array[Float] =
           Array.tabulate(dim)(d =>
-            (HnswSearcher.uniformFromHash(c.toLong * 997 + d, 77L) * 20.0 - 10.0).toFloat)
+            (HnswParams.uniformFromHash(c.toLong * 997 + d, 77L) * 20.0 - 10.0).toFloat)
         def vecOf(id: Long): Array[Float] = {
           val c = centerOf((id % nCells).toInt)
           Array.tabulate(dim)(d => c(d) +
-            (HnswSearcher.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat)
+            (HnswParams.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat)
         }
         val decade8 = n >= 100000000
         val vecs0 = spark.range(n.toLong).as[Long]
@@ -1521,17 +1521,17 @@ object ScaleRehearsal {
       // and raw vectors appear only in the re-rank join against the
       // durable table.
       if (ops("routed_pq")) run("ann_routed_pq", n) {
-        import graft.hnsw.{HnswDistributed, HnswParams, HnswRouted, HnswRoutedPq, HnswSearcher}
+        import graft.hnsw.{HnswDistributed, HnswParams, HnswRouted, HnswRoutedPq}
         import spark.implicits._
         val dim = 64
         val nCells = if (n >= 10000000) 256 else 64
         def centerOf(c: Int): Array[Float] =
           Array.tabulate(dim)(d =>
-            (HnswSearcher.uniformFromHash(c.toLong * 997 + d, 77L) * 20.0 - 10.0).toFloat)
+            (HnswParams.uniformFromHash(c.toLong * 997 + d, 77L) * 20.0 - 10.0).toFloat)
         def vecOf(id: Long): Array[Float] = {
           val c = centerOf((id % nCells).toInt)
           Array.tabulate(dim)(d => c(d) +
-            (HnswSearcher.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat)
+            (HnswParams.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat)
         }
         val vecs = spark.range(n.toLong).as[Long]
           .map(id => (id, vecOf(id))).toDF("id", "vec")
@@ -1726,12 +1726,12 @@ object ScaleRehearsal {
       // is it paying 5x for nothing (the round-12 verdict's concern —
       // the constant was calibrated at exactly one point, 156k rows).
       if (ops("autoef")) run("autoef_sweep", n) {
-        import graft.hnsw.{HnswDistributed, HnswParams, HnswRouted, HnswSearcher}
+        import graft.hnsw.{HnswDistributed, HnswParams, HnswRouted}
         import spark.implicits._
         val dim = 64
         def vecOf(id: Long): Array[Float] = Array.tabulate(dim)(d =>
-          (HnswSearcher.uniformFromHash(0L * 997 + d, 77L) * 20.0 - 10.0).toFloat +
-            0.1f * (HnswSearcher.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat)
+          (HnswParams.uniformFromHash(0L * 997 + d, 77L) * 20.0 - 10.0).toFloat +
+            0.1f * (HnswParams.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat)
         val vecs = spark.range(n.toLong).as[Long]
           .map(id => (id, vecOf(id))).toDF("id", "vec")
           .localCheckpoint(true)
@@ -1770,15 +1770,15 @@ object ScaleRehearsal {
       // recovery (attach + replay) ≪ rebuilding the full corpus, with
       // occupancy parity against the uninterrupted fold.
       if (ops("routed_restart")) run("ann_routed_restart", n) {
-        import graft.hnsw.{HnswDistributed, HnswParams, HnswRouted, HnswSearcher}
+        import graft.hnsw.{HnswDistributed, HnswParams, HnswRouted}
         import spark.implicits._
         val dim = 64
         val nCells = 64
         def vecOf(id: Long): Array[Float] = {
           val c = (id % nCells).toInt
           Array.tabulate(dim)(d =>
-            (HnswSearcher.uniformFromHash(c.toLong * 997 + d, 77L) * 20.0 - 10.0).toFloat +
-              (HnswSearcher.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat)
+            (HnswParams.uniformFromHash(c.toLong * 997 + d, 77L) * 20.0 - 10.0).toFloat +
+              (HnswParams.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat)
         }
         def slice(a: Long, b: Long) = spark.range(a, b).as[Long]
           .map(id => (id, vecOf(id))).toDF("id", "vec").localCheckpoint(true)
@@ -1837,18 +1837,18 @@ object ScaleRehearsal {
       // n=1e7); the rung REPORTS max on-disk bytes so a too-large heap
       // (no eviction => no storm) is visible in the line, not silent.
       if (ops("evictstorm")) run("ann_evict_storm", n) {
-        import graft.hnsw.{HnswParams, HnswRoutedCodes, HnswSearcher}
+        import graft.hnsw.{HnswParams, HnswRoutedCodes}
         import spark.implicits._
         val nCells =
           if (n >= 100000000) 1024 else if (n >= 10000000) 256 else 64
         def anchorOf(c: Int): Long =
           java.lang.Double.doubleToRawLongBits(
-            HnswSearcher.uniformFromHash(c.toLong, 77L))
+            HnswParams.uniformFromHash(c.toLong, 77L))
         def codeOf(id: Long): Long = {
           var code = anchorOf((id % nCells).toInt)
           var k = 0
           while (k < 12) {
-            val bit = (HnswSearcher.uniformFromHash(id * 13 + k, 13L) * 64).toInt.min(63)
+            val bit = (HnswParams.uniformFromHash(id * 13 + k, 13L) * 64).toInt.min(63)
             code ^= (1L << bit)
             k += 1
           }

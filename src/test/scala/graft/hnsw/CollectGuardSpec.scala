@@ -27,7 +27,11 @@ class CollectGuardSpec extends AnyFunSuite {
     "graft/hnsw/GraphFrames.scala" -> 2,
     "graft/hnsw/HnswCodes.scala" -> 2,
     "graft/hnsw/HnswDistributed.scala" -> 6,
-    "graft/hnsw/HnswDurable.scala" -> 3,
+    // one-builder re-pin (a site folded, none added): the durable
+    // phase 1a's upper-vector collect (upper-layer ids, ~n/M rows) is the
+    // frontier descent's one in HnswFrontier.upperForm (3 -> 2; the
+    // frontier's 1 is that shared site)
+    "graft/hnsw/HnswDurable.scala" -> 2,
     "graft/hnsw/HnswFrontier.scala" -> 1,
     // round-17 re-pin: +warmProbe's representative collect on each
     // tier (ONE member per cell — nCells rows by construction); then

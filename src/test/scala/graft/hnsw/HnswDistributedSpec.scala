@@ -166,7 +166,7 @@ class HnswDistributedSpec extends SparkSpec {
     val n = 400
     val rows = Array.tabulate(n) { i =>
       (i.toLong, java.lang.Double.doubleToRawLongBits(
-        HnswSearcher.uniformFromHash(i.toLong, 23L)))
+        HnswParams.uniformFromHash(i.toLong, 23L)))
     }
     val codesDf = spark.createDataset(rows.toSeq).toDF("id", "code")
     val p = HnswParams.standard(64, 128, 16)
@@ -220,7 +220,7 @@ class HnswDistributedSpec extends SparkSpec {
     val dim = 16
     def vecFromHash(i: Long, seed: Long): Array[Float] =
       Array.tabulate(dim)(d =>
-        (HnswSearcher.uniformFromHash(i * dim + d, seed) * 2.0 - 1.0).toFloat)
+        (HnswParams.uniformFromHash(i * dim + d, seed) * 2.0 - 1.0).toFloat)
     val n = 20000
     val base = (0 until n).map(i => (i.toLong, vecFromHash(i.toLong, 7L)))
     val baseDf = spark.createDataset(base).toDF("id", "vec")

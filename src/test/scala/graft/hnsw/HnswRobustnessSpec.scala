@@ -15,7 +15,7 @@ class HnswRobustnessSpec extends SparkSpec {
   private def mkRows(n: Int): Array[(Long, Array[Float])] =
     Array.tabulate(n) { i =>
       (i.toLong, Array.tabulate(dim)(d =>
-        (HnswSearcher.uniformFromHash(i.toLong * 31 + d, 5L) * 2.0 - 1.0).toFloat))
+        (HnswParams.uniformFromHash(i.toLong * 31 + d, 5L) * 2.0 - 1.0).toFloat))
     }
 
   test("frontier search with k > ef returns the true ranking, not last-round rejects") {

@@ -10,7 +10,7 @@ class HnswRoutedCodesSpec extends SparkSpec {
   import spark.implicits._
 
   private def codeOf(i: Long, seed: Long): Long =
-    java.lang.Double.doubleToRawLongBits(HnswSearcher.uniformFromHash(i, seed))
+    java.lang.Double.doubleToRawLongBits(HnswParams.uniformFromHash(i, seed))
 
   private val params = HnswParams.standard(64, 128, 16)
 
@@ -59,7 +59,7 @@ class HnswRoutedCodesSpec extends SparkSpec {
       var c = anchors(a)
       var k = 0
       while (k < 3) {
-        val bit = (HnswSearcher.uniformFromHash(i * 7 + k, 13L) * 64).toInt.min(63)
+        val bit = (HnswParams.uniformFromHash(i * 7 + k, 13L) * 64).toInt.min(63)
         c ^= (1L << bit)
         k += 1
       }
@@ -166,7 +166,7 @@ class HnswRoutedCodesSpec extends SparkSpec {
       var c = anchors(a)
       var k = 0
       while (k < 12) {
-        val bit = (HnswSearcher.uniformFromHash(i * 17 + k, 13L) * 64).toInt.min(63)
+        val bit = (HnswParams.uniformFromHash(i * 17 + k, 13L) * 64).toInt.min(63)
         c ^= (1L << bit)
         k += 1
       }

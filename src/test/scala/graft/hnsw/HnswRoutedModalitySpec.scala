@@ -14,7 +14,7 @@ class HnswRoutedModalitySpec extends SparkSpec {
 
   private def vecFromHash(i: Long, seed: Long, dim: Int): Array[Float] =
     Array.tabulate(dim)(d =>
-      (HnswSearcher.uniformFromHash(i * dim + d, seed) * 2.0 - 1.0).toFloat)
+      (HnswParams.uniformFromHash(i * dim + d, seed) * 2.0 - 1.0).toFloat)
 
   private val dim = 16
   private val cfg = BuildConfig(
@@ -28,10 +28,10 @@ class HnswRoutedModalitySpec extends SparkSpec {
     val g = (id % nSub).toInt
     val sup = g / 2
     Array.tabulate(dim) { d =>
-      val supC = (HnswSearcher.uniformFromHash(sup.toLong * 997 + d, 77L) * 2 - 1) * 40.0
-      val subC = (HnswSearcher.uniformFromHash(1000L + g.toLong * 31 + d, 99L) * 2 - 1) * 6.0
+      val supC = (HnswParams.uniformFromHash(sup.toLong * 997 + d, 77L) * 2 - 1) * 40.0
+      val subC = (HnswParams.uniformFromHash(1000L + g.toLong * 31 + d, 99L) * 2 - 1) * 6.0
       (supC + subC).toFloat +
-        (HnswSearcher.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat
+        (HnswParams.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat
     }
   }
 
@@ -108,8 +108,8 @@ class HnswRoutedModalitySpec extends SparkSpec {
     def vecOf(id: Long): Array[Float] = {
       val c = (id % nClusters).toInt
       Array.tabulate(dim)(d =>
-        ((HnswSearcher.uniformFromHash(c.toLong * 997 + d, 77L) * 20.0 - 10.0) +
-          (HnswSearcher.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0)).toFloat)
+        ((HnswParams.uniformFromHash(c.toLong * 997 + d, 77L) * 20.0 - 10.0) +
+          (HnswParams.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0)).toFloat)
     }
     val baseDf = (0 until n).map(i => (i.toLong, vecOf(i.toLong))).toDF("id", "vec")
     val plain = HnswRouted.build(baseDf, cfg, nCells = nClusters,

@@ -16,13 +16,13 @@ class ModalCensusSpec extends AnyFunSuite {
   private def subCenter(g: Int): Array[Float] = {
     val sup = g / 2
     Array.tabulate(dim)(d =>
-      (((HnswSearcher.uniformFromHash(sup.toLong * 997 + d, 77L) * 2 - 1) * 40.0) +
-       ((HnswSearcher.uniformFromHash(1000L + g.toLong * 31 + d, 99L) * 2 - 1) * 6.0)).toFloat)
+      (((HnswParams.uniformFromHash(sup.toLong * 997 + d, 77L) * 2 - 1) * 40.0) +
+       ((HnswParams.uniformFromHash(1000L + g.toLong * 31 + d, 99L) * 2 - 1) * 6.0)).toFloat)
   }
   private def vecOf(id: Long, nSub: Int): Array[Float] = {
     val c = subCenter((id % nSub).toInt)
     Array.tabulate(dim)(d => c(d) +
-      (HnswSearcher.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat)
+      (HnswParams.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat)
   }
 
   test("every planted two-mode sample reads exactly 2 groups (share AFTER merge)") {
@@ -47,8 +47,8 @@ class ModalCensusSpec extends AnyFunSuite {
     val metric = Metrics.byName("l2")
     def blobVec(id: Long, c: Int): Array[Float] =
       Array.tabulate(16)(d =>
-        ((HnswSearcher.uniformFromHash(c.toLong * 997 + d, 77L) * 20.0 - 10.0) +
-          (HnswSearcher.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0)).toFloat)
+        ((HnswParams.uniformFromHash(c.toLong * 997 + d, 77L) * 20.0 - 10.0) +
+          (HnswParams.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0)).toFloat)
     for (c <- 0 until 4) {
       val rows = (0 until 750).map(i => blobVec(c + 4L * i, c)).toArray
       val groups = HnswRouted.modalCensus(rows, metric, "l2")

@@ -35,7 +35,7 @@ class OrdinalBuildSpec extends SparkSpec {
     seedBatch = 8, maxBatch = 16, growthDenom = 2, batchCeiling = 4096)
 
   private def vecFromHash(i: Long, dim: Int = 8): Array[Float] =
-    Array.tabulate(dim)(j => (HnswSearcher.uniformFromHash(i * 31 + j, 4L) * 2.0 - 1.0).toFloat)
+    Array.tabulate(dim)(j => (HnswParams.uniformFromHash(i * 31 + j, 4L) * 2.0 - 1.0).toFloat)
 
   /** Distinct ids out of id order, 52 of them copies of earlier vectors
     * (40 under larger ids, 12 under smaller ones), one vector three floats

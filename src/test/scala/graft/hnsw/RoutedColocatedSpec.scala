@@ -20,10 +20,10 @@ class RoutedColocatedSpec extends SparkSpec {
 
   private def vecFromHash(i: Long, seed: Long, dim: Int): Array[Float] =
     Array.tabulate(dim)(d =>
-      (HnswSearcher.uniformFromHash(i * dim + d, seed) * 2.0 - 1.0).toFloat)
+      (HnswParams.uniformFromHash(i * dim + d, seed) * 2.0 - 1.0).toFloat)
 
   private def codeOf(i: Long, seed: Long): Long =
-    java.lang.Double.doubleToRawLongBits(HnswSearcher.uniformFromHash(i, seed))
+    java.lang.Double.doubleToRawLongBits(HnswParams.uniformFromHash(i, seed))
 
   private def rows(df: DataFrame, distCol: String): Seq[(Long, Long, Double, Int)] =
     df.select(col("qid"), col("id"), col(distCol).cast("double"), col("rank"))

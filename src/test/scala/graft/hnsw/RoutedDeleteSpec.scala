@@ -12,7 +12,7 @@ class RoutedDeleteSpec extends SparkSpec {
 
   private def vecFromHash(i: Long, seed: Long, dim: Int): Array[Float] =
     Array.tabulate(dim)(d =>
-      (HnswSearcher.uniformFromHash(i * dim + d, seed) * 2.0 - 1.0).toFloat)
+      (HnswParams.uniformFromHash(i * dim + d, seed) * 2.0 - 1.0).toFloat)
 
   private val cfg = BuildConfig(HnswParams.standard(64, 32, 16), metric = "l2", seed = 42L)
   private val first = (0L until 400L by 2)
@@ -31,7 +31,7 @@ class RoutedDeleteSpec extends SparkSpec {
     assert(served(HnswRouted.search(float, qs, 10, nProbe = 4)).forall(_ >= 400L))
 
     val codes = (0 until 800).map(i =>
-      (i.toLong, java.lang.Double.doubleToRawLongBits(HnswSearcher.uniformFromHash(i, 23L))))
+      (i.toLong, java.lang.Double.doubleToRawLongBits(HnswParams.uniformFromHash(i, 23L))))
     val cq = codes.filter(_._1 % 40 == 0).toDF("qid", "qcode")
     val ci = HnswRoutedCodes.delete(HnswRoutedCodes.delete(
       HnswRoutedCodes.build(codes.toDF("id", "code"), HnswParams.standard(64, 32, 16),

@@ -15,10 +15,10 @@ class RoutedImageSpec extends SparkSpec {
 
   private def vecFromHash(i: Long, seed: Long, dim: Int): Array[Float] =
     Array.tabulate(dim)(d =>
-      (HnswSearcher.uniformFromHash(i * dim + d, seed) * 2.0 - 1.0).toFloat)
+      (HnswParams.uniformFromHash(i * dim + d, seed) * 2.0 - 1.0).toFloat)
 
   private def codeOf(i: Long, seed: Long): Long =
-    java.lang.Double.doubleToRawLongBits(HnswSearcher.uniformFromHash(i, seed))
+    java.lang.Double.doubleToRawLongBits(HnswParams.uniformFromHash(i, seed))
 
   private val cfg = BuildConfig(
     HnswParams.standard(64, 128, 16), metric = "l2", seed = 42L)

@@ -47,10 +47,10 @@ class RoutedPruningSpec extends SparkSpec with BeforeAndAfterAll {
 
   private def vecFromHash(i: Long, seed: Long, dim: Int): Array[Float] =
     Array.tabulate(dim)(d =>
-      (HnswSearcher.uniformFromHash(i * dim + d, seed) * 2.0 - 1.0).toFloat)
+      (HnswParams.uniformFromHash(i * dim + d, seed) * 2.0 - 1.0).toFloat)
 
   private def codeOf(i: Long): Long =
-    java.lang.Double.doubleToRawLongBits(HnswSearcher.uniformFromHash(i, 23L))
+    java.lang.Double.doubleToRawLongBits(HnswParams.uniformFromHash(i, 23L))
 
   private val nCells = 16
   private val cfg = BuildConfig(HnswParams.standard(64, 32, 16), metric = "l2", seed = 42L)

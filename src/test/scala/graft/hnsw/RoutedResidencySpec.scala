@@ -45,7 +45,7 @@ class RoutedResidencySpec extends SparkSpec {
 
   private def vecFromHash(i: Long, seed: Long, dim: Int): Array[Float] =
     Array.tabulate(dim)(d =>
-      (HnswSearcher.uniformFromHash(i * dim + d, seed) * 2.0 - 1.0).toFloat)
+      (HnswParams.uniformFromHash(i * dim + d, seed) * 2.0 - 1.0).toFloat)
   private def clusterVec(i: Long): Array[Float] = {
     val c = (i / 800).toInt
     val superCenter = vecFromHash((c / 2).toLong, 77L, 12).map(_ * 40f)

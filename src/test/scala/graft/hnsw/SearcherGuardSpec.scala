@@ -2,26 +2,34 @@ package graft.hnsw
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source-scan tripwires for the id-keyed engine, in
-  * [[CollectGuardSpec]]'s idiom. Every build and serve site runs the
-  * ordinal engine ([[OrdinalGraph]]) over an [[graft.store.OrdinalStore]];
-  * [[HnswSearcher]] is the reference the specs compare against. One walk
-  * still constructs one: `HnswDurable`'s phase 1a, a float walk with an
-  * ef schedule of its own that stages each row under its own new id. A
-  * new `new HnswSearcher(` in src/main outside `tools/` changes the count
-  * and fails here, so a serve path cannot quietly bring back the engine
-  * that stages each query under a reserved id. A layer draw needs no
+/** Source-scan tripwires for the one engine, in [[CollectGuardSpec]]'s
+  * idiom, over the code of every src/main file (comments and Scaladoc
+  * are not counted). Every build and serve site runs the ordinal engine
+  * ([[OrdinalGraph]]) over an [[graft.store.OrdinalStore]]; the id-keyed
+  * engine ([[HnswSearcher]] over an [[graft.store.ArrayVectorStore]]) is
+  * the reference the specs compare against, and src/main constructs
+  * neither. A new `new HnswSearcher(` or `new ArrayVectorStore(` fails
+  * here, so no path can quietly bring back the engine that stages each
+  * query under an id a stored point may hold. A layer draw needs no
   * engine: [[HnswParams.selectLayerByHash]].
   *
   * Every holder ships its graph in the form it was grown in
-  * ([[OrdinalForm]]); the second scan keeps the id-keyed form (a
+  * ([[OrdinalForm]]); the id-keyed scan keeps the id-keyed form (a
   * `GraphSnapshot` plus an id-keyed vector or code map) from coming back
-  * as a holder's field, or the per-JVM conversion it needed. */
+  * as a holder's field, or the per-JVM conversion it needed.
+  *
+  * A layout chosen from the planner's size estimate is pinned to its one
+  * site, `PrefixSum`'s partition count: a new switch on
+  * `optimizedPlan.stats` has to be argued into the pin. */
 class SearcherGuardSpec extends AnyFunSuite {
 
   private val root = new java.io.File("src/main/scala")
 
-  /** (path under src/main/scala, source) of every main file outside `tools/`. */
+  /** `src` without its block comments (Scaladoc included) and line comments. */
+  private def code(src: String): String =
+    src.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+
+  /** (path under src/main/scala, code) of every main file. */
   private def sources(): Seq[(String, String)] = {
     assume(root.isDirectory, "source tree not visible from the test cwd")
     def files(dir: java.io.File): Seq[java.io.File] =
@@ -30,22 +38,35 @@ class SearcherGuardSpec extends AnyFunSuite {
       }
     files(root).map { f =>
       val s = scala.io.Source.fromFile(f, "UTF-8")
-      try root.toPath.relativize(f.toPath).toString.replace('\\', '/') -> s.mkString
+      try root.toPath.relativize(f.toPath).toString.replace('\\', '/') -> code(s.mkString)
       finally s.close()
-    }.filterNot(_._1.startsWith("graft/tools/"))
+    }
   }
 
-  private val expected = Map("graft/hnsw/HnswDurable.scala" -> 1)
-
-  test("src/main constructs HnswSearcher only in the one pinned walk") {
-    val pattern = "new HnswSearcher("
-    val actual = sources().map { case (path, src) =>
+  /** path -> occurrences of `pattern`, for the files that have any. */
+  private def sites(pattern: String): Map[String, Int] =
+    sources().map { case (path, src) =>
       path -> src.sliding(pattern.length).count(_ == pattern)
     }.filter(_._2 > 0).toMap
-    assert(actual == expected,
-      s"`$pattern` sites drifted: $actual (pinned: $expected). Build and serve " +
-        "through OrdinalGraph; draw layers with HnswParams.selectLayerByHash.")
-    assert(actual.values.sum == 1)
+
+  test("src/main constructs no HnswSearcher") {
+    val actual = sites("new HnswSearcher(")
+    assert(actual.isEmpty, s"`new HnswSearcher(` sites: $actual. Build and serve " +
+      "through OrdinalGraph; draw layers with HnswParams.selectLayerByHash.")
+  }
+
+  test("src/main constructs no ArrayVectorStore") {
+    val actual = sites("new ArrayVectorStore(")
+    assert(actual.isEmpty, s"`new ArrayVectorStore(` sites: $actual. Serve an " +
+      "ArenaVectorStore through an OrdinalGraph view.")
+  }
+
+  test("only PrefixSum reads the planner's size estimate") {
+    val pattern = "optimizedPlan.stats"
+    val expected = Map("graft/operators/PrefixSum.scala" -> 1)
+    val actual = sites(pattern)
+    assert(actual == expected, s"`$pattern` sites drifted: $actual (pinned: $expected). " +
+      "Take the layout from the plan's shape or an explicit parameter.")
   }
 
   test("no case class in src/main holds an id-keyed graph, and no per-JVM conversion is back") {

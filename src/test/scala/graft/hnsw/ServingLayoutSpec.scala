@@ -21,7 +21,7 @@ class ServingLayoutSpec extends SparkSpec {
 
   private def vecFromHash(i: Long, seed: Long, d: Int = dim): Array[Float] =
     Array.tabulate(d)(j =>
-      (HnswSearcher.uniformFromHash(i * 31 + j, seed) * 2.0 - 1.0).toFloat)
+      (HnswParams.uniformFromHash(i * 31 + j, seed) * 2.0 - 1.0).toFloat)
 
   /** 600 rows under ids 7i - 2000 plus id -1: every 9th row copies an
     * earlier row's vector, rows 5, 50 and 500 are zero vectors, rows 7

@@ -30,7 +30,7 @@ class StoredIdSpec extends SparkSpec {
   }
 
   private def vecFromHash(i: Long, seed: Long): Array[Float] =
-    Array.tabulate(16)(j => (HnswSearcher.uniformFromHash(i * 31 + j, seed) * 2.0 - 1.0).toFloat)
+    Array.tabulate(16)(j => (HnswParams.uniformFromHash(i * 31 + j, seed) * 2.0 - 1.0).toFloat)
 
   private val ids: Seq[Long] = (0 until 600).map(i => 3L * i + 5L) ++ special
   private val params = HnswParams.standard(efConstruction = 32, efSearch = 16, m = 6)

@@ -56,7 +56,7 @@ class RandomProjectionSpec extends SparkSpec {
     // where distances genuinely differ (near-dup at ~0.1x the background
     // distance), the projection preserves the gap and recall@1 is ~1 —
     // this is the claim JL actually makes
-    import graft.hnsw.HnswSearcher.uniformFromHash
+    import graft.hnsw.HnswParams.uniformFromHash
     val dim = 64
     def vecOf(id: Long, eps: Float): Array[Float] = {
       val base = (id / 2) * 2 // ids 2i and 2i+1 share a base point

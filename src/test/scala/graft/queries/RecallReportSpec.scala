@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
-import graft.hnsw.HnswSearcher
+import graft.hnsw.HnswParams
 
 /** The recall rows count their queries from the exact side of the
   * report (`countDistinct(qid)` over the truth table), not from the query
@@ -14,7 +14,7 @@ class RecallReportSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-recall-report").toString
     // 64 dims: the PQ, IVF-PQ and random-projection rows fix that width
     (0L until 500L).map { i =>
-      (i, Array.tabulate(64)(j => (HnswSearcher.uniformFromHash(i * 67 + j, 8L) * 2.0 - 1.0).toFloat))
+      (i, Array.tabulate(64)(j => (HnswParams.uniformFromHash(i * 67 + j, 8L) * 2.0 - 1.0).toFloat))
     }.toDF("vec_id", "embedding").write.parquet(s"$dir/embeddings.parquet")
     val qs = Tables(spark, dir, "embeddings").filter($"vec_id" % 25 === 0).count()
     assert(qs == 20)

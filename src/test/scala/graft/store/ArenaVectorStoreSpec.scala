@@ -14,7 +14,7 @@ class ArenaVectorStoreSpec extends AnyFunSuite {
 
   private def vecFromHash(i: Long, seed: Long, d: Int): Array[Float] =
     Array.tabulate(d)(j =>
-      (HnswSearcher.uniformFromHash(i * 31 + j, seed) * 2.0 - 1.0).toFloat)
+      (HnswParams.uniformFromHash(i * 31 + j, seed) * 2.0 - 1.0).toFloat)
 
   private val dim = 10
   private val metrics = Seq("cosine", "l2", "dot")

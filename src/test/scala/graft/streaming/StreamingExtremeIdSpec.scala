@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 
 import graft.SparkSpec
-import graft.hnsw.{HnswDistributed, HnswParams, HnswSearcher}
+import graft.hnsw.{HnswDistributed, HnswParams}
 import graft.hnsw.HnswDistributed.BuildConfig
 import graft.store.{Metrics, ParquetGraphStore}
 import graft.streaming.StreamingIngest.IncrementalIndex
@@ -21,7 +21,7 @@ class StreamingExtremeIdSpec extends SparkSpec {
   private val extremes = Seq(-1L, Long.MinValue, Long.MaxValue)
 
   private def vecFromHash(i: Long, seed: Long): Array[Float] =
-    Array.tabulate(8)(j => (HnswSearcher.uniformFromHash(i * 31 + j, seed) * 2.0 - 1.0).toFloat)
+    Array.tabulate(8)(j => (HnswParams.uniformFromHash(i * 31 + j, seed) * 2.0 - 1.0).toFloat)
 
   private val ordinary = (0L until 60L).map(i => (i, vecFromHash(i, 5L))).toArray
   private val special = extremes.zipWithIndex.map { case (id, i) => (id, vecFromHash(1000L + i, 6L)) }

@@ -22,7 +22,7 @@ class StreamingImageSpec extends SparkSpec {
 
   private def vecFromHash(i: Long, seed: Long): Array[Float] =
     Array.tabulate(12)(j =>
-      (HnswSearcher.uniformFromHash(i * 31 + j, seed) * 2.0 - 1.0).toFloat)
+      (HnswParams.uniformFromHash(i * 31 + j, seed) * 2.0 - 1.0).toFloat)
 
   private def rowsOf(ids: Seq[Long]): Array[(Long, Array[Float])] =
     ids.map(i => (i, vecFromHash(i, 3L))).toArray

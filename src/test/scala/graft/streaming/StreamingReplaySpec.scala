@@ -21,7 +21,7 @@ class StreamingReplaySpec extends SparkSpec {
     HnswParams.standard(efConstruction = 24, efSearch = 16, m = 4), metric = "cosine", seed = 21L)
 
   private def vecFromHash(i: Long): Array[Float] =
-    Array.tabulate(8)(j => (HnswSearcher.uniformFromHash(i * 31 + j, 4L) * 2.0 - 1.0).toFloat)
+    Array.tabulate(8)(j => (HnswParams.uniformFromHash(i * 31 + j, 4L) * 2.0 - 1.0).toFloat)
 
   private def rowsOf(ids: Seq[Long]): Array[(Long, Array[Float])] =
     ids.map(i => (i, vecFromHash(i))).toArray

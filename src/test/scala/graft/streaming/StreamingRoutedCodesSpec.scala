@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.hnsw.{HnswParams, HnswRoutedCodes, HnswSearcher}
+import graft.hnsw.{HnswParams, HnswRoutedCodes}
 import graft.operators.ExactKnn
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -15,7 +15,7 @@ class StreamingRoutedCodesSpec extends SparkSpec {
   import spark.implicits._
 
   private def codeOf(i: Long, seed: Long): Long =
-    java.lang.Double.doubleToRawLongBits(HnswSearcher.uniformFromHash(i, seed))
+    java.lang.Double.doubleToRawLongBits(HnswParams.uniformFromHash(i, seed))
 
   private val params = HnswParams.standard(64, 128, 16)
 

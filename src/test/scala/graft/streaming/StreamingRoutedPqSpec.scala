@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.hnsw.{HnswDistributed, HnswParams, HnswRouted, HnswRoutedPq, HnswSearcher}
+import graft.hnsw.{HnswDistributed, HnswParams, HnswRouted, HnswRoutedPq}
 import graft.hnsw.HnswDistributed.BuildConfig
 import graft.operators.ExactKnn
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -18,7 +18,7 @@ class StreamingRoutedPqSpec extends SparkSpec {
 
   private def vecFromHash(i: Long, seed: Long, dim: Int): Array[Float] =
     Array.tabulate(dim)(d =>
-      (HnswSearcher.uniformFromHash(i * dim + d, seed) * 2.0 - 1.0).toFloat)
+      (HnswParams.uniformFromHash(i * dim + d, seed) * 2.0 - 1.0).toFloat)
 
   private val cfg = BuildConfig(
     HnswParams.standard(64, 128, 16), metric = "l2", seed = 42L)
