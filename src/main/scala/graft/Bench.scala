@@ -115,13 +115,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkEntry.applyConfigs(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession("4")
+    val cpus = spark.sparkContext.master.stripPrefix("local[").stripSuffix("]")
     // Untimed warm-up: session/codegen/broadcast machinery init, one
     // touch per table — otherwise the first timed query absorbs ~3-5 s
     // of one-time cost and round-over-round numbers aren't comparable.

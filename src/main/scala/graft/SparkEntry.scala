@@ -37,6 +37,20 @@ object SparkEntry {
   def applyConfigs(b: SparkSession.Builder): SparkSession.Builder =
     sessionConfigs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
 
+  /** The mains' local session: `local[SPARK_GRAFT_CPUS]` (else
+    * `defaultCpus`) with as many shuffle partitions, no UI, the
+    * [[sessionConfigs]] and WARN logging. */
+  def localSession(defaultCpus: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
+    val spark = applyConfigs(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0:
     * exact cosine kNN over the embeddings table (the reference's core
     * capability, LinearDb brute-force path). */

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Standalone grid-cell probe (not part of the library surface): runs
   * ONLY the Bench vector-grid build cells at the given sizes, printing
@@ -14,11 +13,7 @@ object GridProbe {
                 else Seq(100000)
     val variants = if (args.length > 1) args(1).split(",").toSet
                    else Set("float", "hamming")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.SparkEntry.applyConfigs(SparkSession.builder()
-      .master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession("32")
     println(s"heap_max_mb=${Runtime.getRuntime.maxMemory / 1e6}")
 
     def gcMs(): Long = {

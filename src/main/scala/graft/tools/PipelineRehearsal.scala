@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,17 +20,11 @@ import org.apache.spark.sql.functions._
 object PipelineRehearsal {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.SparkEntry.applyConfigs(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession("32")
     val collector = graft.trace.Collector.install(spark.sparkContext)
 
     for (n <- Seq(1000, 10000, 100000)) {
-      val docs = ScaleRehearsal.mkDocs(spark, n)
+      val docs = ScaleRehearsal.Corpus.mkDocs(spark, n)
         // the capstone's injection needs a source column
         .withColumn("source", concat(lit("src"), (col("doc_id") % 20).cast("string")))
         .localCheckpoint(true)

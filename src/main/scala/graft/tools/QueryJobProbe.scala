@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Per-query orchestration attribution: run each named query twice
   * (second = warm) and report, for the warm run's span, the wall time,
@@ -14,11 +13,7 @@ object QueryJobProbe {
     val names =
       if (args.length > 1) args.drop(1).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.SparkEntry.applyConfigs(SparkSession.builder()
-      .master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession("32")
     val collector = graft.trace.Collector.install(spark.sparkContext)
 
     spark.read.parquet(s"$sfDir/documents.parquet")

@@ -1,16 +1,11 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 object TimeProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names =
       if (args.length > 1) args.drop(1).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.SparkEntry.applyConfigs(SparkSession.builder()
-      .master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession("32")
     spark.read.parquet(s"$sfDir/documents.parquet").write.format("noop").mode("overwrite").save()
     names.foreach { n =>
       (1 to 2).foreach { i =>

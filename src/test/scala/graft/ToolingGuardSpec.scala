@@ -31,6 +31,21 @@ class ToolingGuardSpec extends AnyFunSuite {
       s"SparkListener subclasses in $sites: charge phases through graft.trace.Span instead")
   }
 
+  test("src/main reads env vars only in Bench and the mains' session helper") {
+    // code only (comments and Scaladoc stripped), in SearcherGuardSpec's idiom
+    def code(src: String): String =
+      src.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+    val read = """(sys\.env|System\.getenv)[^\n]*""".r
+    val key = "\"([A-Za-z0-9_.]+)\"".r
+    val actual = sources().flatMap { case (p, s) =>
+      read.findAllIn(code(s)).map(r => p -> key.findFirstMatchIn(r).fold("?")(_.group(1)))
+    }.sorted
+    val expected = Seq("graft/Bench.scala" -> "SPARK_GRAFT_SF_DIR",
+      "graft/SparkEntry.scala" -> "SPARK_GRAFT_CPUS")
+    assert(actual == expected, s"env reads drifted: $actual (pinned: $expected). A knob " +
+      "is an option of the API, a config field or a rung of the rehearsal table.")
+  }
+
   test("graft/tools holds exactly the six kept mains") {
     assume(root.isDirectory, "source tree not visible from the test cwd")
     val tools = Option(new java.io.File(root, "graft/tools").list()).getOrElse(Array.empty).toSeq.sorted

@@ -1,5 +1,7 @@
 package graft.hnsw
 
+import graft.HashData
+import graft.tools.ScaleRehearsal.Corpus
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -194,9 +196,7 @@ class HnswDistributedSpec extends SparkSpec {
     // allowing a small HNSW miss rate at serving ef
     import spark.implicits._
     val n = 20000
-    val rows = Array.tabulate(n) { i =>
-      (i.toLong, i.toLong * -7046029254386353131L + 6364136223846793005L)
-    }
+    val rows = Array.tabulate(n)(i => (i.toLong, Corpus.splitmixCode(i.toLong)))
     val codesDf = spark.createDataset(rows.toSeq).toDF("id", "code")
     val model = HnswCodes.buildBatched(
       codesDf, HnswParams.standard(64, 32, 32), seed = 23L)
@@ -218,9 +218,7 @@ class HnswDistributedSpec extends SparkSpec {
     // n/4 = 5000).
     import spark.implicits._
     val dim = 16
-    def vecFromHash(i: Long, seed: Long): Array[Float] =
-      Array.tabulate(dim)(d =>
-        (HnswParams.uniformFromHash(i * dim + d, seed) * 2.0 - 1.0).toFloat)
+    def vecFromHash(i: Long, seed: Long): Array[Float] = HashData.vecFromHash(i, seed, dim)
     val n = 20000
     val base = (0 until n).map(i => (i.toLong, vecFromHash(i.toLong, 7L)))
     val baseDf = spark.createDataset(base).toDF("id", "vec")

@@ -1,5 +1,6 @@
 package graft.hnsw
 
+import graft.HashData.codeOf
 import graft.SparkSpec
 import graft.operators.ExactKnn
 import org.apache.spark.sql.functions._
@@ -8,9 +9,6 @@ import org.apache.spark.sql.functions._
   * exhaustive-regime exactness against brute force, skew fail-fast. */
 class HnswRoutedCodesSpec extends SparkSpec {
   import spark.implicits._
-
-  private def codeOf(i: Long, seed: Long): Long =
-    java.lang.Double.doubleToRawLongBits(HnswParams.uniformFromHash(i, seed))
 
   private val params = HnswParams.standard(64, 128, 16)
 

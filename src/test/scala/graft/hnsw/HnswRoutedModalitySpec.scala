@@ -1,5 +1,6 @@
 package graft.hnsw
 
+import graft.HashData.vecFromHash
 import graft.SparkSpec
 import graft.hnsw.HnswDistributed.BuildConfig
 import graft.operators.ExactKnn
@@ -11,10 +12,6 @@ import org.apache.spark.sql.functions._
   * cells alone, and never changes the exhaustive-regime answer. */
 class HnswRoutedModalitySpec extends SparkSpec {
   import spark.implicits._
-
-  private def vecFromHash(i: Long, seed: Long, dim: Int): Array[Float] =
-    Array.tabulate(dim)(d =>
-      (HnswParams.uniformFromHash(i * dim + d, seed) * 2.0 - 1.0).toFloat)
 
   private val dim = 16
   private val cfg = BuildConfig(

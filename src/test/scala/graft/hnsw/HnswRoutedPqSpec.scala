@@ -1,5 +1,6 @@
 package graft.hnsw
 
+import graft.HashData.vecFromHash
 import graft.SparkSpec
 import graft.hnsw.HnswDistributed.BuildConfig
 import graft.operators.ExactKnn
@@ -10,10 +11,6 @@ import org.apache.spark.sql.functions._
   * the nProbe regime, and composes with tombstones. */
 class HnswRoutedPqSpec extends SparkSpec {
   import spark.implicits._
-
-  private def vecFromHash(i: Long, seed: Long, dim: Int): Array[Float] =
-    Array.tabulate(dim)(d =>
-      (HnswParams.uniformFromHash(i * dim + d, seed) * 2.0 - 1.0).toFloat)
 
   private val cfg = BuildConfig(
     HnswParams.standard(64, 128, 16), metric = "l2", seed = 42L)

@@ -1,5 +1,6 @@
 package graft.hnsw
 
+import graft.HashData.vecFromHash
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -20,10 +21,6 @@ import graft.store.{ArenaVectorStore, ArrayVectorStore, CodeQuery, Metrics}
   * class, plus a DISK_ONLY serve (every read deserializes from disk). */
 class KryoRoundTripSpec extends SparkSpec {
   import spark.implicits._
-
-  private def vecFromHash(i: Long, seed: Long, dim: Int): Array[Float] =
-    Array.tabulate(dim)(d =>
-      (HnswParams.uniformFromHash(i * dim + d, seed) * 2.0 - 1.0).toFloat)
 
   private val cfg = BuildConfig(
     HnswParams.standard(64, 128, 16), metric = "cosine", seed = 42L)

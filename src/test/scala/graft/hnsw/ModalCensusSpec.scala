@@ -2,6 +2,7 @@ package graft.hnsw
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.store.Metrics
+import graft.tools.ScaleRehearsal.Corpus.{merged => vecOf}
 
 /** Regression pin for the modal census kernel on the rung geometry
   * (dim 64). The original census applied the strong-share test to RAW
@@ -11,19 +12,6 @@ import graft.store.Metrics
   * applies to MERGED groups; this suite drives the kernel directly at
   * both polarities. */
 class ModalCensusSpec extends AnyFunSuite {
-  private val dim = 64
-
-  private def subCenter(g: Int): Array[Float] = {
-    val sup = g / 2
-    Array.tabulate(dim)(d =>
-      (((HnswParams.uniformFromHash(sup.toLong * 997 + d, 77L) * 2 - 1) * 40.0) +
-       ((HnswParams.uniformFromHash(1000L + g.toLong * 31 + d, 99L) * 2 - 1) * 6.0)).toFloat)
-  }
-  private def vecOf(id: Long, nSub: Int): Array[Float] = {
-    val c = subCenter((id % nSub).toInt)
-    Array.tabulate(dim)(d => c(d) +
-      (HnswParams.uniformFromHash(id * 131 + d, 17L) * 2.0 - 1.0).toFloat)
-  }
 
   test("every planted two-mode sample reads exactly 2 groups (share AFTER merge)") {
     val metric = Metrics.byName("l2")

@@ -1,5 +1,6 @@
 package graft.hnsw
 
+import graft.HashData.{codeOf, vecFromHash}
 import graft.SparkSpec
 import graft.hnsw.HnswDistributed.BuildConfig
 import org.apache.spark.rdd.RDD
@@ -12,13 +13,6 @@ import org.apache.spark.rdd.RDD
   * with release off the prior handle's blocks stay cached. */
 class RoutedCacheReleaseSpec extends SparkSpec {
   import spark.implicits._
-
-  private def vecFromHash(i: Long, seed: Long, dim: Int): Array[Float] =
-    Array.tabulate(dim)(d =>
-      (HnswParams.uniformFromHash(i * dim + d, seed) * 2.0 - 1.0).toFloat)
-
-  private def codeOf(i: Long, seed: Long): Long =
-    java.lang.Double.doubleToRawLongBits(HnswParams.uniformFromHash(i, seed))
 
   private val cfg = BuildConfig(
     HnswParams.standard(64, 128, 16), metric = "l2", seed = 42L)

@@ -1,5 +1,6 @@
 package graft.hnsw
 
+import graft.HashData.{codeOf, vecFromHash}
 import graft.SparkSpec
 import graft.hnsw.HnswDistributed.BuildConfig
 import org.apache.spark.HashPartitioner
@@ -17,13 +18,6 @@ import org.apache.spark.sql.functions._
   * split 4 / 4. */
 class RoutedColocatedSpec extends SparkSpec {
   import spark.implicits._
-
-  private def vecFromHash(i: Long, seed: Long, dim: Int): Array[Float] =
-    Array.tabulate(dim)(d =>
-      (HnswParams.uniformFromHash(i * dim + d, seed) * 2.0 - 1.0).toFloat)
-
-  private def codeOf(i: Long, seed: Long): Long =
-    java.lang.Double.doubleToRawLongBits(HnswParams.uniformFromHash(i, seed))
 
   private def rows(df: DataFrame, distCol: String): Seq[(Long, Long, Double, Int)] =
     df.select(col("qid"), col("id"), col(distCol).cast("double"), col("rank"))

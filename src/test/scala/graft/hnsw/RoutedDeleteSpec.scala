@@ -1,5 +1,6 @@
 package graft.hnsw
 
+import graft.HashData.vecFromHash
 import graft.SparkSpec
 import graft.hnsw.HnswDistributed.BuildConfig
 import org.apache.spark.sql.functions.col
@@ -9,10 +10,6 @@ import org.apache.spark.sql.functions.col
   * distinct union), and the exhaustive serve excludes both sets. */
 class RoutedDeleteSpec extends SparkSpec {
   import spark.implicits._
-
-  private def vecFromHash(i: Long, seed: Long, dim: Int): Array[Float] =
-    Array.tabulate(dim)(d =>
-      (HnswParams.uniformFromHash(i * dim + d, seed) * 2.0 - 1.0).toFloat)
 
   private val cfg = BuildConfig(HnswParams.standard(64, 32, 16), metric = "l2", seed = 42L)
   private val first = (0L until 400L by 2)

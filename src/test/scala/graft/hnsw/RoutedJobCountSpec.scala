@@ -1,5 +1,7 @@
 package graft.hnsw
 
+import graft.HashData
+import graft.HashData.vecFromHash
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -48,12 +50,7 @@ class RoutedJobCountSpec extends SparkSpec {
 
   private def served(df: => DataFrame): Int = jobsOf { df.collect(); () }
 
-  private def vecFromHash(i: Long, seed: Long, dim: Int): Array[Float] =
-    Array.tabulate(dim)(d =>
-      (HnswParams.uniformFromHash(i * dim + d, seed) * 2.0 - 1.0).toFloat)
-
-  private def codeOf(i: Long): Long =
-    java.lang.Double.doubleToRawLongBits(HnswParams.uniformFromHash(i, 23L))
+  private def codeOf(i: Long): Long = HashData.codeOf(i, 23L)
 
   private val nCells = 4
   private val cfg = BuildConfig(HnswParams.standard(64, 32, 16), metric = "l2", seed = 42L)

@@ -1,5 +1,7 @@
 package graft.hnsw
 
+import graft.HashData
+import graft.HashData.vecFromHash
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 
@@ -45,12 +47,7 @@ class RoutedPruningSpec extends SparkSpec with BeforeAndAfterAll {
     } finally sc.removeSparkListener(listener)
   }
 
-  private def vecFromHash(i: Long, seed: Long, dim: Int): Array[Float] =
-    Array.tabulate(dim)(d =>
-      (HnswParams.uniformFromHash(i * dim + d, seed) * 2.0 - 1.0).toFloat)
-
-  private def codeOf(i: Long): Long =
-    java.lang.Double.doubleToRawLongBits(HnswParams.uniformFromHash(i, 23L))
+  private def codeOf(i: Long): Long = HashData.codeOf(i, 23L)
 
   private val nCells = 16
   private val cfg = BuildConfig(HnswParams.standard(64, 32, 16), metric = "l2", seed = 42L)

@@ -1,5 +1,6 @@
 package graft.hnsw
 
+import graft.HashData.vecFromHash
 import graft.SparkSpec
 import graft.hnsw.HnswDistributed.BuildConfig
 import graft.streaming.StreamingRoutedCodes
@@ -43,9 +44,6 @@ class RoutedResidencySpec extends SparkSpec {
     mode ^ (1L << (mix(i * 31L + 7L) & 63L).toInt) ^ (1L << (mix(i * 57L + 11L) & 63L).toInt)
   }
 
-  private def vecFromHash(i: Long, seed: Long, dim: Int): Array[Float] =
-    Array.tabulate(dim)(d =>
-      (HnswParams.uniformFromHash(i * dim + d, seed) * 2.0 - 1.0).toFloat)
   private def clusterVec(i: Long): Array[Float] = {
     val c = (i / 800).toInt
     val superCenter = vecFromHash((c / 2).toLong, 77L, 12).map(_ * 40f)

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.HashData.codeOf
 import graft.SparkSpec
 import graft.hnsw.{HnswParams, HnswRoutedCodes}
 import graft.operators.ExactKnn
@@ -13,9 +14,6 @@ import org.apache.spark.sql.functions._
   * compact -> reusable) holds under Hamming. */
 class StreamingRoutedCodesSpec extends SparkSpec {
   import spark.implicits._
-
-  private def codeOf(i: Long, seed: Long): Long =
-    java.lang.Double.doubleToRawLongBits(HnswParams.uniformFromHash(i, seed))
 
   private val params = HnswParams.standard(64, 128, 16)
 

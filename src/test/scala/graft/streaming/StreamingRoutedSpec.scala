@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.HashData.vecFromHash
 import graft.SparkSpec
 import graft.hnsw.{HnswDistributed, HnswParams, HnswRouted}
 import graft.hnsw.HnswDistributed.BuildConfig
@@ -16,10 +17,6 @@ import org.apache.spark.sql.functions._
   * exhaustive oracle does not). */
 class StreamingRoutedSpec extends SparkSpec {
   import spark.implicits._
-
-  private def vecFromHash(i: Long, seed: Long, dim: Int): Array[Float] =
-    Array.tabulate(dim)(d =>
-      (HnswParams.uniformFromHash(i * dim + d, seed) * 2.0 - 1.0).toFloat)
 
   private val cfg = BuildConfig(
     HnswParams.standard(64, 128, 16), metric = "cosine", seed = 42L)

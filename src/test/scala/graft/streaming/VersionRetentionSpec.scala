@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.HashData.vecFromHash
 import graft.SparkSpec
 import graft.hnsw.{HnswDistributed, HnswParams, HnswRouted, HnswRoutedCodes,
   HnswRoutedPq}
@@ -17,10 +18,6 @@ import org.apache.spark.sql.functions._
   * next save reclaims N, no live lineage reads it. */
 class VersionRetentionSpec extends SparkSpec {
   import spark.implicits._
-
-  private def vecFromHash(i: Long, seed: Long, dim: Int): Array[Float] =
-    Array.tabulate(dim)(d =>
-      (HnswParams.uniformFromHash(i * dim + d, seed) * 2.0 - 1.0).toFloat)
 
   private val cfg = BuildConfig(
     HnswParams.standard(48, 96, 16), metric = "l2", seed = 42L)
